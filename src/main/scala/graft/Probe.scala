@@ -199,16 +199,9 @@ object Probe {
             println(f"MVSITE ${ms / 1e3}%8.3f s  n=$n%-4d $site")
         }
       case "commitbench" =>
-        // microbenchmark of the txn commit path: N small indexed appends.
-        // args: [v2] to flip the Hadoop committer to algorithm 2 + no
-        // _SUCCESS marker, for an A/B of per-commit fixed costs.
+        // microbenchmark of the txn commit path: N small indexed appends,
+        // timed and counted in Spark jobs per commit
         import graft.operators.TxnTable
-        if (args.drop(2).contains("v2")) {
-          val hc = spark.sparkContext.hadoopConfiguration
-          hc.set("mapreduce.fileoutputcommitter.algorithm.version", "2")
-          hc.set("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-          println("COMMITBENCH committer=v2,nomarker")
-        } else println("COMMITBENCH committer=default")
         val t = Fs.scratch("probe_commitbench", "t")
         Fs.deleteRecursively(t)
         val base = spark.range(1000).selectExpr("id AS k", "id * 2 AS v")
@@ -218,10 +211,20 @@ object Probe {
           s"id + ${i * 1000} AS k", "id AS v")
         // warm
         TxnTable.append(spark, t, batch(1))
+        val jobs = new java.util.concurrent.atomic.AtomicInteger
+        val listener = new org.apache.spark.scheduler.SparkListener {
+          override def onJobStart(
+              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+            jobs.incrementAndGet()
+        }
+        spark.sparkContext.addSparkListener(listener)
         val t0 = System.nanoTime()
         (2 to 21).foreach(i => TxnTable.append(spark, t, batch(i)))
         val sec = (System.nanoTime() - t0) / 1e9
-        println(f"COMMITBENCH 20 indexed appends: $sec%.3f s (${sec / 20}%.4f s/commit)")
+        Thread.sleep(500) // let the listener bus drain
+        spark.sparkContext.removeSparkListener(listener)
+        println(f"COMMITBENCH 20 indexed appends: $sec%.3f s " +
+          f"(${sec / 20}%.4f s/commit, ${jobs.get / 20.0}%.2f jobs/commit)")
       case "prof" =>
         // poor man's driver profiler: sample the main thread's stack while
         // the query runs, print the hottest frames (guide §7.3 in-process)

@@ -286,7 +286,7 @@ object MatView {
     * strings carry string bounds; integral types carry long boxes +
     * NDV sketches; NARROW DECIMALS (integral part fits a long) carry
     * floor/ceil-WIDENED long boxes — a sound superset the stats choke
-    * point produces (TxnTable.statGroupsByFile), so a value-grain MV
+    * point produces (TxnTable.widenedSpecs), so a value-grain MV
     * keyed on a money column (price, cents, score) range-prunes its
     * own files. Anything else (double/float — NaN poisons the box
     * algebra — or a wide decimal) CLUSTERS but carries no stats:

@@ -23,16 +23,6 @@ object Similarity {
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
-  /** [[vecs]] fanned out to the session's cores ([[Tables.fanOut]]) —
-    * use where a CPU-heavy per-row kernel (cosine folds, PQ encode/ADC,
-    * Lloyd assignment) consumes the corpus: the single-row-group test
-    * file otherwise pins the kernel to ONE scan task (measured:
-    * sim_ann_pq ran 14 stages × 1 task). Metadata-cheap actions
-    * (counts, key selects) stay on the raw scan — fanning those would
-    * pay the shuffle without a kernel to parallelize. */
-  private def vecsF(s: SparkSession, d: String): DataFrame =
-    Tables.fanOut(vecs(s, d))
-
   /** Two-phase top-k per q_id: a salted pre-rank keeps per-partition work
     * bounded (a single window on q_id would funnel the whole corpus into
     * #queries partitions — a skew wall at scale), then the final rank runs

@@ -733,7 +733,7 @@ object SqlSurface {
   /** sql_mv_decimal: a fold view keyed on the DECIMAL money column —
     * the value-grain "orders at price X" dashboard. The MV
     * stat-indexes its decimal key with floor/ceil-WIDENED long boxes
-    * (a sound superset — TxnTable.statGroupsByFile; a truncating cast
+    * (a sound superset — TxnTable.widenedSpecs; a truncating cast
     * would mis-box every fractional boundary) and the rewrite extracts
     * DIRECTION-AWARE long bounds from decimal literals (lo floors, hi
     * ceils, the attribute unwraps coercion casts —
@@ -2683,7 +2683,7 @@ object SqlSurface {
     * valueOf extension (the one aggregated column may BE the finest
     * grouping key); the decimal grain key CLUSTERS and stat-indexes
     * with floor/ceil-WIDENED long boxes (indexableKeys admits narrow
-    * decimals; statGroupsByFile widens, a sound superset — see
+    * decimals; widenedSpecs widens, a sound superset — see
     * sql_mv_decimal for the prune this buys).
     * Phases: (1) fresh per-status p50/p95/median + the global
     * quartile serve MV-only; percentile of a non-key column and array

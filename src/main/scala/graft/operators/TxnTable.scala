@@ -7,6 +7,7 @@ import graft.Tables
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.StatsWrite
 import org.apache.spark.sql.types.DecimalType
 
 /** A minimal transaction log over immutable parquet files — the public
@@ -2023,12 +2024,21 @@ object TxnTable {
     * dir; returns their table-relative paths. Staged files are invisible
     * until a manifest references them — a crashed writer leaves garbage
     * for vacuum, never a corrupt table. */
-  def stage(s: SparkSession, table: String, df: DataFrame): Seq[String] = {
+  def stage(s: SparkSession, table: String, df: DataFrame): Seq[String] =
+    writeStaged(s, table, df, None).map(_._1)
+
+  /** THE staging write every commit path shares: one parquet write job
+    * into a fresh uuid dir, optionally measuring per-file stats inside
+    * the write tasks ([[StatsWrite]]); returns (relative path, byte
+    * size) per file from ONE listing of the new dir, sorted by path. */
+  private def writeStaged(s: SparkSession, table: String, df: DataFrame,
+      tracker: Option[StatsWrite.FileStatsTracker]): Seq[(String, Long)] = {
     val sub = s"data/${java.util.UUID.randomUUID()}"
-    df.write.parquet(s"$table/$sub")
+    StatsWrite.parquet(df, s"$table/$sub", tracker.toSeq)
     val dir = new Path(s"$table/$sub")
-    fs(s, dir).listStatus(dir).toSeq.map(_.getPath.getName)
-      .filter(_.endsWith(".parquet")).sorted.map(n => s"$sub/$n")
+    fs(s, dir).listStatus(dir).toSeq
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map(st => (s"$sub/${st.getPath.getName}", st.getLen)).sortBy(_._1)
   }
 
   /** Stage ONE zero-row schema-carrying sentinel file — the guard every
@@ -2042,8 +2052,8 @@ object TxnTable {
       schema))
 
   /** Whether a freshly-staged manifest LINE carries at least one stat
-    * group — i.e. the staged file has rows: [[indexStagedRels]] /
-    * [[stageIndexed]] emit the bare path for a zero-row file (nothing
+    * group — i.e. the staged file has rows: [[stageIndexed]] and the
+    * streaming sink emit the bare path for a zero-row file (nothing
     * to stat), so "has a field separator" ⇔ "has stats". Named here so
     * callers filtering out empty-partition files say what they mean
     * instead of testing for a magic character. */
@@ -2193,7 +2203,7 @@ object TxnTable {
   /** Render a FRESHLY-STAGED entry WITHOUT a seq field (fields % 4 == 1):
     * the data sequence number is this-commit state, so [[commit]] stamps
     * it — staging must not bake in a stale one. */
-  private def renderFresh(e: Entry): String =
+  private[graft] def renderFresh(e: Entry): String =
     (e.path +: renderGroups(e)).mkString("\t")
 
   private def renderGroups(e: Entry): Seq[String] =
@@ -2206,23 +2216,24 @@ object TxnTable {
       (if (e.bytes >= 0) Seq(s"~b\t${e.bytes}\t0\t0") else Nil)
 
   /** Stage with per-file column statistics: like [[stage]], but each
-    * manifest line carries (col, min, max) for every index column,
-    * measured from the staged files — the Iceberg-style metadata that
-    * lets a reader prune files from the MANIFEST, before touching
-    * storage. Index columns must be integral; stats cost one scan of the
-    * just-staged files (write-time, amortized over every future
-    * selective read). */
+    * manifest line carries (col, min, max, nulls), an NDV sketch and the
+    * row count for every index spec, (lo, hi, nulls) string bounds for
+    * every `strCols` column, and the file's byte size — the
+    * Iceberg-style metadata that lets a reader prune files from the
+    * MANIFEST, before touching storage. The stats are measured INSIDE
+    * the write tasks, from the rows as they are written
+    * ([[fileStatsTracker]]): staging an indexed frame is the same one
+    * Spark job as staging a plain one, with no re-read of what it just
+    * wrote. */
   def stageIndexed(s: SparkSession, table: String, df: DataFrame,
                    indexCols: Seq[String],
-                   strCols: Seq[String] = Nil): Seq[String] =
-    indexStagedRels(s, table, stage(s, table, df), indexCols, strCols)
+                   strCols: Seq[String] = Nil): Seq[String] = {
+    if (indexCols.isEmpty && strCols.isEmpty) return stage(s, table, df)
+    val tracker = fileStatsTracker(s, df.schema, indexCols, strCols)
+    stagedLines(writeStaged(s, table, df, Some(tracker)), tracker.byFile,
+      indexCols, strCols)
+  }
 
-  /** The stats pass of [[stageIndexed]] over ALREADY-STAGED files (all
-    * in one staging subdirectory): one scan of the staged files measures
-    * per-file (min, max, nulls) + NDV sketch + row count per index
-    * column, plus the on-disk byte size — callers that write files
-    * through a channel other than [[stage]] (the streaming sink's
-    * executor-side writers) index them here before committing. */
   /** PARTITION-TRANSFORM index spec (Iceberg hidden partitioning): an
     * integral index column may be spelled `days(c)` — per-file stats are
     * then computed on the DERIVED value (days since epoch of timestamp
@@ -2287,68 +2298,97 @@ object TxnTable {
     Math.floorDiv(tsMicros(t), 86400000000L)
 
 
-  def indexStagedRels(s: SparkSession, table: String, rels: Seq[String],
-                      indexCols: Seq[String],
-                      strCols: Seq[String] = Nil): Seq[String] = {
-    // the '~s' suffix discriminates stat kinds in the manifest, TAB
-    // separates fields, and ',' separates the `#index=` header's column
-    // list — a column name using any of them would corrupt every future
-    // parse of the committed line
-    (indexCols ++ strCols).foreach(c =>
+  /** The per-file stats measurer for rows of `schema` — the write-side
+    * twin of [[statGroupsByFile]], with the same semantics: per index
+    * spec the [[idxExpr]] value's (min, max) cast to long (a decimal's
+    * box widened to floor(min)/ceil(max)), its null count and its
+    * `hll_sketch_agg` (decimals sketched through their string form);
+    * per string column its (min, max) as strings and its null count.
+    * Refuses what [[statGroupsByFile]] refuses, before anything runs.
+    * Shared by [[stageIndexed]] and the streaming sink's executor-side
+    * writers, so both channels produce the same manifest lines. */
+  private[graft] def fileStatsTracker(s: SparkSession,
+      schema: org.apache.spark.sql.types.StructType, indexCols: Seq[String],
+      strCols: Seq[String]): StatsWrite.FileStatsTracker = {
+    checkIndexNames(indexCols ++ strCols)
+    val widened = widenedSpecs(s.createDataFrame(
+      java.util.Collections.emptyList[Row](), schema), indexCols)
+    val asLong = (v: Column) => v.cast("long")
+    StatsWrite.tracker(s, schema,
+      values = indexCols.map(idxExpr) ++ strCols.map(col),
+      lo = indexCols.map(c =>
+        if (widened(c)) (v: Column) => floor(v).cast("long") else asLong) ++
+        strCols.map(_ => (v: Column) => v.cast("string")),
+      hi = indexCols.map(c =>
+        if (widened(c)) (v: Column) => ceil(v).cast("long") else asLong) ++
+        strCols.map(_ => (v: Column) => v.cast("string")),
+      sketched = indexCols.map(c => hllOf(c, widened(c))))
+  }
+
+  /** Render freshly-staged (path, bytes) pairs into manifest lines from
+    * the per-file measurements of [[fileStatsTracker]] (keyed by file
+    * name). A zero-row file — or one the tracker never saw — has no
+    * stats and stays PATH-ONLY (downstream zero-row filters key on "no
+    * TAB"); the string-stat values follow the integral ones, in
+    * `strCols` order. */
+  private[graft] def stagedLines(files: Seq[(String, Long)],
+      stats: Map[String, StatsWrite.FileStats], indexCols: Seq[String],
+      strCols: Seq[String]): Seq[String] =
+    files.map { case (rel, bytes) =>
+      stats.get(rel.split('/').last).filter(_.rows > 0) match {
+        case None => rel
+        case Some(f) =>
+          val ints = indexCols.zipWithIndex.map { case (c, i) =>
+            // an ALL-NULL file has no min/max: the empty range (lo > hi)
+            if (f.lo(i) == null) ColStat(c, 0L, -1L, f.nulls(i))
+            else ColStat(c, f.lo(i).asInstanceOf[Long],
+              f.hi(i).asInstanceOf[Long], f.nulls(i))
+          }
+          val hlls = indexCols.zip(f.sketches).map { case (c, b) =>
+            HllStat(c, java.util.Base64.getEncoder.encodeToString(b), f.rows)
+          }
+          val strs = strCols.zipWithIndex.map { case (c, j) =>
+            val i = indexCols.length + j
+            if (f.lo(i) == null) StrStat(c, "", "", f.nulls(i))
+            else StrStat(c, truncLower(f.lo(i).asInstanceOf[String]),
+              truncUpper(f.hi(i).asInstanceOf[String]), f.nulls(i))
+          }
+          renderFresh(Entry(rel, ints, strs, hlls = hlls, bytes = bytes))
+      }
+    }
+
+  /** The manifest-format guard on index column names: the '~s' suffix
+    * discriminates stat kinds in the manifest, TAB separates fields, and
+    * ',' separates the `#index=` header's column list — a column name
+    * using any of them would corrupt every future parse of the committed
+    * line. */
+  private def checkIndexNames(cols: Seq[String]): Unit =
+    cols.foreach(c =>
       require(!c.endsWith("~s") && !c.endsWith("~h") && c != "~b" &&
         !c.exists("\t\n,".contains(_)),
         s"index column name '$c' would corrupt the manifest format"))
-    if (rels.isEmpty || (indexCols.isEmpty && strCols.isEmpty)) return rels
-    val dir = rels.head.split('/').dropRight(1).mkString("/")
-    require(rels.forall(_.startsWith(dir + "/")),
-      "indexStagedRels expects one staging subdirectory")
-    val stats = statGroupsByFile(s.read.parquet(s"$table/$dir"),
-      indexCols, strCols).map { case (f, v) => (f.split('/').last, v) }
-    // per-file byte sizes from ONE directory listing of the staged dir —
-    // write-time metadata like the stats themselves; they feed the
-    // byte-weighted broadcast decision ([[tableBytes]])
-    val dirP = new Path(s"$table/$dir")
-    val sizes = fs(s, dirP).listStatus(dirP)
-      .map(st => (st.getPath.getName, st.getLen)).toMap
-    rels.map { rel =>
-      // a zero-row staged file has no stats row — keep it conservatively
-      // (and PATH-ONLY: downstream zero-row filters key on "no TAB")
-      val name = rel.split('/').last
-      val (ints, hlls, strs) =
-        stats.getOrElse(name, (Seq.empty, Seq.empty, Seq.empty))
-      val sz = if (ints.isEmpty && strs.isEmpty) -1L
-        else sizes.getOrElse(name, -1L)
-      renderFresh(Entry(rel, ints, strs, hlls = hlls, bytes = sz))
-    }
-  }
 
   def stageIndexed(s: SparkSession, table: String, df: DataFrame,
                    indexCol: String): Seq[String] =
     stageIndexed(s, table, df, Seq(indexCol))
 
-  /** One stats-measuring scan over `df`, per input file: the (min, max,
-    * nulls) group, NDV sketch and row count for every index spec, plus
-    * the string-bound groups — keyed by the RAW `input_file_name`.
-    * Shared by [[indexStagedRels]] (freshly staged files, keyed by leaf
-    * name within one staging dir) and [[reindex]] (stats backfill over
-    * live files spanning many dirs, keyed by normalized path). */
-  private def statGroupsByFile(df: DataFrame, indexCols: Seq[String],
-      strCols: Seq[String])
-      : Map[String, (Seq[ColStat], Seq[HllStat], Seq[StrStat])] = {
-    // fractional index columns at the one choke point every stats
-    // write passes (create, refresh merge, reindex): a plain long cast
-    // TRUNCATES toward zero — hi would exclude the true maximum, lo a
-    // negative minimum — and would MIS-PRUNE, the one failure worse
-    // than no stats at all. DECIMALS (exact fixed-point, no NaN) get
-    // SOUND widened boxes instead — lo = floor(min), hi = ceil(max), a
-    // superset of the values, so overlap AND containment checks stay
-    // conservative (a legacy table whose manifest already carries a
-    // decimal index column keeps writing; money-typed keys prune).
-    // Binary floating point still refuses BY NAME: NaN poisons the box
-    // algebra (min/max propagate it, a NaN cast is 0) — index an
-    // integral surrogate instead.
-    import org.apache.spark.sql.types.{DecimalType, DoubleType, FloatType}
-    val widened: Set[String] = indexCols.flatMap { c =>
+  /** The index specs of `df` whose stats box is WIDENED (decimals), after
+    * refusing the types no box can describe soundly. Fractional index
+    * columns stop here, at the one choke point every stats write passes
+    * (staging, refresh merge, reindex): a plain long cast TRUNCATES
+    * toward zero — hi would exclude the true maximum, lo a negative
+    * minimum — and would MIS-PRUNE, the one failure worse than no stats
+    * at all. DECIMALS (exact fixed-point, no NaN) get SOUND widened
+    * boxes instead — lo = floor(min), hi = ceil(max), a superset of the
+    * values, so overlap AND containment checks stay conservative (a
+    * legacy table whose manifest already carries a decimal index column
+    * keeps writing; money-typed keys prune). Binary floating point still
+    * refuses BY NAME: NaN poisons the box algebra (min/max propagate it,
+    * a NaN cast is 0) — index an integral surrogate instead. */
+  private def widenedSpecs(df: DataFrame, indexCols: Seq[String])
+      : Set[String] = {
+    import org.apache.spark.sql.types.{DoubleType, FloatType}
+    indexCols.flatMap { c =>
       df.select(idxExpr(c)).schema.head.dataType match {
         case DoubleType | FloatType =>
           throw new IllegalArgumentException(
@@ -2364,23 +2404,36 @@ object TxnTable {
         case _ => None
       }
     }.toSet
+  }
+
+  /** The per-file NDV sketch of index spec `c`. hll_sketch_agg takes no
+    * decimal input; a widened (decimal) spec is sketched through its
+    * canonical fixed-scale string rendering, which is injective, so the
+    * NDV is the value NDV. */
+  private def hllOf(c: String, widened: Boolean): Column =
+    hll_sketch_agg(if (widened) idxExpr(c).cast("string") else idxExpr(c), 8)
+
+  /** One stats-measuring scan over `df`, per input file: the (min, max,
+    * nulls) group, NDV sketch and row count for every index spec, plus
+    * the string-bound groups — keyed by the RAW `input_file_name`. Used
+    * by [[reindex]] alone (stats backfill over live files that were
+    * written without them); files being written get the same stats from
+    * [[fileStatsTracker]] inside the write. */
+  private[graft] def statGroupsByFile(df: DataFrame, indexCols: Seq[String],
+      strCols: Seq[String])
+      : Map[String, (Seq[ColStat], Seq[HllStat], Seq[StrStat])] = {
+    val widened = widenedSpecs(df, indexCols)
     val aggs = indexCols.flatMap { c =>
-      val (loE, hiE, hllE) =
-        if (widened(c))
-          (floor(min(idxExpr(c))), ceil(max(idxExpr(c))),
-            // hll_sketch_agg takes no decimal input; the canonical
-            // fixed-scale string rendering is injective, so the NDV is
-            // the value NDV
-            hll_sketch_agg(idxExpr(c).cast("string"), 8))
-        else (min(idxExpr(c)), max(idxExpr(c)),
-          hll_sketch_agg(idxExpr(c), 8))
+      val (loE, hiE) =
+        if (widened(c)) (floor(min(idxExpr(c))), ceil(max(idxExpr(c))))
+        else (min(idxExpr(c)), max(idxExpr(c)))
       Seq(
         loE.cast("long").as(s"lo_$c"),
         hiE.cast("long").as(s"hi_$c"),
         sum(when(idxExpr(c).isNull, 1L).otherwise(0L)).as(s"nn_$c"),
         // the per-file NDV sketch rides the SAME stats pass — no extra
         // scan; sketches union losslessly at read time ([[ndv]])
-        hllE.as(s"hs_$c"),
+        hllOf(c, widened(c)).as(s"hs_$c"),
         count(lit(1)).as(s"cnt_$c"))
     } ++
       strCols.flatMap(c => Seq(
@@ -4341,6 +4394,21 @@ object TxnTable {
   private[graft] def pathFor(table: String, rel: String): String =
     if (rel.startsWith("/")) rel else s"$table/$rel"
 
+  /** Whether `files` are small enough to broadcast: their summed on-disk
+    * size is at most 8 MiB. A file whose size cannot be read (a failed
+    * stat) is of UNKNOWN size, and an unknown size never qualifies —
+    * the forced broadcast is the optimistic choice, so only a measured
+    * size may make it. */
+  private[graft] def broadcastable(f: FileSystem, files: Seq[Path])
+      : Boolean = {
+    val limit = 8L << 20
+    var total = 0L
+    files.forall { p =>
+      try { total += f.getFileStatus(p).getLen; total <= limit }
+      catch { case scala.util.control.NonFatal(_) => false }
+    }
+  }
+
   /** Every spelling `input_file_name()` could report for an absolute
     * path: raw, slash-collapsed, and URI-escaped forms, each bare and
     * under `file:`/`file://`. Paths that already carry a scheme
@@ -4348,8 +4416,18 @@ object TxnTable {
     * verbatim, and the file-URI constructor would reject them. Shared
     * by the bounded/positional read join ([[readEntriesPos]]) and the
     * [[reindex]] stats-backfill lookup — any place that must resolve a
-    * scan-side file name back to its manifest entry. */
-  private def pathVariants(abs0: String): Seq[String] = {
+    * scan-side file name back to its manifest entry. A RELATIVE path
+    * (a table created at a relative location) is first qualified
+    * against its filesystem's working directory — the scan reports
+    * absolute names, so the raw relative spelling would match none. */
+  private def pathVariants(s: SparkSession, path: String): Seq[String] = {
+    val p = new Path(path)
+    val abs0 =
+      if (p.isAbsolute || p.toUri.getScheme != null) path
+      else {
+        val q = fs(s, p).makeQualified(p)
+        if (q.toUri.getScheme == "file") q.toUri.getPath else q.toString
+      }
     val norm = abs0.replaceAll("(?<!:)/{2,}", "/")
     Seq(abs0, norm).flatMap { abs =>
       if (!abs.startsWith("/")) Seq(abs)
@@ -5030,7 +5108,7 @@ object TxnTable {
           // rows; clones stay covered because absolute entry paths pass
           // through [[pathFor]] verbatim before canonicalization
           val pathSeqRows = es.flatMap(e =>
-            pathVariants(pathFor(table, e.path)).map(v =>
+            pathVariants(s, pathFor(table, e.path)).map(v =>
               Row(v, e.seq, canonCoord(pathFor(table, e.path)))))
           // parallelize (not a LocalRelation literal): the rows ride the
           // RDD's serialized partitions, sliced so no single task drags
@@ -5062,14 +5140,10 @@ object TxnTable {
       // shuffle-free shape is the one that scales (guide §3.1). A
       // pathologically large tombstone set falls back to the planner's
       // choice rather than forcing an executor-memory cliff.
-      def hinted(df: DataFrame, files: Seq[String]): DataFrame = {
-        val f = fs(s, new Path(table))
-        val bytes = files.iterator.map { p =>
-          try f.getFileStatus(new Path(pathFor(table, p))).getLen
-          catch { case scala.util.control.NonFatal(_) => 8L << 20 }
-        }.sum
-        if (bytes <= (8L << 20)) broadcast(df) else df
-      }
+      def hinted(df: DataFrame, files: Seq[String]): DataFrame =
+        if (broadcastable(fs(s, new Path(table)),
+            files.map(p => new Path(pathFor(table, p))))) broadcast(df)
+        else df
       val posCleaned =
         if (posDels.isEmpty) withSeq
         else {
@@ -6981,10 +7055,7 @@ object TxnTable {
       strCols: Seq[String] = Nil): Long = {
     require(indexCols.nonEmpty || strCols.nonEmpty,
       "reindex needs at least one index column")
-    (indexCols ++ strCols).foreach(c =>
-      require(!c.endsWith("~s") && !c.endsWith("~h") && c != "~b" &&
-        !c.exists("\t\n,".contains(_)),
-        s"index column name '$c' would corrupt the manifest format"))
+    checkIndexNames(indexCols ++ strCols)
     val cur = currentVersion(s, table)
     val m = manifest(s, table, cur)
     require(m.deletes.isEmpty,
@@ -7022,7 +7093,7 @@ object TxnTable {
     // sentinel branch would hand every stats consumer (metadata-only
     // aggregates, the zero-row DML filters) wrong answers
     val varIndex: Map[String, String] = m.entries.flatMap(e =>
-      pathVariants(abs(e)).map(v => (v, norm(abs(e))))).toMap
+      pathVariants(s, abs(e)).map(v => (v, norm(abs(e))))).toMap
     val byFile =
       if (m.entries.isEmpty) Map.empty[String,
         (Seq[ColStat], Seq[HllStat], Seq[StrStat])]

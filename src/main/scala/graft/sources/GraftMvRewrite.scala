@@ -318,7 +318,7 @@ case class GraftMvRewriteRule(session: SparkSession)
     // maps DIRECTION-AWARE onto the manifest's long boxes — lower
     // bounds floor, upper bounds ceil — so the extracted box is a
     // SUPERSET of the literal's satisfying space exactly as the file
-    // boxes are supersets of their values (statGroupsByFile widens
+    // boxes are supersets of their values (widenedSpecs widens
     // decimals the same way); a magnitude overflowing long extracts
     // nothing, which is sound
     def decOf(l: Literal, up: Boolean): Option[Long] = l.value match {

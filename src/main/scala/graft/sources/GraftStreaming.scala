@@ -11,7 +11,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.execution.datasources.OutputWriter
-import org.apache.spark.sql.graftbridge.StreamBridge
+import org.apache.spark.sql.graftbridge.{StatsWrite, StreamBridge}
 import org.apache.spark.sql.types.StructType
 
 /** STRUCTURED STREAMING through the catalog: `readStream.table(
@@ -31,9 +31,11 @@ import org.apache.spark.sql.types.StructType
   *    rule); metadata-only commits (evolve, recluster, checkpoint) pass
   *    through as empty batches.
   *  - SINK: executors write real parquet through Spark's own prepared
-  *    writer factory ([[StreamBridge.writerRecipe]]), the driver indexes
-  *    the staged files (same stats pass as every other commit) and lands
-  *    them via the OCC-resolving append. The commit carries
+  *    writer factory ([[StreamBridge.writerRecipe]]), measuring each
+  *    file's manifest stats from the rows as they write them (the same
+  *    measurer as every batch staging write); the driver renders the
+  *    lines from what the tasks report and lands them via the
+  *    OCC-resolving append. The commit carries
   *    (`epoch`, `qtag`) in its metrics header; a REPLAYED epoch — the
   *    restart path of every foreachBatch recipe, here native — finds
   *    its epoch already at-or-below the newest committed one and skips,
@@ -42,8 +44,8 @@ import org.apache.spark.sql.types.StructType
   *
   * At 100 TB: the source's per-batch work is O(files added by that
   * commit) — tailing a minutely-committed table costs the minute's
-  * delta, never a table scan; the sink's per-epoch work is one stats
-  * pass over the epoch's files plus one manifest CAS. */
+  * delta, never a table scan; the sink's per-epoch work is the write
+  * job itself plus one manifest CAS. */
 object GraftStreaming {
 
   /** Offset = committed version number. */
@@ -750,31 +752,49 @@ class GraftCdcMicroBatchStream(ident: String, location: String,
   override def stop(): Unit = ()
 }
 
-/** One staged file (relative path), or null for an empty partition. */
-private[graft] case class GraftStagedFile(rel: String, rows: Long)
+/** One staged file (relative path), or null for an empty partition,
+  * with what the writer measured while writing it: the row count and,
+  * when the table was indexed (`spec` = its (index specs, string-stat
+  * columns) at the time), the file's stats and byte size. */
+private[graft] case class GraftStagedFile(rel: String, rows: Long,
+    stats: StatsWrite.FileStats = null, bytes: Long = -1L,
+    spec: (Seq[String], Seq[String]) = (Nil, Nil))
     extends WriterCommitMessage
 
 /** The per-epoch executor recipe: each task writes (at most) one parquet
   * file into the epoch's staging subdirectory through Spark's own
-  * prepared writer factory. */
+  * prepared writer factory, measuring the table's per-file stats
+  * (`tracker`, for index `spec`) from the rows as it writes them — the
+  * same measurer the batch staging write runs. */
 private class GraftStreamWriterFactory(tableLoc: String, sub: String,
-    recipe: StreamBridge.WriterRecipe) extends StreamingDataWriterFactory {
+    recipe: StreamBridge.WriterRecipe,
+    tracker: Option[StatsWrite.FileStatsTracker],
+    spec: (Seq[String], Seq[String])) extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : DataWriter[InternalRow] = new DataWriter[InternalRow] {
     private val rel = s"$sub/part-$epochId-$partitionId-$taskId.parquet"
     private val abs = s"$tableLoc/$rel"
     private var writer: OutputWriter = _
+    private val stats = tracker.map(_.accumulator())
     private var rows = 0L
     override def write(r: InternalRow): Unit = {
       // open lazily: an empty partition stages NO file (the zero-row
       // convention every other commit path keeps)
       if (writer == null) writer = recipe.open(abs, partitionId, taskId)
       writer.write(r)
+      stats.foreach(_.add(r))
       rows += 1
     }
     override def commit(): WriterCommitMessage = {
-      if (writer != null) writer.close()
-      GraftStagedFile(if (writer == null) null else rel, rows)
+      if (writer == null) GraftStagedFile(null, 0L)
+      else {
+        writer.close()
+        val p = new Path(abs)
+        GraftStagedFile(rel, rows, stats.map(_.result).orNull,
+          if (stats.isEmpty) -1L
+          else p.getFileSystem(recipe.conf.value).getFileStatus(p).getLen,
+          spec)
+      }
     }
     override def abort(): Unit = {
       if (writer != null) {
@@ -823,9 +843,16 @@ class GraftStreamingWrite(ident: String, location: String,
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : StreamingDataWriterFactory = {
+    val s = spark
     val sub = s"data/stream-${java.util.UUID.randomUUID()}"
+    val m = TxnTable.manifest(s, location, TxnTable.currentVersion(s, location))
+    val spec = (m.idxCols, m.strIdxCols)
     new GraftStreamWriterFactory(location, sub,
-      StreamBridge.writerRecipe(spark, schema))
+      StreamBridge.writerRecipe(s, schema),
+      if (m.idxCols.isEmpty && m.strIdxCols.isEmpty) None
+      else Some(TxnTable.fileStatsTracker(s, schema, m.idxCols,
+        m.strIdxCols)),
+      spec)
   }
 
   /** Advance the ledger: examine log versions newer than
@@ -874,8 +901,9 @@ class GraftStreamingWrite(ident: String, location: String,
   override def commit(epochId: Long, messages: Array[WriterCommitMessage])
       : Unit = {
     val s = spark
-    val rels = messages.collect {
-      case GraftStagedFile(rel, _) if rel != null => rel }
+    val files = messages.collect {
+      case f: GraftStagedFile if f.rel != null => f }
+    val rels = files.map(_.rel).toSeq
     // REPLAY: this epoch (or a later one) already committed — the
     // restarted stream re-ran the batch, or a parallel zombie instance
     // got there first; drop the orphaned stage, change nothing. Epochs
@@ -915,9 +943,22 @@ class GraftStreamingWrite(ident: String, location: String,
           s"${schema.fieldNames.toSeq}) — restart the stream from the " +
           "current schema")
     }
-    val staged = TxnTable.indexStagedRels(s, location, rels,
-      m0.idxCols, m0.strIdxCols).filter(l => TxnTable.hasStats(l) ||
-        m0.idxCols.isEmpty && m0.strIdxCols.isEmpty)
+    // the executors measured each file's stats under the index spec the
+    // table had when the epoch began; one that moved since (a reindex
+    // or recluster racing the stream) would commit files with no or
+    // wrong stats — loud instead, like the schema check above
+    val spec = (m0.idxCols, m0.strIdxCols)
+    files.find(_.spec != spec).foreach { f =>
+      TxnTable.dropStaged(s, location, rels)
+      throw new IllegalStateException(s"$ident: the table's index moved " +
+        s"under this stream (now $spec, epoch files measured ${f.spec}) " +
+        "— restart the stream")
+    }
+    val staged =
+      if (spec == ((Nil, Nil))) rels
+      else TxnTable.stagedLines(files.map(f => (f.rel, f.bytes)).toSeq,
+        files.map(f => (f.rel.split('/').last, f.stats)).toMap,
+        m0.idxCols, m0.strIdxCols)
     // an empty APPEND epoch commits nothing (a zero-file version would
     // be unreadable by design); an empty COMPLETE epoch must still
     // overwrite — the new result IS empty, and keeping the previous
@@ -973,5 +1014,5 @@ class GraftStreamingWrite(ident: String, location: String,
   override def abort(epochId: Long, messages: Array[WriterCommitMessage])
       : Unit =
     TxnTable.dropStaged(spark, location, messages.collect {
-      case GraftStagedFile(rel, _) if rel != null => rel })
+      case f: GraftStagedFile if f.rel != null => f.rel }.toSeq)
 }

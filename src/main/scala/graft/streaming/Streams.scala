@@ -1274,8 +1274,8 @@ object Streams {
     * tailing, the corpus never rescanned). Hashed output = the final dst
     * content (quarter cuts + the %13 shifted delta, oracle-replayable);
     * `cstream_ok` carries the batch/epoch/replay accounting. At 100 TB:
-    * per-batch cost follows the commit's delta, per-epoch cost is one
-    * stats pass + one manifest CAS. */
+    * per-batch cost follows the commit's delta, per-epoch cost is the
+    * epoch's write job (stats measured inside it) + one manifest CAS. */
   /** Seed the pair of catalog tables the catalog-stream scenarios tail:
     * `graft.q.<src>` takes the FOUR quarter-slice single-file INSERTs of
     * the orders keyspace (versions 1..4, tight key stats), `graft.q

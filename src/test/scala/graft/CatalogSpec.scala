@@ -18,6 +18,23 @@ class CatalogSpec extends SparkSpec {
     name
   }
 
+  /** What the sink's executor-side writer reports for a file it staged:
+    * the file, its row count, and its stats under the table's current
+    * index — measured here from the file read back (the writer measures
+    * them from the rows as it writes). */
+  private def sinkFile(loc: String, rel: String, rows: Long)
+      : graft.sources.GraftStagedFile = {
+    val m = TxnTable.manifest(spark, loc, TxnTable.currentVersion(spark, loc))
+    val p = new org.apache.hadoop.fs.Path(TxnTable.pathFor(loc, rel))
+    val df = spark.read.parquet(p.toString)
+    val acc = TxnTable.fileStatsTracker(spark, df.schema, m.idxCols,
+      m.strIdxCols).accumulator()
+    df.queryExecution.toRdd.map(_.copy()).collect().foreach(acc.add)
+    graft.sources.GraftStagedFile(rel, rows, acc.result,
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(p).getLen, (m.idxCols, m.strIdxCols))
+  }
+
   test("CREATE / INSERT / SELECT round-trip through pure SQL") {
     val t = fresh("roundtrip")
     sql(s"CREATE TABLE graft.spec.$t (k BIGINT, v STRING) " +
@@ -766,7 +783,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("streaming sink commits once per epoch; a replayed epoch skips and drops its stage") {
-    import graft.sources.{GraftStagedFile, GraftStreamingWrite}
+    import graft.sources.GraftStreamingWrite
     val t = fresh("streamsink")
     sql(s"CREATE TABLE graft.spec.$t (k BIGINT, v STRING) " +
       "TBLPROPERTIES ('index' = 'k')")
@@ -784,7 +801,7 @@ class CatalogSpec extends SparkSpec {
         .filter(_.endsWith(".parquet")).head
       s"$sub/$name"
     }
-    w.commit(0L, Array(GraftStagedFile(stageOne("e0", 0), 5)))
+    w.commit(0L, Array(sinkFile(loc, stageOne("e0", 0), 5)))
     assert(TxnTable.currentVersion(spark, loc) === 1L)
     val metrics = TxnTable.commitMetrics(spark, loc)
     assert(metrics("epoch") === 0L && metrics("files") === 1L &&
@@ -793,27 +810,27 @@ class CatalogSpec extends SparkSpec {
     // REPLAY of epoch 0 (the restart path): no new version, and the
     // orphaned stage is deleted
     val orphan = stageOne("e0b", 100)
-    w.commit(0L, Array(GraftStagedFile(orphan, 5)))
+    w.commit(0L, Array(sinkFile(loc, orphan, 5)))
     assert(TxnTable.currentVersion(spark, loc) === 1L, "replay committed!")
     val op = new org.apache.hadoop.fs.Path(TxnTable.pathFor(loc, orphan))
     assert(!op.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(op), "replayed epoch's stage not cleaned up")
     // the NEXT epoch lands
-    w.commit(1L, Array(GraftStagedFile(stageOne("e1", 5), 5)))
+    w.commit(1L, Array(sinkFile(loc, stageOne("e1", 5), 5)))
     assert(TxnTable.currentVersion(spark, loc) === 2L)
     assert(sql(s"SELECT COUNT(*) AS n FROM graft.spec.$t")
       .collect()(0).getLong(0) === 10)
     // a DIFFERENT query's epoch 0 is not a replay of ours
     val w2 = new GraftStreamingWrite(s"graft.spec.$t", loc, schema,
       "spec-query-2", truncate = false)
-    w2.commit(0L, Array(GraftStagedFile(stageOne("q2e0", 200), 5)))
+    w2.commit(0L, Array(sinkFile(loc, stageOne("q2e0", 200), 5)))
     assert(TxnTable.currentVersion(spark, loc) === 3L)
     // driver-restart path: a FRESH instance with the same query id
     // resolves the ledger from the LOG (not session state) and skips
     val w3 = new GraftStreamingWrite(s"graft.spec.$t", loc, schema,
       "spec-query-1", truncate = false)
     val orphan2 = stageOne("e1b", 300)
-    w3.commit(1L, Array(GraftStagedFile(orphan2, 5)))
+    w3.commit(1L, Array(sinkFile(loc, orphan2, 5)))
     assert(TxnTable.currentVersion(spark, loc) === 3L,
       "restarted query replayed an already-committed epoch")
     val op2 = new org.apache.hadoop.fs.Path(TxnTable.pathFor(loc, orphan2))
@@ -905,7 +922,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("streaming sink epochs rebase through OCC when batch INSERTs interleave") {
-    import graft.sources.{GraftStagedFile, GraftStreamingWrite}
+    import graft.sources.GraftStreamingWrite
     val t = fresh("streamrace")
     sql(s"CREATE TABLE graft.spec.$t (k BIGINT, v STRING) " +
       "TBLPROPERTIES ('index' = 'k')")
@@ -925,9 +942,9 @@ class CatalogSpec extends SparkSpec {
     // interleave: epoch 0 lands, a BATCH insert lands, epoch 1 lands —
     // the sink's appendResolving must rebase over the insert (appends
     // never conflict), losing nothing
-    w.commit(0L, Array(GraftStagedFile(stageOne("e0", 0), 10)))
+    w.commit(0L, Array(sinkFile(loc, stageOne("e0", 0), 10)))
     sql(s"INSERT INTO graft.spec.$t SELECT id + 1000, 'batch' FROM RANGE(10)")
-    w.commit(1L, Array(GraftStagedFile(stageOne("e1", 100), 10)))
+    w.commit(1L, Array(sinkFile(loc, stageOne("e1", 100), 10)))
     assert(sql(s"SELECT COUNT(*) AS n FROM graft.spec.$t")
       .collect()(0).getLong(0) === 30)
     assert(sql(s"SELECT COUNT(DISTINCT v) AS n FROM graft.spec.$t")
@@ -1979,7 +1996,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("sink replay detection is atomic with the CAS loop (zombie same-epoch race)") {
-    import graft.sources.{GraftStagedFile, GraftStreamingWrite}
+    import graft.sources.GraftStreamingWrite
     val t = fresh("streamzombie")
     sql(s"CREATE TABLE graft.spec.$t (k BIGINT, v STRING) " +
       "TBLPROPERTIES ('index' = 'k')")
@@ -2006,13 +2023,13 @@ class CatalogSpec extends SparkSpec {
       "toctou-query", truncate = false, () => {
         if (armed && !fired) {
           fired = true
-          zombie.commit(1L, Array(GraftStagedFile(stageOne("z1", 50), 5)))
+          zombie.commit(1L, Array(sinkFile(loc, stageOne("z1", 50), 5)))
         }
       })
-    w.commit(0L, Array(GraftStagedFile(stageOne("e0", 0), 5)))
+    w.commit(0L, Array(sinkFile(loc, stageOne("e0", 0), 5)))
     assert(TxnTable.currentVersion(spark, loc) === 1L)
     armed = true
-    w.commit(1L, Array(GraftStagedFile(stageOne("e1", 100), 5)))
+    w.commit(1L, Array(sinkFile(loc, stageOne("e1", 100), 5)))
     // exactly ONE epoch-1 commit landed (the zombie's); the victim's
     // duplicate was detected by the in-loop recheck and dropped
     assert(TxnTable.currentVersion(spark, loc) === 2L,
@@ -2790,5 +2807,71 @@ class CatalogSpec extends SparkSpec {
       sql(s"ALTER TABLE graft.spec.$t ADD COLUMN w INT NOT NULL")
     }
     assert(e.getMessage.contains("nullable or"), e.getMessage)
+  }
+
+  test("an AvailableNow epoch into an indexed sink runs no stats jobs") {
+    val src = fresh("drainjobs_src")
+    val dst = fresh("drainjobs_dst")
+    sql(s"CREATE TABLE graft.spec.$src (k BIGINT, v STRING) " +
+      "TBLPROPERTIES ('index' = 'k')")
+    sql(s"CREATE TABLE graft.spec.$dst (k BIGINT, v STRING) " +
+      "TBLPROPERTIES ('index' = 'k')")
+    val ckpt = graft.Fs.freshScratch("graft_drainjobs", "ckpt")
+    def drain(): Unit = spark.readStream.table(s"graft.spec.$src")
+      .writeStream.option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .toTable(s"graft.spec.$dst").awaitTermination()
+    sql(s"INSERT INTO graft.spec.$src SELECT id, 'a' FROM RANGE(100)")
+    drain() // warm: the stream's first epoch
+    sql(s"INSERT INTO graft.spec.$src SELECT id + 100, 'b' FROM RANGE(100)")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.SpecBus.drain(sc)
+    sc.addSparkListener(l)
+    try { drain(); org.apache.spark.SpecBus.drain(sc) }
+    finally sc.removeSparkListener(l)
+    // the epoch's write job alone — its files' stats come back with it
+    assert(jobs.get === 1, s"one drained epoch ran ${jobs.get} Spark jobs")
+    val loc = s"${GraftCatalog.defaultWarehouse}/spec/$dst"
+    val m = TxnTable.manifest(spark, loc, TxnTable.currentVersion(spark, loc))
+    // every epoch file carries its stats (CREATE TABLE's zero-row
+    // sentinel stays path-only)
+    val epochFiles = m.entries.filter(_.path.contains("/stream-"))
+    assert(epochFiles.nonEmpty && epochFiles.forall(e =>
+      e.statFor("k").nonEmpty && e.hllFor("k").nonEmpty && e.bytes > 0))
+    val rows = epochFiles.flatMap(_.hlls.map(_.rows)).sum
+    assert(rows === 200L, s"sink stats count $rows rows")
+    assert(sql(s"SELECT COUNT(*) FROM graft.spec.$dst WHERE k >= 150")
+      .collect()(0).getLong(0) === 50)
+  }
+
+  test("a sink epoch measured under a moved index fails loudly, drops its stage") {
+    import graft.sources.{GraftStagedFile, GraftStreamingWrite}
+    val t = fresh("streamidxmove")
+    sql(s"CREATE TABLE graft.spec.$t (k BIGINT, v STRING)")
+    val loc = s"${GraftCatalog.defaultWarehouse}/spec/$t"
+    val schema = sql(s"SELECT * FROM graft.spec.$t").schema
+    val w = new GraftStreamingWrite(s"graft.spec.$t", loc, schema,
+      "idxmove-query", truncate = false)
+    // the epoch's writers measured the table while it was unindexed (no
+    // stats); a reindex lands before the epoch commits
+    val rel = TxnTable.stage(spark, loc,
+      spark.range(5).selectExpr("id AS k", "'a' AS v").coalesce(1)).head
+    sql(s"INSERT INTO graft.spec.$t SELECT 100, 'b'")
+    TxnTable.reindex(spark, loc, Seq("k"))
+    val v = TxnTable.currentVersion(spark, loc)
+    val e = intercept[IllegalStateException] {
+      w.commit(0L, Array(GraftStagedFile(rel, 5)))
+    }
+    assert(e.getMessage.contains("index moved"), e.getMessage)
+    assert(TxnTable.currentVersion(spark, loc) === v, "the epoch landed")
+    val p = new org.apache.hadoop.fs.Path(TxnTable.pathFor(loc, rel))
+    assert(!p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(p), "the refused epoch's stage was not dropped")
   }
 }

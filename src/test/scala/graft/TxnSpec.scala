@@ -2834,4 +2834,142 @@ class TxnSpec extends SparkSpec {
     }
     assert(eW.getMessage.contains("long box range"), eW.getMessage)
   }
+
+  /** Spark jobs started while `f` runs. */
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.SpecBus.drain(sc)
+    sc.addSparkListener(l)
+    try { f; org.apache.spark.SpecBus.drain(sc) }
+    finally sc.removeSparkListener(l)
+    jobs.get
+  }
+
+  /** The staging stats pass as it ran before stats moved into the write:
+    * re-read the just-staged files (one staging dir) and aggregate per
+    * `input_file_name()`, sizes from one listing. Kept here as the
+    * reference the in-write measurement must reproduce byte for byte. */
+  private def rereadLines(t: String, rels: Seq[String], idx: Seq[String],
+      str: Seq[String]): Seq[String] = {
+    import TxnTable.{Entry, ColStat, HllStat, StrStat}
+    val dir = rels.head.split('/').dropRight(1).mkString("/")
+    assert(rels.forall(_.startsWith(dir + "/")))
+    val stats = TxnTable.statGroupsByFile(spark.read.parquet(s"$t/$dir"),
+      idx, str).map { case (f, v) => (f.split('/').last, v) }
+    val dirP = new org.apache.hadoop.fs.Path(s"$t/$dir")
+    val sizes = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(dirP).map(st => (st.getPath.getName, st.getLen)).toMap
+    rels.map { rel =>
+      val name = rel.split('/').last
+      val (ints, hlls, strs) = stats.getOrElse(name,
+        (Seq.empty[ColStat], Seq.empty[HllStat], Seq.empty[StrStat]))
+      val sz = if (ints.isEmpty && strs.isEmpty) -1L
+        else sizes.getOrElse(name, -1L)
+      TxnTable.renderFresh(Entry(rel, ints, strs, hlls = hlls, bytes = sz))
+    }
+  }
+
+  test("in-write stats render the staged lines a re-read of the files " +
+      "renders, byte for byte") {
+    val s = spark
+    import s.implicits._
+    val long = "ключ-\uD83D\uDE00-" * 4 // past the 16-char bound, surrogates
+    val df = (0 until 240).map { i =>
+      (if (i % 7 == 0) None else Some(i.toLong * 13 % 500 - 120),
+        i % 9,
+        BigDecimal(i * 37 % 1000 - 400) / 100,
+        new java.sql.Timestamp(86400000L * (i % 40 - 20) + i * 977L),
+        if (i % 11 == 0) None else Some(long.take(i % 29) + i))
+    }.toDF("k", "i", "price", "ts", "name")
+      .select(col("k"), col("i"), col("price").cast("decimal(12,2)").as("price"),
+        col("ts"), col("name"))
+    val idx = Seq("k", "i", "price", "days(ts)", "bucket16(k)")
+    val str = Seq("name")
+    def parity(name: String, frame: org.apache.spark.sql.DataFrame)
+        : Seq[String] = {
+      val t = freshTable(s"stats_parity_$name")
+      val lines = TxnTable.stageIndexed(spark, t, frame, idx, str)
+      assert(lines === rereadLines(t, lines.map(_.split('\t').head), idx,
+        str), s"$name: in-write stats differ from the re-read")
+      lines
+    }
+    // a multi-file stage: every transform, widened decimal boxes,
+    // truncated string bounds, files holding some nulls
+    val multi = parity("multi", df.repartitionByRange(4, col("i")))
+    assert(multi.size === 4 && multi.forall(TxnTable.hasStats))
+    // an all-null file: the empty range for every spec and the string
+    val allNull = parity("all_null", df.filter(col("k").isNull)
+      .withColumn("price", lit(null).cast("decimal(12,2)"))
+      .withColumn("ts", lit(null).cast("timestamp"))
+      .withColumn("name", lit(null).cast("string")).coalesce(1))
+    assert(allNull.head.contains("k\t0\t-1\t"), allNull.head)
+    // a zero-row stage: one schema-carrying file, PATH-ONLY
+    val empty = parity("zero_row", df.limit(0))
+    assert(empty.size === 1 && !TxnTable.hasStats(empty.head))
+    // long strings truncate in both bounds (lo a prefix, hi bumped)
+    val one = parity("strings", df.filter(col("name").isNotNull).coalesce(1))
+    assert(one.head.split('\t').contains("name~s"))
+  }
+
+  test("an indexed append is ONE Spark job: stats ride the write") {
+    val t = freshTable("append_one_job")
+    TxnTable.create(spark, t, baseDf(100))
+    TxnTable.reindex(spark, t, Seq("k"), Seq("v"))
+    val batch = baseDf(100).withColumn("k", col("k") + 1000L)
+    TxnTable.append(spark, t, batch) // warm
+    val jobs = jobsDuring(TxnTable.append(spark, t,
+      batch.withColumn("k", col("k") + 1000L)))
+    assert(jobs === 1, s"a 100-row indexed append ran $jobs Spark jobs")
+    val m = TxnTable.manifest(spark, t, TxnTable.currentVersion(spark, t))
+    assert(m.entries.forall(e =>
+      e.statFor("k").nonEmpty && e.strStatFor("v").nonEmpty &&
+        e.hllFor("k").nonEmpty && e.bytes > 0))
+    val (pruned, scanned, total) =
+      TxnTable.snapshotRange(spark, t, "k", 2000L, 2009L)
+    assert(scanned < total && pruned.count() === 10,
+      s"the appended files' stats must prune ($scanned/$total)")
+  }
+
+  test("bounded-tombstone reads work on a table at a RELATIVE location") {
+    val s = spark
+    import s.implicits._
+    val t = s"target/graft_relspec_${ProcessHandle.current().pid()}/t"
+    Fs.deleteRecursively(t)
+    try {
+      TxnTable.create(spark, t,
+        (0L until 20L).map(i => (i, s"r$i")).toDF("k", "v"))
+      TxnTable.applyChangesMor(spark, t,
+        Seq((1L, "", "D"), (2L, "u2", "U")).toDF("k", "v", "op"), "k")
+      TxnTable.applyChangesMor(spark, t,
+        Seq((3L, "", "D")).toDF("k", "v", "op"), "k")
+      TxnTable.rewriteTombstones(spark, t)
+      val m = TxnTable.manifest(spark, t, TxnTable.currentVersion(spark, t))
+      assert(m.deletes.map(_._2) === Seq("k~L"))
+      val got = TxnTable.snapshot(spark, t).as[(Long, String)].collect()
+        .sorted.toSeq
+      assert(got === ((0L until 20L).filterNot(Set(1L, 2L, 3L))
+        .map(i => (i, s"r$i")) :+ ((2L, "u2"))).sorted)
+    } finally Fs.deleteRecursively(s"target/graft_relspec_" +
+      ProcessHandle.current().pid())
+  }
+
+  test("broadcast sizing: an unknown file size never broadcasts") {
+    val t = freshTable("bcast_size")
+    TxnTable.create(spark, t, baseDf(10))
+    val f = new org.apache.hadoop.fs.Path(t)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = TxnTable.liveFiles(spark, t, 0)
+      .map(r => new org.apache.hadoop.fs.Path(s"$t/$r"))
+    assert(TxnTable.broadcastable(f, live), "a measured small file must")
+    val missing = new org.apache.hadoop.fs.Path(s"$t/data/gone.parquet")
+    assert(!TxnTable.broadcastable(f, Seq(missing)),
+      "a failed stat counted as small")
+    assert(!TxnTable.broadcastable(f, live :+ missing))
+  }
 }
