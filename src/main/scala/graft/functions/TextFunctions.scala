@@ -41,9 +41,6 @@ object TextFunctions {
   val Stopwords: Seq[String] =
     Seq("the", "a", "of", "and", "to", "in", "is", "it")
 
-  def stopwordCount(tokens: Column): Column =
-    size(filter(tokens, t => t.isin(Stopwords: _*)))
-
   /** Token count of a TEXT column — `size(wsTokens(text))` as one
     * allocation-free codegen'd byte scan ([[WsTokenCount]]). */
   def wsTokenCount(text: Column): Column = WsTokenCount(text)

@@ -25,9 +25,4 @@ object VectorFunctions {
     * implementation for cross-checking the native expression. */
   def cosineFold(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
-
-  /** Cosine given precomputed norms — lets pipelines compute each row's
-    * norm once instead of per candidate pair. */
-  def cosinePrenormed(dotAB: Column, normA: Column, normB: Column): Column =
-    dotAB / (normA * normB)
 }

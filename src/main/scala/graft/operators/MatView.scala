@@ -58,37 +58,69 @@ object MatView {
     * independently (a reprice crossing the boundary folds as the
     * membership change it is). */
   case class MvDef(base: String, keys: Seq[String], value: String,
-      aggs: Set[String], pred: Option[String] = None)
+      aggs: Set[String], pred: Option[String] = None) extends ViewDef {
+    def kind: String = "fold"
+    def tables: Seq[String] = Seq(base)
+  }
+
+  /** A view's stored DEFINITION — one case per kind (fold `_mv`, join
+    * `_mvj`, live `_mvl`, extrema `_mvx`), decoded once by
+    * [[definition]]. The kind is a fact on disk, so every entry point
+    * (register, refresh, drop, the listings) dispatches on this value
+    * and no caller ever names the kind it holds. */
+  sealed trait ViewDef {
+    /** "fold", "join", "live" or "extrema" — the SHOW/DROP vocabulary. */
+    def kind: String
+    /** Every table whose log this view's incremental contract reads. */
+    def tables: Seq[String]
+  }
 
   private def fs(s: SparkSession, p: Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  private def defPath(mv: String) = new Path(s"$mv/_mv")
-
-  private def writeDef(s: SparkSession, mv: String, d: MvDef): Unit = {
-    val p = defPath(mv)
+  /** Every definition file is one line per field, each terminated. */
+  private def writeDefFile(s: SparkSession, mv: String, file: String,
+      lines: Seq[String]): Unit = {
+    val p = new Path(s"$mv/$file")
     val out = fs(s, p).create(p, false)
-    // comma-joined keys on one line: a pre-multi-key _mv (single bare
-    // name) parses identically, so old views keep reading; the 4th
-    // line is the declared aggregate set; a PARTIAL view appends its
-    // predicate as the 5th line (full views stay 4-line on disk)
-    try out.write((s"${d.base}\n${d.keys.mkString(",")}\n${d.value}\n" +
-      s"${d.aggs.toSeq.sorted.mkString(",")}\n" +
-      d.pred.map(_ + "\n").getOrElse(""))
+    try out.write(lines.mkString("", "\n", "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
 
+  /** The definition file's lines, or None when `mv` holds no such file. */
+  private def readDefFile(s: SparkSession, mv: String, file: String)
+      : Option[Seq[String]] = {
+    val p = new Path(s"$mv/$file")
+    if (!fs(s, p).exists(p)) None
+    else {
+      val in = fs(s, p).open(p)
+      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+      Some(txt.linesIterator.toSeq)
+    }
+  }
+
+  /** The view's stored definition: the first of `_mv`, `_mvj`, `_mvx`,
+    * `_mvl` that exists, decoded by its kind's parser. A fold view
+    * costs one existence probe and one read, like any single-file
+    * definition read; refuses loudly when `mv` holds no definition. */
+  def definition(s: SparkSession, mv: String): ViewDef = {
+    def read(file: String)(parse: Seq[String] => ViewDef) =
+      readDefFile(s, mv, file).map(parse)
+    read("_mv")(parseFold(mv, _))
+      .orElse(read("_mvj")(parseJoin(mv, _)))
+      .orElse(read("_mvx")(parseExtrema(mv, _)))
+      .orElse(read("_mvl")(parseLive(mv, _)))
+      .getOrElse(throw new IllegalArgumentException(
+        s"$mv is not a materialized view (no _mv/_mvj/_mvx/_mvl " +
+          "definition)"))
+  }
+
   private val AllAggs = Set("count", "sum", "avg")
 
-  def readDef(s: SparkSession, mv: String): MvDef = {
-    val p = defPath(mv)
-    require(fs(s, p).exists(p), s"$mv is not a materialized view " +
-      "(no _mv definition; create it with MatView.create)")
-    val in = fs(s, p).open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    txt.linesIterator.toSeq match {
+  private def parseFold(mv: String, lines: Seq[String]): MvDef =
+    lines match {
       // pre-aggs definitions (3 lines) served every fold-derivable
       // aggregate — keep that behavior for existing views
       case Seq(base, keys, value) =>
@@ -110,7 +142,6 @@ object MatView {
       case other => throw new IllegalArgumentException(
         s"$mv: malformed _mv definition (${other.size} lines)")
     }
-  }
 
   /** The base version this MV reflects: the newest MV commit carrying
     * the `mv_base_version` metric. Walking newest-first keeps the
@@ -342,8 +373,12 @@ object MatView {
     val src = pred.fold(snap)(snap.filter)
     val v = commitMvRows(s, mv, src, keys, value,
       Seq("mv_base_version" -> bv))
-    writeDef(s, mv, MvDef(base, keys, value,
-      aggs.map(_.toLowerCase).toSet, pred))
+    // comma-joined keys on one line: a pre-multi-key _mv (single bare
+    // name) parses identically, so old views keep reading; the 4th
+    // line is the declared aggregate set; a PARTIAL view appends its
+    // predicate as the 5th line (full views stay 4-line on disk)
+    writeDefFile(s, mv, "_mv", Seq(base, keys.mkString(","), value,
+      aggs.map(_.toLowerCase).distinct.sorted.mkString(",")) ++ pred)
     v
   }
 
@@ -395,19 +430,6 @@ object MatView {
   case class RefreshResult(mvVersion: Long, baseVersion: Long,
       commitsFolded: Int)
 
-  /** Which definition kind lives at `mv` — "fold" (`_mv`), "join"
-    * (`_mvj`) or "extrema" (`_mvx`); refuses loudly when none does.
-    * The REFRESH MATERIALIZED VIEW dispatch. */
-  private[graft] def kindOf(s: SparkSession, mv: String): String =
-    if (fs(s, defPath(mv)).exists(defPath(mv))) "fold"
-    else if (fs(s, joinDefPath(mv)).exists(joinDefPath(mv))) "join"
-    else if (fs(s, extremaDefPath(mv)).exists(extremaDefPath(mv)))
-      "extrema"
-    else if (fs(s, liveDefPath(mv)).exists(liveDefPath(mv))) "live"
-    else throw new IllegalArgumentException(
-      s"$mv is not a materialized view (no _mv/_mvj/_mvx/_mvl " +
-        "definition)")
-
   /** Closed per-key-column bounds a serving read may prune the MV's
     * OWN files with — a SUPERSET of the query predicate's satisfying
     * space, derived by the rewrite from its key-only conjuncts (the
@@ -432,16 +454,19 @@ object MatView {
     if (kb.isEmpty) TxnTable.snapshot(s, mv, mvVer)
     else TxnTable.snapshotBoxed(s, mv, kb.ints, kb.strs, mvVer)._1
 
+  /** Incremental refresh of the view at `mv`, whatever its kind: the
+    * stored definition picks the fold body below, or the join, live or
+    * extrema one. */
   def refresh(s: SparkSession, mv: String): RefreshResult =
-    refresh(s, mv, publishFeed = true)
+    definition(s, mv) match {
+      case d: MvDef => refreshFold(s, mv, d)
+      case d: MvJoinDef => refreshJoin(s, mv, d)
+      case LiveDef(d, grain) => refreshLive(s, mv, d, grain)
+      case d: MvExtremaDef => refreshExtrema(s, mv, d)
+    }
 
-  /** `publishFeed = false` skips the refresh merge's own signed feed —
-    * the view then cannot be CHAINED on ([[mvChain]]), but a
-    * perf-sensitive single-level refresh saves the preimage re-read of
-    * the touched MV files and the feed write. */
-  def refresh(s: SparkSession, mv: String, publishFeed: Boolean)
+  private def refreshFold(s: SparkSession, mv: String, d0: MvDef)
       : RefreshResult = {
-    val d0 = readDef(s, mv)
     // pin ONE MV version for the cursor, the rows AND the merge's CAS:
     // two concurrent refreshes otherwise interleave so the second folds
     // the feed tail onto rows that already include it (cursor from the
@@ -478,7 +503,7 @@ object MatView {
     val feedDf = s.read.parquet(refs: _*)
     val feed = d.pred.fold(feedDf)(feedDf.filter)
     val v = foldAndMerge(s, mv, mvVer, d.keys, d.value, feed,
-      Seq("mv_base_version" -> head) ++ stamp, publishFeed)
+      Seq("mv_base_version" -> head) ++ stamp)
     RefreshResult(v, head, folded)
   }
 
@@ -496,16 +521,16 @@ object MatView {
     * transplant the view serves and refreshes against the PARENT: the
     * dev dashboard follows its table into production for free. */
   def transplant(s: SparkSession, mv: String): Long = {
-    // a join/extrema view has no single transplantable cursor (multiple
-    // dim timelines / a recompute-bound contract) — refuse with the
-    // SPECIFIC reason, not readDef's generic not-a-fold-MV message
-    require(!fs(s, joinDefPath(mv)).exists(joinDefPath(mv)) &&
-      !fs(s, extremaDefPath(mv)).exists(extremaDefPath(mv)) &&
-      !fs(s, liveDefPath(mv)).exists(liveDefPath(mv)),
-      s"$mv: transplant applies to fold MVs only — join, extrema and " +
-        "live views track multiple or recompute-bound cursors; " +
-        "recompute them on the parent instead")
-    val d = readDef(s, mv)
+    // a join/extrema/live view has no single transplantable cursor
+    // (multiple dim timelines / a recompute-bound contract) — refuse
+    // with the SPECIFIC reason
+    val d = definition(s, mv) match {
+      case d: MvDef => d
+      case _ => throw new IllegalArgumentException(
+        s"$mv: transplant applies to fold MVs only — join, extrema and " +
+          "live views track multiple or recompute-bound cursors; " +
+          "recompute them on the parent instead")
+    }
     val parent = parentOf(d.base)
     val leaf = d.base.drop(parent.length + "/_branches/".length)
     val ref = TxnTable.branches(s, parent).map(_._1)
@@ -605,7 +630,7 @@ object MatView {
     * carrying the cursor metrics. */
   private def foldAndMerge(s: SparkSession, mv: String, mvVer: Long,
       keys: Seq[String], value: String, feed: DataFrame,
-      metrics: Seq[(String, Long)], publishFeed: Boolean): Long = {
+      metrics: Seq[(String, Long)]): Long = {
     // the signed fold: per group, dn = Σw, dnn = Σw over non-null
     // values, dtotal = Σ(w·value); a key appearing in several feeds
     // telescopes here, in ONE aggregate
@@ -666,9 +691,9 @@ object MatView {
     // (mv over mv — per-level refresh stays O(that level's delta)).
     // A legacy view keyed 'w' (reserved only since the feed existed)
     // skips publication gracefully instead of bricking at refresh.
-    val cdc = publishFeed && !changeSet.columns.contains("w")
-    TxnTable.applyChangesWithMetrics(s, mv, changeSet, keys,
-      metrics, cdc = cdc, expectedVer = mvVer, pinned = true).version
+    TxnTable.applyChangesWithMetrics(s, mv, changeSet, keys, metrics,
+      cdc = !changeSet.columns.contains("w"), expectedVer = mvVer,
+      pinned = true).version
   }
 
   /** STALE-MV DELTA COMPENSATION — the query-time half of [[refresh]]'s
@@ -751,22 +776,22 @@ object MatView {
     * create refuses it). */
   case class MvJoinDef(fact: String, dims: Seq[MvDimRef],
       keys: Seq[String], value: String, aggs: Set[String],
-      pred: Option[String] = None)
-
-  private def joinDefPath(mv: String) = new Path(s"$mv/_mvj")
+      pred: Option[String] = None) extends ViewDef {
+    def kind: String = "join"
+    def tables: Seq[String] = fact +: dims.map(_.dim)
+  }
 
   /** The multi-dim star definition LINE PROTOCOL — ONE render/parse
     * pair shared by `_mvj` (no trailing lines) and `_mvl` (one
     * trailing grain line), so a future format change can never
     * silently diverge the two kinds: fact, #dims,
     * (dim TAB factKey TAB dimKey)*, keys, value, aggs, trailing*. */
-  private def renderStarDef(d: MvJoinDef, trailing: Seq[String])
-      : String =
-    (Seq(d.fact, d.dims.size.toString) ++
+  private def starLines(d: MvJoinDef, trailing: Seq[String])
+      : Seq[String] =
+    Seq(d.fact, d.dims.size.toString) ++
       d.dims.map(r => s"${r.dim}\t${r.factKey}\t${r.dimKey}") ++
       Seq(d.keys.mkString(","), d.value,
-        d.aggs.toSeq.sorted.mkString(",")) ++ trailing)
-      .mkString("", "\n", "\n")
+        d.aggs.toSeq.sorted.mkString(",")) ++ trailing
 
   private def parseStarDef(mv: String, kindFile: String,
       lines: Seq[String], minTrailing: Int, maxTrailing: Int)
@@ -800,32 +825,10 @@ object MatView {
         s"$mv: malformed $kindFile definition (${other.size} lines)")
     }
 
-  private def writeDefFile(s: SparkSession, p: Path, content: String)
-      : Unit = {
-    val out = fs(s, p).create(p, false)
-    try out.write(content
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private def readDefFile(s: SparkSession, p: Path): Seq[String] = {
-    val in = fs(s, p).open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    txt.linesIterator.toSeq
-  }
-
-  private def writeJoinDef(s: SparkSession, mv: String, d: MvJoinDef)
-      : Unit =
-    // a PARTIAL star stores its predicate as the one trailing line —
-    // full views keep the trailing-free format unchanged on disk
-    writeDefFile(s, joinDefPath(mv), renderStarDef(d, d.pred.toSeq))
-
-  def readJoinDef(s: SparkSession, mv: String): MvJoinDef = {
-    val p = joinDefPath(mv)
-    require(fs(s, p).exists(p), s"$mv is not a join materialized view " +
-      "(no _mvj definition; create it with MatView.createJoin)")
-    readDefFile(s, p) match {
+  // a PARTIAL star stores its predicate as the one trailing line —
+  // full views keep the trailing-free format unchanged on disk
+  private def parseJoin(mv: String, lines: Seq[String]): MvJoinDef =
+    lines match {
       // the legacy 7-line single-dim format (line 2 a path, not an
       // integer) still parses
       case Seq(fact, dim, fk, dk, keys, value, aggs)
@@ -834,11 +837,10 @@ object MatView {
           "(empty declared-aggregate line)")
         MvJoinDef(fact, Seq(MvDimRef(dim, fk, dk)),
           keys.split(',').toSeq, value, aggs.split(',').toSet)
-      case lines =>
+      case _ =>
         val (d, trailing) = parseStarDef(mv, "_mvj", lines, 0, 1)
         d.copy(pred = trailing.headOption)
     }
-  }
 
   /** key column → owning side, validated unique across the FACT and
     * every dim: −1 = the fact owns it (the q03 "GROUP BY a fact
@@ -922,7 +924,7 @@ object MatView {
     val v = commitMvRows(s, mv, joined, keys, value,
       ("mv_base_version" -> fv) +:
         dvs.zipWithIndex.map { case (dv, i) => dimCursorMetric(i) -> dv })
-    writeJoinDef(s, mv, d0)
+    writeDefFile(s, mv, "_mvj", starLines(d0, pred.toSeq))
     v
   }
 
@@ -935,9 +937,6 @@ object MatView {
       ContentInvariantOps(m.op) ||
         m.metrics.get("change_noop").contains(1L)
     }
-
-  def refreshJoin(s: SparkSession, mv: String): RefreshResult =
-    refreshJoin(s, mv, publishFeed = true)
 
   /** Chain-join a fact-rowed frame (alias "f") to every dim at the
     * given versions and project the grouping keys (from their owning
@@ -1019,9 +1018,8 @@ object MatView {
     * total` metrics on the refresh commit carry the prune evidence.
     * Cost is O(fact changes ⋈ dims) + O(dim changes ⋈ touched fact
     * files) + O(MV) — never O(fact). */
-  def refreshJoin(s: SparkSession, mv: String, publishFeed: Boolean)
+  private def refreshJoin(s: SparkSession, mv: String, d: MvJoinDef)
       : RefreshResult = {
-    val d = readJoinDef(s, mv)
     // same one-version pin as refresh: cursors, rows and the merge CAS
     // all read MV state at mvVer, so racing refreshes fail loudly
     val mvVer = TxnTable.currentVersion(s, mv)
@@ -1092,7 +1090,7 @@ object MatView {
       else Seq("mv_scd_files_kept" -> keptSum,
         "mv_scd_files_total" -> totalSum)
     val v = foldAndMerge(s, mv, mvVer, d.keys, d.value,
-      terms.reduce(_ unionByName _), metrics ++ scdMetrics, publishFeed)
+      terms.reduce(_ unionByName _), metrics ++ scdMetrics)
     RefreshResult(v, head, folded)
   }
 
@@ -1252,35 +1250,23 @@ object MatView {
     * fundamentally lacks per-dim-key subtotals — no plan fragment over
     * it can reattribute a moved dim key without re-reading fact rows,
     * while the key-grain fold answers with ZERO fact data files in the
-    * served plan. */
-  private def liveDefPath(mv: String) = new Path(s"$mv/_mvl")
-
-  /** The `_mvl` format is [[renderStarDef]]'s shared protocol plus ONE
-    * mandatory trailing line — the persisted grain, so refresh never
-    * re-resolves ownership (it reads no dim) — and, for a PARTIAL live
-    * view, the stored fact-side predicate as a second. */
-  private def writeLiveDef(s: SparkSession, mv: String, d: MvJoinDef,
-      grain: Seq[String]): Unit =
-    writeDefFile(s, liveDefPath(mv),
-      renderStarDef(d, grain.mkString(",") +: d.pred.toSeq))
-
-  def readLiveDef(s: SparkSession, mv: String)
-      : (MvJoinDef, Seq[String]) = {
-    val p = liveDefPath(mv)
-    require(fs(s, p).exists(p), s"$mv is not a live star " +
-      "materialized view (no _mvl definition; create it with " +
-      "MatView.createStarLive)")
-    val (d, trailing) = parseStarDef(mv, "_mvl", readDefFile(s, p), 1, 2)
-    (d.copy(pred = trailing.drop(1).headOption),
-      trailing.head.split(',').toSeq)
+    * served plan. `star` is the declared view (keys are the dim
+    * attributes the queries group by); `grain` the persisted fact-side
+    * grouping the view is stored at, so refresh never re-resolves
+    * ownership (it reads no dim). */
+  case class LiveDef(star: MvJoinDef, grain: Seq[String]) extends ViewDef {
+    def kind: String = "live"
+    def tables: Seq[String] = star.tables
   }
 
-  /** Single-dim [[createStarLive]]. */
-  def createLive(s: SparkSession, mv: String, fact: String, dim: String,
-      factKey: String, dimKey: String, keys: Seq[String], value: String,
-      aggs: Seq[String] = Seq("count", "sum", "avg")): Long =
-    createStarLive(s, mv, fact, Seq(MvDimRef(dim, factKey, dimKey)),
-      keys, value, aggs)
+  /** The `_mvl` format is [[starLines]]' shared protocol plus ONE
+    * mandatory trailing line — the grain — and, for a PARTIAL live
+    * view, the stored fact-side predicate as a second. */
+  private def parseLive(mv: String, lines: Seq[String]): LiveDef = {
+    val (d, trailing) = parseStarDef(mv, "_mvl", lines, 1, 2)
+    LiveDef(d.copy(pred = trailing.drop(1).headOption),
+      trailing.head.split(',').toSeq)
+  }
 
   /** Create the live star view: ONE scan of the FACT alone (the dims
     * are read only to validate key ownership — never materialized),
@@ -1343,20 +1329,17 @@ object MatView {
       .reduce(_ && _))
     val v = commitMvRows(s, mv, src, grain, value,
       Seq("mv_base_version" -> fv))
-    writeLiveDef(s, mv, d0, grain)
+    writeDefFile(s, mv, "_mvl",
+      starLines(d0, grain.mkString(",") +: pred.toSeq))
     v
   }
-
-  def refreshLive(s: SparkSession, mv: String): RefreshResult =
-    refreshLive(s, mv, publishFeed = true)
 
   /** Incremental refresh of a live star view: the FACT's signed-feed
     * tail folds by the grain — no dim is opened, no dim cursor exists.
     * Feed rows with a NULL join key are excluded exactly like create's
     * scan (the served inner join never sees them). */
-  def refreshLive(s: SparkSession, mv: String, publishFeed: Boolean)
-      : RefreshResult = {
-    val (d, grain) = readLiveDef(s, mv)
+  private def refreshLive(s: SparkSession, mv: String, d: MvJoinDef,
+      grain: Seq[String]): RefreshResult = {
     val mvVer = TxnTable.currentVersion(s, mv)
     val last = cursorAt(s, mv, mvVer, "mv_base_version")
     val head = TxnTable.currentVersion(s, d.fact)
@@ -1375,7 +1358,7 @@ object MatView {
       .filter(d.dims.map(r => col(r.factKey).isNotNull).reduce(_ && _))
     val feed = d.pred.fold(feed0)(feed0.filter)
     val v = foldAndMerge(s, mv, mvVer, grain, d.value, feed,
-      Seq("mv_base_version" -> head), publishFeed)
+      Seq("mv_base_version" -> head))
     RefreshResult(v, head, folded)
   }
 
@@ -1451,30 +1434,15 @@ object MatView {
     * non-distributive aggregates): O(feed) when clean, O(dirty groups'
     * files) when an extreme falls, never O(base). */
   case class MvExtremaDef(base: String, keys: Seq[String], value: String,
-      pred: Option[String] = None)
-
-  private def extremaDefPath(mv: String) = new Path(s"$mv/_mvx")
-
-  private def writeExtremaDef(s: SparkSession, mv: String,
-      d: MvExtremaDef): Unit = {
-    val p = extremaDefPath(mv)
-    val out = fs(s, p).create(p, false)
-    // a PARTIAL extrema view appends its predicate as the 4th line —
-    // the `_mv` definition's convention; full views stay 3-line on disk
-    try out.write((s"${d.base}\n${d.keys.mkString(",")}\n${d.value}\n" +
-      d.pred.map(_ + "\n").getOrElse(""))
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+      pred: Option[String] = None) extends ViewDef {
+    def kind: String = "extrema"
+    def tables: Seq[String] = Seq(base)
   }
 
-  def readExtremaDef(s: SparkSession, mv: String): MvExtremaDef = {
-    val p = extremaDefPath(mv)
-    require(fs(s, p).exists(p), s"$mv is not an extrema materialized " +
-      "view (no _mvx definition; create it with MatView.createExtrema)")
-    val in = fs(s, p).open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    txt.linesIterator.toSeq match {
+  // a PARTIAL extrema view appends its predicate as the 4th line — the
+  // `_mv` definition's convention; full views stay 3-line on disk
+  private def parseExtrema(mv: String, lines: Seq[String]): MvExtremaDef =
+    lines match {
       case Seq(base, keys, value) =>
         MvExtremaDef(base, keys.split(',').toSeq, value)
       case Seq(base, keys, value, pred) =>
@@ -1484,7 +1452,6 @@ object MatView {
       case other => throw new IllegalArgumentException(
         s"$mv: malformed _mvx definition (${other.size} lines)")
     }
-  }
 
   /** Create the extrema MV: rows are (keys…, n, nn, vmin, vmax), the
     * extremes carried in the value's OWN type — MIN/MAX do no
@@ -1532,7 +1499,8 @@ object MatView {
       op = "mv_create", schemaJson = rows.schema.json,
       idxCols = intKeys, strIdxCols = strKeys,
       metrics = Seq("mv_base_version" -> bv))
-    writeExtremaDef(s, mv, MvExtremaDef(base, keys, value, pred))
+    writeDefFile(s, mv, "_mvx",
+      Seq(base, keys.mkString(","), value) ++ pred)
     v
   }
 
@@ -1554,12 +1522,8 @@ object MatView {
     * views stack ON it (sum/count of per-group extremes — the
     * "sum of worst-latency per service" pane) at O(changed groups)
     * per level, never O(view). */
-  def refreshExtrema(s: SparkSession, mv: String): RefreshResult =
-    refreshExtrema(s, mv, publishFeed = true)
-
-  def refreshExtrema(s: SparkSession, mv: String, publishFeed: Boolean)
-      : RefreshResult = {
-    val d = readExtremaDef(s, mv)
+  private def refreshExtrema(s: SparkSession, mv: String,
+      d: MvExtremaDef): RefreshResult = {
     val mvVer = TxnTable.currentVersion(s, mv)
     val last = cursorAt(s, mv, mvVer, "mv_base_version")
     val head = TxnTable.currentVersion(s, d.base)
@@ -1677,7 +1641,7 @@ object MatView {
       Seq("mv_base_version" -> head, "mv_dirty_groups" -> nDirty,
         "mv_dirty_files_kept" -> keptFiles,
         "mv_dirty_files_total" -> totalFiles),
-      cdc = publishFeed, expectedVer = mvVer)
+      cdc = true, expectedVer = mvVer)
     RefreshResult(r.version, head, folded)
   }
 
@@ -1933,7 +1897,7 @@ object MatView {
           col("price") > lit(fmin) && col("price") < lit(fmax))
         .select(k, st, col("price"), lit("D").as("op")))
     TxnTable.applyChangesMor(s, base, ch1, "o_orderkey", cdc = true)
-    val r1 = refreshExtrema(s, mv)
+    val r1 = refresh(s, mv)
     val m1 = TxnTable.commitMetrics(s, mv, r1.mvVersion)
     // wave 2 (adversarial): fell the extremes themselves — every row
     // holding F's max and P's min (ties included: deterministic both
@@ -1948,9 +1912,9 @@ object MatView {
       .unionByName(snap1.filter(st === "P" && col("price") === lit(pmin2)))
       .select(k, st, col("price"), lit("D").as("op"))
     TxnTable.applyChangesMor(s, base, ch2, "o_orderkey", cdc = true)
-    val r2 = refreshExtrema(s, mv)
+    val r2 = refresh(s, mv)
     val m2 = TxnTable.commitMetrics(s, mv, r2.mvVersion)
-    val r3 = refreshExtrema(s, mv) // at head: no commit
+    val r3 = refresh(s, mv) // at head: no commit
     val ok = r1.commitsFolded == 1 && r2.commitsFolded == 1 &&
       m1.get("mv_dirty_groups").contains(0L) &&
       m2.get("mv_dirty_groups").contains(2L) &&
@@ -1964,7 +1928,7 @@ object MatView {
   }
 
   /** op_mvx_chain: FOLD VIEWS STACKED ON AN EXTREMA VIEW — the piece
-    * [[refreshExtrema]]'s published feed unlocks: base → extrema MV
+    * the extrema [[refresh]]'s published feed unlocks: base → extrema MV
     * (max price per (st, pri)) → fold MV over it (per st: group count
     * + SUM of per-group maxima — the "sum of worst-latency per
     * service" dashboard). Wave 1 is the CLEAN shape (keyspace-shifted
@@ -2002,7 +1966,7 @@ object MatView {
         (col("price") + lit(100000).cast(D12)).cast(D12).as("price"))
     TxnTable.applyChangesMor(s, base, ins.withColumn("op", lit("U")),
       "o_orderkey", cdc = true)
-    val rx1 = refreshExtrema(s, xmv)
+    val rx1 = refresh(s, xmv)
     val m1 = TxnTable.commitMetrics(s, xmv, rx1.mvVersion)
     val feed1 = TxnTable.manifest(s, xmv, rx1.mvVersion).cdcRefs.nonEmpty
     val rt1 = refresh(s, top)
@@ -2022,7 +1986,7 @@ object MatView {
     TxnTable.applyChangesMor(s, base,
       ins.filter(col("st") === "F").withColumn("op", lit("D")),
       "o_orderkey", cdc = true)
-    val rx2 = refreshExtrema(s, xmv)
+    val rx2 = refresh(s, xmv)
     val m2 = TxnTable.commitMetrics(s, xmv, rx2.mvVersion)
     val feed2 = TxnTable.manifest(s, xmv, rx2.mvVersion).cdcRefs.nonEmpty
     val rt2 = refresh(s, top)
@@ -2038,99 +2002,85 @@ object MatView {
 
   // ---- TRANSPARENT QUERY REWRITING ----------------------------------------
 
-  /** Session-wide MV registry: base location → (MV location, cached
-    * definition). Exact-string keyed (both sides come from the same
-    * catalog/warehouse path convention); `register` replaces — latest
-    * MV for a base wins. The definition is immutable by contract, so
-    * caching it here removes the per-query `_mv` file read the rewrite
-    * rule would otherwise pay on every analyzer iteration. */
-  private val registry =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, MvDef)]()
+  /** Session-wide MV registry, ONE map for every kind: (kind, key) →
+    * (MV location, cached definition). The key is [[keyOf]] the view's
+    * tables — for a fold view its EFFECTIVE base instead, so a
+    * transplanted branch view serves the parent — so its first
+    * tab-separated field is always the view's base or fact.
+    * Exact-string keyed (both sides come from the same
+    * catalog/warehouse path convention); latest registration per key
+    * wins. The definition is immutable by contract, so caching it here
+    * removes the per-query definition read the rewrite rule would
+    * otherwise pay on every analyzer iteration. */
+  private val registry = new java.util.concurrent
+    .ConcurrentHashMap[(String, String), (String, ViewDef)]()
 
+  /** A view's tables as one registry key: the base or fact, then the
+    * sorted dim set — the rewrite rule probes every fact candidate of
+    * the matched join tree. Tab is the separator the star definition's
+    * dim lines already reserve. */
+  private def keyOf(tables: Seq[String]): String =
+    (tables.head +: tables.tail.sorted).mkString("\t")
+
+  /** Register the view at `mv` for the transparent rewrite, whatever
+    * its kind. Every entry this view already owns goes first: a
+    * transplanted fold view re-keys from its branch dir onto the parent,
+    * and a stale branch key would make every branch-addressed aggregate
+    * pay a cursor walk just to disqualify, forever. The rule
+    * re-resolves a fold view's effective base per query, so a
+    * registration gone stale (a transplant after register) disqualifies
+    * rather than serving the wrong timeline — re-register after
+    * transplant. */
   def register(s: SparkSession, mv: String): Unit = {
-    val d0 = readDef(s, mv)
-    // key by the EFFECTIVE base (a transplanted branch MV serves the
-    // parent); the rule re-resolves per query, so a registration that
-    // goes stale (a transplant after register) disqualifies rather
-    // than serving the wrong timeline — re-register after transplant
-    val (d, _) = effectiveDef(s, mv, d0,
-      TxnTable.currentVersion(s, mv))
-    // drop OUR stale pre-transplant key (the branch dir): leaving it
-    // would make every branch-addressed aggregate pay a cursor walk
-    // just to disqualify, forever. Only remove an entry this MV owns —
-    // a different view legitimately registered for the branch stays.
-    if (d.base != d0.base)
-      registry.computeIfPresent(d0.base,
-        (_, cur) => if (cur._1 == mv) null else cur)
-    registry.put(d.base, (mv, d0))
+    val d = definition(s, mv)
+    val key = d match {
+      case f: MvDef =>
+        effectiveDef(s, mv, f, TxnTable.currentVersion(s, mv))._1.base
+      case _ => keyOf(d.tables)
+    }
+    deregister(mv)
+    registry.put((d.kind, key), (mv, d))
   }
+
+  /** Remove every registry entry `mv` owns; other views' entries stay. */
+  private def deregister(mv: String): Unit =
+    registry.values.removeIf(_._1 == mv)
+
+  private def registeredAt(kind: String, key: String)
+      : Option[(String, ViewDef)] = Option(registry.get((kind, key)))
 
   private[graft] def registeredFor(base: String): Option[(String, MvDef)] =
-    Option(registry.get(base))
-
-  /** Join-MV registry, keyed (fact location, sorted dim-location set) —
-    * the rewrite rule probes every fact candidate of the matched join
-    * tree. */
-  private val joinRegistry = new java.util.concurrent
-    .ConcurrentHashMap[(String, String), (String, MvJoinDef)]()
-
-  private def joinKey(fact: String, dims: Seq[String]): (String, String) =
-    (fact, dims.sorted.mkString("|"))
-
-  def registerJoin(s: SparkSession, mv: String): Unit = {
-    val d = readJoinDef(s, mv)
-    joinRegistry.put(joinKey(d.fact, d.dims.map(_.dim)), (mv, d))
-  }
+    registeredAt("fold", base).collect { case (mv, d: MvDef) => (mv, d) }
 
   private[graft] def registeredJoinFor(fact: String, dims: Seq[String])
       : Option[(String, MvJoinDef)] =
-    Option(joinRegistry.get(joinKey(fact, dims)))
+    registeredAt("join", keyOf(fact +: dims)).collect {
+      case (mv, d: MvJoinDef) => (mv, d) }
 
-  /** Live-star registry, keyed exactly like the join registry — the
-    * rewrite probes the same (fact, dim set) key, falling back to the
-    * live view when no group-grain join MV matches (or the matched one
-    * disqualified on dim movement — the live view's reason to exist). */
-  private val liveRegistry = new java.util.concurrent
-    .ConcurrentHashMap[(String, String),
-      (String, MvJoinDef, Seq[String])]()
-
-  def registerLive(s: SparkSession, mv: String): Unit = {
-    val (d, grain) = readLiveDef(s, mv)
-    liveRegistry.put(joinKey(d.fact, d.dims.map(_.dim)), (mv, d, grain))
-  }
-
+  /** The live star view for the same (fact, dim set) key — the rewrite
+    * falls back to it when no group-grain join MV matches (or the
+    * matched one disqualified on dim movement — the live view's reason
+    * to exist). */
   private[graft] def registeredLiveFor(fact: String, dims: Seq[String])
       : Option[(String, MvJoinDef, Seq[String])] =
-    Option(liveRegistry.get(joinKey(fact, dims)))
-
-  /** Extrema-MV registry, base location → (MV location, definition). */
-  private val extremaRegistry = new java.util.concurrent
-    .ConcurrentHashMap[String, (String, MvExtremaDef)]()
-
-  def registerExtrema(s: SparkSession, mv: String): Unit = {
-    val d = readExtremaDef(s, mv)
-    extremaRegistry.put(d.base, (mv, d))
-  }
+    registeredAt("live", keyOf(fact +: dims)).collect {
+      case (mv, LiveDef(d, grain)) => (mv, d, grain) }
 
   private[graft] def registeredExtremaFor(base: String)
-      : Option[(String, MvExtremaDef)] = Option(extremaRegistry.get(base))
+      : Option[(String, MvExtremaDef)] =
+    registeredAt("extrema", base).collect {
+      case (mv, d: MvExtremaDef) => (mv, d) }
 
   /** Every view REGISTERED for the transparent rewrite in this
-    * session, across the three kinds — the SHOW MATERIALIZED VIEWS
+    * session, across the four kinds — the SHOW MATERIALIZED VIEWS
     * listing: (view location, kind, base/fact location). Session
     * state by design: the durable inventory is the per-table
     * `.matviews` metadata table; this answers "what can the rewrite
     * serve RIGHT NOW". */
   def registered(): Seq[(String, String, String)] = {
     import scala.jdk.CollectionConverters._
-    (registry.asScala.toSeq.map { case (b, (mv, _)) =>
-      (mv, "fold", b) } ++
-      joinRegistry.asScala.toSeq.map { case (_, (mv, d)) =>
-        (mv, "join", d.fact) } ++
-      extremaRegistry.asScala.toSeq.map { case (b, (mv, _)) =>
-        (mv, "extrema", b) } ++
-      liveRegistry.asScala.toSeq.map { case (_, (mv, d, _)) =>
-        (mv, "live", d.fact) }).sortBy(_._1)
+    registry.asScala.toSeq.map { case ((kind, key), (mv, _)) =>
+      (mv, kind, key.takeWhile(_ != '\t')) }.sortBy(_._1)
   }
 
   /** DROP the materialized view: deregister it from the transparent
@@ -2144,13 +2094,14 @@ object MatView {
     * cannot restore it because the registry keeps no history.
     * Returns the view's kind. */
   def drop(s: SparkSession, mv: String): String = {
-    val kind = kindOf(s, mv) // refuses loudly when mv is not a view
+    // refuses loudly when mv is not a view
+    val kind = definition(s, mv).kind
     // a refreshed view publishes its own signed feed, so views STACK
     // (fold-over-fold chains, folds over extrema feeds) — deleting a
     // base out from under a registered dependent would surface later
     // as a misleading 'base was restored/recreated; recompute' on the
     // dependent's next refresh. Refuse NOW, naming the dependents,
-    // BEFORE anything deregisters or deletes. (Session registries are
+    // BEFORE anything deregisters or deletes. (The session registry is
     // the dependency source of truth the rewrite itself uses; an
     // unregistered dependent is already serving nothing.)
     locally {
@@ -2161,14 +2112,8 @@ object MatView {
       // reach retentionPins/statusFor apply via mayServe/parentOf
       def under(b: String): Boolean = b == mv ||
         b.startsWith(s"$mv/")
-      val dependents = (
-        registry.asScala.values.map { case (m, d) => (m, d.base) } ++
-        extremaRegistry.asScala.values.map { case (m, d) =>
-          (m, d.base) } ++
-        joinRegistry.asScala.values.flatMap { case (m, d) =>
-          (d.fact +: d.dims.map(_.dim)).map((m, _)) } ++
-        liveRegistry.asScala.values.flatMap { case (m, d, _) =>
-          (d.fact +: d.dims.map(_.dim)).map((m, _)) })
+      val dependents = registry.asScala.values
+        .flatMap { case (m, d) => d.tables.map((m, _)) }
         .collect { case (m, b) if under(b) && m != mv => m }
         // a GHOST dependent — its registry entry survived but its
         // definition no longer reads (directory removed out-of-band)
@@ -2179,7 +2124,7 @@ object MatView {
         // probe must ABORT the drop, not silently wave a live
         // dependent through to have its base deleted
         .filter { m =>
-          try { kindOf(s, m); true }
+          try { definition(s, m); true }
           catch {
             case _: IllegalArgumentException => false // no def reads
             case _: java.io.FileNotFoundException => false
@@ -2196,33 +2141,7 @@ object MatView {
         "recompute them on a different base; deleting their base " +
         "would brick their next refresh")
     }
-    kind match {
-      case "fold" =>
-        val d = readDef(s, mv)
-        // the transplant-retargeted base is a BEST-EFFORT extra key: a
-        // view whose cursor commits were all vacuumed (exactly the
-        // broken view most in need of dropping) must still drop — fall
-        // back to the definition's own base
-        val effBase = scala.util.Try(effectiveDef(s, mv, d,
-          TxnTable.currentVersion(s, mv))._1.base).getOrElse(d.base)
-        Seq(d.base, effBase).distinct.foreach(b =>
-          registry.computeIfPresent(b,
-            (_, cur) => if (cur._1 == mv) null else cur))
-      case "join" =>
-        val d = readJoinDef(s, mv)
-        joinRegistry.computeIfPresent(
-          joinKey(d.fact, d.dims.map(_.dim)),
-          (_, cur) => if (cur._1 == mv) null else cur)
-      case "extrema" =>
-        val d = readExtremaDef(s, mv)
-        extremaRegistry.computeIfPresent(d.base,
-          (_, cur) => if (cur._1 == mv) null else cur)
-      case "live" =>
-        val (d, _) = readLiveDef(s, mv)
-        liveRegistry.computeIfPresent(
-          joinKey(d.fact, d.dims.map(_.dim)),
-          (_, cur) => if (cur._1 == mv) null else cur)
-    }
+    deregister(mv)
     // through the Hadoop FileSystem like every other MatView/TxnTable
     // path operation — a java.io delete would silently no-op on a
     // non-local warehouse and leave a "successful" drop fully on disk
@@ -2244,9 +2163,7 @@ object MatView {
       case Left(_) => false
     }
 
-  private[graft] def registryEmpty: Boolean =
-    registry.isEmpty && joinRegistry.isEmpty &&
-      extremaRegistry.isEmpty && liveRegistry.isEmpty
+  private[graft] def registryEmpty: Boolean = registry.isEmpty
 
   /** Whether a view registered with base `b` COULD effectively serve
     * `base`: directly, or as a branch view whose parent is `base` (the
@@ -2255,6 +2172,11 @@ object MatView {
   private def mayServe(b: String, base: String): Boolean = b == base ||
     (try parentOf(b) == base
      catch { case _: IllegalArgumentException => false })
+
+  /** The cursor the newest MV commit carries for `metric`. */
+  private def headCursor(s: SparkSession, mv: String,
+      metric: String = "mv_base_version"): Long =
+    cursorAt(s, mv, TxnTable.currentVersion(s, mv), metric)
 
   /** The version pins an MV-RESPECTING retention pass hands to
     * [[TxnTable.vacuum]] / [[TxnTable.expireSnapshots]] for `base`:
@@ -2285,154 +2207,127 @@ object MatView {
     def tail(cursor: Long): Set[Long] =
       if (cursor >= head) Set.empty[Long]
       else (cursor + 1 to head).toSet
-    def guarded(p: => Set[Long]): Set[Long] =
-      try p
-      catch { case scala.util.control.NonFatal(_) => Set.empty[Long] }
-    val folds = registry.asScala.values.toSeq.collect {
-      case (mv, d0) if mayServe(d0.base, base) => guarded {
-        val mvVer = TxnTable.currentVersion(s, mv)
-        val (dEff, cursor) = effectiveDef(s, mv, d0, mvVer)
-        if (dEff.base != base) Set.empty[Long] else tail(cursor)
-      }
-    }
-    val extremas = extremaRegistry.asScala.toSeq.collect {
-      case (b, (mv, _)) if b == base => guarded {
-        tail(cursorAt(s, mv, TxnTable.currentVersion(s, mv),
-          "mv_base_version"))
-      }
-    }
-    val joins = joinRegistry.asScala.values.toSeq.collect {
-      case (mv, d) if d.fact == base ||
-          d.dims.exists(_.dim == base) => guarded {
-        val mvVer = TxnTable.currentVersion(s, mv)
-        val factPins =
-          if (d.fact != base) Set.empty[Long]
-          else tail(cursorAt(s, mv, mvVer, "mv_base_version"))
-        val dimPins = d.dims.indices.flatMap { i =>
-          if (d.dims(i).dim != base) Set.empty[Long]
-          else tail(cursorAt(s, mv, mvVer, dimCursorMetric(i)))
-        }.toSet
-        factPins ++ dimPins
-      }
-    }
-    // live star views read ONLY the fact's feed tail (the dims join
-    // back at query time from their own snapshots — no log tail of
-    // theirs is ever read, so nothing of theirs needs pinning)
-    val lives = liveRegistry.asScala.values.toSeq.collect {
-      case (mv, d, _) if d.fact == base => guarded {
-        tail(cursorAt(s, mv, TxnTable.currentVersion(s, mv),
-          "mv_base_version"))
-      }
-    }
-    (folds ++ extremas ++ joins ++ lives).flatten.toSet
+    registry.asScala.values.toSeq.flatMap { case (mv, d) =>
+      try d match {
+        case d0: MvDef if mayServe(d0.base, base) =>
+          val (dEff, cursor) = effectiveDef(s, mv, d0,
+            TxnTable.currentVersion(s, mv))
+          if (dEff.base != base) Set.empty[Long] else tail(cursor)
+        // live star views read ONLY the fact's feed tail (the dims
+        // join back at query time from their own snapshots — no log
+        // tail of theirs is ever read, so nothing of theirs needs
+        // pinning); extrema views their base's
+        case _: MvExtremaDef | _: LiveDef if d.tables.head == base =>
+          tail(headCursor(s, mv))
+        case j: MvJoinDef if j.tables.contains(base) =>
+          val mvVer = TxnTable.currentVersion(s, mv)
+          val factPins =
+            if (j.fact != base) Set.empty[Long]
+            else tail(cursorAt(s, mv, mvVer, "mv_base_version"))
+          factPins ++ j.dims.indices.flatMap { i =>
+            if (j.dims(i).dim != base) Set.empty[Long]
+            else tail(cursorAt(s, mv, mvVer, dimCursorMetric(i)))
+          }
+        case _ => Set.empty[Long]
+      } catch { case scala.util.control.NonFatal(_) => Set.empty[Long] }
+    }.toSet
   }
 
   /** One registered view's LOG-decided status snapshot: its primary
     * cursor (the fold/extrema base cursor; the FACT cursor for join
-    * views), that base's head, `fresh` (every cursor at its head) and
-    * `servable` — fresh, or stale in a way the view's own serving
-    * algebra provably covers: a feed-complete tail for fold views, a
-    * content-invariant tail for extrema, fact-feed-complete +
-    * dim-invariant tails for join views. */
+    * and live views), that base's head, `fresh` (every cursor at its
+    * head) and `servable` — fresh, or stale in a way the view's own
+    * serving algebra provably covers: a feed-complete tail for fold
+    * and live views, a content-invariant tail for extrema,
+    * fact-feed-complete + dim-invariant tails for join views. */
   case class MvStatus(mv: String, kind: String, fresh: Boolean,
       servable: Boolean, cursor: Long, head: Long)
 
   /** Every registered view whose definition involves `base` — fold and
-    * extrema views over it, join views where it is the fact or one of
-    * the dims — each probed against the LOG (O(tail headers) per view,
-    * never a data file). A view whose probe throws (vacuumed cursor,
-    * deleted directory) reports (fresh = false, servable = false,
-    * cursor = -1) instead of failing the listing: an operator asking
-    * "which views serve this table?" must see the broken one, not an
-    * exception. Powers the `graft.ns.t.matviews` metadata table. */
+    * extrema views over it, join and live views where it is the fact
+    * or one of the dims — each probed against the LOG (O(tail headers)
+    * per view, never a data file). A view whose probe throws (vacuumed
+    * cursor, deleted directory) reports (fresh = false, servable =
+    * false, cursor = -1) instead of failing the listing: an operator
+    * asking "which views serve this table?" must see the broken one,
+    * not an exception. Powers the `graft.ns.t.matviews` metadata
+    * table. */
   def statusFor(s: SparkSession, base: String): Seq[MvStatus] = {
     import scala.jdk.CollectionConverters._
-    def guarded(mv: String, kind: String)(p: => MvStatus): MvStatus =
-      try p catch { case scala.util.control.NonFatal(_) =>
-        MvStatus(mv, kind, fresh = false, servable = false, -1L, -1L) }
     def compensable(b: String, cursor: Long, head: Long): Boolean =
       cursor == head ||
         (cursor < head && feedRefsE(s, b, cursor, head).isRight)
-    // match by the EFFECTIVE base (the same rule retentionPins and the
-    // rewrite's per-query re-resolution follow): a transplanted view
-    // must list under its parent, never under the branch key with
-    // parent-timeline cursor arithmetic. ONE effective-base probe per
-    // candidate, reused by both the match and the status body; a view
-    // whose probe THROWS still lists (broken) when its registry key or
-    // stored base names this base — the operator must SEE it.
-    val folds = registry.asScala.toSeq.flatMap { case (key, (mv, d0)) =>
-      if (!mayServe(d0.base, base) && key != base) None
-      else {
-        val eff =
-          try Some(effectiveDef(s, mv, d0,
-            TxnTable.currentVersion(s, mv)))
-          catch { case scala.util.control.NonFatal(_) => None }
-        eff match {
-          case Some((dEff, cursor)) if dEff.base == base =>
-            Some(guarded(mv, "fold") {
+    registry.asScala.toSeq.flatMap { case ((kind, key), (mv, d)) =>
+      val broken = MvStatus(mv, kind, fresh = false, servable = false,
+        -1L, -1L)
+      def guarded(p: => MvStatus): Option[MvStatus] =
+        Some(try p catch { case scala.util.control.NonFatal(_) => broken })
+      d match {
+        // match by the EFFECTIVE base (the same rule retentionPins and
+        // the rewrite's per-query re-resolution follow): a transplanted
+        // view must list under its parent, never under the branch key
+        // with parent-timeline cursor arithmetic. ONE effective-base
+        // probe per candidate, reused by both the match and the status
+        // body; a view whose probe THROWS still lists (broken) when its
+        // registry key or stored base names this base — the operator
+        // must SEE it.
+        case d0: MvDef if mayServe(d0.base, base) || key == base =>
+          val eff =
+            try Some(effectiveDef(s, mv, d0,
+              TxnTable.currentVersion(s, mv)))
+            catch { case scala.util.control.NonFatal(_) => None }
+          eff match {
+            case Some((dEff, cursor)) if dEff.base == base => guarded {
               val head = TxnTable.currentVersion(s, dEff.base)
-              MvStatus(mv, "fold", fresh = cursor == head,
+              MvStatus(mv, kind, fresh = cursor == head,
                 servable = compensable(dEff.base, cursor, head),
                 cursor, head)
-            })
-          case Some(_) => None // effective base is a different table
-          case None =>
-            Some(MvStatus(mv, "fold", fresh = false, servable = false,
-              -1L, -1L))
+            }
+            case Some(_) => None // effective base is a different table
+            case None => Some(broken)
+          }
+        case x: MvExtremaDef if x.base == base => guarded {
+          val cursor = headCursor(s, mv)
+          val head = TxnTable.currentVersion(s, base)
+          MvStatus(mv, kind, fresh = cursor == head,
+            servable = cursor == head ||
+              (cursor < head && invariantTail(s, base, cursor, head)),
+            cursor, head)
         }
+        case j: MvJoinDef if j.tables.contains(base) => guarded {
+          val mvVer = TxnTable.currentVersion(s, mv)
+          val cursor = cursorAt(s, mv, mvVer, "mv_base_version")
+          val head = TxnTable.currentVersion(s, j.fact)
+          val dimCursors = j.dims.indices.map(i =>
+            cursorAt(s, mv, mvVer, dimCursorMetric(i)))
+          val dimHeads = j.dims.map(r => TxnTable.currentVersion(s, r.dim))
+          // the OP-based range check, because that is what the join
+          // refresh and compensatedJoin actually accept: a change_noop
+          // dim commit that recorded an (empty) feed is servable there,
+          // and the listing must never report acceleration lost when
+          // the rewrite would serve
+          val dimsInvariant = j.dims.indices.forall(i =>
+            dimCursors(i) == dimHeads(i) ||
+              (dimCursors(i) < dimHeads(i) &&
+                contentInvariantRange(s, j.dims(i).dim, dimCursors(i),
+                  dimHeads(i))))
+          MvStatus(mv, kind, fresh = cursor == head &&
+              dimCursors == dimHeads,
+            servable = compensable(j.fact, cursor, head) && dimsInvariant,
+            cursor, head)
+        }
+        // a live view's dims can NEVER stale it (they join back at
+        // query time), so freshness and servability speak the fact log
+        // alone — a live view over a moved dim correctly lists fresh
+        case LiveDef(j, _) if j.tables.contains(base) => guarded {
+          val cursor = headCursor(s, mv)
+          val head = TxnTable.currentVersion(s, j.fact)
+          MvStatus(mv, kind, fresh = cursor == head,
+            servable = compensable(j.fact, cursor, head), cursor, head)
+        }
+        case _ => None
       }
-    }
-    val extremas = extremaRegistry.asScala.toSeq.collect {
-      case (b, (mv, _)) if b == base => guarded(mv, "extrema") {
-        val mvVer = TxnTable.currentVersion(s, mv)
-        val cursor = cursorAt(s, mv, mvVer, "mv_base_version")
-        val head = TxnTable.currentVersion(s, b)
-        MvStatus(mv, "extrema", fresh = cursor == head,
-          servable = cursor == head ||
-            (cursor < head && invariantTail(s, b, cursor, head)),
-          cursor, head)
-      }
-    }
-    val joins = joinRegistry.asScala.toSeq.collect {
-      case (_, (mv, d)) if d.fact == base ||
-          d.dims.exists(_.dim == base) => guarded(mv, "join") {
-        val mvVer = TxnTable.currentVersion(s, mv)
-        val cursor = cursorAt(s, mv, mvVer, "mv_base_version")
-        val head = TxnTable.currentVersion(s, d.fact)
-        val dimCursors = d.dims.indices.map(i =>
-          cursorAt(s, mv, mvVer, dimCursorMetric(i)))
-        val dimHeads = d.dims.map(r => TxnTable.currentVersion(s, r.dim))
-        val dimsFresh = d.dims.indices.forall(i =>
-          dimCursors(i) == dimHeads(i))
-        // the OP-based range check, because that is what refreshJoin
-        // and compensatedJoin actually accept: a change_noop dim
-        // commit that recorded an (empty) feed is servable there, and
-        // the listing must never report acceleration lost when the
-        // rewrite would serve
-        val dimsInvariant = d.dims.indices.forall(i =>
-          dimCursors(i) == dimHeads(i) ||
-            (dimCursors(i) < dimHeads(i) &&
-              contentInvariantRange(s, d.dims(i).dim, dimCursors(i),
-                dimHeads(i))))
-        MvStatus(mv, "join", fresh = cursor == head && dimsFresh,
-          servable = compensable(d.fact, cursor, head) && dimsInvariant,
-          cursor, head)
-      }
-    }
-    // a live view's dims can NEVER stale it (they join back at query
-    // time), so freshness and servability speak the fact log alone —
-    // a live view over a moved dim correctly lists fresh
-    val lives = liveRegistry.asScala.toSeq.collect {
-      case (_, (mv, d, _)) if d.fact == base ||
-          d.dims.exists(_.dim == base) => guarded(mv, "live") {
-        val mvVer = TxnTable.currentVersion(s, mv)
-        val cursor = cursorAt(s, mv, mvVer, "mv_base_version")
-        val head = TxnTable.currentVersion(s, d.fact)
-        MvStatus(mv, "live", fresh = cursor == head,
-          servable = compensable(d.fact, cursor, head), cursor, head)
-      }
-    }
-    (folds ++ extremas ++ joins ++ lives).sortBy(st => (st.kind, st.mv))
+    }.sortBy(st => (st.kind, st.mv))
   }
 
   private def freshDir(name: String): String =

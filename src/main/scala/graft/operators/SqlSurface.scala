@@ -945,11 +945,11 @@ object SqlSurface {
     val mvX = graft.Fs.freshScratch("graft_mv", "show_extrema")
     graft.operators.MatView.createExtrema(s, mvX, loc, Seq("st"),
       "price")
-    graft.operators.MatView.registerExtrema(s, mvX)
+    graft.operators.MatView.register(s, mvX)
     val mvJ = graft.Fs.freshScratch("graft_mv", "show_join")
     graft.operators.MatView.createJoin(s, mvJ, loc, dimLoc,
       "o_custkey", "c_custkey", Seq("seg"), "price")
-    graft.operators.MatView.registerJoin(s, mvJ)
+    graft.operators.MatView.register(s, mvJ)
     val q = """SELECT kind, fresh, servable, cursor, head
       FROM graft.q.mvs_orders.matviews ORDER BY kind"""
     def probe() = s.sql(q).collect().map(r => (r.getString(0),
@@ -978,8 +978,8 @@ object SqlSurface {
       ("extrema", false, false, 1L, 3L))
     // (4) refresh all three → fresh at the folded cursor
     graft.operators.MatView.refresh(s, mvFold)
-    graft.operators.MatView.refreshExtrema(s, mvX)
-    graft.operators.MatView.refreshJoin(s, mvJ)
+    graft.operators.MatView.refresh(s, mvX)
+    graft.operators.MatView.refresh(s, mvJ)
     val ok4 = all3(probe(), f = true, sv = true, 3L, 3L)
     // (5) a feed-less append: acceleration gone, the listing says so
     s.sql("""INSERT INTO graft.q.mvs_orders
@@ -1282,10 +1282,10 @@ object SqlSurface {
     * phases pinned by optimized-plan scan roots: (1) fresh → MV only,
     * == direct; (2) after a fact cdc batch (deletes + inserts),
     * unrefreshed → MV + fact `_cdc` + dim, no fact data file, == a
-    * direct recompute of the moved join; (3) refreshJoin folds the
+    * direct recompute of the moved join; (3) the join refresh folds the
     * feed (one commit) → MV alone, identical answer; (4) a dim segment
     * reassignment → the SAME query falls through to the base join and
-    * sees the 'MOVED' group, while refreshJoin refuses with the
+    * sees the 'MOVED' group, while the join refresh refuses with the
     * recompute remedy. Hashed output = the final query; oracle replays
     * the join. At 100 TB: the star-schema dashboard aggregate costs an
     * MV read plus the fact delta joined to the dim — the fact table,
@@ -1306,7 +1306,7 @@ object SqlSurface {
     val mv = graft.Fs.freshScratch("graft_mv", "sql_join")
     graft.operators.MatView.createJoin(s, mv, factLoc, dimLoc,
       "o_custkey", "c_custkey", Seq("seg"), "price")
-    graft.operators.MatView.registerJoin(s, mv)
+    graft.operators.MatView.register(s, mv)
     val q = """SELECT seg, COUNT(*) AS n, CAST(SUM(price) AS DOUBLE)
       AS total FROM graft.q.mvj_fact f JOIN graft.q.mvj_dim c
       ON f.o_custkey = c.c_custkey GROUP BY seg"""
@@ -1347,7 +1347,7 @@ object SqlSurface {
       !p2.exists(p => p.contains(factLoc) && !p.contains("_cdc")) &&
       rows() == direct()
     // phase 3: refresh folds the feed — MV serves alone again
-    val r = graft.operators.MatView.refreshJoin(s, mv)
+    val r = graft.operators.MatView.refresh(s, mv)
     val p3 = ps()
     val servedAgain = r.commitsFolded == 1 && p3.nonEmpty &&
       p3.forall(_.contains(mv)) && rows() == direct()
@@ -1363,7 +1363,7 @@ object SqlSurface {
     val fellThrough = !p4.exists(_.contains(mv)) &&
       fin.exists(_._1 == "MOVED") && fin == direct()
     val refused =
-      try { graft.operators.MatView.refreshJoin(s, mv); false }
+      try { graft.operators.MatView.refresh(s, mv); false }
       catch { case e: IllegalArgumentException =>
         e.getMessage.contains("recompute the MV") }
     val ok = servedFresh && compensatedServe && servedAgain &&
@@ -1387,7 +1387,7 @@ object SqlSurface {
     * roots: (1) fresh → MV only, == direct; (2) after a base compact,
     * unrefreshed → STILL the MV (invariant tail); (3) after a cdc
     * delete that fells group F's max → falls through to the base and
-    * answers correctly; (4) refreshExtrema (folds both commits, dirty
+    * answers correctly; (4) the extrema refresh (folds both commits, dirty
     * recompute runs) → MV again, the SECOND max answering; plus SUM
     * never serves (no total in the view) and the filtered + global
     * shapes serve. Hashed output = the final per-status extrema;
@@ -1404,7 +1404,7 @@ object SqlSurface {
         CAST(o_totalprice AS DECIMAL(12,2)) FROM orders""")
     val mv = graft.Fs.freshScratch("graft_mv", "sql_extrema")
     graft.operators.MatView.createExtrema(s, mv, loc, Seq("st"), "price")
-    graft.operators.MatView.registerExtrema(s, mv)
+    graft.operators.MatView.register(s, mv)
     val q = """SELECT st, COUNT(*) AS n, COUNT(price) AS nn,
       CAST(MIN(price) AS DOUBLE) AS vmin, CAST(MAX(price) AS DOUBLE)
       AS vmax FROM graft.q.mve_orders GROUP BY st"""
@@ -1449,7 +1449,7 @@ object SqlSurface {
     val fellThrough = readsBase(scanSrcsOf(s, q)) && rows() == direct()
     // phase 4: refresh (the dirty recompute re-derives F's extreme) —
     // served again, the second max answering
-    val r = graft.operators.MatView.refreshExtrema(s, mv)
+    val r = graft.operators.MatView.refresh(s, mv)
     val servedAgain = r.commitsFolded == 2 && mvOnly(scanSrcsOf(s, q)) &&
       rows() == direct()
     val ok = servedFresh && servedInvariant && fellThrough && servedAgain
@@ -1471,7 +1471,7 @@ object SqlSurface {
     * roots: (1) fresh → MV only for the exact grouping, the cross-dim
     * filtered rollup AND the global; (2) fact cdc batch, unrefreshed →
     * MV + fact `_cdc` + the dims (the lookup sides), NEVER a fact data
-    * file; (3) refreshJoin (one fold) → MV alone; (4) a feed-less dim₂
+    * file; (3) the join refresh (one fold) → MV alone; (4) a feed-less dim₂
     * brand reassignment → fall-through seeing 'MOVED' + loud refusal.
     * Hashed output = the final star aggregate; oracle replays it. At
     * 100 TB: the multi-dim dashboard — THE warehouse workload — costs
@@ -1493,7 +1493,7 @@ object SqlSurface {
     * still MV alone; (3) delete every row holding F's max → the SAME
     * query falls through to the base (the fell extreme is only
     * re-derivable by recompute) while SUM under ROLLUP never serves at
-    * all; (4) refreshExtrema (dirty-group recompute) → served again,
+    * all; (4) the extrema refresh (dirty-group recompute) → served again,
     * the SECOND max answering at every level. Hashed output = the
     * post-refresh rollup; the oracle replays the delete and the three
     * levels as an explicit union. At 100 TB: the extrema subtotal pane
@@ -1510,7 +1510,7 @@ object SqlSurface {
     val mv = graft.Fs.freshScratch("graft_mv", "sql_xgsets")
     graft.operators.MatView.createExtrema(s, mv, loc, Seq("st", "pri"),
       "price")
-    graft.operators.MatView.registerExtrema(s, mv)
+    graft.operators.MatView.register(s, mv)
     val q = """SELECT st, pri, COUNT(*) AS n, COUNT(price) AS nn,
       CAST(MIN(price) AS DOUBLE) AS vmin,
       CAST(MAX(price) AS DOUBLE) AS vmax, grouping_id() AS gid
@@ -1552,9 +1552,9 @@ object SqlSurface {
     val fellThrough = pStale.exists(p => p.contains(loc) ||
       p.startsWith("v2:")) && !pStale.exists(_.contains(mv)) &&
       got(q) == direct(q)
-    // (4) refreshExtrema recomputes the dirty group; the second max
+    // (4) the extrema refresh recomputes the dirty group; the second max
     // answers at every level, from the view alone
-    graft.operators.MatView.refreshExtrema(s, mv)
+    graft.operators.MatView.refresh(s, mv)
     val servedAgain = mvOnly(scanSrcsOf(s, q)) && got(q) == direct(q)
     val ok = servedFresh && servedInvariant && fellThrough &&
       sumNever && servedAgain
@@ -1604,7 +1604,7 @@ object SqlSurface {
       graft.operators.MatView.MvDimRef(partLoc, "l_partkey",
         "p_partkey")),
       Seq("st", "brand"), "price")
-    graft.operators.MatView.registerJoin(s, mv)
+    graft.operators.MatView.register(s, mv)
     val joinSql = """FROM graft.q.gsets_li f
       JOIN graft.q.gsets_ord o ON f.l_orderkey = o.o_orderkey
       JOIN graft.q.gsets_part p ON f.l_partkey = p.p_partkey"""
@@ -1685,7 +1685,7 @@ object SqlSurface {
       graft.operators.MatView.MvDimRef(ordLoc, "l_orderkey", "o_orderkey"),
       graft.operators.MatView.MvDimRef(partLoc, "l_partkey", "p_partkey")),
       Seq("st", "brand"), "price")
-    graft.operators.MatView.registerJoin(s, mv)
+    graft.operators.MatView.register(s, mv)
     val q = """SELECT st, brand, COUNT(*) AS n,
       CAST(SUM(price) AS DOUBLE) AS total
       FROM graft.q.star_li f
@@ -1739,7 +1739,7 @@ object SqlSurface {
       p2.exists(_.contains(s"$factLoc/_cdc")) &&
       !p2.exists(p => p.contains(factLoc) && !p.contains("_cdc")) &&
       rows() == direct()
-    val r = graft.operators.MatView.refreshJoin(s, mv)
+    val r = graft.operators.MatView.refresh(s, mv)
     val servedAgain = r.commitsFolded == 1 &&
       mvOnly(scanSrcsOf(s, q)) && rows() == direct()
     // dim₂ moves WITHOUT a feed: fall through + refuse (the cdc=true
@@ -1752,7 +1752,7 @@ object SqlSurface {
     val fellThrough = !p4.exists(_.contains(mv)) &&
       fin.exists(_._2 == "MOVED") && fin == direct()
     val refused =
-      try { graft.operators.MatView.refreshJoin(s, mv); false }
+      try { graft.operators.MatView.refresh(s, mv); false }
       catch { case e: IllegalArgumentException =>
         e.getMessage.contains("recompute the MV") }
     val ok = servedFresh && compensatedServe && servedAgain &&
@@ -1770,7 +1770,7 @@ object SqlSurface {
     * scan. Phases: (1) fresh → MV-only plan roots; (2) an SCD-1 brand
     * move (3 scattered part keys, cdc) PLUS a fact cdc batch, both
     * unrefreshed → serving falls through / compensates correctly; (3)
-    * ONE refreshJoin folds BOTH terms — `mv_scd_files_kept <
+    * ONE join refresh folds BOTH terms — `mv_scd_files_kept <
     * mv_scd_files_total` on the refresh commit is the zero-full-scan
     * evidence (the fact is clustered on l_partkey, so 3 point probes
     * open ≤3 of its 8 files) — and the query serves from the MV alone
@@ -1807,7 +1807,7 @@ object SqlSurface {
       graft.operators.MatView.MvDimRef(ordLoc, "l_orderkey", "o_orderkey"),
       graft.operators.MatView.MvDimRef(partLoc, "l_partkey", "p_partkey")),
       Seq("st", "brand"), "price")
-    graft.operators.MatView.registerJoin(s, mv)
+    graft.operators.MatView.register(s, mv)
     val q = """SELECT st, brand, COUNT(*) AS n,
       CAST(SUM(price) AS DOUBLE) AS total
       FROM graft.q.scd_li f
@@ -1855,7 +1855,7 @@ object SqlSurface {
     val p2 = scanSrcsOf(s, q)
     val fellThrough = !p2.exists(_.contains(mv)) &&
       rows() == direct() && rows().exists(_._2 == "SCD1")
-    val r = graft.operators.MatView.refreshJoin(s, mv)
+    val r = graft.operators.MatView.refresh(s, mv)
     val m = graft.operators.TxnTable.commitMetrics(s, mv, r.mvVersion)
     val kept = m.getOrElse("mv_scd_files_kept", -1L)
     val total = m.getOrElse("mv_scd_files_total", -1L)
@@ -1879,10 +1879,10 @@ object SqlSurface {
     * (1) fresh → sub-view + dim files only, == direct; (2) an SCD-1
     * brand move committed WITHOUT a feed (the case that bricks every
     * other star kind) → STILL served, the 'LIVE1' groups surface, the
-    * plan reads no fact data file, and refreshLive no-ops (the fact
+    * plan reads no fact data file, and the live refresh no-ops (the fact
     * log never moved — dim state is simply not the view's problem);
     * (3) a fact cdc batch, unrefreshed → sub-view ⊕ fact `_cdc` ⋈
-    * dims, still no fact data file; (4) refreshLive folds exactly the
+    * dims, still no fact data file; (4) the live refresh folds exactly the
     * fact tail (no dim opened) → sub-view + dims again; a dim-key cut
     * (`WHERE st = 'F' GROUP BY brand`) serves on the same plane.
     * Hashed output = the final star aggregate; the oracle replays the
@@ -1915,7 +1915,7 @@ object SqlSurface {
       graft.operators.MatView.MvDimRef(partLoc, "l_partkey",
         "p_partkey")),
       Seq("st", "brand"), "price")
-    graft.operators.MatView.registerLive(s, mv)
+    graft.operators.MatView.register(s, mv)
     val q = """SELECT st, brand, COUNT(*) AS n,
       CAST(SUM(price) AS DOUBLE) AS total
       FROM graft.q.live_li f
@@ -1959,7 +1959,7 @@ object SqlSurface {
       s.sql("""SELECT p_partkey, 'LIVE1' AS brand, 'U' AS op
         FROM part WHERE p_partkey % 7 = 0"""), "p_partkey", cdc = false)
     val p2 = scanSrcsOf(s, q)
-    val r0 = graft.operators.MatView.refreshLive(s, mv)
+    val r0 = graft.operators.MatView.refresh(s, mv)
     val servedDimMove = servedLive(p2) && rows() == direct() &&
       rows().exists(_._2 == "LIVE1") && r0.commitsFolded == 0
     // a fact cdc batch on top, unrefreshed → feed compensation joins
@@ -1977,7 +1977,7 @@ object SqlSurface {
     val p3 = scanSrcsOf(s, q)
     val compensated = servedLive(p3) &&
       p3.exists(_.contains(s"$factLoc/_cdc")) && rows() == direct()
-    val r = graft.operators.MatView.refreshLive(s, mv)
+    val r = graft.operators.MatView.refresh(s, mv)
     val p4 = scanSrcsOf(s, q)
     val servedAgain = r.commitsFolded == 1 && servedLive(p4) &&
       !p4.exists(_.contains("_cdc")) && rows() == direct()
@@ -2133,7 +2133,7 @@ object SqlSurface {
     * with zero fact data files in every served plan. Phases: (1)
     * fresh — sliced query serves sub-view + dims only, a different
     * threshold and the unsliced query fall through; (2) a FEED-LESS
-    * dim move → still served, exact, refreshLive no-ops; (3) a
+    * dim move → still served, exact, the live refresh no-ops; (3) a
     * boundary-crossing fact cdc batch (reprices in/out, deletes,
     * below- and in-slice inserts), unrefreshed → sub-view ⊕ filtered
     * feed ⋈ moved dims; (4) pure-SQL REFRESH folds the filtered fact
@@ -2196,7 +2196,7 @@ object SqlSurface {
       s.sql("""SELECT o_orderkey, 'Z' AS st, 'U' AS op
         FROM orders WHERE o_orderkey % 7 = 0"""),
       "o_orderkey", cdc = false)
-    val r0 = graft.operators.MatView.refreshLive(s, mv)
+    val r0 = graft.operators.MatView.refresh(s, mv)
     val servedDimMove = servedLive(scanSrcsOf(s, q)) &&
       rows() == direct() && rows().exists(_._1 == "Z") &&
       r0.commitsFolded == 0
@@ -2249,7 +2249,7 @@ object SqlSurface {
     * (`WHERE flag = 'R' GROUP BY st`), while grouping by the join key
     * itself falls through (not an MV key); (2) a lineitem cdc batch
     * PLUS an orders-side status reassignment (3 lowest keys, cdc),
-    * both unrefreshed → fall-through correct; (3) ONE refreshJoin
+    * both unrefreshed → fall-through correct; (3) ONE join refresh
     * folds BOTH terms (`mv_scd_files_kept < total` — the orders delta
     * opened ≤3 of the fact's 8 files) → MV-only again. Hashed output =
     * the final aggregate; the oracle replays both sides. At 100 TB:
@@ -2277,7 +2277,7 @@ object SqlSurface {
       graft.operators.MatView.MvDimRef(ordLoc, "l_orderkey",
         "o_orderkey")),
       Seq("flag", "st"), "price")
-    graft.operators.MatView.registerJoin(s, mv)
+    graft.operators.MatView.register(s, mv)
     val q = """SELECT flag, st, COUNT(*) AS n,
       CAST(SUM(price) AS DOUBLE) AS total
       FROM graft.q.f2_li f JOIN graft.q.f2_ord o
@@ -2323,7 +2323,7 @@ object SqlSurface {
     val p2 = scanSrcsOf(s, q)
     val fellThrough = !p2.exists(_.contains(mv)) &&
       rows() == direct() && rows().exists(_._2 == "Z9")
-    val r = graft.operators.MatView.refreshJoin(s, mv)
+    val r = graft.operators.MatView.refresh(s, mv)
     val m = graft.operators.TxnTable.commitMetrics(s, mv, r.mvVersion)
     val kept = m.getOrElse("mv_scd_files_kept", -1L)
     val total = m.getOrElse("mv_scd_files_total", -1L)

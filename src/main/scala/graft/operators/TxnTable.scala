@@ -4381,13 +4381,6 @@ object TxnTable {
     }.reduce(_ unionByName _)
       .groupBy(col(kc)).agg(max(col("__tl")).as("__tl"))
 
-  /** The schema version `v` was committed with, if the commit recorded
-    * one (`#schema=` manifest line — schema-in-the-log, the way every
-    * public table format evolves: the file footers never decide). */
-  def committedSchema(s: SparkSession, table: String, v: Long)
-      : Option[org.apache.spark.sql.types.StructType] =
-    manifest(s, table, v).schema
-
   /** Resolve a manifest path: table-relative normally; a SHALLOW CLONE's
     * entries reference the source table's files by absolute path (zero
     * data copied), which pass through untouched. */
@@ -4972,12 +4965,13 @@ object TxnTable {
   /** Scan a set of manifest entries with merge-on-read tombstones
     * applied PER SEQUENCE: a tombstone deletes only from entries whose
     * data seq is older than its commit seq (rows written after the
-    * delete are newer and stay). Entries are grouped by their applicable
-    * tombstone set — in practice a handful of groups (one per distinct
-    * entry seq between tombstone commits), each scanned once and
-    * anti-joined against its tombstones, then unioned. Tombstone sets
-    * are small (one file of keys per delete): AQE broadcasts the build
-    * side, so each group pays a map-only filter, not a shuffle. */
+    * delete are newer and stay). Entries are grouped only by which
+    * initial column defaults apply to them — one group unless columns
+    * were added with defaults — and each group is scanned ONCE, then
+    * anti-joined once per tombstone key column, each join guarded on
+    * the row's entry seq; the groups union. Tombstone sets are small
+    * (one file of keys per delete): AQE broadcasts the build side, so
+    * each anti-join is a map-only filter, not a shuffle. */
   private def readEntries(s: SparkSession, table: String, m: Manifest,
                           entries: Seq[Entry]): DataFrame =
     readEntriesPos(s, table, m, entries, keepPos = false)
@@ -5199,11 +5193,6 @@ object TxnTable {
           else filled.drop("__gseq", "__gcanon", "__gpos")
       }
     }.reduce(_ unionByName _)
-  }
-
-  private def schemaReader(s: SparkSession, m: Manifest) = m.schema match {
-    case Some(sch) => s.read.schema(physicalSchema(sch))
-    case None      => s.read
   }
 
   /** Shared tail of every stat-pruned read (box / IS NULL / string

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** SQL `MERGE INTO` / `UPDATE` over [[GraftCatalog]] tables — the DML
   * statements DataSourceV2 only offers through the heavyweight
@@ -195,10 +196,9 @@ case class GraftMorReadRule(session: SparkSession) extends Rule[LogicalPlan] {
 /** Shared compile helpers for the eager DML commands. */
 private[sources] object GraftDml {
   def df(session: SparkSession, plan: LogicalPlan): DataFrame =
-    org.apache.spark.sql.GraftSqlBridge.ofRows(session, plan)
+    Bridge.ofRows(session, plan)
 
-  def exprCol(e: Expression): Column =
-    org.apache.spark.sql.GraftSqlBridge.column(e)
+  def exprCol(e: Expression): Column = Bridge.column(e)
 
   def unsupported(what: String): Nothing =
     throw new UnsupportedOperationException(
@@ -355,7 +355,7 @@ case class GraftMergeCommand(location: String, merge: MergeIntoTable)
     // DSv2 relation's attribute ids, which the join output doesn't)
     def rebind(e: Expression): Column = exprCol(e.transform {
       case a: AttributeReference if tgtOut.contains(a) =>
-        org.apache.spark.sql.GraftSqlBridge.expression(col(s"__t_${a.name}"))
+        Bridge.expression(col(s"__t_${a.name}"))
     })
     // first matching action in declaration order decides the op;
     // a matched row matching no action, or an unmatched row failing the
@@ -418,7 +418,7 @@ case class GraftMergeCommand(location: String, merge: MergeIntoTable)
           "left_anti")
         def rebindT(e: Expression): Column = exprCol(e.transform {
           case a: AttributeReference if tgtOut.contains(a) =>
-            org.apache.spark.sql.GraftSqlBridge.expression(snap.col(a.name))
+            Bridge.expression(snap.col(a.name))
         })
         // lower-case op markers tag NMBS rows through the union so the
         // persisted change set can be audited for NULL-key absentees
@@ -550,7 +550,7 @@ case class GraftUpdateCommand(location: String, update: UpdateTable)
     // attribute ids, which a fresh snapshot read does not carry
     def rebind(e: Expression): Column = exprCol(e.transform {
       case a: AttributeReference =>
-        org.apache.spark.sql.GraftSqlBridge.expression(snap.col(a.name))
+        Bridge.expression(snap.col(a.name))
     })
     val cond = update.condition.map(rebind).getOrElse(lit(true))
     val cols = update.table.output.map(_.name)

@@ -191,11 +191,8 @@ private[sources] object GraftMaintenance {
       "zorder", "tag", "drop_tag", "clone", "publish", "branch",
       "fastforward", "rebase", "drop_branch", "rewrite_tombstones",
       "dedup", "delete_dv", "delete_in", "build_bloom", "vacuum_preview",
-      "create_matview", "refresh_matview",
-      "create_matview_extrema", "refresh_matview_extrema",
-      "create_matview_join", "refresh_matview_join",
-      "create_matview_live", "refresh_matview_live",
-      "transplant_matview")
+      "create_matview", "refresh_matview", "create_matview_extrema",
+      "create_matview_join", "create_matview_live", "transplant_matview")
 
   def load(catalog: GraftCatalog, warehouse: String, name: String)
       : UnboundProcedure = {
@@ -281,6 +278,7 @@ private[sources] object GraftMaintenance {
       case "refresh_matview" => p("refresh_matview", Seq(
         ProcedureParameter.in("view", StringType).build())) { (s, in) =>
         val mvLoc = resolveTable(warehouse, in.getUTF8String(0).toString)
+        // any view kind: the stored definition picks the refresh
         val r = graft.operators.MatView.refresh(s, mvLoc)
         // (re-)register for the transparent rewrite: the registry is
         // session state, and refresh is the natural re-entry point a
@@ -291,7 +289,7 @@ private[sources] object GraftMaintenance {
       }
       // the MIN/MAX view kind (MatView.createExtrema): the aggregates
       // the fold MV refuses, maintained by monotone merge + dirty-group
-      // recompute; registered for the extrema rewrite on create/refresh
+      // recompute; registered for the extrema rewrite on create
       case "create_matview_extrema" => p("create_matview_extrema", Seq(
         ProcedureParameter.in("view", StringType).build(),
         ProcedureParameter.in("base", StringType).build(),
@@ -311,64 +309,18 @@ private[sources] object GraftMaintenance {
           in.getUTF8String(2).toString.split(',').toSeq.map(_.trim),
           in.getUTF8String(3).toString,
           Some(in.getUTF8String(4).toString).filter(_.nonEmpty))
-        graft.operators.MatView.registerExtrema(s, mvLoc)
+        graft.operators.MatView.register(s, mvLoc)
         v
       }
-      case "refresh_matview_extrema" => p("refresh_matview_extrema", Seq(
-        ProcedureParameter.in("view", StringType).build())) { (s, in) =>
-        val mvLoc = resolveTable(warehouse, in.getUTF8String(0).toString)
-        val r = graft.operators.MatView.refreshExtrema(s, mvLoc)
-        graft.operators.MatView.registerExtrema(s, mvLoc)
-        r.mvVersion
-      }
-      // the STAR view kind (MatView.createJoinStar): fact ⋈ dims
-      // aggregates with the per-log cursor contract (fact feeds fold,
-      // any dim content change refuses). Multi-dim via parallel CSV
-      // lists: CALL create_matview_join('v', 'f', 'd1,d2',
-      // 'fk1,fk2', 'dk1,dk2', 'key1,key2', 'val')
-      case "create_matview_join" => p("create_matview_join", Seq(
-        ProcedureParameter.in("view", StringType).build(),
-        ProcedureParameter.in("fact", StringType).build(),
-        ProcedureParameter.in("dim", StringType).build(),
-        ProcedureParameter.in("fact_key", StringType).build(),
-        ProcedureParameter.in("dim_key", StringType).build(),
-        ProcedureParameter.in("key", StringType).build(),
-        ProcedureParameter.in("value", StringType).build())) { (s, in) =>
-        val mvLoc = resolveTable(warehouse, in.getUTF8String(0).toString)
-        require(TxnTable.versions(s, mvLoc).isEmpty,
-          s"graft procedure: '$mvLoc' already exists")
-        val factLoc = resolveTable(warehouse, in.getUTF8String(1).toString)
-        def csv(i: Int): Seq[String] = in.getUTF8String(i).toString
-          .split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-        val (dimRefs, fks, dks) = (csv(2), csv(3), csv(4))
-        require(dimRefs.size == fks.size && dimRefs.size == dks.size,
-          "graft procedure: dim, fact_key and dim_key lists must have " +
-            "the same length")
-        val dims = dimRefs.lazyZip(fks).lazyZip(dks).map {
-          (dr, fk, dk) =>
-            val dl = resolveTable(warehouse, dr)
-            require(TxnTable.versions(s, dl).nonEmpty,
-              s"graft procedure: dim '$dl' is not a committed table")
-            graft.operators.MatView.MvDimRef(dl, fk, dk)
-        }
-        require(TxnTable.versions(s, factLoc).nonEmpty,
-          s"graft procedure: fact '$factLoc' is not a committed table")
-        val v = graft.operators.MatView.createJoinStar(s, mvLoc, factLoc,
-          dims, csv(5), in.getUTF8String(6).toString)
-        graft.operators.MatView.registerJoin(s, mvLoc)
-        v
-      }
-      case "refresh_matview_join" => p("refresh_matview_join", Seq(
-        ProcedureParameter.in("view", StringType).build())) { (s, in) =>
-        val mvLoc = resolveTable(warehouse, in.getUTF8String(0).toString)
-        val r = graft.operators.MatView.refreshJoin(s, mvLoc)
-        graft.operators.MatView.registerJoin(s, mvLoc)
-        r.mvVersion
-      }
-      // the LIVE star kind (MatView.createStarLive): the fold at the
+      // the two STAR view kinds share one argument list — multi-dim via
+      // parallel CSV lists: CALL create_matview_join('v', 'f', 'd1,d2',
+      // 'fk1,fk2', 'dk1,dk2', 'key1,key2', 'val'). _join
+      // (MatView.createJoinStar): fact ⋈ dims aggregates with the
+      // per-log cursor contract (fact feeds fold, feed-less dim content
+      // changes refuse). _live (MatView.createStarLive): the fold at the
       // fact-key grain with the dims joined back at query time — dim
       // movement never stales it, refresh folds fact feeds alone
-      case "create_matview_live" => p("create_matview_live", Seq(
+      case "create_matview_join" | "create_matview_live" => p(name, Seq(
         ProcedureParameter.in("view", StringType).build(),
         ProcedureParameter.in("fact", StringType).build(),
         ProcedureParameter.in("dim", StringType).build(),
@@ -395,17 +347,15 @@ private[sources] object GraftMaintenance {
         }
         require(TxnTable.versions(s, factLoc).nonEmpty,
           s"graft procedure: fact '$factLoc' is not a committed table")
-        val v = graft.operators.MatView.createStarLive(s, mvLoc,
-          factLoc, dims, csv(5), in.getUTF8String(6).toString)
-        graft.operators.MatView.registerLive(s, mvLoc)
+        val value = in.getUTF8String(6).toString
+        val v =
+          if (name == "create_matview_join")
+            graft.operators.MatView.createJoinStar(s, mvLoc, factLoc,
+              dims, csv(5), value)
+          else graft.operators.MatView.createStarLive(s, mvLoc, factLoc,
+            dims, csv(5), value)
+        graft.operators.MatView.register(s, mvLoc)
         v
-      }
-      case "refresh_matview_live" => p("refresh_matview_live", Seq(
-        ProcedureParameter.in("view", StringType).build())) { (s, in) =>
-        val mvLoc = resolveTable(warehouse, in.getUTF8String(0).toString)
-        val r = graft.operators.MatView.refreshLive(s, mvLoc)
-        graft.operators.MatView.registerLive(s, mvLoc)
-        r.mvVersion
       }
       // re-point a branch MV onto the parent timeline after a publish
       // (MatView.transplant) and re-register it for the rewrite

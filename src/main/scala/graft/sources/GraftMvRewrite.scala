@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** TRANSPARENT MATERIALIZED-VIEW REWRITING — the optimizer half of
   * [[MatView]]: a plain SQL aggregate over the BASE table is served
@@ -164,7 +165,7 @@ case class GraftMvRewriteRule(session: SparkSession)
     case Some(sql) =>
       val stored = try {
         val parsed = session.sessionState.sqlParser.parseExpression(sql)
-        org.apache.spark.sql.GraftSqlBridge.ofRows(session,
+        Bridge.ofRows(session,
           Filter(parsed, r)).queryExecution.analyzed.collectFirst {
             case f: Filter => conjunctsOf(f.condition)
           }.getOrElse {
@@ -404,7 +405,7 @@ case class GraftMvRewriteRule(session: SparkSession)
       val remapped = preds.map(_.transform {
         case a: AttributeReference => byName(a.name)
       }).reduce(org.apache.spark.sql.catalyst.expressions.And(_, _))
-      df.filter(org.apache.spark.sql.GraftSqlBridge.column(remapped))
+      df.filter(Bridge.column(remapped))
     }
 
   /** Flatten a tree of INNER joins over catalog relations into
@@ -1348,7 +1349,7 @@ case class GraftMvRewriteRule(session: SparkSession)
         org.apache.spark.sql.DataFrame,
       arm: (AggregateExpression, Map[String, Attribute]) => Expression,
       mvDf0: org.apache.spark.sql.DataFrame): Option[LogicalPlan] = {
-    import org.apache.spark.sql.GraftSqlBridge.column
+    import Bridge.column
     // the gid column rides the frames under its OWN name — an MV key
     // or fold column sharing it would misbind in the union. Guard
     // against the WHOLE MV frame (withColumn below replaces any

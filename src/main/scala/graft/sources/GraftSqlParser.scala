@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{LongType, StructType}
 /** DECLARATIVE MATERIALIZED-VIEW DDL — the SQL front half of
   * [[MatView]], completing the CALL surface (GraftMaintenance's
   * create_matview / create_matview_extrema / create_matview_join /
-  * refresh_matview*) with the statement a warehouse user actually
-  * writes:
+  * create_matview_live / refresh_matview) with the statement a
+  * warehouse user actually writes:
   *
   *   CREATE MATERIALIZED VIEW ns.mv AS
   *     SELECT st, COUNT(*), SUM(price) FROM ns.orders GROUP BY st
@@ -41,8 +41,8 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *     the aggregated value column, every other relation a dim, the
   *     equality conjuncts become the fact→dim references)
   *
-  * REFRESH dispatches on the view's own definition kind
-  * ([[MatView.kindOf]]) and (re-)registers for the transparent
+  * REFRESH reads the view's own stored definition
+  * ([[MatView.refresh]]) and (re-)registers for the transparent
   * rewrite — the registry is session state, and refresh is the
   * natural re-entry a new session hits first. Both commands return
   * the committed version. */
@@ -387,7 +387,7 @@ object GraftSqlParser {
           val v = MatView.createStarLive(s, mvLoc, factLoc, dims,
             shape.keys, value,
             shape.aggs.map(_._1).distinct, shape.pred)
-          MatView.registerLive(s, mvLoc)
+          MatView.register(s, mvLoc)
           Seq(Row(v))
         case _ => fail("CREATE LIVE MATERIALIZED VIEW: a live view " +
           "joins dims back at query time — the defining query must " +
@@ -413,10 +413,8 @@ object GraftSqlParser {
       val v = strip(shape.from) match {
         case _: UnresolvedRelation if fnNames.subsetOf(FoldFns) =>
           val base = locOf(relName(shape.from))
-          val created = MatView.create(s, mvLoc, base, shape.keys, value,
+          MatView.create(s, mvLoc, base, shape.keys, value,
             shape.aggs.map(_._1).distinct, shape.pred)
-          MatView.register(s, mvLoc)
-          created
         case _: UnresolvedRelation if fnNames.subsetOf(ExtremaFns) =>
           // a WHERE makes the extrema view PARTIAL: createExtrema
           // validates the predicate row-local (deterministic,
@@ -424,10 +422,8 @@ object GraftSqlParser {
           // recompute re-derives felled extremes from the predicate's
           // slice — same membership algebra as the partial fold view
           val base = locOf(relName(shape.from))
-          val created = MatView.createExtrema(s, mvLoc, base, shape.keys,
-            value, shape.pred)
-          MatView.registerExtrema(s, mvLoc)
-          created
+          MatView.createExtrema(s, mvLoc, base, shape.keys, value,
+            shape.pred)
         case _: UnresolvedRelation => fail("CREATE MATERIALIZED VIEW: " +
           s"no view kind maintains {${fnNames.mkString(", ")}} " +
           "honestly — count/sum/avg fold incrementally, count/min/max " +
@@ -442,14 +438,12 @@ object GraftSqlParser {
           // dim-column reference with the named reason
           val (factLoc, dims) = bindStar(s, j, value,
             "CREATE MATERIALIZED VIEW", shape.predRefs)
-          val created = MatView.createJoinStar(s, mvLoc, factLoc, dims,
-            shape.keys, value, shape.aggs.map(_._1).distinct,
-            shape.pred)
-          MatView.registerJoin(s, mvLoc)
-          created
+          MatView.createJoinStar(s, mvLoc, factLoc, dims, shape.keys,
+            value, shape.aggs.map(_._1).distinct, shape.pred)
         case other => fail("CREATE MATERIALIZED VIEW: unsupported " +
           s"FROM shape (${other.getClass.getSimpleName})")
       }
+      MatView.register(s, mvLoc)
       Seq(Row(v))
     }
   }
@@ -468,7 +462,7 @@ object GraftSqlParser {
   }
 
   /** SHOW MATERIALIZED VIEWS: every view REGISTERED with the
-    * transparent rewrite in this session (all three kinds). View and
+    * transparent rewrite in this session (all four kinds). View and
     * base render as CATALOG IDENTIFIERS when they live under the
     * warehouse — the spelling DROP/REFRESH accept — and as raw
     * locations otherwise (API-created views at scratch paths).
@@ -492,13 +486,8 @@ object GraftSqlParser {
           s"$CatName." + loc.stripPrefix(s"$wh/").replace('/', '.')
         else loc
       MatView.registered().map { case (mv, kind, base) =>
-        val defined = scala.util.Try(kind match {
-          case "fold" => MatView.readDef(s, mv)
-          case "join" => MatView.readJoinDef(s, mv)
-          case "live" => MatView.readLiveDef(s, mv)
-          case _ => MatView.readExtremaDef(s, mv)
-        }).isSuccess
-        Row(render(mv), kind, render(base), defined)
+        Row(render(mv), kind, render(base),
+          scala.util.Try(MatView.definition(s, mv)).isSuccess)
       }
     }
   }
@@ -521,21 +510,9 @@ object GraftSqlParser {
 
     override def run(s: SparkSession): Seq[Row] = {
       val mvLoc = locOf(ident)
-      val v = MatView.kindOf(s, mvLoc) match {
-        case "fold" =>
-          val r = MatView.refresh(s, mvLoc)
-          MatView.register(s, mvLoc); r.mvVersion
-        case "join" =>
-          val r = MatView.refreshJoin(s, mvLoc)
-          MatView.registerJoin(s, mvLoc); r.mvVersion
-        case "extrema" =>
-          val r = MatView.refreshExtrema(s, mvLoc)
-          MatView.registerExtrema(s, mvLoc); r.mvVersion
-        case "live" =>
-          val r = MatView.refreshLive(s, mvLoc)
-          MatView.registerLive(s, mvLoc); r.mvVersion
-      }
-      Seq(Row(v))
+      val r = MatView.refresh(s, mvLoc)
+      MatView.register(s, mvLoc)
+      Seq(Row(r.mvVersion))
     }
   }
 }

@@ -17,6 +17,10 @@ class MatViewSpec extends SparkSpec {
     dir
   }
 
+  /** The view's stored definition, as the kind the test created. */
+  private def defOf[D <: MatView.ViewDef](mv: String): D =
+    MatView.definition(spark, mv).asInstanceOf[D]
+
   /** "Served from the MV" = the OPTIMIZED plan holds no catalog (v2)
     * relation and every parquet root lives under the MV path — the one
     * plan-inspection contract every rewrite test checks. */
@@ -315,6 +319,67 @@ class MatViewSpec extends SparkSpec {
     val after = s.sql("SELECT g, n FROM graft.mvspec.pview").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(after === Map("E" -> 100L, "O" -> 100L, "N" -> 10L))
+  }
+
+  test("every view kind refreshes through CALL refresh_matview and " +
+      "REFRESH MATERIALIZED VIEW, lists its kind, and drops") {
+    val s = spark
+    import graft.sources.GraftCatalog
+    GraftCatalog.register(s)
+    s.sql("CREATE NAMESPACE IF NOT EXISTS graft.mvkinds")
+    Seq("f", "d").foreach(t =>
+      s.sql(s"DROP TABLE IF EXISTS graft.mvkinds.$t"))
+    s.sql("CREATE TABLE graft.mvkinds.f (k BIGINT, fk BIGINT, " +
+      "g STRING, v DECIMAL(12,2))")
+    s.sql("INSERT INTO graft.mvkinds.f SELECT id, id % 10, " +
+      "CASE WHEN id % 2 = 0 THEN 'E' ELSE 'O' END, " +
+      "CAST(id AS DECIMAL(12,2)) FROM RANGE(100)")
+    s.sql("CREATE TABLE graft.mvkinds.d (pk BIGINT, seg STRING)")
+    s.sql("INSERT INTO graft.mvkinds.d SELECT id, " +
+      "CASE WHEN id < 5 THEN 'X' ELSE 'Y' END FROM RANGE(10)")
+    val w = GraftCatalog.defaultWarehouse
+    val fact = s"$w/mvkinds/f"
+    val star = "FROM graft.mvkinds.f f JOIN graft.mvkinds.d d " +
+      "ON f.fk = d.pk GROUP BY seg"
+    // (kind, CREATE statement, defining query)
+    val kinds = Seq(
+      ("fold", "CREATE MATERIALIZED VIEW",
+        "SELECT g, COUNT(*) AS n, SUM(v) AS t FROM graft.mvkinds.f " +
+          "GROUP BY g"),
+      ("extrema", "CREATE MATERIALIZED VIEW",
+        "SELECT g, MIN(v) AS lo, MAX(v) AS hi FROM graft.mvkinds.f " +
+          "GROUP BY g"),
+      ("join", "CREATE MATERIALIZED VIEW",
+        s"SELECT seg, COUNT(*) AS n, SUM(v) AS t $star"),
+      ("live", "CREATE LIVE MATERIALIZED VIEW",
+        s"SELECT seg, COUNT(*) AS n, SUM(v) AS t $star"))
+    var nextKey = 1000L
+    kinds.foreach { case (kind, create, select) =>
+      val ident = s"graft.mvkinds.v_$kind"
+      val loc = s"$w/mvkinds/v_$kind"
+      Fs.deleteRecursively(loc)
+      s.sql(s"$create $ident AS $select")
+      Seq(s"CALL graft.system.refresh_matview('mvkinds.v_$kind')",
+          s"REFRESH MATERIALIZED VIEW $ident").foreach { refreshSql =>
+        // move the fact with a feed-publishing insert, then refresh
+        TxnTable.applyChangesMor(spark, fact, s.range(nextKey,
+          nextKey + 5).selectExpr("id AS k", "id % 10 AS fk", "'N' AS g",
+          "CAST(id AS DECIMAL(12,2)) AS v", "'U' AS op"), "k", cdc = true)
+        nextKey += 5
+        s.sql(refreshSql)
+        assert(MatView.lastRefreshed(spark, loc) ===
+          TxnTable.currentVersion(spark, fact),
+          s"$kind view: `$refreshSql` must move the cursor to the head")
+        val shown = s.sql("SHOW MATERIALIZED VIEWS").collect()
+          .map(r => (r.getString(0), r.getString(1))).toSet
+        assert(shown.contains((ident, kind)),
+          s"SHOW must list $ident as $kind, got $shown")
+      }
+      assert(s.sql(s"DROP MATERIALIZED VIEW $ident").collect()(0)
+        .getString(0) === kind)
+      assert(!MatView.registered().exists(_._1 == loc),
+        s"DROP must deregister the $kind view")
+    }
   }
 
   test("rewrite reconstructs null-skipping SUM (all-NULL group answers " +
@@ -1132,7 +1197,7 @@ class MatViewSpec extends SparkSpec {
       eKeys.getMessage)
     MatView.createJoin(spark, mv, factLoc, dimLoc, "fk", "pk",
       Seq("seg"), "v")
-    MatView.registerJoin(spark, mv)
+    MatView.register(spark, mv)
     def served(q: String): Boolean = planServedFrom(s.sql(q), mv)
     def direct() = TxnTable.snapshot(spark, factLoc).alias("f")
       .join(TxnTable.snapshot(spark, dimLoc).alias("d"),
@@ -1195,11 +1260,11 @@ class MatViewSpec extends SparkSpec {
     // refresh folds the feed; a dim COMPACT is content-invariant and
     // advances the dim cursor without disturbing anything
     TxnTable.compact(spark, dimLoc)
-    val r1 = MatView.refreshJoin(spark, mv)
+    val r1 = MatView.refresh(spark, mv)
     assert(r1.commitsFolded === 1)
     assert(rows() === direct(), "refreshed join MV diverged")
     assert(served(q1), "post-refresh serve must come from the MV alone")
-    val r2 = MatView.refreshJoin(spark, mv)
+    val r2 = MatView.refresh(spark, mv)
     assert(r2.mvVersion === r1.mvVersion && r2.commitsFolded === 0,
       "an up-to-date refresh must no-op")
     // the join refresh publishes ITS OWN feed, so a fold view can
@@ -1213,7 +1278,7 @@ class MatViewSpec extends SparkSpec {
     TxnTable.applyChangesMor(spark, factLoc,
       s.sql("SELECT k, fk, v, 'D' AS op FROM graft.mvspec.jf " +
         "WHERE k % 6 = 0 AND k % 4 <> 0"), "k", cdc = true)
-    MatView.refreshJoin(spark, mv)
+    MatView.refresh(spark, mv)
     val rc = MatView.refresh(spark, mv2)
     assert(rc.commitsFolded === 1)
     // mv2's n = #(seg) group rows in the join MV = 1 per live segment
@@ -1229,7 +1294,7 @@ class MatViewSpec extends SparkSpec {
         "WHERE pk % 5 = 0"), "pk", cdc = true)
     assert(!served(q1), "a moved dim must disqualify serving")
     assert(rows() === direct(), "fall-through answer must be the base's")
-    val rScd = MatView.refreshJoin(spark, mv)
+    val rScd = MatView.refresh(spark, mv)
     assert(rScd.commitsFolded === 0,
       "the SCD refresh folded no FACT commit (only the dim moved)")
     assert(served(q1), "post-SCD-refresh serve must come from the MV")
@@ -1248,7 +1313,7 @@ class MatViewSpec extends SparkSpec {
         "WHERE pk % 7 = 0"), "pk", cdc = false)
     assert(!served(q1), "a feed-less moved dim must disqualify serving")
     val e = intercept[IllegalArgumentException] {
-      MatView.refreshJoin(spark, mv)
+      MatView.refresh(spark, mv)
     }
     assert(e.getMessage.contains("recompute the MV"), e.getMessage)
     assert(e.getMessage.contains("change feed"),
@@ -1293,7 +1358,7 @@ class MatViewSpec extends SparkSpec {
     val hidden = new org.apache.hadoop.fs.Path(s"$t/data_hidden")
     val hfs = dataDir.getFileSystem(conf)
     assert(hfs.rename(dataDir, hidden), "test setup: rename failed")
-    val r1 = try MatView.refreshExtrema(spark, mv)
+    val r1 = try MatView.refresh(spark, mv)
       finally hfs.rename(hidden, dataDir)
     assert(TxnTable.commitMetrics(spark, mv, r1.mvVersion)
       .get("mv_dirty_groups").contains(0L),
@@ -1314,7 +1379,7 @@ class MatViewSpec extends SparkSpec {
       df((12L, "A", 500.0), (6L, "B", 9.0), (7L, "C", 1.0),
         (8L, "C", 2.0), (9L, "A", null)).withColumn("op", lit("D")),
       "k", cdc = true)
-    val r2 = MatView.refreshExtrema(spark, mv)
+    val r2 = MatView.refresh(spark, mv)
     assert(r2.commitsFolded === 2)
     assert(TxnTable.commitMetrics(spark, mv, r2.mvVersion)
       .get("mv_dirty_groups").contains(3L))
@@ -1331,13 +1396,12 @@ class MatViewSpec extends SparkSpec {
         Option(r.getDecimal(4)).map(_.toPlainString))).toSet
     assert(mvRows() === direct)
     // at head: refresh no-ops
-    val r3 = MatView.refreshExtrema(spark, mv)
+    val r3 = MatView.refresh(spark, mv)
     assert(r3.mvVersion === r2.mvVersion && r3.commitsFolded === 0)
   }
 
   test("refreshExtrema publishes its merge feed (−old/+new extrema " +
-      "rows) so fold views chain on an extrema view; publishFeed=false " +
-      "opts out") {
+      "rows) so fold views chain on an extrema view") {
     val s2 = spark
     import s2.implicits._
     val t = fresh("mvxf_base")
@@ -1363,7 +1427,7 @@ class MatViewSpec extends SparkSpec {
     TxnTable.applyChangesMor(spark, t,
       df((4L, "A", "x", 100.0)).withColumn("op", lit("U")), "k",
       cdc = true)
-    val rx1 = MatView.refreshExtrema(spark, xmv)
+    val rx1 = MatView.refresh(spark, xmv)
     val refs1 = TxnTable.manifest(spark, xmv, rx1.mvVersion).cdcRefs
     assert(refs1.nonEmpty, "the extrema refresh must publish its feed")
     val feed1 = spark.read
@@ -1382,23 +1446,12 @@ class MatViewSpec extends SparkSpec {
     TxnTable.applyChangesMor(spark, t,
       df((4L, "A", "x", 100.0)).withColumn("op", lit("D")), "k",
       cdc = true)
-    val rx2 = MatView.refreshExtrema(spark, xmv)
+    val rx2 = MatView.refresh(spark, xmv)
     assert(TxnTable.commitMetrics(spark, xmv, rx2.mvVersion)
       .get("mv_dirty_groups").contains(1L))
     val rt2 = MatView.refresh(spark, top)
     assert(rt2.commitsFolded === 1)
     assert(topRows() === Set(("A", 2L, 30.0), ("B", 1L, 5.0)))
-    // the opt-out: a feed-less extrema refresh commit
-    TxnTable.applyChangesMor(spark, t,
-      df((5L, "B", "x", 50.0)).withColumn("op", lit("U")), "k",
-      cdc = true)
-    val rx3 = MatView.refreshExtrema(spark, xmv, publishFeed = false)
-    assert(TxnTable.manifest(spark, xmv, rx3.mvVersion).cdcRefs.isEmpty,
-      "publishFeed=false must not publish")
-    val e = intercept[IllegalArgumentException] {
-      MatView.refresh(spark, top)
-    }
-    assert(e.getMessage.contains("change feed"), e.getMessage)
   }
 
   test("transplant: refuses non-branch MVs, unpublished branch work, " +
@@ -1485,7 +1538,7 @@ class MatViewSpec extends SparkSpec {
     val loc = s"${GraftCatalog.defaultWarehouse}/mvspec/ex"
     val mv = fresh("mv_ex_view")
     MatView.createExtrema(spark, mv, loc, Seq("g", "h"), "v")
-    MatView.registerExtrema(spark, mv)
+    MatView.register(spark, mv)
     def served(q: String): Boolean = planServedFrom(s.sql(q), mv)
     val q = "SELECT g, h, COUNT(*) AS n, COUNT(v) AS nn, MIN(v) AS lo, " +
       "MAX(v) AS hi FROM graft.mvspec.ex GROUP BY g, h"
@@ -1526,7 +1579,7 @@ class MatViewSpec extends SparkSpec {
     s.sql("INSERT INTO graft.mvspec.ex SELECT id + 1000, 'C', 0, " +
       "CAST(id AS DECIMAL(12,2)) FROM RANGE(5)")
     val eFeed = intercept[IllegalArgumentException] {
-      MatView.refreshExtrema(spark, mv) // refused: feed-less append
+      MatView.refresh(spark, mv) // refused: feed-less append
     }
     assert(eFeed.getMessage.contains("without publishing a change feed"),
       eFeed.getMessage)
@@ -1559,7 +1612,7 @@ class MatViewSpec extends SparkSpec {
       SELECT g, COUNT(*) AS n, MIN(v) AS lo, MAX(v) AS hi
       FROM graft.mvspec.pxe WHERE v <= 150 GROUP BY g""")
     val mv = s"${GraftCatalog.defaultWarehouse}/mvspec/pxe_mv"
-    assert(MatView.readExtremaDef(spark, mv).pred.isDefined,
+    assert(defOf[MatView.MvExtremaDef](mv).pred.isDefined,
       "the DDL predicate must persist in the _mvx definition")
     def served(q: String): Boolean = planServedFrom(s.sql(q), mv)
     val q = "SELECT g, COUNT(*) AS n, MIN(v) AS lo, MAX(v) AS hi " +
@@ -1791,7 +1844,7 @@ class MatViewSpec extends SparkSpec {
     val starMv = fresh("mv_pct_star")
     MatView.createJoinStar(spark, starMv, f1,
       Seq(MatView.MvDimRef(d1, "fk", "pk")), Seq("seg", "m"), "v")
-    MatView.registerJoin(spark, starMv)
+    MatView.register(spark, starMv)
     assert(planServedFrom(got(f1, d1), starMv),
       "the star percentile must serve from the join MV")
     assert(got(f1, d1).collect().map(r => (r.getString(0),
@@ -1803,7 +1856,7 @@ class MatViewSpec extends SparkSpec {
     val liveMv = fresh("mv_pct_live")
     MatView.createStarLive(spark, liveMv, f2,
       Seq(MatView.MvDimRef(d2, "fk", "pk")), Seq("seg", "m"), "v")
-    MatView.registerLive(spark, liveMv)
+    MatView.register(spark, liveMv)
     // a live serve legitimately opens the DIM at query time — "served"
     // = the sub-view is in the plan and no FACT data file is
     def servedLive(df: org.apache.spark.sql.DataFrame): Boolean = {
@@ -1898,8 +1951,7 @@ class MatViewSpec extends SparkSpec {
     val listed = s.sessionState.catalogManager.catalog("graft")
       .asInstanceOf[GraftCatalog].listProcedures(Array("system"))
       .map(_.name()).toSet
-    Seq("create_matview_extrema", "refresh_matview_extrema",
-      "create_matview_join", "refresh_matview_join",
+    Seq("create_matview_extrema", "create_matview_join",
       "transplant_matview").foreach(n =>
       assert(listed.contains(n), s"procedure $n must be listed"))
     // extrema via CALL
@@ -1917,7 +1969,7 @@ class MatViewSpec extends SparkSpec {
     TxnTable.applyChangesMor(spark, ceLoc,
       s.sql("SELECT k, g, v, 'D' AS op FROM graft.mvspec.ce " +
         "WHERE k = 98"), "k", cdc = true) // fell A's max
-    s.sql("CALL graft.system.refresh_matview_extrema('mvspec.ce_mv')")
+    s.sql("CALL graft.system.refresh_matview('mvspec.ce_mv')")
     val ce = TxnTable.snapshot(spark, ceMv)
       .collect().map(r => (r.getString(0), r.getDecimal(4).toPlainString))
       .toMap
@@ -1929,13 +1981,13 @@ class MatViewSpec extends SparkSpec {
     s.sql("DROP TABLE IF EXISTS graft.mvspec.ce_pmv")
     s.sql("CALL graft.system.create_matview_extrema(" +
       "'mvspec.ce_pmv', 'mvspec.ce', 'g', 'v', 'v <= 50')")
-    assert(MatView.readExtremaDef(spark,
+    assert(defOf[MatView.MvExtremaDef](
       s"${GraftCatalog.defaultWarehouse}/mvspec/ce_pmv").pred ===
       Some("v <= 50"), "the CALL's where must persist in _mvx")
     s.sql("DROP TABLE IF EXISTS graft.mvspec.ce_pf")
     s.sql("CALL graft.system.create_matview(" +
       "'mvspec.ce_pf', 'mvspec.ce', 'g', 'v', 'v > 10')")
-    assert(MatView.readDef(spark,
+    assert(defOf[MatView.MvDef](
       s"${GraftCatalog.defaultWarehouse}/mvspec/ce_pf").pred ===
       Some("v > 10"), "the CALL's where must persist in _mv")
     val eCallRand = intercept[IllegalArgumentException] {
@@ -1962,7 +2014,7 @@ class MatViewSpec extends SparkSpec {
     TxnTable.applyChangesMor(spark, cjf,
       s.sql("SELECT k, fk, v, 'D' AS op FROM graft.mvspec.cjf " +
         "WHERE k % 10 = 0"), "k", cdc = true)
-    s.sql("CALL graft.system.refresh_matview_join('mvspec.cj_mv')")
+    s.sql("CALL graft.system.refresh_matview('mvspec.cj_mv')")
     val cj = TxnTable.snapshot(spark, cjMv)
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     val cjDirect = TxnTable.snapshot(spark, cjf).alias("f")
@@ -2027,7 +2079,7 @@ class MatViewSpec extends SparkSpec {
       MatView.MvDimRef(s"$w/mvspec/sd1", "a", "pk"),
       MatView.MvDimRef(s"$w/mvspec/sd2", "b", "pk2")),
       Seq("g1", "g2"), "v")
-    MatView.registerJoin(spark, mv)
+    MatView.register(spark, mv)
     def served(q: String): Boolean = planServedFrom(s.sql(q), mv)
     // every tree shape and order serves
     val shapes = Seq(
@@ -2104,7 +2156,7 @@ class MatViewSpec extends SparkSpec {
     TxnTable.applyChangesMor(spark, s"$w/mvspec/sd2",
       s.sql("SELECT pk2, 'Z' AS g2, 'U' AS op FROM graft.mvspec.sd2 " +
         "WHERE pk2 = 0"), "pk2", cdc = true)
-    val r3 = MatView.refreshJoin(spark, mv)
+    val r3 = MatView.refresh(spark, mv)
     assert(r3.commitsFolded === 1)
     val got3 = s.sql("SELECT g1, g2, COUNT(*) AS n, " +
       "CAST(SUM(v) AS DOUBLE) AS t FROM " + shapes.head +
@@ -2126,7 +2178,7 @@ class MatViewSpec extends SparkSpec {
       shapes.head + " GROUP BY g1, g2"), mv),
       "post-three-log-refresh must serve from the MV alone")
     // and a SECOND refresh no-ops: the cursors landed atomically
-    val r4 = MatView.refreshJoin(spark, mv)
+    val r4 = MatView.refresh(spark, mv)
     assert(r4.mvVersion === r3.mvVersion && r4.commitsFolded === 0)
   }
 
@@ -2157,8 +2209,8 @@ class MatViewSpec extends SparkSpec {
     MatView.createStarLive(spark, mv, fact, Seq(
       MatView.MvDimRef(d1, "a", "pk"),
       MatView.MvDimRef(d2, "b", "pk2")), Seq("g1", "g2"), "v")
-    MatView.registerLive(spark, mv)
-    assert(MatView.kindOf(spark, mv) === "live")
+    MatView.register(spark, mv)
+    assert(MatView.definition(spark, mv).kind === "live")
     // the live serve contract: parquet roots = sub-view + dims (+ the
     // fact's `_cdc` when compensating), no v2 relation, and NEVER a
     // fact data file
@@ -2220,7 +2272,7 @@ class MatViewSpec extends SparkSpec {
     assert(g2 === direct() && g2.exists(_._1 == "R"),
       "post-dim-move live serve diverged")
     // ...and refresh has nothing to do: the fact log never moved
-    val r0 = MatView.refreshLive(spark, mv)
+    val r0 = MatView.refresh(spark, mv)
     assert(r0.commitsFolded === 0, "dim movement must not dirty the " +
       "live view's cursor")
     assert(MatView.statusFor(spark, fact).exists(st =>
@@ -2236,7 +2288,7 @@ class MatViewSpec extends SparkSpec {
     assert(got() === direct(), "compensated live serve diverged")
     // refresh folds exactly the fact tail — no dim cursor moves
     // because none exists
-    val r1 = MatView.refreshLive(spark, mv)
+    val r1 = MatView.refresh(spark, mv)
     assert(r1.commitsFolded === 1)
     assert(servedLive(s.sql(q)) && got() === direct(),
       "post-refresh live serve diverged")
@@ -2249,7 +2301,7 @@ class MatViewSpec extends SparkSpec {
       "a feed-less fact change must fall through")
     assert(got() === direct(), "the fall-through answer must be exact")
     val eRef = intercept[IllegalArgumentException] {
-      MatView.refreshLive(spark, mv)
+      MatView.refresh(spark, mv)
     }
     assert(eRef.getMessage.contains("recompute the MV"), eRef.getMessage)
     // grain hygiene: a non-integral/string join key refuses at create
@@ -2294,9 +2346,9 @@ class MatViewSpec extends SparkSpec {
     val mv = fresh("mv_livefk_view")
     MatView.createStarLive(spark, mv, fact,
       Seq(MatView.MvDimRef(dim, "a", "pk")), Seq("g1", "flag"), "v")
-    MatView.registerLive(spark, mv)
+    MatView.register(spark, mv)
     // the persisted grain = the join key + the fact-owned group key
-    assert(MatView.readLiveDef(spark, mv)._2 === Seq("a", "flag"))
+    assert(defOf[MatView.LiveDef](mv).grain === Seq("a", "flag"))
     def servedLive(df: org.apache.spark.sql.DataFrame): Boolean = {
       val p = df.queryExecution.optimizedPlan
       val roots = p.collect {
@@ -2352,7 +2404,7 @@ class MatViewSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1),
         r.getLong(2), r.getDouble(3))).toSet
     assert(got === want, "compensated mixed-ownership serve diverged")
-    val r = MatView.refreshLive(spark, mv)
+    val r = MatView.refresh(spark, mv)
     assert(r.commitsFolded === 1)
   }
 
@@ -2395,7 +2447,7 @@ class MatViewSpec extends SparkSpec {
     MatView.createJoinStar(spark, mv, fact,
       Seq(MatView.MvDimRef(dim, "fk", "pk")), Seq("seg"), "v",
       Seq("count", "sum"), Some("v > 50"))
-    MatView.registerJoin(spark, mv)
+    MatView.register(spark, mv)
     val q = "SELECT seg, COUNT(*) AS n, SUM(v) AS t FROM " +
       "graft.mvspec.pjf f JOIN graft.mvspec.pjd d ON f.fk = d.pk " +
       "WHERE v > 50 GROUP BY seg"
@@ -2435,7 +2487,7 @@ class MatViewSpec extends SparkSpec {
     TxnTable.applyChangesMor(spark, dim,
       s.sql("SELECT pk, 'Z' AS seg, 'U' AS op FROM graft.mvspec.pjd " +
         "WHERE pk IN (1, 7)"), "pk", cdc = true)
-    val r = MatView.refreshJoin(spark, mv)
+    val r = MatView.refresh(spark, mv)
     assert(r.commitsFolded === 1)
     assert(planServedFrom(s.sql(q), mv), "post-refresh must serve")
     val g = got()
@@ -2533,7 +2585,7 @@ class MatViewSpec extends SparkSpec {
     // MIXED ownership: 'flag' lives on the FACT, 'seg' on the dim
     MatView.createJoinStar(spark, mv, factLoc,
       Seq(MatView.MvDimRef(dimLoc, "fk", "pk")), Seq("flag", "seg"), "v")
-    MatView.registerJoin(spark, mv)
+    MatView.register(spark, mv)
     // an AMBIGUOUS key (a column on both sides) refuses at create
     s.sql("DROP TABLE IF EXISTS graft.mvspec.f2amb")
     s.sql("CREATE TABLE graft.mvspec.f2amb (pk BIGINT, flag STRING)")
@@ -2578,7 +2630,7 @@ class MatViewSpec extends SparkSpec {
         "WHERE pk IN (3, 7)"), "pk", cdc = true)
     assert(!served(q1), "a moved dim must disqualify serving")
     assert(rows() === direct(), "fall-through diverged")
-    val r = MatView.refreshJoin(spark, mv)
+    val r = MatView.refresh(spark, mv)
     assert(r.commitsFolded === 1)
     assert(served(q1), "post-both-sides-refresh must serve from the MV")
     assert(rows() === direct(), "both-logs fold diverged")
@@ -2591,7 +2643,7 @@ class MatViewSpec extends SparkSpec {
       s.sql("SELECT k, fk, flag, v, CAST(NULL AS STRING) AS seg, " +
         "'D' AS op FROM graft.mvspec.f2f WHERE k % 30 = 1"), "k",
       cdc = true)
-    val r2 = MatView.refreshJoin(spark, mv)
+    val r2 = MatView.refresh(spark, mv)
     // 2 commits walked: the evolve (content-invariant) + the change
     assert(r2.commitsFolded === 2,
       "a fact column shadowing a dim key must not brick the refresh")
@@ -2636,7 +2688,7 @@ class MatViewSpec extends SparkSpec {
     assert(eSub.getMessage.contains("subquery"), eSub.getMessage)
     MatView.create(spark, mv, loc, Seq("g"), "v", Seq("count", "sum"),
       Some("v > 50"))
-    assert(MatView.readDef(spark, mv).pred === Some("v > 50"),
+    assert(defOf[MatView.MvDef](mv).pred === Some("v > 50"),
       "the predicate must persist in the definition")
     MatView.register(spark, mv)
     val q = "SELECT g, COUNT(*) AS n, CAST(SUM(v) AS DOUBLE) AS t " +
@@ -2698,7 +2750,7 @@ class MatViewSpec extends SparkSpec {
       "SELECT g, COUNT(*) AS n, SUM(v) AS t " +
       "FROM graft.mvspec.pslice x WHERE x.v > 50 GROUP BY g")
     val mvDdl = s"${GraftCatalog.defaultWarehouse}/mvspec/pslice_ddl"
-    assert(MatView.readDef(spark, mvDdl).pred === Some("(v > 50)"),
+    assert(defOf[MatView.MvDef](mvDdl).pred === Some("(v > 50)"),
       "the DDL predicate must store qualifier-free")
     assert(s.sql("DROP MATERIALIZED VIEW graft.mvspec.pslice_ddl")
       .collect()(0).getString(0) === "fold")
@@ -2812,7 +2864,7 @@ class MatViewSpec extends SparkSpec {
       SELECT seg, COUNT(*) AS n, SUM(v) AS t FROM graft.mvspec.ddlf f
       JOIN graft.mvspec.ddld d ON f.fk = d.pk GROUP BY seg""")
     val liveLoc = s"${GraftCatalog.defaultWarehouse}/mvspec/ddl_live"
-    assert(MatView.kindOf(spark, liveLoc) === "live")
+    assert(MatView.definition(spark, liveLoc).kind === "live")
     // a dim move WITHOUT a feed — the live kind keeps serving exactly
     TxnTable.applyChangesMor(spark,
       s"${GraftCatalog.defaultWarehouse}/mvspec/ddld",
@@ -2860,8 +2912,8 @@ class MatViewSpec extends SparkSpec {
       "f JOIN graft.mvspec.ddld d ON f.fk = d.pk WHERE v > 10 " +
       "GROUP BY seg")
     val lwLoc = s"${GraftCatalog.defaultWarehouse}/mvspec/ddl_lw"
-    assert(MatView.kindOf(spark, lwLoc) === "live")
-    assert(MatView.readLiveDef(spark, lwLoc)._1.pred ===
+    assert(MatView.definition(spark, lwLoc).kind === "live")
+    assert(defOf[MatView.LiveDef](lwLoc).star.pred ===
       Some("(v > 10)"), "the live def must store the predicate")
     val lwQ = "SELECT seg, COUNT(*) AS n FROM graft.mvspec.ddlf f " +
       "JOIN graft.mvspec.ddld d ON f.fk = d.pk WHERE v > 10 " +
@@ -2948,7 +3000,7 @@ class MatViewSpec extends SparkSpec {
     MatView.register(spark, mv)
     val mvx = fresh("mv_shw_extrema")
     MatView.createExtrema(spark, mvx, loc, Seq("g"), "v")
-    MatView.registerExtrema(spark, mvx)
+    MatView.register(spark, mvx)
     def listing() = s.sql("SELECT mv, kind, fresh, servable, cursor, " +
       "head FROM graft.mvspec.shw.matviews ORDER BY kind").collect()
       .map(r => (r.getString(1), r.getBoolean(2), r.getBoolean(3),
@@ -2993,7 +3045,7 @@ class MatViewSpec extends SparkSpec {
     val loc = s"${GraftCatalog.defaultWarehouse}/mvspec/xgs"
     val mv = fresh("mv_xgs_view")
     MatView.createExtrema(spark, mv, loc, Seq("g", "h"), "v")
-    MatView.registerExtrema(spark, mv)
+    MatView.register(spark, mv)
     def served(q: String): Boolean = planServedFrom(s.sql(q), mv)
     def rows(q: String) = s.sql(q).collect().map(_.toSeq.map {
       case null => "∅"
@@ -3058,7 +3110,7 @@ class MatViewSpec extends SparkSpec {
     val mv = fresh("mv_gsj_view")
     MatView.createJoin(spark, mv, factLoc, dimLoc, "fk", "pk",
       Seq("seg", "region"), "v")
-    MatView.registerJoin(spark, mv)
+    MatView.register(spark, mv)
     val qRollup = "SELECT seg, region, COUNT(*) AS n, " +
       "CAST(SUM(v) AS DOUBLE) AS t " +
       "FROM graft.mvspec.gsf f JOIN graft.mvspec.gsd d " +
@@ -3151,7 +3203,7 @@ class MatViewSpec extends SparkSpec {
     // stays the fold view's tail
     val mvx = fresh("mv_rp_extrema")
     MatView.createExtrema(spark, mvx, loc, Seq("g"), "v")
-    MatView.registerExtrema(spark, mvx)
+    MatView.register(spark, mvx)
     assert(MatView.retentionPins(spark, loc) === Set(2L, 3L))
     // vacuum with the pins: only v0/v1 manifests die, the feed tail
     // survives, and the stale view still refreshes (2 commits folded)
@@ -3188,7 +3240,7 @@ class MatViewSpec extends SparkSpec {
     val mvj = fresh("mv_rp_join")
     MatView.createJoin(spark, mvj, loc, dimLoc, "k", "c", Seq("seg"),
       "v")
-    MatView.registerJoin(spark, mvj)
+    MatView.register(spark, mvj)
     assert(MatView.retentionPins(spark, dimLoc) === Set.empty[Long],
       "a fresh dim cursor pins nothing")
     TxnTable.compact(spark, dimLoc)
@@ -3199,7 +3251,7 @@ class MatViewSpec extends SparkSpec {
       pinned = MatView.retentionPins(spark, dimLoc))
     // the invariance proof still reads: refreshJoin advances the dim
     // cursor across the compacts instead of refusing on a swept log
-    MatView.refreshJoin(spark, mvj)
+    MatView.refresh(spark, mvj)
     assert(MatView.retentionPins(spark, dimLoc) === Set.empty[Long])
   }
 
