@@ -2,39 +2,54 @@ package graft.operators
 
 import graft.Tables
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import scala.collection.immutable.ListMap
 
 /** MATERIALIZED VIEWS with INCREMENTAL REFRESH over the change feed —
   * the managed form of op_incremental_agg's telescoping fold. An MV is
   * itself a TxnTable (snapshot isolation, time travel, vacuum — all
-  * inherited) holding `groupBy(key).agg(count, sum(value))` of a base
-  * TxnTable, plus two pieces of state:
+  * inherited) holding a grouped aggregate of other TxnTables, in one
+  * of four kinds, each decoded from its stored [[ViewDef]]:
   *
-  *  - the immutable DEFINITION (base location, key, value column) in a
-  *    one-shot `_mv` file written at create — it never changes, so no
-  *    atomicity is owed to it (a production catalog would hold this row;
-  *    the table format's job is only the part below);
-  *  - the REFRESH CURSOR — the base version this MV reflects — in the
-  *    refresh commit's own `#metrics=` header (`mv_base_version`), so
-  *    applying a feed and recording that it was applied is ONE atomic
-  *    manifest commit: a crashed refresh either fully landed or never
-  *    happened, and a re-run is exact (never double-applies a delta).
+  *  - FOLD (`_mv`, [[MvDef]]): `(n, nn, total)` per key group of one
+  *    base — count, non-null count and an exact DECIMAL(18,2) sum;
+  *  - JOIN (`_mvj`, [[MvJoinDef]]): the same fold over fact ⋈ dims,
+  *    grouped by dim (or fact) attributes;
+  *  - LIVE (`_mvl`, [[LiveDef]]): the fold of a star stored at the
+  *    fact-key grain, the dims joined back at query time;
+  *  - EXTREMA (`_mvx`, [[MvExtremaDef]]): `(n, nn, vmin, vmax)` per
+  *    key group of one base.
   *
-  * refresh() reads ONLY the base's published per-commit signed feeds
-  * (`#cdc=` refs) for (cursor, head] — never the base data files: cost
-  * is O(changes since last refresh) + O(MV), at ANY base size. That is
-  * the whole point of a 100 TB MV: the base may take hours to scan, the
-  * nightly delta seconds. Base commits in the range without a feed are
-  * accepted only when their op is content-invariant (compact /
-  * recluster / zorder / checkpoint / rewrite_tombstones / restore is
-  * NOT — it changes content); anything else refuses LOUDLY with the
-  * full-recompute remedy, the Delta "change data feed not enabled for
-  * range" contract — a silent fallback to rescanning the base would
-  * hide exactly the cost the MV exists to avoid.
+  * Every view carries two pieces of state. The immutable DEFINITION
+  * file is written once at create, so no atomicity is owed to it. The
+  * CURSORS are the versions of the tables whose logs the view reads;
+  * they ride the refresh commit's own `#metrics=` header, so applying
+  * a feed and recording that it was applied is ONE atomic manifest
+  * commit: a crashed refresh either fully landed or never happened,
+  * and a re-run never double-applies a delta.
   *
-  * The delta fold is pure algebra on the signed feed: per group,
+  * ONE freshness contract serves every caller. [[cursors]] reads a
+  * view's cursors; the serve decision ([[rowsAt]]) proves from the
+  * log alone whether the view answers at a query's pinned versions;
+  * [[refresh]], the optimizer's rewrite rule, the `t.matviews`
+  * listing ([[statusFor]]) and the retention pins ([[retentionPins]])
+  * all read those two functions, so no caller outside this object
+  * reads a cursor or walks a tail.
+  *
+  * refresh() reads ONLY the published per-commit signed feeds (`#cdc=`
+  * refs) for (cursor, head] — never a base data file outside the join
+  * and extrema views' key-pruned recompute slices: cost is O(changes
+  * since last refresh) + O(MV), at ANY base size. Commits in the range
+  * without a feed are accepted only when their op is
+  * content-invariant (compact / recluster / zorder / …); anything else
+  * refuses LOUDLY with the full-recompute remedy, the Delta "change
+  * data feed not enabled for range" contract — a silent fallback to
+  * rescanning the base would hide exactly the cost the MV exists to
+  * avoid.
+  *
+  * The fold is pure algebra on the signed feed: per group,
   * `n += Σw`, `total += Σ(w·value)`; groups reaching n == 0 leave the
   * MV (op 'D'). The merge into the MV rides the file-pruned
   * [[TxnTable.applyChangesWithMetrics]] — only MV files whose key box
@@ -143,38 +158,81 @@ object MatView {
         s"$mv: malformed _mv definition (${other.size} lines)")
     }
 
-  /** The base version this MV reflects: the newest MV commit carrying
-    * the `mv_base_version` metric. Walking newest-first keeps the
-    * cursor correct across interleaved NON-refresh MV commits (a
-    * compact() of the MV, a checkpoint) — those carry entries, not
-    * metrics, and must not reset the cursor. */
+  /** The base version this MV reflects — the fold or extrema base's
+    * cursor, a join or live view's fact cursor (see [[cursors]]). */
   def lastRefreshed(s: SparkSession, mv: String): Long =
-    lastRefreshedAt(s, mv, Long.MaxValue) // no bound: one log listing
+    cursorHeader(s, mv)._2("mv_base_version")
 
-  /** [[lastRefreshed]] pinned at MV version `upTo` — the rewrite rule
-    * reads the cursor AND the MV rows from ONE pinned version, so a
-    * refresh landing between the two reads can never double-count its
-    * feed tail (cursor from the old head + rows from the new one). */
-  private[graft] def lastRefreshedAt(s: SparkSession, mv: String,
-      upTo: Long): Long = cursorInfoAt(s, mv, upTo)._1
-
-  /** The cursor AND whether the MV has been TRANSPLANTED onto its
-    * branch's parent timeline ([[transplant]]) — both read from the
-    * SAME newest cursor-carrying commit, so the pair can never mix
-    * timelines: a cursor value is meaningless without knowing which
-    * log it indexes, and reading the flag from any other commit would
-    * reintroduce exactly the two-object race the one-commit transplant
-    * design exists to close. */
-  private[graft] def cursorInfoAt(s: SparkSession, mv: String,
-      upTo: Long): (Long, Boolean) =
-    TxnTable.versions(s, mv).filter(_ <= upTo).reverse.iterator
-      .map(v => (TxnTable.manifestHeaderMetric(s, mv, v,
-        "mv_base_version"), v))
-      .collectFirst { case (b, v) if b >= 0 =>
-        (b, TxnTable.manifestHeaderMetric(s, mv, v, "mv_retarget") == 1L)
-      }
+  /** The MV's newest version and the `#metrics=` header of its newest
+    * CURSOR-CARRYING commit: one log listing, then header-only reads
+    * newest-first (O(headers),
+    * never O(entries) manifest parses). Walking past non-refresh MV
+    * commits (a compact() of the MV, a checkpoint — those carry
+    * entries, not cursors) keeps the cursor correct. */
+  private def cursorHeader(s: SparkSession, mv: String)
+      : (Long, Map[String, Long]) = {
+    val vs = TxnTable.versions(s, mv)
+    val h = vs.reverseIterator
+      .map(v => TxnTable.manifestHeaderMetrics(s, mv, v))
+      .find(_.get("mv_base_version").exists(_ >= 0))
       .getOrElse(throw new IllegalArgumentException(
         s"$mv: no refresh cursor in any retained commit"))
+    (vs.last, h)
+  }
+
+  /** THE cursor reader. Returns the MV version pinned for one read
+    * (its newest) and, for every table whose log
+    * the view reads, the version of that table the pinned rows
+    * reflect: the primary table first — a fold view's EFFECTIVE base,
+    * an extrema base, a join or live view's fact — then a join view's
+    * dims in definition order. A live view reads no dim log (its dims
+    * join back at query time), so it lists its fact alone.
+    *
+    * Every cursor comes from ONE commit, the newest carrying
+    * `mv_base_version` (each refresh stamps all of a view's cursors
+    * together), so cursors can never mix refreshes. Callers read the
+    * MV rows at the SAME pinned version: a refresh landing between the
+    * two reads would otherwise have its feed tail counted twice. A
+    * TRANSPLANTED fold view ([[transplant]]) keys its cursor by the
+    * branch's PARENT: the `mv_retarget` flag rides the cursor's own
+    * commit, because a cursor value is meaningless without the log it
+    * indexes. */
+  private[graft] def cursors(s: SparkSession, mv: String, d: ViewDef)
+      : (Long, ListMap[String, Long]) = {
+    val (mvVer, h) = cursorHeader(s, mv)
+    def at(metric: String): Long = h.get(metric).filter(_ >= 0)
+      .getOrElse(throw new IllegalArgumentException(
+        s"$mv: its cursor commit carries no $metric"))
+    val primary = d match {
+      case f: MvDef if h.get("mv_retarget").contains(1L) =>
+        parentOf(f.base)
+      case _ => d.tables.head
+    }
+    (mvVer, ListMap(primary -> at("mv_base_version")) ++ (d match {
+      case j: MvJoinDef =>
+        j.dims.indices.map(i => j.dims(i).dim -> at(dimCursorMetric(i)))
+      case _ => Nil
+    }))
+  }
+
+  /** [[cursors]]' inverse: the cursor metrics a commit stamps so that
+    * the view reflects `at` (same tables, same order). A fold view
+    * keyed off its stored base is a transplanted one, so every later
+    * cursor commit re-stamps `mv_retarget`. */
+  private def cursorMetrics(d: ViewDef, at: ListMap[String, Long])
+      : Seq[(String, Long)] =
+    ("mv_base_version" -> at.head._2) +: (d match {
+      case f: MvDef if at.head._1 != f.base => Seq("mv_retarget" -> 1L)
+      case j: MvJoinDef =>
+        j.dims.indices.map(i => dimCursorMetric(i) -> at(j.dims(i).dim))
+      case _ => Nil
+    })
+
+  /** The per-dim cursor metric name: dim 0 keeps the original
+    * `mv_dim_version` (single-dim views are unchanged on disk), later
+    * dims suffix their index. */
+  private def dimCursorMetric(i: Int): String =
+    if (i == 0) "mv_dim_version" else s"mv_dim_version_$i"
 
   /** The parent table of a branch directory (`<parent>/_branches/<leaf>`)
     * — what a transplanted MV's cursor speaks against. Refuses a base
@@ -186,32 +244,6 @@ object MatView {
         "can be transplanted onto a parent timeline")
     base.take(i)
   }
-
-  /** The MV's EFFECTIVE definition at `mvVer`: after [[transplant]],
-    * the base is the branch's PARENT and the cursor indexes the
-    * parent's log. The `_mv` def file stays immutable (it records the
-    * branch the view was created on); the retarget lives in the MV's
-    * own LOG, stamped on the same commit as the cursor it applies to. */
-  private[graft] def effectiveDef(s: SparkSession, mv: String, d: MvDef,
-      mvVer: Long): (MvDef, Long) = {
-    val (cursor, retargeted) = cursorInfoAt(s, mv, mvVer)
-    (if (retargeted) d.copy(base = parentOf(d.base)) else d, cursor)
-  }
-
-  /** The newest committed value of cursor metric `metric` at or below
-    * MV version `upTo` — the generalized cursor walk (join MVs keep TWO
-    * cursors: the fact's `mv_base_version` and the dim's
-    * `mv_dim_version`, always stamped together by one commit). */
-  private[graft] def cursorAt(s: SparkSession, mv: String,
-      upTo: Long, metric: String): Long =
-    TxnTable.versions(s, mv).filter(_ <= upTo).reverse.iterator
-      // header-only metric read per step (−1 = absent; cursors are
-      // ≥ 0): the walk costs O(headers), never O(entries) manifest
-      // parses, however many maintenance commits interleave
-      .map(v => TxnTable.manifestHeaderMetric(s, mv, v, metric))
-      .collectFirst { case b if b >= 0 => b }
-      .getOrElse(throw new IllegalArgumentException(
-        s"$mv: no refresh cursor ($metric) in any retained commit"))
 
   /** Base ops with NO row-content change — a feed-less commit of one of
     * these is safe to skip when folding a version range; the list is
@@ -228,11 +260,8 @@ object MatView {
     // MV's log must skip it, not refuse
     "mv_refresh")
 
-  /** Create the MV: ONE full compute of the aggregate at the base's
-    * current version — the last time the base is ever scanned. The MV
-    * commits range-clustered and stat-indexed on integral keys so
-    * every later refresh merge can file-prune (string keys index via
-    * the truncated string stats). */
+  /** Single-key [[create]]: every fold aggregate declared, no
+    * predicate. */
   def create(s: SparkSession, mv: String, base: String, key: String,
       value: String): Long = create(s, mv, base, Seq(key), value)
 
@@ -300,19 +329,6 @@ object MatView {
         "digits) or recompute the aggregate directly")
   }
 
-  /** One full compute of the (n, nn, total) fold of `src`, committed as
-    * the MV's version 0, range-clustered and stat-indexed on the keys
-    * so every later refresh merge can file-prune.
-    *
-    * The fold column is DECIMAL(18,2) EXACTLY: sum() widens its input
-    * (18,2 → 28,2), and letting the widened type into the committed
-    * schema would make every refresh (which writes 18,2) drift from
-    * carried files — pin it at create so create and refresh agree.
-    * `nn` counts NON-NULL values: total folds NULLs as 0 (what the
-    * signed algebra needs to telescope), and nn is what lets a reader
-    * — the transparent rewrite especially — reconstruct the
-    * null-skipping SQL semantics (an all-NULL group is nn == 0 with
-    * total 0, which SUM must surface as NULL) and answer COUNT(value) */
   /** The key columns the manifest can stat-index SOUNDLY, by type:
     * strings carry string bounds; integral types carry long boxes +
     * NDV sketches; NARROW DECIMALS (integral part fits a long) carry
@@ -335,6 +351,19 @@ object MatView {
     (intKeys, strKeys)
   }
 
+  /** One full compute of the (n, nn, total) fold of `src`, committed as
+    * the MV's version 0, range-clustered and stat-indexed on the keys
+    * so every later refresh merge can file-prune.
+    *
+    * The fold column is DECIMAL(18,2) EXACTLY: sum() widens its input
+    * (18,2 → 28,2), and letting the widened type into the committed
+    * schema would make every refresh (which writes 18,2) drift from
+    * carried files — pin it at create so create and refresh agree.
+    * `nn` counts NON-NULL values: total folds NULLs as 0 (what the
+    * signed algebra needs to telescope), and nn is what lets a reader
+    * — the transparent rewrite especially — reconstruct the
+    * null-skipping SQL semantics (an all-NULL group is nn == 0 with
+    * total 0, which SUM must surface as NULL) and answer COUNT(value). */
   private def commitMvRows(s: SparkSession, mv: String, src: DataFrame,
       keys: Seq[String], value: String,
       metrics: Seq[(String, Long)]): Long = {
@@ -351,20 +380,19 @@ object MatView {
       idxCols = intKeys, strIdxCols = strKeys, metrics = metrics)
   }
 
-  def create(s: SparkSession, mv: String, base: String,
-      keys: Seq[String], value: String,
-      aggs: Seq[String] = Seq("count", "sum", "avg")): Long =
-    create(s, mv, base, keys, value, aggs, pred = None)
-
-  /** [[create]] of a PARTIAL view: only base rows satisfying `pred`
-    * (row-local SQL over the base's columns — `price > 100`) fold.
-    * The predicate must be DETERMINISTIC and subquery-free: membership
-    * is decided per row at fold time, and a nondeterministic predicate
+  /** Create a fold view over `base`: ONE full compute of the aggregate
+    * at the base's current version — the last time the base is ever
+    * scanned ([[commitMvRows]]). `aggs` is the declared aggregate set;
+    * `pred` makes the view PARTIAL: only base rows satisfying it
+    * (row-local SQL over the base's columns — `price > 100`) fold. The
+    * predicate must be DETERMINISTIC and subquery-free: membership is
+    * decided per row at fold time, and a nondeterministic predicate
     * would make −old/+new pairs disagree with the rows the view
     * actually holds — refuse at create, the one honest moment. */
   def create(s: SparkSession, mv: String, base: String,
-      keys: Seq[String], value: String, aggs: Seq[String],
-      pred: Option[String]): Long = {
+      keys: Seq[String], value: String,
+      aggs: Seq[String] = Seq("count", "sum", "avg"),
+      pred: Option[String] = None): Long = {
     validateShape(keys, aggs)
     val bv = TxnTable.currentVersion(s, base)
     val snap = TxnTable.snapshot(s, base, bv)
@@ -449,62 +477,64 @@ object MatView {
     * rewritten region), so a key-predicated dashboard over a huge MV
     * opens only the stat-bearing files its keys can live in instead of
     * the whole view. */
-  private[graft] def mvRowsAt(s: SparkSession, mv: String, mvVer: Long,
+  private def mvRowsAt(s: SparkSession, mv: String, mvVer: Long,
       kb: KeyBounds): DataFrame =
     if (kb.isEmpty) TxnTable.snapshot(s, mv, mvVer)
     else TxnTable.snapshotBoxed(s, mv, kb.ints, kb.strs, mvVer)._1
 
-  /** Incremental refresh of the view at `mv`, whatever its kind: the
-    * stored definition picks the fold body below, or the join, live or
-    * extrema one. */
-  def refresh(s: SparkSession, mv: String): RefreshResult =
-    definition(s, mv) match {
-      case d: MvDef => refreshFold(s, mv, d)
-      case d: MvJoinDef => refreshJoin(s, mv, d)
-      case LiveDef(d, grain) => refreshLive(s, mv, d, grain)
-      case d: MvExtremaDef => refreshExtrema(s, mv, d)
+  /** Incremental refresh of the view at `mv`, whatever its kind. One
+    * prologue serves all four: pin ONE MV version for the cursors, the
+    * rows AND the merge's CAS (two concurrent refreshes otherwise
+    * interleave so the second folds the tail onto rows that already
+    * include it — with the pin, the loser fails the commit CAS loudly);
+    * refuse a table behind its cursor; no-op when every table is at
+    * its cursor; resolve each tail's published feeds from manifests
+    * alone ([[feedRefs]] — a feed-less content change refuses there);
+    * and advance the cursors with one metadata-only commit when no
+    * tail carries a feed. Only the fold of the feeds is per kind. */
+  def refresh(s: SparkSession, mv: String): RefreshResult = {
+    val d = definition(s, mv)
+    val (mvVer, cur) = cursors(s, mv, d)
+    val heads = cur.map { case (t, c) =>
+      val h = TxnTable.currentVersion(s, t)
+      require(h >= c, s"$t is at version $h, behind the MV's cursor $c " +
+        "— the table was restored/recreated; recompute the MV")
+      t -> h
     }
+    val (primary, last) = cur.head
+    val head = heads(primary)
+    if (heads == cur) return RefreshResult(mvVer, last, 0)
+    val refs = cur.map { case (t, c) => t -> feedRefs(s, t, c, heads(t)) }
+    val metrics = cursorMetrics(d, heads)
+    val v =
+      if (refs.values.forall(_.isEmpty))
+        advanceCursor(s, mv, mvVer, metrics)
+      else d match {
+        // a PARTIAL view folds only the feed rows satisfying its stored
+        // predicate: membership is row-local, so a −old/+new update
+        // pair crossing the boundary folds as exactly the membership
+        // change it is
+        case f: MvDef => foldAndMerge(s, mv, mvVer, f.keys, f.value,
+          predFeed(s, refs(primary), f.pred), metrics)
+        // feed rows with a NULL join key are excluded exactly like
+        // create's scan (the served inner join never sees them)
+        case LiveDef(j, grain) => foldAndMerge(s, mv, mvVer, grain,
+          j.value, predFeed(s, refs(primary), j.pred)
+            .filter(joinKeysPresent(j)), metrics)
+        case j: MvJoinDef =>
+          refreshJoin(s, mv, j, mvVer, cur, heads, refs, metrics)
+        case x: MvExtremaDef =>
+          refreshExtrema(s, mv, x, mvVer, head, refs(primary), metrics)
+      }
+    RefreshResult(v, head, (head - last).toInt)
+  }
 
-  private def refreshFold(s: SparkSession, mv: String, d0: MvDef)
-      : RefreshResult = {
-    // pin ONE MV version for the cursor, the rows AND the merge's CAS:
-    // two concurrent refreshes otherwise interleave so the second folds
-    // the feed tail onto rows that already include it (cursor from the
-    // old head, rows from the new one) — the same TOCTOU the rewrite
-    // path closes via lastRefreshedAt/compensated(mvVer). With the pin,
-    // the losing refresh fails the commit CAS loudly instead.
-    val mvVer = TxnTable.currentVersion(s, mv)
-    // a TRANSPLANTED view refreshes against the branch's PARENT — the
-    // retarget flag rides the same commit as the cursor it applies to,
-    // and every later refresh re-stamps it so the pair stays atomic
-    val (d, last) = effectiveDef(s, mv, d0, mvVer)
-    val retargeted = d.base != d0.base
-    val stamp = if (retargeted) Seq("mv_retarget" -> 1L) else Nil
-    val head = TxnTable.currentVersion(s, d.base)
-    require(head >= last, s"${d.base} is at version $head, behind the " +
-      s"MV's cursor $last — the base was restored/recreated; recompute " +
-      "the MV")
-    if (head == last)
-      return RefreshResult(mvVer, last, 0)
-    // resolve the range's published feeds from manifests alone —
-    // O(commits in range) header reads, never a base data file.
-    // change_noop marks a commit that provably changed no rows
-    // (verdicts touched no file, or the exact cdc feed was empty):
-    // a zero-length feed, not a feed-less content change
-    val refs = feedRefs(s, d.base, last, head)
-    val folded = (head - last).toInt
-    if (refs.isEmpty)
-      return RefreshResult(advanceCursor(s, mv, mvVer,
-        Seq("mv_base_version" -> head) ++ stamp), head, folded)
-    // a PARTIAL view folds only the feed rows satisfying its stored
-    // predicate: membership is row-local, so a −old/+new update pair
-    // crossing the boundary folds as exactly the membership change
-    // (fold's FUNCTION argument is strict — build the reader once)
-    val feedDf = s.read.parquet(refs: _*)
-    val feed = d.pred.fold(feedDf)(feedDf.filter)
-    val v = foldAndMerge(s, mv, mvVer, d.keys, d.value, feed,
-      Seq("mv_base_version" -> head) ++ stamp)
-    RefreshResult(v, head, folded)
+  /** The signed feed rows of `refs`, gated by a PARTIAL view's stored
+    * predicate — the one reader every refresh and serve path folds. */
+  private def predFeed(s: SparkSession, refs: Seq[String],
+      pred: Option[String]): DataFrame = {
+    val feed = s.read.parquet(refs: _*)
+    pred.fold(feed)(feed.filter)
   }
 
   /** TRANSPLANT a branch MV onto the parent timeline after a
@@ -543,17 +573,16 @@ object MatView {
     require(ref.localBase >= 0,
       s"$mv: branch '$leaf' predates rebase support (no recorded " +
         "publish point) — recompute the MV on the parent instead")
-    val mvVer = TxnTable.currentVersion(s, mv)
-    val (cursor, already) = cursorInfoAt(s, mv, mvVer)
-    require(!already, s"$mv: already transplanted onto $parent")
+    val (mvVer, cur) = cursors(s, mv, d)
+    val (onto, cursor) = cur.head
+    require(onto == d.base, s"$mv: already transplanted onto $parent")
     require(cursor == ref.localBase,
       s"$mv: cursor $cursor is not the branch's published point " +
         s"${ref.localBase} — refresh the MV to the publish point " +
         "first, or (if the branch moved past the publish) fastForward " +
         "again before transplanting; the parent does not hold " +
         "unpublished branch commits")
-    advanceCursor(s, mv, mvVer,
-      Seq("mv_base_version" -> ref.base, "mv_retarget" -> 1L))
+    advanceCursor(s, mv, mvVer, cursorMetrics(d, ListMap(parent -> ref.base)))
   }
 
   /** Content-invariant refresh range: advance the cursor(s) with ONE
@@ -571,9 +600,9 @@ object MatView {
 
   /** Resolve the published-feed refs for base commits `(last, head]` —
     * THE single site encoding which commits count (published feeds,
-    * content-invariant ops, change_noop markers): refresh, the join
-    * refresh, and both compensation paths all read this contract here,
-    * so they can never diverge on the same log. Left = why the range
+    * content-invariant ops, change_noop markers): [[refresh]] and the
+    * serve decision ([[tailRefs]]) both read this contract here, so they
+    * can never diverge on the same log. Left = why the range
     * cannot be folded; Right = every feed ref in the range. NO data or
     * file-existence I/O here — this runs on the OPTIMIZER path, where
     * a vacuumed feed already falls through safely (the served plan's
@@ -634,12 +663,10 @@ object MatView {
     // the signed fold: per group, dn = Σw, dnn = Σw over non-null
     // values, dtotal = Σ(w·value); a key appearing in several feeds
     // telescopes here, in ONE aggregate
-    val delta = feed.groupBy(keys.map(col): _*).agg(
-      sum(col("w").cast("long")).as("dn"),
-      sum(col("w").cast("long") *
-        when(col(value).isNull, 0L).otherwise(1L)).as("dnn"),
-      sum(col("w") * coalesce(col(value).cast(D18), lit(0).cast(D18)))
-        .cast(D18).as("dtotal"))
+    val delta = feed.select(keys.map(col) ++ signedFold(col("w"),
+        col(value)): _*)
+      .groupBy(keys.map(col): _*).agg(sum(col("n")).as("dn"),
+        sum(col("nn")).as("dnn"), sum(col("total")).cast(D18).as("dtotal"))
       .filter(col("dn") =!= 0 || col("dnn") =!= 0 || col("dtotal") =!= 0)
     // merge into the PINNED MV rows: the join output is delta-sized;
     // the MV scan is O(MV) — never O(base). The delta side (touched
@@ -696,77 +723,140 @@ object MatView {
       pinned = true).version
   }
 
-  /** STALE-MV DELTA COMPENSATION — the query-time half of [[refresh]]'s
-    * fold algebra: the MV snapshot ⊕ the base's signed-feed tail
-    * (cursor, head], as ONE plan the rewrite rule can substitute for
-    * the base aggregate. Some(df) when every content-changing commit in
-    * the tail published a feed (the exact walk refresh performs — refs
-    * resolve from manifest headers alone); None when any tail commit is
-    * feed-less, in which case the rewrite must fall through to the base
-    * scan. Cost is O(MV) + O(changes since the cursor) at ANY base
-    * size — without this, ONE commit after a refresh sends the
-    * dashboard query back to the full base scan, which at 100 TB is the
-    * MV's entire value gone the moment a row lands. Output columns are
-    * exactly the MV's (key, n, nn, total), so the substitution logic is
-    * shared verbatim with the fresh-serve path; groups whose compensated
-    * count reaches 0 leave, mirroring refresh's op-'D' rule. */
-  private[graft] def compensated(s: SparkSession, mv: String, d: MvDef,
-      cursor: Long, head: Long, mvVer: Long,
-      kb: KeyBounds = KeyBounds.none): Option[DataFrame] = {
-    // the MV rows come from the SAME pinned version the cursor was read
-    // at: snapshot-at-head here would double-count a feed tail that a
-    // concurrent refresh folded between the caller's two reads
-    val mvRows = mvRowsAt(s, mv, mvVer, kb)
-      .select((d.keys.map(col) ++
-        Seq(col("n"), col("nn"), col("total"))): _*)
-    if (cursor == head) return Some(mvRows)
-    // feed-less content change in the tail → cannot compensate
-    val refs = feedRefsE(s, d.base, cursor, head)
-      .getOrElse(return None)
-    if (refs.isEmpty) return Some(mvRows) // content-invariant tail
-    // the same signed algebra as refresh's delta, rendered as fold ROWS
-    // (w, w·nonnull, w·value) so one union + one aggregate telescopes
-    // the MV and however many feeds the tail carries — a PARTIAL
-    // view's stored predicate gates the tail rows exactly like refresh
-    val feedDf = s.read.parquet(refs: _*)
-    val feed = d.pred.fold(feedDf)(feedDf.filter)
-      .select(d.keys.map(col) ++ Seq(
-      col("w").cast("long").as("n"),
-      (col("w").cast("long") *
-        when(col(d.value).isNull, 0L).otherwise(1L)).as("nn"),
-      (col("w") * coalesce(col(d.value).cast(D18), lit(0).cast(D18)))
-        .cast(D18).as("total")): _*)
-    Some(mvRows.unionByName(feed).groupBy(d.keys.map(col): _*)
+  // ---- SERVING: THE ONE FRESHNESS DECISION --------------------------------
+
+  /** The SERVE DECISION, from the log alone: whether the view's
+    * algebra proves its answer at the query's `pinned` versions (table
+    * → version) given its cursors `cur`, and if so the feed refs of
+    * the primary table's tail (cursor, pinned] to fold on top of the
+    * MV rows (Nil: the rows answer as they are). None when:
+    *  - a cursor is AHEAD of its pinned version (the MV cannot answer a
+    *    time-travel read of the past), or the query does not pin the
+    *    table at all (a fold view transplanted since it registered —
+    *    serving the wrong timeline is the one unforgivable rewrite
+    *    bug);
+    *  - a fold, live or join-fact tail holds a content change without
+    *    a published feed;
+    *  - a join-dim tail is not content-invariant (a moved dim
+    *    attribute regroups rows no fact feed mentions — the live kind
+    *    exists for exactly that), or an extrema tail is not (the
+    *    extrema algebra has no signed compensation: a delete can fell
+    *    an extreme only the dirty-group recompute re-derives).
+    * Manifest reads only, never a data file: this runs on the
+    * optimizer path and under the `t.matviews` listing. */
+  private def tailRefs(s: SparkSession, d: ViewDef,
+      cur: ListMap[String, Long], pinned: Map[String, Long])
+      : Option[Seq[String]] = {
+    if (!cur.forall { case (t, c) => pinned.get(t).exists(_ >= c) })
+      return None
+    def refs(t: String) = feedRefsE(s, t, cur(t), pinned(t)).toOption
+    def invariant(t: String) = refs(t).contains(Nil)
+    d match {
+      case x: MvExtremaDef => if (invariant(x.base)) Some(Nil) else None
+      case j: MvJoinDef if !j.dims.forall(r => invariant(r.dim)) => None
+      case _ => refs(cur.head._1)
+    }
+  }
+
+  /** The view's rows at the query's `pinned` versions (table → version;
+    * every table the view reads), in the view's own vocabulary — the
+    * frame the rewrite substitutes for the base aggregate. None
+    * whenever [[tailRefs]] cannot prove the answer; the rewrite then
+    * falls through to the base scan. A stale fold, join or live view
+    * serves its MV rows ⊕ the signed-feed tail — [[refresh]]'s fold as
+    * a plan fragment, O(MV) + O(changes since the cursor) at ANY base
+    * size; without it, ONE commit after a refresh sends the dashboard
+    * back to the full base scan. The MV rows come from the SAME pinned
+    * version the cursors were read at, and `kb` prunes the MV's own
+    * files (a live view's MV rows are stored at the fact-key grain, so
+    * its bounds do not apply). Columns: (keys, n, nn, total) for
+    * fold, join and live views, (keys, n, nn, vmin, vmax) for extrema;
+    * a group whose compensated count reaches 0 leaves, mirroring
+    * refresh's op-'D' rule. */
+  private[graft] def rowsAt(s: SparkSession, mv: String, d: ViewDef,
+      pinned: Map[String, Long], kb: KeyBounds = KeyBounds.none)
+      : Option[DataFrame] = {
+    val (mvVer, cur) = cursors(s, mv, d)
+    tailRefs(s, d, cur, pinned).map { refs =>
+      def rows(keys: Seq[String], kb: KeyBounds, cols: Seq[String]) =
+        mvRowsAt(s, mv, mvVer, kb).select((keys ++ cols).map(col): _*)
+      // MV rows ⊕ the signed tail rows, one union + one aggregate
+      def withTail(keys: Seq[String], mvRows: DataFrame,
+          tail: => DataFrame) =
+        if (refs.isEmpty) mvRows
+        else telescope(keys, mvRows.unionByName(tail))
+      val fold = Seq("n", "nn", "total")
+      d match {
+        case x: MvExtremaDef =>
+          rows(x.keys, kb, Seq("n", "nn", "vmin", "vmax"))
+        case f: MvDef => withTail(f.keys, rows(f.keys, kb, fold),
+          predFeed(s, refs, f.pred).select(f.keys.map(col) ++
+            signedFold(col("w"), col(f.value)): _*))
+        // each signed fact row re-joins the dims at the pinned versions
+        // to find its group
+        case j: MvJoinDef => withTail(j.keys, rows(j.keys, kb, fold),
+          enrichWithDims(s, j, predFeed(s, refs, j.pred),
+            j.dims.map(r => pinned(r.dim)),
+            signedFold(col("f.w"), col(s"f.${j.value}"))))
+        // the fact-key grain compensates like a fold view, then joins
+        // the dims back at the QUERY's pinned versions — any dim state
+        // (current, moved, time-travelled) serves — and re-groups to
+        // the declared keys
+        case LiveDef(j, grain) =>
+          val sub = withTail(grain, rows(grain, KeyBounds.none, fold),
+            predFeed(s, refs, j.pred).filter(joinKeysPresent(j))
+              .select(grain.map(col) ++
+                signedFold(col("w"), col(j.value)): _*))
+          telescope(j.keys, enrichWithDims(s, j, sub,
+            j.dims.map(r => pinned(r.dim)),
+            fold.map(c => col(s"f.$c").as(c))))
+      }
+    }
+  }
+
+  /** A signed feed row as fold columns: n = w, nn = w·nonnull,
+    * total = w·value — the algebra refresh and serving share. */
+  private def signedFold(w: Column, value: Column): Seq[Column] =
+    Seq(w.cast("long").as("n"),
+      (w.cast("long") * when(value.isNull, 0L).otherwise(1L)).as("nn"),
+      (w * coalesce(value.cast(D18), lit(0).cast(D18))).cast(D18)
+        .as("total"))
+
+  /** Fold rows summed per `keys` group, emptied groups dropped. */
+  private def telescope(keys: Seq[String], rows: DataFrame): DataFrame =
+    rows.groupBy(keys.map(col): _*)
       .agg(sum(col("n")).as("n"), sum(col("nn")).as("nn"),
         sum(col("total")).cast(D18).as("total"))
-      .filter(col("n") =!= 0L))
-  }
+      .filter(col("n") =!= 0L)
+
+  /** A live star view's row-local membership: fact rows with a NULL
+    * join key never meet a dim row in the served inner join, so create,
+    * refresh and serving all exclude them. */
+  private def joinKeysPresent(j: MvJoinDef): Column =
+    j.dims.map(r => col(r.factKey).isNotNull).reduce(_ && _)
 
   // ---- JOIN MATERIALIZED VIEWS ---------------------------------------------
 
-  /** A materialized aggregate OVER A JOIN — the q03/q06 dashboard shape
-    * (fact ⋈ dim, GROUP BY dim attributes, aggregate a fact measure).
-    * The honest incremental contract: FACT-side changes fold from the
-    * fact's published signed feeds (each feed row joins to the dim to
-    * find its group — the dim is the lookup the fold algebra needs);
-    * ANY dim-side content change past the MV's dim cursor REFUSES
-    * refresh and disqualifies serving (a changed dim attribute moves
-    * whole groups in ways no fact feed mentions — recompute is the only
-    * sound answer, and loud beats silent). Dim maintenance commits
-    * (compact/zorder/…) are content-invariant and advance the dim
-    * cursor for free. `keys` are DIM columns; `value` is a FACT column;
-    * fact rows whose key has no dim match fold to nothing — exactly the
-    * inner join's semantics. */
   /** One dimension of a star-join MV: the dim table's location and the
     * fact→dim equality it joins on. */
   case class MvDimRef(dim: String, factKey: String, dimKey: String)
 
-  /** The star definition: fact ⋈ dim_0 ⋈ … ⋈ dim_{n-1}, each dim on its
-    * own equality, grouping keys drawn from the dims (each key column
-    * must be unique across the dims so ownership is unambiguous —
-    * validated at create, re-resolved via [[keyOwnership]] where the
-    * enrichment join needs the owning alias). */
-  /** `pred`: a PARTIAL star view's stored membership rule — a
+  /** A materialized aggregate OVER A JOIN — the q03/q06 dashboard shape:
+    * fact ⋈ dim_0 ⋈ … ⋈ dim_{n-1}, each dim on its own equality, GROUP
+    * BY dim (or fact) attributes, aggregate a fact measure. Each key
+    * column must live on exactly one side so ownership is unambiguous —
+    * validated at create, re-resolved via [[resolveOwners]] where the
+    * enrichment join needs the owning alias. FACT-side changes fold
+    * from the fact's published signed feeds (each feed row joins the
+    * dims to find its group); DIM-side changes fold from the dims'
+    * feeds at refresh ([[refreshJoin]]), but disqualify serving until
+    * then (a changed dim attribute moves whole groups in ways no fact
+    * feed mentions). Dim maintenance commits (compact/zorder/…) are
+    * content-invariant and advance the dim cursor for free. Fact rows
+    * whose key has no dim match fold to nothing — exactly the inner
+    * join's semantics.
+    *
+    * `pred`: a PARTIAL star view's stored membership rule — a
     * deterministic, subquery-free predicate over FACT columns only
     * (fact-side membership is row-local on the fact log, so it folds
     * exactly like the single-table partial view: filter the create
@@ -861,12 +951,6 @@ object MatView {
     }.toMap
   }
 
-  /** The per-dim cursor metric name: dim 0 keeps the original
-    * `mv_dim_version` (single-dim views are unchanged on disk), later
-    * dims suffix their index. */
-  private[graft] def dimCursorMetric(i: Int): String =
-    if (i == 0) "mv_dim_version" else s"mv_dim_version_$i"
-
   /** Single-dim [[createJoinStar]] — the common star has one dim. */
   def createJoin(s: SparkSession, mv: String, fact: String, dim: String,
       factKey: String, dimKey: String, keys: Seq[String], value: String,
@@ -877,20 +961,16 @@ object MatView {
   /** Create the star MV: ONE full compute of fact ⋈ dims at every
     * table's current version — the last time any is scanned whole. The
     * fact cursor and one cursor PER DIM ride the create commit's
-    * metrics, so refresh/serve freshness is decided by the logs alone. */
-  def createJoinStar(s: SparkSession, mv: String, fact: String,
-      dims: Seq[MvDimRef], keys: Seq[String], value: String,
-      aggs: Seq[String] = Seq("count", "sum", "avg")): Long =
-    createJoinStar(s, mv, fact, dims, keys, value, aggs, pred = None)
-
-  /** [[createJoinStar]] of a PARTIAL star: only fact rows satisfying
-    * `pred` (row-local SQL over FACT columns — `price > 100`) fold.
-    * Validated against the FACT snapshot alone: a dim-column reference
+    * metrics, so refresh/serve freshness is decided by the logs alone.
+    * `pred` makes the star PARTIAL: only fact rows satisfying it
+    * (row-local SQL over FACT columns — `price > 100`) fold. It is
+    * validated against the FACT snapshot alone: a dim-column reference
     * refuses — dim-dependent membership moves when the dim moves, and
     * no fact feed mentions that. */
   def createJoinStar(s: SparkSession, mv: String, fact: String,
       dims: Seq[MvDimRef], keys: Seq[String], value: String,
-      aggs: Seq[String], pred: Option[String]): Long = {
+      aggs: Seq[String] = Seq("count", "sum", "avg"),
+      pred: Option[String] = None): Long = {
     validateShape(keys, aggs)
     require(dims.nonEmpty, "a join MV needs at least one dim")
     require(dims.map(_.dim).distinct.size == dims.size,
@@ -917,35 +997,14 @@ object MatView {
       case (acc, (r, i)) =>
         acc.join(TxnTable.snapshot(s, r.dim, dvs(i)).alias(s"d$i"),
           col(s"f.${r.factKey}") === col(s"d$i.${r.dimKey}"))
-    }.select(keys.map(k =>
-      (if (owner(k) < 0) col(s"f.$k") else col(s"d${owner(k)}.$k"))
-        .as(k)) :+
+    }.select(keys.map(k => keyCol(owner, k).as(k)) :+
       col(s"f.$value").as(value): _*)
     val v = commitMvRows(s, mv, joined, keys, value,
-      ("mv_base_version" -> fv) +:
-        dvs.zipWithIndex.map { case (dv, i) => dimCursorMetric(i) -> dv })
+      cursorMetrics(d0, ListMap(fact -> fv) ++ dims.map(_.dim).zip(dvs)))
     writeDefFile(s, mv, "_mvj", starLines(d0, pred.toSeq))
     v
   }
 
-  /** True iff every commit in `(from, to]` of `table` provably changed
-    * no row content — maintenance ops, or changes marked change_noop. */
-  private def contentInvariantRange(s: SparkSession, table: String,
-      from: Long, to: Long): Boolean =
-    (from + 1 to to).forall { v =>
-      val m = TxnTable.manifest(s, table, v)
-      ContentInvariantOps(m.op) ||
-        m.metrics.get("change_noop").contains(1L)
-    }
-
-  /** Chain-join a fact-rowed frame (alias "f") to every dim at the
-    * given versions and project the grouping keys (from their owning
-    * aliases) plus `extra` fact-side columns. The inner joins drop
-    * unmatched fact keys — exactly the base join's semantics — and the
-    * result is feed-sized ⋈ dims, never O(fact). Key ownership resolves
-    * against the SAME pinned snapshots being joined (one construction
-    * each), so a dim schema drift since create refuses with its own
-    * message instead of a misleading create-time one. */
   /** Key-column → owning-side-index (−1 = fact) against the FRAMES
     * BEING JOINED — the refresh-time twin of the create-time
     * [[keyOwnership]], shared by [[enrichWithDims]] and
@@ -977,13 +1036,20 @@ object MatView {
 
   /** The owning alias' key column: `f` for a fact-owned key, `d<i>`
     * for a dim-owned one. */
-  private def keyCol(owner: Map[String, Int], k: String)
-      : org.apache.spark.sql.Column =
+  private def keyCol(owner: Map[String, Int], k: String): Column =
     if (owner(k) < 0) col(s"f.$k") else col(s"d${owner(k)}.$k")
 
+  /** Chain-join a fact-rowed frame (alias "f") to every dim at the
+    * given versions and project the grouping keys (from their owning
+    * aliases) plus `extra` fact-side columns. The inner joins drop
+    * unmatched fact keys — exactly the base join's semantics — and the
+    * result is feed-sized ⋈ dims, never O(fact). Key ownership resolves
+    * against the SAME pinned snapshots being joined (one construction
+    * each), so a dim schema drift since create refuses with its own
+    * message instead of a misleading create-time one. */
   private def enrichWithDims(s: SparkSession, d: MvJoinDef,
       feed: DataFrame, dimVers: Seq[Long],
-      extra: Seq[org.apache.spark.sql.Column]): DataFrame = {
+      extra: Seq[Column]): DataFrame = {
     val dimSnaps = d.dims.indices.map(i =>
       TxnTable.snapshot(s, d.dims(i).dim, dimVers(i)))
     val owner = resolveOwners(d, i =>
@@ -994,7 +1060,7 @@ object MatView {
     }.select(d.keys.map(k => keyCol(owner, k).as(k)) ++ extra: _*)
   }
 
-  /** Incremental refresh of a star MV: fold the FACT's signed-feed tail
+  /** [[refresh]]'s fold for a star MV: fold the FACT's signed-feed tail
     * — each feed row joined to the dim snapshots to recover its group —
     * into the MV, and fold each DIM's signed-feed tail (the SCD type-1
     * shape: a dim attribute update moves whole groups) by re-grouping
@@ -1018,49 +1084,18 @@ object MatView {
     * total` metrics on the refresh commit carry the prune evidence.
     * Cost is O(fact changes ⋈ dims) + O(dim changes ⋈ touched fact
     * files) + O(MV) — never O(fact). */
-  private def refreshJoin(s: SparkSession, mv: String, d: MvJoinDef)
-      : RefreshResult = {
-    // same one-version pin as refresh: cursors, rows and the merge CAS
-    // all read MV state at mvVer, so racing refreshes fail loudly
-    val mvVer = TxnTable.currentVersion(s, mv)
-    val last = cursorAt(s, mv, mvVer, "mv_base_version")
-    val dimCurs = d.dims.indices.map(i =>
-      cursorAt(s, mv, mvVer, dimCursorMetric(i)))
-    val head = TxnTable.currentVersion(s, d.fact)
-    val dimHeads = d.dims.map(r => TxnTable.currentVersion(s, r.dim))
-    require(head >= last, s"${d.fact} is at version $head, behind the " +
-      s"MV's cursor $last — the fact was restored/recreated; recompute " +
-      "the MV")
-    // per-dim feed refs straight from THE single site (feedRefsE via
-    // feedRefs): a content-invariant tail resolves to Nil (cursor
-    // advances for free), a cdc tail to its signed refs, and a
-    // feed-less content change refuses loudly inside feedRefs — the
-    // honest remainder of the old blanket dim refusal. One manifest
-    // walk per dim, no separate invariance pre-pass.
-    val dimFeedRefs: Seq[Seq[String]] = d.dims.indices.map { i =>
-      require(dimHeads(i) >= dimCurs(i), s"${d.dims(i).dim} is at " +
-        s"version ${dimHeads(i)}, behind the MV's dim cursor " +
-        s"${dimCurs(i)} — the dim was restored/recreated; recompute " +
-        "the MV")
-      feedRefs(s, d.dims(i).dim, dimCurs(i), dimHeads(i))
-    }
-    if (head == last && dimHeads == dimCurs)
-      return RefreshResult(mvVer, last, 0)
-    val refs = feedRefs(s, d.fact, last, head)
-    val folded = (head - last).toInt
-    val metrics = ("mv_base_version" -> head) +:
-      dimHeads.zipWithIndex.map { case (h, i) => dimCursorMetric(i) -> h }
+  private def refreshJoin(s: SparkSession, mv: String, d: MvJoinDef,
+      mvVer: Long, cur: ListMap[String, Long], heads: ListMap[String, Long],
+      refs: ListMap[String, Seq[String]], metrics: Seq[(String, Long)])
+      : Long = {
+    val dimCurs = d.dims.map(r => cur(r.dim))
+    val dimHeads = d.dims.map(r => heads(r.dim))
+    // a PARTIAL star folds only the fact feed rows satisfying its
+    // stored predicate (the fold view's rule, verbatim)
     val factTerm =
-      if (refs.isEmpty) None
-      // a PARTIAL star folds only the feed rows satisfying its stored
-      // predicate — row-local, so a −old/+new pair crossing the
-      // boundary folds as exactly the membership change it is (the
-      // fold view's rule, verbatim)
-      else {
-        val feedDf = s.read.parquet(refs: _*)
-        Some(enrichWithDims(s, d, d.pred.fold(feedDf)(feedDf.filter),
-          dimHeads, Seq(col(s"f.${d.value}").as(d.value), col("f.w"))))
-      }
+      if (refs(d.fact).isEmpty) None
+      else Some(enrichWithDims(s, d, predFeed(s, refs(d.fact), d.pred),
+        dimHeads, Seq(col(s"f.${d.value}").as(d.value), col("f.w"))))
     // prune accounting across the dim terms: kept = fact-file READS
     // the point probes performed (a file shared by two probes counts
     // twice — the true read cost), total = the fact-file count a naive
@@ -1069,29 +1104,25 @@ object MatView {
     // evidence; −1/−1 reports the broadcast-semi-join fallback.
     var keptSum = 0L; var totalSum = 0L; var unpruned = false
     val dimTerms = d.dims.indices.flatMap { i =>
-      if (dimFeedRefs(i).isEmpty) None
+      val dimRefs = refs(d.dims(i).dim)
+      if (dimRefs.isEmpty) None
       else {
-        val (term, kept, total) = dimDeltaTerm(s, d, i, dimFeedRefs(i),
-          last, dimCurs, dimHeads)
+        val (term, kept, total) = dimDeltaTerm(s, d, i, dimRefs,
+          cur(d.fact), dimCurs, dimHeads)
         if (kept < 0) unpruned = true
         else { keptSum += kept; totalSum += total }
         Some(term)
       }
     }
-    val terms = factTerm.toSeq ++ dimTerms
-    if (terms.isEmpty)
-      // content-invariant range on EVERY side
-      return RefreshResult(advanceCursor(s, mv, mvVer, metrics), head,
-        folded)
     val scdMetrics =
       if (dimTerms.isEmpty) Nil
       else if (unpruned) Seq("mv_scd_files_kept" -> -1L,
         "mv_scd_files_total" -> -1L)
       else Seq("mv_scd_files_kept" -> keptSum,
         "mv_scd_files_total" -> totalSum)
-    val v = foldAndMerge(s, mv, mvVer, d.keys, d.value,
-      terms.reduce(_ unionByName _), metrics ++ scdMetrics)
-    RefreshResult(v, head, folded)
+    foldAndMerge(s, mv, mvVer, d.keys, d.value,
+      (factTerm.toSeq ++ dimTerms).reduce(_ unionByName _),
+      metrics ++ scdMetrics)
   }
 
   /** One dim's delta term of the star telescoping: the fact slice at
@@ -1107,8 +1138,8 @@ object MatView {
       dimHeads: Seq[Long]): (DataFrame, Long, Long) = {
     val r = d.dims(i)
     val dimFeed = s.read.parquet(refs: _*)
-    val (factSlice0, kept, total) = prunedFactSlice(s, d.fact, factVer,
-      r.factKey, dimFeed.select(col(r.dimKey)).distinct())
+    val (factSlice0, kept, total) = prunedSlice(s, d.fact, factVer,
+      Seq(r.factKey), dimFeed.select(col(r.dimKey)).distinct())
     // a PARTIAL star's dim-delta term re-groups only the SLICE's fact
     // rows: the predicate is row-local on the fact, so it filters the
     // key-pruned slice exactly like the create scan
@@ -1140,93 +1171,53 @@ object MatView {
       kept, total)
   }
 
-  /** The fact rows at `factVer` whose `factKey` is one of `keys` (a
-    * dim-feed-sized frame of changed dim keys), manifest-pruned when
-    * the shape allows: ≤16 long/string keys probe per key through
+  /** The rows of `table` at `ver` whose `cols` match a row of `keys` —
+    * a small frame of changed keys (a dim feed's join keys, an extrema
+    * view's dirty groups) — manifest-pruned when the shape allows: one
+    * long or string column and ≤16 keys probe per key through
     * [[TxnTable.snapshotRange]]/[[TxnTable.snapshotStrRange]] (row-
     * exact: the residual point filter applies inside surviving files,
-    * so the union over DISTINCT keys never duplicates a row);
-    * otherwise one broadcast left-semi join over the pinned snapshot —
-    * map-only, but every file opens (kept = −1 reports the fallback
-    * honestly). */
-  private def prunedFactSlice(s: SparkSession, fact: String,
-      factVer: Long, factKey: String, keys: DataFrame)
-      : (DataFrame, Long, Long) = {
-    val snap = TxnTable.snapshot(s, fact, factVer)
-    val kt = snap.schema(factKey).dataType
-    val few = keys.limit(17).collect()
-    if (few.isEmpty)
-      // an empty cdc feed (a change commit that named zero rows):
-      // the term is empty, no fact file read at all
-      return (snap.filter(lit(false)), 0L, 0L)
-    // probes only when they can BITE: the key frame's own type must
-    // match the fact column's (a BIGINT fact key probed with the dim's
-    // INT values would CCE on collect — the equi-join casts, Row.getLong
-    // does not), and the fact's manifest must carry stats on factKey —
-    // a stat-less fact keeps every file per probe, turning 16 probes
-    // into 16 full scans where the fallback's ONE map-only pass wins
-    val feedKt = keys.schema.head.dataType
-    val m = TxnTable.manifest(s, fact, factVer)
-    val hasStats =
-      if (kt == org.apache.spark.sql.types.LongType)
-        m.idxCols.contains(factKey)
-      else m.strIdxCols.contains(factKey)
-    if (few.length <= 16 && feedKt == kt && hasStats &&
-      kt == org.apache.spark.sql.types.LongType) {
-      val probes = few.filterNot(_.isNullAt(0)).map(_.getLong(0))
-        .map(k => TxnTable.snapshotRange(s, fact, factKey, k, k, factVer))
-      if (probes.isEmpty) return (snap.filter(lit(false)), 0L, 0L)
-      (probes.map(_._1).reduce(_ unionByName _),
-        probes.map(_._2.toLong).sum, probes.map(_._3.toLong).max)
-    } else if (few.length <= 16 && feedKt == kt && hasStats &&
-      kt == org.apache.spark.sql.types.StringType) {
-      val probes = few.filterNot(_.isNullAt(0)).map(_.getString(0))
-        .map(k =>
-          TxnTable.snapshotStrRange(s, fact, factKey, k, k, factVer))
-      if (probes.isEmpty) return (snap.filter(lit(false)), 0L, 0L)
-      (probes.map(_._1).reduce(_ unionByName _),
-        probes.map(_._2.toLong).sum, probes.map(_._3.toLong).max)
-    } else
-      (snap.alias("s").join(
-        broadcast(keys.toDF(factKey).alias("ck")),
-        col(s"s.$factKey") === col(s"ck.$factKey"), "left_semi"),
+    * so the union over DISTINCT keys never duplicates a row); otherwise
+    * one broadcast left-semi join over the pinned snapshot — map-only,
+    * but every file opens (kept = −1 reports the fallback honestly).
+    * Probes run only when they can BITE: the key frame's own type must
+    * match the column's (a BIGINT column probed with INT values would
+    * CCE on collect — the equi-join casts, Row.getLong does not), and
+    * the manifest must carry stats on the column — a stat-less table
+    * keeps every file per probe, turning 16 probes into 16 full scans
+    * where the fallback's ONE map-only pass wins. Returns (slice,
+    * files kept, files total). */
+  private def prunedSlice(s: SparkSession, table: String, ver: Long,
+      cols: Seq[String], keys: DataFrame): (DataFrame, Long, Long) = {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val snap = TxnTable.snapshot(s, table, ver)
+    val c = cols.head
+    val kt = snap.schema(c).dataType
+    lazy val m = TxnTable.manifest(s, table, ver)
+    val probeable = cols.size == 1 && keys.schema.head.dataType == kt &&
+      (kt match {
+        case LongType => m.idxCols.contains(c)
+        case StringType => m.strIdxCols.contains(c)
+        case _ => false
+      })
+    val few =
+      if (probeable) keys.limit(17).collect()
+      else Array.empty[org.apache.spark.sql.Row]
+    if (!probeable || few.length > 16)
+      (snap.join(broadcast(keys.toDF(cols: _*)), cols, "left_semi"),
         -1L, -1L)
-  }
-
-  /** [[compensated]] for a star MV: MV rows ⊕ (fact feed tail ⋈ dims).
-    * Requires EVERY dim content-identical between its cursor and the
-    * query's pinned version — otherwise None (the groups themselves
-    * may have moved; only the base join answers). */
-  private[graft] def compensatedJoin(s: SparkSession, mv: String,
-      d: MvJoinDef, cursor: Long, factPinned: Long,
-      dimCursors: Seq[Long], dimPinned: Seq[Long], mvVer: Long,
-      kb: KeyBounds = KeyBounds.none)
-      : Option[DataFrame] = {
-    if (d.dims.indices.exists(i => !contentInvariantRange(s,
-      d.dims(i).dim, dimCursors(i), dimPinned(i)))) return None
-    val mvRows = mvRowsAt(s, mv, mvVer, kb)
-      .select((d.keys.map(col) ++
-        Seq(col("n"), col("nn"), col("total"))): _*)
-    if (cursor == factPinned) return Some(mvRows)
-    // feed-less fact content change in the tail → cannot compensate
-    val refs = feedRefsE(s, d.fact, cursor, factPinned)
-      .getOrElse(return None)
-    if (refs.isEmpty) return Some(mvRows)
-    // a PARTIAL star's compensation gates the fact tail by the stored
-    // predicate — the same row-local rule refresh folds by
-    val feedDf = s.read.parquet(refs: _*)
-    val feed = enrichWithDims(s, d,
-      d.pred.fold(feedDf)(feedDf.filter),
-      dimPinned,
-      Seq(col("f.w").cast("long").as("n"),
-        (col("f.w").cast("long") *
-          when(col(s"f.${d.value}").isNull, 0L).otherwise(1L)).as("nn"),
-        (col("f.w") * coalesce(col(s"f.${d.value}").cast(D18),
-          lit(0).cast(D18))).cast(D18).as("total")))
-    Some(mvRows.unionByName(feed).groupBy(d.keys.map(col): _*)
-      .agg(sum(col("n")).as("n"), sum(col("nn")).as("nn"),
-        sum(col("total")).cast(D18).as("total"))
-      .filter(col("n") =!= 0L))
+    else {
+      val probes = few.filterNot(_.isNullAt(0)).map(k => kt match {
+        case LongType => TxnTable.snapshotRange(s, table, c,
+          k.getLong(0), k.getLong(0), ver)
+        case _ => TxnTable.snapshotStrRange(s, table, c,
+          k.getString(0), k.getString(0), ver)
+      })
+      // no key at all (an empty cdc feed): no file is read
+      if (probes.isEmpty) (snap.filter(lit(false)), 0L, 0L)
+      else (probes.map(_._1).reduce(_ unionByName _),
+        probes.map(_._2.toLong).sum, probes.map(_._3.toLong).max)
+    }
   }
 
   // ---- LIVE (KEY-GRAINED) STAR MATERIALIZED VIEWS --------------------------
@@ -1234,7 +1225,7 @@ object MatView {
   /** The LIVE star view: the fold materialized at the FACT-KEY GRAIN —
     * grouped by the dims' join keys (plus any fact-owned group keys)
     * instead of the dim attributes — with the dims joined back AT
-    * QUERY TIME. The payoff is the property [[compensatedJoin]] can
+    * QUERY TIME. The payoff is the property a join view's serve can
     * never have: dim movement NEVER stales the view. An SCD type-1
     * attribute update regroups the serve-time join-back (the dims are
     * read at the query's own pinned versions), so the dashboard stays
@@ -1275,19 +1266,13 @@ object MatView {
     * excluded at the fold: the inner join the view serves drops them
     * identically, at create, at every refresh, and at serve — the
     * three sites can never disagree because membership is the same
-    * row-local non-null test. */
+    * row-local non-null test ([[joinKeysPresent]]). `pred` makes the
+    * view PARTIAL: only fact rows satisfying it (row-local SQL over FACT
+    * columns) fold into the grain — the partial-star rule verbatim. */
   def createStarLive(s: SparkSession, mv: String, fact: String,
       dims: Seq[MvDimRef], keys: Seq[String], value: String,
-      aggs: Seq[String] = Seq("count", "sum", "avg")): Long =
-    createStarLive(s, mv, fact, dims, keys, value, aggs, pred = None)
-
-  /** [[createStarLive]] of a PARTIAL live view: only fact rows
-    * satisfying `pred` (row-local SQL over FACT columns) fold into the
-    * grain — the partial-star rule verbatim, composed with the live
-    * kind's dims-join-back-at-query-time property. */
-  def createStarLive(s: SparkSession, mv: String, fact: String,
-      dims: Seq[MvDimRef], keys: Seq[String], value: String,
-      aggs: Seq[String], pred: Option[String]): Long = {
+      aggs: Seq[String] = Seq("count", "sum", "avg"),
+      pred: Option[String] = None): Long = {
     validateShape(keys, aggs)
     require(dims.nonEmpty, "a live star MV needs at least one dim")
     require(dims.map(_.dim).distinct.size == dims.size,
@@ -1325,98 +1310,12 @@ object MatView {
             "keyed refresh merge can file-prune")
       }
     }
-    val src = fsnap.filter(dims.map(r => col(r.factKey).isNotNull)
-      .reduce(_ && _))
+    val src = fsnap.filter(joinKeysPresent(d0))
     val v = commitMvRows(s, mv, src, grain, value,
       Seq("mv_base_version" -> fv))
     writeDefFile(s, mv, "_mvl",
       starLines(d0, grain.mkString(",") +: pred.toSeq))
     v
-  }
-
-  /** Incremental refresh of a live star view: the FACT's signed-feed
-    * tail folds by the grain — no dim is opened, no dim cursor exists.
-    * Feed rows with a NULL join key are excluded exactly like create's
-    * scan (the served inner join never sees them). */
-  private def refreshLive(s: SparkSession, mv: String, d: MvJoinDef,
-      grain: Seq[String]): RefreshResult = {
-    val mvVer = TxnTable.currentVersion(s, mv)
-    val last = cursorAt(s, mv, mvVer, "mv_base_version")
-    val head = TxnTable.currentVersion(s, d.fact)
-    require(head >= last, s"${d.fact} is at version $head, behind the " +
-      s"MV's cursor $last — the fact was restored/recreated; recompute " +
-      "the MV")
-    if (head == last) return RefreshResult(mvVer, last, 0)
-    val refs = feedRefs(s, d.fact, last, head)
-    val folded = (head - last).toInt
-    if (refs.isEmpty)
-      return RefreshResult(advanceCursor(s, mv, mvVer,
-        Seq("mv_base_version" -> head)), head, folded)
-    // a PARTIAL live view gates the feed by its stored predicate —
-    // the partial-star rule verbatim (row-local membership)
-    val feed0 = s.read.parquet(refs: _*)
-      .filter(d.dims.map(r => col(r.factKey).isNotNull).reduce(_ && _))
-    val feed = d.pred.fold(feed0)(feed0.filter)
-    val v = foldAndMerge(s, mv, mvVer, grain, d.value, feed,
-      Seq("mv_base_version" -> head))
-    RefreshResult(v, head, folded)
-  }
-
-  /** [[compensated]] for a live star view: (sub-view ⊕ fact feed tail)
-    * ⋈ dims at the QUERY's pinned versions, re-grouped to the declared
-    * keys. The dims impose NO freshness condition — they are joined
-    * live, so any dim state (current, moved, time-travelled) serves —
-    * and the fact tail compensates exactly like the fold view's.
-    * Output columns are the MV vocabulary (keys, n, nn, total), so the
-    * rewrite's substitution tail is shared verbatim. */
-  private[graft] def compensatedLive(s: SparkSession, mv: String,
-      d: MvJoinDef, grain: Seq[String], cursor: Long, factPinned: Long,
-      dimPinned: Seq[Long], mvVer: Long): Option[DataFrame] = {
-    val mvRows = TxnTable.snapshot(s, mv, mvVer)
-      .select((grain.map(col) ++
-        Seq(col("n"), col("nn"), col("total"))): _*)
-    val subRows =
-      if (cursor == factPinned) mvRows
-      else {
-        val refs = feedRefsE(s, d.fact, cursor, factPinned)
-          .getOrElse(return None)
-        if (refs.isEmpty) mvRows
-        else {
-          val feed0 = s.read.parquet(refs: _*)
-            .filter(d.dims.map(r => col(r.factKey).isNotNull)
-              .reduce(_ && _))
-          val feed = d.pred.fold(feed0)(feed0.filter)
-            .select(grain.map(col) ++ Seq(
-              col("w").cast("long").as("n"),
-              (col("w").cast("long") *
-                when(col(d.value).isNull, 0L).otherwise(1L)).as("nn"),
-              (col("w") * coalesce(col(d.value).cast(D18),
-                lit(0).cast(D18))).cast(D18).as("total")): _*)
-          mvRows.unionByName(feed).groupBy(grain.map(col): _*)
-            .agg(sum(col("n")).as("n"), sum(col("nn")).as("nn"),
-              sum(col("total")).cast(D18).as("total"))
-            .filter(col("n") =!= 0L)
-        }
-      }
-    val dimSnaps = d.dims.indices.map(i =>
-      TxnTable.snapshot(s, d.dims(i).dim, dimPinned(i)))
-    // ownership against the frames being joined (schema drift refuses
-    // with resolveOwners' own message, like every join-back site)
-    val owner = resolveOwners(d, i =>
-      if (i < 0) subRows.columns.toSeq else dimSnaps(i).columns.toSeq)
-    val joined = d.dims.indices.foldLeft(subRows.alias("f")) {
-      (acc, i) =>
-        acc.join(dimSnaps(i).alias(s"d$i"),
-          col(s"f.${d.dims(i).factKey}") ===
-            col(s"d$i.${d.dims(i).dimKey}"))
-    }
-    Some(joined.select(d.keys.map(k => keyCol(owner, k).as(k)) ++
-        Seq(col("f.n").as("n"), col("f.nn").as("nn"),
-          col("f.total").as("total")): _*)
-      .groupBy(d.keys.map(col): _*)
-      .agg(sum(col("n")).as("n"), sum(col("nn")).as("nn"),
-        sum(col("total")).cast(D18).as("total"))
-      .filter(col("n") =!= 0L))
   }
 
   // ---- MIN/MAX (EXTREMA) MATERIALIZED VIEWS --------------------------------
@@ -1455,23 +1354,20 @@ object MatView {
 
   /** Create the extrema MV: rows are (keys…, n, nn, vmin, vmax), the
     * extremes carried in the value's OWN type — MIN/MAX do no
-    * arithmetic, so the fold's lossless-decimal gate does not apply. */
+    * arithmetic, so the fold's lossless-decimal gate does not apply.
+    * `pred` makes the view PARTIAL — only base rows satisfying the
+    * stored row-local predicate contribute (the `WHERE price > 1000`
+    * worst-latency pane). The same exactness argument as the fold's
+    * partial view (membership is row-local, an update is a −old/+new
+    * pair evaluated independently) extends to the dirty path: the
+    * dirty test sees only IN-SLICE feed rows, and the dirty-group
+    * recompute re-derives extremes from the base's PREDICATE SLICE —
+    * the pruned point probes stay sound because a probe is a
+    * key-superset read with the predicate applied before the
+    * re-aggregation. */
   def createExtrema(s: SparkSession, mv: String, base: String,
-      keys: Seq[String], value: String): Long =
-    createExtrema(s, mv, base, keys, value, None)
-
-  /** `pred` makes the extrema view PARTIAL — only base rows satisfying
-    * the stored row-local predicate contribute (the `WHERE price >
-    * 1000` worst-latency pane). The same exactness argument as the
-    * fold's partial view (membership is row-local, an update is a
-    * −old/+new pair evaluated independently) extends to the dirty
-    * path: the dirty test sees only IN-SLICE feed rows, and the
-    * dirty-group recompute re-derives extremes from the base's
-    * PREDICATE SLICE — the pruned point probes stay sound because a
-    * probe is a key-superset read with the predicate applied before
-    * the re-aggregation. */
-  def createExtrema(s: SparkSession, mv: String, base: String,
-      keys: Seq[String], value: String, pred: Option[String]): Long = {
+      keys: Seq[String], value: String,
+      pred: Option[String] = None): Long = {
     require(keys.nonEmpty, "MV needs at least one grouping key")
     keys.foreach { key =>
       require(!Seq("n", "nn", "vmin", "vmax", "op", "w").contains(key),
@@ -1511,10 +1407,11 @@ object MatView {
     * candidate extreme (d ≥ candMax or d ≤ candMin — conservative
     * under duplicates: a recompute that lands on the same extreme is
     * wasted work, never a wrong answer; a deleted NULL never dirties).
-    * Dirty groups recompute (n, nn, vmin, vmax) from the base AT HEAD —
-    * for a single-key view with few dirty groups, via per-group
-    * stat-pruned point probes (`mv_dirty_files_kept/total` metrics
-    * carry the prune evidence); otherwise one filtered scan. The merge
+    * Dirty groups recompute (n, nn, vmin, vmax) from the base AT HEAD
+    * through [[prunedSlice]] — per-group stat-pruned point probes for a
+    * single stat-bearing key with few dirty groups
+    * (`mv_dirty_files_kept/total` metrics carry the prune evidence),
+    * otherwise one filtered scan (kept = −1). The merge
     * is the same CAS-pinned keyed commit as [[refresh]]'s, and it
     * PUBLISHES ITS OWN SIGNED FEED (−old/+new extrema rows — the merge
     * preimage IS the old side, and the dirty-group recompute knows the
@@ -1523,26 +1420,14 @@ object MatView {
     * "sum of worst-latency per service" pane) at O(changed groups)
     * per level, never O(view). */
   private def refreshExtrema(s: SparkSession, mv: String,
-      d: MvExtremaDef): RefreshResult = {
-    val mvVer = TxnTable.currentVersion(s, mv)
-    val last = cursorAt(s, mv, mvVer, "mv_base_version")
-    val head = TxnTable.currentVersion(s, d.base)
-    require(head >= last, s"${d.base} is at version $head, behind the " +
-      s"MV's cursor $last — the base was restored/recreated; recompute " +
-      "the MV")
-    if (head == last) return RefreshResult(mvVer, last, 0)
-    val refs = feedRefs(s, d.base, last, head)
-    val folded = (head - last).toInt
-    if (refs.isEmpty)
-      return RefreshResult(advanceCursor(s, mv, mvVer,
-        Seq("mv_base_version" -> head)), head, folded)
+      d: MvExtremaDef, mvVer: Long, head: Long, refs: Seq[String],
+      metrics: Seq[(String, Long)]): Long = {
     // a PARTIAL view folds only its slice's membership changes: the
     // signed feed filtered by the stored row-local predicate is exact
     // (−old/+new pairs evaluate independently — a value crossing the
     // boundary folds as the membership change it is), and the dirty
     // test below then sees only in-slice deletes/inserts
-    val feed0 = s.read.parquet(refs: _*)
-    val feed = d.pred.fold(feed0)(feed0.filter)
+    val feed = predFeed(s, refs, d.pred)
     val w = col("w").cast("long")
     val v = col(d.value)
     val delta = feed.groupBy(d.keys.map(col): _*).agg(
@@ -1590,30 +1475,10 @@ object MatView {
     val (changeSet, keptFiles, totalFiles) =
       if (nDirty == 0) (clean, 0L, 0L)
       else {
-        val baseSnap = TxnTable.snapshot(s, d.base, head)
-        val keyType = baseSnap.schema(d.keys.head).dataType
         // per-group stat-pruned point probes when the shape allows —
         // the manifest bounds the files each recompute re-reads
         val (src, kept, total) =
-          if (d.keys.size == 1 && nDirty <= 16 &&
-            keyType == org.apache.spark.sql.types.StringType) {
-            val ks = dirtyKeys.collect().map(_.getString(0))
-            val probes = ks.map(g =>
-              TxnTable.snapshotStrRange(s, d.base, d.keys.head, g, g, head))
-            (probes.map(_._1).reduce(_ unionByName _),
-              probes.map(_._2.toLong).sum, probes.map(_._3.toLong).max)
-          } else if (d.keys.size == 1 && nDirty <= 16 &&
-            keyType == org.apache.spark.sql.types.LongType) {
-            val ks = dirtyKeys.collect().map(_.getLong(0))
-            val probes = ks.map(g =>
-              TxnTable.snapshotRange(s, d.base, d.keys.head, g, g, head))
-            (probes.map(_._1).reduce(_ unionByName _),
-              probes.map(_._2.toLong).sum, probes.map(_._3.toLong).max)
-          } else
-            // the sound fallback: one scan filtered by the dirty key
-            // set (a broadcast semi-join — never a literal tree)
-            (baseSnap.join(broadcast(dirtyKeys), d.keys, "left_semi"),
-              -1L, -1L)
+          prunedSlice(s, d.base, head, d.keys, dirtyKeys)
         // the dirty-group recompute reads the base's PREDICATE SLICE:
         // the probes/semi-join bound WHICH files and keys are read,
         // the predicate then decides membership row-locally — the
@@ -1637,12 +1502,11 @@ object MatView {
               .as("op")): _*)
         (clean.unionByName(dirtyRows), kept, total)
       }
-    val r = TxnTable.applyChangesWithMetrics(s, mv, changeSet, d.keys,
-      Seq("mv_base_version" -> head, "mv_dirty_groups" -> nDirty,
+    TxnTable.applyChangesWithMetrics(s, mv, changeSet, d.keys,
+      metrics ++ Seq("mv_dirty_groups" -> nDirty,
         "mv_dirty_files_kept" -> keptFiles,
         "mv_dirty_files_total" -> totalFiles),
-      cdc = true, expectedVer = mvVer)
-    RefreshResult(r.version, head, folded)
+      cdc = true, expectedVer = mvVer).version
   }
 
   /** op_mv_delete: COPY-ON-WRITE DELETES WITH PUBLISHED FEEDS — closing
@@ -2026,16 +1890,15 @@ object MatView {
     * its kind. Every entry this view already owns goes first: a
     * transplanted fold view re-keys from its branch dir onto the parent,
     * and a stale branch key would make every branch-addressed aggregate
-    * pay a cursor walk just to disqualify, forever. The rule
-    * re-resolves a fold view's effective base per query, so a
+    * pay a cursor walk just to disqualify, forever. The serve decision
+    * re-reads a fold view's cursors per query, so a
     * registration gone stale (a transplant after register) disqualifies
     * rather than serving the wrong timeline — re-register after
     * transplant. */
   def register(s: SparkSession, mv: String): Unit = {
     val d = definition(s, mv)
     val key = d match {
-      case f: MvDef =>
-        effectiveDef(s, mv, f, TxnTable.currentVersion(s, mv))._1.base
+      case _: MvDef => cursors(s, mv, d)._2.head._1
       case _ => keyOf(d.tables)
     }
     deregister(mv)
@@ -2062,9 +1925,9 @@ object MatView {
     * matched one disqualified on dim movement — the live view's reason
     * to exist). */
   private[graft] def registeredLiveFor(fact: String, dims: Seq[String])
-      : Option[(String, MvJoinDef, Seq[String])] =
+      : Option[(String, LiveDef)] =
     registeredAt("live", keyOf(fact +: dims)).collect {
-      case (mv, LiveDef(d, grain)) => (mv, d, grain) }
+      case (mv, l: LiveDef) => (mv, l) }
 
   private[graft] def registeredExtremaFor(base: String)
       : Option[(String, MvExtremaDef)] =
@@ -2109,7 +1972,7 @@ object MatView {
       // a base MATCHES when it is this view, or lives UNDER it (a
       // branch of this view, the transplant shape — the recursive
       // delete below would wipe it too): the same effective-base
-      // reach retentionPins/statusFor apply via mayServe/parentOf
+      // reach retentionPins/statusFor apply via mayRead/parentOf
       def under(b: String): Boolean = b == mv ||
         b.startsWith(s"$mv/")
       val dependents = registry.asScala.values
@@ -2151,48 +2014,32 @@ object MatView {
     kind
   }
 
-  /** True iff base commits `(from, to]` are ALL content-invariant —
-    * the only staleness an extrema MV may serve across: its fold has
-    * no signed compensation (a delete in the tail can fell an extreme
-    * in ways only the dirty-group recompute answers), and peeking at
-    * feed signs would put a data read inside the optimizer. */
-  private[graft] def invariantTail(s: SparkSession, base: String,
-      from: Long, to: Long): Boolean =
-    feedRefsE(s, base, from, to) match {
-      case Right(refs) => refs.isEmpty
-      case Left(_) => false
-    }
-
   private[graft] def registryEmpty: Boolean = registry.isEmpty
 
-  /** Whether a view registered with base `b` COULD effectively serve
-    * `base`: directly, or as a branch view whose parent is `base` (the
-    * transplant shape) — the shared cheap pre-filter before the
-    * per-view cursor walk in [[retentionPins]] and [[statusFor]]. */
-  private def mayServe(b: String, base: String): Boolean = b == base ||
-    (try parentOf(b) == base
-     catch { case _: IllegalArgumentException => false })
-
-  /** The cursor the newest MV commit carries for `metric`. */
-  private def headCursor(s: SparkSession, mv: String,
-      metric: String = "mv_base_version"): Long =
-    cursorAt(s, mv, TxnTable.currentVersion(s, mv), metric)
+  /** Whether view `d` may read `base`'s log — the cheap pre-filter (no
+    * I/O) before the per-view cursor read in [[retentionPins]] and
+    * [[statusFor]]: a fold view over `base` or over a branch of it (the
+    * transplant shape), any other kind naming it among its tables. */
+  private def mayRead(d: ViewDef, base: String): Boolean = d match {
+    case f: MvDef => f.base == base ||
+      (try parentOf(f.base) == base
+       catch { case _: IllegalArgumentException => false })
+    case _ => d.tables.contains(base)
+  }
 
   /** The version pins an MV-RESPECTING retention pass hands to
     * [[TxnTable.vacuum]] / [[TxnTable.expireSnapshots]] for `base`:
-    * for every registered view whose incremental contract READS this
-    * base's log tail, the commits `(cursor, head]`. That is the feed
-    * tail for fold views and join FACTS (the range refresh and
-    * query-time compensation fold), the manifest-header tail for
-    * extrema bases AND join dims (proving a range content-invariant
-    * reads every manifest in it — vacuuming those turns the view
-    * recompute-only just as surely as a lost feed). Fold views match
-    * by their EFFECTIVE base: a transplanted view's registry key may
-    * still be the branch dir while its cursor speaks the parent
-    * timeline, and matching by key alone would leave the parent's
-    * feed tail unpinned while pinning branch versions against the
-    * wrong log. Pinned versions survive the window like tagged ones,
-    * so however aggressive the retention, the registered fleet's
+    * for every registered view whose [[cursors]] include `base`, the
+    * commits `(cursor, head]`. That is the feed tail for fold views and
+    * join and live FACTS (the range refresh and serving fold), the
+    * manifest-header tail for extrema bases AND join dims (proving a
+    * range content-invariant reads every manifest in it — vacuuming
+    * those turns the view recompute-only just as surely as a lost
+    * feed). A live view's dims pin nothing: they join back at query
+    * time from their own snapshots, and no log tail of theirs is read.
+    * A transplanted fold view pins its EFFECTIVE base, the timeline
+    * its cursor speaks. Pinned versions survive the window like tagged
+    * ones, so however aggressive the retention, the registered fleet's
     * refreshes keep working — without this, ONE vacuum(1) on a busy
     * base turns every stale view into a drop-and-recompute (at
     * 100 TB: the full base scan the MV exists to avoid, destroyed by
@@ -2204,128 +2051,49 @@ object MatView {
     import scala.jdk.CollectionConverters._
     // ONE head probe for the vacuum target, shared across every view
     lazy val head = TxnTable.currentVersion(s, base)
-    def tail(cursor: Long): Set[Long] =
-      if (cursor >= head) Set.empty[Long]
-      else (cursor + 1 to head).toSet
     registry.asScala.values.toSeq.flatMap { case (mv, d) =>
-      try d match {
-        case d0: MvDef if mayServe(d0.base, base) =>
-          val (dEff, cursor) = effectiveDef(s, mv, d0,
-            TxnTable.currentVersion(s, mv))
-          if (dEff.base != base) Set.empty[Long] else tail(cursor)
-        // live star views read ONLY the fact's feed tail (the dims
-        // join back at query time from their own snapshots — no log
-        // tail of theirs is ever read, so nothing of theirs needs
-        // pinning); extrema views their base's
-        case _: MvExtremaDef | _: LiveDef if d.tables.head == base =>
-          tail(headCursor(s, mv))
-        case j: MvJoinDef if j.tables.contains(base) =>
-          val mvVer = TxnTable.currentVersion(s, mv)
-          val factPins =
-            if (j.fact != base) Set.empty[Long]
-            else tail(cursorAt(s, mv, mvVer, "mv_base_version"))
-          factPins ++ j.dims.indices.flatMap { i =>
-            if (j.dims(i).dim != base) Set.empty[Long]
-            else tail(cursorAt(s, mv, mvVer, dimCursorMetric(i)))
-          }
-        case _ => Set.empty[Long]
-      } catch { case scala.util.control.NonFatal(_) => Set.empty[Long] }
+      if (!mayRead(d, base)) Nil
+      else try cursors(s, mv, d)._2.get(base).toSeq
+        .flatMap(cursor => cursor + 1 to head)
+      catch { case scala.util.control.NonFatal(_) => Nil }
     }.toSet
   }
 
-  /** One registered view's LOG-decided status snapshot: its primary
-    * cursor (the fold/extrema base cursor; the FACT cursor for join
-    * and live views), that base's head, `fresh` (every cursor at its
-    * head) and `servable` — fresh, or stale in a way the view's own
-    * serving algebra provably covers: a feed-complete tail for fold
-    * and live views, a content-invariant tail for extrema,
-    * fact-feed-complete + dim-invariant tails for join views. */
+  /** One registered view's LOG-decided status: its primary cursor (the
+    * first of its [[cursors]] — the fold or extrema base's, a join or
+    * live view's fact's) and that table's head; `fresh` = every cursor
+    * at its head; `servable` = the serve decision of [[rowsAt]] at the
+    * heads, so the listing and the rewrite can never disagree. */
   case class MvStatus(mv: String, kind: String, fresh: Boolean,
       servable: Boolean, cursor: Long, head: Long)
 
   /** Every registered view whose definition involves `base` — fold and
     * extrema views over it, join and live views where it is the fact
     * or one of the dims — each probed against the LOG (O(tail headers)
-    * per view, never a data file). A view whose probe throws (vacuumed
-    * cursor, deleted directory) reports (fresh = false, servable =
-    * false, cursor = -1) instead of failing the listing: an operator
-    * asking "which views serve this table?" must see the broken one,
-    * not an exception. Powers the `graft.ns.t.matviews` metadata
-    * table. */
+    * per view, never a data file). A fold view lists under its
+    * EFFECTIVE base only (a transplanted view under the parent, never
+    * under its branch). A view whose probe throws (vacuumed cursor,
+    * deleted directory) reports (fresh = false, servable = false,
+    * cursor = -1) instead of failing the listing: an operator asking
+    * "which views serve this table?" must see the broken one, not an
+    * exception. Powers the `graft.ns.t.matviews` metadata table. */
   def statusFor(s: SparkSession, base: String): Seq[MvStatus] = {
     import scala.jdk.CollectionConverters._
-    def compensable(b: String, cursor: Long, head: Long): Boolean =
-      cursor == head ||
-        (cursor < head && feedRefsE(s, b, cursor, head).isRight)
-    registry.asScala.toSeq.flatMap { case ((kind, key), (mv, d)) =>
-      val broken = MvStatus(mv, kind, fresh = false, servable = false,
-        -1L, -1L)
-      def guarded(p: => MvStatus): Option[MvStatus] =
-        Some(try p catch { case scala.util.control.NonFatal(_) => broken })
-      d match {
-        // match by the EFFECTIVE base (the same rule retentionPins and
-        // the rewrite's per-query re-resolution follow): a transplanted
-        // view must list under its parent, never under the branch key
-        // with parent-timeline cursor arithmetic. ONE effective-base
-        // probe per candidate, reused by both the match and the status
-        // body; a view whose probe THROWS still lists (broken) when its
-        // registry key or stored base names this base — the operator
-        // must SEE it.
-        case d0: MvDef if mayServe(d0.base, base) || key == base =>
-          val eff =
-            try Some(effectiveDef(s, mv, d0,
-              TxnTable.currentVersion(s, mv)))
-            catch { case scala.util.control.NonFatal(_) => None }
-          eff match {
-            case Some((dEff, cursor)) if dEff.base == base => guarded {
-              val head = TxnTable.currentVersion(s, dEff.base)
-              MvStatus(mv, kind, fresh = cursor == head,
-                servable = compensable(dEff.base, cursor, head),
-                cursor, head)
-            }
-            case Some(_) => None // effective base is a different table
-            case None => Some(broken)
-          }
-        case x: MvExtremaDef if x.base == base => guarded {
-          val cursor = headCursor(s, mv)
-          val head = TxnTable.currentVersion(s, base)
-          MvStatus(mv, kind, fresh = cursor == head,
-            servable = cursor == head ||
-              (cursor < head && invariantTail(s, base, cursor, head)),
-            cursor, head)
+    registry.asScala.toSeq.flatMap { case ((kind, _), (mv, d)) =>
+      if (!mayRead(d, base)) None
+      else try {
+        val (_, cur) = cursors(s, mv, d)
+        if (d.isInstanceOf[MvDef] && !cur.contains(base)) None
+        else {
+          val heads = cur.map { case (t, _) =>
+            t -> TxnTable.currentVersion(s, t) }
+          val (primary, cursor) = cur.head
+          Some(MvStatus(mv, kind, fresh = heads == cur,
+            servable = tailRefs(s, d, cur, heads).isDefined, cursor,
+            heads(primary)))
         }
-        case j: MvJoinDef if j.tables.contains(base) => guarded {
-          val mvVer = TxnTable.currentVersion(s, mv)
-          val cursor = cursorAt(s, mv, mvVer, "mv_base_version")
-          val head = TxnTable.currentVersion(s, j.fact)
-          val dimCursors = j.dims.indices.map(i =>
-            cursorAt(s, mv, mvVer, dimCursorMetric(i)))
-          val dimHeads = j.dims.map(r => TxnTable.currentVersion(s, r.dim))
-          // the OP-based range check, because that is what the join
-          // refresh and compensatedJoin actually accept: a change_noop
-          // dim commit that recorded an (empty) feed is servable there,
-          // and the listing must never report acceleration lost when
-          // the rewrite would serve
-          val dimsInvariant = j.dims.indices.forall(i =>
-            dimCursors(i) == dimHeads(i) ||
-              (dimCursors(i) < dimHeads(i) &&
-                contentInvariantRange(s, j.dims(i).dim, dimCursors(i),
-                  dimHeads(i))))
-          MvStatus(mv, kind, fresh = cursor == head &&
-              dimCursors == dimHeads,
-            servable = compensable(j.fact, cursor, head) && dimsInvariant,
-            cursor, head)
-        }
-        // a live view's dims can NEVER stale it (they join back at
-        // query time), so freshness and servability speak the fact log
-        // alone — a live view over a moved dim correctly lists fresh
-        case LiveDef(j, _) if j.tables.contains(base) => guarded {
-          val cursor = headCursor(s, mv)
-          val head = TxnTable.currentVersion(s, j.fact)
-          MvStatus(mv, kind, fresh = cursor == head,
-            servable = compensable(j.fact, cursor, head), cursor, head)
-        }
-        case _ => None
+      } catch { case scala.util.control.NonFatal(_) =>
+        Some(MvStatus(mv, kind, fresh = false, servable = false, -1L, -1L))
       }
     }.sortBy(st => (st.kind, st.mv))
   }

@@ -481,7 +481,7 @@ object SqlSurface {
     * a brand-new group with NULL values) and is NEVER refreshed; the
     * plain SQL aggregate over the base is still served from
     * `MV ⊕ signed-feed tail (cursor, head]` (GraftMvRewriteRule →
-    * MatView.compensated): the optimized plan's scans are the MV files
+    * MatView.rowsAt): the optimized plan's scans are the MV files
     * plus the base's `_cdc` feed files and NEVER a base data file —
     * `mvd_ok` pins exactly that — while the answer is hash-equal to a
     * direct recompute (the oracle). The fold algebra is exercised at
@@ -995,7 +995,7 @@ object SqlSurface {
     * capability the pinned-version freshness contract gives for free
     * and mainstream formats lack: `VERSION AS OF v` on an aggregate is
     * answered by MV ⊕ the PARTIAL feed tail `(cursor, v]`
-    * (MatView.compensated is keyed on the relation's PINNED version,
+    * (MatView.rowsAt is keyed on the relation's PINNED version,
     * not the head), so the dashboard's "as of yesterday" pane costs
     * O(MV + the slice of history up to v) — never a historical base
     * scan. Four pins by optimized-plan roots + answer equality against

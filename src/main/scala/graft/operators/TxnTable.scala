@@ -218,7 +218,14 @@ object TxnTable {
     * manifest's entry lines (O(commits) tiny reads, never
     * O(commits × table files)). */
   private[operators] def manifestHeaderMetric(s: SparkSession,
-      table: String, v: Long, key: String): Long = {
+      table: String, v: Long, key: String): Long =
+    manifestHeaderMetrics(s, table, v).getOrElse(key, -1L)
+
+  /** Every metric of version `v`'s `#metrics=` header, read the same
+    * way as [[manifestHeaderMetric]] (≤4 lines, one open) — for a
+    * reader that needs several metrics of one commit. */
+  private[operators] def manifestHeaderMetrics(s: SparkSession,
+      table: String, v: Long): Map[String, Long] = {
     val mp = manifestPath(table, v)
     val f = fs(s, mp)
     require(f.exists(mp),
@@ -233,11 +240,11 @@ object TxnTable {
         line.startsWith("#op=") || line.startsWith("#ts=")))
         line = br.readLine()
       if (line != null && line.startsWith("#metrics="))
-        line.stripPrefix("#metrics=").split(',')
-          .collectFirst { case kv if kv.startsWith(key + ":") =>
-            kv.stripPrefix(key + ":").toLong }
-          .getOrElse(-1L)
-      else -1L
+        line.stripPrefix("#metrics=").split(',').toSeq.flatMap { kv =>
+          val i = kv.lastIndexOf(':')
+          if (i < 0) None else Some(kv.take(i) -> kv.drop(i + 1).toLong)
+        }.toMap
+      else Map.empty
     } finally in.close()
   }
 

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.operators.{MatView, TxnTable}
+import graft.operators.MatView
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, CaseWhen, Cast, Divide, EqualTo, EvalMode, Expression, Literal, NamedExpression, SubqueryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Median, Min, Percentile, Sum}
@@ -18,10 +18,11 @@ import org.apache.spark.sql.graftbridge.Bridge
   * materialized-view-rewrite contract). The rule matches
   * `Aggregate(groupBy def.key, [key, COUNT(*) …, COUNT(def.value) …,
   * SUM(def.value) …], relation(base))` — unfiltered, single-key, the
-  * exact shape the MV materializes — checks the MV's refresh cursor
-  * against the relation's PINNED version (one log walk; a time-travel
-  * read of any other version, or a base that moved, never serves from
-  * the MV: correctness beats acceleration, the query silently falls
+  * exact shape the MV materializes — asks [[MatView.rowsAt]] for the
+  * view's rows at the relation's PINNED version (decided from the log
+  * alone; when the log cannot prove the answer — a time-travel read
+  * behind the cursor, a feed-less change since it — the view never
+  * serves: correctness beats acceleration, the query silently falls
   * through to the base scan), and substitutes the MV snapshot plan
   * with every output attribute id preserved (the [[GraftMorReadRule]]
   * swap pattern). SUM reconstructs SQL's null-skipping semantics from
@@ -212,32 +213,33 @@ case class GraftMvRewriteRule(session: SparkSession)
     val resid = partialResidual(r, d.pred, preds).getOrElse(return None)
     if (!relKeyPredsOk(r, d.keys, resid)) return None
     val owned = (a: AttributeReference) => r.outputSet.contains(a)
-    serve(groups, aggExprs, d.keys, d.value, d.aggs, owned, owned, {
-      // FRESHNESS BY THE LOG, against the relation's PINNED version. A
-      // fresh MV (cursor == pinned) serves directly; a STALE one serves
-      // MV ⊕ signed-feed tail (cursor, pinned] — the refresh fold as a
-      // plan fragment — provided every tail commit published a feed
-      // (MatView.compensated; O(MV + delta), never O(base)). A feed-less
-      // tail, or an MV AHEAD of a time-travel read, falls through to the
-      // base scan: the rewrite only fires when the log PROVES the answer.
-      val mvVer = TxnTable.currentVersion(session, mvLoc)
-      // re-resolve the EFFECTIVE base per query: a branch MV
-      // transplanted onto its parent AFTER registration must
-      // disqualify here (stale registry key) rather than compare a
-      // parent cursor against a branch version — serving the wrong
-      // timeline is the one unforgivable rewrite bug
-      val (dEff, cursor) = MatView.effectiveDef(session, mvLoc, d, mvVer)
-      if (dEff.base != g.location) None
-      else if (cursor > g.pinnedVersion) None
-      else MatView.compensated(session, mvLoc, dEff, cursor,
-        g.pinnedVersion, mvVer, keyBounds(resid))
-        .map(applyKeyPreds(_, resid))
-    })
+    // FRESHNESS BY THE LOG, against the relation's PINNED version: a
+    // fresh MV serves directly, a stale one serves MV ⊕ signed-feed
+    // tail, and a feed-less tail, an MV AHEAD of a time-travel read or
+    // a view transplanted off this table falls through to the base scan
+    // (MatView.rowsAt — the rewrite only fires when the log PROVES the
+    // answer)
+    serve(groups, aggExprs, d.keys, d.value, d.aggs, owned, owned,
+      servedRows(mvLoc, d, Seq(g), resid))
   }
+
+  /** The view's rows at every relation's PINNED version with the
+    * qualified key predicates applied — None falls through. One
+    * [[MatView.rowsAt]] call decides freshness for every kind. */
+  private def servedRows(mvLoc: String, d: MatView.ViewDef,
+      pinned: Seq[GraftTable], preds: Seq[Expression])
+      : Option[org.apache.spark.sql.DataFrame] =
+    MatView.rowsAt(session, mvLoc, d,
+      pinned.map(g => g.location -> g.pinnedVersion).toMap,
+      keyBounds(preds)).map(applyKeyPreds(_, preds))
+
+  private def servedRows(m: JoinMvMatch, preds: Seq[Expression])
+      : Option[org.apache.spark.sql.DataFrame] =
+    servedRows(m.mvLoc, m.view, m.factG +: m.dimGs, preds)
 
   /** Closed per-column bounds extracted from the key-only predicate
     * conjuncts — the manifest-prune handle for the MV's OWN files
-    * ([[MatView.mvRowsAt]] → [[TxnTable.snapshotBoxed]]). Only shapes
+    * ([[MatView.rowsAt]] → `TxnTable.snapshotBoxed`). Only shapes
     * whose satisfying space is provably inside a closed box contribute
     * (=, IN over literals, and range conjuncts — intersected per
     * column); anything else (OR, functions, null-safe equality, a
@@ -466,14 +468,14 @@ case class GraftMvRewriteRule(session: SparkSession)
     * view plus everything the serving tails need — the per-side
     * ownership checks and the pinned relations the freshness closure
     * speaks about. */
-  private case class JoinMvMatch(mvLoc: String, d: MatView.MvJoinDef,
+  private case class JoinMvMatch(mvLoc: String,
+      // the registered definition (a live view's grain included),
+      // captured from the SAME registry probe the match hit: re-probing
+      // at serve time would race a concurrent re-register — a recreated
+      // view's grain paired with the old view's rows
+      view: MatView.ViewDef, d: MatView.MvJoinDef,
       factRel: DataSourceV2Relation, factG: GraftTable,
-      dimRels: Seq[DataSourceV2Relation], dimGs: Seq[GraftTable],
-      // the live kind's persisted fact-key grain, captured from the
-      // SAME registry probe the match hit (re-probing at serve time
-      // would race a concurrent re-register — a recreated view's grain
-      // paired with the old view's rows); Nil for group-grain views
-      grain: Seq[String] = Nil) {
+      dimRels: Seq[DataSourceV2Relation], dimGs: Seq[GraftTable]) {
     /** Key column → owning side, re-derived from the RELATIONS being
       * served: −1 = the fact (the r19 fact-owned grouping-key shape),
       * 0.. = that dim; None = the column no longer lives on exactly
@@ -520,7 +522,7 @@ case class GraftMvRewriteRule(session: SparkSession)
       conds: Seq[Expression]): Option[JoinMvMatch] =
     matchStar(rels0, conds,
       (f, ds) => MatView.registeredJoinFor(f, ds)
-        .map { case (mv, d) => (mv, d, Nil) })
+        .map { case (mv, d) => (mv, d, d) })
 
   /** [[matchJoinMv]] generalized over the registry probed — the live
     * star registry shares the (fact, dim set) key and the definition
@@ -529,7 +531,7 @@ case class GraftMvRewriteRule(session: SparkSession)
   private def matchStar(rels0: Seq[DataSourceV2Relation],
       conds: Seq[Expression],
       lookup: (String, Seq[String]) =>
-        Option[(String, MatView.MvJoinDef, Seq[String])])
+        Option[(String, MatView.ViewDef, MatView.MvJoinDef)])
       : Option[JoinMvMatch] = {
     if (rels0.size < 2) return None
     val gts: Seq[(DataSourceV2Relation, GraftTable)] = rels0.map { r =>
@@ -543,7 +545,7 @@ case class GraftMvRewriteRule(session: SparkSession)
       val dims = gts.patch(i, Nil, 1)
       lookup(fg.location, dims.map(_._2.location))
         .map(x => (x, fr, fg, dims))
-    }.find { case ((_, d, _), fr, _, dims) =>
+    }.find { case ((_, _, d), fr, _, dims) =>
       val dimByLoc = dims.map(x => x._2.location -> x._1).toMap
       conds.size == d.dims.size && d.dims.forall { ref =>
         dimByLoc.get(ref.dim).exists { dimRel =>
@@ -558,33 +560,13 @@ case class GraftMvRewriteRule(session: SparkSession)
         }
       }
     }
-    hit.map { case ((mvLoc, d, grain), factRel, factG, dimPairs) =>
+    hit.map { case ((mvLoc, view, d), factRel, factG, dimPairs) =>
       val dimRelByLoc = dimPairs.map(x => x._2.location -> x._1).toMap
       val dimGByLoc = dimPairs.map(x => x._2.location -> x._2).toMap
-      JoinMvMatch(mvLoc, d, factRel, factG,
+      JoinMvMatch(mvLoc, view, d, factRel, factG,
         d.dims.map(r => dimRelByLoc(r.dim)),
-        d.dims.map(r => dimGByLoc(r.dim)), grain)
+        d.dims.map(r => dimGByLoc(r.dim)))
     }
-  }
-
-  /** Freshness + compensation for a matched join MV, keyed on every
-    * PINNED version: the fact tail compensates from published feeds
-    * re-joined to the dims, dim tails must be content-invariant, and a
-    * time-travel read BEHIND any cursor never serves. */
-  private def joinMvRows(m: JoinMvMatch, preds: Seq[Expression])
-      : Option[org.apache.spark.sql.DataFrame] = {
-    val mvVer = TxnTable.currentVersion(session, m.mvLoc)
-    val cursor = MatView.cursorAt(session, m.mvLoc, mvVer,
-      "mv_base_version")
-    val dimCursors = m.d.dims.indices.map(i =>
-      MatView.cursorAt(session, m.mvLoc, mvVer,
-        MatView.dimCursorMetric(i)))
-    if (cursor > m.factG.pinnedVersion ||
-      m.d.dims.indices.exists(i =>
-        dimCursors(i) > m.dimGs(i).pinnedVersion)) None
-    else MatView.compensatedJoin(session, m.mvLoc, m.d, cursor,
-      m.factG.pinnedVersion, dimCursors,
-      m.dimGs.map(_.pinnedVersion), mvVer, keyBounds(preds))
   }
 
   /** Qualify above-join predicates: servable iff every reference is a
@@ -603,58 +585,31 @@ case class GraftMvRewriteRule(session: SparkSession)
       aggExprs: Seq[NamedExpression], child: LogicalPlan)
       : Option[LogicalPlan] = {
     val (rels0, conds, preds) = flattenJoin(child).getOrElse(return None)
-    def group(): Option[LogicalPlan] = {
-      val m = matchJoinMv(rels0, conds).getOrElse(return None)
+    def serveStar(m: JoinMvMatch): Option[LogicalPlan] = {
       // a PARTIAL star first consumes ITS OWN predicate from the
       // query's conjuncts, resolved against the FACT relation (the
-      // side the stored text speaks) — trySingle's rule, verbatim; a
-      // query not restricted to the view's slice falls through
+      // side the stored text speaks — [[partialResidual]]); a query
+      // not restricted to the view's slice falls through
       val resid = partialResidual(m.factRel, m.d.pred, preds)
         .getOrElse(return None)
       if (!dimKeyPredsOk(m, resid)) return None
       serve(groups, aggExprs, m.d.keys, m.d.value, m.d.aggs,
         keyOwned = m.dimKeyOwned,
         valueOwned = m.valueOwned,
-        mvRows = joinMvRows(m, resid).map(applyKeyPreds(_, resid)))
+        mvRows = servedRows(m, resid))
     }
     // the LIVE star view serves the same query shape when the
     // group-grain view is absent — or disqualified by dim movement,
     // which can never disqualify the live kind (its dims join back at
     // the query's own pinned versions)
-    def live(): Option[LogicalPlan] = {
-      val m = matchLiveMv(rels0, conds).getOrElse(return None)
-      // a PARTIAL live view consumes its own fact-side predicate
-      // (trySingle's rule, via the fact relation)
-      val resid = partialResidual(m.factRel, m.d.pred, preds)
-        .getOrElse(return None)
-      if (!dimKeyPredsOk(m, resid)) return None
-      serve(groups, aggExprs, m.d.keys, m.d.value, m.d.aggs,
-        keyOwned = m.dimKeyOwned,
-        valueOwned = m.valueOwned,
-        mvRows = liveMvRows(m).map(applyKeyPreds(_, resid)))
-    }
-    group().orElse(live())
+    matchJoinMv(rels0, conds).flatMap(serveStar)
+      .orElse(matchLiveMv(rels0, conds).flatMap(serveStar))
   }
 
   private def matchLiveMv(rels0: Seq[DataSourceV2Relation],
       conds: Seq[Expression]): Option[JoinMvMatch] =
-    matchStar(rels0, conds, MatView.registeredLiveFor)
-
-  /** Freshness + frame for a live star view: the FACT cursor alone
-    * decides (tail compensation from its feeds, exactly the fold
-    * rule); the dims impose nothing — [[MatView.compensatedLive]]
-    * joins them back at the query's pinned versions, so a moved or
-    * even time-travelled dim serves. The grain rode the match's own
-    * registry probe ([[JoinMvMatch.grain]]). */
-  private def liveMvRows(m: JoinMvMatch)
-      : Option[org.apache.spark.sql.DataFrame] = {
-    val mvVer = TxnTable.currentVersion(session, m.mvLoc)
-    val cursor = MatView.cursorAt(session, m.mvLoc, mvVer,
-      "mv_base_version")
-    if (cursor > m.factG.pinnedVersion) None
-    else MatView.compensatedLive(session, m.mvLoc, m.d, m.grain, cursor,
-      m.factG.pinnedVersion, m.dimGs.map(_.pinnedVersion), mvVer)
-  }
+    matchStar(rels0, conds, (f, ds) => MatView.registeredLiveFor(f, ds)
+      .map { case (mv, l) => (mv, l, l.star) })
 
   /** The EXTREMA-MV rewrite: `MIN(value)` / `MAX(value)` / COUNTs over
     * the base served from a registered [[MatView.createExtrema]] view —
@@ -681,7 +636,7 @@ case class GraftMvRewriteRule(session: SparkSession)
     val (mvLoc, d) = MatView.registeredExtremaFor(g.location).getOrElse(
       return None)
     // a PARTIAL extrema view first consumes ITS OWN predicate from the
-    // query's conjuncts (trySingle's rule verbatim); the residual then
+    // query's conjuncts ([[partialResidual]]); the residual then
     // faces the ordinary key-only qualification — an extrema MV also
     // holds exactly one row per key combination
     val resid = partialResidual(r, d.pred, preds).getOrElse(return None)
@@ -692,7 +647,7 @@ case class GraftMvRewriteRule(session: SparkSession)
     if (!aggExprs.forall(extremaAnswerable(d.value,
       a => r.outputSet.contains(a)))) return None
     if (!outputsAreKeys(aggExprs, keyAttrs)) return None
-    val mvDf0 = extremaMvRows(mvLoc, d, g, resid).getOrElse(return None)
+    val mvDf0 = servedRows(mvLoc, d, Seq(g), resid).getOrElse(return None)
     val mvDf =
       if (!rollup) mvDf0
       else rollupExtrema(mvDf0, keyAttrs.map(_.name))
@@ -758,29 +713,6 @@ case class GraftMvRewriteRule(session: SparkSession)
       case other => throw new IllegalStateException(
         s"unreachable: unanswerable aggregate $other survived")
     }
-
-  /** Freshness + frame for an extrema view against the relation's
-    * PINNED version: serve at the cursor, or across a provably
-    * content-invariant tail — the extrema algebra has no signed
-    * compensation (a delete in the tail can fell an extreme only the
-    * dirty-group recompute re-derives), so anything else falls
-    * through. */
-  private def extremaMvRows(mvLoc: String, d: MatView.MvExtremaDef,
-      g: GraftTable, preds: Seq[Expression])
-      : Option[org.apache.spark.sql.DataFrame] = {
-    val mvVer = TxnTable.currentVersion(session, mvLoc)
-    val cursor = MatView.cursorAt(session, mvLoc, mvVer,
-      "mv_base_version")
-    if (cursor > g.pinnedVersion) return None
-    if (cursor < g.pinnedVersion &&
-      !MatView.invariantTail(session, g.location, cursor,
-        g.pinnedVersion)) return None
-    import org.apache.spark.sql.functions.{col => fcol}
-    Some(applyKeyPreds(
-      MatView.mvRowsAt(session, mvLoc, mvVer, keyBounds(preds))
-        .select((d.keys.map(fcol) ++ Seq(fcol("n"), fcol("nn"),
-          fcol("vmin"), fcol("vmax"))): _*), preds))
-  }
 
   /** The grouping keys must be a SUBSET of the MV's key columns (any
     * order, bare owned references, no duplicates — and possibly EMPTY:
@@ -1185,8 +1117,7 @@ case class GraftMvRewriteRule(session: SparkSession)
         rollupAgg(_, _, dcols, pcts), withPctArm(pctOfFn), mvDf0)
     }
     // ARM 1 — a bare relation with its registered fold MV: freshness
-    // identical to trySingle (fresh serves the MV, stale serves
-    // MV ⊕ signed-feed tail, feed-less tails fall through)
+    // identical to trySingle (one MatView.rowsAt decision)
     def single(): Option[LogicalPlan] = {
       val (r, preds) = relationOf(inner).getOrElse(return None)
       val g = r.table match {
@@ -1199,43 +1130,15 @@ case class GraftMvRewriteRule(session: SparkSession)
         r.outputSet.contains(a) && d.keys.contains(a.name)
       val keyNames = keyNamesIf(owned).getOrElse(return None)
       if (dcols.exists(c => d.keys.contains(s"gdc_$c"))) return None
-      // a PARTIAL view consumes its own predicate first (trySingle's
-      // rule, identically)
+      // a PARTIAL view consumes its own predicate first
       val resid = partialResidual(r, d.pred, preds).getOrElse(
         return None)
       if (!relKeyPredsOk(r, d.keys, resid)) return None
       val relOwned = (a: AttributeReference) => r.outputSet.contains(a)
       serveFoldGs(d.keys, d.value, d.aggs, relOwned, relOwned,
-        keyNames, {
-          val mvVer = TxnTable.currentVersion(session, mvLoc)
-          val (dEff, cursor) =
-            MatView.effectiveDef(session, mvLoc, d, mvVer)
-          if (dEff.base != g.location || cursor > g.pinnedVersion) None
-          else MatView.compensated(session, mvLoc, dEff, cursor,
-            g.pinnedVersion, mvVer, keyBounds(resid))
-            .map(applyKeyPreds(_, resid))
-        })
+        keyNames, servedRows(mvLoc, d, Seq(g), resid))
     }
-    // ARM 2 — an all-inner join tree with its registered star MV: the
-    // SUBTOTAL STAR DASHBOARD (ROLLUP/CUBE over fact ⋈ dims) served as
-    // the same union of per-set rollups over the join MV's compensated
-    // frame — grouping keys must trace to DIM key columns, aggregates
-    // to the fact measure, freshness to every pinned log
-    def join(): Option[LogicalPlan] = {
-      val (rels0, conds, preds) = flattenJoin(inner).getOrElse(
-        return None)
-      val m = matchJoinMv(rels0, conds).getOrElse(return None)
-      val keyNames = keyNamesIf(m.dimKeyOwned).getOrElse(return None)
-      if (dcols.exists(c => m.d.keys.contains(s"gdc_$c"))) return None
-      // the partial star's predicate consumption (trySingle's rule)
-      val resid = partialResidual(m.factRel, m.d.pred, preds)
-        .getOrElse(return None)
-      if (!dimKeyPredsOk(m, resid)) return None
-      serveFoldGs(m.d.keys, m.d.value, m.d.aggs, m.dimKeyOwned,
-        m.valueOwned, keyNames,
-        joinMvRows(m, resid).map(applyKeyPreds(_, resid)))
-    }
-    // ARM 3 — the EXTREMA view: MIN/MAX SUBTOTALS (the "worst latency
+    // ARM 2 — the EXTREMA view: MIN/MAX SUBTOTALS (the "worst latency
     // per region, with the global worst on the last line" pane) — the
     // extrema vocabulary is summable upward exactly like the fold, so
     // the same union-of-per-set-rollups serves it; distinct counts
@@ -1260,28 +1163,34 @@ case class GraftMvRewriteRule(session: SparkSession)
       if (!aggExprs.forall(extremaAnswerable(d.value,
         a => r.outputSet.contains(a)))) return None
       if (!outputsAreKeys(aggExprs, gs.keyAttrs :+ gs.gid)) return None
-      val mvDf0 = extremaMvRows(mvLoc, d, g, resid)
+      val mvDf0 = servedRows(mvLoc, d, Seq(g), resid)
         .getOrElse(return None)
       serveGroupingSets(gs, keyNames, aggExprs,
         ExtremaGsNames, rollupExtrema, extremaArm, mvDf0)
     }
-    // ARM 4 — the LIVE star view: the same union-of-per-set-rollups
-    // over the join-back frame; dim movement never disqualifies
-    def live(): Option[LogicalPlan] = {
+    // ARM 3 — an all-inner join tree with its registered star view
+    // (the group-grain join view, else the live view, whose dims never
+    // disqualify it): the SUBTOTAL STAR DASHBOARD (ROLLUP/CUBE over
+    // fact ⋈ dims) served as the same union of per-set rollups over the
+    // view's frame — grouping keys must trace to the view's key
+    // columns, aggregates to the fact measure
+    def star(): Option[LogicalPlan] = {
       val (rels0, conds, preds) = flattenJoin(inner).getOrElse(
         return None)
-      val m = matchLiveMv(rels0, conds).getOrElse(return None)
-      val keyNames = keyNamesIf(m.dimKeyOwned).getOrElse(return None)
-      if (dcols.exists(c => m.d.keys.contains(s"gdc_$c"))) return None
-      // the partial live view's predicate consumption
-      val resid = partialResidual(m.factRel, m.d.pred, preds)
-        .getOrElse(return None)
-      if (!dimKeyPredsOk(m, resid)) return None
-      serveFoldGs(m.d.keys, m.d.value, m.d.aggs, m.dimKeyOwned,
-        m.valueOwned, keyNames,
-        liveMvRows(m).map(applyKeyPreds(_, resid)))
+      def arm(m: JoinMvMatch): Option[LogicalPlan] = {
+        val keyNames = keyNamesIf(m.dimKeyOwned).getOrElse(return None)
+        if (dcols.exists(c => m.d.keys.contains(s"gdc_$c"))) return None
+        // the partial star's predicate consumption
+        val resid = partialResidual(m.factRel, m.d.pred, preds)
+          .getOrElse(return None)
+        if (!dimKeyPredsOk(m, resid)) return None
+        serveFoldGs(m.d.keys, m.d.value, m.d.aggs, m.dimKeyOwned,
+          m.valueOwned, keyNames, servedRows(m, resid))
+      }
+      matchJoinMv(rels0, conds).flatMap(arm)
+        .orElse(matchLiveMv(rels0, conds).flatMap(arm))
     }
-    single().orElse(join()).orElse(extrema()).orElse(live())
+    single().orElse(extrema()).orElse(star())
   }
 
   /** The fold vocabulary's grouping-sets frame columns. */

@@ -21,6 +21,14 @@ class MatViewSpec extends SparkSpec {
   private def defOf[D <: MatView.ViewDef](mv: String): D =
     MatView.definition(spark, mv).asInstanceOf[D]
 
+  /** A fold view's (cursor, transplanted) pair, read through the one
+    * cursor reader: a transplanted view keys its cursor by the parent. */
+  private def foldCursor(mv: String): (Long, Boolean) = {
+    val d = defOf[MatView.MvDef](mv)
+    val (onto, cursor) = MatView.cursors(spark, mv, d)._2.head
+    (cursor, onto != d.base)
+  }
+
   /** "Served from the MV" = the OPTIMIZED plan holds no catalog (v2)
     * relation and every parquet root lives under the MV path — the one
     * plan-inspection contract every rewrite test checks. */
@@ -1508,8 +1516,7 @@ class MatViewSpec extends SparkSpec {
     assert(r1.commitsFolded === 1)
     TxnTable.compact(spark, t) // content-invariant: cursor advance
     val r2 = MatView.refresh(spark, mv)
-    val (cur2, still2) = MatView.cursorInfoAt(spark, mv,
-      TxnTable.currentVersion(spark, mv))
+    val (cur2, still2) = foldCursor(mv)
     assert(still2 && cur2 === TxnTable.currentVersion(spark, t),
       "the retarget stamp must ride every later cursor commit")
     val direct = TxnTable.snapshot(spark, t).groupBy(col("g"))
@@ -2038,8 +2045,7 @@ class MatViewSpec extends SparkSpec {
     MatView.create(spark, ctMv, bd, "g", "v")
     s.sql("CALL graft.system.fastforward('mvspec.ct', 'dev')")
     s.sql("CALL graft.system.transplant_matview('mvspec.ct_mv')")
-    val (cur, retargeted) = MatView.cursorInfoAt(spark, ctMv,
-      TxnTable.currentVersion(spark, ctMv))
+    val (cur, retargeted) = foldCursor(ctMv)
     assert(retargeted && cur === TxnTable.currentVersion(spark, ctLoc),
       "transplant_matview must re-point the cursor onto the parent")
   }
@@ -3026,6 +3032,162 @@ class MatViewSpec extends SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("LocalTableScan") || plan.contains("LocalScan"),
       s"matviews must plan as a local scan, got:\n$plan")
+  }
+
+  test("the matviews listing agrees with the rewrite for every view " +
+      "kind and tail state: servable = served, fresh = every cursor at " +
+      "its head") {
+    val s = spark
+    import graft.sources.GraftCatalog
+    GraftCatalog.register(s)
+    s.sql("CREATE NAMESPACE IF NOT EXISTS graft.mvlist")
+    Seq("f", "d1", "d2").foreach(t =>
+      s.sql(s"DROP TABLE IF EXISTS graft.mvlist.$t"))
+    s.sql("CREATE TABLE graft.mvlist.f (k BIGINT, g STRING, a BIGINT, " +
+      "b BIGINT, v DECIMAL(12,2))")
+    s.sql("INSERT INTO graft.mvlist.f SELECT id, IF(id % 3 = 0, 'A', " +
+      "'B'), id % 4, id % 3, CAST(id AS DECIMAL(12,2)) FROM RANGE(120)")
+    s.sql("CREATE TABLE graft.mvlist.d1 (pk BIGINT, dg1 STRING)")
+    s.sql("INSERT INTO graft.mvlist.d1 SELECT id, IF(id < 2, 'P', 'Q') " +
+      "FROM RANGE(4)")
+    s.sql("CREATE TABLE graft.mvlist.d2 (pk2 BIGINT, dg2 STRING)")
+    s.sql("INSERT INTO graft.mvlist.d2 SELECT id, IF(id = 0, 'X', 'Y') " +
+      "FROM RANGE(3)")
+    val w = GraftCatalog.defaultWarehouse
+    val (fact, d1, d2) = (s"$w/mvlist/f", s"$w/mvlist/d1", s"$w/mvlist/d2")
+    // one view per kind over the same fact; the join and live views
+    // read different dims, so each dashboard has exactly one candidate
+    val views = Seq("fold", "extrema", "join", "live")
+      .map(k => k -> fresh(s"mv_list_$k")).toMap
+    MatView.create(spark, views("fold"), fact, Seq("g"), "v")
+    MatView.createExtrema(spark, views("extrema"), fact, Seq("g"), "v")
+    MatView.createJoinStar(spark, views("join"), fact,
+      Seq(MatView.MvDimRef(d1, "a", "pk")), Seq("dg1"), "v")
+    MatView.createStarLive(spark, views("live"), fact,
+      Seq(MatView.MvDimRef(d2, "b", "pk2")), Seq("dg2"), "v")
+    views.values.foreach(MatView.register(spark, _))
+    val dashboards = Map(
+      "fold" -> ("SELECT g, COUNT(*) AS n, SUM(v) AS t " +
+        "FROM graft.mvlist.f GROUP BY g"),
+      "extrema" -> ("SELECT g, MIN(v) AS lo, MAX(v) AS hi " +
+        "FROM graft.mvlist.f GROUP BY g"),
+      "join" -> ("SELECT dg1, COUNT(*) AS n, SUM(v) AS t FROM " +
+        "graft.mvlist.f f JOIN graft.mvlist.d1 d ON f.a = d.pk " +
+        "GROUP BY dg1"),
+      "live" -> ("SELECT dg2, COUNT(*) AS n, SUM(v) AS t FROM " +
+        "graft.mvlist.f f JOIN graft.mvlist.d2 d ON f.b = d.pk2 " +
+        "GROUP BY dg2"))
+    // served = no catalog relation, and every parquet root is the view's
+    // own files, a table's published feed, or (for the stars) a dim the
+    // serve joins back — never a fact data file
+    def served(kind: String): Boolean = {
+      val mv = views(kind)
+      val p = s.sql(dashboards(kind)).queryExecution.optimizedPlan
+      val hasV2 = p.collect {
+        case r: org.apache.spark.sql.execution.datasources.v2
+            .DataSourceV2ScanRelation => r
+        case r: org.apache.spark.sql.execution.datasources.v2
+            .DataSourceV2Relation => r
+      }.nonEmpty
+      val roots = p.collect {
+        case l: org.apache.spark.sql.execution.datasources
+            .LogicalRelation => l.relation match {
+          case h: org.apache.spark.sql.execution.datasources
+              .HadoopFsRelation => h.location.rootPaths.map(_.toString)
+          case _ => Nil
+        }
+      }.flatten
+      !hasV2 && roots.exists(_.contains(mv)) && roots.forall(r =>
+        r.contains(mv) || r.contains(s"$fact/_cdc") ||
+          Seq(d1, d2).exists(d => r.contains(s"$d/")))
+    }
+    def listing(): Map[String, (Boolean, Boolean)] =
+      s.sql("SELECT kind, fresh, servable FROM graft.mvlist.f.matviews")
+        .collect().map(r => r.getString(0) ->
+          (r.getBoolean(1), r.getBoolean(2))).toMap
+    def atHeads(mv: String): Boolean =
+      MatView.cursors(spark, mv, MatView.definition(spark, mv))._2
+        .forall { case (t, c) => c == TxnTable.currentVersion(spark, t) }
+    def cdc(t: String, key: String, q: String): Unit =
+      TxnTable.applyChangesMor(spark, t, s.sql(q), key, cdc = true)
+    // (tail state, how to reach it from fresh views, expected
+    // (fresh, servable) per kind)
+    val states: Seq[(String, () => Unit, Map[String, (Boolean, Boolean)])] =
+      Seq(
+        ("fresh", () => (), Map("fold" -> (true, true),
+          "extrema" -> (true, true), "join" -> (true, true),
+          "live" -> (true, true))),
+        ("compact only", () => { TxnTable.compact(spark, fact); () },
+          Map("fold" -> (false, true), "extrema" -> (false, true),
+            "join" -> (false, true), "live" -> (false, true))),
+        ("a dim cdc commit", () => {
+          cdc(d1, "pk", "SELECT pk, 'R' AS dg1, 'U' AS op " +
+            "FROM graft.mvlist.d1 WHERE pk = 1")
+          cdc(d2, "pk2", "SELECT pk2, 'Z' AS dg2, 'U' AS op " +
+            "FROM graft.mvlist.d2 WHERE pk2 = 2")
+        }, Map("fold" -> (true, true), "extrema" -> (true, true),
+          "join" -> (false, false), "live" -> (true, true))),
+        ("a fact cdc commit", () => cdc(fact, "k", "SELECT k, g, a, b, " +
+          "v, 'D' AS op FROM graft.mvlist.f WHERE k % 5 = 0"),
+          Map("fold" -> (false, true), "extrema" -> (false, false),
+            "join" -> (false, true), "live" -> (false, true))),
+        ("a fact commit with no feed", () =>
+          TxnTable.applyChangesMor(spark, fact, s.sql("SELECT k, g, a, " +
+            "b, v, 'D' AS op FROM graft.mvlist.f WHERE k % 7 = 0"), "k",
+            cdc = false),
+          Map("fold" -> (false, false), "extrema" -> (false, false),
+            "join" -> (false, false), "live" -> (false, false))))
+    states.foreach { case (state, reach, want) =>
+      reach()
+      val listed = listing()
+      assert(listed === want, s"$state: listing")
+      views.foreach { case (kind, mv) =>
+        assert(listed(kind)._2 === served(kind),
+          s"$state: $kind listed servable=${listed(kind)._2} but the " +
+            "rewrite disagrees")
+        assert(listed(kind)._1 === atHeads(mv), s"$state: $kind fresh")
+      }
+      // back to fresh views for the next state (the feed-less state is
+      // last: no view refreshes past it)
+      if (state != states.last._1)
+        views.values.foreach(MatView.refresh(spark, _))
+    }
+  }
+
+  test("extrema refresh over a base WITHOUT stats on the view key " +
+      "recomputes dirty groups with ONE semi-join scan, never per-group " +
+      "probes that each read every file") {
+    val s2 = spark
+    import s2.implicits._
+    val t = fresh("mvx_nostats_base")
+    val mv = fresh("mvx_nostats_view")
+    val base0 = (0 until 120).map(i => (i.toLong, s"g${i % 6}",
+      BigDecimal(i).setScale(2))).toDF("k", "g", "v")
+      .withColumn("v", col("v").cast(D12))
+    // four files, stats on k only: the view key g carries none
+    TxnTable.commit(spark, t, TxnTable.stageIndexed(spark, t,
+      base0.repartitionByRange(4, col("k")).sortWithinPartitions(col("k")),
+      "k"), expected = -1L, op = "create", schemaJson = base0.schema.json)
+    assert(!TxnTable.manifest(spark, t, 0L).strIdxCols.contains("g"),
+      "test setup: the view key must carry no stats")
+    MatView.createExtrema(spark, mv, t, Seq("g"), "v")
+    // fell the maxima of three groups (g0, g1, g2: k = 114, 115, 116)
+    TxnTable.applyChangesMor(spark, t, base0.filter(col("k") >= 114L &&
+      col("k") <= 116L).withColumn("op", lit("D")), "k", cdc = true)
+    val r = MatView.refresh(spark, mv)
+    val m = TxnTable.commitMetrics(spark, mv, r.mvVersion)
+    assert(m.get("mv_dirty_groups").contains(3L))
+    assert(m.get("mv_dirty_files_kept").contains(-1L),
+      s"a stat-less key must take the one-scan fallback: $m")
+    def rows(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("g"), col("n"), col("nn"), col("vmin"), col("vmax"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        r.getDecimal(3).toPlainString, r.getDecimal(4).toPlainString)).toSet
+    assert(rows(TxnTable.snapshot(spark, mv)) === rows(
+      TxnTable.snapshot(spark, t).groupBy(col("g")).agg(
+        count(lit(1)).as("n"), count(col("v")).as("nn"),
+        min(col("v")).as("vmin"), max(col("v")).as("vmax"))),
+      "the MV must equal the recompute")
   }
 
   test("grouping sets over an extrema view: MIN/MAX subtotals serve " +
