@@ -7,7 +7,7 @@ import graft.Tables
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.StatsWrite
+import org.apache.spark.sql.graftbridge.{ManifestFile, ManifestScan, StatsWrite}
 import org.apache.spark.sql.types.DecimalType
 
 /** A minimal transaction log over immutable parquet files — the public
@@ -2420,14 +2420,15 @@ object TxnTable {
   private def hllOf(c: String, widened: Boolean): Column =
     hll_sketch_agg(if (widened) idxExpr(c).cast("string") else idxExpr(c), 8)
 
-  /** One stats-measuring scan over `df`, per input file: the (min, max,
+  /** One stats-measuring scan over `df`, per file: the (min, max,
     * nulls) group, NDV sketch and row count for every index spec, plus
-    * the string-bound groups — keyed by the RAW `input_file_name`. Used
-    * by [[reindex]] alone (stats backfill over live files that were
-    * written without them); files being written get the same stats from
-    * [[fileStatsTracker]] inside the write. */
-  private[graft] def statGroupsByFile(df: DataFrame, indexCols: Seq[String],
-      strCols: Seq[String])
+    * the string-bound groups — keyed by the value of `file`, the
+    * caller's file-key column ([[reindex]] passes the scan's
+    * `__gcanon`). Used by [[reindex]] alone (stats backfill over live
+    * files that were written without them); files being written get the
+    * same stats from [[fileStatsTracker]] inside the write. */
+  private[graft] def statGroupsByFile(df: DataFrame, file: Column,
+      indexCols: Seq[String], strCols: Seq[String])
       : Map[String, (Seq[ColStat], Seq[HllStat], Seq[StrStat])] = {
     val widened = widenedSpecs(df, indexCols)
     val aggs = indexCols.flatMap { c =>
@@ -2447,7 +2448,7 @@ object TxnTable {
         min(col(c)).cast("string").as(s"slo_$c"),
         max(col(c)).cast("string").as(s"shi_$c"),
         sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"snn_$c")))
-    df.groupBy(input_file_name().as("f"))
+    df.groupBy(file.as("f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
       .map(r => (r.getString(0),
@@ -2971,8 +2972,6 @@ object TxnTable {
         "is the caller's empty-overwrite path)")
     val cur = currentVersion(s, table)
     val m = manifest(s, table, cur) // ONE log read for all facets below
-    val entries = m.entries
-    val idxCols = m.idxCols
     // stat groups speak PHYSICAL names; predicate columns arrive logical
     val pm = physMap(m)
     // a provably-EMPTY integral bound (conflicting equalities) matches
@@ -3019,12 +3018,13 @@ object TxnTable {
           strBounds.map { case (c, lo, hi) => strSide(e, c, lo, hi) }
         if (dims.contains('k')) 'k'
         else if (dims.forall(_ == 'd')) 'd'
-        else 'r'
+        else 'u'
       }
     // the FULL predicate, rebuilt from the parsed bounds (the rebuild is
     // lossless: the caller normalized the conjunction into exactly these
-    // bounds) — the rewrite keeps rows where it is FALSE or NULL
-    val pred = (intBounds.map { case (c, lo, hi) =>
+    // bounds) — the rewrite keeps rows where it is FALSE or NULL (SQL
+    // three-valued logic — a null key is never deleted)
+    val pred = coalesce((intBounds.map { case (c, lo, hi) =>
         (if (lo == Long.MinValue) lit(true) else col(c) >= lo) &&
           (if (hi == Long.MaxValue) lit(true) else col(c) <= hi)
       } ++ strBounds.map { case (c, lo, hi) =>
@@ -3032,53 +3032,11 @@ object TxnTable {
           .getOrElse(lit(true)) &&
           hi.map { case (v, inc) => if (inc) col(c) <= v else col(c) < v }
             .getOrElse(lit(true))
-      }).reduce(_ && _)
+      }).reduce(_ && _), lit(false))
     val primary = intBounds.headOption.map(_._1)
       .getOrElse(strBounds.head._1)
-    val dropped = entries.filter(side(_) == 'd')
-    val kept = entries.filter(side(_) == 'k')
-    val rewrite = entries.filter(side(_) == 'r')
-    // rewritten files read with the COMMITTED schema (see merge): after
-    // an appendEvolve, footer inference could silently drop the new
-    // column from re-staged survivors
-    val fresh =
-      if (rewrite.isEmpty) Seq.empty
-      else {
-        // rewritten files read through readEntries: pending sequenced
-        // tombstones are APPLIED during the rewrite, and the fresh
-        // files' seq (this commit) then escapes those tombstones
-        val prev = readEntries(s, table, m, rewrite)
-        // survivors: rows where the predicate is FALSE or NULL (SQL
-        // three-valued logic — a null key is never deleted)
-        val survivors = prev.filter(!coalesce(pred, lit(false)))
-        val c = survivors
-          .repartitionByRange(math.max(rewrite.size, 1), col(primary))
-          .sortWithinPartitions(col(primary))
-        if (idxCols.nonEmpty || m.strIdxCols.nonEmpty)
-          stageIndexed(s, table, toPhysical(c, m), idxCols, m.strIdxCols)
-            .filter(hasStats)
-        else stage(s, table, toPhysical(c, m))
-      }
-    val lines = kept.map(render) ++ fresh
-    // a delete that empties the table must not commit a ZERO-file
-    // version (unreadable by design — snapshot fails loudly on those):
-    // stage one empty file carrying the schema so the empty table stays
-    // readable and appendable
-    val finalLines =
-      if (lines.nonEmpty) lines
-      else stage(s, table, snapshot(s, table, cur).limit(0))
-    val cdcRefs = if (!cdc) Nil else deleteCdcRefs(s, table, m, cur,
-      dropped, rewrite, coalesce(pred, lit(false)))
-    val v = commit(s, table, finalLines, cur, op = "delete",
-      schemaJson = m.schema.map(_.json).orNull, deleteLines = m.deletes,
-      idxCols = m.idxCols, strIdxCols = m.strIdxCols, blooms = m.blooms,
-      metrics = Seq("dropped" -> dropped.size.toLong,
-        "rewritten" -> rewrite.size.toLong, "kept" -> kept.size.toLong) ++
-        changeNoopMarker(dropped.nonEmpty || rewrite.nonEmpty, cdc,
-          cdcRefs),
-      cdcFiles = cdcRefs,
-      retired = m.retired, checks = m.checks)
-    DeleteResult(v, dropped.size, rewrite.size, kept.size)
+    deleteFinish(s, table, cur, m, primary, m.entries.map(e => e -> side(e)),
+      _.filter(!pred), cdc, pred)
   }
 
   /** Marks a commit that PROVABLY changed no rows: either the
@@ -3211,7 +3169,7 @@ object TxnTable {
       if (bucketKeeps) 'k' else range
     }
     val verdicts = m.entries.map(e => e -> side(e))
-    deleteInFinish(s, table, cur, m, key, verdicts,
+    deleteFinish(s, table, cur, m, key, verdicts,
       surviveNotIn(s, _, key, folded, vset,
         org.apache.spark.sql.types.LongType),
       cdc, coalesce(col(key).isin(vset: _*), lit(false)))
@@ -3294,17 +3252,21 @@ object TxnTable {
       case None => 'u'
     }
     val verdicts = m.entries.map(e => e -> side(e))
-    deleteInFinish(s, table, cur, m, key, verdicts,
+    deleteFinish(s, table, cur, m, key, verdicts,
       surviveNotIn(s, _, key, folded, vset,
         org.apache.spark.sql.types.StringType),
       cdc, coalesce(col(key).isin(vset: _*), lit(false)))
   }
 
-  /** The shared [[deleteIn]]/[[deleteInStr]] tail: apply the per-file
-    * verdicts (k kept verbatim / d pure-metadata drop / u rewrite with
-    * the exact residual), stage, publish the exact feed on request,
-    * commit with the three-way accounting. */
-  private def deleteInFinish(s: SparkSession, table: String, cur: Long,
+  /** The shared copy-on-write DELETE tail of [[deleteWhere]],
+    * [[deleteIn]] and [[deleteInStr]]: apply the per-file verdicts
+    * (k kept verbatim / d pure-metadata drop / u rewrite with the exact
+    * residual), stage, publish the exact feed on request, commit with
+    * the three-way accounting. Rewritten files read through
+    * [[readEntries]] with the COMMITTED schema: pending sequenced
+    * tombstones apply during the rewrite (the fresh files' seq then
+    * escapes them), and a column added by appendEvolve survives. */
+  private def deleteFinish(s: SparkSession, table: String, cur: Long,
       m: Manifest, key: String, verdicts: Seq[(Entry, Char)],
       survive: DataFrame => DataFrame, cdc: Boolean,
       memberPred: Column): DeleteResult = {
@@ -4142,7 +4104,7 @@ object TxnTable {
     * absolute file path, p = row ordinal) pairs committed as one
     * `#delete=<file> TAB ~pos` manifest line; [[readEntriesPos]]
     * anti-joins every read on the row's own coordinates
-    * (`_metadata.row_index` + the broadcast path map), so the kill
+    * (`_metadata.row_index` + the scan's `__gcanon`), so the kill
     * needs no key column at all and survives RENAME/DROP untouched.
     *
     * Sequencing is the standard MoR rule and positional targeting
@@ -4182,7 +4144,7 @@ object TxnTable {
     // no duplicates → no commit (an empty vector would tax every read);
     // an empty partition may also have written no file at all
     val vecRows = if (staged.isEmpty) 0L
-      else s.read.parquet(staged.map(pathFor(table, _)): _*).count()
+      else readVectors(s, table, staged).count()
     if (vecRows == 0L) { dropStaged(s, table, staged); return cur }
     commit(s, table, m.entries.map(render), cur, op = "dedup_mor",
       schemaJson = m.schema.map(_.json).orNull,
@@ -4217,7 +4179,7 @@ object TxnTable {
       .select(col("__gcanon").as("f"), col("__gpos").as("p"))
     val staged = stage(s, table, victims.coalesce(1))
     val vecRows = if (staged.isEmpty) 0L
-      else s.read.parquet(staged.map(pathFor(table, _)): _*).count()
+      else readVectors(s, table, staged).count()
     if (vecRows == 0L) { dropStaged(s, table, staged); return cur }
     commit(s, table, m.entries.map(render), cur, op = "delete_dv",
       schemaJson = m.schema.map(_.json).orNull,
@@ -4288,8 +4250,8 @@ object TxnTable {
     * tombstone into ONE file per key column WITHOUT touching any data
     * file — the between-compactions maintenance a merge-per-batch
     * stream needs, where [[applyChangesMor]] accretes one tombstone
-    * file per commit and every read pays one entry-group per
-    * accumulated seq.
+    * file per commit and every read pays one more anti-join input per
+    * accumulated file.
     *
     * The key identity: a key k's cumulative kill effect over any
     * number of tombstones is exactly "delete k from entries whose seq
@@ -4301,8 +4263,9 @@ object TxnTable {
     * (key, L) pairs per key column, recorded with a `~L`-suffixed key
     * name; the read-side anti-join compares each row's ENTRY seq
     * against its matched bound (one broadcast join total, flat however
-    * many merges accumulated). The manifest line's seq is max L, so
-    * whole entry-groups newer than every bound skip the join entirely.
+    * many merges accumulated). The manifest line's seq is max L, so a
+    * read whose entries are all newer than every bound skips the join
+    * entirely.
     * Entries carry VERBATIM; content is invariant by construction. */
   def rewriteTombstones(s: SparkSession, table: String): Long =
     rewriteTombstonesResolving(s, table).version
@@ -4346,9 +4309,8 @@ object TxnTable {
           // the (f, p) sort makes the single output file run-length
           // friendly AND lets the read-side anti-join's per-file probe
           // touch one contiguous row range per data file
-          val union = posLines.map(f =>
-            s.read.parquet(pathFor(table, f._1)))
-            .reduce(_ unionByName _).distinct().coalesce(1)
+          val union = readVectors(s, table, posLines.map(_._1))
+            .distinct().coalesce(1)
             .sortWithinPartitions(col("f"), col("p"))
           val staged = stage(s, table, union)
           require(staged.size == 1,
@@ -4372,9 +4334,9 @@ object TxnTable {
     * column, reduced to the per-key MAX bound (the newest delete
     * dominates): plain single-column files bound at their line seq,
     * bounded `~L` files at their per-row L. The single source of the
-    * bounded-kill algebra — both [[rewriteTombstones]] and the
-    * read-side join in readEntries speak through it, so the two can
-    * never disagree. */
+    * bounded-kill algebra — both [[rewriteTombstones]] and every
+    * tombstone anti-join of [[readEntriesPos]] speak through it, so the
+    * two can never disagree. */
   private def tombstonePairs(s: SparkSession, table: String, kc: String,
       fls: Seq[(String, String, Long)]): DataFrame =
     fls.map { case (p, rec, sq) =>
@@ -4409,39 +4371,18 @@ object TxnTable {
     }
   }
 
-  /** Every spelling `input_file_name()` could report for an absolute
-    * path: raw, slash-collapsed, and URI-escaped forms, each bare and
-    * under `file:`/`file://`. Paths that already carry a scheme
-    * (hdfs://, s3a://…) pass through raw — they match input_file_name
-    * verbatim, and the file-URI constructor would reject them. Shared
-    * by the bounded/positional read join ([[readEntriesPos]]) and the
-    * [[reindex]] stats-backfill lookup — any place that must resolve a
-    * scan-side file name back to its manifest entry. A RELATIVE path
-    * (a table created at a relative location) is first qualified
-    * against its filesystem's working directory — the scan reports
-    * absolute names, so the raw relative spelling would match none. */
-  private def pathVariants(s: SparkSession, path: String): Seq[String] = {
-    val p = new Path(path)
-    val abs0 =
-      if (p.isAbsolute || p.toUri.getScheme != null) path
-      else {
-        val q = fs(s, p).makeQualified(p)
-        if (q.toUri.getScheme == "file") q.toUri.getPath else q.toString
-      }
-    val norm = abs0.replaceAll("(?<!:)/{2,}", "/")
-    Seq(abs0, norm).flatMap { abs =>
-      if (!abs.startsWith("/")) Seq(abs)
-      else {
-        val esc = new java.net.URI("file", null, abs, null).getRawPath
-        Seq(abs, s"file:$abs", s"file://$abs",
-          esc, s"file:$esc", s"file://$esc")
-      }
-    }.distinct
-  }
+  /** The (f, p) rows of positional (`~pos`) vector files, read with
+    * their fixed schema — a schema-less read would run one inference job
+    * per call. */
+  private def readVectors(s: SparkSession, table: String,
+      files: Seq[String]): DataFrame =
+    s.read.schema("f STRING, p BIGINT")
+      .parquet(files.map(pathFor(table, _)): _*)
 
-  /** ONE canonical spelling for a row coordinate's file path — what
-    * positional (`~pos`) tombstones RECORD and what reads COMPARE, both
-    * derived here, so a respelled table location (double slash,
+  /** ONE canonical spelling for a row coordinate's file path — the
+    * `__gcanon` constant [[scanEntries]] attaches to each entry's rows,
+    * hence both what positional (`~pos`) tombstones RECORD and what
+    * reads COMPARE, so a respelled table location (double slash, `..`,
     * trailing slash, `file:` prefix) can never silently split a
     * committed vector from its rows. Hadoop Path normalization does the
     * collapsing; scheme'd paths normalize within their scheme.
@@ -4472,9 +4413,9 @@ object TxnTable {
   // default reads the default — not NULL — from every file that
   // PREDATES it. The default's SQL literal and the data seq it took
   // effect at ride the field's schema metadata; readEntries fills it
-  // per entry group, so every consumer (snapshot, box reads, merge
-  // rewrites, compaction) sees one consistent value and a rewrite
-  // MATERIALIZES it (fresh files carry real values at seqs ≥ since,
+  // per row from the row's entry seq, so every consumer (snapshot, box
+  // reads, merge rewrites, compaction) sees one consistent value and a
+  // rewrite MATERIALIZES it (fresh files carry real values at seqs ≥ since,
   // which is why the fill can key on the entry seq alone)
   private val FieldDefault = "gdefault"
   private val FieldDefaultSince = "gdefsince"
@@ -4972,25 +4913,24 @@ object TxnTable {
   /** Scan a set of manifest entries with merge-on-read tombstones
     * applied PER SEQUENCE: a tombstone deletes only from entries whose
     * data seq is older than its commit seq (rows written after the
-    * delete are newer and stay). Entries are grouped only by which
-    * initial column defaults apply to them — one group unless columns
-    * were added with defaults — and each group is scanned ONCE, then
-    * anti-joined once per tombstone key column, each join guarded on
-    * the row's entry seq; the groups union. Tombstone sets are small
-    * (one file of keys per delete): AQE broadcasts the build side, so
-    * each anti-join is a map-only filter, not a shuffle. */
+    * delete are newer and stay). One scan ([[scanEntries]]) carries each
+    * row's entry seq and canonical file path as columns; initial
+    * defaults fill per row from that seq, and each tombstone kind is one
+    * anti-join over those columns. Tombstone sets are small (one file of
+    * keys per delete): AQE broadcasts the build side, so each anti-join
+    * is a map-only filter, not a shuffle. */
   private def readEntries(s: SparkSession, table: String, m: Manifest,
                           entries: Seq[Entry]): DataFrame =
     readEntriesPos(s, table, m, entries, keepPos = false)
 
   /** The current (or pinned) snapshot WITH per-row coordinates — the
-    * table's logical columns plus `__gcanon` (canonical absolute file
-    * path) and `__gpos` (row ordinal within that file): exactly the
-    * coordinate space `~pos` deletion vectors record, which is what
-    * makes a DV debuggable from SQL (`SELECT _metadata.file_path ...`
-    * through the catalog resolves here — [[graft.sources
-    * .GraftMorReadRule]]). Tombstones, column mapping and initial
-    * defaults all apply: the coordinates are the surviving rows'. */
+    * table's logical columns plus `__gcanon` (canonical file path) and
+    * `__gpos` (row ordinal within that file): exactly the coordinate
+    * space `~pos` deletion vectors record, which is what makes a DV
+    * debuggable from SQL (`SELECT _metadata.file_path ...` through the
+    * catalog resolves here — [[graft.sources.GraftMorReadRule]]).
+    * Tombstones, column mapping and initial defaults all apply: the
+    * coordinates are the surviving rows'. */
   private[graft] def snapshotWithCoords(s: SparkSession, table: String,
       version: Long = -1L): DataFrame = {
     val v = if (version < 0) currentVersion(s, table) else version
@@ -4998,208 +4938,131 @@ object TxnTable {
     readEntriesPos(s, table, m, m.entries, keepPos = true)
   }
 
+  /** One parquet scan of `entries` whose rows carry their entry's
+    * constants: `__gseq` (the entry seq) and `__gcanon` (the
+    * [[canonCoord]] of its file) — partition values of a manifest-backed
+    * file index, so no scan file name is ever resolved back to an entry.
+    * Reads `schema` (PHYSICAL names); a manifest without a schema infers
+    * one from the files. */
+  private def scanEntries(s: SparkSession, table: String,
+      entries: Seq[Entry],
+      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+    ManifestScan(s, entries.map { e =>
+      val p = pathFor(table, e.path)
+      ManifestFile(p, e.seq, canonCoord(p))
+    }, schema)
+
   /** [[readEntries]] with the per-row provenance EXPOSED: `keepPos =
     * true` returns the frame with two extra columns — `__gcanon` (the
-    * row's canonical absolute file path) and `__gpos` (its ordinal
-    * within that file, parquet `_metadata.row_index`) — the coordinates
-    * POSITIONAL tombstones speak ([[dedupMor]]). */
+    * row's canonical file path) and `__gpos` (its ordinal within that
+    * file, parquet `_metadata.row_index`) — the coordinates POSITIONAL
+    * tombstones speak ([[dedupMor]]).
+    *
+    * The read is ONE scan ([[scanEntries]]) and then:
+    *  - each initial default fills `when(__gseq < since)` — keyed on the
+    *    entry seq, never a NULL test, which would repaint genuine
+    *    post-add NULLs;
+    *  - positional vectors anti-join on `(__gcanon, __gpos)`;
+    *  - each tombstoned key column anti-joins once on
+    *    `key = __tk AND __gseq < __tl` over [[tombstonePairs]]. */
   private def readEntriesPos(s: SparkSession, table: String, m: Manifest,
                              entries: Seq[Entry],
                              keepPos: Boolean): DataFrame = {
     require(entries.nonEmpty, s"$table: readEntries over zero entries")
-    // entries group ONLY by which INITIAL DEFAULTS apply (columns added
-    // with a default AFTER the entry's data was written) — the fill must
-    // be a whole-column literal per group. Tombstone applicability is
-    // NOT a group axis anymore: each anti-join below guards on the
-    // row's entry seq (`__gseq < tombstone seq`), which is the same
-    // "seq-newer deletes apply" rule the old per-(tombstone-set) groups
-    // encoded structurally — but as ONE scan + one anti-join per key
-    // column instead of one scan and one join chain PER DISTINCT
-    // TOMBSTONE SUBSET (a MoR table with k pending tombstones paid k+1
-    // scans and O(k²) anti-joins; measured 14 jobs for one snapshot
-    // aggregate at 3 tombstones, Probe mvbench).
-    val defs = m.schema.map(defaultedFields).getOrElse(Nil)
-    val groups = entries.groupBy(e => defs.filter(_._3 > e.seq))
-    groups.map { case (defsHere, es) =>
-      // only tombstones that can apply to SOME entry of this read:
-      // every tombstoned path/key file references rows strictly older
-      // than the tombstone's seq, so a read of all-newer entries skips
-      // the join outright (the fresh-adds fast path)
-      val dels = m.deletes.filter(d => es.exists(_.seq < d._3))
-      // Tombstone keys are PHYSICAL names (stable across RENAME/DROP —
-      // the manifest parse boundary guarantees it), so the anti-join
-      // runs on the RAW physical frame BEFORE the logical projection:
-      // a rename never detaches pending tombstones from their column.
-      // A key whose column was DROPPED still applies to older files —
-      // its retired physical column rides along in the read schema
-      // (type recovered from the tombstone file's own footer) and the
-      // projection below discards it.
-      // a `~L`-suffixed key marks a BOUNDED tombstone file of
-      // (key, L) pairs — [[rewriteTombstones]]' collapsed form, whose
-      // kill rule compares each row's ENTRY seq against its bound.
-      // the reserved `~pos` key marks a POSITIONAL tombstone file of
-      // (f, p) coordinates — no schema column is involved at all
-      def joinCol(rec: String): String = rec.stripSuffix("~L")
-      val (posDels, keyDels) = dels.partition(_._2 == "~pos")
-      val deadKeys = keyDels.map(d => joinCol(d._2)).distinct
-        .filterNot(pk =>
-          m.schema.forall(_.fields.exists(f => physName(f) == pk)))
-      val reader = m.schema match {
-        case Some(sch) =>
-          val extra = deadKeys.map { pk =>
-            val tf = keyDels.find(d => joinCol(d._2) == pk).get._1
-            val kdt = s.read.parquet(pathFor(table, tf))
-              .schema.fields(0).dataType
-            org.apache.spark.sql.types.StructField(pk, kdt)
-          }
-          s.read.schema(org.apache.spark.sql.types.StructType(
-            physicalSchema(sch).fields ++ extra))
-        case None => s.read
+    // only tombstones that can apply to SOME entry of this read: every
+    // tombstoned path/key file references rows strictly older than the
+    // tombstone's seq, so a read of all-newer entries skips the join
+    // outright (the fresh-adds fast path)
+    val dels = m.deletes.filter(d => entries.exists(_.seq < d._3))
+    // Tombstone keys are PHYSICAL names (stable across RENAME/DROP —
+    // the manifest parse boundary guarantees it), so the anti-join
+    // runs on the RAW physical frame BEFORE the logical projection:
+    // a rename never detaches pending tombstones from their column.
+    // A key whose column was DROPPED still applies to older files —
+    // its retired physical column rides along in the read schema
+    // (type recovered from the tombstone file's own footer) and the
+    // projection below discards it.
+    // a `~L`-suffixed key marks a BOUNDED tombstone file of
+    // (key, L) pairs — [[rewriteTombstones]]' collapsed form.
+    // the reserved `~pos` key marks a POSITIONAL tombstone file of
+    // (f, p) coordinates — no schema column is involved at all
+    def joinCol(rec: String): String = rec.stripSuffix("~L")
+    val (posDels, keyDels) = dels.partition(_._2 == "~pos")
+    val deadKeys = keyDels.map(d => joinCol(d._2)).distinct
+      .filterNot(pk =>
+        m.schema.forall(_.fields.exists(f => physName(f) == pk)))
+    val readSchema = m.schema.map { sch =>
+      val extra = deadKeys.map { pk =>
+        val tf = keyDels.find(d => joinCol(d._2) == pk).get._1
+        val kdt = s.read.parquet(pathFor(table, tf))
+          .schema.fields(0).dataType
+        org.apache.spark.sql.types.StructField(pk, kdt)
       }
-      val hasPos = keepPos || posDels.nonEmpty
-      val raw0 = reader.parquet(es.map(e => pathFor(table, e.path)): _*)
-      // the row's file ordinal must come straight off the file-source
-      // relation (a join would detach the metadata column)
-      val rawPos = if (hasPos)
+      org.apache.spark.sql.types.StructType(
+        physicalSchema(sch).fields ++ extra)
+    }
+    val raw0 = scanEntries(s, table, entries, readSchema)
+    // the row's file ordinal must come straight off the file-source
+    // relation (a join would detach the metadata column)
+    val rawPos =
+      if (keepPos || posDels.nonEmpty)
         raw0.withColumn("__gpos", col("_metadata.row_index"))
       else raw0
-      // INITIAL DEFAULTS fill BEFORE the tombstone anti-joins: a
-      // tombstone keyed on a defaulted column must match the value the
-      // row READS (the default), not the stored NULL — the same value
-      // every other consumer sees. Every entry in this group predates
-      // the same defaulted columns (part of the group key), so the fill
-      // is one whole-column literal per field — never a per-row NULL
-      // test, which would repaint genuine post-add NULLs
-      val raw = defsHere.foldLeft(rawPos) {
-        case (acc, (f, defSql, _, _)) =>
-          acc.withColumn(physName(f), expr(defSql).cast(f.dataType))
+    // INITIAL DEFAULTS fill BEFORE the tombstone anti-joins: a
+    // tombstone keyed on a defaulted column must match the value the
+    // row READS (the default), not the stored NULL — the same value
+    // every other consumer sees
+    val raw = m.schema.map(defaultedFields).getOrElse(Nil)
+      .filter(d => entries.exists(_.seq < d._3))
+      .foldLeft(rawPos) { case (acc, (f, defSql, since, _)) =>
+        acc.withColumn(physName(f), when(col("__gseq") < since,
+          expr(defSql).cast(f.dataType)).otherwise(col(physName(f))))
       }
-      // which key columns can take the SIMPLE (seq-free) anti-join: every
-      // entry of this read predates every tombstone on that column — the
-      // historical common case (all-plain tombstones over an old table),
-      // which must not start paying the seq machinery it never needed
-      val byCol = keyDels.groupBy(d => joinCol(d._2))
-      val simpleCols = byCol.filter { case (_, fls) =>
-        fls.forall(f => !f._2.endsWith("~L")) &&
-          es.forall(e => fls.forall(e.seq < _._3))
-      }.keySet
-      val seqCols = byCol.keySet -- simpleCols
-      val needSeq = seqCols.nonEmpty
-      // seq-guarded kills need the row's entry seq: a broadcast-joined
-      // (path, seq) frame resolves it from input_file_name() — the
-      // mapping ships ONCE per executor as a broadcast relation, never
-      // as an O(#files) literal serialized into every task's expression
-      // tree, so a million-file table with a pending bounded tombstone
-      // still plans in O(1) plan bytes. The post-join null guard turns
-      // a failed lookup into a loud error, not a silent
-      // resurrect/over-delete. input_file_name() yields a URI-escaped
-      // `file:` form whose exact shape varies — the frame carries every
-      // raw/escaped/scheme variant of each path, so a table dir with
-      // spaces (or other escaped characters) still resolves after a
-      // tombstone rewrite.
-      val withSeq =
-        if (!needSeq && !hasPos) raw
-        else {
-          // each variant maps to the entry's (seq, canonical absolute
-          // path): seq feeds bounded kills, the canonical path is the
-          // file coordinate positional tombstones record. [[canonCoord]]
-          // normalizes the spelling on BOTH sides (vectors are written
-          // from this very column), so a session that respells the same
-          // table location can never silently detach a vector from its
-          // rows; clones stay covered because absolute entry paths pass
-          // through [[pathFor]] verbatim before canonicalization
-          val pathSeqRows = es.flatMap(e =>
-            pathVariants(s, pathFor(table, e.path)).map(v =>
-              Row(v, e.seq, canonCoord(pathFor(table, e.path)))))
-          // parallelize (not a LocalRelation literal): the rows ride the
-          // RDD's serialized partitions, sliced so no single task drags
-          // the whole mapping through its closure
-          val slices = math.max(1, pathSeqRows.size / 65536)
-          val pathSeqDf = s.createDataFrame(
-            s.sparkContext.parallelize(pathSeqRows, slices),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("__gpath",
-                org.apache.spark.sql.types.StringType, nullable = false),
-              org.apache.spark.sql.types.StructField("__gseq",
-                org.apache.spark.sql.types.LongType, nullable = false),
-              org.apache.spark.sql.types.StructField("__gcanon",
-                org.apache.spark.sql.types.StringType, nullable = false))))
-          raw.withColumn("__gpath", input_file_name())
-            .join(broadcast(pathSeqDf), Seq("__gpath"), "left")
-            .withColumn("__gseq",
-              when(col("__gseq").isNull, raise_error(concat(
-                lit(s"$table: unmapped scan file for bounded tombstone: "),
-                col("__gpath")))).otherwise(col("__gseq")))
-            .drop("__gpath")
-        }
-      // tombstone key FILES may carry the logical-at-delete-time name —
-      // read positionally, join physical.
-      // BROADCAST the tombstone side when its on-disk weight is small
-      // (the overwhelmingly common change-set-sized case): the data scan
-      // then streams through broadcast hash anti-joins with zero
-      // exchanges — on a MoR table every read pays these joins, so the
-      // shuffle-free shape is the one that scales (guide §3.1). A
-      // pathologically large tombstone set falls back to the planner's
-      // choice rather than forcing an executor-memory cliff.
-      def hinted(df: DataFrame, files: Seq[String]): DataFrame =
-        if (broadcastable(fs(s, new Path(table)),
-            files.map(p => new Path(pathFor(table, p))))) broadcast(df)
-        else df
-      val posCleaned =
-        if (posDels.isEmpty) withSeq
-        else {
-          // POSITIONAL tombstones: (f = canonical absolute path,
-          // p = row ordinal) pairs — an anti-join on the row's own
-          // coordinates, no schema column involved. Path-targeting
-          // makes the seq rule self-enforcing: a vector only ever
-          // records coordinates of files strictly older than it, and a
-          // path is never re-referenced at a different seq.
-          val dv = posDels.map(f => s.read.parquet(pathFor(table, f._1)))
-            .reduce(_ unionByName _)
-            .select(col("f").as("__gdf"), col("p").as("__gdp"))
-            .distinct()
-          withSeq.join(hinted(dv, posDels.map(_._1)),
-            withSeq("__gcanon") === dv("__gdf") &&
-              withSeq("__gpos") === dv("__gdp"),
-            "left_anti")
-        }
-      // ONE anti-join per tombstoned key column: all its tombstone
-      // files (plain AND collapsed `~L`) union into (key, bound) pairs
-      // — [[tombstonePairs]] — and the row dies iff its key matches and
-      // its entry seq is below the bound: exactly the "seq-newer
-      // tombstones apply" rule, enforced per row instead of per entry
-      // group. Columns where every entry predates every tombstone keep
-      // the seq-free membership join.
-      val cleaned = byCol.toSeq.sortBy(_._1).foldLeft(posCleaned) {
-        case (acc, (kc, fls)) if simpleCols(kc) =>
-          val keys = fls.map { f =>
-            val kdf = s.read.parquet(pathFor(table, f._1))
-            kdf.select(col(kdf.columns.head).as(kc))
-          }.reduce(_ unionByName _).distinct()
-          acc.join(hinted(keys, fls.map(_._1)), Seq(kc), "left_anti")
-        case (acc, (kc, fls)) =>
-          val keys = tombstonePairs(s, table, "__tk", fls)
-          acc.join(hinted(keys, fls.map(_._1)),
-            acc(kc) === keys("__tk") && acc("__gseq") < keys("__tl"),
-            "left_anti")
+    // BROADCAST the tombstone side when its on-disk weight is small
+    // (the overwhelmingly common change-set-sized case): the data scan
+    // then streams through broadcast hash anti-joins with zero
+    // exchanges — on a MoR table every read pays these joins, so the
+    // shuffle-free shape is the one that scales (guide §3.1). A
+    // pathologically large tombstone set falls back to the planner's
+    // choice rather than forcing an executor-memory cliff.
+    def hinted(df: DataFrame, files: Seq[String]): DataFrame =
+      if (broadcastable(fs(s, new Path(table)),
+          files.map(p => new Path(pathFor(table, p))))) broadcast(df)
+      else df
+    val posCleaned =
+      if (posDels.isEmpty) raw
+      else {
+        // POSITIONAL tombstones: (f = canonical path, p = row ordinal)
+        // pairs. Path-targeting makes the seq rule self-enforcing: a
+        // vector only ever records coordinates of files strictly older
+        // than it, and a path is never re-referenced at a different seq.
+        val dv = readVectors(s, table, posDels.map(_._1))
+          .select(col("f").as("__gdf"), col("p").as("__gdp"))
+          .distinct()
+        raw.join(hinted(dv, posDels.map(_._1)),
+          raw("__gcanon") === dv("__gdf") && raw("__gpos") === dv("__gdp"),
+          "left_anti")
       }
-      val filled = cleaned
-      // mapped tables project physical → the committed LOGICAL schema
-      // here — the single choke point every library read, rewrite, and
-      // compaction funnels through (also drops dead tombstone columns
-      // and the bounded-kill/positional bookkeeping columns)
-      val posCols: Seq[Column] =
-        if (keepPos) Seq(col("__gcanon"), col("__gpos")) else Nil
-      m.schema match {
-        case Some(sch) if hasMappedSchema(m.schema) || deadKeys.nonEmpty ||
-            needSeq || hasPos =>
-          filled.select(sch.fields.map(f =>
-            col(physName(f)).as(f.name)).toSeq ++ posCols: _*)
-        case _ =>
-          if (keepPos) filled.drop("__gseq")
-          else filled.drop("__gseq", "__gcanon", "__gpos")
+    // ONE anti-join per tombstoned key column: all its tombstone files
+    // (plain AND collapsed `~L`) union into (key, bound) pairs —
+    // [[tombstonePairs]] — and the row dies iff its key matches and its
+    // entry seq is below the bound. Tombstone key FILES may carry the
+    // logical-at-delete-time name — read positionally, join physical.
+    val cleaned = keyDels.groupBy(d => joinCol(d._2)).toSeq.sortBy(_._1)
+      .foldLeft(posCleaned) { case (acc, (kc, fls)) =>
+        val keys = tombstonePairs(s, table, "__tk", fls)
+        acc.join(hinted(keys, fls.map(_._1)),
+          acc(kc) === keys("__tk") && acc("__gseq") < keys("__tl"),
+          "left_anti")
       }
-    }.reduce(_ unionByName _)
+    // mapped tables project physical → the committed LOGICAL schema
+    // here — the single choke point every library read, rewrite, and
+    // compaction funnels through (also drops dead tombstone columns
+    // and the per-entry and positional bookkeeping columns)
+    val out = cleaned.drop(Seq("__gseq") ++ deadKeys ++
+      (if (keepPos) Nil else Seq("__gcanon", "__gpos")): _*)
+    val logical = physMap(m).map(_.swap)
+    out.toDF(out.columns.toSeq.map(c => logical.getOrElse(c, c)): _*)
   }
 
   /** Shared tail of every stat-pruned read (box / IS NULL / string
@@ -7078,42 +6941,27 @@ object TxnTable {
       s"$table: reindex on a column-mapped table is not supported " +
         "(stat groups speak physical names) — compact() restages with " +
         "stats under the live index instead")
-    val sch = m.schema.getOrElse(snapshot(s, table, cur).schema)
-    def abs(e: Entry): String = pathFor(table, e.path)
-    def norm(p: String): String = new Path(p).toUri.getPath
-    // statGroupsByFile keys by RAW input_file_name() — a URI-escaped
-    // `file:` form for paths with spaces etc. that single-form
-    // normalization cannot match. Resolve each scan key through the
-    // same variant space the read join uses, and fail LOUDLY on a
-    // miss: an unmatched file silently falling into the zero-row
-    // sentinel branch would hand every stats consumer (metadata-only
-    // aggregates, the zero-row DML filters) wrong answers
-    val varIndex: Map[String, String] = m.entries.flatMap(e =>
-      pathVariants(s, abs(e)).map(v => (v, norm(abs(e))))).toMap
+    def abs(e: Entry): Path = new Path(pathFor(table, e.path))
     val byFile =
       if (m.entries.isEmpty) Map.empty[String,
         (Seq[ColStat], Seq[HllStat], Seq[StrStat])]
-      else statGroupsByFile(
-        s.read.schema(sch).parquet(m.entries.map(abs): _*),
-        indexCols, strCols).map { case (f, v) =>
-        (varIndex.getOrElse(f, sys.error(
-          s"$table: reindex cannot map scanned file $f back to a " +
-            "manifest entry — path-variant resolution bug")), v)
-      }
-    // byte sizes from one listing per distinct parent directory
-    val sizes = m.entries.map(e => new Path(abs(e)).getParent).distinct
+      else statGroupsByFile(scanEntries(s, table, m.entries, m.schema),
+        col("__gcanon"), indexCols, strCols)
+    // byte sizes from one listing per distinct parent directory, keyed
+    // by (directory, file name) — the spelling-proof key
+    val sizes = m.entries.map(abs(_).getParent).distinct
       .flatMap { d =>
         val f = fs(s, d)
         if (f.exists(d))
-          f.listStatus(d).toSeq.map(st =>
-            (norm(st.getPath.toString), st.getLen))
+          f.listStatus(d).toSeq.map(st => ((d, st.getPath.getName), st.getLen))
         else Nil
       }.toMap
     val lines = m.entries.map { e =>
-      byFile.get(norm(abs(e))) match {
+      byFile.get(canonCoord(pathFor(table, e.path))) match {
         case Some((ints, hlls, strs)) =>
           render(e.copy(stats = ints, strStats = strs, hlls = hlls,
-            bytes = sizes.getOrElse(norm(abs(e)), e.bytes)))
+            bytes = sizes.getOrElse((abs(e).getParent, abs(e).getName),
+              e.bytes)))
         // no stats row ⇒ the scan saw zero rows in it: a true zero-row
         // sentinel — stays PATH-ONLY (the convention downstream)
         case None => render(e.copy(stats = Nil, strStats = Nil,

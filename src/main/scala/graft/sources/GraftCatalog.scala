@@ -612,8 +612,8 @@ class GraftTable(ident: String, private[sources] val location: String,
 
   /** Whether this snapshot still has LIVE FILES predating an
     * INITIAL-DEFAULT column: such files must read the default, not
-    * NULL, so SQL reads go through the snapshot plan (the
-    * per-entry-group fill lives in readEntries) — a direct parquet
+    * NULL, so SQL reads go through the snapshot plan (readEntries fills
+    * it per row from the row's entry seq) — a direct parquet
     * scan would silently answer NULL. After a compact materializes
     * every default this answers false and the direct-scan fast path
     * returns (the write-side CURRENT_DEFAULT metadata stays). */

@@ -69,11 +69,12 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
   * swaps such a relation (READ positions only — DML targets keep their
   * relation so the DML rules above and the delete path still see the
   * table) for the exact plan the library read builds:
-  * [[TxnTable.snapshot]]'s per-sequence-group scan with the tombstone
-  * anti-joins, projected back onto the relation's output attribute ids.
+  * [[TxnTable.snapshot]]'s one scan (each row carrying its entry seq
+  * and canonical file path) with the tombstone anti-joins, projected
+  * back onto the relation's output attribute ids.
   * SQL readers — current or pinned via `VERSION AS OF` — then see
   * through tombstones precisely like library readers; filter pushdown
-  * and column pruning still apply to the underlying parquet relations
+  * and column pruning still apply to the underlying parquet relation
   * through Catalyst. The scan-builder refusal remains as the loud
   * backstop for paths that bypass analysis. */
 object GraftMorReadRule {

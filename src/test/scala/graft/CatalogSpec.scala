@@ -2824,19 +2824,9 @@ class CatalogSpec extends SparkSpec {
     sql(s"INSERT INTO graft.spec.$src SELECT id, 'a' FROM RANGE(100)")
     drain() // warm: the stream's first epoch
     sql(s"INSERT INTO graft.spec.$src SELECT id + 100, 'b' FROM RANGE(100)")
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.SpecBus.drain(sc)
-    sc.addSparkListener(l)
-    try { drain(); org.apache.spark.SpecBus.drain(sc) }
-    finally sc.removeSparkListener(l)
+    val jobs = org.apache.spark.SpecBus.jobsDuring(spark.sparkContext)(drain())
     // the epoch's write job alone — its files' stats come back with it
-    assert(jobs.get === 1, s"one drained epoch ran ${jobs.get} Spark jobs")
+    assert(jobs === 1, s"one drained epoch ran $jobs Spark jobs")
     val loc = s"${GraftCatalog.defaultWarehouse}/spec/$dst"
     val m = TxnTable.manifest(spark, loc, TxnTable.currentVersion(spark, loc))
     // every epoch file carries its stats (CREATE TABLE's zero-row

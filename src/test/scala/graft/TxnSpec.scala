@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.TxnTable
+import org.apache.spark.SpecBus
 import org.apache.spark.sql.functions._
 
 /** The transaction-log contract (TxnTable): manifest-resolved reads,
@@ -2157,7 +2158,18 @@ class TxnSpec extends SparkSpec {
     assert(TxnTable.snapshot(spark, t).count() === expect.size + 1L)
     TxnTable.deleteWherePos(spark, t, col("m") === 3)
     assert(TxnTable.snapshot(spark, t).count() === expect.size.toLong)
-    // compact folds both vectors away; content preserved
+    // vectors read with their fixed schema: building a snapshot over
+    // two pending vectors runs no Spark job (a schema-less read infers
+    // with one job per vector file)
+    assert(SpecBus.jobsDuring(spark.sparkContext)(
+      TxnTable.snapshot(spark, t)) === 0)
+    // the collapse of the two vectors is its staged union write alone
+    // (the distinct's shuffle stage and the write): no inference jobs
+    val collapseJobs = SpecBus.jobsDuring(spark.sparkContext)(
+      TxnTable.rewriteTombstones(spark, t))
+    assert(collapseJobs === 2, s"vector collapse ran $collapseJobs jobs")
+    assert(TxnTable.snapshot(spark, t).count() === expect.size.toLong)
+    // compact folds the collapsed vector away; content preserved
     val vc = TxnTable.compact(spark, t)
     assert(TxnTable.deleteFiles(spark, t, vc).isEmpty)
     assert(TxnTable.snapshot(spark, t).as[(Long, Int, String)]
@@ -2835,22 +2847,6 @@ class TxnSpec extends SparkSpec {
     assert(eW.getMessage.contains("long box range"), eW.getMessage)
   }
 
-  /** Spark jobs started while `f` runs. */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.SpecBus.drain(sc)
-    sc.addSparkListener(l)
-    try { f; org.apache.spark.SpecBus.drain(sc) }
-    finally sc.removeSparkListener(l)
-    jobs.get
-  }
-
   /** The staging stats pass as it ran before stats moved into the write:
     * re-read the just-staged files (one staging dir) and aggregate per
     * `input_file_name()`, sizes from one listing. Kept here as the
@@ -2861,7 +2857,7 @@ class TxnSpec extends SparkSpec {
     val dir = rels.head.split('/').dropRight(1).mkString("/")
     assert(rels.forall(_.startsWith(dir + "/")))
     val stats = TxnTable.statGroupsByFile(spark.read.parquet(s"$t/$dir"),
-      idx, str).map { case (f, v) => (f.split('/').last, v) }
+      input_file_name(), idx, str).map { case (f, v) => (f.split('/').last, v) }
     val dirP = new org.apache.hadoop.fs.Path(s"$t/$dir")
     val sizes = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .listStatus(dirP).map(st => (st.getPath.getName, st.getLen)).toMap
@@ -2923,7 +2919,7 @@ class TxnSpec extends SparkSpec {
     TxnTable.reindex(spark, t, Seq("k"), Seq("v"))
     val batch = baseDf(100).withColumn("k", col("k") + 1000L)
     TxnTable.append(spark, t, batch) // warm
-    val jobs = jobsDuring(TxnTable.append(spark, t,
+    val jobs = SpecBus.jobsDuring(spark.sparkContext)(TxnTable.append(spark, t,
       batch.withColumn("k", col("k") + 1000L)))
     assert(jobs === 1, s"a 100-row indexed append ran $jobs Spark jobs")
     val m = TxnTable.manifest(spark, t, TxnTable.currentVersion(spark, t))
@@ -2936,27 +2932,83 @@ class TxnSpec extends SparkSpec {
       s"the appended files' stats must prune ($scanned/$total)")
   }
 
-  test("bounded-tombstone reads work on a table at a RELATIVE location") {
+  test("MoR reads match a model at relative, `..`, spaced and `//` paths") {
     val s = spark
     import s.implicits._
-    val t = s"target/graft_relspec_${ProcessHandle.current().pid()}/t"
-    Fs.deleteRecursively(t)
-    try {
-      TxnTable.create(spark, t,
-        (0L until 20L).map(i => (i, s"r$i")).toDF("k", "v"))
+    val rel = s"target/graft_relspec_${ProcessHandle.current().pid()}"
+    val abs = Fs.scratch("graft_txnspec", "spellings")
+    Seq(rel, abs).foreach(Fs.deleteRecursively)
+    new java.io.File(s"$abs/sub").mkdirs()
+    val spellings = Seq(
+      "relative" -> s"$rel/t",
+      "dot-dot" -> s"$abs/sub/../dd/t",
+      "space" -> s"$abs/with space/t",
+      "doubled slash" -> s"$abs//dbl/t")
+    try spellings.foreach { case (name, t) =>
+      var model = (0L until 40L).map(i => i -> s"r$i").toMap
+      TxnTable.create(spark, t, model.toSeq.toDF("k", "v").repartition(2))
+      def check(step: String): Unit =
+        assert(TxnTable.snapshot(spark, t).as[(Long, String)].collect()
+          .sorted.toSeq === model.toSeq.sorted, s"$name: after $step")
+      def deleteKinds: Seq[String] = TxnTable.manifest(spark, t,
+        TxnTable.currentVersion(spark, t)).deletes.map(_._2)
       TxnTable.applyChangesMor(spark, t,
         Seq((1L, "", "D"), (2L, "u2", "U")).toDF("k", "v", "op"), "k")
       TxnTable.applyChangesMor(spark, t,
         Seq((3L, "", "D")).toDF("k", "v", "op"), "k")
+      model = model -- Seq(1L, 3L) + (2L -> "u2")
+      check("applyChangesMor")
       TxnTable.rewriteTombstones(spark, t)
+      assert(deleteKinds === Seq("k~L"), name)
+      check("rewriteTombstones")
+      TxnTable.deleteWherePos(spark, t, col("k") % 5 === 0)
+      model = model.filterNot(_._1 % 5 == 0)
+      assert(deleteKinds.sorted === Seq("k~L", "~pos"), name)
+      check("deleteWherePos")
+      TxnTable.compact(spark, t)
+      assert(deleteKinds.isEmpty, name)
+      check("compact")
+      TxnTable.reindex(spark, t, Seq("k"))
+      check("reindex")
       val m = TxnTable.manifest(spark, t, TxnTable.currentVersion(spark, t))
-      assert(m.deletes.map(_._2) === Seq("k~L"))
-      val got = TxnTable.snapshot(spark, t).as[(Long, String)].collect()
-        .sorted.toSeq
-      assert(got === ((0L until 20L).filterNot(Set(1L, 2L, 3L))
-        .map(i => (i, s"r$i")) :+ ((2L, "u2"))).sorted)
-    } finally Fs.deleteRecursively(s"target/graft_relspec_" +
-      ProcessHandle.current().pid())
+      assert(m.entries.forall(e => e.statFor("k").nonEmpty && e.bytes > 0),
+        s"$name: reindex left an entry without stats or byte size")
+    } finally Seq(rel, abs).foreach(Fs.deleteRecursively)
+  }
+
+  test("a MoR snapshot is ONE data-file scan: default, tombstone, vector") {
+    // a pending initial default, a tombstone keyed on the defaulted
+    // column and a deletion vector all apply within one scan
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.types.{StringType, StructField}
+    val t = freshTable("one_scan")
+    TxnTable.create(spark, t, baseDf(20).repartition(2))
+    TxnTable.addColumnsDefault(spark, t,
+      Seq((StructField("tier", StringType), "'bronze'")))
+    TxnTable.append(spark, t, Seq((100L, "a", "gold"), (101L, "b", "bronze"),
+      (102L, "c", null)).toDF("k", "v", "tier"))
+    TxnTable.deleteWherePos(spark, t, col("k") === 102L)
+    // kills every OLDER row that READS bronze: the 20 pre-default rows
+    // (filled) and 101 — not the NULL, which is no default
+    TxnTable.deleteKeysMor(spark, t, Seq("bronze").toDF("tier"), "tier")
+    TxnTable.append(spark, t, Seq((103L, "d", "bronze")).toDF("k", "v", "tier"))
+    val v = TxnTable.currentVersion(spark, t)
+    val snap = TxnTable.snapshot(spark, t, v)
+    assert(snap.as[(Long, String, String)].collect().sorted.toSeq ===
+      Seq((100L, "a", "gold"), (103L, "d", "bronze")))
+    def norm(f: String): String = new org.apache.hadoop.fs.Path(f).toUri.getPath
+    val live = TxnTable.liveFiles(spark, t, v).map(r => norm(s"$t/$r")).toSet
+    val scans = new org.apache.spark.sql.execution.adaptive
+        .AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(snap.queryExecution.executedPlan) {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.relation.location.inputFiles.map(norm).toSet
+      }
+      .filter(_.exists(live))
+    assert(scans === Seq(live), s"data-file scans: $scans")
+    assert(!snap.queryExecution.analyzed.exists(
+      _.output.exists(_.name == "__gpath")), "a scan-path column survived")
   }
 
   test("broadcast sizing: an unknown file size never broadcasts") {
