@@ -93,36 +93,25 @@ object MatView {
   private def fs(s: SparkSession, p: Path) =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  /** Every definition file is one line per field, each terminated. */
+  /** Publish a definition file, one line per field, each terminated —
+    * written once, whole or not at all ([[LogFile.publish]]), after the
+    * view's first commit, so a reader never parses a torn definition. */
   private def writeDefFile(s: SparkSession, mv: String, file: String,
       lines: Seq[String]): Unit = {
     val p = new Path(s"$mv/$file")
-    val out = fs(s, p).create(p, false)
-    try out.write(lines.mkString("", "\n", "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** The definition file's lines, or None when `mv` holds no such file. */
-  private def readDefFile(s: SparkSession, mv: String, file: String)
-      : Option[Seq[String]] = {
-    val p = new Path(s"$mv/$file")
-    if (!fs(s, p).exists(p)) None
-    else {
-      val in = fs(s, p).open(p)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      Some(txt.linesIterator.toSeq)
-    }
+    require(LogFile.publish(fs(s, p), TxnTable.logDir(mv), p,
+      lines.mkString("", "\n", "\n")), s"$mv already holds a $file definition")
   }
 
   /** The view's stored definition: the first of `_mv`, `_mvj`, `_mvx`,
     * `_mvl` that exists, decoded by its kind's parser. A fold view
-    * costs one existence probe and one read, like any single-file
-    * definition read; refuses loudly when `mv` holds no definition. */
+    * costs one read, like any single-file definition read; refuses
+    * loudly when `mv` holds no definition. */
   def definition(s: SparkSession, mv: String): ViewDef = {
-    def read(file: String)(parse: Seq[String] => ViewDef) =
-      readDefFile(s, mv, file).map(parse)
+    def read(file: String)(parse: Seq[String] => ViewDef) = {
+      val p = new Path(s"$mv/$file")
+      LogFile.read(fs(s, p), p).map(t => parse(t.linesIterator.toSeq))
+    }
     read("_mv")(parseFold(mv, _))
       .orElse(read("_mvj")(parseJoin(mv, _)))
       .orElse(read("_mvx")(parseExtrema(mv, _)))

@@ -7,7 +7,7 @@ import graft.Tables
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.{ManifestFile, ManifestScan, StatsWrite}
+import org.apache.spark.sql.graftbridge.{Bridge, ManifestFile, ManifestScan, StatsWrite}
 import org.apache.spark.sql.types.DecimalType
 
 /** A minimal transaction log over immutable parquet files — the public
@@ -22,13 +22,15 @@ import org.apache.spark.sql.types.DecimalType
   *                                 when committed with per-file stats
   *
   * The COMMIT is the atomic unit: a writer stages new parquet files under a
-  * fresh uuid dir (invisible — no manifest references them), writes the next
-  * manifest to a `.tmp-*` name, and RENAMEs it to `NNNNNNNN.manifest`. HDFS
-  * rename is atomic and fails if the destination exists, so of two racing
-  * writers exactly one wins version N and the loser retries against N — the
-  * compare-and-swap at the heart of every public table format. (The local
-  * filesystem overwrites on rename, so we pre-check existence; an object
-  * store would use a conditional PUT — same protocol, different primitive.)
+  * fresh uuid dir (invisible — no manifest references them), then PUBLISHES
+  * the next manifest as `NNNNNNNN.manifest` by an atomic create-if-absent
+  * ([[LogFile.publish]]: a hard link on the local filesystem, a rename on
+  * HDFS — both refuse an existing name), so of two racing writers, in one
+  * process or in two, exactly one wins version N and the loser retries
+  * against N — the compare-and-swap at the heart of every public table
+  * format. Every other log file (pends, transaction markers, tags, branch
+  * refs, merge marks, checkpoints) is published and read through the same
+  * module.
   *
   * Readers resolve a snapshot by reading ONE manifest and scanning exactly
   * the files it lists — never by listing the data directory. That single
@@ -50,7 +52,7 @@ object TxnTable {
   private def fs(s: SparkSession, p: Path): FileSystem =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  private def logDir(table: String): Path = new Path(table, "_log")
+  private[graft] def logDir(table: String): Path = new Path(table, "_log")
 
   private def manifestPath(table: String, v: Long): Path =
     new Path(logDir(table), f"$v%08d.manifest")
@@ -146,107 +148,53 @@ object TxnTable {
     * O(versions)); incremented on every manifest or checkpoint open. */
   private[graft] val logReads = new java.util.concurrent.atomic.AtomicLong
 
-  private def manifestText(s: SparkSession, table: String, v: Long): String = {
+  /** Version `v`'s manifest through one [[LogFile]] reader — its whole
+    * text, or a [[manifestHeader]] walk — counted as one log read;
+    * refuses a version that is not (or no longer) in the log. */
+  private def readLog[A](s: SparkSession, table: String, v: Long)(
+      read: (FileSystem, Path) => Option[A]): A = {
     val mp = manifestPath(table, v)
-    val f = fs(s, mp)
-    require(f.exists(mp), s"$table version $v not found (vacuumed or never committed)")
+    val r = read(fs(s, mp), mp).getOrElse(throw new IllegalArgumentException(
+      s"$table version $v not found (vacuumed or never committed)"))
     logReads.incrementAndGet()
-    val in = f.open(mp)
-    try new String(in.readAllBytes(), UTF_8) finally in.close()
+    r
   }
 
-  /** Read ONLY the `#ts=` header of version `v`'s manifest — commit
-    * needs just the previous timestamp to monotonize its own, and
-    * re-reading + fully parsing the whole previous manifest (every entry
-    * line) per commit would roughly double manifest I/O on large tables.
-    * Headers lead the file (#format, #op, #ts come first), so this stops
-    * after a handful of lines; −1 for pre-timestamp manifests. */
-  private def manifestHeaderTs(s: SparkSession, table: String, v: Long)
-      : Long = {
-    val mp = manifestPath(table, v)
-    val f = fs(s, mp)
-    require(f.exists(mp),
-      s"$table version $v not found (vacuumed or never committed)")
-    logReads.incrementAndGet()
-    val in = f.open(mp)
-    try {
-      val br = new java.io.BufferedReader(
-        new java.io.InputStreamReader(in, UTF_8))
-      var line = br.readLine()
-      while (line != null && line.startsWith("#") &&
-        !line.startsWith("#ts=")) line = br.readLine()
-      if (line != null && line.startsWith("#ts="))
-        line.stripPrefix("#ts=").toLong
-      else -1L
-    } finally in.close()
-  }
+  /** `walk` over version `v`'s leading `#` header lines only: headers
+    * lead the file (#format, #op, #ts, #metrics in that fixed order), so
+    * a walk that stops early costs O(header) whatever the table's file
+    * count — what lets commit carry its parent's timestamp and ledger,
+    * and a lineage scan read metrics, without parsing entry lines. */
+  private def manifestHeader[A](s: SparkSession, table: String, v: Long)(
+      walk: Iterator[String] => A): A =
+    readLog(s, table, v)(LogFile.header(_, _)(walk))
 
-  /** One header-only pass over version `v`'s manifest for what [[commit]]
-    * must CARRY from its parent: the commit timestamp (monotonization)
-    * and the cumulative `#txn=` idempotent-writer ledger. Stops at the
-    * first entry line — O(header) whatever the table's file count. */
-  private def manifestHeaderTsTxns(s: SparkSession, table: String, v: Long)
-      : (Long, Map[String, Long]) = {
-    val mp = manifestPath(table, v)
-    val f = fs(s, mp)
-    require(f.exists(mp),
-      s"$table version $v not found (vacuumed or never committed)")
-    logReads.incrementAndGet()
-    val in = f.open(mp)
-    try {
-      val br = new java.io.BufferedReader(
-        new java.io.InputStreamReader(in, UTF_8))
-      var ts = -1L
-      val txns = scala.collection.mutable.Map.empty[String, Long]
-      var line = br.readLine()
-      while (line != null && line.startsWith("#")) {
-        if (line.startsWith("#ts=")) ts = line.stripPrefix("#ts=").toLong
-        else if (line.startsWith("#txn=")) {
-          val Array(a, b) = line.stripPrefix("#txn=").split('\t')
-          txns.put(b64dec(a), b.toLong)
-        }
-        line = br.readLine()
-      }
-      (ts, txns.toMap)
-    } finally in.close()
-  }
+  /** The `#ts=` commit timestamp of a header walk (−1 for pre-timestamp
+    * manifests); stops at the `#ts=` line. */
+  private def tsOf(header: Iterator[String]): Long =
+    header.collectFirst { case l if l.startsWith("#ts=") =>
+      l.stripPrefix("#ts=").toLong }.getOrElse(-1L)
 
   /** Read ONLY metric `key` from version `v`'s `#metrics=` header (−1
-    * when absent). #format/#op/#ts/#metrics lead the manifest in that
-    * fixed order, so this stops after ≤4 lines — [[mergeBranch]]'s
-    * resume scan walks a lineage with it instead of fully parsing every
-    * manifest's entry lines (O(commits) tiny reads, never
-    * O(commits × table files)). */
+    * when absent) — [[mergeBranch]]'s resume scan walks a lineage with
+    * it instead of fully parsing every manifest's entry lines
+    * (O(commits) tiny reads, never O(commits × table files)). */
   private[operators] def manifestHeaderMetric(s: SparkSession,
       table: String, v: Long, key: String): Long =
     manifestHeaderMetrics(s, table, v).getOrElse(key, -1L)
 
-  /** Every metric of version `v`'s `#metrics=` header, read the same
-    * way as [[manifestHeaderMetric]] (≤4 lines, one open) — for a
-    * reader that needs several metrics of one commit. */
+  /** Every metric of version `v`'s `#metrics=` header: the walk stops at
+    * the first line past #format/#op/#ts (≤4 lines, one open). */
   private[operators] def manifestHeaderMetrics(s: SparkSession,
-      table: String, v: Long): Map[String, Long] = {
-    val mp = manifestPath(table, v)
-    val f = fs(s, mp)
-    require(f.exists(mp),
-      s"$table version $v not found (vacuumed or never committed)")
-    logReads.incrementAndGet()
-    val in = f.open(mp)
-    try {
-      val br = new java.io.BufferedReader(
-        new java.io.InputStreamReader(in, UTF_8))
-      var line = br.readLine()
-      while (line != null && (line.startsWith("#format=") ||
-        line.startsWith("#op=") || line.startsWith("#ts=")))
-        line = br.readLine()
-      if (line != null && line.startsWith("#metrics="))
-        line.stripPrefix("#metrics=").split(',').toSeq.flatMap { kv =>
+      table: String, v: Long): Map[String, Long] =
+    manifestHeader(s, table, v)(_.find(l => !(l.startsWith("#format=") ||
+        l.startsWith("#op=") || l.startsWith("#ts="))))
+      .filter(_.startsWith("#metrics="))
+      .fold(Map.empty[String, Long])(
+        _.stripPrefix("#metrics=").split(',').toSeq.flatMap { kv =>
           val i = kv.lastIndexOf(':')
           if (i < 0) None else Some(kv.take(i) -> kv.drop(i + 1).toLong)
-        }.toMap
-      else Map.empty
-    } finally in.close()
-  }
+        }.toMap)
 
   /** One fully-parsed manifest — a snapshot resolution or a guarded
     * write reads and parses the log file ONCE and threads this struct
@@ -328,7 +276,7 @@ object TxnTable {
   private val ManifestFormat = 6L
 
   def manifest(s: SparkSession, table: String, v: Long): Manifest = {
-    val lines = manifestText(s, table, v).linesIterator.toSeq
+    val lines = readLog(s, table, v)(LogFile.read).linesIterator.toSeq
     val fmt = lines.find(_.startsWith("#format="))
       .map(_.stripPrefix("#format=").toLong).getOrElse(1L)
     require(fmt <= ManifestFormat,
@@ -542,16 +490,10 @@ object TxnTable {
     require(!f.exists(dst),
       s"$table: tag '$name' already exists (tags are immutable — " +
         "deleteTag first)")
-    val tmp = new Path(rd, s".tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, false)
-    try out.write(s"$v\n".getBytes(UTF_8)) finally out.close()
-    // same exists+rename CAS as manifests: two racers, one winner
-    val won = commitLock.synchronized { !f.exists(dst) && f.rename(tmp, dst) }
-    if (!won) {
-      f.delete(tmp, false)
+    // the same create-if-absent as manifests: two racers, one winner
+    if (!LogFile.publish(f, logDir(table), dst, s"$v\n"))
       throw new ConcurrentModificationException(
         s"$table: tag '$name' was created concurrently")
-    }
   }
 
   /** All tags, (name, version), name-sorted. */
@@ -559,13 +501,9 @@ object TxnTable {
     val rd = refsDir(table)
     val f = fs(s, rd)
     if (!f.exists(rd)) Seq.empty
-    else f.listStatus(rd).toSeq.map(_.getPath)
-      .filterNot(_.getName.startsWith(".tmp-"))
-      .map { p =>
-        val in = f.open(p)
-        val txt = try new String(in.readAllBytes(), UTF_8) finally in.close()
-        (p.getName, txt.trim.toLong)
-      }.sortBy(_._1)
+    else f.listStatus(rd).toSeq.map(_.getPath).flatMap { p =>
+      LogFile.read(f, p).map(txt => (p.getName, txt.trim.toLong))
+    }.sortBy(_._1)
   }
 
   /** Remove tag `name` (false if absent). The version it pinned joins
@@ -616,19 +554,15 @@ object TxnTable {
   def branchInfo(s: SparkSession, table: String, name: String)
       : Option[BranchRef] = {
     val p = new Path(branchRefsDir(table), name)
-    val f = fs(s, p)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val txt = try new String(in.readAllBytes(), UTF_8) finally in.close()
+    LogFile.read(fs(s, p), p).map { txt =>
       val parts = txt.trim.split('\t')
       // a ref without a recorded localBase predates rebase support: 0
       // is only correct for a never-fast-forwarded branch, and an old
       // fast-forward cannot be distinguished from none — record the
       // UNKNOWN sentinel and let rebase refuse it loudly
-      Some(BranchRef(parts(0).toLong,
+      BranchRef(parts(0).toLong,
         if (parts.length > 1) parts(1) else name,
-        if (parts.length > 2) parts(2).toLong else -1L))
+        if (parts.length > 2) parts(2).toLong else -1L)
     }
   }
 
@@ -650,7 +584,7 @@ object TxnTable {
       name.forall(c => c.isLetterOrDigit || "._-".contains(c)),
       s"branch name '$name' must be [A-Za-z0-9._-]+")
     // dot-prefixed leaves are RESERVED for internal state beside the
-    // branch dirs (`.merges/` merge-base markers, `.tmp-*` staging):
+    // branch dirs (`.merges/` merge-base markers):
     // a branch literally named '.merges' would claim the marker dir as
     // its live directory and a later vacuum of it would sweep every
     // pair's merge-base marker as orphans
@@ -686,18 +620,15 @@ object TxnTable {
     val rd = branchRefsDir(table)
     val f = fs(s, rd)
     if (!f.exists(rd)) Seq.empty
-    else f.listStatus(rd).toSeq.map(_.getPath)
-      .filterNot(_.getName.startsWith(".tmp-"))
-      .map { p =>
-        val in = f.open(p)
-        val txt = try new String(in.readAllBytes(), UTF_8) finally in.close()
-        (p.getName, txt.trim.split('\t')(0).toLong)
-      }.sortBy(_._1)
+    else f.listStatus(rd).toSeq.map(_.getPath).flatMap { p =>
+      LogFile.read(f, p).map(txt => (p.getName, txt.trim.split('\t')(0).toLong))
+    }.sortBy(_._1)
   }
 
-  /** CAS-create (or, for a fast-forward's/rebase's advance, replace)
-    * the branch ref file — same exists+rename discipline as [[tag]].
-    * The ref carries `base<TAB>dirLeaf<TAB>localBase`. */
+  /** Create (create-if-absent, like [[tag]]) or, for a fast-forward's or
+    * rebase's advance, atomically REPLACE the branch ref file — a reader
+    * never finds an advancing branch missing. The ref carries
+    * `base<TAB>dirLeaf<TAB>localBase`. */
   private def writeBranchRef(s: SparkSession, table: String, name: String,
       base: Long, leaf: String, localBase: Long,
       expectNew: Boolean): Unit = {
@@ -705,22 +636,11 @@ object TxnTable {
     val f = fs(s, rd)
     f.mkdirs(rd)
     val dst = new Path(rd, name)
-    val tmp = new Path(rd, s".tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, false)
-    try out.write(s"$base\t$leaf\t$localBase\n".getBytes(UTF_8))
-    finally out.close()
-    val won = commitLock.synchronized {
-      if (expectNew && f.exists(dst)) false
-      else {
-        if (!expectNew && f.exists(dst)) f.delete(dst, false)
-        f.rename(tmp, dst)
-      }
-    }
-    if (!won) {
-      f.delete(tmp, false)
+    val text = s"$base\t$leaf\t$localBase\n"
+    if (!expectNew) LogFile.replace(f, logDir(table), dst, text)
+    else if (!LogFile.publish(f, logDir(table), dst, text))
       throw new ConcurrentModificationException(
         s"$table: branch '$name' already exists")
-    }
   }
 
   /** Drop a branch ref (false if absent). The branch's own directory
@@ -1219,22 +1139,17 @@ object TxnTable {
       fromLeaf: String): Path =
     new Path(s"$table/_branches/.merges/$intoLeaf", fromLeaf)
 
-  /** Synchronized with [[writeMergeMark]] (same lock): a reader racing
-    * the writer's delete+rename window would otherwise observe the file
-    * momentarily absent and report -1, regressing the pair's merge base
-    * for that caller. Cross-process the marker is only a secondary
-    * record anyway — mergeBranch max-es it with the in-lineage
-    * `merged_<leaf>` metric scan, which a transient -1 cannot rewind. */
+  /** Synchronized with [[writeMergeMark]] (same lock): where the store
+    * has no atomic overwrite, a reader racing the writer's delete+rename
+    * window would otherwise observe the file momentarily absent and
+    * report -1, regressing the pair's merge base for that caller.
+    * Cross-process the marker is only a secondary record anyway —
+    * mergeBranch max-es it with the in-lineage `merged_<leaf>` metric
+    * scan, which a transient -1 cannot rewind. */
   private def readMergeMark(s: SparkSession, table: String,
       intoLeaf: String, fromLeaf: String): Long = commitLock.synchronized {
     val p = mergeMarkPath(table, intoLeaf, fromLeaf)
-    val f = fs(s, p)
-    if (!f.exists(p)) -1L
-    else {
-      val in = f.open(p)
-      try new String(in.readAllBytes(), UTF_8).trim.toLong
-      finally in.close()
-    }
+    LogFile.read(fs(s, p), p).fold(-1L)(_.trim.toLong)
   }
 
   /** Advance the marker MONOTONICALLY: synchronized (like the branch
@@ -1242,8 +1157,7 @@ object TxnTable {
     * faster one must not rewind the pair's progress. The marker's value
     * over the commit-side `merged_<leaf>` metric is that it survives
     * snapshot EXPIRY of the merge commit itself; within a surviving
-    * lineage the metric scan is authoritative, so a lost rename here is
-    * harmless — but never leak the tmp file. */
+    * lineage the metric scan is authoritative. */
   private def writeMergeMark(s: SparkSession, table: String,
       intoLeaf: String, fromLeaf: String, v: Long): Unit =
     commitLock.synchronized {
@@ -1251,12 +1165,7 @@ object TxnTable {
         val dst = mergeMarkPath(table, intoLeaf, fromLeaf)
         val f = fs(s, dst)
         f.mkdirs(dst.getParent)
-        val tmp = new Path(dst.getParent,
-          s".tmp-${java.util.UUID.randomUUID()}")
-        val out = f.create(tmp, false)
-        try out.write(s"$v\n".getBytes(UTF_8)) finally out.close()
-        f.delete(dst, false)
-        if (!f.rename(tmp, dst)) f.delete(tmp, false)
+        LogFile.replace(f, logDir(table), dst, s"$v\n")
       }
     }
 
@@ -1281,10 +1190,9 @@ object TxnTable {
   private def readCheckpoint(s: SparkSession, table: String, v: Long)
       : Seq[(Long, String, Long)] = {
     val cp = checkpointPath(table, v)
-    val f = fs(s, cp)
+    val text = LogFile.read(fs(s, cp), cp).getOrElse(
+      throw new java.io.FileNotFoundException(s"$cp"))
     logReads.incrementAndGet()
-    val in = f.open(cp)
-    val text = try new String(in.readAllBytes(), UTF_8) finally in.close()
     text.linesIterator.filter(_.nonEmpty).map { line =>
       val Array(ver, op, n) = line.split('\t')
       (ver.toLong, op, n.toLong)
@@ -1296,8 +1204,8 @@ object TxnTable {
     * reads O(1) + the post-checkpoint tail instead of every manifest —
     * the log-compaction every production format runs once the version
     * count grows (resolution of any SNAPSHOT was always one manifest
-    * read; it is the trail that accumulated). Same tmp+rename commit
-    * protocol as manifests; `.checkpoint` files are invisible to version
+    * read; it is the trail that accumulated). Published like manifests
+    * ([[LogFile.publish]]); `.checkpoint` files are invisible to version
     * resolution and survive vacuum, so the audit of vacuumed versions
     * outlives their manifests — retention bounds data, not lineage. */
   def checkpoint(s: SparkSession, table: String): Long = {
@@ -1306,21 +1214,11 @@ object TxnTable {
     // checkpoint named `cur` must summarize versions ≤ cur ONLY, or the
     // raced version would appear twice in every later history read
     val trail = history(s, table).filter(_._1 <= cur)
-    val f = fs(s, logDir(table))
-    val tmpP = new Path(logDir(table), s".tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmpP, false)
-    try out.write(trail.map { case (v, op, n) => s"$v\t$op\t$n" }
-      .mkString("", "\n", "\n").getBytes(UTF_8))
-    finally out.close()
-    val dst = checkpointPath(table, cur)
     // idempotent: two checkpointers of the same version write identical
-    // content — losing the rename race is success ONLY if the checkpoint
-    // actually exists at dst; a transient FS failure must surface, not
-    // read as a committed checkpoint that silently never lands
-    if (!f.rename(tmpP, dst)) {
-      require(f.exists(dst), s"checkpoint commit failed for $dst")
-      f.delete(tmpP, false)
-    }
+    // content, so finding the checkpoint already published is success
+    LogFile.publish(fs(s, logDir(table)), logDir(table),
+      checkpointPath(table, cur),
+      trail.map { case (v, op, n) => s"$v\t$op\t$n" }.mkString("", "\n", "\n"))
     cur
   }
 
@@ -1333,7 +1231,7 @@ object TxnTable {
   def history(s: SparkSession, table: String): Seq[(Long, String, Long)] = {
     val vs = versions(s, table)
     def readOne(v: Long): (Long, String, Long) = {
-      val lines = manifestText(s, table, v).linesIterator.toSeq
+      val lines = readLog(s, table, v)(LogFile.read).linesIterator.toSeq
       val op = lines.find(_.startsWith("#op=")).map(_.stripPrefix("#op="))
         .getOrElse("write")
       (v, op, lines.count(l => l.nonEmpty && !l.startsWith("#")).toLong)
@@ -1376,15 +1274,9 @@ object TxnTable {
     val body = manifestBody(s, table, relFiles, cur, op, schemaJson,
       deleteLines, idxCols, strIdxCols, blooms, metrics, cdcFiles,
       retired, checks, txn)
-    val tmpP = new Path(ld, s".tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmpP, false)
-    try out.write(body.getBytes(UTF_8))
-    finally out.close()
-    val dst = manifestPath(table, next)
-    // HDFS rename refuses an existing destination atomically; the LOCAL
-    // filesystem overwrites (POSIX rename), so the exists+rename pair is
-    // serialized JVM-wide for same-process writers (the only kind local
-    // runs have) — cross-process writers rely on the store's primitive
+    // the CAS is LogFile.publish — atomic create-if-absent on the local
+    // filesystem and on HDFS alike, so it holds across processes. The
+    // lock serializes it with this JVM's pend placement and finalize
     val won = commitLock.synchronized {
       // a multi-table transaction may hold a PENDING manifest on this
       // slot: resolve it through the arbiter first — a plain writer
@@ -1393,13 +1285,11 @@ object TxnTable {
       pendsIn(f, ld).filter(_._2 == next).foreach { case (n, _, _) =>
         resolvePend(s, table, n, abortInFlight = true)
       }
-      !f.exists(dst) && f.rename(tmpP, dst)
+      LogFile.publish(f, ld, manifestPath(table, next), body)
     }
-    if (!won) {
-      f.delete(tmpP, false)
+    if (!won)
       throw new ConcurrentModificationException(
         s"$table version $next was committed concurrently")
-    }
     next
   }
 
@@ -1425,10 +1315,17 @@ object TxnTable {
     // <timestamp> resolution can then scan newest-first and stop at the
     // first commit at-or-before the target, and two commits can never
     // tie. Wall-clock is inherently non-replayable, so timestamps are
-    // header-only metadata — never part of a hashed query output
+    // header-only metadata — never part of a hashed query output. The
+    // parent's timestamp and `#txn=` ledger come from ONE header walk
     val (prevTs, prevTxns) =
       if (cur < 0) (-1L, Map.empty[String, Long])
-      else manifestHeaderTsTxns(s, table, cur)
+      else manifestHeader(s, table, cur) { it =>
+        val hdr = it.toSeq
+        (tsOf(hdr.iterator), hdr.collect { case l if l.startsWith("#txn=") =>
+          val Array(a, b) = l.stripPrefix("#txn=").split('\t')
+          b64dec(a) -> b.toLong
+        }.toMap)
+      }
     val ts = math.max(System.currentTimeMillis(), prevTs + 1)
     // the idempotent-writer ledger carries CUMULATIVELY through every
     // commit (append, overwrite, compact, DML alike — it is table
@@ -1539,21 +1436,26 @@ object TxnTable {
   // crash-safe by a SINGLE-FILE ARBITER. Each table gets a fully
   // rendered PENDING manifest at its next slot (`_log/vN.pend.<txnId>`,
   // invisible to readers); the transaction then claims its marker file
-  // (`<coordinator>/_txn/<txnId>.done`) by atomic rename — the ONE
+  // (`<coordinator>/_txn/<txnId>.done`) by LogFile.publish — the ONE
   // place the commit/abort decision lives, written exactly once: a
   // concurrent plain writer that finds an undecided pend in its way
   // races for the same file with verdict "abort" (writers never wait on
-  // transactions), and whoever renames first decides for everyone.
-  // After a commit verdict the pends are just renames away from being
-  // ordinary manifests — the committer does them eagerly, and ANY later
-  // reader of a lagging table completes them from the log listing it
-  // already performs (recovery-on-read, `versions`). Every crash window
-  // is covered: before the marker the transaction never happened
-  // (pends invisible, aborted by the next writer on that slot); after
-  // the marker it always happens (each table independently finalizes).
-  // Same-process races serialize on the JVM locks; cross-process
-  // writers rely on the store's atomic-rename primitive — the exact
-  // caveat the single-table CAS above already carries.
+  // transactions), and whoever publishes first decides for everyone,
+  // across processes too. After a commit verdict each pend is one
+  // publish away from being an ordinary manifest (its body, minus the
+  // marker header, at the manifest name) — the committer does them
+  // eagerly, and ANY later reader of a lagging table completes them
+  // from the log listing it already performs (recovery-on-read,
+  // `versions`). Every crash window is covered: before the marker the
+  // transaction never happened (pends invisible, aborted by the next
+  // writer on that slot); after the marker it always happens (each table
+  // independently finalizes). Every log file here is published and read
+  // through LogFile; the JVM locks add what a single publish cannot: a
+  // plain commit resolves the pends on its slot before its CAS, and pend
+  // placement checks the slot free before publishing. Pend placement
+  // and the plain-commit CAS publish DIFFERENT names, so across
+  // processes a plain writer can still take a slot a pend was placed on
+  // — finalize detects that (below) rather than hiding it.
   //
   // ARBITER RETENTION, a deliberate decision: markers are PERMANENT.
   // A commit marker may be referenced by an unfinalized pend on ANY
@@ -1583,59 +1485,28 @@ object TxnTable {
       case n @ PendRe(v, txnId) => (n, v.toLong, txnId)
     }
 
-  private def readUtf8(f: org.apache.hadoop.fs.FileSystem, p: Path)
-      : String = {
-    val in = f.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-  }
-
   private val txnArbiterLock = new Object
 
   /** Race for the transaction's arbiter file with `verdict`; return the
-    * verdict that actually STANDS (ours if we won the rename, the
+    * verdict that actually STANDS (ours if we won the publish, the
     * earlier winner's otherwise). The arbiter is written exactly once —
-    * rename refuses an existing destination — so every participant
+    * publish refuses an existing name — so every participant
     * (committer, aborting writer, recovering reader) converges on one
-    * answer however the calls interleave. */
+    * answer however the calls interleave. It stages in the coordinator
+    * table's log (the marker lives in `<coordinator>/_txn/`). */
   private def decideTxn(s: SparkSession, marker: Path, verdict: String)
       : String = {
     val f = fs(s, marker)
     f.mkdirs(marker.getParent)
-    val tmp = new Path(marker.getParent,
-      s".tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, false)
-    try out.write(verdict.getBytes(UTF_8)) finally out.close()
-    val won = txnArbiterLock.synchronized {
-      !f.exists(marker) && f.rename(tmp, marker)
-    }
-    if (!won) f.delete(tmp, false)
-    readUtf8(f, marker).trim
+    LogFile.publish(f, new Path(marker.getParent.getParent, "_log"), marker,
+      verdict)
+    markerVerdict(s, marker).get
   }
 
   /** The standing verdict of `marker`, or None while undecided. */
   private def markerVerdict(s: SparkSession, marker: Path)
-      : Option[String] = {
-    val f = fs(s, marker)
-    if (f.exists(marker)) Some(readUtf8(f, marker).trim) else None
-  }
-
-  /** The `#pendmarker=` header a pending manifest leads with — where
-    * its transaction's arbiter lives. */
-  private def pendMarkerOf(s: SparkSession, table: String, name: String)
-      : Path = {
-    val p = new Path(logDir(table), name)
-    val f = fs(s, p)
-    val in = f.open(p)
-    val first = try {
-      val br = new java.io.BufferedReader(
-        new java.io.InputStreamReader(in, UTF_8))
-      br.readLine()
-    } finally in.close()
-    require(first != null && first.startsWith("#pendmarker="),
-      s"$table: pending manifest $name lacks its #pendmarker header")
-    new Path(first.stripPrefix("#pendmarker="))
-  }
+      : Option[String] =
+    LogFile.read(fs(s, marker), marker).map(_.trim)
 
   /** Resolve one pending manifest found in `table`'s log. Committed →
     * finalize (rename into its real slot) and return the version;
@@ -1649,14 +1520,15 @@ object TxnTable {
     val ld = logDir(table)
     val f = fs(s, ld)
     val src = new Path(ld, name)
-    if (!f.exists(src)) return None // raced away already
-    // the pend can vanish between the exists check and the open (a
-    // concurrent finalizer or an aborting writer got there first) —
-    // that is the same "raced away" outcome, not an error for a reader
-    // that merely listed the log
-    val marker =
-      try pendMarkerOf(s, table, name)
-      catch { case _: java.io.FileNotFoundException => return None }
+    // the pend's leading `#pendmarker=` header names its transaction's
+    // arbiter. A pend that is gone (a concurrent finalizer or an
+    // aborting writer got there first) is the "raced away" outcome, not
+    // an error for a reader that merely listed the log
+    val marker = LogFile.header(f, src)(_.nextOption()).getOrElse(return None)
+      .filter(_.startsWith("#pendmarker="))
+      .map(l => new Path(l.stripPrefix("#pendmarker=")))
+      .getOrElse(throw new IllegalArgumentException(
+        s"$table: pending manifest $name lacks its #pendmarker header"))
     val verdict = markerVerdict(s, marker).getOrElse {
       if (abortInFlight) decideTxn(s, marker, "abort") else return None
     }
@@ -1666,29 +1538,20 @@ object TxnTable {
         // finalize STRIPS the #pendmarker header: a finalized manifest
         // is byte-identical to a plain commit's, so the log keeps ONE
         // dialect (header-walk fast paths like manifestHeaderMetric
-        // rely on the fixed lead order)
-        val txt =
-          try readUtf8(f, src)
-          catch { case _: java.io.FileNotFoundException =>
-            return Some(v) // a concurrent finalizer completed it
-          }
+        // rely on the fixed lead order). A pend already gone was
+        // completed by a concurrent finalizer
+        val txt = LogFile.read(f, src).getOrElse(return Some(v))
         val body = txt.substring(txt.indexOf('\n') + 1)
-        if (!f.exists(dst)) {
-          val tmp = new Path(ld, s".tmp-${java.util.UUID.randomUUID()}")
-          val out = f.create(tmp, false)
-          try out.write(body.getBytes(UTF_8)) finally out.close()
-          if (!f.rename(tmp, dst)) f.delete(tmp, false)
-        }
-        // cross-process, the pend-placement and plain-commit CAS rename
-        // to DIFFERENT destination names, so a plain writer can slip
-        // its manifest into this slot between our exists check and
-        // rename. A committed transaction's version going to someone
-        // else is PARTIAL TRANSACTION APPLICATION — silently deleting
-        // the pend would hide it forever; raise so the inconsistency is
-        // detectable and repairable. (The common benign occupant — a
-        // concurrent recoverer finalizing the same pend — has identical
-        // bytes and passes.)
-        if (f.exists(dst) && readUtf8(f, dst) != body)
+        // cross-process, pend placement and the plain-commit CAS publish
+        // DIFFERENT names, so a plain writer can slip its manifest into
+        // this slot after the pend was placed. A committed transaction's
+        // version going to someone else is PARTIAL TRANSACTION
+        // APPLICATION — silently deleting the pend would hide it forever;
+        // raise so the inconsistency is detectable and repairable. (The
+        // common benign occupant — a concurrent recoverer finalizing the
+        // same pend — has identical bytes and passes.)
+        if (!LogFile.publish(f, ld, dst, body) &&
+            !LogFile.read(f, dst).contains(body))
           throw new IllegalStateException(
             s"$table: version $v was committed by a concurrent plain " +
               s"writer while transaction pend $name held a COMMIT " +
@@ -1863,9 +1726,6 @@ object TxnTable {
         m.strIdxCols, m.blooms, Nil, Nil, m.retired, m.checks, txn)
       val ld = logDir(t)
       val f = fs(s, ld)
-      val tmp = new Path(ld, s".tmp-${java.util.UUID.randomUUID()}")
-      val out = f.create(tmp, false)
-      try out.write(body.getBytes(UTF_8)) finally out.close()
       val slotFree = commitLock.synchronized {
         // a FOREIGN pend in our slot gets the same treatment plain
         // writers give us: resolve through its arbiter — finalize a
@@ -1877,10 +1737,9 @@ object TxnTable {
         }
         val taken = f.exists(manifestPath(t, cur + 1)) ||
           pendsIn(f, ld).exists(_._2 == cur + 1)
-        !taken && f.rename(tmp, pendPath(t, cur + 1, txnId))
+        !taken && LogFile.publish(f, ld, pendPath(t, cur + 1, txnId), body)
       }
       if (!slotFree) {
-        f.delete(tmp, false)
         cleanup()
         return None
       }
@@ -2707,7 +2566,8 @@ object TxnTable {
     // absolute): the left join keeps every covered file in the
     // grouping, so coverage and the membership verdict come out of
     // the same O(#files) collect
-    val sidecar = s.read.parquet(pathFor(table, b.dir))
+    val sidecar = s.read.schema("f STRING, w BIGINT, b BIGINT")
+      .parquet(pathFor(table, b.dir))
     val needDf = broadcast(need.toDF("w", "need"))
     val perFile = sidecar.join(needDf, Seq("w"), "left")
       .groupBy(col("f"))
@@ -3516,7 +3376,8 @@ object TxnTable {
               .parallelize(Seq.empty[org.apache.spark.sql.Row], 1),
               adds.schema)
           else {
-            val kdf = s.read.parquet(pathFor(table, tomb.head))
+            val kdf = s.read.schema(keySet.schema)
+              .parquet(pathFor(table, tomb.head))
             val keyDf = kdf.select(col(kdf.columns.head).as(key))
             import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
             val base = (adds.schema(key).dataType,
@@ -4340,7 +4201,8 @@ object TxnTable {
   private def tombstonePairs(s: SparkSession, table: String, kc: String,
       fls: Seq[(String, String, Long)]): DataFrame =
     fls.map { case (p, rec, sq) =>
-      val kdf = s.read.parquet(pathFor(table, p))
+      val kdf = s.read.schema(keyFileSchema(s, table, p))
+        .parquet(pathFor(table, p))
       if (rec.endsWith("~L"))
         kdf.select(col(kdf.columns.head).as(kc),
           col(kdf.columns(1)).cast("long").as("__tl"))
@@ -4349,6 +4211,14 @@ object TxnTable {
           lit(sq).cast("long").as("__tl"))
     }.reduce(_ unionByName _)
       .groupBy(col(kc)).agg(max(col("__tl")).as("__tl"))
+
+  /** A tombstone key file's footer schema. Its key column carries the
+    * key's logical name at delete time, which the manifest does not
+    * record, so the schema comes from one driver-side footer read —
+    * never a schema-inference job. */
+  private def keyFileSchema(s: SparkSession, table: String, rel: String)
+      : org.apache.spark.sql.types.StructType =
+    Bridge.parquetSchema(s, new Path(pathFor(table, rel)))
 
   /** Resolve a manifest path: table-relative normally; a SHALLOW CLONE's
     * entries reference the source table's files by absolute path (zero
@@ -4994,8 +4864,7 @@ object TxnTable {
     val readSchema = m.schema.map { sch =>
       val extra = deadKeys.map { pk =>
         val tf = keyDels.find(d => joinCol(d._2) == pk).get._1
-        val kdt = s.read.parquet(pathFor(table, tf))
-          .schema.fields(0).dataType
+        val kdt = keyFileSchema(s, table, tf).fields(0).dataType
         org.apache.spark.sql.types.StructField(pk, kdt)
       }
       org.apache.spark.sql.types.StructType(
@@ -5137,7 +5006,7 @@ object TxnTable {
     val vs = versions(s, table)
     require(vs.nonEmpty, s"$table has no committed version")
     def qualifies(v: Long): Boolean = {
-      val t = manifestHeaderTs(s, table, v)
+      val t = manifestHeader(s, table, v)(tsOf)
       t >= 0 && t >= tsMillis
     }
     var i = vs.size - 1
@@ -5508,7 +5377,7 @@ object TxnTable {
     // direction: a table whose history can't prove its age expires
     // NOTHING. Work is O(retained suffix), not O(all versions).
     val newer = versions(s, table).reverse.iterator
-      .map(v => manifestHeaderTs(s, table, v))
+      .map(v => manifestHeader(s, table, v)(tsOf))
       .takeWhile(ts => ts > cutoffMillis || ts < 0)
       .size
     vacuum(s, table, math.max(1, newer), pinned)
@@ -5589,8 +5458,9 @@ object TxnTable {
     // collected by the next vacuum, whose keep-set excludes them.)
     if (!dry) {
       dead.foreach(v => f.delete(manifestPath(table, v), false))
-      // crashed writers' half-written manifests (vacuum implies no
-      // writer is mid-commit, same contract as every public format)
+      // a crashed writer's staged log files — every LogFile publish of
+      // this table stages here (vacuum implies no writer is mid-commit,
+      // same contract as every public format)
       f.listStatus(logDir(table)).toSeq.map(_.getPath)
         .filter(_.getName.startsWith(".tmp-"))
         .foreach(p => f.delete(p, false))

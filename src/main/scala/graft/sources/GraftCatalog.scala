@@ -650,8 +650,8 @@ class GraftTable(ident: String, private[sources] val location: String,
     // metadata so the analyzer fills them in column-list INSERTs
     TxnTable.decorateDefaults(m.schema.getOrElse {
       // pre-#schema manifests: one footer read of the first live file
-      spark.read.parquet(
-        TxnTable.pathFor(location, m.entries.head.path)).schema
+      org.apache.spark.sql.graftbridge.Bridge.parquetSchema(spark,
+        new Path(TxnTable.pathFor(location, m.entries.head.path)))
     })
 
   override def capabilities(): util.Set[TableCapability] =

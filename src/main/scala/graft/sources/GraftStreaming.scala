@@ -11,7 +11,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.execution.datasources.OutputWriter
-import org.apache.spark.sql.graftbridge.{StatsWrite, StreamBridge}
+import org.apache.spark.sql.graftbridge.{Bridge, StatsWrite, StreamBridge}
 import org.apache.spark.sql.types.StructType
 
 /** STRUCTURED STREAMING through the catalog: `readStream.table(
@@ -448,7 +448,7 @@ class GraftChangesTable(ident: String,
     require(first.nonEmpty,
       s"$ident: no change feed committed yet (writers publish one via " +
         "TxnTable.overwriteCdc)")
-    s.read.parquet(TxnTable.pathFor(location, first.get)).schema
+    Bridge.parquetSchema(s, new Path(TxnTable.pathFor(location, first.get)))
   }
 
   override def schema(): StructType = feedSchema

@@ -1,8 +1,13 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** The one bridge into spark-sql's `private[sql]` classic helpers:
   * Column ↔ Expression (graft's custom Catalyst expressions and the
@@ -17,4 +22,15 @@ object Bridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** The schema `spark.read.parquet(p)` infers for the one file `p`,
+    * converted from its footer on the driver the way Spark's inference
+    * converts it — one footer read, no Spark job. */
+  def parquetSchema(spark: SparkSession, p: Path): StructType = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(p, spark.sessionState.newHadoopConf()))
+    val footer = try r.getFooter finally r.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(p, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)).asNullable
+  }
 }

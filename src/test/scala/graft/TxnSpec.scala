@@ -60,11 +60,71 @@ class TxnSpec extends SparkSpec {
   test("a crashed writer's temp manifest is invisible to readers") {
     val t = freshTable("crashed_writer")
     TxnTable.create(spark, t, baseDf(10))
+    // every log-file kind published once: each stages in _log/, which
+    // is where a crashed publish leaves its debris
+    TxnTable.tag(spark, t, "t0", 0L)
+    TxnTable.branch(spark, t, "b0")
+    TxnTable.checkpoint(spark, t)
+    val log = new java.io.File(s"$t/_log")
+    def debris(d: java.io.File): Seq[String] =
+      d.listFiles().toSeq.flatMap(f =>
+        if (f.isDirectory) debris(f)
+        else Seq(f.getName).filter(_.contains(".tmp-")))
+    assert(debris(log).isEmpty, s"a publish left staged files: ${debris(log)}")
+    val history = TxnTable.history(spark, t)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$t/_log/.tmp-crashed"),
       "data/bogus/file.parquet\n".getBytes)
     assert(TxnTable.versions(spark, t) === Seq(0L))
     assert(TxnTable.snapshot(spark, t).count() === 10)
+    assert(TxnTable.tags(spark, t) === Seq("t0" -> 0L))
+    assert(TxnTable.branches(spark, t) === Seq("b0" -> 0L))
+    assert(TxnTable.history(spark, t) === history)
+    TxnTable.vacuum(spark, t)
+    assert(!new java.io.File(s"$t/_log/.tmp-crashed").exists(),
+      "vacuum left a crashed publish's staged file")
+    assert(TxnTable.tags(spark, t) === Seq("t0" -> 0L))
+  }
+
+  test("LogFile.publish: two processes racing for 500 names get one winner each") {
+    val dir = freshTable("publish_race")
+    new java.io.File(s"$dir/_log").mkdirs()
+    val n = 500
+    val child = new ProcessBuilder(
+      s"${System.getProperty("java.home")}/bin/java", "-Xmx128m",
+      "-cp", System.getProperty("java.class.path"),
+      "graft.PublishRace", dir, "child", n.toString)
+      .redirectError(ProcessBuilder.Redirect.INHERIT).start()
+    val out = new java.io.BufferedReader(
+      new java.io.InputStreamReader(child.getInputStream))
+    val lines = Iterator.continually(out.readLine()).takeWhile(_ != null)
+    assert(lines.find(_ == "ready").nonEmpty, "the racing process never started")
+    val local = org.apache.hadoop.fs.FileSystem.getLocal(
+      new org.apache.hadoop.conf.Configuration())
+    PublishRace.warmUp(local, dir, "parent")
+    // both sides start on one wall-clock instant, a moment from now
+    val t0 = PublishRace.micros() + 500000L
+    child.getOutputStream.write(s"go $t0\n".getBytes)
+    child.getOutputStream.flush()
+    val mine = PublishRace.race(local, dir, "parent", n, t0).toSet
+    val theirs = lines.find(_.startsWith("won ")).get.stripPrefix("won ")
+      .split(',').filter(_.nonEmpty).map(_.toInt).toSet
+    assert(child.waitFor() === 0)
+    (0 until n).foreach { i =>
+      val winner = (mine(i), theirs(i)) match {
+        case (true, false) => "parent"
+        case (false, true) => "child"
+        case both => fail(s"d-$i: (parent won, child won) = $both")
+      }
+      val text = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$dir/d-$i")), "UTF-8")
+      assert(text === s"$winner-$i", s"d-$i holds another writer's bytes")
+    }
+    val left = Seq(dir, s"$dir/_log", s"$dir/warm-parent", s"$dir/warm-child")
+      .flatMap(d => new java.io.File(d).list().toSeq)
+    assert(!left.exists(_.endsWith(".crc")) && !left.exists(_.contains(".tmp-")),
+      s"publish left staging debris: ${left.filter(_.contains("tmp")).take(3)}")
+    info(s"parent won ${mine.size}, child won ${theirs.size} of $n")
   }
 
   test("compaction commits through the log and keeps old files for pinned readers") {
@@ -1506,6 +1566,45 @@ class TxnSpec extends SparkSpec {
       === expect, "compact diverged from the MoR read")
   }
 
+  test("tombstone key files are read with their footer schema, never " +
+      "an inference job") {
+    val s = spark
+    import s.implicits._
+    val t = freshTable("mor_footer_schema")
+    TxnTable.create(spark, t,
+      (0L until 20L).map(i => (i, s"r$i")).toDF("k", "v"))
+    TxnTable.deleteKeysMor(spark, t, Seq(3L).toDF("k"), "k")
+    TxnTable.deleteKeysMor(spark, t, Seq(4L).toDF("k"), "k")
+    def jobs = SpecBus.jobsDuring(spark.sparkContext)(TxnTable.snapshot(spark, t))
+    // building the snapshot over two pending tombstones runs no Spark job
+    assert(jobs === 0)
+    // the footer schema is the schema a schema-less read infers
+    def parity(kind: String): Unit = {
+      val dels = TxnTable.deleteFiles(spark, t, TxnTable.currentVersion(spark, t))
+      assert(dels.nonEmpty)
+      dels.foreach { case (p, rec, _) =>
+        val path = TxnTable.pathFor(t, p)
+        assert(org.apache.spark.sql.graftbridge.Bridge.parquetSchema(spark,
+          new org.apache.hadoop.fs.Path(path)) === spark.read.parquet(path).schema,
+          s"$kind: footer schema of the $rec file $p")
+      }
+    }
+    parity("plain")
+    TxnTable.rewriteTombstones(spark, t)
+    assert(TxnTable.deleteFiles(spark, t, TxnTable.currentVersion(spark, t))
+      .map(_._2) === Seq("k~L"))
+    parity("bounded")
+    TxnTable.deleteKeysMor(spark, t, Seq(5L).toDF("k"), "k")
+    TxnTable.renameColumn(spark, t, "k", "id")
+    parity("taken before a rename")
+    TxnTable.dropColumn(spark, t, "id")
+    parity("dropped key")
+    // the dropped key's type comes from the footer too
+    assert(jobs === 0)
+    assert(TxnTable.snapshot(spark, t).as[String].collect().sorted.toSeq ===
+      (0 until 20).filterNot(Set(3, 4, 5)).map(i => s"r$i").sorted)
+  }
+
   test("dropping the tombstone KEY column keeps dead keys hidden " +
       "(retired physical rides the read)") {
     val s = spark
@@ -1692,6 +1791,36 @@ class TxnSpec extends SparkSpec {
     assert(TxnTable.snapshot(spark, t).collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
       === before.filterNot(_._1 == 9L))
+  }
+
+  test("a branch ref advance is atomic: readers never find the branch missing") {
+    val t = freshTable("branch_advance")
+    TxnTable.create(spark, t, baseDf(10))
+    TxnTable.branch(spark, t, "b")
+    val bd = TxnTable.branchDir(spark, t, "b")
+    @volatile var done = false
+    val misses = new java.util.concurrent.atomic.AtomicLong
+    val polls = new java.util.concurrent.atomic.AtomicLong
+    def missing(read: => Boolean): Unit =
+      try { if (!read) misses.incrementAndGet() }
+      catch { case _: java.io.FileNotFoundException => misses.incrementAndGet() }
+    val reader = new Thread(() => while (!done) {
+      missing(TxnTable.branchInfo(spark, t, "b").nonEmpty)
+      missing(TxnTable.branches(spark, t).exists(_._1 == "b"))
+      polls.incrementAndGet()
+    })
+    reader.start()
+    try (1 to 40).foreach { _ =>
+      // one metadata-only branch commit, then its fast-forward, which
+      // replaces the ref with the new base
+      val bv = TxnTable.currentVersion(spark, bd)
+      TxnTable.commit(spark, bd, TxnTable.liveFiles(spark, bd, bv), bv)
+      TxnTable.fastForward(spark, t, "b")
+    } finally { done = true; reader.join() }
+    assert(misses.get === 0,
+      s"${misses.get} of ${polls.get} polls found branch 'b' missing")
+    assert(TxnTable.branchInfo(spark, t, "b").map(_.base) ===
+      Some(TxnTable.currentVersion(spark, t)))
   }
 
   test("branch merge: disjoint replays as metadata, true overlap " +
