@@ -58,6 +58,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // base scan — acceleration lost, correctness untouched
     ext.injectResolutionRule(graft.sources.GraftMvRewriteRule)
     ext.injectResolutionRule(graft.sources.GraftMorReadRule)
+    // file skipping for every manifest-backed scan (library snapshots,
+    // merge-on-read SQL reads, MV-served reads): after pushdown, before
+    // CBO — where Spark prunes its own file-source partitions
+    ext.injectPreCBORule(_ =>
+      org.apache.spark.sql.graftbridge.ManifestPruneRule)
     // CREATE/REFRESH MATERIALIZED VIEW — the declarative DDL front of
     // MatView (graft.sources.GraftSqlParser); everything else
     // delegates to Spark's own parser untouched

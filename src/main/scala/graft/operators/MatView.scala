@@ -447,30 +447,6 @@ object MatView {
   case class RefreshResult(mvVersion: Long, baseVersion: Long,
       commitsFolded: Int)
 
-  /** Closed per-key-column bounds a serving read may prune the MV's
-    * OWN files with — a SUPERSET of the query predicate's satisfying
-    * space, derived by the rewrite from its key-only conjuncts (the
-    * exact predicate still applies as a residual filter, so bounds
-    * only have to be sound, never tight). Empty = no prune (read every
-    * MV file, today's behavior). */
-  case class KeyBounds(ints: Seq[(String, Long, Long)],
-      strs: Seq[(String, String, String)]) {
-    def isEmpty: Boolean = ints.isEmpty && strs.isEmpty
-  }
-  object KeyBounds { val none: KeyBounds = KeyBounds(Nil, Nil) }
-
-  /** The MV's own rows at `mvVer`, file-pruned from the MV's manifest
-    * key stats when the caller extracted bounds — the dashboard-serving
-    * read. The MV commits range-clustered and stat-indexed on its keys
-    * at create AND at every refresh merge (mergeCore re-clusters the
-    * rewritten region), so a key-predicated dashboard over a huge MV
-    * opens only the stat-bearing files its keys can live in instead of
-    * the whole view. */
-  private def mvRowsAt(s: SparkSession, mv: String, mvVer: Long,
-      kb: KeyBounds): DataFrame =
-    if (kb.isEmpty) TxnTable.snapshot(s, mv, mvVer)
-    else TxnTable.snapshotBoxed(s, mv, kb.ints, kb.strs, mvVer)._1
-
   /** Incremental refresh of the view at `mv`, whatever its kind. One
     * prologue serves all four: pin ONE MV version for the cursors, the
     * rows AND the merge's CAS (two concurrent refreshes otherwise
@@ -756,19 +732,20 @@ object MatView {
     * a plan fragment, O(MV) + O(changes since the cursor) at ANY base
     * size; without it, ONE commit after a refresh sends the dashboard
     * back to the full base scan. The MV rows come from the SAME pinned
-    * version the cursors were read at, and `kb` prunes the MV's own
-    * files (a live view's MV rows are stored at the fact-key grain, so
-    * its bounds do not apply). Columns: (keys, n, nn, total) for
+    * version the cursors were read at; a key filter the caller applies
+    * on top reaches the MV's own scan through Catalyst's pushdown,
+    * where ManifestPrune skips the MV files its keys cannot live in
+    * (the MV commits range-clustered and stat-indexed on its keys).
+    * Columns: (keys, n, nn, total) for
     * fold, join and live views, (keys, n, nn, vmin, vmax) for extrema;
     * a group whose compensated count reaches 0 leaves, mirroring
     * refresh's op-'D' rule. */
   private[graft] def rowsAt(s: SparkSession, mv: String, d: ViewDef,
-      pinned: Map[String, Long], kb: KeyBounds = KeyBounds.none)
-      : Option[DataFrame] = {
+      pinned: Map[String, Long]): Option[DataFrame] = {
     val (mvVer, cur) = cursors(s, mv, d)
     tailRefs(s, d, cur, pinned).map { refs =>
-      def rows(keys: Seq[String], kb: KeyBounds, cols: Seq[String]) =
-        mvRowsAt(s, mv, mvVer, kb).select((keys ++ cols).map(col): _*)
+      def rows(keys: Seq[String], cols: Seq[String]) =
+        TxnTable.snapshot(s, mv, mvVer).select((keys ++ cols).map(col): _*)
       // MV rows ⊕ the signed tail rows, one union + one aggregate
       def withTail(keys: Seq[String], mvRows: DataFrame,
           tail: => DataFrame) =
@@ -777,13 +754,13 @@ object MatView {
       val fold = Seq("n", "nn", "total")
       d match {
         case x: MvExtremaDef =>
-          rows(x.keys, kb, Seq("n", "nn", "vmin", "vmax"))
-        case f: MvDef => withTail(f.keys, rows(f.keys, kb, fold),
+          rows(x.keys, Seq("n", "nn", "vmin", "vmax"))
+        case f: MvDef => withTail(f.keys, rows(f.keys, fold),
           predFeed(s, refs, f.pred).select(f.keys.map(col) ++
             signedFold(col("w"), col(f.value)): _*))
         // each signed fact row re-joins the dims at the pinned versions
         // to find its group
-        case j: MvJoinDef => withTail(j.keys, rows(j.keys, kb, fold),
+        case j: MvJoinDef => withTail(j.keys, rows(j.keys, fold),
           enrichWithDims(s, j, predFeed(s, refs, j.pred),
             j.dims.map(r => pinned(r.dim)),
             signedFold(col("f.w"), col(s"f.${j.value}"))))
@@ -792,7 +769,7 @@ object MatView {
         // (current, moved, time-travelled) serves — and re-groups to
         // the declared keys
         case LiveDef(j, grain) =>
-          val sub = withTail(grain, rows(grain, KeyBounds.none, fold),
+          val sub = withTail(grain, rows(grain, fold),
             predFeed(s, refs, j.pred).filter(joinKeysPresent(j))
               .select(grain.map(col) ++
                 signedFold(col("w"), col(j.value)): _*))
@@ -1068,7 +1045,7 @@ object MatView {
     * without double counting. The fact slice in every dim term is
     * pinned at the FACT CURSOR (ΔF is already accounted by the first
     * term) and pruned to the changed dim keys via manifest key stats
-    * ([[TxnTable.snapshotRange]] point probes when few keys; a
+    * ([[prunedSlice]]: one stat-pruned IN-read when few keys; a
     * broadcast left-semi join otherwise) — the `mv_scd_files_kept/
     * total` metrics on the refresh commit carry the prune evidence.
     * Cost is O(fact changes ⋈ dims) + O(dim changes ⋈ touched fact
@@ -1163,19 +1140,15 @@ object MatView {
   /** The rows of `table` at `ver` whose `cols` match a row of `keys` —
     * a small frame of changed keys (a dim feed's join keys, an extrema
     * view's dirty groups) — manifest-pruned when the shape allows: one
-    * long or string column and ≤16 keys probe per key through
-    * [[TxnTable.snapshotRange]]/[[TxnTable.snapshotStrRange]] (row-
-    * exact: the residual point filter applies inside surviving files,
-    * so the union over DISTINCT keys never duplicates a row); otherwise
-    * one broadcast left-semi join over the pinned snapshot — map-only,
-    * but every file opens (kept = −1 reports the fallback honestly).
-    * Probes run only when they can BITE: the key frame's own type must
-    * match the column's (a BIGINT column probed with INT values would
-    * CCE on collect — the equi-join casts, Row.getLong does not), and
-    * the manifest must carry stats on the column — a stat-less table
-    * keeps every file per probe, turning 16 probes into 16 full scans
-    * where the fallback's ONE map-only pass wins. Returns (slice,
-    * files kept, files total). */
+    * long or string column and ≤16 keys read through ONE
+    * [[TxnTable.snapshotWhere]] over `c IN (keys)` (row-exact: the
+    * residual filter applies inside the surviving files); otherwise one
+    * broadcast left-semi join over the pinned snapshot — map-only, but
+    * every file opens (kept = −1 reports the fallback honestly). The
+    * IN-read runs only when it can BITE: the key frame's own type must
+    * match the column's, and the manifest must carry stats on the
+    * column — on a stat-less table the fallback's map-only pass is the
+    * same read. Returns (slice, files kept, files total). */
   private def prunedSlice(s: SparkSession, table: String, ver: Long,
       cols: Seq[String], keys: DataFrame): (DataFrame, Long, Long) = {
     import org.apache.spark.sql.types.{LongType, StringType}
@@ -1196,16 +1169,14 @@ object MatView {
       (snap.join(broadcast(keys.toDF(cols: _*)), cols, "left_semi"),
         -1L, -1L)
     else {
-      val probes = few.filterNot(_.isNullAt(0)).map(k => kt match {
-        case LongType => TxnTable.snapshotRange(s, table, c,
-          k.getLong(0), k.getLong(0), ver)
-        case _ => TxnTable.snapshotStrRange(s, table, c,
-          k.getString(0), k.getString(0), ver)
-      })
+      val vs = few.filterNot(_.isNullAt(0)).map(_.get(0))
       // no key at all (an empty cdc feed): no file is read
-      if (probes.isEmpty) (snap.filter(lit(false)), 0L, 0L)
-      else (probes.map(_._1).reduce(_ unionByName _),
-        probes.map(_._2.toLong).sum, probes.map(_._3.toLong).max)
+      if (vs.isEmpty) (snap.filter(lit(false)), 0L, 0L)
+      else {
+        val (slice, kept, total) = TxnTable.snapshotWhere(s, table,
+          col(c).isin(vs.toIndexedSeq: _*), ver)
+        (slice, kept.toLong, total.toLong)
+      }
     }
   }
 
@@ -1397,8 +1368,8 @@ object MatView {
     * under duplicates: a recompute that lands on the same extreme is
     * wasted work, never a wrong answer; a deleted NULL never dirties).
     * Dirty groups recompute (n, nn, vmin, vmax) from the base AT HEAD
-    * through [[prunedSlice]] — per-group stat-pruned point probes for a
-    * single stat-bearing key with few dirty groups
+    * through [[prunedSlice]] — one stat-pruned IN-read for a single
+    * stat-bearing key with few dirty groups
     * (`mv_dirty_files_kept/total` metrics carry the prune evidence),
     * otherwise one filtered scan (kept = −1). The merge
     * is the same CAS-pinned keyed commit as [[refresh]]'s, and it

@@ -655,7 +655,7 @@ object Similarity {
     *     per-file [min,max] boxes are tight — and committed with stats
     *     on both columns;
     *   - query: each distinct probed cell issues ONE
-    *     [[TxnTable.snapshotBox]] read with the two-sided box
+    *     [[TxnTable.snapshotWhere]] read with the two-sided predicate
     *     (c_id = cell ∧ lic = [[FilterVal]]): files failing EITHER side
     *     are pruned from the manifest alone — never listed, opened, or
     *     footer-read. A cell's wrong-lic file is dropped even though its
@@ -696,8 +696,8 @@ object Similarity {
     val cells = probes.select("c_id").distinct()
       .collect().map(_.getInt(0)).sorted.toSeq
     val reads = cells.map { cid =>
-      TxnTable.snapshotBox(s, t, Seq(
-        ("c_id", cid.toLong, cid.toLong), ("lic", FilterVal, FilterVal)))
+      TxnTable.snapshotWhere(s, t,
+        col("c_id") === cid && col("lic") === FilterVal)
     }
     val survivors = reads.map(_._1).reduce(_ unionByName _)
     // ≤ nFiles files total (an empty (c_id, lic) partition writes no
@@ -732,7 +732,7 @@ object Similarity {
     *     manifest CAS, corpus files carried VERBATIM (asserted) — the
     *     cost is O(batch), never O(index);
     *   - query: probe lists against the frozen centroids; each probed
-    *     cell is ONE [[TxnTable.snapshotBox]] read that file-prunes
+    *     cell is ONE [[TxnTable.snapshotWhere]] read that file-prunes
     *     BOTH generations from the manifest (corpus and batch files
     *     carry the same c_id stats), scores exactly, salted top-k.
     *
@@ -849,7 +849,7 @@ object Similarity {
 
   /** Probe the accreted IVF store at `ver` with `all`'s query vectors
     * against the frozen `cents`: one file-pruned
-    * [[TxnTable.snapshotBox]] read per probed cell, exact scoring,
+    * [[TxnTable.snapshotWhere]] read per probed cell, exact scoring,
     * salted top-k. Returns the top-k frame and the per-read
     * (scanned, total) accounting for the callers' prune assertions. */
   private def probeIvfStore(s: SparkSession, store: String,
@@ -868,7 +868,7 @@ object Similarity {
     val cells = probes.select("c_id").distinct()
       .collect().map(_.getLong(0)).sorted.toSeq
     val reads = cells.map(cid =>
-      TxnTable.snapshotBox(s, store, Seq(("c_id", cid, cid)), ver))
+      TxnTable.snapshotWhere(s, store, col("c_id") === cid, ver))
     val stored = reads.map(_._1).reduce(_ unionByName _)
     val scored = stored.join(broadcast(probes), Seq("c_id"))
       .filter(col("vec_id") =!= col("q_id"))

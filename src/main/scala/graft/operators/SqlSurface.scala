@@ -164,7 +164,7 @@ object SqlSurface {
     * path — the catalog's scan builder intercepts the pushed WHERE
     * conjuncts and shrinks the live-file list from per-file manifest
     * stats BEFORE Spark's parquet scan ever lists or opens a file, the
-    * same planning the library's `prunedRead` does (op_manifest_skip).
+    * same rule (ManifestPrune) library reads prune with (op_manifest_skip).
     * Four quarter-slice single-file inserts give every file a tight key
     * range; the selective SELECT over the second quarter must plan a
     * scan over exactly 2 of the 5 live files (the quarter's file plus
@@ -614,9 +614,9 @@ object SqlSurface {
     * must surface); (3) a NON-key predicate (`price > 100`), which must
     * fall through to the base scan — the MV folded those rows away and
     * holds no residual to re-check; (4) `st = 'F'` — the
-    * MANIFEST-PRUNED MV read: the rewrite extracts closed key bounds
-    * from the conjuncts and reads the MV through its OWN key stats
-    * (MatView.mvRowsAt → snapshotBoxed), so the served plan's parquet
+    * MANIFEST-PRUNED MV read: the rewrite's key filter reaches the MV
+    * scan through Catalyst's pushdown and prunes it with the MV's OWN
+    * key stats (ManifestPrune), so the served plan's parquet
     * roots list FEWER mv files than the view's live total — file-level
     * pruning of the view itself, plan-proven. `mvf_ok` pins all four
     * plans by their optimized-plan scan roots plus answer-equality
@@ -684,9 +684,9 @@ object SqlSurface {
         r.getDouble(3))).toSet
     // (4) the MANIFEST-PRUNED MV read: an equality on the first
     // cluster key opens only the MV files whose key stats can hold it
-    // (MatView.mvRowsAt → TxnTable.snapshotBoxed — the MV is
+    // (the pushed-down key filter meets ManifestPrune — the MV is
     // range-clustered and stat-indexed on its keys at create and at
-    // every refresh merge, so the rewrite's key bounds prune MV FILES
+    // every refresh merge, so the key predicate prunes MV FILES
     // from the manifest, not just rows from the scan). The plan's
     // parquet roots ARE the kept file list, so the prune is
     // plan-proven: fewer mv data files in the served plan than the
@@ -734,10 +734,10 @@ object SqlSurface {
     * the value-grain "orders at price X" dashboard. The MV
     * stat-indexes its decimal key with floor/ceil-WIDENED long boxes
     * (a sound superset — TxnTable.widenedSpecs; a truncating cast
-    * would mis-box every fractional boundary) and the rewrite extracts
-    * DIRECTION-AWARE long bounds from decimal literals (lo floors, hi
-    * ceils, the attribute unwraps coercion casts —
-    * GraftMvRewrite.keyBounds), so a money-range dashboard opens only
+    * would mis-box every fractional boundary) and ManifestPrune
+    * compares decimal literals DIRECTION-AWARE against those boxes
+    * (lower bounds floor, upper bounds ceil, widening casts on the
+    * attribute unwrap), so a money-range dashboard opens only
     * the MV files whose widened boxes can intersect the slice.
     * `mvdec_ok` asserts: the sliced query serves from MV + feed only
     * while STALE (one unrefreshed cdc batch: deletes, repricings, and

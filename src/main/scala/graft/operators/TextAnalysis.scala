@@ -602,7 +602,7 @@ object TextAnalysis {
     * (tok, doc_id, tf, dl) rows RANGE-CLUSTERED BY TERM with truncated
     * string stats, so a query term's postings live in O(1) files and
     * the lookup prunes from the manifest alone
-    * ([[TxnTable.snapshotStrRange]] — the accounting travels in
+    * ([[TxnTable.snapshotWhere]] — the accounting travels in
     * `idx_ok`). Corpus-level BM25 statistics (doc count, total tokens)
     * ride the commit's `#metrics=` header CUMULATIVELY — N and avgdl
     * are ONE manifest header read at query time, never a corpus or
@@ -706,7 +706,7 @@ object TextAnalysis {
     var kept = 0
     var total = 0
     val termFrames = qts.map { case (t, dfT) =>
-      val (rows, k, tot) = TxnTable.snapshotStrRange(s, store, "tok", t, t)
+      val (rows, k, tot) = TxnTable.snapshotWhere(s, store, col("tok") === t)
       kept += k; total += tot
       rows.withColumn("df", lit(dfT))
     }

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.ConcurrentModificationException
 
 import graft.Tables
+import graft.sources.ManifestPrune
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -2105,7 +2106,7 @@ object TxnTable {
     * then computed on the DERIVED value (days since epoch of timestamp
     * `c`), recorded in the manifest under the spec string itself, and
     * timestamp-range predicates on the BASE column map to day ranges at
-    * every prune site ([[snapshotTimeRange]], the DSv2 ManifestPrune).
+    * every prune site (ManifestPrune's day rule).
     * The table never materializes a day column — the transform lives in
     * metadata only, so event tables get time-pruning for free. */
   private[graft] val DaysSpec = """^days\((.+)\)$""".r
@@ -2126,9 +2127,9 @@ object TxnTable {
     * a plain column name; for `days(c)` the epoch-day of timestamp `c` —
     * floor division so pre-1970 values land on the correct day; for
     * `bucketN(c)` the N-ary multiplicative hash bucket of integral `c`.
-    * The numeric mappings are THE single convention: [[snapshotTimeRange]]
-    * / [[snapshotBucketEq]] and the SQL-path ManifestPrune map predicate
-    * literals with [[epochDayMs]] / [[bucketOf]] to match. */
+    * The numeric mappings are THE single convention: ManifestPrune maps
+    * predicate literals with the same floorDiv and [[bucketOf]] to
+    * match. */
   private[graft] def idxExpr(spec: String): Column = spec match {
     case DaysSpec(c) =>
       // EXACT integer floorDiv of epoch micros — `div` keeps the whole
@@ -2342,133 +2343,6 @@ object TxnTable {
       .toMap
   }
 
-  /** Resolve a snapshot pruned by a BOX predicate — one [lo,hi] range per
-    * indexed column: manifest entries whose bounding box cannot intersect
-    * the query box are SKIPPED — their files are never listed, opened, or
-    * scanned. This is planning from table metadata alone (the manifest is
-    * O(#files) driver-side state); the residual per-row filter still
-    * applies inside the surviving files. Entries without stats on a
-    * predicate column are conservatively kept. Returns the frame plus the
-    * (scanned, total) file counts so callers can assert the skip bit. */
-  def snapshotBox(s: SparkSession, table: String,
-                  box: Seq[(String, Long, Long)], v: Long = -1L)
-      : (DataFrame, Int, Int) =
-    snapshotBoxed(s, table, box, Nil, v)
-
-  /** [[snapshotBox]] over MIXED integral AND string bounding boxes in
-    * one manifest pass — the serving read for a key-predicated consumer
-    * whose keys span both stat kinds (the MV dashboard rewrite). Every
-    * box is a CLOSED interval; files whose recorded range cannot
-    * intersect EVERY box are pruned, files missing a stat are kept
-    * conservatively, and the residual per-row filter applies inside the
-    * survivors (string bounds compare in UTF8 binary order on both the
-    * manifest and the filter side — [[u8cmp]]). */
-  def snapshotBoxed(s: SparkSession, table: String,
-      intBox: Seq[(String, Long, Long)],
-      strBox: Seq[(String, String, String)], v: Long = -1L)
-      : (DataFrame, Int, Int) = {
-    require(intBox.nonEmpty || strBox.nonEmpty,
-      "snapshotBoxed needs at least one (col, lo, hi)")
-    val ver = if (v < 0) currentVersion(s, table) else v
-    val m = manifest(s, table, ver)
-    val pm = physMap(m) // stat groups speak physical; predicates logical
-    val kept = m.entries.filter { e =>
-      intBox.forall { case (c, lo, hi) =>
-        // an EMPTY recorded range (fLo > fHi: the file is all-null in c)
-        // intersects no value box; a missing stat keeps the file
-        e.statFor(pm.getOrElse(c, c)).forall { case (fLo, fHi) =>
-          fLo <= fHi && fHi >= lo && fLo <= hi }
-      } && strBox.forall { case (c, lo, hi) =>
-        e.strStatFor(pm.getOrElse(c, c)).forall { case (fLo, fHi) =>
-          u8cmp(fLo, fHi) <= 0 && u8cmp(fHi, lo) >= 0 &&
-            u8cmp(fLo, hi) <= 0 }
-      }
-    }
-    prunedRead(s, table, m, kept,
-      (intBox.map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi } ++
-        strBox.map { case (c, lo, hi) => col(c) >= lo && col(c) <= hi })
-        .reduce(_ && _))
-  }
-
-  def snapshotRange(s: SparkSession, table: String, indexCol: String,
-                    lo: Long, hi: Long, v: Long = -1L): (DataFrame, Int, Int) =
-    snapshotBox(s, table, Seq((indexCol, lo, hi)), v)
-
-  /** Resolve a snapshot pruned by a POINT predicate on integral base
-    * column `c` of a table whose stats were recorded under a
-    * `bucketN(c)` transform: the literal maps to its bucket
-    * ([[bucketOf]]) and files whose bucket box excludes it are pruned
-    * from the manifest alone — point-lookup skipping on a column the
-    * table is NOT range-clustered by, with no bloom sidecar. */
-  def snapshotBucketEq(s: SparkSession, table: String, c: String,
-      v: Long, ver: Long = -1L): (DataFrame, Int, Int) = {
-    val version = if (ver < 0) currentVersion(s, table) else ver
-    val m = manifest(s, table, version)
-    val pc = physMap(m).getOrElse(c, c)
-    val spec = m.idxCols.collectFirst {
-      case sp @ BucketSpec(n, `pc`) => (sp, n.toInt) }
-    require(spec.isDefined,
-      s"$table carries no bucketN($pc) transform stats " +
-        s"(index: ${m.idxCols})")
-    val (sp, n) = spec.get
-    val b = bucketOf(v, n)
-    val kept = m.entries.filter(_.statFor(sp).forall {
-      case (fLo, fHi) => fLo <= fHi && b >= fLo && b <= fHi })
-    prunedRead(s, table, m, kept, col(c) === v)
-  }
-
-  /** Resolve a snapshot pruned by a TIMESTAMP range on base column `c`
-    * of a table whose manifest stats were recorded under the `days(c)`
-    * PARTITION TRANSFORM ([[idxExpr]]): the predicate on the base
-    * column maps to a day range ([from, until) → [day(from),
-    * day(until − 1µs)]) and prunes files from the manifest alone — the
-    * Iceberg hidden-partitioning read, with no materialized day column
-    * anywhere. The residual per-row timestamp filter still applies
-    * inside the surviving files. `until` is EXCLUSIVE (the natural
-    * time-range shape; an inclusive end at day granularity would leak
-    * the next day's first instant). */
-  def snapshotTimeRange(s: SparkSession, table: String, c: String,
-      from: java.sql.Timestamp, until: java.sql.Timestamp, v: Long = -1L)
-      : (DataFrame, Int, Int) = {
-    val ver = if (v < 0) currentVersion(s, table) else v
-    val m = manifest(s, table, ver)
-    val spec = s"days(${physMap(m).getOrElse(c, c)})"
-    require(m.idxCols.contains(spec),
-      s"$table carries no $spec transform stats (index: ${m.idxCols})")
-    // microsecond-exact bounds: a sub-millisecond `until` must still
-    // keep its last day's files (ms arithmetic would false-prune them)
-    val dLo = epochDayUs(from)
-    val dHi = Math.floorDiv(tsMicros(until) - 1L, 86400000000L)
-    val kept = m.entries.filter(_.statFor(spec).forall {
-      case (fLo, fHi) => fLo <= fHi && fHi >= dLo && fLo <= dHi })
-    prunedRead(s, table, m, kept,
-      col(c) >= lit(from) && col(c) < lit(until))
-  }
-
-  /** Resolve a snapshot pruned by a STRING range predicate on `c` from
-    * the manifest's string stats: entries whose truncated [lo, hi]
-    * bounds cannot intersect the query range are skipped. Bounds are
-    * conservative under truncation (see [[StrStat]]); entries without
-    * string stats on `c` are kept. Comparisons are lexicographic —
-    * ASCII-faithful on both the manifest side (Java) and the residual
-    * filter side (Spark UTF-8 binary). Returns the frame plus the
-    * (scanned, total) counts. */
-  def snapshotStrRange(s: SparkSession, table: String, c: String,
-                       lo: String, hi: String, v: Long = -1L)
-      : (DataFrame, Int, Int) = {
-    val ver = if (v < 0) currentVersion(s, table) else v
-    val m = manifest(s, table, ver)
-    val pc = physMap(m).getOrElse(c, c)
-    // UTF-8 byte-order comparisons (u8cmp) — Spark's own string order;
-    // the empty recorded range (fLo > fHi: all-null file) intersects no
-    // value range, exactly like the integral convention
-    val kept = m.entries.filter(_.strStatFor(pc).forall {
-      case (fLo, fHi) => u8cmp(fLo, fHi) <= 0 &&
-        u8cmp(fHi, lo) >= 0 && u8cmp(fLo, hi) <= 0
-    })
-    prunedRead(s, table, m, kept, col(c) >= lo && col(c) <= hi)
-  }
-
   /** Build a per-file BLOOM FILTER sidecar over column `c` for the given
     * staged files — the stat kind for POINT lookups on a column the
     * layout is NOT clustered by (a time-partitioned table probed by id:
@@ -2515,39 +2389,16 @@ object TxnTable {
     BloomRef(sub, c, m, k)
   }
 
-  /** Resolve a snapshot pruned by an EQUALITY predicate on a
-    * bloom-indexed column: probe the committed sidecar for the k bit
-    * positions of `v` and skip every file whose bloom proves absence.
-    * The membership test is one SMALL job over the sidecar (data-sized
-    * metadata, but ≪ the data itself) returning the qualifying file
-    * names — O(#files) driver state, same as the manifest. Files the
-    * sidecar does not cover (added after the bloom was built) are
-    * conservatively scanned; a false positive costs one extra file scan,
-    * never a wrong result (the residual filter still applies). */
-  def snapshotBloomEq(s: SparkSession, table: String, c: String, v: Long,
-                      ver: Long = -1L): (DataFrame, Int, Int) = {
-    val version = if (ver < 0) currentVersion(s, table) else ver
-    val m = manifest(s, table, version)
-    m.blooms.find(_.col == c) match {
-      case None => // no bloom committed for this column: full scan
-        prunedRead(s, table, m, m.entries, col(c) === v)
-      case Some(b) =>
-        prunedRead(s, table, m, bloomKeep(s, table, b, v, m.entries),
-          col(c) === v)
-    }
-  }
-
-  /** The bloom MEMBERSHIP probe, reusable by any prune site (the
-    * library's [[snapshotBloomEq]] and the DSv2 SQL scan): of `entries`,
-    * keep those the sidecar `b` cannot prove free of value `v` — files
-    * the sidecar doesn't cover (added after the bloom was built) are
-    * conservatively kept, a false positive costs one extra file scan,
-    * never a wrong result (the residual filter still applies inside
-    * surviving files). One SMALL job over the sidecar (data-sized
+  /** The bloom MEMBERSHIP probe behind [[ManifestPrune.keep]]: which
+    * data files (by name) the sidecar `b` cannot prove free of value
+    * `v`. Files the sidecar does not cover (added after the bloom was
+    * built) are conservatively kept; a false positive costs one extra
+    * file scan, never a wrong result (the residual filter still applies
+    * inside surviving files). One SMALL job over the sidecar (data-sized
     * metadata, ≪ the data), O(#files) driver state — same order as the
     * manifest itself. */
-  private[graft] def bloomKeep(s: SparkSession, table: String,
-      b: BloomRef, v: Long, entries: Seq[Entry]): Seq[Entry] = {
+  private[graft] def bloomProbe(s: SparkSession, table: String,
+      b: BloomRef, v: Long): String => Boolean = {
     import s.implicits._
     // replay the EXACT build-side hash (same xxhash64 expressions,
     // evaluated over one literal row) — a driver-side reimplementation
@@ -2578,10 +2429,7 @@ object TxnTable {
       .as[(String, Boolean)].collect()
     val covered = perFile.map(_._1).toSet
     val hits = perFile.filter(_._2).map(_._1).toSet
-    entries.filter { e =>
-      val name = e.path.split('/').last
-      !covered(name) || hits(name)
-    }
+    name => !covered(name) || hits(name)
   }
 
   /** Build a bloom sidecar over the table's CURRENT live files and
@@ -2611,26 +2459,6 @@ object TxnTable {
       idxCols = m.idxCols, strIdxCols = m.strIdxCols,
       blooms = m.blooms.filterNot(_.col == c) :+ b,
       retired = m.retired, checks = m.checks)
-  }
-
-  /** Resolve a snapshot pruned by an IS NULL predicate on `c`: manifest
-    * entries whose per-file null COUNT for `c` is zero are skipped —
-    * value ranges can't answer IS NULL (min/max ignore nulls), which is
-    * exactly why production manifests carry null counts alongside them.
-    * Entries without stats on `c` are conservatively kept. Returns the
-    * frame plus (scanned, total) file counts. */
-  def snapshotNulls(s: SparkSession, table: String, c: String,
-                    v: Long = -1L): (DataFrame, Int, Int) = {
-    val ver = if (v < 0) currentVersion(s, table) else v
-    val m = manifest(s, table, ver)
-    val pc = physMap(m).getOrElse(c, c)
-    // a string-indexed column counts nulls too — either stat kind
-    // answers; a legacy-manifest UNKNOWN count (−1) keeps the file
-    val kept = m.entries.filter(e =>
-      e.nullsFor(pc).orElse(e.strStats.collectFirst {
-        case StrStat(`pc`, _, _, n) => n
-      }).forall(_ != 0))
-    prunedRead(s, table, m, kept, col(c).isNull)
   }
 
   /** Table-level NDV of column `c` at version `v`, from MANIFEST
@@ -2959,12 +2787,6 @@ object TxnTable {
       .getOrElse(Nil)
   }
 
-  /** Past this many distinct values, [[deleteIn]]'s per-file verdicts
-    * fold to the set's [min, max] envelope — planning stays O(#files),
-    * never O(#files × #values); the residual filter stays EXACT (the
-    * same fold the DPP read path applies to oversized runtime IN-sets). */
-  private[graft] val MaxDeleteInValues = 10000
-
   /** File-pruned DELETE of an explicit VALUE SET over one integral
     * column — the GDPR-id-list shape `DELETE FROM t WHERE k IN
     * (v1..vn)`. A range is the wrong tool here: [min(vs), max(vs)]
@@ -2991,7 +2813,7 @@ object TxnTable {
     val pm = physMap(m)
     val pc = pm.getOrElse(key, key)
     val vset = values.distinct.sorted.toIndexedSeq
-    val folded = vset.size > MaxDeleteInValues
+    val folded = vset.size > ManifestPrune.InSetCap
     val (envLo, envHi) = (vset.head, vset.last)
     // the members' bucket images, computed ONCE per spec: bucketOf maps
     // into [0, n), so each image set is ≤ n values however long the id
@@ -3066,7 +2888,7 @@ object TxnTable {
     * the sorted-window probe can only over-touch, never miss; the
     * single-point metadata drop stays SOUND under truncation because
     * lo == hi == v forces every row to equal v exactly. Sets past
-    * [[MaxDeleteInValues]] fold to the envelope for verdicts while the
+    * [[ManifestPrune.InSetCap]] fold to the envelope for verdicts while the
     * residual and the feed stay exact. */
   def deleteInStr(s: SparkSession, table: String, key: String,
       values: Seq[String], cdc: Boolean = false): DeleteResult = {
@@ -3082,7 +2904,7 @@ object TxnTable {
     val pc = physMap(m).getOrElse(key, key)
     val u8 = Ordering.fromLessThan[String](u8cmp(_, _) < 0)
     val vset = values.distinct.sorted(u8).toIndexedSeq
-    val folded = vset.size > MaxDeleteInValues
+    val folded = vset.size > ManifestPrune.InSetCap
     val (envLo, envHi) = (vset.head, vset.last)
     // a STRING key's null count lives in StrStat — the integral
     // nullsFor reads ColStat and would be vacuously absent here,
@@ -3365,11 +3187,12 @@ object TxnTable {
             .parquet(addLines.map(l =>
               pathFor(table, l.split('\t').head)): _*)
             .toDF(adds.schema.fieldNames.toSeq: _*)
-        // the preimage read prunes to files whose manifest key box can
-        // intersect the touched-key range (observed off the tombstone
-        // staging write) — at scale the preimage costs O(matching
-        // files), never a table scan; the semi-join below stays the
-        // exact filter, so a conservative box only over-reads
+        // the preimage read is filtered to the touched-key range
+        // (observed off the tombstone staging write), so the scan opens
+        // only the files whose manifest key box can intersect it — at
+        // scale the preimage costs O(matching files), never a table
+        // scan; the semi-join below stays the exact filter. The key file
+        // is broadcast under the size guard every tombstone join uses
         val old =
           if (tomb.isEmpty)
             s.createDataFrame(s.sparkContext
@@ -3379,19 +3202,10 @@ object TxnTable {
             val kdf = s.read.schema(keySet.schema)
               .parquet(pathFor(table, tomb.head))
             val keyDf = kdf.select(col(kdf.columns.head).as(key))
-            import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-            val base = (adds.schema(key).dataType,
-                keyObs.get("lo"), keyObs.get("hi")) match {
-              case (LongType, lo: java.lang.Long, hi: java.lang.Long) =>
-                snapshotBox(s, table, Seq((key, lo, hi)), cur)._1
-              case (IntegerType, lo: java.lang.Integer, hi: java.lang.Integer) =>
-                snapshotBox(s, table,
-                  Seq((key, lo.longValue, hi.longValue)), cur)._1
-              case (StringType, lo: String, hi: String) =>
-                snapshotBoxed(s, table, Nil, Seq((key, lo, hi)), cur)._1
-              case _ => snapshot(s, table, cur)
-            }
-            base.join(broadcast(keyDf), Seq(key), "left_semi")
+            snapshot(s, table, cur)
+              .filter(col(key) >= keyObs.get("lo") &&
+                col(key) <= keyObs.get("hi"))
+              .join(hinted(s, table, keyDf, tomb), Seq(key), "left_semi")
           }
         stageCdcFeed(s, table, signedDiff(old, newDf, key), cur + 1)
       }
@@ -4241,6 +4055,16 @@ object TxnTable {
     }
   }
 
+  /** `df` — a read of the engine-written `files` of `table` — with a
+    * broadcast hint when [[broadcastable]] proves those files small. A
+    * large set, or one whose size cannot be read, is left to the
+    * planner's choice rather than forcing an executor-memory cliff. */
+  private def hinted(s: SparkSession, table: String, df: DataFrame,
+      files: Seq[String]): DataFrame =
+    if (broadcastable(fs(s, new Path(table)),
+        files.map(p => new Path(pathFor(table, p))))) broadcast(df)
+    else df
+
   /** The (f, p) rows of positional (`~pos`) vector files, read with
     * their fixed schema — a schema-less read would run one inference job
     * per call. */
@@ -4815,12 +4639,18 @@ object TxnTable {
     * Reads `schema` (PHYSICAL names); a manifest without a schema infers
     * one from the files. */
   private def scanEntries(s: SparkSession, table: String,
-      entries: Seq[Entry],
-      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+      entries: Seq[Entry], blooms: Seq[BloomRef],
+      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+    // each (bloom, literal) is probed at most once per scan relation,
+    // however often its plans are optimized
+    val probed = new java.util.concurrent.ConcurrentHashMap[
+      (String, Long), String => Boolean]()
     ManifestScan(s, entries.map { e =>
       val p = pathFor(table, e.path)
-      ManifestFile(p, e.seq, canonCoord(p))
-    }, schema)
+      ManifestFile(p, canonCoord(p), e)
+    }, blooms, (b, v) => probed.computeIfAbsent((b.dir, v),
+      _ => bloomProbe(s, table, b, v)), schema)
+  }
 
   /** [[readEntries]] with the per-row provenance EXPOSED: `keepPos =
     * true` returns the frame with two extra columns — `__gcanon` (the
@@ -4870,7 +4700,7 @@ object TxnTable {
       org.apache.spark.sql.types.StructType(
         physicalSchema(sch).fields ++ extra)
     }
-    val raw0 = scanEntries(s, table, entries, readSchema)
+    val raw0 = scanEntries(s, table, entries, m.blooms, readSchema)
     // the row's file ordinal must come straight off the file-source
     // relation (a join would detach the metadata column)
     val rawPos =
@@ -4888,16 +4718,10 @@ object TxnTable {
           expr(defSql).cast(f.dataType)).otherwise(col(physName(f))))
       }
     // BROADCAST the tombstone side when its on-disk weight is small
-    // (the overwhelmingly common change-set-sized case): the data scan
-    // then streams through broadcast hash anti-joins with zero
+    // (the overwhelmingly common change-set-sized case, [[hinted]]): the
+    // data scan then streams through broadcast hash anti-joins with zero
     // exchanges — on a MoR table every read pays these joins, so the
-    // shuffle-free shape is the one that scales (guide §3.1). A
-    // pathologically large tombstone set falls back to the planner's
-    // choice rather than forcing an executor-memory cliff.
-    def hinted(df: DataFrame, files: Seq[String]): DataFrame =
-      if (broadcastable(fs(s, new Path(table)),
-          files.map(p => new Path(pathFor(table, p))))) broadcast(df)
-      else df
+    // shuffle-free shape is the one that scales (guide §3.1)
     val posCleaned =
       if (posDels.isEmpty) raw
       else {
@@ -4908,7 +4732,7 @@ object TxnTable {
         val dv = readVectors(s, table, posDels.map(_._1))
           .select(col("f").as("__gdf"), col("p").as("__gdp"))
           .distinct()
-        raw.join(hinted(dv, posDels.map(_._1)),
+        raw.join(hinted(s, table, dv, posDels.map(_._1)),
           raw("__gcanon") === dv("__gdf") && raw("__gpos") === dv("__gdp"),
           "left_anti")
       }
@@ -4920,7 +4744,7 @@ object TxnTable {
     val cleaned = keyDels.groupBy(d => joinCol(d._2)).toSeq.sortBy(_._1)
       .foldLeft(posCleaned) { case (acc, (kc, fls)) =>
         val keys = tombstonePairs(s, table, "__tk", fls)
-        acc.join(hinted(keys, fls.map(_._1)),
+        acc.join(hinted(s, table, keys, fls.map(_._1)),
           acc(kc) === keys("__tk") && acc("__gseq") < keys("__tl"),
           "left_anti")
       }
@@ -4934,32 +4758,30 @@ object TxnTable {
     out.toDF(out.columns.toSeq.map(c => logical.getOrElse(c, c)): _*)
   }
 
-  /** Shared tail of every stat-pruned read (box / IS NULL / string
-    * range): scan exactly the `kept` entries — or, when the prune
-    * dropped EVERYTHING, one file behind an always-false filter so the
-    * 0-row result still carries the schema — apply tombstones, then the
-    * residual per-row predicate. Returns (frame, scanned, total). */
-  private def prunedRead(s: SparkSession, table: String, m: Manifest,
-                         kept: Seq[Entry], residual: Column)
-      : (DataFrame, Int, Int) = {
-    require(m.entries.nonEmpty, s"$table version lists no files")
-    val es = if (kept.nonEmpty) kept else m.entries.take(1)
-    val df = readEntries(s, table, m, es)
-      .filter(if (kept.nonEmpty) lit(true) else lit(false))
-      .filter(residual)
-    (df, kept.size, m.entries.size)
-  }
-
   def snapshot(s: SparkSession, table: String, v: Long = -1L): DataFrame = {
     val ver = if (v < 0) currentVersion(s, table) else v
     val m = manifest(s, table, ver)
-    // same guard as snapshotBox: a zero-file version (an overwrite that
-    // staged nothing) must fail loudly, not as a schema-inference error.
-    // readEntries applies sequenced tombstones and reads with the
-    // COMMITTED schema — files older than an added column read it as
-    // NULL (by-name parquet resolution); footers never decide
+    // a zero-file version (an overwrite that staged nothing) must fail
+    // loudly, not as a schema-inference error. readEntries applies
+    // sequenced tombstones and reads with the COMMITTED schema — files
+    // older than an added column read it as NULL (by-name parquet
+    // resolution); footers never decide
     require(m.entries.nonEmpty, s"$table version $ver lists no files")
     readEntries(s, table, m, m.entries)
+  }
+
+  /** [[snapshot]] filtered by `pred`, with the (kept, total) file counts
+    * of the read, both taken from its plan: `total` from the analyzed
+    * plan's manifest scan (every live entry), `kept` from the optimized
+    * one, which holds only the entries [[ManifestPrune.keep]] keeps for
+    * `pred` ([[org.apache.spark.sql.graftbridge.ManifestPruneRule]]; 0
+    * when no entry survives) — the files the read opens. */
+  def snapshotWhere(s: SparkSession, table: String, pred: Column,
+      v: Long = -1L): (DataFrame, Int, Int) = {
+    val df = snapshot(s, table, v).filter(pred)
+    val qe = df.queryExecution
+    (df, ManifestScan.files(qe.optimizedPlan).size,
+      ManifestScan.files(qe.analyzed).size)
   }
 
   /** Resolve `AS OF <timestamp>` to a version: the NEWEST version whose
@@ -5326,7 +5148,7 @@ object TxnTable {
       val m = manifest(s, table, base)
       val pc = physMap(m).getOrElse(c, c)
       // the empty-range sentinel (an all-NULL file records lo > hi)
-      // never intersects a value box — same guard as snapshotBox
+      // never intersects a value box — ManifestPrune's guard too
       val (touch, keep) = m.entries.partition(e =>
         e.stats.find(_.col == pc).exists(st =>
           st.lo <= st.hi && st.lo <= hi && st.hi >= lo))
@@ -5891,7 +5713,8 @@ object TxnTable {
     val bounds = base.agg(min("o_orderkey"), max("o_orderkey")).collect()(0)
     val (kmin, kmax) = (bounds.getLong(0), bounds.getLong(1))
     val (lo, hi) = (kmin, kmin + (kmax - kmin) / 8)
-    val (snap, scanned, total) = snapshotRange(s, t, "o_orderkey", lo, hi)
+    val (snap, scanned, total) = snapshotWhere(s, t,
+      col("o_orderkey") >= lo && col("o_orderkey") <= hi)
     snap.agg(count(lit(1)).as("n"),
         sum(col("price")).cast("double").as("total"))
       .withColumn("skip_ok", lit(scanned >= 1 && scanned < total))
@@ -5922,7 +5745,8 @@ object TxnTable {
       floor(max(col("price"))).cast("long")).collect()(0)
     val (pmin, pmax) = (b.getLong(0), b.getLong(1))
     val (lo, hi) = (pmin, pmin + (pmax - pmin) / 8)
-    val (snap, scanned, total) = snapshotRange(s, t, "price", lo, hi)
+    val (snap, scanned, total) =
+      snapshotWhere(s, t, col("price") >= lo && col("price") <= hi)
     snap.agg(count(lit(1)).as("n"),
         sum(col("price")).cast("double").as("total"))
       .withColumn("skip_ok", lit(scanned >= 1 && scanned < total))
@@ -5986,8 +5810,7 @@ object TxnTable {
     * situation where range stats prune nothing), committed with stats
     * on the transform, and a point lookup maps its literal to a bucket
     * ([[bucketOf]]) and prunes files from the manifest alone
-    * ([[snapshotBucketEq]]; the DSv2 path answers the same equality
-    * from ManifestPrune's bucket rule, TxnSpec-pinned). Lookup keys
+    * (ManifestPrune's bucket rule, which the DSv2 path shares). Lookup keys
     * derive from data min/max so the oracle replays them; `bucket_ok`
     * asserts the prune dropped files. */
   def txnBucket(s: SparkSession, d: String): DataFrame = {
@@ -6000,8 +5823,8 @@ object TxnTable {
       expected = -1L, op = "create", schemaJson = base.schema.json)
     val bounds = base.agg(min("o_orderkey"), max("o_orderkey")).collect()(0)
     val (kmin, kmax) = (bounds.getLong(0), bounds.getLong(1))
-    val (s1, sc1, tot1) = snapshotBucketEq(s, t, "o_orderkey", kmin)
-    val (s2, sc2, tot2) = snapshotBucketEq(s, t, "o_orderkey", kmax)
+    val (s1, sc1, tot1) = snapshotWhere(s, t, col("o_orderkey") === kmin)
+    val (s2, sc2, tot2) = snapshotWhere(s, t, col("o_orderkey") === kmax)
     val ok = sc1 >= 1 && sc1 < tot1 && sc2 >= 1 && sc2 < tot2
     s1.unionByName(s2)
       .select(col("o_orderkey"), col("o_orderstatus"),
@@ -6151,7 +5974,7 @@ object TxnTable {
     * a checked query. The events slice is clustered BY the `days(ts)`
     * transform ([[idxExpr]]) — no day column is ever materialized — and
     * committed with per-file day stats under the `#index=days(ts)`
-    * header; a TIMESTAMP-range read ([[snapshotTimeRange]]) then maps
+    * header; a TIMESTAMP-range read ([[snapshotWhere]]) then maps
     * its bounds to day ranges and prunes files from the MANIFEST alone.
     * Without the transform, an event table must pre-materialize a day
     * column to get time pruning; with it, the predicate stays on the
@@ -6175,7 +5998,8 @@ object TxnTable {
     val dCut = dMin + (dMax - dMin) / 4
     val from = new java.sql.Timestamp(dMin * 86400000L)
     val until = new java.sql.Timestamp((dCut + 1L) * 86400000L)
-    val (snap, scanned, total) = snapshotTimeRange(s, t, "ts", from, until)
+    val (snap, scanned, total) =
+      snapshotWhere(s, t, col("ts") >= lit(from) && col("ts") < lit(until))
     snap.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value")).cast("double").as("sum_value"))
@@ -6211,8 +6035,9 @@ object TxnTable {
       expected = -1L, op = "create")
     // query box: the low quarter of both dimensions (oracle-replayable)
     val (cq, dq) = (cmin + (cmax - cmin) / 4, dmin + (dmax - dmin) / 4)
-    val (snap, scanned, total) =
-      snapshotBox(s, t, Seq(("o_custkey", cmin, cq), ("od", dmin, dq)))
+    val (snap, scanned, total) = snapshotWhere(s, t,
+      col("o_custkey") >= cmin && col("o_custkey") <= cq &&
+        col("od") >= dmin && col("od") <= dq)
     // the skip bit only asserts that metadata pruning BIT (scanned <
     // total): how many of the 8 boxes a quarter-box query intersects is
     // data-distribution-dependent, so a fixed half-prune bound could flip
@@ -6246,7 +6071,7 @@ object TxnTable {
     val clustered = withD.repartitionByRange(8, k).sortWithinPartitions(k)
     commit(s, t, stageIndexed(s, t, clustered, Seq("o_orderkey", "d")),
       expected = -1L, op = "create")
-    val (snap, scanned, total) = snapshotNulls(s, t, "d")
+    val (snap, scanned, total) = snapshotWhere(s, t, col("d").isNull)
     snap.agg(count(lit(1)).as("n"),
         sum(k).as("sum_k"),
         sum(col("price")).cast("double").as("total"))
@@ -6419,7 +6244,7 @@ object TxnTable {
       stageIndexed(s, t, clustered, Nil, Seq("o_orderpriority")),
       expected = -1L, op = "create")
     val (snap, scanned, total) =
-      snapshotStrRange(s, t, "o_orderpriority", "1-URGENT", "1-URGENT")
+      snapshotWhere(s, t, col("o_orderpriority") === "1-URGENT")
     snap.agg(count(lit(1)).as("n"),
         sum(col("price")).cast("double").as("total"))
       .withColumn("skip_ok", lit(scanned >= 1 && scanned < total))
@@ -6657,11 +6482,11 @@ object TxnTable {
     commit(s, t, lines, expected = -1L, op = "create",
       schemaJson = base.schema.json, blooms = Seq(bloom))
     val kv = base.agg(min("o_orderkey")).collect()(0).getLong(0)
-    val (snap, scanned, total) = snapshotBloomEq(s, t, "o_orderkey", kv)
+    val (snap, scanned, total) = snapshotWhere(s, t, col("o_orderkey") === kv)
     val Seq(dmin, dmax) = base.agg(min("od"), max("od")).collect()(0)
       .toSeq.map(_.asInstanceOf[Number].longValue)
-    val (_, dScanned, dTotal) =
-      snapshotRange(s, t, "od", dmin, dmin + (dmax - dmin) / 8)
+    val (_, dScanned, dTotal) = snapshotWhere(s, t,
+      col("od") >= dmin && col("od") <= dmin + (dmax - dmin) / 8)
     snap.agg(count(lit(1)).as("n"),
         sum(col("price")).cast("double").as("total"))
       .withColumn("skip_ok", lit(scanned >= 1 && scanned < total &&
@@ -6815,7 +6640,7 @@ object TxnTable {
     val byFile =
       if (m.entries.isEmpty) Map.empty[String,
         (Seq[ColStat], Seq[HllStat], Seq[StrStat])]
-      else statGroupsByFile(scanEntries(s, table, m.entries, m.schema),
+      else statGroupsByFile(scanEntries(s, table, m.entries, Nil, m.schema),
         col("__gcanon"), indexCols, strCols)
     // byte sizes from one listing per distinct parent directory, keyed
     // by (directory, file name) — the spelling-proof key
@@ -6885,9 +6710,9 @@ object TxnTable {
       liveEntries(s, t, 2).filter(e => newGen(render(e)))
         .forall(e => e.statFor("od").isDefined &&
           e.statFor("o_orderkey").isEmpty)
-    val (_, scanA, totA) = snapshotBox(s, t, Seq(("od", 3L, 4L)), 2)
-    val (_, scanB, totB) =
-      snapshotRange(s, t, "o_orderkey", kmin, kmin + (kmax - kmin) / 4, 2)
+    val (_, scanA, totA) = snapshotWhere(s, t, col("od").between(3L, 4L), 2)
+    val (_, scanB, totB) = snapshotWhere(s, t,
+      k.between(kmin, kmin + (kmax - kmin) / 4), 2)
     // maintenance rewrite adopts the new spec tablewide
     val snap2 = snapshot(s, t)
     commit(s, t, stageIndexed(s, t,
@@ -6895,7 +6720,7 @@ object TxnTable {
         .sortWithinPartitions(col("od"), k), "od"),
       expected = 2L, op = "rewrite", schemaJson = base.schema.json,
       idxCols = Seq("od"))
-    val (odRead, scanC, totC) = snapshotBox(s, t, Seq(("od", 3L, 4L)))
+    val (odRead, scanC, totC) = snapshotWhere(s, t, col("od").between(3L, 4L))
     val oldFiles = v0Lines.size
     val ok = verbatim && deltaOdIndexed &&
       // old generation: conservatively scanned on od, pruned on key
@@ -7022,8 +6847,8 @@ object TxnTable {
     val srcOk = currentVersion(s, src) == 0L
     val bounds = base.agg(min("o_orderkey"), max("o_orderkey")).collect()(0)
     val (kmin, kmax) = (bounds.getLong(0), bounds.getLong(1))
-    val (_, scanned, total) =
-      snapshotRange(s, dst, "o_orderkey", kmin, kmin + (kmax - kmin) / 8)
+    val (_, scanned, total) = snapshotWhere(s, dst,
+      col("o_orderkey").between(kmin, kmin + (kmax - kmin) / 8))
     val ok = refsOk && noLocal && srcOk && scanned >= 1 && scanned < total
     statusAgg(snapshot(s, src), "src")
       .unionByName(statusAgg(snapshot(s, dst), "clone"))
@@ -7222,7 +7047,8 @@ object TxnTable {
     val coldAfter = mAfter.entries.filterNot(inHot).map(render).toSet
     val hotAfter = mAfter.entries.count(inHot)
     // pruning still works on the compacted layout
-    val (_, scanned, total) = snapshotRange(s, t, "o_orderkey", kmin, hi)
+    val (_, scanned, total) =
+      snapshotWhere(s, t, col("o_orderkey").between(kmin, hi))
     val ok = coldLines.subsetOf(coldAfter) &&
       mAfter.metrics("untouched") == coldLines.size.toLong &&
       hotAfter < hotBefore && hotBefore >= 5 &&

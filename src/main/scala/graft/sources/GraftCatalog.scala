@@ -665,11 +665,11 @@ class GraftTable(ident: String, private[sources] val location: String,
       new Path(TxnTable.pathFor(location, e.path))
     val s = spark
     // pushed filters shrink the MANIFEST entry list before the file
-    // index is built: a selective SQL WHERE skips files exactly like the
-    // library's prunedRead — no listing, no footer open, no scan for
-    // files the stats prove empty. Conservative entries (no stats on a
-    // predicate column) always survive; the parquet scan re-applies the
-    // full predicate inside surviving files.
+    // index is built (ManifestPrune.keep, the rule every manifest-backed
+    // scan prunes with): no listing, no footer open, no scan for files
+    // the stats or a bloom sidecar prove empty. Conservative entries (no
+    // stats on a predicate column) always survive; the parquet scan
+    // re-applies the full predicate inside surviving files.
     // the PRUNED entry set also feeds the scan's reported statistics:
     // the planner's broadcast/CBO decisions read exact post-prune
     // bytes, row counts, and per-column NDV/null sketches straight
@@ -679,23 +679,8 @@ class GraftTable(ident: String, private[sources] val location: String,
     new org.apache.spark.sql.graftbridge.PruningScanBuilder(
       s, schema(), options, m.entries.map(pathOf),
       (filters, isRuntime) => {
-        val statKept = ManifestPrune.keep(m.entries, filters)
-        // bloom sidecars answer the predicate range stats can't: a
-        // point lookup on a column whose per-file ranges all overlap
-        // (the "time-partitioned table probed by id" shape). Each
-        // committed bloom is probed once per matching equality conjunct
-        // — one small sidecar job at planning time vs opening every
-        // stat-ambiguous data file; uncovered files stay, false
-        // positives only cost one extra file scan
-        val kept = ManifestPrune.eqLongConjuncts(filters).distinct
-          .foldLeft(statKept) { case (es, (c, v)) =>
-            // skip the sidecar job when stats already emptied the list
-            // (or a previous bloom did) — nothing left to prune
-            if (es.isEmpty) es
-            else m.blooms.find(_.col == c)
-              .map(b => TxnTable.bloomKeep(spark, location, b, v, es))
-              .getOrElse(es)
-          }
+        val kept = ManifestPrune.keep(m.entries, filters, m.blooms,
+          TxnTable.bloomProbe(s, location, _, _))
         keptEntries.set(kept)
         // a runtime (DPP) re-plan books under its own counters — the
         // static-prune deltas scenarios assert on must not inflate

@@ -230,174 +230,19 @@ case class GraftMvRewriteRule(session: SparkSession)
       pinned: Seq[GraftTable], preds: Seq[Expression])
       : Option[org.apache.spark.sql.DataFrame] =
     MatView.rowsAt(session, mvLoc, d,
-      pinned.map(g => g.location -> g.pinnedVersion).toMap,
-      keyBounds(preds)).map(applyKeyPreds(_, preds))
+      pinned.map(g => g.location -> g.pinnedVersion).toMap)
+      .map(applyKeyPreds(_, preds))
 
   private def servedRows(m: JoinMvMatch, preds: Seq[Expression])
       : Option[org.apache.spark.sql.DataFrame] =
     servedRows(m.mvLoc, m.view, m.factG +: m.dimGs, preds)
 
-  /** Closed per-column bounds extracted from the key-only predicate
-    * conjuncts — the manifest-prune handle for the MV's OWN files
-    * ([[MatView.rowsAt]] → `TxnTable.snapshotBoxed`). Only shapes
-    * whose satisfying space is provably inside a closed box contribute
-    * (=, IN over literals, and range conjuncts — intersected per
-    * column); anything else (OR, functions, null-safe equality, a
-    * string bound missing one side) contributes NOTHING, which is
-    * always sound: the box must only be a SUPERSET, the exact
-    * predicate still applies as [[applyKeyPreds]]' residual. Strict
-    * `<`/`>` keep the closed endpoint — a superset, never a miss. */
-  private def keyBounds(preds: Seq[Expression]): MatView.KeyBounds = {
-    import org.apache.spark.sql.catalyst.expressions.{In,
-      GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
-    // the analyzer wraps a literal narrower than the column in a Cast
-    // (`h >= 2` over BIGINT h arrives as `h >= cast(2 as bigint)`);
-    // fold it here — the optimizer's ConstantFolding runs later
-    object Lit {
-      def unapply(e: Expression): Option[Literal] = e match {
-        case l: Literal => Some(l)
-        case c: Cast if c.foldable && c.child.isInstanceOf[Literal] =>
-          Some(Literal(c.eval(null), c.dataType))
-        case _ => None
-      }
-    }
-    // type coercion may wrap the ATTRIBUTE side too (`p IN (0.75, …)`
-    // over DECIMAL p arrives as `cast(p as decimal(12,2)) IN (…)`).
-    // Only WIDENING numeric casts unwrap — they preserve every value,
-    // so a bound on the cast IS a bound on the column. A narrowing
-    // cast does not (non-ANSI integral overflow WRAPS, breaking
-    // order), nor does any string cast (lexicographic vs numeric
-    // order diverge); those contribute no bound, which stays sound.
-    object KeyAttr {
-      import org.apache.spark.sql.types._
-      // integer digits the source type can need vs what the target
-      // decimal offers
-      private def intDigits(dt: DataType): Option[Int] = dt match {
-        case ByteType => Some(3)
-        case ShortType => Some(5)
-        case IntegerType => Some(10)
-        case LongType => Some(19)
-        case d: DecimalType => Some(d.precision - d.scale)
-        case _ => None
-      }
-      private def intBytes(dt: DataType): Option[Int] = dt match {
-        case ByteType => Some(1)
-        case ShortType => Some(2)
-        case IntegerType => Some(4)
-        case LongType => Some(8)
-        case _ => None
-      }
-      private def widens(from: DataType, to: DataType): Boolean =
-        (from, to) match {
-          case (f, t) if f == t => true
-          case (f, t) if intBytes(f).isDefined && intBytes(t).isDefined =>
-            intBytes(t).get >= intBytes(f).get
-          case (f, d: DecimalType) =>
-            intDigits(f).exists(n => d.precision - d.scale >= n &&
-              (f match {
-                case fd: DecimalType => d.scale >= fd.scale
-                case _ => true
-              }))
-          case _ => false
-        }
-      def unapply(e: Expression): Option[AttributeReference] = e match {
-        case a: AttributeReference => Some(a)
-        case c: Cast => c.child match {
-          case a: AttributeReference
-              if widens(a.dataType, c.dataType) => Some(a)
-          case _ => None
-        }
-        case _ => None
-      }
-    }
-    def longOf(l: Literal): Option[Long] = l.value match {
-      case v: java.lang.Byte => Some(v.toLong)
-      case v: java.lang.Short => Some(v.toLong)
-      case v: java.lang.Integer => Some(v.toLong)
-      case v: java.lang.Long => Some(v)
-      case _ => None
-    }
-    // a DECIMAL literal (a money-typed key slice: `price >= 123.45`)
-    // maps DIRECTION-AWARE onto the manifest's long boxes — lower
-    // bounds floor, upper bounds ceil — so the extracted box is a
-    // SUPERSET of the literal's satisfying space exactly as the file
-    // boxes are supersets of their values (widenedSpecs widens
-    // decimals the same way); a magnitude overflowing long extracts
-    // nothing, which is sound
-    def decOf(l: Literal, up: Boolean): Option[Long] = l.value match {
-      case d: org.apache.spark.sql.types.Decimal =>
-        try Some(d.toJavaBigDecimal.setScale(0,
-          if (up) java.math.RoundingMode.CEILING
-          else java.math.RoundingMode.FLOOR).longValueExact)
-        catch { case _: ArithmeticException => None }
-      case _ => None
-    }
-    def lowOf(l: Literal): Option[Long] = longOf(l).orElse(decOf(l, up = false))
-    def highOf(l: Literal): Option[Long] = longOf(l).orElse(decOf(l, up = true))
-    def strOf(l: Literal): Option[String] = l.value match {
-      case u: org.apache.spark.unsafe.types.UTF8String => Some(u.toString)
-      case _ => None
-    }
-    val u8 = Ordering.fromLessThan[String]((a, b) =>
-      org.apache.spark.unsafe.types.UTF8String.fromString(a)
-        .compareTo(org.apache.spark.unsafe.types.UTF8String
-          .fromString(b)) < 0)
-    val ints = scala.collection.mutable.Map[String, (Long, Long)]()
-    val strs = scala.collection.mutable.Map[String, (String, String)]()
-    def narrowI(c: String, lo: Long, hi: Long): Unit =
-      ints(c) = ints.get(c).fold((lo, hi)) { case (l0, h0) =>
-        (math.max(l0, lo), math.min(h0, hi)) }
-    def narrowS(c: String, lo: String, hi: String): Unit =
-      strs(c) = strs.get(c).fold((lo, hi)) { case (l0, h0) =>
-        (u8.max(l0, lo), u8.min(h0, hi)) }
-    def point(a: AttributeReference, l: Literal): Unit =
-      (lowOf(l), highOf(l)) match {
-        // a fractional point literal spans [floor, ceil] — still a box
-        case (Some(lo), Some(hi)) => narrowI(a.name, lo, hi)
-        case _ => strOf(l).foreach(v => narrowS(a.name, v, v))
-      }
-    def low(a: AttributeReference, l: Literal): Unit =
-      lowOf(l).foreach(v => narrowI(a.name, v, Long.MaxValue))
-    def high(a: AttributeReference, l: Literal): Unit =
-      highOf(l).foreach(v => narrowI(a.name, Long.MinValue, v))
-    preds.flatMap(conjunctsOf).foreach {
-      case EqualTo(KeyAttr(a), Lit(l)) => point(a, l)
-      case EqualTo(Lit(l), KeyAttr(a)) => point(a, l)
-      case In(KeyAttr(a), es)
-          if es.nonEmpty && es.forall(Lit.unapply(_).isDefined) =>
-        val ls = es.flatMap(Lit.unapply)
-        val lows = ls.map(lowOf)
-        val highs = ls.map(highOf)
-        val sv = ls.map(strOf)
-        if (lows.forall(_.isDefined) && highs.forall(_.isDefined))
-          narrowI(a.name, lows.flatten.min, highs.flatten.max)
-        else if (sv.forall(_.isDefined))
-          narrowS(a.name, sv.flatten.min(u8), sv.flatten.max(u8))
-      case GreaterThan(KeyAttr(a), Lit(l)) => low(a, l)
-      case GreaterThanOrEqual(KeyAttr(a), Lit(l)) =>
-        low(a, l)
-      case LessThan(KeyAttr(a), Lit(l)) => high(a, l)
-      case LessThanOrEqual(KeyAttr(a), Lit(l)) =>
-        high(a, l)
-      case GreaterThan(Lit(l), KeyAttr(a)) => high(a, l)
-      case GreaterThanOrEqual(Lit(l), KeyAttr(a)) =>
-        high(a, l)
-      case LessThan(Lit(l), KeyAttr(a)) => low(a, l)
-      case LessThanOrEqual(Lit(l), KeyAttr(a)) =>
-        low(a, l)
-      case _ => () // no bound — the superset stays sound
-    }
-    MatView.KeyBounds(
-      ints.toSeq.map { case (c, (lo, hi)) => (c, lo, hi) },
-      strs.toSeq.map { case (c, (lo, hi)) => (c, lo, hi) })
-  }
-
   /** Qualified key predicates, remapped BY NAME onto the MV frame's own
     * attributes and applied before any rollup re-aggregation. Catalyst
     * then pushes the filter through the compensation union down to the
-    * MV scan and the feed parquets — the served plan reads even less
-    * than the unfiltered rewrite would. (Callers guarantee every
-    * reference names an MV key column.) */
+    * MV scan and the feed parquets, where ManifestPrune skips the MV
+    * files the keys cannot live in — the served plan reads only those.
+    * (Callers guarantee every reference names an MV key column.) */
   private def applyKeyPreds(df: org.apache.spark.sql.DataFrame,
       preds: Seq[Expression]): org.apache.spark.sql.DataFrame =
     if (preds.isEmpty) df

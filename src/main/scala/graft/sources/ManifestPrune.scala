@@ -3,31 +3,47 @@ package graft.sources
 import graft.operators.TxnTable
 import graft.operators.TxnTable.Entry
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ByteType, DataType, Decimal, DecimalType, IntegerType, LongType, ShortType, StringType, TimestampNTZType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Manifest-level FILE SKIPPING for the DSv2 SQL read path: evaluate the
-  * pushed-down filter conjuncts against each live entry's per-file stats
-  * (integral [lo,hi]+nulls, truncated string bounds, the same triples
-  * the library's `snapshotBox`/`snapshotStrRange`/`snapshotNulls` prune
-  * from) and keep only the entries that MAY hold a matching row. At
-  * 100 TB this is the difference between O(#files) parquet footer opens
-  * and touching only the files a selective `WHERE` can reach — planning
-  * from driver-side manifest metadata, before any storage I/O.
+/** Manifest-level FILE SKIPPING: evaluate filter conjuncts against each
+  * live entry's per-file stats (integral and widened-decimal [lo,hi] +
+  * nulls, truncated string bounds, days()/bucketN() transform boxes,
+  * bloom sidecars) and keep only the entries that MAY hold a matching
+  * row. [[keep]] is the one keep rule: the DSv2 scan builder calls it
+  * with the pushed filters, and [[org.apache.spark.sql.graftbridge.
+  * ManifestPruneRule]] calls it with the data filters over every
+  * manifest-backed file scan (library snapshots, merge-on-read SQL
+  * reads, MV-served reads). Planning happens from driver-side manifest
+  * metadata, before any storage I/O.
   *
   * Sound by construction: a conjunct whose shape the stats cannot answer
-  * (unsupported operator, non-indexed column, non-integral/non-string
-  * literal) keeps every file — pruning only ever REMOVES files the stats
-  * PROVE empty for the predicate, and the residual per-row filter still
-  * runs inside the surviving files (file sources always re-apply pushed
-  * filters). String comparisons are UTF-8 binary (Spark's own string
-  * order) against the Iceberg-style truncation-conservative bounds. */
+  * (unsupported operator, non-indexed column, narrowing cast, literal of
+  * another type) keeps every file — pruning only ever REMOVES files the
+  * stats PROVE empty for the predicate, and the residual per-row filter
+  * still runs inside the surviving files. String comparisons are UTF-8
+  * binary (Spark's own string order) against the Iceberg-style
+  * truncation-conservative bounds. */
 object ManifestPrune {
 
-  /** Entries that may satisfy EVERY conjunct (logical AND). */
-  def keep(entries: Seq[Entry], conjuncts: Seq[Expression]): Seq[Entry] = {
+  /** Entries that may satisfy EVERY conjunct (logical AND). Range and
+    * transform stats answer first; then each committed bloom on a
+    * column some `col = <integral literal>` conjunct names is asked
+    * through `probe` (the sidecar's verdict over file names), which is
+    * only called while entries remain — a table without blooms runs no
+    * Spark job here. */
+  def keep(entries: Seq[Entry], conjuncts: Seq[Expression],
+      blooms: Seq[TxnTable.BloomRef],
+      probe: (TxnTable.BloomRef, Long) => String => Boolean): Seq[Entry] = {
     val flat = conjuncts.flatMap(split)
-    entries.filter(e => flat.forall(c => mayHold(e, c)))
+    val statKept = entries.filter(e => flat.forall(c => mayHold(e, c)))
+    eqLongConjuncts(flat).distinct.foldLeft(statKept) { case (es, (c, v)) =>
+      if (es.isEmpty) es
+      else blooms.find(_.col == c).fold(es) { b =>
+        val may = probe(b, v)
+        es.filter(e => may(e.path.split('/').last))
+      }
+    }
   }
 
   private def split(e: Expression): Seq[Expression] = e match {
@@ -40,8 +56,9 @@ object ManifestPrune {
     * the same test) — what a bloom sidecar can answer beyond range
     * stats. Only ever used to REMOVE files the bloom proves empty for
     * the literal; anything else is not this shape and prunes nothing. */
-  def eqLongConjuncts(conjuncts: Seq[Expression]): Seq[(String, Long)] =
-    conjuncts.flatMap(split).flatMap {
+  private def eqLongConjuncts(conjuncts: Seq[Expression])
+      : Seq[(String, Long)] =
+    conjuncts.flatMap {
       case EqualTo(l, r) => eqPair(l, r)
       case EqualNullSafe(l, r) => eqPair(l, r)
       case _ => None
@@ -56,24 +73,44 @@ object ManifestPrune {
       }
     }
 
-  /** Unwrap the column side: a bare attribute, or a WIDENING integral
+  /** Unwrap the column side: a bare attribute, or a WIDENING numeric
     * cast of one (an INT column compared to a BIGINT literal arrives as
-    * `CAST(c AS BIGINT)` — the manifest records longs, so a widening
-    * cast is stat-transparent). A NARROWING cast is NOT: `CAST(bigintCol
-    * AS INT) = 5` can match rows whose untruncated value lies far
-    * outside [5, 5] (non-ANSI wrap-around), so evaluating it against the
-    * untruncated bounds would prune files that hold matching rows —
-    * silently wrong results. Narrowing casts answer `None` and keep
+    * `CAST(c AS BIGINT)`, a DECIMAL(10,2) key compared to DECIMAL(12,2)
+    * literals as a decimal cast). A widening cast preserves every value
+    * and its order, so the column's stats answer for the cast. A
+    * NARROWING cast does not: `CAST(bigintCol AS INT) = 5` can match
+    * rows whose untruncated value lies far outside [5, 5] (non-ANSI
+    * wrap-around), so evaluating it against the untruncated bounds
+    * would prune files that hold matching rows. Narrowing casts, and
+    * casts to or from any non-numeric type, answer `None` and keep
     * every file. */
   private def attrOf(e: Expression): Option[String] = e match {
     case a: AttributeReference => Some(a.name)
-    case Cast(a: AttributeReference, t, _, _)
-        if intWidth(a.dataType) > 0 && intWidth(t) >= intWidth(a.dataType) =>
+    case Cast(a: AttributeReference, t, _, _) if widens(a.dataType, t) =>
       Some(a.name)
     case _ => None
   }
 
-  private def intWidth(t: org.apache.spark.sql.types.DataType): Int =
+  private def widens(from: DataType, to: DataType): Boolean =
+    (from, to) match {
+      case (f, t) if intWidth(f) > 0 && intWidth(t) > 0 =>
+        intWidth(t) >= intWidth(f)
+      case (fd: DecimalType, d: DecimalType) =>
+        d.precision - d.scale >= fd.precision - fd.scale && d.scale >= fd.scale
+      case (f, d: DecimalType) => intWidth(f) > 0 &&
+        d.precision - d.scale >= intDigits(intWidth(f))
+      case _ => false
+    }
+
+  /** Decimal digits the integral type of `width` bytes can need. */
+  private def intDigits(width: Int): Int = width match {
+    case 1 => 3
+    case 2 => 5
+    case 4 => 10
+    case _ => 19
+  }
+
+  private def intWidth(t: DataType): Int =
     t match {
       case ByteType => 1
       case ShortType => 2
@@ -82,13 +119,29 @@ object ManifestPrune {
       case _ => 0
     }
 
-  private def intLike(t: org.apache.spark.sql.types.DataType): Boolean =
-    intWidth(t) > 0
+  private def intLike(t: DataType): Boolean = intWidth(t) > 0
 
   private def longLit(e: Expression): Option[Long] = e match {
     case Literal(v, t) if intLike(t) && v != null =>
       Some(v.asInstanceOf[Number].longValue)
     case _ => None
+  }
+
+  /** A numeric literal as the closed long interval the manifest's boxes
+    * compare with: an integral literal is a point; a DECIMAL one spans
+    * [floor, ceil], the same widening decimal index columns get when
+    * their stats are written. None for other types and for a decimal
+    * beyond the long range. */
+  private def longBox(e: Expression): Option[(Long, Long)] = e match {
+    case Literal(d: Decimal, _: DecimalType) => decBox(d)
+    case _ => longLit(e).map(v => (v, v))
+  }
+
+  private def decBox(d: Decimal): Option[(Long, Long)] = {
+    val b = d.toJavaBigDecimal
+    try Some((b.setScale(0, java.math.RoundingMode.FLOOR).longValueExact,
+      b.setScale(0, java.math.RoundingMode.CEILING).longValueExact))
+    catch { case _: ArithmeticException => None }
   }
 
   private def strLit(e: Expression): Option[String] = e match {
@@ -103,7 +156,7 @@ object ManifestPrune {
   private def mayHold(e: Entry, p: Expression): Boolean = p match {
     case EqualTo(l, r) => binInt(e, l, r, "=") && binStr(e, l, r, "=") &&
       binDay(e, l, r, "=") && binBucket(e, l, r)
-    case EqualNullSafe(l, r) if longLit(l).isDefined || longLit(r).isDefined ||
+    case EqualNullSafe(l, r) if longBox(l).isDefined || longBox(r).isDefined ||
         strLit(l).isDefined || strLit(r).isDefined =>
       // <=> a non-null literal matches exactly what = matches
       binInt(e, l, r, "=") && binStr(e, l, r, "=")
@@ -122,6 +175,8 @@ object ManifestPrune {
         intMay(e, c) { case (lo, hi) =>
           vs.exists {
             case n: Number => n.longValue >= lo && n.longValue <= hi
+            case d: Decimal => decBox(d).forall { case (vLo, vHi) =>
+              vHi >= lo && vLo <= hi }
             case _ => true
           }
         } && strMay(e, c) { case (fLo, fHi) =>
@@ -159,12 +214,13 @@ object ManifestPrune {
 
   private def inMay(e: Entry, a: Expression, vs: Seq[Expression]): Boolean =
     attrOf(a).forall { c =>
+      val boxes = vs.map(longBox)
       val longs = vs.map(longLit)
       val strs = vs.map(strLit)
       val intOk =
-        if (longs.forall(_.isDefined))
+        if (boxes.forall(_.isDefined))
           intMay(e, c) { case (lo, hi) =>
-            longs.flatten.exists(v => v >= lo && v <= hi)
+            boxes.flatten.exists { case (vLo, vHi) => vHi >= lo && vLo <= hi }
           }
         else true
       // bucketN(c) transform stats answer IN like they answer equality:
@@ -193,11 +249,11 @@ object ManifestPrune {
       intOk && bucketOk && strOk
     }
 
-  /** Evaluate an integral comparison `col op lit` (either side) against
+  /** Evaluate a numeric comparison `col op lit` (either side) against
     * the entry's [lo,hi]; true when no integral stat can answer. */
   private def binInt(e: Entry, l: Expression, r: Expression, op: String)
       : Boolean =
-    (attrOf(l), longLit(r), attrOf(r), longLit(l)) match {
+    (attrOf(l), longBox(r), attrOf(r), longBox(l)) match {
       case (Some(c), Some(v), _, _) => intOp(e, c, op, v)
       case (_, _, Some(c), Some(v)) => intOp(e, c, flip(op), v)
       case _ => true
@@ -302,17 +358,24 @@ object ManifestPrune {
   private def strMay(e: Entry, c: String)(f: ((String, String)) => Boolean)
       : Boolean = e.strStatFor(c).forall { case (fLo, fHi) => f((fLo, fHi)) }
 
-  private def intOp(e: Entry, c: String, op: String, v: Long): Boolean =
+  /** `col op v` against the box [lo, hi], for a literal known to lie in
+    * [vLo, vHi] ([[longBox]]). The box bounds are integers, so each test
+    * is exact for a decimal literal too: `lo < v` iff `lo < ceil(v)`,
+    * `lo <= v` iff `lo <= floor(v)`, and the mirror images for `hi`. */
+  private def intOp(e: Entry, c: String, op: String, v: (Long, Long))
+      : Boolean = {
+    val (vLo, vHi) = v
     intMay(e, c) { case (lo, hi) =>
       op match {
-        case "=" => v >= lo && v <= hi
-        case "<" => lo < v
-        case "<=" => lo <= v
-        case ">" => hi > v
-        case ">=" => hi >= v
+        case "=" => vHi >= lo && vLo <= hi
+        case "<" => lo < vHi
+        case "<=" => lo <= vLo
+        case ">" => hi > vLo
+        case ">=" => hi >= vHi
         case _ => true
       }
     }
+  }
 
   private def strOp(e: Entry, c: String, op: String, v: String): Boolean =
     strMay(e, c) { case (fLo, fHi) =>
@@ -328,15 +391,16 @@ object ManifestPrune {
 
   // ---- RUNTIME (DPP) filter decoding --------------------------------------
 
-  /** Above this many IN members the per-file set test folds to its
-    * [min,max] envelope: runtime join keys can reach millions of values,
-    * and an O(#files × #values) existence scan at planning time is the
-    * wrong trade — the envelope keeps pruning O(#files) while staying
-    * sound (a superset of the set test). Range-clustered layouts lose
-    * nothing (contiguous build keys ⇒ envelope ≈ set); bucket layouts
-    * lose the per-value bucket probe only on the giant sets where it
-    * was unaffordable anyway. */
-  private val RuntimeInSetCap = 10000
+  /** Above this many IN members a per-file set test folds to its
+    * [min,max] envelope — runtime (DPP) IN-sets here, and the per-file
+    * verdicts of `TxnTable.deleteIn`/`deleteInStr`: a value set can
+    * reach millions of members, and an O(#files × #values) existence
+    * scan at planning time is the wrong trade — the envelope keeps
+    * pruning O(#files) while staying sound (a superset of the set
+    * test). Range-clustered layouts lose nothing (contiguous keys ⇒
+    * envelope ≈ set); bucket layouts lose the per-value bucket probe
+    * only on the giant sets where it was unaffordable anyway. */
+  private[graft] val InSetCap = 10000
 
   /** Decode one RUNTIME V2 predicate (what [[org.apache.spark.sql.
     * execution.datasources.v2.BatchScanExec]] passes to
@@ -375,7 +439,7 @@ object ManifestPrune {
           val withType = a.withDataType(lits.headOption.map(_.dataType)
             .getOrElse(a.dataType))
           val longs = lits.map(l => longLit(l))
-          if (lits.size > RuntimeInSetCap && longs.forall(_.isDefined)) {
+          if (lits.size > InSetCap && longs.forall(_.isDefined)) {
             val ls = longs.flatten
             And(GreaterThanOrEqual(withType, Literal(ls.min)),
               LessThanOrEqual(withType, Literal(ls.max)))

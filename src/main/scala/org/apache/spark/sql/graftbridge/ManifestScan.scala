@@ -1,9 +1,14 @@
 package org.apache.spark.sql.graftbridge
 
+import graft.operators.TxnTable.{BloomRef, Entry}
+import graft.sources.ManifestPrune
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, AttributeSet, BoundReference, Expression, Predicate, PredicateHelper, SubqueryExpression}
+import org.apache.spark.sql.catalyst.planning.PhysicalOperation
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.CharVarcharUtils
 import org.apache.spark.sql.errors.QueryCompilationErrors
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory}
@@ -11,9 +16,10 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One manifest entry as a scan sees it: the file to read, its entry
-  * (data) seq, and its canonical coordinate path. */
-case class ManifestFile(path: String, seq: Long, canon: String)
+/** One manifest entry as a scan sees it: the file to read, its
+  * canonical coordinate path, and the entry itself (its seq and the
+  * per-file stats the scan is pruned with). */
+case class ManifestFile(path: String, canon: String, entry: Entry)
 
 /** A file index over an explicit manifest entry list: one partition
   * directory per entry, whose two partition values are the entry's own
@@ -23,35 +29,30 @@ case class ManifestFile(path: String, seq: Long, canon: String)
   * coordinate a positional vector names) as ordinary columns; no scan
   * file name is ever mapped back to an entry.
   *
-  * File statuses come from one `listStatus` per distinct parent
-  * directory, taken when the index is built (a missing file fails then,
-  * as Spark's own path check does). `rootPaths`, `inputFiles` and
-  * `sizeInBytes` report what an [[InMemoryFileIndex]] over the same
-  * files reports, so plan statistics and scan-source checks see the
-  * same relation. Equality is the entry list: two reads of the same
-  * entries are the same relation to the cache manager and to
-  * exchange reuse. */
-case class ManifestFileIndex(files: Seq[ManifestFile])(spark: SparkSession)
-    extends FileIndex {
+  * `statuses` are the files' statuses, in entry order ([[ManifestScan.
+  * list]]). `rootPaths`, `inputFiles` and `sizeInBytes` report what an
+  * [[InMemoryFileIndex]] over the same files reports, so plan
+  * statistics and scan-source checks see the same relation. Equality
+  * is the entry list and its blooms: two reads of the same entries are
+  * the same relation to the cache manager and to exchange reuse.
+  *
+  * Data filters are answered by [[ManifestPruneRule]], which replaces
+  * the index with [[keep]]'s. `probe` is the bloom-sidecar verdict for
+  * (bloom, literal), memoized by its creator and shared with every
+  * pruned copy. */
+case class ManifestFileIndex(files: Seq[ManifestFile], blooms: Seq[BloomRef])(
+    spark: SparkSession, probe: (BloomRef, Long) => String => Boolean,
+    val statuses: Seq[FileStatus]) extends FileIndex {
 
-  private val conf = spark.sessionState.newHadoopConf()
+  override val rootPaths: Seq[Path] = statuses.map(_.getPath)
 
-  override val rootPaths: Seq[Path] = files.map { f =>
-    val p = new Path(f.path)
-    p.getFileSystem(conf).makeQualified(p)
-  }
-
-  /** Each entry's status, in entry order. */
-  val statuses: Seq[FileStatus] = {
-    val listed = rootPaths.map(_.getParent).distinct.map { d =>
-      val names: Map[String, FileStatus] =
-        try d.getFileSystem(conf).listStatus(d).map(st =>
-          st.getPath.getName -> st).toMap
-        catch { case _: java.io.FileNotFoundException => Map.empty }
-      d -> names
-    }.toMap
-    rootPaths.map(p => listed(p.getParent).getOrElse(p.getName,
-      throw QueryCompilationErrors.dataPathNotExistError(p.toString)))
+  /** This index over only the entries [[ManifestPrune.keep]] keeps for
+    * `conjuncts` (data-column predicates). */
+  def keep(conjuncts: Seq[Expression]): ManifestFileIndex = {
+    val kept = ManifestPrune.keep(files.map(_.entry), conjuncts, blooms,
+      probe).toSet
+    val (fs, sts) = files.zip(statuses).filter(f => kept(f._1.entry)).unzip
+    ManifestFileIndex(fs, blooms)(spark, probe, sts)
   }
 
   override val partitionSchema: StructType = StructType(Seq(
@@ -61,7 +62,7 @@ case class ManifestFileIndex(files: Seq[ManifestFile])(spark: SparkSession)
   private lazy val partitions: Seq[PartitionDirectory] =
     files.zip(statuses).map { case (f, st) =>
       PartitionDirectory(
-        InternalRow(f.seq, UTF8String.fromString(f.canon)),
+        InternalRow(f.entry.seq, UTF8String.fromString(f.canon)),
         Seq(FileStatusWithMetadata(st)))
     }
 
@@ -94,8 +95,10 @@ object ManifestScan {
     * manifest records none) followed by `__gseq` and `__gcanon`.
     * `_metadata.row_index` resolves as on any file-source relation. */
   def apply(spark: SparkSession, files: Seq[ManifestFile],
+      blooms: Seq[BloomRef], probe: (BloomRef, Long) => String => Boolean,
       schema: Option[StructType]): DataFrame = {
-    val index = ManifestFileIndex(files)(spark)
+    val index = ManifestFileIndex(files, blooms)(spark, probe,
+      list(spark, files))
     val format = new ParquetFileFormat
     val data = schema
       .map(CharVarcharUtils.replaceCharVarcharWithStringInSchema)
@@ -105,5 +108,63 @@ object ManifestScan {
     Bridge.ofRows(spark, LogicalRelation(HadoopFsRelation(index,
       index.partitionSchema, data.asNullable, None, format, Map.empty)(
       spark)))
+  }
+
+  /** The files of every manifest scan in `plan` — after optimization,
+    * the files the plan reads. */
+  def files(plan: LogicalPlan): Seq[ManifestFile] = plan.collect {
+    case LogicalRelation(HadoopFsRelation(i: ManifestFileIndex, _, _, _, _,
+        _), _, _, _, _) => i.files
+  }.flatten
+
+  /** Each file's status, in file order, from one `listStatus` per
+    * distinct parent directory (a missing file fails here, as Spark's
+    * own path check does). */
+  private def list(spark: SparkSession, files: Seq[ManifestFile])
+      : Seq[FileStatus] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val paths = files.map { f =>
+      val p = new Path(f.path)
+      p.getFileSystem(conf).makeQualified(p)
+    }
+    val listed = paths.map(_.getParent).distinct.map { d =>
+      val names: Map[String, FileStatus] =
+        try d.getFileSystem(conf).listStatus(d).map(st =>
+          st.getPath.getName -> st).toMap
+        catch { case _: java.io.FileNotFoundException => Map.empty }
+      d -> names
+    }.toMap
+    paths.map(p => listed(p.getParent).getOrElse(p.getName,
+      throw QueryCompilationErrors.dataPathNotExistError(p.toString)))
+  }
+}
+
+/** File skipping for every manifest-backed scan: for a Filter (through
+  * Projects) over a [[ManifestFileIndex]] relation, the index is
+  * replaced by one over only the entries [[ManifestPrune.keep]] keeps
+  * for the filter's deterministic data-column conjuncts, and a scan no
+  * entry survives becomes an empty [[LocalRelation]]. Injected as a
+  * pre-CBO rule, so it runs once per optimization, after predicate
+  * pushdown has moved filters next to the scan — the place Spark's own
+  * `PruneFileSourcePartitions` runs. The optimized plan's parquet roots
+  * are then exactly the files read. */
+object ManifestPruneRule extends Rule[LogicalPlan] with PredicateHelper {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformDown {
+    case op @ PhysicalOperation(_, filters, rel @ LogicalRelation(
+        fsr @ HadoopFsRelation(idx: ManifestFileIndex, part, _, _, _, _),
+        _, _, _, _)) if filters.nonEmpty =>
+      val data = AttributeSet(rel.output.filterNot(a =>
+        part.fieldNames.contains(a.name)))
+      val conjuncts = filters.flatMap(splitConjunctivePredicates).filter(c =>
+        c.deterministic && !SubqueryExpression.hasSubquery(c) &&
+          c.references.nonEmpty && c.references.subsetOf(data))
+      val kept = idx.keep(conjuncts)
+      if (kept.files.size == idx.files.size) op
+      else op.transformUp {
+        case r if r eq rel =>
+          if (kept.files.isEmpty) LocalRelation(rel.output)
+          else rel.copy(relation = fsr.copy(location = kept)(
+            fsr.sparkSession))
+      }
   }
 }

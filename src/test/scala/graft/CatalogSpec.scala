@@ -2864,4 +2864,72 @@ class CatalogSpec extends SparkSpec {
     assert(!p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(p), "the refused epoch's stage was not dropped")
   }
+
+  test("a filter skips files on every manifest read") {
+    val t = fresh("skipeach")
+    val s = spark
+    import s.implicits._
+    val loc = s"${GraftCatalog.defaultWarehouse}/spec/$t"
+    // four files with tight, disjoint k and j boxes
+    val model0 = (0 until 4).flatMap(i => (0 until 100).map(id =>
+      (id + i * 100L, id + i * 1000L, s"q$i")))
+    val df = model0.toDF("k", "j", "v")
+    TxnTable.commit(spark, loc, TxnTable.stageIndexed(spark, loc,
+      TxnTable.clusterExact(spark, df, "k", 0L, 399L, 4), Seq("k", "j")),
+      -1L, op = "create", schemaJson = df.schema.json)
+    // the plain table reads through DSv2, whose scan builder keeps
+    // files by the same rule
+    val (k0, t0) = (GraftCatalog.scanKept.get, GraftCatalog.scanTotal.get)
+    val dsv2 = sql(s"SELECT * FROM graft.spec.$t WHERE k BETWEEN 110 AND 180")
+    assert(dsv2.count() === model0.count(r => r._1 >= 110 && r._1 <= 180))
+    val dsv2Kept = GraftCatalog.scanKept.get - k0
+    assert(GraftCatalog.scanTotal.get - t0 === 4 && dsv2Kept === 1,
+      "the plain table must read through the pruned DSv2 scan")
+    // a pending merge-on-read tombstone and a renamed indexed column:
+    // every read below goes through the manifest scan, not DSv2
+    TxnTable.deleteKeysMor(spark, loc,
+      spark.range(0, 400).filter(col("id") % 7 === 0).toDF("k"), "k")
+    sql(s"ALTER TABLE graft.spec.$t RENAME COLUMN j TO jj")
+    val model = model0.filter(_._1 % 7 != 0)
+    val m = TxnTable.manifest(spark, loc, TxnTable.currentVersion(spark, loc))
+    assert(m.deletes.nonEmpty && TxnTable.hasMappedSchema(m.schema))
+    val live = m.entries.map(_.path)
+    def opened(df: org.apache.spark.sql.DataFrame): Int =
+      ScanFiles.roots(df.queryExecution.optimizedPlan)
+        .count(r => live.exists(r.endsWith))
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, String)] =
+      df.select("k", "jj", "v").as[(Long, Long, String)].collect().toSet
+    val want = model.filter(r => r._1 >= 110 && r._1 <= 180).toSet
+    val (where, kept, total) =
+      TxnTable.snapshotWhere(spark, loc, col("k").between(110L, 180L))
+    assert(kept === dsv2Kept && total === 4,
+      s"snapshotWhere kept $kept/$total")
+    Seq(
+      "SQL" -> sql(s"SELECT * FROM graft.spec.$t WHERE k BETWEEN 110 AND 180"),
+      "library" -> TxnTable.snapshot(spark, loc)
+        .filter(col("k").between(110L, 180L)),
+      "snapshotWhere" -> where).foreach { case (name, df) =>
+      assert(opened(df) === kept, s"$name read opened ${opened(df)} files")
+      assert(rows(df) === want, s"$name read diverged from the model")
+    }
+    // the renamed column prunes with the stats of its physical name
+    val sqlJ = sql(s"SELECT * FROM graft.spec.$t WHERE jj BETWEEN 2010 AND 2050")
+    val (libJ, keptJ, _) =
+      TxnTable.snapshotWhere(spark, loc, col("jj").between(2010L, 2050L))
+    val wantJ = model.filter(r => r._2 >= 2010 && r._2 <= 2050).toSet
+    assert(keptJ === 1 && opened(sqlJ) === 1 && opened(libJ) === 1)
+    assert(rows(sqlJ) === wantJ && rows(libJ) === wantJ)
+    // a filter no file survives plans no data-file scan
+    val none = sql(s"SELECT * FROM graft.spec.$t WHERE k > 100000")
+    assert(opened(none) === 0)
+    assert(none.collect().isEmpty)
+    assert(TxnTable.snapshotWhere(spark, loc, col("k") > 100000L)._2 === 0)
+    // compact applies the tombstone into one file; the column mapping
+    // stays, so the read is still a manifest scan and keeps that file
+    TxnTable.compact(spark, loc)
+    val after = sql(s"SELECT * FROM graft.spec.$t WHERE k BETWEEN 110 AND 180")
+    assert(rows(after) === want)
+    assert(ScanFiles.roots(after.queryExecution.optimizedPlan)
+      .count(_.contains(s"$t/data/")) === 1)
+  }
 }

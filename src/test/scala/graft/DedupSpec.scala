@@ -324,14 +324,7 @@ class DedupSpec extends SparkSpec {
       graft.functions.TextFunctions.fingerprint($"text").as("fp"))
       .localCheckpoint(true)
     val verdicts = Dedup.probeLshStore(spark, store, bBands, bFps)
-    val scans = verdicts.queryExecution.optimizedPlan.collect {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case h: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation => h.location.rootPaths.map(_.toString)
-          case _ => Seq.empty[String]
-        }
-    }.flatten
+    val scans = ScanFiles.roots(verdicts.queryExecution.optimizedPlan)
     assert(scans.nonEmpty, "expected at least the store scan")
     scans.foreach { p =>
       val norm = p.stripPrefix("file:")

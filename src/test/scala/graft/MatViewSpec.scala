@@ -41,22 +41,14 @@ class MatViewSpec extends SparkSpec {
       case r: org.apache.spark.sql.execution.datasources.v2
           .DataSourceV2Relation => r
     }.nonEmpty
-    val roots = p.collect {
-      case l: org.apache.spark.sql.execution.datasources
-          .LogicalRelation => l.relation match {
-        case h: org.apache.spark.sql.execution.datasources
-            .HadoopFsRelation => h.location.rootPaths.map(_.toString)
-        case _ => Nil
-      }
-    }.flatten
+    val roots = ScanFiles.roots(p)
     !hasV2 && roots.nonEmpty && roots.forall(_.contains(mv))
   }
 
   /** [[planServedFrom]], accepting the plan-time COLLAPSE a provably
-    * empty key selection now produces: the rewrite's key bounds prune
-    * every MV file, the schema-carrying survivor rides behind an
-    * always-false filter, and PropagateEmptyRelation folds the whole
-    * read to an empty local relation — the metadata-only answer.
+    * empty key selection now produces: the key filter prunes every MV
+    * file, and the MV scan becomes an empty local relation — the
+    * metadata-only answer.
     * Either plan is a win; a BASE scan is the one thing it must never
     * be (and a folded plan has no scan at all). */
   private def planServedOrFolded(df: org.apache.spark.sql.DataFrame,
@@ -236,14 +228,7 @@ class MatViewSpec extends SparkSpec {
     // (plan.toString truncates paths — collect the nodes instead)
     def mvServed(q: String): Boolean = {
       val p = s.sql(q).queryExecution.optimizedPlan
-      val roots = p.collect {
-        case l: org.apache.spark.sql.execution.datasources
-            .LogicalRelation => l.relation match {
-          case h: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation => h.location.rootPaths.map(_.toString)
-          case _ => Nil
-        }
-      }.flatten
+      val roots = ScanFiles.roots(p)
       val hasV2 = p.collect {
         case r: org.apache.spark.sql.execution.datasources.v2
             .DataSourceV2ScanRelation => r.relation
@@ -490,14 +475,7 @@ class MatViewSpec extends SparkSpec {
       "CAST(SUM(v) AS DOUBLE) AS t FROM graft.mvspec.comp GROUP BY g"
     def srcs(query: String): (Seq[String], Boolean) = {
       val p = s.sql(query).queryExecution.optimizedPlan
-      val roots = p.collect {
-        case l: org.apache.spark.sql.execution.datasources
-            .LogicalRelation => l.relation match {
-          case h: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation => h.location.rootPaths.map(_.toString)
-          case _ => Nil
-        }
-      }.flatten
+      val roots = ScanFiles.roots(p)
       val hasV2 = p.collect {
         case r: org.apache.spark.sql.execution.datasources.v2
             .DataSourceV2ScanRelation => r.relation
@@ -585,14 +563,7 @@ class MatViewSpec extends SparkSpec {
         case r: org.apache.spark.sql.execution.datasources.v2
             .DataSourceV2Relation => r
       }.nonEmpty
-      val roots = p.collect {
-        case l: org.apache.spark.sql.execution.datasources
-            .LogicalRelation => l.relation match {
-          case h: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation => h.location.rootPaths.map(_.toString)
-          case _ => Nil
-        }
-      }.flatten
+      val roots = ScanFiles.roots(p)
       !hasV2 && roots.nonEmpty && roots.forall(_.contains(mv))
     }
     val q = "SELECT g, AVG(v) AS a FROM graft.mvspec.avg GROUP BY g"
@@ -791,14 +762,8 @@ class MatViewSpec extends SparkSpec {
         s"[${boxes.map(_._1).min}, ${boxes.map(_._2).max}]")
     def served(q: String): Boolean = planServedFrom(s.sql(q), mv)
     def mvFilesIn(q: String): Int =
-      s.sql(q).queryExecution.optimizedPlan.collect {
-        case l: org.apache.spark.sql.execution.datasources
-            .LogicalRelation => l.relation match {
-          case h: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation => h.location.rootPaths.map(_.toString)
-          case _ => Nil
-        }
-      }.flatten.count(p => p.contains(mv) && p.endsWith(".parquet"))
+      ScanFiles.roots(s.sql(q).queryExecution.optimizedPlan)
+        .count(p => p.contains(mv) && p.endsWith(".parquet"))
     def check(q: String): Unit = {
       assert(served(q), s"must serve from the MV: $q")
       val opened = mvFilesIn(q)
@@ -914,20 +879,14 @@ class MatViewSpec extends SparkSpec {
       "WHERE g = 'Z' GROUP BY g"))
     assert(s.sql("SELECT g, COUNT(*) AS n FROM graft.mvspec.fk " +
       "WHERE g = 'Z' GROUP BY g").collect().isEmpty)
-    // MANIFEST-LEVEL MV FILE PRUNING: the rewrite extracts closed key
-    // bounds from the conjuncts and reads the view through
-    // snapshotBoxed, so the served plan's parquet roots ARE the kept
+    // MANIFEST-LEVEL MV FILE PRUNING: the rewrite's key filter reaches
+    // the view's scan through Catalyst's pushdown and ManifestPrune
+    // prunes it, so the served plan's parquet roots ARE the kept
     // files — a point predicate over the (g, h)-clustered 8-group view
     // must open strictly fewer files than the view holds
     def mvFilesIn(q: String): Int =
-      s.sql(q).queryExecution.optimizedPlan.collect {
-        case l: org.apache.spark.sql.execution.datasources
-            .LogicalRelation => l.relation match {
-          case h: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation => h.location.rootPaths.map(_.toString)
-          case _ => Nil
-        }
-      }.flatten.count(p => p.contains(mv) && p.endsWith(".parquet"))
+      ScanFiles.roots(s.sql(q).queryExecution.optimizedPlan)
+        .count(p => p.contains(mv) && p.endsWith(".parquet"))
     val mvLive = TxnTable.manifest(spark, mv,
       TxnTable.currentVersion(spark, mv)).entries.size
     val openedPoint = mvFilesIn("SELECT g, COUNT(*) AS n " +
@@ -944,9 +903,8 @@ class MatViewSpec extends SparkSpec {
     assert(mvFilesIn("SELECT g, COUNT(*) AS n FROM graft.mvspec.fk " +
       "WHERE h = 1 OR h = 3 GROUP BY g") == mvLive,
       "an OR predicate contributes no bound — every MV file reads")
-    // provably-empty bounds (h = 1 AND h = 2) keep zero files: the
-    // read degrades to one schema-carrying file behind an always-false
-    // filter (usually folded away at plan time), answering empty
+    // a provably-empty predicate (h = 1 AND h = 2) keeps zero files:
+    // the read plans no MV file scan (or folds away), answering empty
     assert(servedOrFolded("SELECT g, COUNT(*) AS n FROM graft.mvspec.fk " +
       "WHERE h = 1 AND h = 2 GROUP BY g"))
     assert(s.sql("SELECT g, COUNT(*) AS n FROM graft.mvspec.fk " +
@@ -1156,14 +1114,7 @@ class MatViewSpec extends SparkSpec {
         case r: org.apache.spark.sql.execution.datasources.v2
             .DataSourceV2Relation => r
       }.nonEmpty
-      val roots = p.collect {
-        case l: org.apache.spark.sql.execution.datasources
-            .LogicalRelation => l.relation match {
-          case h: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation => h.location.rootPaths.map(_.toString)
-          case _ => Nil
-        }
-      }.flatten
+      val roots = ScanFiles.roots(p)
       !hasV2 && roots.nonEmpty && roots.exists(_.contains(mv)) &&
         roots.forall(r2 => r2.contains(mv) || r2.contains(s"$loc/_cdc"))
     }
@@ -1775,14 +1726,7 @@ class MatViewSpec extends SparkSpec {
          SELECT k + 9000, 'F', CAST(42.50 AS DECIMAL(12,2)), 'U'
            FROM graft.mvspec.pct WHERE k % 17 = 2"""),
       "k", cdc = true)
-    val p2 = s.sql(q).queryExecution.optimizedPlan.collect {
-      case l: org.apache.spark.sql.execution.datasources
-          .LogicalRelation => l.relation match {
-        case h: org.apache.spark.sql.execution.datasources
-            .HadoopFsRelation => h.location.rootPaths.map(_.toString)
-        case _ => Nil
-      }
-    }.flatten
+    val p2 = ScanFiles.roots(s.sql(q).queryExecution.optimizedPlan)
     assert(p2.exists(_.contains(mv)) &&
       p2.exists(_.contains(s"$loc/_cdc")) &&
       !p2.exists(r => r.contains(s"$loc/data")),
@@ -1867,14 +1811,7 @@ class MatViewSpec extends SparkSpec {
     // a live serve legitimately opens the DIM at query time — "served"
     // = the sub-view is in the plan and no FACT data file is
     def servedLive(df: org.apache.spark.sql.DataFrame): Boolean = {
-      val roots = df.queryExecution.optimizedPlan.collect {
-        case l: org.apache.spark.sql.execution.datasources
-            .LogicalRelation => l.relation match {
-          case h: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation => h.location.rootPaths.map(_.toString)
-          case _ => Nil
-        }
-      }.flatten
+      val roots = ScanFiles.roots(df.queryExecution.optimizedPlan)
       roots.exists(_.contains(s"$liveMv/")) &&
         !roots.exists(r => r.contains(f2) && !r.contains("_cdc"))
     }
@@ -2228,14 +2165,7 @@ class MatViewSpec extends SparkSpec {
         case r: org.apache.spark.sql.execution.datasources.v2
             .DataSourceV2Relation => r
       }.nonEmpty
-      val roots = p.collect {
-        case l: org.apache.spark.sql.execution.datasources
-            .LogicalRelation => l.relation match {
-          case h: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation => h.location.rootPaths.map(_.toString)
-          case _ => Nil
-        }
-      }.flatten
+      val roots = ScanFiles.roots(p)
       !hasV2 && roots.exists(_.contains(s"$mv/")) &&
         roots.forall(r => r.contains(s"$mv/") || r.contains(d1) ||
           r.contains(d2) || r.contains(s"$fact/_cdc")) &&
@@ -2357,14 +2287,7 @@ class MatViewSpec extends SparkSpec {
     assert(defOf[MatView.LiveDef](mv).grain === Seq("a", "flag"))
     def servedLive(df: org.apache.spark.sql.DataFrame): Boolean = {
       val p = df.queryExecution.optimizedPlan
-      val roots = p.collect {
-        case l: org.apache.spark.sql.execution.datasources
-            .LogicalRelation => l.relation match {
-          case h: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation => h.location.rootPaths.map(_.toString)
-          case _ => Nil
-        }
-      }.flatten
+      val roots = ScanFiles.roots(p)
       roots.exists(_.contains(s"$mv/")) &&
         !roots.exists(r => r.contains(fact) && !r.contains("_cdc"))
     }
@@ -2893,14 +2816,7 @@ class MatViewSpec extends SparkSpec {
     assert(liveGot === liveWant && liveGot.exists(_._1 == "LQ"),
       "the DDL-created live view must serve the moved dim exactly")
     // the optimized plan reads the sub-view + dim, never a fact file
-    val roots = s.sql(liveQ).queryExecution.optimizedPlan.collect {
-      case l: org.apache.spark.sql.execution.datasources
-          .LogicalRelation => l.relation match {
-        case h: org.apache.spark.sql.execution.datasources
-            .HadoopFsRelation => h.location.rootPaths.map(_.toString)
-        case _ => Nil
-      }
-    }.flatten
+    val roots = ScanFiles.roots(s.sql(liveQ).queryExecution.optimizedPlan)
     assert(roots.exists(_.contains(s"$liveLoc/")) &&
       !roots.exists(r => r.contains("/mvspec/ddlf") &&
         !r.contains("_cdc")),
@@ -2924,15 +2840,8 @@ class MatViewSpec extends SparkSpec {
     val lwQ = "SELECT seg, COUNT(*) AS n FROM graft.mvspec.ddlf f " +
       "JOIN graft.mvspec.ddld d ON f.fk = d.pk WHERE v > 10 " +
       "GROUP BY seg"
-    def lwRoots(q: String) = s.sql(q).queryExecution.optimizedPlan
-      .collect {
-        case l: org.apache.spark.sql.execution.datasources
-            .LogicalRelation => l.relation match {
-          case h: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation => h.location.rootPaths.map(_.toString)
-          case _ => Nil
-        }
-      }.flatten
+    def lwRoots(q: String) =
+      ScanFiles.roots(s.sql(q).queryExecution.optimizedPlan)
     assert(lwRoots(lwQ).exists(_.contains(s"$lwLoc/")) &&
       !lwRoots(lwQ).exists(r => r.contains("/mvspec/ddlf") &&
         !r.contains("_cdc")),
@@ -3089,14 +2998,7 @@ class MatViewSpec extends SparkSpec {
         case r: org.apache.spark.sql.execution.datasources.v2
             .DataSourceV2Relation => r
       }.nonEmpty
-      val roots = p.collect {
-        case l: org.apache.spark.sql.execution.datasources
-            .LogicalRelation => l.relation match {
-          case h: org.apache.spark.sql.execution.datasources
-              .HadoopFsRelation => h.location.rootPaths.map(_.toString)
-          case _ => Nil
-        }
-      }.flatten
+      val roots = ScanFiles.roots(p)
       !hasV2 && roots.exists(_.contains(mv)) && roots.forall(r =>
         r.contains(mv) || r.contains(s"$fact/_cdc") ||
           Seq(d1, d2).exists(d => r.contains(s"$d/")))
@@ -3317,14 +3219,7 @@ class MatViewSpec extends SparkSpec {
       case r: org.apache.spark.sql.execution.datasources.v2
           .DataSourceV2Relation => r
     }.nonEmpty
-    val roots = p.collect {
-      case l: org.apache.spark.sql.execution.datasources
-          .LogicalRelation => l.relation match {
-        case h: org.apache.spark.sql.execution.datasources
-            .HadoopFsRelation => h.location.rootPaths.map(_.toString)
-        case _ => Nil
-      }
-    }.flatten
+    val roots = ScanFiles.roots(p)
     assert(!hasV2 && roots.exists(_.contains(mv)) &&
       roots.forall(r2 => r2.contains(mv) ||
         r2.contains(s"$factLoc/_cdc") || r2.contains(dimLoc)),

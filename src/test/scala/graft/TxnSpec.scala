@@ -222,7 +222,8 @@ class TxnSpec extends SparkSpec {
     TxnTable.commit(spark, t, TxnTable.stageIndexed(spark, t, df, "k"), -1L)
     val entries = TxnTable.liveEntries(spark, t, 0)
     assert(entries.forall(_.stats.nonEmpty), "stageIndexed left stats off")
-    val (snap, scanned, total) = TxnTable.snapshotRange(spark, t, "k", 10L, 20L)
+    val (snap, scanned, total) =
+      TxnTable.snapshotWhere(spark, t, col("k").between(10L, 20L))
     assert(scanned < total, s"no files pruned ($scanned of $total)")
     // correctness: pruned read == full filter
     assert(snap.select("k").as[Long].collect().toSet === (10L to 20L).toSet)
@@ -241,7 +242,8 @@ class TxnSpec extends SparkSpec {
     val df = baseDf(100).repartitionByRange(4, col("k"))
       .sortWithinPartitions(col("k"))
     TxnTable.commit(spark, t, TxnTable.stageIndexed(spark, t, df, "k"), -1L)
-    val (snap, scanned, total) = TxnTable.snapshotRange(spark, t, "k", 500L, 600L)
+    val (snap, scanned, total) =
+      TxnTable.snapshotWhere(spark, t, col("k").between(500L, 600L))
     assert(scanned === 0 && total === 4)
     assert(snap.count() === 0)
   }
@@ -258,7 +260,8 @@ class TxnSpec extends SparkSpec {
     val entries = TxnTable.liveEntries(spark, t, 1)
     assert(entries.forall(_.stats.exists(_.col == "k")),
       "append dropped the manifest index from new files")
-    val (snap, scanned, total) = TxnTable.snapshotRange(spark, t, "k", 200L, 300L)
+    val (snap, scanned, total) =
+      TxnTable.snapshotWhere(spark, t, col("k").between(200L, 300L))
     assert(scanned < total, "appended file stats did not prune")
     assert(snap.select("k").as[Long].collect().toSet === Set(200L, 201L))
   }
@@ -279,7 +282,8 @@ class TxnSpec extends SparkSpec {
       e.statFor("x").nonEmpty && e.statFor("y").nonEmpty))
     // a box narrow in x AND y must prune files that match x but miss y
     val (snap, scanned, total) =
-      TxnTable.snapshotBox(spark, t, Seq(("x", 0L, 49L), ("y", 0L, 49L)))
+      TxnTable.snapshotWhere(spark, t,
+        col("x").between(0L, 49L) && col("y").between(0L, 49L))
     assert(scanned < total, s"2-D box did not prune ($scanned of $total)")
     val rows = snap.as[(Long, Long)].collect().toSet
     val expect = (0 until 100).map { i =>
@@ -299,7 +303,7 @@ class TxnSpec extends SparkSpec {
     val entries = TxnTable.liveEntries(spark, t, v1)
     assert(entries.forall(_.stats.exists(_.col == "k")),
       "compaction dropped the manifest index")
-    val (snap, _, _) = TxnTable.snapshotRange(spark, t, "k", 10L, 20L)
+    val (snap, _, _) = TxnTable.snapshotWhere(spark, t, col("k").between(10L, 20L))
     assert(snap.select("k").as[Long].collect().toSet === (10L to 20L).toSet)
     assert(TxnTable.snapshot(spark, t).count() === 100)
   }
@@ -502,7 +506,7 @@ class TxnSpec extends SparkSpec {
     val entries = TxnTable.liveEntries(spark, t, 0)
     assert(entries.map(_.nullsFor("d").get).sum === 25L)
     val withNulls = entries.filter(_.nullsFor("d").exists(_ > 0))
-    val (snap, scanned, total) = TxnTable.snapshotNulls(spark, t, "d")
+    val (snap, scanned, total) = TxnTable.snapshotWhere(spark, t, col("d").isNull)
     assert(total === 4 && scanned === withNulls.size && scanned < total,
       s"IS NULL did not prune ($scanned of $total)")
     assert(snap.select("k").as[Long].collect().toSet === (0L until 25L).toSet)
@@ -519,7 +523,8 @@ class TxnSpec extends SparkSpec {
     assert(e2.forall(_.statFor("d").exists { case (lo, hi) => lo > hi }))
     assert(e2.map(_.nullsFor("d").get).sum === 2L)
     val (boxDf, boxScanned, _) =
-      TxnTable.snapshotRange(spark, t2, "d", Long.MinValue, Long.MaxValue)
+      TxnTable.snapshotWhere(spark, t2,
+        col("d").between(Long.MinValue, Long.MaxValue))
     assert(boxScanned === 0 && boxDf.count() === 0,
       "empty range matched a value box")
   }
@@ -634,7 +639,7 @@ class TxnSpec extends SparkSpec {
       === expect)
     assert(TxnTable.snapshot(spark, t, 0).count() === 100)
     // box reads apply tombstones too
-    val (boxDf, _, _) = TxnTable.snapshotRange(spark, t, "k", 0L, 20L)
+    val (boxDf, _, _) = TxnTable.snapshotWhere(spark, t, col("k").between(0L, 20L))
     assert(boxDf.select("k").as[Long].collect().toSet
       === (0L to 20L).filterNot(_ % 7 == 0).toSet)
     // writers commit ON TOP of pending tombstones (sequenced deletes —
@@ -695,14 +700,14 @@ class TxnSpec extends SparkSpec {
       assert(lo.length <= 16 && hi.length <= 17, s"($lo,$hi)")
     }
     // a query inside the 'aaa…' region prunes the 'zzz…' files
-    val (snap, scanned, total) = TxnTable.snapshotStrRange(spark, t,
-      "name", "aaaaaaaaaaaaaaaaZZ00", "aaaaaaaaaaaaaaaaZZ49")
+    val (snap, scanned, total) = TxnTable.snapshotWhere(spark, t,
+      col("name").between("aaaaaaaaaaaaaaaaZZ00", "aaaaaaaaaaaaaaaaZZ49"))
     assert(scanned < total, s"string stats did not prune ($scanned of $total)")
     assert(snap.count() === 50,
       "truncated bounds pruned a file that held matching rows")
     // equality on a TAB-carrying value still resolves correctly
-    val (snapTab, _, _) = TxnTable.snapshotStrRange(spark, t,
-      "name", "zzzzzzzzzzzzzzzzAA\t50", "zzzzzzzzzzzzzzzzAA\t50")
+    val (snapTab, _, _) = TxnTable.snapshotWhere(spark, t,
+      col("name").between("zzzzzzzzzzzzzzzzAA\t50", "zzzzzzzzzzzzzzzzAA\t50"))
     assert(snapTab.select("k").as[Long].collect().toSeq === Seq(50L))
     // append keeps BOTH stat kinds on new files
     TxnTable.append(spark, t,
@@ -730,8 +735,8 @@ class TxnSpec extends SparkSpec {
     assert(TxnTable.snapshot(spark, t2, res.version).count() === 20,
       "all-null string group dropped live rows through a merge")
     // and an all-null string stat is never matched by a value range
-    val (snapNone, scannedNone, _) = TxnTable.snapshotStrRange(
-      spark, t2, "name", "", "￿")
+    val (snapNone, scannedNone, _) = TxnTable.snapshotWhere(
+      spark, t2, col("name").between("", "￿"))
     assert(snapNone.filter(col("name").isNotNull).count() === 1)
     assert(scannedNone >= 1)
   }
@@ -990,7 +995,7 @@ class TxnSpec extends SparkSpec {
     // pruned files never opened
     val probe = 37L // id of t=1, lives in the first file
     val (snap, scanned, total) =
-      TxnTable.snapshotBloomEq(spark, t, "id", probe)
+      TxnTable.snapshotWhere(spark, t, col("id") === probe)
     assert(scanned < total, s"bloom did not prune ($scanned of $total)")
     assert(snap.select("t").as[Long].collect().toSeq === Seq(1L))
     val keptPaths = TxnTable.liveEntries(spark, t, 0)
@@ -999,22 +1004,22 @@ class TxnSpec extends SparkSpec {
       .subsetOf(keptPaths))
     // an absent value: everything pruned (up to false positives), no crash
     val (snapNone, scNone, _) =
-      TxnTable.snapshotBloomEq(spark, t, "id", 999999L)
+      TxnTable.snapshotWhere(spark, t, col("id") === 999999L)
     assert(snapNone.count() === 0)
     assert(scNone <= 1, "absent probe scanned more than the fp budget")
     // an appended file is NOT covered by the sidecar: conservatively
     // scanned, and its rows still found
     TxnTable.append(spark, t, Seq((200L, 999999L)).toDF("t", "id"))
     val (snap2, sc2, tot2) =
-      TxnTable.snapshotBloomEq(spark, t, "id", 999999L)
+      TxnTable.snapshotWhere(spark, t, col("id") === 999999L)
     assert(snap2.select("t").as[Long].collect().toSeq === Seq(200L),
       "uncovered file was wrongly bloom-pruned")
     assert(sc2 < tot2, "covered files stopped pruning after append")
     // the sidecar survives vacuum while its version is retained
     TxnTable.compact(spark, t)
     TxnTable.vacuum(spark, t, retain = 2)
-    val (snap3, _, _) = TxnTable.snapshotBloomEq(spark, t, "id", probe,
-      ver = 1L)
+    val (snap3, _, _) = TxnTable.snapshotWhere(spark, t, col("id") === probe,
+      1L)
     assert(snap3.select("t").as[Long].collect().toSeq === Seq(1L),
       "vacuum deleted a retained version's bloom sidecar")
   }
@@ -1049,7 +1054,8 @@ class TxnSpec extends SparkSpec {
     val statted = TxnTable.liveEntries(spark, t, v2)
       .filter(_.statFor("k").nonEmpty)
     assert(statted.size >= 4, "append after emptying delete lost the index")
-    val (_, scanned, total) = TxnTable.snapshotRange(spark, t, "k", 0L, 10L)
+    val (_, scanned, total) =
+      TxnTable.snapshotWhere(spark, t, col("k").between(0L, 10L))
     assert(scanned < total, "range pruning dead after emptying delete")
   }
 
@@ -1070,11 +1076,11 @@ class TxnSpec extends SparkSpec {
     // null count is UNKNOWN (-1): IS NULL pruning must KEEP the file,
     // never skip it on absent information
     assert(m.entries.head.nullsFor("k") === Some(-1L))
-    val (snap, scanned, total) = TxnTable.snapshotNulls(spark, t, "k")
+    val (snap, scanned, total) = TxnTable.snapshotWhere(spark, t, col("k").isNull)
     assert(scanned === total)
     assert(snap.count() === 0) // no actual nulls in the data
     // and value-range pruning still works off the legacy bounds
-    val (_, sc2, _) = TxnTable.snapshotRange(spark, t, "k", 100L, 200L)
+    val (_, sc2, _) = TxnTable.snapshotWhere(spark, t, col("k").between(100L, 200L))
     assert(sc2 === 0)
   }
 
@@ -1203,16 +1209,16 @@ class TxnSpec extends SparkSpec {
         .sortWithinPartitions(col("g"), col("k")))
     // a g box read: every row with g in [4,7] from BOTH generations —
     // old files lack g stats and must all be scanned, never pruned
-    val (df, scanned, total) = TxnTable.snapshotBox(spark, t,
-      Seq(("g", 4L, 7L)))
+    val (df, scanned, total) = TxnTable.snapshotWhere(spark, t,
+      col("g").between(4L, 7L))
     val expect = (0 until 600).filter(i => i % 16 >= 4 && i % 16 <= 7)
     assert(df.select("k").as[Long].collect().sorted ===
       expect.map(_.toLong).toArray, "false prune across generations")
     assert(scanned >= 4 && scanned < total,
       s"old gen must scan, new gen must prune: $scanned/$total")
     // the OLD column still prunes old-generation files
-    val (df2, scanned2, total2) = TxnTable.snapshotRange(spark, t,
-      "k", 0L, 99L)
+    val (df2, scanned2, total2) = TxnTable.snapshotWhere(spark, t,
+      col("k").between(0L, 99L))
     assert(df2.count() === 100)
     assert(scanned2 < total2, "old-column stats lost after recluster")
   }
@@ -2408,7 +2414,12 @@ class TxnSpec extends SparkSpec {
       "BOTH read paths; range stats would prune nothing") {
     val s2 = spark
     import s2.implicits._
-    val t = freshTable("bucket_tx")
+    import graft.sources.GraftCatalog
+    GraftCatalog.register(spark)
+    // a catalog table, so the SQL (DSv2) read and the library read see
+    // the same files
+    val t = s"${GraftCatalog.defaultWarehouse}/txnspec/bucket_tx"
+    Fs.deleteRecursively(t)
     val df = (0L until 320L).map(i => (i, s"v$i")).toDF("k", "v")
     val spec = "bucket16(k)"
     val withB = df.withColumn("__b", TxnTable.idxExpr(spec))
@@ -2417,25 +2428,23 @@ class TxnSpec extends SparkSpec {
     TxnTable.commit(spark, t,
       TxnTable.stageIndexed(spark, t, clustered, Seq(spec)),
       -1L, op = "create", schemaJson = df.schema.json)
-    val m = TxnTable.manifest(spark, t, 0L)
     // bucket-clustered files span the whole RAW keyspace — the layout
     // where range stats are useless and bucket stats are the only prune
     val (snap, scanned, total) =
-      TxnTable.snapshotBucketEq(spark, t, "k", 137L)
+      TxnTable.snapshotWhere(spark, t, col("k") === 137L)
     assert(total === 8 && scanned >= 1 && scanned < total,
       s"bucket prune did not bite: $scanned/$total")
     assert(snap.select("v").as[String].collect().toSeq === Seq("v137"))
-    // the DSv2 path answers the same equality from ManifestPrune
-    val attr = org.apache.spark.sql.catalyst.expressions
-      .AttributeReference("k", org.apache.spark.sql.types.LongType)()
-    val eq = org.apache.spark.sql.catalyst.expressions.EqualTo(attr,
-      org.apache.spark.sql.catalyst.expressions.Literal(137L))
-    val kept = graft.sources.ManifestPrune.keep(m.entries, Seq(eq))
-    assert(kept.size === scanned,
-      "ManifestPrune's bucket rule disagrees with snapshotBucketEq")
+    // the SQL (DSv2) read keeps the same files for the same equality
+    val k0 = GraftCatalog.scanKept.get
+    val sqlRows = spark.sql("SELECT v FROM graft.txnspec.bucket_tx " +
+      "WHERE k = 137").as[String].collect().toSeq
+    assert(GraftCatalog.scanKept.get - k0 === scanned,
+      "the SQL read and the library read kept different files")
+    assert(sqlRows === Seq("v137"))
     // every key resolves through its bucket (no false prune anywhere)
     (0L until 320L by 37L).foreach { k =>
-      val (sk, _, _) = TxnTable.snapshotBucketEq(spark, t, "k", k)
+      val (sk, _, _) = TxnTable.snapshotWhere(spark, t, col("k") === k)
       assert(sk.select("v").as[String].collect().toSeq === Seq(s"v$k"),
         s"bucket lookup lost key $k")
     }
@@ -2471,7 +2480,8 @@ class TxnSpec extends SparkSpec {
       .select("event_id").as[Long](spark.implicits.newLongEncoder)
       .collect().sorted.toSeq
     val (snap, scanned, total) =
-      TxnTable.snapshotTimeRange(spark, t, "ts", from, until)
+      TxnTable.snapshotWhere(spark, t,
+        col("ts") >= lit(from) && col("ts") < lit(until))
     assert(scanned >= 1 && scanned < total,
       s"time-range read pruned nothing: $scanned/$total")
     val got = snap.select("event_id").as[Long](spark.implicits
@@ -2484,7 +2494,8 @@ class TxnSpec extends SparkSpec {
     val m2 = TxnTable.manifest(spark, t, TxnTable.currentVersion(spark, t))
     assert(m2.idxCols === Seq("days(ts)"))
     val (snap2, _, _) =
-      TxnTable.snapshotTimeRange(spark, t, "ts", from, until)
+      TxnTable.snapshotWhere(spark, t,
+        col("ts") >= lit(from) && col("ts") < lit(until))
     val got2 = snap2.select("event_id").as[Long](spark.implicits
       .newLongEncoder).collect().sorted.toSeq
     assert(got2 === want, "time-range read after compact drifted")
@@ -2954,7 +2965,7 @@ class TxnSpec extends SparkSpec {
       expected = -1L, op = "create", schemaJson = wide.schema.json,
       idxCols = Seq("p"))
     val (pruned, scanned, total) =
-      TxnTable.snapshotRange(spark, t4, "p", 30L, 40L)
+      TxnTable.snapshotWhere(spark, t4, col("p").between(30L, 40L))
     assert(scanned < total, s"the range read must prune ($scanned/$total)")
     assert(pruned.select(col("k")).as[Long].collect().sorted.toSeq ===
       (30L to 39L), "pruned content must equal the exact filter")
@@ -3056,7 +3067,7 @@ class TxnSpec extends SparkSpec {
       e.statFor("k").nonEmpty && e.strStatFor("v").nonEmpty &&
         e.hllFor("k").nonEmpty && e.bytes > 0))
     val (pruned, scanned, total) =
-      TxnTable.snapshotRange(spark, t, "k", 2000L, 2009L)
+      TxnTable.snapshotWhere(spark, t, col("k").between(2000L, 2009L))
     assert(scanned < total && pruned.count() === 10,
       s"the appended files' stats must prune ($scanned/$total)")
   }
@@ -3152,5 +3163,45 @@ class TxnSpec extends SparkSpec {
     assert(!TxnTable.broadcastable(f, Seq(missing)),
       "a failed stat counted as small")
     assert(!TxnTable.broadcastable(f, live :+ missing))
+  }
+
+  test("the upsert preimage broadcasts its key file only under the size " +
+      "guard") {
+    val t = freshTable("preimage_guard")
+    // 64-character hex keys barely compress: 200k of them make a key
+    // file well over the 8 MiB broadcast limit
+    val keys = spark.range(0, 200000)
+      .select(sha2(col("id").cast("string"), 256).as("k"), col("id").as("v"))
+    TxnTable.create(spark, t, keys.filter(col("v") < 100).coalesce(1))
+    val hints = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        qe.analyzed.foreach {
+          case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+              if h.hints.strategy.contains(
+                org.apache.spark.sql.catalyst.plans.logical.BROADCAST) =>
+            hints.add(h.child.simpleString(80))
+          case _ =>
+        }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      TxnTable.applyChangesMor(spark, t,
+        keys.withColumn("op", lit("U")), "k", cdc = true)
+      SpecBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val m = TxnTable.manifest(spark, t, TxnTable.currentVersion(spark, t))
+    val keyFile = new org.apache.hadoop.fs.Path(
+      TxnTable.pathFor(t, m.deletes.head._1))
+    val f = keyFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(f.getFileStatus(keyFile).getLen > (8L << 20),
+      "the key file must exceed the broadcast limit")
+    assert(!TxnTable.broadcastable(f, Seq(keyFile)))
+    assert(hints.isEmpty, s"an upsert plan broadcast a guarded file: $hints")
+    assert(TxnTable.snapshot(spark, t).count() === 200000)
   }
 }
