@@ -1,22 +1,29 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Loaders for the synthetic star-schema tables (see TESTDATA.md).
   *
   * Plain `spark.read.parquet` — schema comes from parquet footers, filters
   * and column pruning push down to the scan. At 100 TB the same call works
   * against a partitioned parquet/iceberg layout; nothing here assumes
-  * single-file inputs.
+  * single-file inputs. The footer is read on the driver and passed as the
+  * read's schema ([[Bridge.inferredParquetSchema]]): Spark's own inference
+  * reads the same footer in a job of its own, the first job of every op.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val p = s"$sfDir/$name.parquet"
+    Bridge.inferredParquetSchema(spark, new Path(p))
+      .fold(spark.read)(spark.read.schema).parquet(p)
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")

@@ -236,12 +236,17 @@ object Similarity {
     * the whole training bit-for-bit (kmeansOracle below) — which is what
     * promotes sim_kmeans/sim_ann_ivf from rows-tier to hash-checked.
     * Rounding centroids to 1e-6 also keeps the codegen literals (and the
-    * Janino cache key) stable across runs. */
+    * Janino cache key) stable across runs.
+    *
+    * Returns the trained centroids and the training rows, fanned out and
+    * materialized once (`localCheckpoint`): every round reads them, not
+    * the scan and the fan-out shuffle again, and a caller assigns over
+    * them too. */
   private def trainCentroids(all: DataFrame, seeds: Seq[Seq[Double]],
-      iters: Int): Seq[Seq[Double]] = {
+      iters: Int): (Seq[Seq[Double]], DataFrame) = {
     // the per-iteration assignment kernel is the training cost — fan a
     // degenerate scan out so it does not run on one task per round
-    val allF = Tables.fanOut(all)
+    val allF = Tables.fanOut(all).localCheckpoint(true)
     var cents = seeds
     for (_ <- 1 to iters) {
       val assigned = allF.withColumn("cid", bestCentroid(cents))
@@ -259,7 +264,7 @@ object Similarity {
         }.toMap
       cents = cents.indices.map(i => updated.getOrElse(i, cents(i)))
     }
-    cents
+    (cents, allF)
   }
 
   /** SQL text of one Lloyd round: assignment against the previous round's
@@ -325,10 +330,11 @@ object Similarity {
   private[graft] def assignedVecs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val all = vecs(s, d)
+    // KmeansK rows: sorted on the driver, no distributed sort
     val seeds: Seq[Seq[Double]] = all.filter(col("vec_id") < KmeansK)
-      .orderBy("vec_id").select("v").as[Seq[Double]].collect().toSeq
-    val cents = trainCentroids(all, seeds, KmeansIters)
-    Tables.fanOut(all).withColumn("cluster", bestCentroid(cents))
+      .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1).map(_._2)
+    val (cents, allF) = trainCentroids(all, seeds, KmeansIters)
+    allF.withColumn("cluster", bestCentroid(cents))
   }
 
   /** sim_kmeans: spherical k-means (cosine assignment, mean + renormalize
@@ -584,7 +590,7 @@ object Similarity {
       .select("v").as[Seq[Double]].collect().toSeq
     val stride = math.max(1L, all.count() / TrainTarget)
     val trainSet = all.filter(pmod(col("vec_id"), lit(stride)) === 0)
-    trainCentroids(trainSet, seeds, IvfIters)
+    trainCentroids(trainSet, seeds, IvfIters)._1
   }
 
   /** (vec_id, c_id) — every vector's [[NProbe]] nearest coarse cells (the

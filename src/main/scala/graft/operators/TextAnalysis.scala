@@ -560,12 +560,13 @@ object TextAnalysis {
   def bm25(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val n = docs.count()
+    val stats = docs.agg(count(lit(1)),
+      coalesce(sum(wsTokenCount(col("text"))), lit(0L))).head()
+    val (n, totTok) = (stats.getLong(0), stats.getLong(1))
+    val avgdl = totTok.toDouble / n
     val tok = docs.select(col("doc_id"),
       explode(wsTokens(col("text"))).as("tok"))
     val dl = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-    val totTok = dl.agg(sum(col("dl"))).collect()(0).getLong(0)
-    val avgdl = totTok.toDouble / n
     val tf = tok.groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("tf"))
     val df = tok.groupBy(col("tok"))

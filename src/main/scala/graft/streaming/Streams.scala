@@ -34,7 +34,7 @@ object Streams {
     // it TIMESTAMP_NTZ would make the vectorized reader reject the file
     // at runtime — the stream schema must match the probed kind
     val tsDdl = tsDdlCache.computeIfAbsent(d, dir =>
-      s.read.parquet(s"$dir/events.parquet").schema("ts").dataType match {
+      graft.Tables.table(s, dir, "events").schema("ts").dataType match {
         case org.apache.spark.sql.types.LongType => "ts LONG"
         case org.apache.spark.sql.types.TimestampType => "ts TIMESTAMP"
         case _ => "ts TIMESTAMP_NTZ"
@@ -326,7 +326,7 @@ object Streams {
     val mv = s"$base/view"
     val k = col("o_orderkey")
     val d12 = DecimalType(12, 2)
-    val sel = s.read.parquet(s"$d/orders.parquet")
+    val sel = graft.Tables.orders(s, d)
       .select(k, col("o_orderstatus"),
         col("o_totalprice").cast(d12).as("price"))
     TxnTable.commit(s, table, TxnTable.stageIndexed(s, table,
@@ -401,7 +401,7 @@ object Streams {
     val d12 = DecimalType(12, 2)
     s.sql("""CREATE TABLE graft.q.smv_orders (
       o_orderkey BIGINT, st STRING, pri STRING, price DECIMAL(12,2))""")
-    s.read.parquet(s"$d/orders.parquet")
+    graft.Tables.orders(s, d)
       .select(k, col("o_orderstatus").as("st"),
         col("o_orderpriority").as("pri"),
         col("o_totalprice").cast(d12).as("price"))
@@ -592,7 +592,7 @@ object Streams {
     graft.Fs.deleteRecursively(base)
     val table = s"$base/table"
     val k = col("o_orderkey")
-    val sel = s.read.parquet(s"$d/orders.parquet")
+    val sel = graft.Tables.orders(s, d)
       .select(k, col("o_orderstatus"), col("o_totalprice"))
     TxnTable.commit(s, table, TxnTable.stageIndexed(s, table,
       sel.repartitionByRange(8, k).sortWithinPartitions(k), "o_orderkey"),

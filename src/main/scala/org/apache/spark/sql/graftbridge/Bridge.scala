@@ -1,13 +1,14 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetFileWriter}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.HadoopFSUtils
 
 /** The one bridge into spark-sql's `private[sql]` classic helpers:
   * Column ↔ Expression (graft's custom Catalyst expressions and the
@@ -32,5 +33,27 @@ object Bridge {
     val footer = try r.getFooter finally r.close()
     ParquetFileFormat.readSchemaFromFooter(new Footer(p, footer),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf)).asNullable
+  }
+
+  /** The schema `spark.read.parquet(root)` infers (without merging) for a
+    * file or a directory. Spark reads one footer, `_common_metadata`,
+    * then `_metadata`, then the first data file by path among the leaves
+    * its file index lists, in a Spark job; this reads the same footer on
+    * the driver. None when `root` holds no such file: Spark's own read
+    * then reports the error. */
+  def inferredParquetSchema(spark: SparkSession, root: Path): Option[StructType] = {
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    def leaves(f: FileStatus): Seq[FileStatus] =
+      if (!f.isDirectory) Seq(f)
+      else fs.listStatus(f.getPath).toSeq
+        .filterNot(c => HadoopFSUtils.shouldFilterOutPathName(c.getPath.getName))
+        .flatMap(leaves)
+    val files = (if (fs.exists(root)) leaves(fs.getFileStatus(root)) else Nil)
+      .map(_.getPath).sortBy(_.toString)
+    val summaries = Seq(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+      ParquetFileWriter.PARQUET_METADATA_FILE)
+    summaries.flatMap(n => files.find(_.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getName)))
+      .map(parquetSchema(spark, _))
   }
 }
