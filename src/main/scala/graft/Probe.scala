@@ -125,17 +125,36 @@ object Probe {
           new java.util.concurrent.ConcurrentHashMap[String, (Long, Int)]()
         val started =
           new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
+        // the first graft.* frame of a call-site stack, Probe excluded
+        def graftFrame(stack: String): Option[String] =
+          stack.linesIterator
+            .find(l => l.contains("graft.") && !l.contains("Probe"))
+            .map(_.trim.stripPrefix("at "))
+        // SQL execution id → the first graft.* frame of the call site
+        // that started it. AQE stage jobs and broadcast jobs run on
+        // other threads, where their own creation site is Spark's, but
+        // they carry their execution's id
+        val execSite =
+          new java.util.concurrent.ConcurrentHashMap[Long, String]()
         spark.sparkContext.addSparkListener(
           new org.apache.spark.scheduler.SparkListener {
+            override def onOtherEvent(
+                e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+              e match {
+                case x: org.apache.spark.sql.execution.ui
+                    .SparkListenerSQLExecutionStart =>
+                  graftFrame(x.details).foreach(execSite.put(x.executionId, _))
+                case _ => ()
+              }
             override def onJobStart(
                 j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
               jobs += 1
-              // attribute the job to its first graft.* frame: the stage's
-              // `details` carries the RDD creation-site stack trace
-              val site = j.stageInfos.iterator
-                .flatMap(_.details.linesIterator)
-                .find(l => l.contains("graft.") && !l.contains("Probe"))
-                .map(_.trim.stripPrefix("at "))
+              // a job outside any SQL execution falls back to its
+              // stages' RDD creation-site stack
+              val site = Option(j.properties)
+                .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+                .flatMap(id => Option(execSite.get(id.toLong)))
+                .orElse(graftFrame(j.stageInfos.map(_.details).mkString("\n")))
                 .getOrElse(j.stageInfos.headOption
                   .map(_.name.take(60)).getOrElse("?"))
               started.put(j.jobId, (System.nanoTime(), site))

@@ -2,9 +2,9 @@ package graft.operators
 
 import graft.Tables
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType, Metadata, StructField, StructType}
 import scala.collection.immutable.ListMap
 
 /** MATERIALIZED VIEWS with INCREMENTAL REFRESH over the change feed —
@@ -480,11 +480,11 @@ object MatView {
         // pair crossing the boundary folds as exactly the membership
         // change it is
         case f: MvDef => foldAndMerge(s, mv, mvVer, f.keys, f.value,
-          predFeed(s, refs(primary), f.pred), metrics)
+          predFeed(s, primary, head, refs(primary), f.pred), metrics)
         // feed rows with a NULL join key are excluded exactly like
         // create's scan (the served inner join never sees them)
         case LiveDef(j, grain) => foldAndMerge(s, mv, mvVer, grain,
-          j.value, predFeed(s, refs(primary), j.pred)
+          j.value, predFeed(s, primary, head, refs(primary), j.pred)
             .filter(joinKeysPresent(j)), metrics)
         case j: MvJoinDef =>
           refreshJoin(s, mv, j, mvVer, cur, heads, refs, metrics)
@@ -496,11 +496,25 @@ object MatView {
 
   /** The signed feed rows of `refs`, gated by a PARTIAL view's stored
     * predicate — the one reader every refresh and serve path folds. */
-  private def predFeed(s: SparkSession, refs: Seq[String],
-      pred: Option[String]): DataFrame = {
-    val feed = s.read.parquet(refs: _*)
+  private[graft] def predFeed(s: SparkSession, table: String, v: Long,
+      refs: Seq[String], pred: Option[String]): DataFrame = {
+    val feed = feedRead(s, table, v, refs)
     pred.fold(feed)(feed.filter)
   }
+
+  /** The rows of `refs` — signed feeds `table` published up to version
+    * `v` — read with the schema the engine already knows: the table's
+    * logical schema at `v` (feed writers write logical names) plus the
+    * sign, `w INT`. No feed read infers a schema with a Spark job; only
+    * a manifest that records no schema leaves it to inference. */
+  private def feedRead(s: SparkSession, table: String, v: Long,
+      refs: Seq[String]): DataFrame =
+    TxnTable.manifest(s, table, v).schema match {
+      case Some(sch) => s.read.schema(StructType(sch.fields.map(
+          _.copy(metadata = Metadata.empty)) :+ StructField("w", IntegerType)))
+        .parquet(refs: _*)
+      case None => s.read.parquet(refs: _*)
+    }
 
   /** TRANSPLANT a branch MV onto the parent timeline after a
     * [[TxnTable.fastForward]] publish: the branch ref's invariant —
@@ -621,7 +635,27 @@ object MatView {
 
   /** The shared refresh tail: fold a signed frame (`keys…, value, w`)
     * into the MV pinned at `mvVer`, as ONE CAS-guarded merge commit
-    * carrying the cursor metrics. */
+    * carrying the cursor metrics.
+    *
+    * The signed fold gives one delta row per touched group, and the
+    * change-set guard ([[TxnTable.localRows]]) collects it once when it
+    * holds at most [[TxnTable.ChangeSetCap]] groups. Then
+    * [[TxnTable.mergeLocal]] applies it from local rows whenever the MV
+    * files those groups can live in are driver-sized too: the null-key
+    * refusal and the touched-file box test are driver computations, one
+    * read of the touched files gives the MV's current rows for the
+    * merge arithmetic (evaluated as Spark expressions over a local
+    * relation — no job, and DECIMAL(18,2) overflow raises exactly as it
+    * does in a plan) and the survivors, and the rewrite and the
+    * refresh's own feed are written from local rows.
+    *
+    * Otherwise the merge is planned: the MV rows at the delta's groups
+    * are a semi-join of the pinned snapshot against the delta keys and
+    * the delta left-outer-joins them, both broadcast only when the guard
+    * measured the delta driver-sized (it then stays as its local rows);
+    * the change set is localCheckpoint'ed once, because the null-key
+    * guard and the merge's key, add and feed sides would each re-run
+    * the feed scan → fold → join pipeline. */
   private def foldAndMerge(s: SparkSession, mv: String, mvVer: Long,
       keys: Seq[String], value: String, feed: DataFrame,
       metrics: Seq[(String, Long)]): Long = {
@@ -633,48 +667,13 @@ object MatView {
       .groupBy(keys.map(col): _*).agg(sum(col("n")).as("dn"),
         sum(col("nn")).as("dnn"), sum(col("total")).cast(D18).as("dtotal"))
       .filter(col("dn") =!= 0 || col("dnn") =!= 0 || col("dtotal") =!= 0)
-    // merge into the PINNED MV rows: the join output is delta-sized;
-    // the MV scan is O(MV) — never O(base). The delta side (touched
-    // groups only) is the small one by construction, but a left-outer
-    // join preserving it cannot broadcast it (outer side ≠ build side),
-    // so the old delta-left formulation shuffled BOTH sides. Instead:
-    // (1) semi-join the MV against the broadcast delta keys — the MV
-    // streams once with zero shuffle and only the TOUCHED groups
-    // survive, then (2) left-outer the delta against that delta-sized
-    // survivor set, broadcast too. Two broadcast hash joins, no
-    // exchange anywhere on the MV side (guide §3.1).
-    val mvCur = TxnTable.snapshot(s, mv, mvVer)
-    def keyCond(a: String, b: String) =
-      keys.map(k => col(s"$a.$k") <=> col(s"$b.$k")).reduce(_ && _)
-    val mvTouched = mvCur.alias("t")
-      .join(broadcast(delta.select(keys.map(col): _*).alias("k")),
-        keyCond("t", "k"), "left_semi")
-    val merged = delta.alias("d")
-      .join(broadcast(mvTouched.alias("m")), keyCond("d", "m"),
-        "left_outer")
-      .select(keys.map(k => col(s"d.$k").as(k)) ++ Seq(
-        (coalesce(col("m.n"), lit(0L)) + col("dn")).as("n"),
-        (coalesce(col("m.nn"), lit(0L)) + col("dnn")).as("nn"),
-        (coalesce(col("m.total"), lit(0).cast(D18)) + col("dtotal"))
-          .cast(D18).as("total")): _*)
-    // pin the WHOLE change set once: the delta pipeline (feed scan →
-    // signed fold → merge join against the MV snapshot) otherwise
-    // re-executes for every downstream action — the null-key guard plus
-    // mergeCore's keys/adds materializations ran it three times,
-    // measured 35 jobs per refresh at sf0.1 (Probe mvbench). One
-    // delta-sized materialization; every consumer below reads the
-    // pinned blocks.
-    val changeSet = merged.withColumn("op",
-      when(col("n") === 0L, lit("D")).otherwise(lit("U")))
-      .localCheckpoint(true)
     // a NULL grouping-key group cannot be addressed by the keyed merge
     // (the anti-join is plain SQL equality — the old null-key row would
     // SURVIVE while its replacement inserts, silently duplicating the
     // group on every refresh). LOUD beats silent corruption; null-keyed
-    // groups are a recompute-only shape. One delta-sized pass.
-    if (changeSet.filter(keys.map(col(_).isNull).reduce(_ || _))
-        .limit(1).count() > 0)
-      throw new IllegalArgumentException(
+    // groups are a recompute-only shape
+    def refuseNullKeys(found: Boolean): Unit =
+      if (found) throw new IllegalArgumentException(
         s"$mv: the delta touches a NULL grouping-key group, which the " +
           "keyed refresh merge cannot address — recompute the MV " +
           "(drop + create)")
@@ -683,10 +682,68 @@ object MatView {
     // (mv over mv — per-level refresh stays O(that level's delta)).
     // A legacy view keyed 'w' (reserved only since the feed existed)
     // skips publication gracefully instead of bricking at refresh.
-    TxnTable.applyChangesWithMetrics(s, mv, changeSet, keys, metrics,
-      cdc = !changeSet.columns.contains("w"), expectedVer = mvVer,
-      pinned = true).version
+    val cdc = !keys.contains("w")
+    val small = TxnTable.localRows(delta)
+    val local = small.flatMap { rows =>
+      refuseNullKeys(rows.exists(r => keys.exists(k =>
+        r.isNullAt(r.fieldIndex(k)))))
+      val keyTuple = (r: Row) => keys.map(k => r.get(r.fieldIndex(k)))
+      // the delta joined to the MV's current fold columns (m_*, NULL for
+      // a group the MV lacks), then the merge arithmetic over it
+      val mCols = Seq("n", "nn", "total")
+      def joined(pre: Seq[Row]): DataFrame = {
+        val cur = pre.map(r => keyTuple(r) -> r).toMap
+        TxnTable.localFrame(s, rows.toSeq.map { r =>
+          val m = cur.get(keyTuple(r))
+          Row.fromSeq(r.toSeq ++ mCols.map(c => m.map(_.getAs[Any](c)).orNull))
+        }, StructType(delta.schema.fields ++ Seq(
+          StructField("m_n", LongType), StructField("m_nn", LongType),
+          StructField("m_total", D18))))
+      }
+      def changeSet(pre: Seq[Row]) = withOp(joined(pre).select(
+        foldInto(keys.map(col), c => col(s"m_$c"), col): _*))
+      val addsOf = (pre: Seq[Row]) =>
+        changeSet(pre).filter(col("op") =!= "D").drop("op").collect().toSeq
+      TxnTable.mergeLocal(s, mv, TxnTable.LocalRows(
+          rows.toSeq.map(r => Row.fromSeq(keyTuple(r))),
+          changeSet(Nil).drop("op").schema, addsOf),
+        keys, metrics, cdc, mvVer)
+    }
+    local.map(_.version).getOrElse {
+      // a measured delta stays its local rows, and may broadcast
+      val deltaF = small.fold(delta)(TxnTable.localFrame(s, _, delta.schema))
+      def bc(df: DataFrame) = if (small.isDefined) broadcast(df) else df
+      def keyCond(a: String, b: String) =
+        keys.map(k => col(s"$a.$k") <=> col(s"$b.$k")).reduce(_ && _)
+      val mvTouched = TxnTable.snapshot(s, mv, mvVer).alias("t")
+        .join(bc(deltaF.select(keys.map(col): _*).alias("k")),
+          keyCond("t", "k"), "left_semi")
+      val changeSet = withOp(deltaF.alias("d")
+        .join(bc(mvTouched.alias("m")), keyCond("d", "m"), "left_outer")
+        .select(foldInto(keys.map(k => col(s"d.$k").as(k)),
+          c => col(s"m.$c"), c => col(s"d.$c")): _*))
+        .localCheckpoint(true)
+      refuseNullKeys(changeSet.filter(keys.map(col(_).isNull).reduce(_ || _))
+        .limit(1).count() > 0)
+      TxnTable.applyChangesWithMetrics(s, mv, changeSet, keys, metrics,
+        cdc = cdc, expectedVer = mvVer, pinned = true).version
+    }
   }
+
+  /** The refresh merge's arithmetic — one set of expressions for both
+    * paths: the MV's current fold `m(c)` (NULL for a group the MV lacks)
+    * plus the delta's `d("dn")`, `d("dnn")`, `d("dtotal")`. */
+  private def foldInto(keys: Seq[Column], m: String => Column,
+      d: String => Column): Seq[Column] =
+    keys ++ Seq(
+      (coalesce(m("n"), lit(0L)) + d("dn")).as("n"),
+      (coalesce(m("nn"), lit(0L)) + d("dnn")).as("nn"),
+      (coalesce(m("total"), lit(0).cast(D18)) + d("dtotal"))
+        .cast(D18).as("total"))
+
+  /** A folded change set's op: 'D' for a group whose count reaches 0. */
+  private def withOp(df: DataFrame): DataFrame =
+    df.withColumn("op", when(col("n") === 0L, lit("D")).otherwise(lit("U")))
 
   // ---- SERVING: THE ONE FRESHNESS DECISION --------------------------------
 
@@ -744,6 +801,10 @@ object MatView {
       pinned: Map[String, Long]): Option[DataFrame] = {
     val (mvVer, cur) = cursors(s, mv, d)
     tailRefs(s, d, cur, pinned).map { refs =>
+      // the tail's feeds are the primary cursor's table's, which a
+      // transplanted fold view names instead of its stored base
+      def feedTail(pred: Option[String]) =
+        predFeed(s, cur.head._1, pinned(cur.head._1), refs, pred)
       def rows(keys: Seq[String], cols: Seq[String]) =
         TxnTable.snapshot(s, mv, mvVer).select((keys ++ cols).map(col): _*)
       // MV rows ⊕ the signed tail rows, one union + one aggregate
@@ -756,12 +817,12 @@ object MatView {
         case x: MvExtremaDef =>
           rows(x.keys, Seq("n", "nn", "vmin", "vmax"))
         case f: MvDef => withTail(f.keys, rows(f.keys, fold),
-          predFeed(s, refs, f.pred).select(f.keys.map(col) ++
+          feedTail(f.pred).select(f.keys.map(col) ++
             signedFold(col("w"), col(f.value)): _*))
         // each signed fact row re-joins the dims at the pinned versions
         // to find its group
         case j: MvJoinDef => withTail(j.keys, rows(j.keys, fold),
-          enrichWithDims(s, j, predFeed(s, refs, j.pred),
+          enrichWithDims(s, j, feedTail(j.pred),
             j.dims.map(r => pinned(r.dim)),
             signedFold(col("f.w"), col(s"f.${j.value}"))))
         // the fact-key grain compensates like a fold view, then joins
@@ -770,7 +831,7 @@ object MatView {
         // the declared keys
         case LiveDef(j, grain) =>
           val sub = withTail(grain, rows(grain, fold),
-            predFeed(s, refs, j.pred).filter(joinKeysPresent(j))
+            feedTail(j.pred).filter(joinKeysPresent(j))
               .select(grain.map(col) ++
                 signedFold(col("w"), col(j.value)): _*))
           telescope(j.keys, enrichWithDims(s, j, sub,
@@ -1060,7 +1121,8 @@ object MatView {
     // stored predicate (the fold view's rule, verbatim)
     val factTerm =
       if (refs(d.fact).isEmpty) None
-      else Some(enrichWithDims(s, d, predFeed(s, refs(d.fact), d.pred),
+      else Some(enrichWithDims(s, d,
+        predFeed(s, d.fact, heads(d.fact), refs(d.fact), d.pred),
         dimHeads, Seq(col(s"f.${d.value}").as(d.value), col("f.w"))))
     // prune accounting across the dim terms: kept = fact-file READS
     // the point probes performed (a file shared by two probes counts
@@ -1103,7 +1165,7 @@ object MatView {
       refs: Seq[String], factVer: Long, dimCurs: Seq[Long],
       dimHeads: Seq[Long]): (DataFrame, Long, Long) = {
     val r = d.dims(i)
-    val dimFeed = s.read.parquet(refs: _*)
+    val dimFeed = feedRead(s, r.dim, dimHeads(i), refs)
     val (factSlice0, kept, total) = prunedSlice(s, d.fact, factVer,
       Seq(r.factKey), dimFeed.select(col(r.dimKey)).distinct())
     // a PARTIAL star's dim-delta term re-groups only the SLICE's fact
@@ -1387,7 +1449,7 @@ object MatView {
     // (−old/+new pairs evaluate independently — a value crossing the
     // boundary folds as the membership change it is), and the dirty
     // test below then sees only in-slice deletes/inserts
-    val feed = predFeed(s, refs, d.pred)
+    val feed = predFeed(s, d.base, head, refs, d.pred)
     val w = col("w").cast("long")
     val v = col(d.value)
     val delta = feed.groupBy(d.keys.map(col): _*).agg(

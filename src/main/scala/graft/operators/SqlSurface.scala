@@ -167,8 +167,8 @@ object SqlSurface {
     * same rule (ManifestPrune) library reads prune with (op_manifest_skip).
     * Four quarter-slice single-file inserts give every file a tight key
     * range; the selective SELECT over the second quarter must plan a
-    * scan over exactly 2 of the 5 live files (the quarter's file plus
-    * the stat-less create sentinel, kept conservatively). Hashed output
+    * scan over exactly 1 of the 5 live files (the quarter's file; the
+    * stat-less create sentinel holds no rows). Hashed output
     * = the quarter's rows (oracle replays the cut arithmetic); `skip_ok`
     * carries the measured kept/total file accounting from the scan
     * instrumentation. At 100 TB this is the difference between O(#files)
@@ -199,8 +199,9 @@ object SqlSurface {
     val (kept, total) = (GraftCatalog.scanKept.get - k0,
       GraftCatalog.scanTotal.get - t0)
     // 5 live files (4 quarters + sentinel); the prune must keep exactly
-    // the quarter file + the conservative sentinel — and return rows
-    val ok = kept == 2L && total == 5L && n > 0L &&
+    // the quarter file — the zero-row sentinel is skipped — and return
+    // rows
+    val ok = kept == 1L && total == 5L && n > 0L &&
       TxnTable.versions(s, loc).size == 5
     s.sql(sel).withColumn("skip_ok", lit(ok))
   }
@@ -2892,12 +2893,12 @@ object SqlSurface {
     * range-clustered, z-ordered and hash-bucketed layouts alike. Four
     * quarter-slice single-file inserts give every fact file a tight key
     * range; the dim keeps only second-quarter even keys, so the join
-    * must plan 5 files and EXECUTE over ≤2 (quarter file + stat-less
-    * sentinel). Hashed output = the joined per-key aggregate (oracle
-    * replays the join); `dpp_ok` carries the runtime kept/total file
-    * accounting. At 100 TB: a selective dim predicate makes the fact
-    * scan cost O(matching files), not O(table) — the single biggest
-    * lever on star-schema queries. */
+    * must plan 5 files and EXECUTE over the quarter file (the stat-less
+    * zero-row sentinel is skipped). Hashed output = the joined per-key
+    * aggregate (oracle replays the join); `dpp_ok` carries the runtime
+    * kept/total file accounting. At 100 TB: a selective dim predicate
+    * makes the fact scan cost O(matching files), not O(table) — the
+    * single biggest lever on star-schema queries. */
   def txnDpp(s: SparkSession, d: String): DataFrame = {
     freshSqlTable(s, "dpp_li")
     view(s, d, "lineitem")
@@ -2930,9 +2931,9 @@ object SqlSurface {
     val (kept, total) = (GraftCatalog.runtimeKept.get - k0,
       GraftCatalog.runtimeTotal.get - t0)
     // 5 live files; the runtime key set must keep only the second
-    // quarter's file plus the conservative stat-less create sentinel.
+    // quarter's file (the zero-row create sentinel is skipped).
     // total == 5 also certifies DPP actually FIRED (no re-plan = 0/0)
-    val ok = total == 5L && kept <= 2L && kept >= 1L && n > 0L
+    val ok = total == 5L && kept == 1L && n > 0L
     s.sql(sel).withColumn("dpp_ok", lit(ok))
   }
 
@@ -2991,12 +2992,13 @@ object SqlSurface {
       s"${qc(0)} AND od < ${qc(1)}").collect()
     val (kDay, tDay) = (GraftCatalog.scanKept.get - k2,
       GraftCatalog.scanTotal.get - t2)
-    // 5 live files (4 day-quarters + create sentinel). Pre-bloom: all
-    // kept. Post-bloom: the hit file + the uncovered zero-row sentinel
-    // (± the ~1% false-positive tax). Day range: quarter + sentinel.
-    val ok = kPre == 5L && tPre == 5L &&
-      kPost >= 2L && kPost <= 3L && tPost == 5L &&
-      kDay == 2L && tDay == 5L && r.getLong(0) > 0L
+    // 5 live files (4 day-quarters + create sentinel). Pre-bloom: the 4
+    // quarters (the zero-row sentinel is skipped under any filter).
+    // Post-bloom: the hit file (± the ~1% false-positive tax). Day
+    // range: the quarter.
+    val ok = kPre == 4L && tPre == 5L &&
+      kPost >= 1L && kPost <= 2L && tPost == 5L &&
+      kDay == 1L && tDay == 5L && r.getLong(0) > 0L
     s.sql(sel).withColumn("bloom_ok", lit(ok))
   }
 
@@ -3010,7 +3012,7 @@ object SqlSurface {
     * `timestamp_micros(<literal>)` so no session-timezone parsing is
     * involved on either side. `days_ok` asserts the accounting: of the
     * 5 live files (4 day-quarters + the create sentinel) the scan keeps
-    * exactly the matching quarter + the stat-less sentinel. */
+    * exactly the matching quarter; the zero-row sentinel is skipped. */
   def txnDaysSql(s: SparkSession, d: String): DataFrame = {
     freshSqlTable(s, "days_events")
     Tables.events(s, d).createOrReplaceTempView("events")
@@ -3040,7 +3042,7 @@ object SqlSurface {
     val n = s.sql(sel).count() // one planned scan: counters move once
     val (kept, total) = (GraftCatalog.scanKept.get - k0,
       GraftCatalog.scanTotal.get - t0)
-    val ok = kept == 2L && total == 5L && n > 0L
+    val ok = kept == 1L && total == 5L && n > 0L
     s.sql(sel).withColumn("days_ok", lit(ok))
   }
 

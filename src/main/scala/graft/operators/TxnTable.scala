@@ -3039,7 +3039,7 @@ object TxnTable {
     * table's schema). */
   def merge(s: SparkSession, table: String, batch: DataFrame,
             key: String): MergeResult =
-    mergeCore(s, table, batch.select(col(key)), batch, Seq(key))
+    mergeCore(s, table, PlannedRows(batch.select(col(key)), batch), Seq(key))
 
   /** [[applyChanges]] with caller-supplied EXTRA commit metrics — for
     * consumers whose own replay state must land atomically with the
@@ -3060,9 +3060,9 @@ object TxnTable {
       extraMetrics: Seq[(String, Long)],
       cdc: Boolean = false, expectedVer: Long = -1L,
       pinned: Boolean = false): MergeResult =
-    mergeCore(s, table, changes.select(keys.map(col): _*),
-      changes.filter(col("op") =!= "D").drop("op"), keys,
-      extraMetrics, cdc = cdc, expectedVer = expectedVer, pinned = pinned)
+    mergeCore(s, table, PlannedRows(changes.select(keys.map(col): _*),
+      changes.filter(col("op") =!= "D").drop("op"), pinned), keys,
+      extraMetrics, cdc = cdc, expectedVer = expectedVer)
 
   /** Full-semantics MERGE: apply a CHANGE SET carrying an op column —
     * the canonical "apply CDC into a table" form every production MERGE
@@ -3095,8 +3095,8 @@ object TxnTable {
                         keys: Seq[String], opCol: String = "op",
                         cdc: Boolean = false)
       : MergeResult =
-    mergeCore(s, table, changes.select(keys.map(col): _*),
-      changes.filter(col(opCol) =!= "D").drop(opCol), keys, cdc = cdc)
+    mergeCore(s, table, PlannedRows(changes.select(keys.map(col): _*),
+      changes.filter(col(opCol) =!= "D").drop(opCol)), keys, cdc = cdc)
 
   /** MERGE-ON-READ [[applyChanges]]: apply the same 'U'/'D' change set
     * with ZERO data files rewritten. ONE commit carries (a) an equality
@@ -3112,7 +3112,14 @@ object TxnTable {
     * writer never pays a find-matched read; per-batch write cost is
     * O(change set), the heavy-churn CDC shape copy-on-write can't
     * serve (readers pay the anti-join until [[compact]] applies the
-    * tombstones and both generations converge). */
+    * tombstones and both generations converge).
+    *
+    * The change-set guard ([[localRows]]) collects `changes` once when it
+    * holds at most [[ChangeSetCap]] rows: the distinct key set, the
+    * tombstone file, the adds and the signed feed then all come from
+    * that one copy — one evaluation of the caller's frame, no distinct
+    * or diff shuffle. Above the guard each is planned over `changes`.
+    * Either way the staging, the feed write and the commit are shared. */
   def applyChangesMor(s: SparkSession, table: String, changes: DataFrame,
                       key: String, opCol: String = "op",
                       cdc: Boolean = false): Long = {
@@ -3128,87 +3135,18 @@ object TxnTable {
     require(!physMap(m).getOrElse(key, key).endsWith("~L"),
       s"merge key '$key' ends in the reserved '~L' suffix " +
         "(bounded-tombstone marker)")
-    enforceChecks(s, m.checks, adds, s"$table: merge change set")
-    // NULL keys match no equality: a NULL-keyed tombstone row would
-    // delete nothing — keep the tombstone file clean of them (NULL-key
-    // 'U' rows still ride in `adds`, the applyChanges insert semantics)
-    val keySet = changes.select(col(key)).filter(col(key).isNotNull)
-      .distinct().coalesce(1)
-    // row counts ride the STAGING writes as observed metrics (guide
-    // §1.4-adjacent: the separate `.isEmpty` probes each re-executed the
-    // whole change pipeline — distinct shuffle included — once more
-    // before the write ran it again). An empty side stages one junk
-    // zero-row file, dropped below; the common non-empty case pays ONE
-    // pass per side instead of two.
-    val keyObs = org.apache.spark.sql.Observation()
-    // min/max of the touched keys ride the same observation: they bound
-    // the CDC preimage read below to the manifest-pruned file set
-    val tomb0 = stage(s, table,
-      keySet.observe(keyObs, count(lit(1)).as("n"),
-        min(col(key)).as("lo"), max(col(key)).as("hi")))
-    val hasKeys = keyObs.get("n").asInstanceOf[Long] > 0
-    // an all-ghost or empty change set commits nothing (an empty
-    // tombstone file would tax every future read's anti-join for
-    // nothing — deleteKeysMor's rule)
-    val tomb = if (hasKeys) tomb0 else { dropStaged(s, table, tomb0); Nil }
-    val addsObs = org.apache.spark.sql.Observation()
-    val addsObserved = toPhysical(adds, m)
-      .observe(addsObs, count(lit(1)).as("n"))
-    val indexed = m.idxCols.nonEmpty || m.strIdxCols.nonEmpty
-    val addStaged =
-      if (indexed) stageIndexed(s, table, addsObserved, m.idxCols,
-        m.strIdxCols)
-      else stage(s, table, addsObserved)
-    val addLines =
-      if (addsObs.get("n").asInstanceOf[Long] == 0L) {
-        dropStaged(s, table, addStaged); Nil
-      } else if (indexed) addStaged.filter(hasStats)
-      else addStaged
-    if (!hasKeys && addLines.isEmpty) return cur
-    // optional SAME-COMMIT change feed (`cdc = true`): signedDiff over
-    // the TOUCHED keys only — `a` is a semi-join of the current
-    // snapshot against the STAGED tombstone file's keys (change-set-
-    // sized output, never a full-table diff like overwriteCdc's — and
-    // the exact key set the commit tombstones, never a re-evaluation
-    // of the caller's possibly-non-deterministic plan), `b` is a
-    // read-back of the just-staged adds (physical names, positional
-    // rename — same rule). The full-outer algebra telescopes exactly:
-    // deletes −1 with OLD values, inserts +1, updates −1/+1, ghost
-    // deletes and no-op updates vanish.
-    val refs =
-      if (!cdc) Nil
-      else {
-        val newDf =
-          if (addLines.isEmpty)
-            s.createDataFrame(s.sparkContext
-              .parallelize(Seq.empty[org.apache.spark.sql.Row], 1),
-              adds.schema)
-          else s.read.schema(physicalSchema(withMapping(m, adds.schema)))
-            .parquet(addLines.map(l =>
-              pathFor(table, l.split('\t').head)): _*)
-            .toDF(adds.schema.fieldNames.toSeq: _*)
-        // the preimage read is filtered to the touched-key range
-        // (observed off the tombstone staging write), so the scan opens
-        // only the files whose manifest key box can intersect it — at
-        // scale the preimage costs O(matching files), never a table
-        // scan; the semi-join below stays the exact filter. The key file
-        // is broadcast under the size guard every tombstone join uses
-        val old =
-          if (tomb.isEmpty)
-            s.createDataFrame(s.sparkContext
-              .parallelize(Seq.empty[org.apache.spark.sql.Row], 1),
-              adds.schema)
-          else {
-            val kdf = s.read.schema(keySet.schema)
-              .parquet(pathFor(table, tomb.head))
-            val keyDf = kdf.select(col(kdf.columns.head).as(key))
-            snapshot(s, table, cur)
-              .filter(col(key) >= keyObs.get("lo") &&
-                col(key) <= keyObs.get("hi"))
-              .join(hinted(s, table, keyDf, tomb), Seq(key), "left_semi")
-          }
-        stageCdcFeed(s, table, signedDiff(old, newDf, key), cur + 1)
-      }
+    val rows = localRows(changes)
+    val (tomb, addLines, feed) = rows match {
+      case Some(rs) => morLocal(s, table, m, cur, rs, changes.schema, key,
+        opCol, adds.schema)
+      case None => morPlanned(s, table, m, cur, changes, key, adds)
+    }
+    if (tomb.isEmpty && addLines.isEmpty) return cur
+    // optional SAME-COMMIT change feed (`cdc = true`): −1 rows with the
+    // OLD values of the touched keys, +1 rows with the new — deletes,
+    // inserts, updates as −1/+1 pairs; ghost deletes and no-op updates
+    // vanish
+    val refs = if (cdc) stageCdcFeed(s, table, feed(), cur + 1) else Nil
     // ONE commit: carried entries verbatim + fresh adds + the new
     // tombstone (seq = -1 → stamped with this commit's seq, same as
     // the fresh add entries — which therefore escape it)
@@ -3231,37 +3169,372 @@ object TxnTable {
     }
   }
 
-  /** Shared file-pruned copy-on-write merge machinery: `keys` = every
-    * key tuple the change set touches (decides which files rewrite),
-    * `adds` = the rows that replace/insert (already op-filtered). */
-  private def mergeCore(s: SparkSession, table: String, keys0: DataFrame,
-                        adds0: DataFrame, keyCols: Seq[String],
+  /** Stage a merge-on-read commit's add rows as fresh entries (with
+    * stats on an indexed table); the row count rides the write as an
+    * observed metric, and an empty frame's zero-row file is dropped. */
+  private def stageMorAdds(s: SparkSession, table: String, m: Manifest,
+      adds: DataFrame): Seq[String] = {
+    val obs = org.apache.spark.sql.Observation()
+    val observed = toPhysical(adds, m).observe(obs, count(lit(1)).as("n"))
+    val indexed = m.idxCols.nonEmpty || m.strIdxCols.nonEmpty
+    val staged =
+      if (indexed) stageIndexed(s, table, observed, m.idxCols, m.strIdxCols)
+      else stage(s, table, observed)
+    if (obs.get("n").asInstanceOf[Long] == 0L) {
+      dropStaged(s, table, staged); Nil
+    } else if (indexed) staged.filter(hasStats)
+    else staged
+  }
+
+  /** [[applyChangesMor]] from the collected change rows `rows` (schema
+    * `schema`): the key set is their distinct non-NULL keys, the adds
+    * their non-'D' rows — each staged only when non-empty — and the
+    * feed's pre-image is ONE pruned snapshot read of the rows at those
+    * keys (an IN-set the manifest prunes file by file), diffed against
+    * the adds on the driver. Returns (tombstone, add lines, feed). */
+  private def morLocal(s: SparkSession, table: String, m: Manifest,
+      cur: Long, rows: Seq[Row], schema: org.apache.spark.sql.types.StructType,
+      key: String, opCol: String,
+      addSchema: org.apache.spark.sql.types.StructType)
+      : (Seq[String], Seq[String], () => DataFrame) = {
+    val (ki, oi) = (schema.fieldIndex(key), schema.fieldIndex(opCol))
+    // `op =!= 'D'`: a NULL op is neither an add nor (below) skipped as a key
+    val addRows = rows.filter(r => !r.isNullAt(oi) && r.get(oi) != "D")
+      .map(r => Row.fromSeq(r.toSeq.patch(oi, Nil, 1)))
+    enforceChecks(s, m.checks, localFrame(s, addRows, addSchema),
+      s"$table: merge change set")
+    // NULL keys match no equality: a NULL-keyed tombstone row would
+    // delete nothing — keep the tombstone file clean of them (NULL-key
+    // 'U' rows still ride in the adds, the applyChanges insert
+    // semantics); an all-ghost or empty change set stages no tombstone
+    // (an empty file would tax every future read's anti-join)
+    val keys = rows.map(_.get(ki)).filter(_ != null).distinct
+    val keySchema = org.apache.spark.sql.types.StructType(Seq(schema(key)))
+    val tomb =
+      if (keys.isEmpty) Nil
+      else stage(s, table, localFrame(s, keys.map(Row(_)), keySchema)
+        .coalesce(1))
+    val addLines =
+      if (addRows.isEmpty) Nil else stageMorAdds(s, table, m,
+        localFrame(s, addRows, addSchema))
+    def feed(): DataFrame = {
+      require(!addSchema.fieldNames.contains("w"),
+        "change feed cannot be published for a table with a column " +
+          "named 'w' (reserved for the feed's sign column)")
+      val pre =
+        if (keys.isEmpty) Array.empty[Row]
+        else snapshot(s, table, cur).filter(col(key).isInCollection(keys))
+          .collect()
+      val k = addSchema.fieldIndex(key)
+      val rest = addSchema.fields.indices.filterNot(_ == k)
+      def signed(r: Row, w: Int) =
+        Row.fromSeq(r.get(k) +: w +: rest.map(r.get))
+      localFrame(s, signedDiffRows(pre.toSeq, addRows, k)
+        .map { case (r, w) => signed(r, w) },
+        org.apache.spark.sql.types.StructType(addSchema(k) +:
+          org.apache.spark.sql.types.StructField("w",
+            org.apache.spark.sql.types.IntegerType, nullable = false) +:
+          rest.map(addSchema(_))))
+    }
+    (tomb, addLines, () => feed())
+  }
+
+  /** [[applyChangesMor]] above the change-set guard: the key set is a
+    * distinct over `changes`, staged with its row count and key bounds
+    * observed; the feed is [[signedDiff]] of the snapshot rows at the
+    * staged tombstone's keys (read in the observed key range, the key
+    * file broadcast under the size guard every tombstone join uses)
+    * against a read-back of the staged adds. Returns (tombstone, add
+    * lines, feed). */
+  private def morPlanned(s: SparkSession, table: String, m: Manifest,
+      cur: Long, changes: DataFrame, key: String, adds: DataFrame)
+      : (Seq[String], Seq[String], () => DataFrame) = {
+    enforceChecks(s, m.checks, adds, s"$table: merge change set")
+    val keySet = changes.select(col(key)).filter(col(key).isNotNull)
+      .distinct().coalesce(1)
+    val keyObs = org.apache.spark.sql.Observation()
+    val tomb0 = stage(s, table,
+      keySet.observe(keyObs, count(lit(1)).as("n"),
+        min(col(key)).as("lo"), max(col(key)).as("hi")))
+    val tomb =
+      if (keyObs.get("n").asInstanceOf[Long] > 0) tomb0
+      else { dropStaged(s, table, tomb0); Nil }
+    val addLines = stageMorAdds(s, table, m, adds)
+    def empty = s.createDataFrame(s.sparkContext
+      .parallelize(Seq.empty[org.apache.spark.sql.Row], 1), adds.schema)
+    def feed(): DataFrame = {
+      // `b`: the just-staged adds read back (physical names, positional
+      // rename); `a`: the snapshot rows at the staged tombstone's keys —
+      // the exact key set the commit tombstones, never a re-evaluation
+      // of the caller's possibly-non-deterministic plan
+      val newDf =
+        if (addLines.isEmpty) empty
+        else s.read.schema(physicalSchema(withMapping(m, adds.schema)))
+          .parquet(addLines.map(l =>
+            pathFor(table, l.split('\t').head)): _*)
+          .toDF(adds.schema.fieldNames.toSeq: _*)
+      val old =
+        if (tomb.isEmpty) empty
+        else {
+          val kdf = s.read.schema(keySet.schema)
+            .parquet(pathFor(table, tomb.head))
+          snapshot(s, table, cur)
+            .filter(col(key) >= keyObs.get("lo") &&
+              col(key) <= keyObs.get("hi"))
+            .join(hinted(s, table, kdf.select(col(kdf.columns.head).as(key)),
+              tomb), Seq(key), "left_semi")
+        }
+      signedDiff(old, newDf, key)
+    }
+    (tomb, addLines, () => feed())
+  }
+
+  /** A copy-on-write merge's change set computed by a Spark plan: `keys`
+    * = every key tuple it touches (decides which files rewrite), `adds`
+    * = the rows that replace or insert (already op-filtered). `pinned` =
+    * the caller already pinned the one frame both derive from. */
+  private case class PlannedRows(keys: DataFrame, adds: DataFrame,
+      pinned: Boolean = false)
+
+  /** A driver-sized copy-on-write change set: `keys` = its key tuples
+    * (the key columns of `addSchema`, in key order), and `adds` = the
+    * rows that replace or insert (rows of `addSchema`), computed from
+    * the PRE-IMAGE — the table's current rows at those keys — so a fold
+    * (the MV refresh) derives its new rows from the same one read of
+    * the touched files that yields the rewrite's survivors. */
+  private[graft] case class LocalRows(keys: Seq[Row],
+      addSchema: org.apache.spark.sql.types.StructType,
+      adds: Seq[Row] => Seq[Row])
+
+  /** The entries of `m` a change set may touch, and the rest (carried
+    * verbatim): touched is every entry whose BOX
+    * over the key dimensions can hold one of its key tuples, plus every
+    * entry with stats on NO key dimension (the legacy statless rule —
+    * it rewrites even for an empty change set, which is how the
+    * zero-row sentinel gets absorbed by the first merge). A missing stat
+    * leaves that dimension unbounded. String boxes are the TRUNCATED
+    * manifest bounds — recorded lo ≤ true min, recorded hi ≥ true max —
+    * so the test can only over-touch, never miss a file a key lands in.
+    * Key dimensions are typed by the change set (already cast to the
+    * table's column types): string dims test the string bounds in
+    * UTF-8 binary order (Spark's own, and the bounds'), everything else
+    * casts to long against the value boxes. A NULL key component
+    * matches no equality, so it touches no file. The tuples are local
+    * rows when the change-set guard collected them — a driver
+    * computation whose casts fold over a local relation with no job —
+    * or else a frame joined against the boxes. */
+  private def touchedBy(s: SparkSession, m: Manifest, keyCols: Seq[String],
+      keySchema: org.apache.spark.sql.types.StructType,
+      keys: Either[Seq[Row], DataFrame]): (Seq[Entry], Seq[Entry]) = {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+      StructField, StructType}
+    val pm = physMap(m)
+    val isStr = keyCols.map(c => keySchema(c).dataType == StringType)
+    def boxOf(e: Entry, j: Int)
+        : Option[Either[(Long, Long), (String, String)]] = {
+      val c = pm.getOrElse(keyCols(j), keyCols(j))
+      if (isStr(j)) e.strStatFor(c).map(Right(_))
+      else e.statFor(c).map(Left(_))
+    }
+    val boxes = m.entries.map(e => keyCols.indices.map(boxOf(e, _)))
+    val statless = boxes.zipWithIndex.collect {
+      case (b, i) if b.forall(_.isEmpty) => i
+    }
+    val ranged = boxes.zipWithIndex.filter(_._1.exists(_.isDefined))
+    val probe = (k: DataFrame) => k.select(keyCols.zipWithIndex.map {
+      case (c, j) => col(c).cast(if (isStr(j)) "string" else "long")
+        .as(s"_k$j") }: _*)
+    val touched: Set[Int] = if (ranged.isEmpty) statless.toSet else keys match {
+      case Left(rows) =>
+        val bytes = (v: String) => v.getBytes(UTF_8)
+        val probes = probe(localFrame(s, rows, keySchema)).collect()
+          .filterNot(r => keyCols.indices.exists(r.isNullAt))
+          .map(r => keyCols.indices.map(j =>
+            if (isStr(j)) bytes(r.getString(j)) else r.getLong(j)))
+        val byteBoxes = ranged.map { case (box, i) =>
+          (box.map(_.map(_.map { case (lo, hi) => (bytes(lo), bytes(hi)) })),
+            i)
+        }
+        val hit = byteBoxes.collect { case (box, i) if probes.exists { p =>
+          keyCols.indices.forall { j =>
+            (box(j), p(j)) match {
+              case (None, _) => true
+              case (Some(Left((lo, hi))), v: Long) => v >= lo && v <= hi
+              case (Some(Right((lo, hi))), v: Array[Byte]) =>
+                java.util.Arrays.compareUnsigned(v, lo) >= 0 &&
+                  java.util.Arrays.compareUnsigned(v, hi) <= 0
+              case _ => true
+            }
+          }
+        } => i }
+        (hit ++ statless).toSet
+      case Right(frame) =>
+        import s.implicits._
+        // unbounded dims: integral → (MinValue, MaxValue); string → NULL
+        // bounds (tested with explicit IS NULL in the join condition —
+        // strings have no total-order sentinels)
+        val rangeRows = ranged.map { case (box, i) =>
+          Row.fromSeq(i +: keyCols.indices.flatMap { j =>
+            if (isStr(j)) box(j).map(_.toOption.get) match {
+              case Some((lo, hi)) => Seq(lo, hi)
+              case None => Seq(null, null)
+            } else {
+              val (lo, hi) = box(j).map(_.swap.toOption.get)
+                .getOrElse((Long.MinValue, Long.MaxValue))
+              Seq(lo, hi)
+            }
+          })
+        }
+        val rangeSchema = StructType(
+          StructField("_fid", IntegerType, nullable = false) +:
+            keyCols.indices.flatMap { j =>
+              val dt = if (isStr(j)) StringType else LongType
+              Seq(StructField(s"_lo$j", dt, nullable = isStr(j)),
+                StructField(s"_hi$j", dt, nullable = isStr(j)))
+            })
+        // nulls fail the integral comparisons natively and the explicit
+        // isNotNull below for strings
+        val cond = keyCols.indices.map { j =>
+          if (isStr(j))
+            col(s"_k$j").isNotNull &&
+              (col(s"_lo$j").isNull || col(s"_k$j") >= col(s"_lo$j")) &&
+              (col(s"_hi$j").isNull || col(s"_k$j") <= col(s"_hi$j"))
+          else
+            col(s"_k$j") >= col(s"_lo$j") && col(s"_k$j") <= col(s"_hi$j")
+        }.reduce(_ && _)
+        probe(frame).join(broadcast(localFrame(s, rangeRows, rangeSchema)),
+          cond).select("_fid").distinct().as[Int].collect().toSet ++ statless
+    }
+    m.entries.zipWithIndex.partition { case (_, i) => touched(i) } match {
+      case (t, k) => (t.map(_._1), k.map(_._1))
+    }
+  }
+
+  /** Stage one clustered region of a copy-on-write rewrite: with fresh
+    * stats on the table's index columns when it has any. Spark's writer
+    * emits one ZERO-ROW file for an empty side (partition 0 always
+    * writes, to preserve schema); a zero-row entry has no stats line,
+    * i.e. would be conservatively touched by every future merge — it is
+    * dropped instead (the unreferenced file is staging garbage; vacuum
+    * collects it). */
+  private def stageClustered(s: SparkSession, table: String, m: Manifest,
+      df: DataFrame): Seq[String] =
+    if (m.idxCols.nonEmpty || m.strIdxCols.nonEmpty)
+      stageIndexed(s, table, toPhysical(df, m), m.idxCols, m.strIdxCols)
+        .filter(hasStats)
+    else stage(s, table, toPhysical(df, m))
+
+  /** The touched region's bounds on the primary key dimension `key`:
+    * the integral value box, or the truncated string box (a SUPERSET of
+    * the true range; using it only widens the in-range cluster — every
+    * file's own stats are still measured fresh at stage time). A merge
+    * stages the rewritten region and the out-of-range inserts
+    * SEPARATELY: packing an insert far outside the touched key region (a
+    * new keyspace) into the rewrite cluster would mint a file whose
+    * range spans the gap — a wide bounding box that future merges and
+    * range reads can never prune. None when some touched file has no
+    * bound: one cluster. */
+  private def touchedBounds(m: Manifest, touched: Seq[Entry], key: String,
+      schema: org.apache.spark.sql.types.StructType): Option[(Any, Any)] = {
+    val c = physMap(m).getOrElse(key, key)
+    if (schema(key).dataType == org.apache.spark.sql.types.StringType) {
+      val bs = touched.flatMap(_.strStatFor(c))
+      if (bs.isEmpty || bs.size < touched.size) None
+      else {
+        val u8 = Ordering.fromLessThan[String](u8cmp(_, _) < 0)
+        Some((bs.map(_._1).min(u8), bs.map(_._2).max(u8)))
+      }
+    } else {
+      val bs = touched.flatMap(_.statFor(c))
+      if (bs.isEmpty || bs.size < touched.size) None
+      else Some((bs.map(_._1).min, bs.map(_._2).max))
+    }
+  }
+
+  /** Spark's ascending, NULLS FIRST order over two driver-held values of
+    * one key column (or a value against a [[touchedBounds]] bound):
+    * UTF-8 binary for strings, numeric for numbers — a decimal against a
+    * long bound included — and natural order for the other comparable
+    * types. */
+  private def keyCompare(a: Any, b: Any): Int = (a, b) match {
+    case (null, null) => 0
+    case (null, _) => -1
+    case (_, null) => 1
+    case (x: String, y: String) => u8cmp(x, y)
+    case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y)
+    case (x: java.math.BigDecimal, y: Number) =>
+      x.compareTo(java.math.BigDecimal.valueOf(y.longValue))
+    case (x: Number, y: java.math.BigDecimal) =>
+      java.math.BigDecimal.valueOf(x.longValue).compareTo(y)
+    case (x: java.lang.Double, y: java.lang.Double) =>
+      org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(x, y)
+    case (x: java.lang.Float, y: java.lang.Float) =>
+      org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareFloats(x, y)
+    case (x: Number, y: Number) =>
+      java.lang.Long.compare(x.longValue, y.longValue)
+    case (x: Comparable[_], y) => x.asInstanceOf[Comparable[Any]].compareTo(y)
+    case _ => 0
+  }
+
+  /** [[mergeCore]]'s clustered rewrite over driver-held rows `out`: the
+    * same two clusters ([[touchedBounds]]), each sorted on `keyCols` on
+    * the driver and cut into at most `parts` files of adjacent keys —
+    * the layout a range-partitioned write gives — staged by ONE write. */
+  private def stageLocalClusters(s: SparkSession, table: String,
+      m: Manifest, schema: org.apache.spark.sql.types.StructType,
+      keyCols: Seq[String], touched: Seq[Entry], out: Seq[Row])
+      : Seq[String] = {
+    val idx = keyCols.map(schema.fieldIndex)
+    val order = Ordering.fromLessThan[Row] { (a, b) =>
+      idx.iterator.map(i => keyCompare(a.get(i), b.get(i)))
+        .find(_ != 0).exists(_ < 0)
+    }
+    val k = idx.head
+    val sides = touchedBounds(m, touched, keyCols.head, schema) match {
+      case Some((lo, hi)) =>
+        val (in, outside) = out.partition(r => r.isNullAt(k) ||
+          (keyCompare(r.get(k), lo) >= 0 && keyCompare(r.get(k), hi) <= 0))
+        Seq(in, outside)
+      case None => Seq(out)
+    }
+    val parts = math.max(touched.size, 1)
+    val chunks = sides.filter(_.nonEmpty).flatMap { side =>
+      side.sorted(order).grouped((side.size + parts - 1) / parts)
+    }
+    if (chunks.isEmpty) Nil
+    else stageClustered(s, table, m, s.createDataFrame(
+      s.sparkContext.parallelize(chunks, chunks.size).flatMap(identity),
+      schema))
+  }
+
+  /** File-pruned copy-on-write merge of a change set a Spark plan
+    * computes. The change-set guard measures the key set once: at most
+    * [[ChangeSetCap]] tuples and the touched-file box test is a driver
+    * computation and the key side of the anti/semi joins is a broadcast
+    * local relation; above it the box test joins the key frame, and the
+    * key joins carry no broadcast hint — an unmeasured change set is
+    * the planner's to place. The rewritten region is re-range-clustered
+    * on the key; a driver-sized change set whose touched files are
+    * driver-sized too takes [[mergeLocal]] instead. */
+  private def mergeCore(s: SparkSession, table: String, rows: PlannedRows,
+                        keyCols: Seq[String],
                         extraMetrics: Seq[(String, Long)] = Nil,
                         cdc: Boolean = false,
-                        expectedVer: Long = -1L,
-                        pinned: Boolean = false)
+                        expectedVer: Long = -1L)
       : MergeResult = {
     require(keyCols.nonEmpty, "mergeCore needs at least one key column")
     // a feed must speak EXACTLY the rows the rewrite committed: pin the
     // change frames once so a nondeterministic change set (sample,
     // shuffle-order-dependent expression) cannot diverge between the
     // staged data and the published feed (the overwriteCdc invariant).
-    // `pinned = true` = the CALLER already localCheckpoint'ed the common
-    // change frame both sides derive from (the MV refresh does — its
-    // change pipeline is a join over the fed deltas and the MV snapshot,
-    // and re-materializing it once per side would run that pipeline
-    // twice more); projecting a pinned frame is deterministic, so the
-    // feed invariant holds without a second materialization.
+    // A pinned PlannedRows = the CALLER already localCheckpoint'ed the
+    // common change frame both sides derive from; projecting a pinned
+    // frame is deterministic, so the feed invariant holds without a
+    // second materialization.
     val (keys, adds) =
-      if (!cdc || pinned) (keys0, adds0)
-      else (keys0.localCheckpoint(true), adds0.localCheckpoint(true))
+      if (!cdc || rows.pinned) (rows.keys, rows.adds)
+      else (rows.keys.localCheckpoint(true), rows.adds.localCheckpoint(true))
     val key = keyCols.head // the primary clustering dimension
-    // key dimensions are typed by the CHANGE frame (already cast to the
-    // table's column types by every caller): string dims prune via the
-    // truncated string stats, everything else via integral value boxes
-    val isStr: Map[String, Boolean] = keyCols.map(c =>
-      c -> (keys.schema(c).dataType ==
-        org.apache.spark.sql.types.StringType)).toMap
     // a caller that already pinned the table version (the MV refresh,
     // whose change set was COMPUTED against that version's rows) passes
     // it as expectedVer: a racing writer then fails this merge's CAS
@@ -3272,141 +3545,32 @@ object TxnTable {
     // constraints check the CHANGE rows, never the table — surviving
     // rows already passed at their own write time
     enforceChecks(s, m.checks, adds, s"$table: merge change set")
-    val entries = m.entries
-    // stat groups speak PHYSICAL names; key columns arrive logical
-    val pm = physMap(m)
-    // per-file BOX over the key dimensions: a missing stat leaves that
-    // dimension unbounded (conservative); a file with stats on NO key
-    // dimension is unconditionally touched (the legacy statless rule —
-    // it must rewrite even for an empty change set, which is how the
-    // zero-row sentinel gets absorbed by the first merge). String boxes
-    // are the TRUNCATED manifest bounds — recorded lo ≤ true min,
-    // recorded hi ≥ true max — so the probe below can only over-touch,
-    // never miss a file a change key lands in.
-    def boxOf(e: Entry, c: String)
-        : Option[Either[(Long, Long), (String, String)]] =
-      if (isStr(c)) e.strStatFor(pm.getOrElse(c, c)).map(Right(_))
-      else e.statFor(pm.getOrElse(c, c)).map(Left(_))
-    val ranged = entries.zipWithIndex.flatMap { case (e, i) =>
-      val box = keyCols.map(boxOf(e, _))
-      if (box.forall(_.isEmpty)) None else Some((i, box))
-    }
-    val statless = entries.zipWithIndex
-      .collect { case (e, i) if keyCols.forall(c => boxOf(e, c).isEmpty) => i }
-    val touchedIdx: Set[Int] = (if (ranged.isEmpty) Seq.empty[Int] else {
-      import s.implicits._
-      // unbounded dims: integral → (MinValue, MaxValue); string → NULL
-      // bounds (tested with explicit IS NULL in the join condition —
-      // strings have no total-order sentinels)
-      val rangeRows = ranged.map { case (i, box) =>
-        Row.fromSeq(i +: keyCols.zip(box).flatMap {
-          case (c, b) if isStr(c) =>
-            b.map(_.toOption.get) match {
-              case Some((lo, hi)) => Seq(lo, hi)
-              case None => Seq(null, null)
-            }
-          case (_, b) =>
-            val (lo, hi) = b.map(_.swap.toOption.get)
-              .getOrElse((Long.MinValue, Long.MaxValue))
-            Seq(lo, hi)
-        })
-      }
-      val rangeSchema = org.apache.spark.sql.types.StructType(
-        org.apache.spark.sql.types.StructField("_fid",
-          org.apache.spark.sql.types.IntegerType, nullable = false) +:
-          keyCols.zipWithIndex.flatMap { case (c, j) =>
-            val dt: org.apache.spark.sql.types.DataType =
-              if (isStr(c)) org.apache.spark.sql.types.StringType
-              else org.apache.spark.sql.types.LongType
-            Seq(
-              org.apache.spark.sql.types.StructField(s"_lo$j", dt,
-                nullable = isStr(c)),
-              org.apache.spark.sql.types.StructField(s"_hi$j", dt,
-                nullable = isStr(c)))
-          })
-      val ranges = broadcast(s.createDataFrame(
-        s.sparkContext.parallelize(rangeRows, 1), rangeSchema))
-      val probe = keys.select(keyCols.zipWithIndex.map { case (c, j) =>
-        col(c).cast(if (isStr(c)) "string" else "long").as(s"_k$j") }: _*)
-      // Spark's string comparison is UTF8String binary order — the SAME
-      // order u8cmp and the manifest bounds use, so <=/>= here agree
-      // with the stats pass. A NULL key matches no equality (and so
-      // touches no file): nulls fail the integral comparisons natively
-      // and the explicit isNotNull below for strings.
-      val cond = keyCols.zipWithIndex.map { case (c, j) =>
-        if (isStr(c))
-          col(s"_k$j").isNotNull &&
-            (col(s"_lo$j").isNull || col(s"_k$j") >= col(s"_lo$j")) &&
-            (col(s"_hi$j").isNull || col(s"_k$j") <= col(s"_hi$j"))
-        else
-          col(s"_k$j") >= col(s"_lo$j") && col(s"_k$j") <= col(s"_hi$j")
-      }.reduce(_ && _)
-      probe.join(ranges, cond)
-        .select("_fid").distinct().as[Int].collect().toSeq
-    }).toSet ++ statless
-    val (touched, kept) = entries.zipWithIndex.partition { case (_, i) =>
-      touchedIdx.contains(i)
-    } match { case (t, k) => (t.map(_._1), k.map(_._1)) }
+    val local = localRows(keys).map(_.distinct.toSeq)
+    val (touched, kept) = touchedBy(s, m, keyCols, keys.schema,
+      local.toLeft(keys))
+    val keySide = local.fold(keys.distinct())(ks =>
+      broadcast(localFrame(s, ks, keys.schema)))
+    // anti-join on the key is the MERGE itself: surviving old rows + the
+    // adds. Touched files read through readEntries: the COMMITTED schema
+    // (after an appendEvolve, footer inference could pick a
+    // pre-evolution file's schema and silently drop the new column) AND
+    // pending sequenced tombstones applied during the rewrite — the fresh
+    // files' seq then escapes those tombstones. NULL keys never match a
+    // key equality (SQL semantics), so null-key rows always survive the
+    // anti-join / always insert.
     val merged =
       if (touched.isEmpty) adds
-      else {
-        // touched files read through readEntries: the COMMITTED schema
-        // (after an appendEvolve, footer inference could pick a
-        // pre-evolution file's schema and silently drop the new column)
-        // AND pending sequenced tombstones applied during the rewrite —
-        // the fresh files' seq then escapes those tombstones
-        val prev = readEntries(s, table, m, touched)
-        // anti-join on the key is the MERGE itself: surviving old rows +
-        // the adds. The key side is change-set-sized (the same bound the
-        // CDC path's broadcast(keyDf) already assumes), so BROADCAST it:
-        // the touched-file read then streams through a broadcast hash
-        // anti-join with ZERO shuffles instead of exchanging both sides
-        // (guide §3.1 — at scale the touched region is the heavy side).
-        // NULL keys never match a key equality (SQL semantics), so
-        // null-key rows always survive the anti-join / always insert.
-        prev.join(broadcast(keys.distinct()), keyCols, "left_anti")
-          .unionByName(adds)
-      }
-    val idxCols = m.idxCols
+      else readEntries(s, table, m, touched)
+        .join(keySide, keyCols, "left_anti").unionByName(adds)
     val parts = math.max(touched.size, 1)
-    def clusterStage(df: DataFrame): Seq[String] = {
-      val c = df.repartitionByRange(parts, keyCols.map(col): _*)
-        .sortWithinPartitions(keyCols.map(col): _*)
-      if (idxCols.nonEmpty || m.strIdxCols.nonEmpty)
-        // Spark's writer emits one ZERO-ROW file for an empty side
-        // (partition 0 always writes, to preserve schema). A zero-row
-        // entry has no stats line, i.e. would be conservatively touched
-        // by every future merge — drop it instead (the unreferenced file
-        // is staging garbage; vacuum collects it)
-        stageIndexed(s, table, toPhysical(c, m), idxCols, m.strIdxCols)
-          .filter(hasStats)
-      else stage(s, table, toPhysical(c, m))
-    }
-    // stage the rewritten region and out-of-range inserts SEPARATELY:
-    // packing an insert far outside the touched key region (a new
-    // keyspace) into the rewrite cluster would mint a file whose range
-    // spans the gap — a wide bounding box that future merges and range
-    // reads can never prune. Two tight clusters keep every new file's
-    // range honest. (Empty sides write no files — RangePartitioner only
-    // materializes non-empty partitions.)
-    // the touched region's bounds on the primary dimension — integral
-    // value box, or the truncated string box (a SUPERSET of the true
-    // range; using it for the split only widens the in-range cluster,
-    // every file's own stats are still measured fresh at stage time)
-    val touchedBounds: Option[(Column, Column)] =
-      if (isStr(key)) {
-        val bs = touched.flatMap(_.strStatFor(pm.getOrElse(key, key)))
-        if (bs.isEmpty || bs.size < touched.size) None
-        else {
-          val u8 = Ordering.fromLessThan[String](u8cmp(_, _) < 0)
-          Some((lit(bs.map(_._1).min(u8)), lit(bs.map(_._2).max(u8))))
-        }
-      } else {
-        val bs = touched.flatMap(_.statFor(pm.getOrElse(key, key)))
-        if (bs.isEmpty || bs.size < touched.size) None
-        else Some((lit(bs.map(_._1).min), lit(bs.map(_._2).max)))
-      }
-    val fresh = touchedBounds match {
+    def clusterStage(df: DataFrame): Seq[String] =
+      stageClustered(s, table, m, df.repartitionByRange(parts,
+        keyCols.map(col): _*).sortWithinPartitions(keyCols.map(col): _*))
+    // the touched region and the out-of-range inserts stage as two
+    // clusters ([[touchedBounds]]); empty sides write no files —
+    // RangePartitioner only materializes non-empty partitions
+    val fresh = touchedBounds(m, touched, key, keys.schema)
+        .map { case (lo, hi) => (lit(lo), lit(hi)) } match {
       case Some((tlo, thi)) =>
         // the split writes scan `merged` twice — persist so the touched
         // files + anti-join execute ONCE, not per staging write (at
@@ -3420,37 +3584,97 @@ object TxnTable {
         finally merged.unpersist(blocking = false)
       case None => clusterStage(merged)
     }
+    // the merge's signed feed on request: −preimage (rows whose key the
+    // change set addresses, read from the touched files — replaced OR
+    // deleted) ∪ +postimage (the change set's non-D rows). Costs one
+    // more read of the touched files; the price of an exact feed
+    val feed = if (!cdc) None else Some {
+      val post = adds.withColumn("w", lit(1))
+      if (touched.isEmpty) post
+      else readEntries(s, table, m, touched)
+        .join(keySide, keyCols, "left_semi")
+        .withColumn("w", lit(-1)).unionByName(post)
+    }
+    mergeCommit(s, table, m, cur, touched, kept, fresh, adds.schema, feed,
+      extraMetrics, cdc)
+  }
+
+  /** [[mergeCore]] over a DRIVER-SIZED change set, when its touched files
+    * are driver-sized too: their manifest byte sizes sum to at most
+    * [[BroadcastBytes]] (an unknown size counts as too large). Then the
+    * box test is a driver computation, the touched files are read ONCE
+    * — that one read gives both the pre-image `rows.adds` folds and the
+    * survivors — the rewrite is one staged write of the locally held
+    * rows ([[stageLocalClusters]]), and the signed feed is written from
+    * local rows. None, with nothing staged, when the touched files are
+    * larger: the caller takes its planned path. */
+  private[graft] def mergeLocal(s: SparkSession, table: String,
+      rows: LocalRows, keyCols: Seq[String],
+      extraMetrics: Seq[(String, Long)], cdc: Boolean, expectedVer: Long)
+      : Option[MergeResult] = {
+    val cur =
+      if (expectedVer >= 0) expectedVer else currentVersion(s, table)
+    val m = manifest(s, table, cur)
+    val sch = rows.addSchema
+    val keySchema =
+      org.apache.spark.sql.types.StructType(keyCols.map(sch(_)))
+    val (touched, kept) = touchedBy(s, m, keyCols, keySchema,
+      Left(rows.keys))
+    if (!driverReadable(touched)) return None
+    // a key tuple by position in `schema`; None when a component is NULL
+    def tuple(schema: org.apache.spark.sql.types.StructType)(r: Row)
+        : Option[Seq[Any]] = {
+      val t = keyCols.map(c => r.get(schema.fieldIndex(c)))
+      if (t.contains(null)) None else Some(t)
+    }
+    val keySet = rows.keys.flatMap(tuple(keySchema)).toSet
+    // the touched rows in the change rows' layout and types
+    val prev =
+      if (touched.isEmpty) Array.empty[Row]
+      else readEntries(s, table, m, touched)
+        .select(sch.fields.toSeq.map(f => col(f.name).cast(f.dataType)): _*)
+        .collect()
+    // NULL keys match no equality: such rows always survive
+    val (pre, survivors) =
+      prev.toSeq.partition(r => tuple(sch)(r).exists(keySet))
+    val adds = rows.adds(pre)
+    enforceChecks(s, m.checks, localFrame(s, adds, sch),
+      s"$table: merge change set")
+    val fresh = stageLocalClusters(s, table, m, sch, keyCols, touched,
+      survivors ++ adds)
+    val signed = pre.map(r => Row.fromSeq(r.toSeq :+ -1)) ++
+      adds.map(r => Row.fromSeq(r.toSeq :+ 1))
+    val feed = Some(signed).filter(_.nonEmpty).map(localFrame(s, _,
+      sch.add("w", org.apache.spark.sql.types.IntegerType, nullable = false)))
+    Some(mergeCommit(s, table, m, cur, touched, kept, fresh, sch,
+      feed.filter(_ => cdc), extraMetrics, cdc))
+  }
+
+  /** The copy-on-write merge's shared tail, whichever path computed the
+    * rows: the empty-version guard, the signed feed (`feed`, None when
+    * it holds no rows) and ONE CAS commit of the carried entries plus
+    * the `fresh` lines. */
+  private def mergeCommit(s: SparkSession, table: String, m: Manifest,
+      cur: Long, touched: Seq[Entry], kept: Seq[Entry], fresh: Seq[String],
+      addSchema: org.apache.spark.sql.types.StructType,
+      feed: Option[DataFrame], extraMetrics: Seq[(String, Long)],
+      cdc: Boolean): MergeResult = {
     val lines = kept.map(render) ++ fresh
     // a change set that deletes every row (all-'D' applyChanges over a
     // fully-touched table) must not commit a ZERO-file version — stage
     // the empty sentinel carrying the schema, same guard as deleteRange
     val finalLines =
-      if (lines.nonEmpty) lines else stage(s, table, adds.limit(0))
-    // the merge's signed feed on request: −preimage (rows whose key the
-    // change set addresses, read from the touched files — replaced OR
-    // deleted) ∪ +postimage (the change set's non-D rows). Rows the
-    // rewrite carried untouched never enter the feed. Costs one more
-    // read of the touched files; the price of an exact feed, on request
-    val cdcRefs =
-      if (!cdc) Nil
-      else {
-        // same guard as signedDiff: a data column named 'w' would be
-        // silently clobbered by the sign column in the published feed
-        require(!adds.columns.contains("w"),
-          s"$table: cdc merge feeds reserve the column name 'w' for " +
-            "the sign — rename the data column")
-        val pre =
-          if (touched.isEmpty) None
-          else Some(readEntries(s, table, m, touched)
-            .join(broadcast(keys.distinct()), keyCols, "left_semi")
-            .withColumn("w", lit(-1)))
-        val post = adds.withColumn("w", lit(1))
-        stageSignedFeed(s, table,
-          pre.map(_.unionByName(post)).getOrElse(post), cur + 1)
-      }
+      if (lines.nonEmpty) lines else stageEmpty(s, table, addSchema)
+    // same guard as signedDiff: a data column named 'w' would be
+    // silently clobbered by the sign column in the published feed
+    if (cdc) require(!addSchema.fieldNames.contains("w"),
+      s"$table: cdc merge feeds reserve the column name 'w' for " +
+        "the sign — rename the data column")
+    val cdcRefs = feed.fold(Seq.empty[String])(
+      stageSignedFeed(s, table, _, cur + 1))
     val v = commit(s, table, finalLines, cur, op = "merge",
-      schemaJson = withMapping(m, adds.schema).json, deleteLines = m.deletes,
-      idxCols = idxCols, strIdxCols = m.strIdxCols, blooms = m.blooms,
+      schemaJson = withMapping(m, addSchema).json, deleteLines = m.deletes,
+      idxCols = m.idxCols, strIdxCols = m.strIdxCols, blooms = m.blooms,
       metrics = Seq("touched" -> touched.size.toLong,
         "untouched" -> kept.size.toLong) ++ extraMetrics ++
         changeNoopMarker(touched.nonEmpty || fresh.nonEmpty, cdc,
@@ -4040,20 +4264,60 @@ object TxnTable {
   private[graft] def pathFor(table: String, rel: String): String =
     if (rel.startsWith("/")) rel else s"$table/$rel"
 
+  /** The most on-disk bytes a set of files may sum to and still be
+    * broadcast — or read to the driver by a change-set merge. */
+  private val BroadcastBytes = 8L << 20
+
   /** Whether `files` are small enough to broadcast: their summed on-disk
-    * size is at most 8 MiB. A file whose size cannot be read (a failed
-    * stat) is of UNKNOWN size, and an unknown size never qualifies —
-    * the forced broadcast is the optimistic choice, so only a measured
-    * size may make it. */
+    * size is at most [[BroadcastBytes]]. A file whose size cannot be
+    * read (a failed stat) is of UNKNOWN size, and an unknown size never
+    * qualifies — the forced broadcast is the optimistic choice, so only
+    * a measured size may make it. */
   private[graft] def broadcastable(f: FileSystem, files: Seq[Path])
       : Boolean = {
-    val limit = 8L << 20
     var total = 0L
     files.forall { p =>
-      try { total += f.getFileStatus(p).getLen; total <= limit }
+      try { total += f.getFileStatus(p).getLen; total <= BroadcastBytes }
       catch { case scala.util.control.NonFatal(_) => false }
     }
   }
+
+  // ---- DRIVER-SIZED CHANGE SETS --------------------------------------------
+
+  /** The most rows a change set may hold to be applied from local rows —
+    * [[ManifestPrune.InSetCap]], the same bound under which a key set
+    * still prunes file by file. */
+  private[graft] val ChangeSetCap = ManifestPrune.InSetCap
+
+  /** Test seam: inside `distributedOnly.withValue(true)` every change set
+    * reads as above the guard, so a spec can run both paths over the
+    * same rows. */
+  private[graft] val distributedOnly = new scala.util.DynamicVariable(false)
+
+  /** THE change-set guard: `df`'s rows, collected once, when there are at
+    * most [[ChangeSetCap]] of them; None above. A merge or refresh then
+    * works from these rows — key sets, box tests, pre-images, the
+    * rewrite and the feed — instead of planning a distributed pipeline
+    * for a delta of a few hundred rows, and every consumer sees the
+    * same one evaluation of `df`. Above the guard the caller keeps its
+    * planned path, where a forced broadcast of the change set would be
+    * unmeasured, so it plans none. */
+  private[graft] def localRows(df: DataFrame): Option[Array[Row]] =
+    if (distributedOnly.value) None
+    else Some(df.limit(ChangeSetCap + 1).collect())
+      .filter(_.length <= ChangeSetCap)
+
+  /** Driver-held rows as a frame: a `LocalRelation`, so projections and
+    * filters over it fold in the optimizer with no Spark job. */
+  private[graft] def localFrame(s: SparkSession, rows: Seq[Row],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** Whether `entries` may be read to the driver: their manifest byte
+    * sizes sum to at most [[BroadcastBytes]]; an entry of unknown size
+    * never qualifies. */
+  private def driverReadable(entries: Seq[Entry]): Boolean =
+    entries.forall(_.bytes >= 0) && entries.map(_.bytes).sum <= BroadcastBytes
 
   /** `df` — a read of the engine-written `files` of `table` — with a
     * broadcast hint when [[broadcastable]] proves those files small. A
@@ -4637,10 +4901,12 @@ object TxnTable {
     * [[canonCoord]] of its file) — partition values of a manifest-backed
     * file index, so no scan file name is ever resolved back to an entry.
     * Reads `schema` (PHYSICAL names); a manifest without a schema infers
-    * one from the files. */
+    * one from the files. `indexed` = the table has index columns, so a
+    * filtered read skips its stat-less zero-row sentinels. */
   private def scanEntries(s: SparkSession, table: String,
       entries: Seq[Entry], blooms: Seq[BloomRef],
-      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+      schema: Option[org.apache.spark.sql.types.StructType],
+      indexed: Boolean): DataFrame = {
     // each (bloom, literal) is probed at most once per scan relation,
     // however often its plans are optimized
     val probed = new java.util.concurrent.ConcurrentHashMap[
@@ -4649,7 +4915,7 @@ object TxnTable {
       val p = pathFor(table, e.path)
       ManifestFile(p, canonCoord(p), e)
     }, blooms, (b, v) => probed.computeIfAbsent((b.dir, v),
-      _ => bloomProbe(s, table, b, v)), schema)
+      _ => bloomProbe(s, table, b, v)), schema, indexed)
   }
 
   /** [[readEntries]] with the per-row provenance EXPOSED: `keepPos =
@@ -4700,7 +4966,8 @@ object TxnTable {
       org.apache.spark.sql.types.StructType(
         physicalSchema(sch).fields ++ extra)
     }
-    val raw0 = scanEntries(s, table, entries, m.blooms, readSchema)
+    val raw0 = scanEntries(s, table, entries, m.blooms, readSchema,
+      m.idxCols.nonEmpty || m.strIdxCols.nonEmpty)
     // the row's file ordinal must come straight off the file-source
     // relation (a join would detach the metadata column)
     val rawPos =
@@ -5605,6 +5872,33 @@ object TxnTable {
   def cdcSigned(s: SparkSession, table: String, vA: Long, vB: Long,
                 key: String): DataFrame =
     signedDiff(snapshot(s, table, vA), snapshot(s, table, vB), key)
+
+  /** [[signedDiff]] over driver-held rows of one layout, keyed on field
+    * `k`: each output row is a row of `a` signed −1 or of `b` signed +1,
+    * by the same full-outer algebra — a key only in `a` deletes, only in
+    * `b` inserts, in both an update pair unless the payloads are equal
+    * (null-safe, as Row equality compares them); a NULL key matches
+    * nothing. */
+  private def signedDiffRows(a: Seq[Row], b: Seq[Row], k: Int)
+      : Seq[(Row, Int)] = {
+    def payload(r: Row) = r.toSeq.patch(k, Nil, 1)
+    val (aNull, aKeyed) = a.partition(_.isNullAt(k))
+    val (bNull, bKeyed) = b.partition(_.isNullAt(k))
+    val aBy = aKeyed.groupBy(_.get(k))
+    val bBy = bKeyed.groupBy(_.get(k))
+    val both = (aBy.keySet ++ bBy.keySet).toSeq.flatMap { key =>
+      (aBy.getOrElse(key, Nil), bBy.getOrElse(key, Nil)) match {
+        case (as, Nil) => as.map((_, -1))
+        case (Nil, bs) => bs.map((_, 1))
+        case (as, bs) => for {
+          ra <- as; rb <- bs
+          if Row.fromSeq(payload(ra)) != Row.fromSeq(payload(rb))
+          out <- Seq((ra, -1), (rb, 1))
+        } yield out
+      }
+    }
+    aNull.map((_, -1)) ++ bNull.map((_, 1)) ++ both
+  }
 
   /** The signed diff of two arbitrary keyed frames — [[cdcSigned]]'s
     * core, also run by [[overwriteCdc]] BEFORE its commit (old = the
@@ -6640,7 +6934,8 @@ object TxnTable {
     val byFile =
       if (m.entries.isEmpty) Map.empty[String,
         (Seq[ColStat], Seq[HllStat], Seq[StrStat])]
-      else statGroupsByFile(scanEntries(s, table, m.entries, Nil, m.schema),
+      else statGroupsByFile(scanEntries(s, table, m.entries, Nil, m.schema,
+        indexed = false),
         col("__gcanon"), indexCols, strCols)
     // byte sizes from one listing per distinct parent directory, keyed
     // by (directory, file name) — the spelling-proof key

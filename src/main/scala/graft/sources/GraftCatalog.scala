@@ -680,7 +680,8 @@ class GraftTable(ident: String, private[sources] val location: String,
       s, schema(), options, m.entries.map(pathOf),
       (filters, isRuntime) => {
         val kept = ManifestPrune.keep(m.entries, filters, m.blooms,
-          TxnTable.bloomProbe(s, location, _, _))
+          TxnTable.bloomProbe(s, location, _, _),
+          m.idxCols.nonEmpty || m.strIdxCols.nonEmpty)
         keptEntries.set(kept)
         // a runtime (DPP) re-plan books under its own counters — the
         // static-prune deltas scenarios assert on must not inflate

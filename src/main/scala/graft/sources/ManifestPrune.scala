@@ -31,12 +31,19 @@ object ManifestPrune {
     * column some `col = <integral literal>` conjunct names is asked
     * through `probe` (the sidecar's verdict over file names), which is
     * only called while entries remain — a table without blooms runs no
-    * Spark job here. */
+    * Spark job here. In an `indexed` table (one with index columns) an
+    * entry with no stat group is a zero-row sentinel — the engine-wide
+    * convention every stats consumer reads — and no row of it satisfies
+    * any conjunct. */
   def keep(entries: Seq[Entry], conjuncts: Seq[Expression],
       blooms: Seq[TxnTable.BloomRef],
-      probe: (TxnTable.BloomRef, Long) => String => Boolean): Seq[Entry] = {
+      probe: (TxnTable.BloomRef, Long) => String => Boolean,
+      indexed: Boolean): Seq[Entry] = {
     val flat = conjuncts.flatMap(split)
-    val statKept = entries.filter(e => flat.forall(c => mayHold(e, c)))
+    val sentinel = (e: Entry) => indexed && flat.nonEmpty &&
+      e.stats.isEmpty && e.strStats.isEmpty
+    val statKept = entries.filter(e =>
+      !sentinel(e) && flat.forall(c => mayHold(e, c)))
     eqLongConjuncts(flat).distinct.foldLeft(statKept) { case (es, (c, v)) =>
       if (es.isEmpty) es
       else blooms.find(_.col == c).fold(es) { b =>

@@ -37,10 +37,13 @@ case class ManifestFile(path: String, canon: String, entry: Entry)
   * the same relation to the cache manager and to exchange reuse.
   *
   * Data filters are answered by [[ManifestPruneRule]], which replaces
-  * the index with [[keep]]'s. `probe` is the bloom-sidecar verdict for
+  * the index with [[keep]]'s; `indexed` = the table has index columns,
+  * so a stat-less entry is a zero-row sentinel that no filtered read
+  * opens. `probe` is the bloom-sidecar verdict for
   * (bloom, literal), memoized by its creator and shared with every
   * pruned copy. */
-case class ManifestFileIndex(files: Seq[ManifestFile], blooms: Seq[BloomRef])(
+case class ManifestFileIndex(files: Seq[ManifestFile], blooms: Seq[BloomRef],
+    indexed: Boolean)(
     spark: SparkSession, probe: (BloomRef, Long) => String => Boolean,
     val statuses: Seq[FileStatus]) extends FileIndex {
 
@@ -50,9 +53,9 @@ case class ManifestFileIndex(files: Seq[ManifestFile], blooms: Seq[BloomRef])(
     * `conjuncts` (data-column predicates). */
   def keep(conjuncts: Seq[Expression]): ManifestFileIndex = {
     val kept = ManifestPrune.keep(files.map(_.entry), conjuncts, blooms,
-      probe).toSet
+      probe, indexed).toSet
     val (fs, sts) = files.zip(statuses).filter(f => kept(f._1.entry)).unzip
-    ManifestFileIndex(fs, blooms)(spark, probe, sts)
+    ManifestFileIndex(fs, blooms, indexed)(spark, probe, sts)
   }
 
   override val partitionSchema: StructType = StructType(Seq(
@@ -96,8 +99,8 @@ object ManifestScan {
     * `_metadata.row_index` resolves as on any file-source relation. */
   def apply(spark: SparkSession, files: Seq[ManifestFile],
       blooms: Seq[BloomRef], probe: (BloomRef, Long) => String => Boolean,
-      schema: Option[StructType]): DataFrame = {
-    val index = ManifestFileIndex(files, blooms)(spark, probe,
+      schema: Option[StructType], indexed: Boolean): DataFrame = {
+    val index = ManifestFileIndex(files, blooms, indexed)(spark, probe,
       list(spark, files))
     val format = new ParquetFileFormat
     val data = schema

@@ -759,11 +759,13 @@ class CatalogSpec extends SparkSpec {
       sql(q).collect()
       (GraftCatalog.scanKept.get - k0, GraftCatalog.scanTotal.get - t0)
     }
-    assert(keptOf(probe) === ((3L, 3L)), "pre-bloom lookup should keep all")
+    // both data files; the zero-row create sentinel is skipped
+    assert(keptOf(probe) === ((2L, 3L)),
+      "pre-bloom lookup should keep every data file")
     sql(s"CALL graft.system.build_bloom('spec.$t', 'k')")
     val (kPost, tPost) = keptOf(probe)
-    // even-parity file + uncovered zero-row sentinel (± false positive)
-    assert(tPost === 3L && kPost >= 2L && kPost <= 3L,
+    // the even-parity file (± false positive)
+    assert(tPost === 3L && kPost >= 1L && kPost <= 2L,
       s"post-bloom lookup kept $kPost of $tPost")
     assert(sql(probe).collect()(0).getLong(0) === 1L)
     // files appended AFTER the build are uncovered -> conservatively
@@ -904,7 +906,8 @@ class CatalogSpec extends SparkSpec {
       s"expected the overflow to surface, got: ${e.getMessage.take(120)}")
     val (kept, total) = (GraftCatalog.scanKept.get - k0,
       GraftCatalog.scanTotal.get - t0)
-    assert(kept === total,
+    // every data file stays; only the zero-row create sentinel goes
+    assert(kept === total - 1,
       s"narrowing cast must not prune ($kept of $total kept)")
     // try_cast (overflow → NULL): the wrapped key must NOT match, but
     // the big file still can't be pruned by untruncated bounds
@@ -2863,6 +2866,30 @@ class CatalogSpec extends SparkSpec {
     val p = new org.apache.hadoop.fs.Path(TxnTable.pathFor(loc, rel))
     assert(!p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .exists(p), "the refused epoch's stage was not dropped")
+  }
+
+  test("a filtered read skips the zero-row CREATE TABLE sentinel") {
+    val t = fresh("sentinelskip")
+    sql(s"CREATE TABLE graft.spec.$t (k BIGINT, v STRING) " +
+      "TBLPROPERTIES ('index' = 'k')")
+    val loc = s"${GraftCatalog.defaultWarehouse}/spec/$t"
+    (0 until 4).foreach(i => sql(s"INSERT INTO graft.spec.$t SELECT " +
+      s"/*+ REPARTITION(1) */ id + ${i * 100}, 'x' FROM RANGE(100)"))
+    val m = TxnTable.manifest(spark, loc, TxnTable.currentVersion(spark, loc))
+    assert(m.entries.size === 5 &&
+      m.entries.count(e => e.stats.isEmpty && e.strStats.isEmpty) === 1,
+      "four inserted files and the stat-less sentinel are live")
+    val (k0, t0) = (GraftCatalog.scanKept.get, GraftCatalog.scanTotal.get)
+    assert(sql(s"SELECT * FROM graft.spec.$t WHERE k > 100000")
+      .collect().isEmpty)
+    assert((GraftCatalog.scanKept.get - k0, GraftCatalog.scanTotal.get - t0)
+      === ((0L, 5L)), "the SQL read kept a file")
+    assert(TxnTable.snapshotWhere(spark, loc, col("k") > 100000L)._2 === 0,
+      "the library read kept a file")
+    // a matching filter keeps exactly the file that holds the key
+    assert(TxnTable.snapshotWhere(spark, loc, col("k") === 150L)._2 === 1)
+    assert(sql(s"SELECT COUNT(*) FROM graft.spec.$t").collect()(0)
+      .getLong(0) === 400L)
   }
 
   test("a filter skips files on every manifest read") {

@@ -402,10 +402,10 @@ class PlanSpec extends SparkSpec {
       spark.sql("INSERT INTO graft.spec.planskip SELECT " +
         s"/*+ REPARTITION(1) */ id + ${i * 100}, 'x' FROM RANGE(100)")
     }
-    // 5 live files: 4 tight-ranged quarters + the stat-less sentinel.
-    // A one-quarter WHERE must seed the parquet scan's file index with
-    // exactly 2 files (quarter + conservative sentinel) — the pruning
-    // happened at PLAN time, inside the scan builder, not at execution
+    // 5 live files: 4 tight-ranged quarters + the stat-less zero-row
+    // sentinel. A one-quarter WHERE must seed the parquet scan's file
+    // index with exactly the quarter's file — the pruning happened at
+    // PLAN time, inside the scan builder, not at execution
     val df = spark.sql(
       "SELECT v FROM graft.spec.planskip WHERE k >= 100 AND k <= 199")
     def plannedFiles(d: org.apache.spark.sql.DataFrame): Seq[Int] =
@@ -424,7 +424,7 @@ class PlanSpec extends SparkSpec {
         case _ => None
       }.toSeq
     val files = plannedFiles(df)
-    assert(files === Seq(2), s"scan should plan 2 of 5 files, got $files")
+    assert(files === Seq(1), s"scan should plan 1 of 5 files, got $files")
     assert(df.count() === 100)
     // no predicate: every live file stays in the index
     val all = spark.sql("SELECT v FROM graft.spec.planskip")
@@ -433,8 +433,8 @@ class PlanSpec extends SparkSpec {
     // BLOOM survivors reach the plan the same way: two files with
     // fully-overlapping k ranges (parity split) make range stats
     // useless for a point lookup; after CALL build_bloom the scan's
-    // file index must hold only the bloom's survivors — the hit file
-    // plus the uncovered zero-row sentinel — never all of them
+    // file index must hold only the bloom's survivors — the hit file —
+    // never all of them
     spark.sql("DROP TABLE IF EXISTS graft.spec.planbloom")
     spark.sql("CREATE TABLE graft.spec.planbloom (k BIGINT, v STRING) " +
       "TBLPROPERTIES ('index' = 'k')")
@@ -443,13 +443,13 @@ class PlanSpec extends SparkSpec {
     spark.sql("INSERT INTO graft.spec.planbloom SELECT " +
       "/*+ REPARTITION(1) */ id * 2 + 1, 'x' FROM RANGE(50)")
     val point = "SELECT v FROM graft.spec.planbloom WHERE k = 4"
-    assert(plannedFiles(spark.sql(point)) === Seq(3),
-      "pre-bloom point lookup must keep all files (ranges overlap)")
+    assert(plannedFiles(spark.sql(point)) === Seq(2),
+      "pre-bloom point lookup must keep both data files (ranges overlap)")
     spark.sql("CALL graft.system.build_bloom('spec.planbloom', 'k')")
     val post = plannedFiles(spark.sql(point))
-    // even-parity file + uncovered zero-row sentinel (± false positive)
-    assert(post.length == 1 && post.head >= 2 && post.head <= 3,
-      s"post-bloom plan should hold 2-3 of 3 files, got $post")
+    // the even-parity file (± false positive)
+    assert(post.length == 1 && post.head >= 1 && post.head <= 2,
+      s"post-bloom plan should hold 1-2 of 3 files, got $post")
     assert(spark.sql(point).count() === 1)
   }
 

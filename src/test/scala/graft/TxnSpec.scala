@@ -2987,30 +2987,6 @@ class TxnSpec extends SparkSpec {
     assert(eW.getMessage.contains("long box range"), eW.getMessage)
   }
 
-  /** The staging stats pass as it ran before stats moved into the write:
-    * re-read the just-staged files (one staging dir) and aggregate per
-    * `input_file_name()`, sizes from one listing. Kept here as the
-    * reference the in-write measurement must reproduce byte for byte. */
-  private def rereadLines(t: String, rels: Seq[String], idx: Seq[String],
-      str: Seq[String]): Seq[String] = {
-    import TxnTable.{Entry, ColStat, HllStat, StrStat}
-    val dir = rels.head.split('/').dropRight(1).mkString("/")
-    assert(rels.forall(_.startsWith(dir + "/")))
-    val stats = TxnTable.statGroupsByFile(spark.read.parquet(s"$t/$dir"),
-      input_file_name(), idx, str).map { case (f, v) => (f.split('/').last, v) }
-    val dirP = new org.apache.hadoop.fs.Path(s"$t/$dir")
-    val sizes = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(dirP).map(st => (st.getPath.getName, st.getLen)).toMap
-    rels.map { rel =>
-      val name = rel.split('/').last
-      val (ints, hlls, strs) = stats.getOrElse(name,
-        (Seq.empty[ColStat], Seq.empty[HllStat], Seq.empty[StrStat]))
-      val sz = if (ints.isEmpty && strs.isEmpty) -1L
-        else sizes.getOrElse(name, -1L)
-      TxnTable.renderFresh(Entry(rel, ints, strs, hlls = hlls, bytes = sz))
-    }
-  }
-
   test("in-write stats render the staged lines a re-read of the files " +
       "renders, byte for byte") {
     val s = spark
@@ -3031,7 +3007,8 @@ class TxnSpec extends SparkSpec {
         : Seq[String] = {
       val t = freshTable(s"stats_parity_$name")
       val lines = TxnTable.stageIndexed(spark, t, frame, idx, str)
-      assert(lines === rereadLines(t, lines.map(_.split('\t').head), idx,
+      assert(lines === StagedStats.rereadLines(spark, t,
+        lines.map(_.split('\t').head), idx,
         str), s"$name: in-write stats differ from the re-read")
       lines
     }
