@@ -299,7 +299,7 @@ object SparkEntry {
   }
 
   /** dd_simhash oracle: replays the exact 60-bit md5-prefix SimHash
-    * (Dedup.SimhashBits / TextFunctions.tokHash60), the 4×15-bit chunk
+    * (Dedup.SimhashBits / SimHashSignature's token hash), the 4×15-bit chunk
     * bucketing, and the hamming ≤ 3 filter — bit-for-bit. */
   private def ddSimhashOracle: String = {
     val bits = graft.operators.Dedup.SimhashBits

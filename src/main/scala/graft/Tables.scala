@@ -58,9 +58,16 @@ object Tables {
     * CPU-heavy per-row kernel. Parquet scan parallelism is bounded by
     * row groups, and the test corpora are single-row-group files — such
     * a table plans as 1-3 scan tasks however many cores the session
-    * has, so a kernel projection (minhash signatures, PQ encoding,
-    * cosine folds) runs essentially SERIAL (measured: sim_ann_pq was 14
-    * stages × 1 task; 5.2 s of task time on one of 32 cores). A
+    * has, so a kernel projection runs essentially SERIAL (measured:
+    * sim_ann_pq was 14 stages × 1 task; 5.2 s of task time on one of 32
+    * cores). The callers: the minhash, n-gram and substring signature
+    * kernels (Dedup), the classifier features (TextAnalysis), and the
+    * cosine, LSH-bucket, IVF-cell and PQ/SQ encoding projections
+    * (Similarity), including the k-means rounds above the driver-size
+    * guard. Not fanned out: dd_simhash's one-pass signature (kept
+    * map-only, so its only shuffles are the block-key join and the pair
+    * distinct) and k-means training under the guard, which runs on the
+    * driver. A
     * production-scale input already scans with ≥ cores partitions and
     * passes through UNTOUCHED — the round-robin shuffle is only ever
     * paid on inputs so narrow that it is trivially cheap, which is what

@@ -11,8 +11,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   *
   * Spark's higher-order functions (zip_with/aggregate) evaluate
   * interpreted — per-element boxing outside whole-stage codegen. This
-  * expression compiles to a tight primitive loop inside the generated
-  * code (one pass computing dot product and both norms).
+  * expression compiles to one call of a tight primitive loop
+  * ([[CosineSimilarity.cosine]]: one pass computing the dot product and
+  * both norms).
   *
   * Accumulation order is sequential over elements, matching both the
   * zip_with/aggregate fold it replaces and the DuckDB oracle — double
@@ -36,8 +37,33 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
+    if (x.numElements() != y.numElements()) null
+    else CosineSimilarity.cosine(x, y)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""
+         |if ($a.numElements() != $b.numElements()) {
+         |  ${ev.isNull} = true;
+         |} else {
+         |  ${ev.value} = graft.functions.CosineSimilarity$$.MODULE$$.cosine($a, $b);
+         |}
+       """.stripMargin)
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+  /** THE cosine arithmetic — one pass computing the dot product and both
+    * squared norms in element order, then `dot / (√na · √nb)`. Generated
+    * code, interpreted evaluation and the driver-side k-means rounds
+    * (`Similarity.trainCentroids`) all call it, so their doubles are
+    * bit-identical. Lengths must be equal (callers check). */
+  def cosine(x: ArrayData, y: ArrayData): Double = {
     val n = x.numElements()
-    if (n != y.numElements()) return null
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) {
       val xi = x.getDouble(i); val yi = y.getDouble(i)
@@ -46,32 +72,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val (dot, na, nb, n, i) = (ctx.freshName("dot"), ctx.freshName("na"),
-        ctx.freshName("nb"), ctx.freshName("n"), ctx.freshName("i"))
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  double $dot = 0.0, $na = 0.0, $nb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double xi = $a.getDouble($i);
-         |    double yi = $b.getDouble($i);
-         |    $dot += xi * yi; $na += xi * xi; $nb += yi * yi;
-         |  }
-         |  ${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object CosineSimilarity {
   /** Column-API entry point. Inputs must be array<double> (callers cast;
     * no ExpectsInputTypes because AbstractDataType is private[sql]). */
   def apply(a: Column, b: Column): Column =

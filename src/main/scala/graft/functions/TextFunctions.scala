@@ -26,17 +26,6 @@ object TextFunctions {
   def bpeTokens(c: Column): Column =
     regexp_extract_all(c, lit(BpePattern), lit(0))
 
-  /** Distinct word n-gram shingles over a token array; empty for arrays
-    * shorter than n (no partial shingles). NOTE: higher-order array
-    * functions evaluate interpreted — for corpus-scale shingling prefer
-    * the posexplode + window-lead formulation in operators.Dedup. */
-  def shingles(tokens: Column, n: Int): Column =
-    when(size(tokens) >= n,
-      array_distinct(transform(
-        sequence(lit(0), size(tokens) - n),
-        i => concat_ws(" ", slice(tokens, i + 1, lit(n))))))
-      .otherwise(array().cast("array<string>"))
-
   /** Tiny English-ish stopword list (shared with oracle SQL literals). */
   val Stopwords: Seq[String] =
     Seq("the", "a", "of", "and", "to", "in", "is", "it")
@@ -107,13 +96,4 @@ object TextFunctions {
         regexp_replace(c, EmailPattern, "<EMAIL>"),
         Ipv4Pattern, "<IP>"),
       PhonePattern, "<PHONE>")
-
-  /** Cross-engine 60-bit token hash: the first 15 hex chars of md5, parsed
-    * base-16. Any engine with md5 computes it identically (the SQL twin is
-    * `CAST('0x' || substr(md5(t), 1, 15) AS BIGINT)`); 15 hex chars = 60
-    * bits keep the unsigned parse inside a signed 64-bit long. Used where
-    * an oracle must replay the hash — xxhash64 stays the choice for
-    * engine-internal hashing (cheaper, 64 bits). */
-  def tokHash60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 }

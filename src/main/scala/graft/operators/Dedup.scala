@@ -279,32 +279,15 @@ object Dedup {
 
   val NumPerms = 128
   val NumBands = 32 // 4 rows per band
-  private val MersenneP = 2147483647L // 2^31 - 1
+  private[graft] val MersenneP = 2147483647L // 2^31 - 1
 
   /** Deterministic permutation coefficients (splitmix-style scramble of the
     * permutation index — no RNG state, reproducible across runs). */
-  private def permCoeff(i: Int, salt: Long): Long = {
+  private[graft] def permCoeff(i: Int, salt: Long): Long = {
     var z = i.toLong * 0x9E3779B97F4A7C15L + salt
     z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
     z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
     ((z ^ (z >>> 31)) & 0x7FFFFFFFL) | 1L // odd, positive, < 2^31
-  }
-
-  /** REFERENCE formulation of the signature: one groupBy(doc_id) whose 128
-    * min-of-linear-rehash aggregates are flat codegen'd expressions with
-    * map-side partial aggregation. Superseded in the query path by the
-    * native one-pass [[graft.functions.MinHashSignature]] expression
-    * (map-only, no explode, no shuffle); kept because the parity spec
-    * (DedupSpec) asserts the two produce bit-identical signatures. */
-  private[graft] def signatures(shrows: DataFrame): DataFrame = {
-    val hp = shrows.select(col("doc_id"),
-      pmod(col("h"), lit(MersenneP)).as("hp"))
-    val mins = (0 until NumPerms).map { i =>
-      val a = permCoeff(i, 0x5DEECE66DL)
-      val b = permCoeff(i, 0x2545F4914F6CDD1DL)
-      min(pmod(lit(a) * col("hp") + lit(b), lit(MersenneP))).as(s"m$i")
-    }
-    hp.groupBy(col("doc_id")).agg(mins.head, mins.tail: _*)
   }
 
   /** dd_minhash_lsh: band the 128-perm signature into 32 buckets of 4,
@@ -371,12 +354,6 @@ object Dedup {
         col("doc_id").as("d2"))
       .distinct()
   }
-
-  /** Modular shingle-hash rows (the MinHash hash space) — the aggregate
-    * formulation's input, kept for the signature parity spec. */
-  private[graft] def modularShingleRows(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      explode(graft.functions.ShingleHashes.modular(col("text"))).as("h"))
 
   /** DuckDB replay of [[minhashLshDocs]] — the ENTIRE candidate pipeline:
     * modular shingle hashes (character-by-character rolling fold, the
@@ -459,10 +436,11 @@ object Dedup {
 
   // ---- SimHash -------------------------------------------------------------
 
-  /** Signature width: 60 bits — the token hash is the md5-prefix
-    * [[graft.functions.TextFunctions.tokHash60]], chosen so a SQL oracle
-    * can replay the exact signature (xxhash64 exists in no other engine). */
-  val SimhashBits = 60
+  /** Signature width: 60 bits — the token hash is the top 60 bits of
+    * its md5 (see [[graft.functions.SimHashSignature]]), chosen so a SQL
+    * oracle can replay the exact signature (xxhash64 exists in no other
+    * engine). */
+  val SimhashBits = graft.functions.SimHashSignature.Bits
 
   /** Multi-block candidate scheme (the standard near-duplicate simhash
     * index): 6 blocks of 10 bits, one hash table per 3-block combination
@@ -478,26 +456,20 @@ object Dedup {
   private val BlockCombos: Seq[Seq[Int]] =
     (0 until NumBlocks).combinations(3).map(_.toSeq).toSeq // 20 tables
 
-  /** dd_simhash: 60-bit SimHash over whitespace tokens. Computed as a
-    * per-row fold over the token array (repeated tokens contribute their
-    * multiplicity — exactly term-frequency weighting) — NO shuffle for
-    * signatures. Near-dup = hamming ≤ 3; candidates come from the
-    * multi-block tables above, never all-pairs. */
+  /** dd_simhash: 60-bit SimHash over whitespace tokens. The signature
+    * is a map-only projection: the native
+    * [[graft.functions.SimHashSignature]] tokenizes, hashes each token
+    * (the top 60 bits of its MD5) and folds
+    * the 60 signed bit counters in one pass per document (repeated tokens
+    * contribute their multiplicity — exactly term-frequency weighting;
+    * a document without tokens has no signature). Near-dup = hamming ≤ 3;
+    * candidates come from the multi-block tables above, never all-pairs,
+    * so the only shuffles are the block-key join and the pair distinct. */
   def simhash(s: SparkSession, d: String): DataFrame = {
-    // explode + groupBy with 60 flat sum() aggregates: all codegen'd with
-    // map-side combine (per-row higher-order folds evaluate interpreted)
-    val hashed = Tables.documents(s, d)
+    val sig = Tables.documents(s, d)
       .select(col("doc_id"),
-        explode(wsTokens(col("text"))).as("tok"))
-      .select(col("doc_id"), tokHash60(col("tok")).as("h"))
-    val bitSums = (0 until SimhashBits).map { j =>
-      sum(shiftright(col("h"), j).bitwiseAND(lit(1L)) * 2L - 1L).as(s"s$j")
-    }
-    val sig = hashed.groupBy(col("doc_id")).agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"),
-        (0 until SimhashBits).map(j =>
-          when(col(s"s$j") > 0, lit(1L << j)).otherwise(0L))
-          .reduce(_ + _).as("sig"))
+        graft.functions.SimHashSignature(col("text")).as("sig"))
+      .filter(col("sig").isNotNull)
     val blockMask = (1L << BlockBits) - 1
     val chunks = sig.select(col("doc_id"), col("sig"),
       explode(array(BlockCombos.zipWithIndex.map { case (blks, ci) =>

@@ -638,8 +638,8 @@ object MatView {
     * carrying the cursor metrics.
     *
     * The signed fold gives one delta row per touched group, and the
-    * change-set guard ([[TxnTable.localRows]]) collects it once when it
-    * holds at most [[TxnTable.ChangeSetCap]] groups. Then
+    * driver-size guard ([[DriverRows.collect]]) collects it once when it
+    * holds at most [[DriverRows.Cap]] groups. Then
     * [[TxnTable.mergeLocal]] applies it from local rows whenever the MV
     * files those groups can live in are driver-sized too: the null-key
     * refusal and the touched-file box test are driver computations, one
@@ -683,7 +683,7 @@ object MatView {
     // A legacy view keyed 'w' (reserved only since the feed existed)
     // skips publication gracefully instead of bricking at refresh.
     val cdc = !keys.contains("w")
-    val small = TxnTable.localRows(delta)
+    val small = DriverRows.collect(delta)
     val local = small.flatMap { rows =>
       refuseNullKeys(rows.exists(r => keys.exists(k =>
         r.isNullAt(r.fieldIndex(k)))))
@@ -693,7 +693,7 @@ object MatView {
       val mCols = Seq("n", "nn", "total")
       def joined(pre: Seq[Row]): DataFrame = {
         val cur = pre.map(r => keyTuple(r) -> r).toMap
-        TxnTable.localFrame(s, rows.toSeq.map { r =>
+        DriverRows.frame(s, rows.toSeq.map { r =>
           val m = cur.get(keyTuple(r))
           Row.fromSeq(r.toSeq ++ mCols.map(c => m.map(_.getAs[Any](c)).orNull))
         }, StructType(delta.schema.fields ++ Seq(
@@ -711,7 +711,7 @@ object MatView {
     }
     local.map(_.version).getOrElse {
       // a measured delta stays its local rows, and may broadcast
-      val deltaF = small.fold(delta)(TxnTable.localFrame(s, _, delta.schema))
+      val deltaF = small.fold(delta)(DriverRows.frame(s, _, delta.schema))
       def bc(df: DataFrame) = if (small.isDefined) broadcast(df) else df
       def keyCond(a: String, b: String) =
         keys.map(k => col(s"$a.$k") <=> col(s"$b.$k")).reduce(_ && _)

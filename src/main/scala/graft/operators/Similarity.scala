@@ -1,8 +1,11 @@
 package graft.operators
 
 import graft.Tables
+import graft.functions.CosineSimilarity
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -57,8 +60,8 @@ object Similarity {
   // ---- Random-hyperplane LSH ----------------------------------------------
 
   private val NumTables = 8 // independent hash tables (recall amplification)
-  private val PlanesPerTable = 4 // 16 buckets per table
-  private val Dim = 64
+  private[graft] val PlanesPerTable = 4 // 16 buckets per table
+  private[graft] val Dim = 64
 
   /** Deterministic ±1 hyperplane components (splitmix scramble of
     * (plane, dim) — reproducible, no RNG state). */
@@ -68,19 +71,6 @@ object Similarity {
     z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
     if (((z ^ (z >>> 31)) & 1L) == 0L) 1.0 else -1.0
   }
-
-  /** REFERENCE formulation of one table's sign bucket: bit j =
-    * sign(v · r_{t,j}) via the zip_with/aggregate fold over ±1 literal
-    * planes. Superseded in the query path by the native one-pass
-    * [[graft.functions.HyperplaneBuckets]] expression (the HOF fold
-    * evaluates interpreted — 32 folds per row); kept because the parity
-    * spec (FunctionsSpec) asserts bit-identical buckets. */
-  private[graft] def lshBucketFold(v: Column, table: Int): Column =
-    (0 until PlanesPerTable).map { j =>
-      val plane = array((0 until Dim).map(k =>
-        lit(planeSign(table * PlanesPerTable + j, k))): _*)
-      when(dot(v, plane) > 0, lit(1 << j)).otherwise(0)
-    }.reduce(_ + _)
 
   /** (vec_id, v, table, bucket) — one row per vector per hash table. All
     * 8 bucket ids come from ONE native codegen'd pass per row. */
@@ -207,6 +197,29 @@ object Similarity {
   private val KmeansK = 8
   private val KmeansIters = 3
 
+  /** How a codebook is seeded and trained over the vectors `(vec_id, v)`:
+    * the seeds are the first `k` vectors by vec_id with
+    * vec_id ≡ 0 (mod `seedStride`) and vec_id < `seedBelow`; the training
+    * rows are every `stride`-th vec_id, stride = max(1, n / target) for a
+    * `sampleTarget`, all rows without one. */
+  private[graft] final case class Recipe(k: Int, iters: Int, seedStride: Long,
+      seedBelow: Long, sampleTarget: Option[Long]) {
+    def isSeed(id: Long): Boolean =
+      Math.floorMod(id, seedStride) == 0 && id < seedBelow
+    def seedCol: Column =
+      pmod(col("vec_id"), lit(seedStride)) === 0 && col("vec_id") < seedBelow
+    def stride(n: Long): Long = sampleTarget.fold(1L)(t => math.max(1L, n / t))
+  }
+
+  /** sim_kmeans / dd_semantic: the first [[KmeansK]] vectors seed. */
+  private[graft] val KmeansRecipe =
+    Recipe(KmeansK, KmeansIters, 1L, KmeansK.toLong, None)
+
+  /** IVF: every [[CentroidStride]]-th vector seeds, ~[[TrainTarget]]
+    * vectors train. */
+  private[graft] val IvfRecipe = Recipe(NumCentroids, IvfIters, CentroidStride,
+    Long.MaxValue, Some(TrainTarget))
+
   /** argmax-cosine centroid id against driver-held centroid literals —
     * each distance is the native codegen'd CosineSimilarity against a
     * typedlit array, so assignment is one shuffle-free projection. */
@@ -217,54 +230,151 @@ object Similarity {
         lit(-i).as("nid"))
     }: _*)).getField("nid")
 
-  private def bestCentroid(cents: Seq[Seq[Double]]): Column =
+  private[graft] def bestCentroid(cents: Seq[Seq[Double]]): Column =
     bestCentroidOn(cents, col("v"))
 
-  /** Lloyd iterations of spherical k-means over driver-held centroids —
-    * k×dim doubles on the driver, the canonical k-means scale shape:
-    * assignment is a map-only pass against literal centroids, the update is
-    * one groupBy with 64 flat sum() aggregates (map-side combined), and
-    * only k rows come back per iteration.
+  /** The driver twin of [[bestCentroidOn]]: the same cosine
+    * ([[graft.functions.CosineSimilarity.cosine]]) and the same argmax —
+    * `array_max` over (cos, -id) structs compares doubles under Spark's
+    * ordering (NaN greatest, -0.0 = 0.0) and breaks ties to the lowest
+    * id. */
+  private def nearest(v: ArrayData, cents: Array[ArrayData]): Int = {
+    var best = 0
+    var bestCos = CosineSimilarity.cosine(v, cents(0))
+    var i = 1
+    while (i < cents.length) {
+      val c = CosineSimilarity.cosine(v, cents(i))
+      if (SQLOrderingUtil.compareDoubles(c, bestCos) > 0) {
+        best = i; bestCos = c
+      }
+      i += 1
+    }
+    best
+  }
+
+  /** One component in integer micro-units: `floor(x·10⁶ + 0.5)`, the
+    * plan's `floor` (a double floor cast to long). */
+  private def microUnits(x: Double): Long = math.floor(x * 1e6 + 0.5).toLong
+
+  /** The spherical update of one cluster from its integer micro-unit
+    * sums: the squared norm accumulated exactly in BigInt, ONE double
+    * sqrt, each component rounded to 1e-6 (shared by every trainer). */
+  private def normalized(cs: Seq[Long]): Seq[Double] = {
+    val norm = math.sqrt(cs.map(x => BigInt(x) * BigInt(x)).sum.toDouble)
+    cs.map(x =>
+      if (norm == 0) 0.0 else math.floor(x.toDouble / norm * 1e6 + 0.5) / 1e6)
+  }
+
+  /** Lloyd iterations of spherical k-means over driver-held centroids,
+    * seeded and sampled by `r` over the vectors `all` — k×dim doubles on
+    * the driver, the canonical k-means scale shape.
     *
-    * The update is DETERMINISTIC regardless of partitioning: each member
-    * component is quantized to integer micro-units (floor(x·10⁶ + 0.5))
-    * and summed as longs — exact, order-independent — and the spherical
-    * normalization runs over those integer sums (csum/|csum| ≡ mean/|mean|,
-    * the n·10⁶ scale cancels), with the squared norm accumulated exactly in
-    * BigInt before ONE double conversion. Every arithmetic step after the
-    * integer sums is a fixed sequence of IEEE ops, so a SQL oracle replays
-    * the whole training bit-for-bit (kmeansOracle below) — which is what
-    * promotes sim_kmeans/sim_ann_ivf from rows-tier to hash-checked.
-    * Rounding centroids to 1e-6 also keeps the codegen literals (and the
-    * Janino cache key) stable across runs.
+    * The update is DETERMINISTIC regardless of partitioning or order: each
+    * member component is quantized to integer micro-units
+    * ([[microUnits]]) and summed as longs — exact, order-independent,
+    * overflow-checked as an ANSI `sum` is — and the spherical
+    * normalization runs over those integer sums ([[normalized]]:
+    * csum/|csum| ≡ mean/|mean|, the n·10⁶ scale cancels). Every
+    * arithmetic step after the integer sums is a fixed sequence of IEEE
+    * ops, so a SQL oracle replays the whole training bit-for-bit
+    * (kmeansOracle below) — which is what makes sim_kmeans/sim_ann_ivf
+    * hash-checked. Rounding centroids to 1e-6 also keeps the codegen
+    * literals (and the Janino cache key) stable across runs.
     *
-    * Returns the trained centroids and the training rows, fanned out and
-    * materialized once (`localCheckpoint`): every round reads them, not
-    * the scan and the fan-out shuffle again, and a caller assigns over
-    * them too. */
-  private def trainCentroids(all: DataFrame, seeds: Seq[Seq[Double]],
-      iters: Int): (Seq[Seq[Double]], DataFrame) = {
-    // the per-iteration assignment kernel is the training cost — fan a
-    // degenerate scan out so it does not run on one task per round
-    val allF = Tables.fanOut(all).localCheckpoint(true)
+    * The training rows (the stride sample, its stride from one count,
+    * or every vector) go through the driver-size guard ([[DriverRows]]):
+    * up to [[DriverRows.Cap]] of them are collected once, the seeds come
+    * from those rows when the stride divides the seed stride, and every
+    * round runs on the driver with the plan's exact arithmetic (the
+    * shared cosine, the argmax of [[nearest]], `Math.addExact`
+    * micro-unit sums) — a Spark job or two for the whole training
+    * instead of a shuffle aggregate per round. An IVF sample of dense
+    * ids stays under 2·[[TrainTarget]] rows at any corpus size, so in
+    * practice only a full-corpus training set exceeds the guard; there
+    * each round is a map-only assignment against literal centroids plus
+    * one groupBy with 64 flat sum() aggregates over the training rows,
+    * fanned out and materialized once (`localCheckpoint`); only k rows
+    * come back per round.
+    *
+    * Returns the trained centroids and the training rows as a frame a
+    * caller can assign over: the planned sample under the guard, the
+    * materialized one above it. */
+  private[graft] def trainCentroids(all: DataFrame, r: Recipe)
+      : (Seq[Seq[Double]], DataFrame) = {
+    val s = all.sparkSession
+    import s.implicits._
+    // the training rows: every vector, or the stride sample (one count
+    // fixes the stride), so the guard measures what is trained on
+    val stride = r.sampleTarget.fold(1L)(_ => r.stride(all.count()))
+    val train = r.sampleTarget.fold(all)(_ =>
+      all.filter(pmod(col("vec_id"), lit(stride)) === 0))
+    def seedsOf(df: DataFrame): Seq[Seq[Double]] =
+      df.filter(r.seedCol).orderBy("vec_id").limit(r.k)
+        .select("v").as[Seq[Double]].collect().toSeq
+    DriverRows.collect(train) match {
+      case Some(rows) =>
+        val vs = rows.toSeq.map(row => (Option(row.get(0)).map(
+          _.asInstanceOf[Number].longValue), row.getSeq[Double](1)))
+        // when the stride divides the seed stride every seed candidate
+        // is a training row; otherwise one top-k query finds them
+        val seeds =
+          if (r.seedStride % stride != 0) seedsOf(all)
+          else vs.collect { case (Some(id), v) if r.isSeed(id) => id -> v }
+            .sortBy(_._1).take(r.k).map(_._2)
+        // a NULL vector adds nothing to any sum
+        val vecs = vs.collect { case (_, v) if v != null =>
+          UnsafeArrayData.fromPrimitiveArray(v.toArray): ArrayData }
+        (lloydLocal(vecs, seeds, r.iters), train)
+      case None =>
+        // the per-round assignment kernel is the training cost — fan a
+        // degenerate scan out so it does not run on one task per round
+        val trainF = Tables.fanOut(train).localCheckpoint(true)
+        (lloydPlanned(trainF, seedsOf(all), r.iters), trainF)
+    }
+  }
+
+  /** [[trainCentroids]]' rounds on the driver over the training vectors
+    * `train`: a cluster with no member keeps its centroid. */
+  private def lloydLocal(train: Seq[ArrayData], seeds: Seq[Seq[Double]],
+      iters: Int): Seq[Seq[Double]] = {
     var cents = seeds
     for (_ <- 1 to iters) {
-      val assigned = allF.withColumn("cid", bestCentroid(cents))
+      val lits = cents.map(c =>
+        UnsafeArrayData.fromPrimitiveArray(c.toArray): ArrayData).toArray
+      val sums = new Array[Array[Long]](lits.length) // null: no member
+      train.foreach { v =>
+        val c = nearest(v, lits)
+        if (sums(c) == null) sums(c) = new Array[Long](Dim)
+        val acc = sums(c)
+        var i = 0
+        while (i < Dim) {
+          acc(i) = Math.addExact(acc(i), microUnits(v.getDouble(i)))
+          i += 1
+        }
+      }
+      cents = cents.indices.map(i =>
+        if (sums(i) == null) cents(i) else normalized(sums(i).toSeq))
+    }
+    cents
+  }
+
+  /** [[trainCentroids]]' rounds as plans over the materialized sample. */
+  private def lloydPlanned(trainF: DataFrame, seeds: Seq[Seq[Double]],
+      iters: Int): Seq[Seq[Double]] = {
+    var cents = seeds
+    for (_ <- 1 to iters) {
+      val assigned = trainF.withColumn("cid", bestCentroid(cents))
       val sums = (0 until Dim).map(i =>
         sum(floor(element_at(col("v"), i + 1) * 1e6 + 0.5)).as(s"s$i"))
       val updated = assigned.groupBy(col("cid"))
         .agg(sums.head, sums.tail: _*)
         .collect()
-        .map { r =>
-          val cs = (0 until Dim).map(i => r.getLong(i + 1))
-          val norm = math.sqrt(cs.map(x => BigInt(x) * BigInt(x)).sum.toDouble)
-          r.getInt(0) -> cs.map(x =>
-            if (norm == 0) 0.0
-            else math.floor(x.toDouble / norm * 1e6 + 0.5) / 1e6)
-        }.toMap
+        .map(r => r.getInt(0) -> normalized((0 until Dim).map(i =>
+          r.getLong(i + 1))))
+        .toMap
       cents = cents.indices.map(i => updated.getOrElse(i, cents(i)))
     }
-    (cents, allF)
+    cents
   }
 
   /** SQL text of one Lloyd round: assignment against the previous round's
@@ -323,18 +433,13 @@ object Similarity {
     s"""WITH $kmeansAssignCtes
        |SELECT vec_id, cluster FROM assign""".stripMargin
 
-  /** Cluster-assigned vectors `(vec_id, v, cluster)` — k-means training +
-    * argmax-cosine assignment, shared by sim_kmeans and dd_semantic. The
-    * training collect is k×dim driver-held sums (constant at any corpus
-    * size); assignment is a map-only codegen'd projection. */
+  /** Cluster-assigned vectors `(vec_id, v, cluster)` — k-means training
+    * ([[trainCentroids]] with [[KmeansRecipe]]) + argmax-cosine
+    * assignment, shared by sim_kmeans and dd_semantic. Assignment is a
+    * map-only codegen'd projection over the training rows. */
   private[graft] def assignedVecs(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val all = vecs(s, d)
-    // KmeansK rows: sorted on the driver, no distributed sort
-    val seeds: Seq[Seq[Double]] = all.filter(col("vec_id") < KmeansK)
-      .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1).map(_._2)
-    val (cents, allF) = trainCentroids(all, seeds, KmeansIters)
-    allF.withColumn("cluster", bestCentroid(cents))
+    val (cents, train) = trainCentroids(vecs(s, d), KmeansRecipe)
+    train.withColumn("cluster", bestCentroid(cents))
   }
 
   /** sim_kmeans: spherical k-means (cosine assignment, mean + renormalize
@@ -379,13 +484,9 @@ object Similarity {
       val updated = subRows.withColumn("cid", cid)
         .groupBy(col("m"), col("cid")).agg(sums.head, sums.tail: _*)
         .collect()
-        .map { r =>
-          val cs = (0 until PqSubDim).map(i => r.getLong(i + 2))
-          val norm = math.sqrt(cs.map(x => BigInt(x) * BigInt(x)).sum.toDouble)
-          (r.getInt(0), r.getInt(1)) -> cs.map(x =>
-            if (norm == 0) 0.0
-            else math.floor(x.toDouble / norm * 1e6 + 0.5) / 1e6)
-        }.toMap
+        .map(r => (r.getInt(0), r.getInt(1)) ->
+          normalized((0 until PqSubDim).map(i => r.getLong(i + 2))))
+        .toMap
       books = (0 until PqM).map(m =>
         books(m).indices.map(i => updated.getOrElse((m, i), books(m)(i))))
     }
@@ -579,19 +680,12 @@ object Similarity {
     * literal centroid array per-row (sort_array over ≤16 structs) and probe
     * their NProbe nearest cells. Only probed cells are scored exactly.
     * Rows-oracle (approximate results have no SQL twin). */
-  /** The IVF coarse codebook: stride-sampled seeds refined by
-    * [[trainCentroids]] on the fixed-size deterministic sample. Shared by
-    * [[annIvf]] and [[probedCells]]. */
-  private def ivfCentroids(s: SparkSession, all: DataFrame): Seq[Seq[Double]] = {
-    import s.implicits._
-    val seeds: Seq[Seq[Double]] = all
-      .filter(pmod(col("vec_id"), lit(CentroidStride)) === 0)
-      .orderBy("vec_id").limit(NumCentroids)
-      .select("v").as[Seq[Double]].collect().toSeq
-    val stride = math.max(1L, all.count() / TrainTarget)
-    val trainSet = all.filter(pmod(col("vec_id"), lit(stride)) === 0)
-    trainCentroids(trainSet, seeds, IvfIters)._1
-  }
+  /** The IVF coarse codebook: stride-picked seeds refined by
+    * [[trainCentroids]] on the fixed-size deterministic sample
+    * ([[IvfRecipe]]). Shared by [[annIvf]], [[probedCells]] and the IVF
+    * index scenarios. */
+  private def ivfCentroids(all: DataFrame): Seq[Seq[Double]] =
+    trainCentroids(all, IvfRecipe)._1
 
   /** (vec_id, c_id) — every vector's [[NProbe]] nearest coarse cells (the
     * multi-probe assignment). Candidate generation for the bucketed
@@ -599,7 +693,7 @@ object Similarity {
     * probed cell. Map-only against literal centroids — no shuffle. */
   private[graft] def probedCells(s: SparkSession, d: String): DataFrame = {
     val all = vecs(s, d)
-    val cents = ivfCentroids(s, all)
+    val cents = ivfCentroids(all)
     val centArr = array(cents.zipWithIndex.map { case (c, i) =>
       struct((-graft.functions.CosineSimilarity(col("v"), typedLit(c)))
         .as("negcos"), lit(i).as("cid"))
@@ -618,7 +712,7 @@ object Similarity {
   private[graft] def ivfParts(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val all = vecs(s, d)
-    val cents = ivfCentroids(s, all)
+    val cents = ivfCentroids(all)
     val assigned = Tables.fanOut(all).withColumn("c_id", bestCentroid(cents))
     val centArr = array(cents.zipWithIndex.map { case (c, i) =>
       struct((-graft.functions.CosineSimilarity(col("v"), typedLit(c)))
@@ -757,7 +851,7 @@ object Similarity {
     }
     val all = vecs(s, d)
     val corpus = all.filter(pmod(col("vec_id"), lit(3)) =!= 0)
-    val cents = ivfCentroids(s, corpus) // trained pre-batch, frozen
+    val cents = ivfCentroids(corpus) // trained pre-batch, frozen
     val files0 = createIvfStore(s, store, cents, corpus)
     val nCorpus = TxnTable.snapshot(s, store, 0L).count()
     val batch = all.filter(pmod(col("vec_id"), lit(3)) === 0)
@@ -799,7 +893,7 @@ object Similarity {
   def annDelete(s: SparkSession, d: String): DataFrame = {
     val store = graft.Fs.freshScratch("graft_txn", "sim_ivf_del")
     val all = vecs(s, d)
-    val cents = ivfCentroids(s, all)
+    val cents = ivfCentroids(all)
     createIvfStore(s, store, cents, all)
     // BYTE-verbatim carry (rendered lines, not just paths): a delete
     // that re-stamped seqs or touched stats would slip a path-set check
@@ -912,7 +1006,7 @@ object Similarity {
       require(Seq("vec_id", "v", "c_id").forall(snap.columns.contains),
         s"$store is not an IVF store (needs vec_id, v, c_id; has " +
           s"${snap.columns.mkString(", ")})")
-      val cents = ivfCentroids(s, snap.select(col("vec_id"), col("v")))
+      val cents = ivfCentroids(snap.select(col("vec_id"), col("v")))
       centsOut = cents
       val reassigned = snap
         .withColumn("c_id", bestCentroid(cents).cast("long"))
@@ -983,7 +1077,7 @@ object Similarity {
     val corpus = all0.filter(pmod(col("vec_id"), lit(DriftMod)) =!= 0)
     val drifted = all0.filter(pmod(col("vec_id"), lit(DriftMod)) === 0)
       .withColumn("v", driftedVec)
-    val cents0 = ivfCentroids(s, corpus) // frozen, pre-drift
+    val cents0 = ivfCentroids(corpus) // frozen, pre-drift
     createIvfStore(s, store, cents0, corpus)
     val batch = drifted.withColumn("c_id", bestCentroid(cents0).cast("long"))
     TxnTable.appendResolving(s, store,
@@ -1065,7 +1159,7 @@ object Similarity {
     val store = s"$base/store"
     val all = vecs(s, d)
     val corpus = all.filter(pmod(col("vec_id"), lit(3)) =!= 0)
-    val cents = ivfCentroids(s, corpus) // trained pre-stream, frozen
+    val cents = ivfCentroids(corpus) // trained pre-stream, frozen
     val files0 = createIvfStore(s, store, cents, corpus)
     val batch = all.filter(pmod(col("vec_id"), lit(3)) === 0)
     val nWaves = 3
@@ -1532,7 +1626,7 @@ object Similarity {
     * arm cuts it at [[FuseDepth]]. */
   private def ivfPqScored(s: SparkSession, d: String): DataFrame = {
     val all = vecs(s, d)
-    val cents = ivfCentroids(s, all)
+    val cents = ivfCentroids(all)
     val stride = math.max(1L, all.count() / TrainTarget)
     val books = trainCodebooks(
       all.filter(pmod(col("vec_id"), lit(stride)) === 0))

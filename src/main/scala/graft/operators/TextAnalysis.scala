@@ -509,23 +509,39 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
   }
 
+  /** Corpus length stats `(N, total tokens)` as one aggregate over
+    * `docs`. N counts EVERY document — including empty/whitespace-only
+    * ones that produce no tokens — matching the oracle's `COUNT(*) FROM
+    * documents` (a tokenized-docs count would shift every idf and avgdl
+    * on a corpus with empty docs). */
+  private def corpusStats(docs: DataFrame): (Long, Long) = {
+    val r = docs.agg(count(lit(1)),
+      coalesce(sum(wsTokenCount(col("text"))), lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
+  /** `(doc_id, tok, tf)` — the one term-frequency aggregate [[tfidf]] and
+    * [[bm25]] derive their other statistics from: a document's length is
+    * `sum(tf)` over its rows and a term's document frequency is the
+    * count of its rows (one row per distinct (doc, term)). */
+  private def termFreqs(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(wsTokens(col("text"))).as("tok"))
+      .groupBy(col("doc_id"), col("tok"))
+      .agg(count(lit(1)).as("tf"))
+
   /** ta_tfidf: per-(doc, term) TF-IDF — term weighting for retrieval-
-    * augmented corpus curation. Two grouped aggregations (both map-side
-    * combined) and one join on term; the document-frequency side is
-    * vocabulary-sized, far smaller than the corpus, so AQE broadcasts it.
-    * N comes from one count action (a literal at plan time, like the
-    * k-means centroids). The score is rounded to 4 decimals because ln()
+    * augmented corpus curation. One grouped aggregation gives tf, df is
+    * a count over it (vocabulary-sized, far smaller than the corpus, so
+    * AQE broadcasts it into the join on term). N is one count of every
+    * document, empty ones included ([[corpusStats]]' rule; a literal at
+    * plan time, like the k-means centroids). The score is rounded to 4 decimals because ln()
     * differs between engines in the last ulp (measured 44/500 values) —
     * the rounding makes the oracle compare exact. */
   def tfidf(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val n = docs.count()
-    val tok = docs.select(col("doc_id"),
-      explode(wsTokens(col("text"))).as("tok"))
-    val tf = tok.groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("tf"))
-    val df = tok.groupBy(col("tok"))
-      .agg(countDistinct(col("doc_id")).as("df"))
+    val tf = termFreqs(docs)
+    val df = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     tf.join(df, "tok")
       .select(col("doc_id"), col("tok"), col("tf"), col("df"),
         round(col("tf") * log(lit(n.toDouble) / col("df")), 4).as("tfidf"))
@@ -545,32 +561,29 @@ object TextAnalysis {
   /** ta_bm25: BM25 term-weighted retrieval ranking — the lexical scoring
     * standard (Robertson et al.) that TF-IDF approximates; the lexical
     * half of every hybrid retrieval stack. Same aggregate skeleton as
-    * [[tfidf]] (tf, dl, df are all map-side-combined; df is
-    * vocabulary-sized), the query term set is the top-[[Bm25Queries]]
-    * document-frequency tokens (a 16-row driver collect — deterministic:
-    * df desc, tok asc), and scoring touches only the inverted-index
-    * slice of the corpus holding those terms. Corpus length stats
-    * (N, total tokens) are one bounded aggregate turned into plan
-    * literals. The per-term ranking avoids a 16-partition window funnel
-    * with a salted two-phase top-k (identical results, per-partition
-    * work bounded at any corpus size). Score rounded 4dp for
+    * [[tfidf]] (one materialized [[termFreqs]] aggregate; dl and df are
+    * aggregates over it, df vocabulary-sized), the query term set is the
+    * top-[[Bm25Queries]] document-frequency tokens (a 16-row driver
+    * collect — deterministic: df desc, tok asc), and scoring touches only
+    * the inverted-index slice of the corpus holding those terms. Corpus
+    * length stats (N, total tokens) are one bounded aggregate
+    * ([[corpusStats]]) turned into plan literals. The per-term ranking
+    * avoids a 16-partition window funnel with a salted two-phase top-k
+    * (identical results, per-partition work bounded at any corpus
+    * size). Score rounded 4dp for
     * cross-engine ln parity (the [[tfidf]] precedent); ranks computed
     * AFTER rounding so both engines rank identical values, ties broken
     * by doc_id. */
   def bm25(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val stats = docs.agg(count(lit(1)),
-      coalesce(sum(wsTokenCount(col("text"))), lit(0L))).head()
-    val (n, totTok) = (stats.getLong(0), stats.getLong(1))
+    val (n, totTok) = corpusStats(docs)
     val avgdl = totTok.toDouble / n
-    val tok = docs.select(col("doc_id"),
-      explode(wsTokens(col("text"))).as("tok"))
-    val dl = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-    val tf = tok.groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("tf"))
-    val df = tok.groupBy(col("tok"))
-      .agg(countDistinct(col("doc_id")).as("df"))
+    // materialized once: the query-term collect and both sides of the
+    // final plan read it
+    val tf = termFreqs(docs).localCheckpoint(true)
+    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+    val df = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val qts: Seq[String] = df.orderBy(col("df").desc, col("tok"))
       .limit(Bm25Queries).select("tok").as[String].collect().toSeq
     val idf = log((lit(n.toDouble) - col("df") + lit(0.5)) /
@@ -629,16 +642,6 @@ object TextAnalysis {
       .select(col("tok"), col("doc_id"), col("tf"), col("dl"))
   }
 
-  /** (docs, tokens) of one corpus batch. N counts EVERY document —
-    * including empty/whitespace-only ones that produce no postings —
-    * matching ta_bm25's docs.count() and the oracle's COUNT(*) FROM
-    * documents (a tokenized-docs count would shift every idf and avgdl
-    * on a corpus with empty docs). */
-  private def idxStats(batch: DataFrame): (Long, Long) = {
-    val toks = batch.select(explode(wsTokens(col("text")))).count()
-    (batch.count(), toks)
-  }
-
   private def idxCluster(p: DataFrame): DataFrame =
     p.repartitionByRange(8, col("tok")).sortWithinPartitions(col("tok"))
 
@@ -650,7 +653,7 @@ object TextAnalysis {
   private def buildIdxStore(s: SparkSession, store: String,
       docs: DataFrame): (Set[String], Long, Long) = {
     val b1 = docs.filter(col("doc_id") % 2 === 0)
-    val (n1, t1) = idxStats(b1)
+    val (n1, t1) = corpusStats(b1)
     val p1 = idxPostings(b1)
     TxnTable.commit(s, store, TxnTable.stageIndexed(s, store,
       idxCluster(p1), Nil, Seq("tok")), expected = -1L, op = "create",
@@ -659,7 +662,7 @@ object TextAnalysis {
     val v0Lines = TxnTable.manifest(s, store, 0L).entries
       .map(TxnTable.render).toSet
     val b2 = docs.filter(col("doc_id") % 2 =!= 0)
-    val (n2, t2) = idxStats(b2)
+    val (n2, t2) = corpusStats(b2)
     val m0 = TxnTable.manifest(s, store, 0L)
     TxnTable.commit(s, store,
       m0.entries.map(TxnTable.render) ++ TxnTable.stageIndexed(s, store,
@@ -765,7 +768,7 @@ object TextAnalysis {
     val entriesBefore = TxnTable.manifest(s, store,
       TxnTable.currentVersion(s, store)).entries.map(TxnTable.render).toSet
     val goneDocs = docs.filter(col("doc_id") % 7 === 0)
-    val (nGone, tGone) = idxStats(goneDocs)
+    val (nGone, tGone) = corpusStats(goneDocs)
     val mHead = TxnTable.manifest(s, store,
       TxnTable.currentVersion(s, store))
     TxnTable.deleteKeysMor(s, store, goneDocs.select(col("doc_id")),

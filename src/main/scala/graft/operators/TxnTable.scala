@@ -700,8 +700,8 @@ object TxnTable {
     val v = commit(s, table,
       ms.entries.map(e => render(e.copy(path = absPath(e.path)))), cur,
       op = "fastforward",
-      schemaJson = ms.schema
-        .map(reanchorSinceVer(_, mParent.schema, cur + 1).json).orNull,
+      schemaJson = ms.schema.map(sch => restageStamped(mParent.schema,
+        reanchorSinceVer(sch, mParent.schema, cur + 1), cur + 1).json).orNull,
       deleteLines = ms.deletes.map { case (p, c, sq) => (absPath(p), c, sq) },
       idxCols = ms.idxCols, strIdxCols = ms.strIdxCols,
       blooms = ms.blooms.map(b => b.copy(dir = absPath(b.dir))),
@@ -728,7 +728,8 @@ object TxnTable {
     *     seqs keep BOTH orderings sound: main's rows predate every
     *     replayed branch change, and intra-branch tombstone-vs-add
     *     order is preserved commit by commit.
-    *   - TRUE OVERLAP: recompute at row granularity — the branch's
+    *   - TRUE OVERLAP (or a compaction on either side restaged the
+    *     table under new physical names): recompute at row granularity — the branch's
     *     net content delta vs its old base three-way-merges onto
     *     main's head content (multiset EXCEPT/UNION, deterministic
     *     and order-free) and stages as fresh branch files, one
@@ -808,7 +809,12 @@ object TxnTable {
     // and re-stamping the manifest line does not re-map the file's row
     // bounds — the row-level recompute is always sound, so route there
     // (same for a vacuumed-interior lineage, whose deltas are unknown)
-    val conflict = !contiguous ||
+    // a compaction on either side that restaged the table under new
+    // physical names: the other side's files carry the old ones, and
+    // only the row-level recompute restages them under one mapping
+    val remap = restaged(b0.schema, mCur.schema) ||
+      restaged(b0.schema, bLast.schema)
+    val conflict = !contiguous || remap ||
       mainRemoved.exists(branchRemoved) ||
       (mainNewTombs.nonEmpty && branchRemoved.nonEmpty) ||
       // bounded (~L) bounds speak the branch's old seq space and
@@ -841,14 +847,20 @@ object TxnTable {
     // the RE-POINT commit both paths start from: branch content :=
     // main@cur, every path made absolute so it resolves from the
     // branch dir — one manifest write, zero data moved. It is also the
-    // branch's NEW localBase: content-identical to parent@cur.
+    // branch's NEW localBase: content-identical to parent@cur, so past
+    // a restage it reads main's files under main's own mapping.
+    val (rpSchema, rpIdx, rpStrIdx) =
+      if (!remap) (schemaJson, idx, strIdx)
+      else (mCur.schema.map(w => restageStamped(bLast.schema,
+        reanchorSinceVer(stripSinceVer(w), bLast.schema, bHead + 1),
+        bHead + 1).json).orNull, mCur.idxCols, mCur.strIdxCols)
     def repoint(expected: Long): Long = commit(s, bd,
       mCur.entries.map(e => render(e.copy(path = normP(e.path)))),
       expected, op = "rebase",
-      schemaJson = schemaJson,
+      schemaJson = rpSchema,
       deleteLines = mCur.deletes.map { case (p, c, sq) =>
         (normP(p), c, sq) },
-      idxCols = idx, strIdxCols = strIdx,
+      idxCols = rpIdx, strIdxCols = rpStrIdx,
       blooms = mCur.blooms.map(b => b.copy(dir = normP(b.dir))),
       retired = retired, checks = checks)
     val newLocalBase = repoint(bHead)
@@ -899,8 +911,13 @@ object TxnTable {
           else stage(s, bd, toPhysical(merged, mStage))
         val lines2 = if (lines.nonEmpty) lines
           else stageEmpty(s, bd, toPhysical(merged, mStage).schema)
+        val rpParsed = Option(rpSchema).map(j =>
+          org.apache.spark.sql.types.DataType.fromJson(j)
+            .asInstanceOf[org.apache.spark.sql.types.StructType])
         commit(s, bd, lines2, newLocalBase, op = "rebase",
-          schemaJson = schemaJson, idxCols = idx, strIdxCols = strIdx,
+          schemaJson = mStage.schema
+            .map(restageStamped(rpParsed, _, newLocalBase + 1).json).orNull,
+          idxCols = idx, strIdxCols = strIdx,
           retired = retired, checks = checks,
           metrics = Seq("recomputed" -> 1L))
       }
@@ -1030,7 +1047,9 @@ object TxnTable {
       }
     val fromRemoved = deltas.flatMap(_.removed).toSet
     val fromTombs = deltas.exists(_.tombs.nonEmpty)
+    // either side restaged under new physical names: rebase's rule
     val conflict = !contiguous ||
+      restaged(b0.schema, mCur.schema) || restaged(b0.schema, bLast.schema) ||
       intoRemoved.exists(fromRemoved) ||
       (intoNewTombs.nonEmpty && fromRemoved.nonEmpty) ||
       // bounded and positional tombstones never metadata-replay (the
@@ -1122,7 +1141,9 @@ object TxnTable {
       val lines2 = if (lines.nonEmpty) lines
         else stageEmpty(s, id, toPhysical(merged, mStage).schema)
       commit(s, id, lines2, iHead, op = "merge",
-        schemaJson = schemaJson, idxCols = idx, strIdxCols = strIdx,
+        schemaJson = mStage.schema
+          .map(restageStamped(mCur.schema, _, iHead + 1).json).orNull,
+        idxCols = idx, strIdxCols = strIdx,
         retired = retired, checks = checks,
         metrics = Seq("recomputed" -> 1L, s"merged_$fLeaf" -> fHead))
     }
@@ -1782,7 +1803,10 @@ object TxnTable {
     * base's, so a rebase past a concurrent schema evolution keeps the
     * winner's schema. `blooms` = Some(refs) replaces the base's bloom
     * sidecar refs (a full rewrite drops them: every covered file is
-    * gone). */
+    * gone). `schema` = Some(json) REPLACES the base's schema and
+    * `strIdxCols` its string index header (a compaction that restaged
+    * every file under the live names drops the column mapping); any
+    * interleaved winner then conflicts. */
   case class Change(added: Seq[String], removed: Set[String],
       readSet: Set[String], op: String = "write",
       metrics: Seq[(String, Long)] = Nil,
@@ -1790,7 +1814,9 @@ object TxnTable {
       idxCols: Option[Seq[String]] = None,
       schemaFallback: Option[String] = None,
       blooms: Option[Seq[BloomRef]] = None,
-      txn: Option[(String, Long)] = None)
+      txn: Option[(String, Long)] = None,
+      schema: Option[String] = None,
+      strIdxCols: Option[Seq[String]] = None)
 
   /** Outcome of a resolved commit: the landed version plus how the
     * conflicts were handled — `rebases` = CAS losses resolved as pure
@@ -1809,7 +1835,11 @@ object TxnTable {
     *              (both rewrote it) or a file in the loser's READ SET
     *              (the loser's outputs are stale), or a winner added
     *              new merge-on-read tombstones while the loser rewrote
-    *              or read data (rewritten rows would escape them).
+    *              or read data (rewritten rows would escape them),
+    *              or a winner restaged the table under new physical
+    *              column names while the loser adds files staged under
+    *              the old ones ([[restaged]]; a `work` that hands back
+    *              the same files then fails loudly).
     *
     * Disjoint writers — appends, or rewrites of non-overlapping file
     * sets — REBASE: the same staged files re-commit onto the winner's
@@ -1845,11 +1875,11 @@ object TxnTable {
         ch.added
       try {
         val v = commit(s, table, lines, base, op = ch.op,
-          schemaJson = m.schema.map(_.json)
+          schemaJson = ch.schema.orElse(m.schema.map(_.json))
             .orElse(ch.schemaFallback).orNull,
           deleteLines = ch.deletes.getOrElse(m.deletes),
           idxCols = ch.idxCols.getOrElse(m.idxCols),
-          strIdxCols = m.strIdxCols,
+          strIdxCols = ch.strIdxCols.getOrElse(m.strIdxCols),
           blooms = ch.blooms.getOrElse(m.blooms),
           metrics = ch.metrics, retired = m.retired, checks = m.checks,
           txn = ch.txn)
@@ -1859,12 +1889,20 @@ object TxnTable {
           val newCur = currentVersion(s, table)
           // winners = every version that landed since our base; each is
           // judged against ITS parent so a chain of winners accumulates
-          val conflict = (base + 1 to newCur).exists { wv =>
-            val wm = manifest(s, table, wv)
-            val pm = manifest(s, table, wv - 1)
+          val winners = (base + 1 to newCur).map(wv =>
+            (manifest(s, table, wv - 1), manifest(s, table, wv)))
+          // a winner that restaged the table under new physical names
+          // (a compaction dropping the column mapping): files staged
+          // under the old names would read as NULL under its schema
+          val remap = ch.added.nonEmpty &&
+            winners.exists { case (pm, wm) => restaged(pm.schema, wm.schema) }
+          val conflict = remap || winners.exists { case (pm, wm) =>
             val wRemoved =
               pm.entries.map(_.path).toSet -- wm.entries.map(_.path).toSet
             val newTombs = wm.deletes.toSet -- pm.deletes.toSet
+            // a schema REPLACEMENT renames what every file is read by:
+            // any winner's files and schema predate it
+            ch.schema.isDefined ||
             wRemoved.exists(p => ch.removed(p) || ch.readSet(p)) ||
               (newTombs.nonEmpty &&
                 (ch.removed.nonEmpty || ch.readSet.nonEmpty)) ||
@@ -1880,8 +1918,18 @@ object TxnTable {
           }
           base = newCur
           m = manifest(s, table, newCur)
-          if (conflict) { recomputes += 1; ch = work(base) }
-          else rebases += 1
+          if (conflict) {
+            recomputes += 1
+            val stale = ch.added.map(_.takeWhile(_ != '\t')).toSet
+            ch = work(base)
+            // a `work` that hands back the same staged files cannot
+            // land them past a restage: loud, never NULL columns
+            if (remap && ch.added.exists(l => stale(l.takeWhile(_ != '\t'))))
+              throw new IllegalStateException(s"$table: version $base " +
+                "restaged the table under its live column names while " +
+                "this write's files were staged under the old ones — " +
+                "retry the write")
+          } else rebases += 1
       }
     }
     throw new IllegalStateException("unreachable")
@@ -1985,9 +2033,10 @@ object TxnTable {
   /** Append that never loses to a concurrent writer: same schema check
     * and indexed staging as [[append]], but the commit goes through
     * [[commitResolving]] — an append removes and reads nothing, so a
-    * CAS loss ALWAYS rebases (the staged files re-commit onto the
-    * winner's manifest as one more metadata round-trip, zero data
-    * re-written). This is what the SQL catalog's INSERT INTO rides:
+    * CAS loss rebases (the staged files re-commit onto the winner's
+    * manifest as one more metadata round-trip, zero data re-written)
+    * unless the winner restaged the table under new physical column
+    * names, which restages the rows. This is what the SQL catalog's INSERT INTO rides:
     * 1000 concurrent inserters serialize only through manifest writes,
     * exactly like every public table format's append path. */
   def appendResolving(s: SparkSession, table: String, df: DataFrame)
@@ -2019,8 +2068,12 @@ object TxnTable {
     * already in the ledger — the retry raced us and won. */
   private class TxnAlreadyApplied extends RuntimeException
 
-  private def appendResolvingImpl(s: SparkSession, table: String,
-      df: DataFrame, txn: Option[(String, Long)]): Option[CommitOutcome] = {
+  /** `beforeCommit` runs with the base before every commit attempt — a
+    * test seam for landing a concurrent commit between the staging and
+    * the CAS. */
+  private[graft] def appendResolvingImpl(s: SparkSession, table: String,
+      df: DataFrame, txn: Option[(String, Long)],
+      beforeCommit: Long => Unit = _ => ()): Option[CommitOutcome] = {
     val v0 = currentVersion(s, table)
     val m0 = manifest(s, table, v0)
     // idempotence fast path: the batch already landed — nothing to stage
@@ -2033,12 +2086,20 @@ object TxnTable {
     require(got == have,
       s"append schema $got does not match table schema $have")
     enforceChecks(s, m0.checks, df, s"$table: append")
-    // stage ONCE, up front: the staged files are base-independent (an
-    // append derives from nothing), so rebases reuse them verbatim
-    val fresh =
-      if (m0.idxCols.nonEmpty || m0.strIdxCols.nonEmpty)
-        stageIndexed(s, table, toPhysical(df, m0), m0.idxCols, m0.strIdxCols)
-      else stage(s, table, toPhysical(df, m0))
+    // staged once against m0: an append derives from nothing, so
+    // rebases reuse the files verbatim. The one recompute an append
+    // meets is a winner that restaged the table under new physical
+    // names (commitResolving's remap rule): the rows then restage
+    // under the new base's names and index headers.
+    var fresh: Seq[String] = Nil
+    def stageFor(m: Manifest): Seq[String] = {
+      dropStaged(s, table, fresh)
+      fresh =
+        if (m.idxCols.nonEmpty || m.strIdxCols.nonEmpty)
+          stageIndexed(s, table, toPhysical(df, m), m.idxCols, m.strIdxCols)
+        else stage(s, table, toPhysical(df, m))
+      fresh
+    }
     // a CAS loss rebases without re-running work — but an interleaved
     // ADD CONSTRAINT commit changes what this append must satisfy, and
     // rebasing past it would land unvalidated rows under a constraint
@@ -2047,6 +2108,7 @@ object TxnTable {
     // and re-reads the idempotence ledger, so a racing retry of the
     // SAME batch aborts instead of landing twice.
     try Some(commitResolving(s, table, base => {
+      beforeCommit(base)
       // no-race fast path: the base we already validated against costs
       // no extra log read
       if (base != v0) {
@@ -2057,7 +2119,9 @@ object TxnTable {
           enforceChecks(s, bm.checks, df, s"$table: append (constraint " +
             "added concurrently)")
       }
-    })(_ => Change(fresh, Set.empty, Set.empty, op = "append", txn = txn)))
+    })(base => Change(
+      stageFor(if (fresh.isEmpty) m0 else manifest(s, table, base)),
+      Set.empty, Set.empty, op = "append", txn = txn)))
     catch {
       case _: TxnAlreadyApplied => dropStaged(s, table, fresh); None
       case e: Throwable => dropStaged(s, table, fresh); throw e
@@ -3114,10 +3178,10 @@ object TxnTable {
     * serve (readers pay the anti-join until [[compact]] applies the
     * tombstones and both generations converge).
     *
-    * The change-set guard ([[localRows]]) collects `changes` once when it
-    * holds at most [[ChangeSetCap]] rows: the distinct key set, the
-    * tombstone file, the adds and the signed feed then all come from
-    * that one copy — one evaluation of the caller's frame, no distinct
+    * The driver-size guard ([[DriverRows.collect]]) collects `changes`
+    * once when it holds at most [[DriverRows.Cap]] rows: the distinct
+    * key set, the tombstone file, the adds and the signed feed then all
+    * come from that one copy — one evaluation of the caller's frame, no distinct
     * or diff shuffle. Above the guard each is planned over `changes`.
     * Either way the staging, the feed write and the commit are shared. */
   def applyChangesMor(s: SparkSession, table: String, changes: DataFrame,
@@ -3135,7 +3199,7 @@ object TxnTable {
     require(!physMap(m).getOrElse(key, key).endsWith("~L"),
       s"merge key '$key' ends in the reserved '~L' suffix " +
         "(bounded-tombstone marker)")
-    val rows = localRows(changes)
+    val rows = DriverRows.collect(changes)
     val (tomb, addLines, feed) = rows match {
       case Some(rs) => morLocal(s, table, m, cur, rs, changes.schema, key,
         opCol, adds.schema)
@@ -3201,7 +3265,7 @@ object TxnTable {
     // `op =!= 'D'`: a NULL op is neither an add nor (below) skipped as a key
     val addRows = rows.filter(r => !r.isNullAt(oi) && r.get(oi) != "D")
       .map(r => Row.fromSeq(r.toSeq.patch(oi, Nil, 1)))
-    enforceChecks(s, m.checks, localFrame(s, addRows, addSchema),
+    enforceChecks(s, m.checks, DriverRows.frame(s, addRows, addSchema),
       s"$table: merge change set")
     // NULL keys match no equality: a NULL-keyed tombstone row would
     // delete nothing — keep the tombstone file clean of them (NULL-key
@@ -3212,11 +3276,11 @@ object TxnTable {
     val keySchema = org.apache.spark.sql.types.StructType(Seq(schema(key)))
     val tomb =
       if (keys.isEmpty) Nil
-      else stage(s, table, localFrame(s, keys.map(Row(_)), keySchema)
+      else stage(s, table, DriverRows.frame(s, keys.map(Row(_)), keySchema)
         .coalesce(1))
     val addLines =
       if (addRows.isEmpty) Nil else stageMorAdds(s, table, m,
-        localFrame(s, addRows, addSchema))
+        DriverRows.frame(s, addRows, addSchema))
     def feed(): DataFrame = {
       require(!addSchema.fieldNames.contains("w"),
         "change feed cannot be published for a table with a column " +
@@ -3229,7 +3293,7 @@ object TxnTable {
       val rest = addSchema.fields.indices.filterNot(_ == k)
       def signed(r: Row, w: Int) =
         Row.fromSeq(r.get(k) +: w +: rest.map(r.get))
-      localFrame(s, signedDiffRows(pre.toSeq, addRows, k)
+      DriverRows.frame(s, signedDiffRows(pre.toSeq, addRows, k)
         .map { case (r, w) => signed(r, w) },
         org.apache.spark.sql.types.StructType(addSchema(k) +:
           org.apache.spark.sql.types.StructField("w",
@@ -3347,7 +3411,7 @@ object TxnTable {
     val touched: Set[Int] = if (ranged.isEmpty) statless.toSet else keys match {
       case Left(rows) =>
         val bytes = (v: String) => v.getBytes(UTF_8)
-        val probes = probe(localFrame(s, rows, keySchema)).collect()
+        val probes = probe(DriverRows.frame(s, rows, keySchema)).collect()
           .filterNot(r => keyCols.indices.exists(r.isNullAt))
           .map(r => keyCols.indices.map(j =>
             if (isStr(j)) bytes(r.getString(j)) else r.getLong(j)))
@@ -3402,8 +3466,9 @@ object TxnTable {
           else
             col(s"_k$j") >= col(s"_lo$j") && col(s"_k$j") <= col(s"_hi$j")
         }.reduce(_ && _)
-        probe(frame).join(broadcast(localFrame(s, rangeRows, rangeSchema)),
-          cond).select("_fid").distinct().as[Int].collect().toSet ++ statless
+        probe(frame).join(
+          broadcast(DriverRows.frame(s, rangeRows, rangeSchema)), cond)
+          .select("_fid").distinct().as[Int].collect().toSet ++ statless
     }
     m.entries.zipWithIndex.partition { case (_, i) => touched(i) } match {
       case (t, k) => (t.map(_._1), k.map(_._1))
@@ -3509,7 +3574,7 @@ object TxnTable {
 
   /** File-pruned copy-on-write merge of a change set a Spark plan
     * computes. The change-set guard measures the key set once: at most
-    * [[ChangeSetCap]] tuples and the touched-file box test is a driver
+    * [[DriverRows.Cap]] tuples and the touched-file box test is a driver
     * computation and the key side of the anti/semi joins is a broadcast
     * local relation; above it the box test joins the key frame, and the
     * key joins carry no broadcast hint — an unmeasured change set is
@@ -3545,11 +3610,11 @@ object TxnTable {
     // constraints check the CHANGE rows, never the table — surviving
     // rows already passed at their own write time
     enforceChecks(s, m.checks, adds, s"$table: merge change set")
-    val local = localRows(keys).map(_.distinct.toSeq)
+    val local = DriverRows.collect(keys).map(_.distinct.toSeq)
     val (touched, kept) = touchedBy(s, m, keyCols, keys.schema,
       local.toLeft(keys))
     val keySide = local.fold(keys.distinct())(ks =>
-      broadcast(localFrame(s, ks, keys.schema)))
+      broadcast(DriverRows.frame(s, ks, keys.schema)))
     // anti-join on the key is the MERGE itself: surviving old rows + the
     // adds. Touched files read through readEntries: the COMMITTED schema
     // (after an appendEvolve, footer inference could pick a
@@ -3638,13 +3703,13 @@ object TxnTable {
     val (pre, survivors) =
       prev.toSeq.partition(r => tuple(sch)(r).exists(keySet))
     val adds = rows.adds(pre)
-    enforceChecks(s, m.checks, localFrame(s, adds, sch),
+    enforceChecks(s, m.checks, DriverRows.frame(s, adds, sch),
       s"$table: merge change set")
     val fresh = stageLocalClusters(s, table, m, sch, keyCols, touched,
       survivors ++ adds)
     val signed = pre.map(r => Row.fromSeq(r.toSeq :+ -1)) ++
       adds.map(r => Row.fromSeq(r.toSeq :+ 1))
-    val feed = Some(signed).filter(_.nonEmpty).map(localFrame(s, _,
+    val feed = Some(signed).filter(_.nonEmpty).map(DriverRows.frame(s, _,
       sch.add("w", org.apache.spark.sql.types.IntegerType, nullable = false)))
     Some(mergeCommit(s, table, m, cur, touched, kept, fresh, sch,
       feed.filter(_ => cdc), extraMetrics, cdc))
@@ -3788,6 +3853,10 @@ object TxnTable {
         "tombstone(s) the destination doesn't know; publish grafts " +
         "additions only — compact the branch (compaction applies its " +
         "tombstones) and re-publish")
+    require(!restaged(ms.schema, md.schema),
+      s"publish: $src and $dst read their files under different " +
+        "physical column names (a compaction restaged one of them) — " +
+        "rebase the branch first")
     val dstLive = md.entries.map(e => abs(dst)(e.path)).toSet
     val adds = ms.entries
       .map(e => e.copy(path = abs(src)(e.path)))
@@ -4284,35 +4353,6 @@ object TxnTable {
 
   // ---- DRIVER-SIZED CHANGE SETS --------------------------------------------
 
-  /** The most rows a change set may hold to be applied from local rows —
-    * [[ManifestPrune.InSetCap]], the same bound under which a key set
-    * still prunes file by file. */
-  private[graft] val ChangeSetCap = ManifestPrune.InSetCap
-
-  /** Test seam: inside `distributedOnly.withValue(true)` every change set
-    * reads as above the guard, so a spec can run both paths over the
-    * same rows. */
-  private[graft] val distributedOnly = new scala.util.DynamicVariable(false)
-
-  /** THE change-set guard: `df`'s rows, collected once, when there are at
-    * most [[ChangeSetCap]] of them; None above. A merge or refresh then
-    * works from these rows — key sets, box tests, pre-images, the
-    * rewrite and the feed — instead of planning a distributed pipeline
-    * for a delta of a few hundred rows, and every consumer sees the
-    * same one evaluation of `df`. Above the guard the caller keeps its
-    * planned path, where a forced broadcast of the change set would be
-    * unmeasured, so it plans none. */
-  private[graft] def localRows(df: DataFrame): Option[Array[Row]] =
-    if (distributedOnly.value) None
-    else Some(df.limit(ChangeSetCap + 1).collect())
-      .filter(_.length <= ChangeSetCap)
-
-  /** Driver-held rows as a frame: a `LocalRelation`, so projections and
-    * filters over it fold in the optimizer with no Spark job. */
-  private[graft] def localFrame(s: SparkSession, rows: Seq[Row],
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-
   /** Whether `entries` may be read to the driver: their manifest byte
     * sizes sum to at most [[BroadcastBytes]]; an entry of unknown size
     * never qualifies. */
@@ -4363,10 +4403,15 @@ object TxnTable {
   // RETIRES its physical name in the `#retired=` header, so a later ADD
   // of the same name mints a fresh physical — by-name parquet resolution
   // can never resurrect dropped values. Pinned pre-rename versions keep
-  // their own committed schema — the old names — by construction.
+  // their own committed schema — the old names — by construction. A
+  // compaction rewrites every live file under the LIVE names and drops
+  // the mapping ([[restaged]]): a write staged under the old names must
+  // then restage or fail, and a stream reads each older file under the
+  // mapping in force before the restage ([[restages]]).
 
   private val FieldId = "gid"
   private val FieldPhys = "gphys"
+  private val FieldRestaged = "grestaged"
   // INITIAL DEFAULT (the Iceberg-v3 shape): a column added with a
   // default reads the default — not NULL — from every file that
   // PREDATES it. The default's SQL literal and the data seq it took
@@ -4529,6 +4574,112 @@ object TxnTable {
       : String =
     if (f.metadata.contains(FieldPhys)) f.metadata.getString(FieldPhys)
     else f.name
+
+  /** The committed schema with its physical-name mapping dropped (field
+    * ids stay) — what a rewrite that restaged every live file under the
+    * LIVE names commits ([[compactResolving]]). */
+  private def unmapped(sch: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(sch.fields.map(f =>
+      if (!f.metadata.contains(FieldPhys)) f
+      else f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
+        .withMetadata(f.metadata).remove(FieldPhys).build())))
+
+  /** `sch` as committed at `version` over the schema `parent`: a field
+    * whose physical name moved from `parent`'s (matched by id) records
+    * `version` as its latest restage (`grestaged`, read by
+    * [[restages]]); every other field keeps `parent`'s record, so a
+    * record carried in from another lineage's version space (a branch,
+    * a fast-forward) is replaced by this lineage's. */
+  private def restageStamped(
+      parent: Option[org.apache.spark.sql.types.StructType],
+      sch: org.apache.spark.sql.types.StructType, version: Long)
+      : org.apache.spark.sql.types.StructType = {
+    val before = parent.toSeq.flatMap(_.fields)
+      .filter(_.metadata.contains(FieldId))
+      .map(f => f.metadata.getLong(FieldId) -> f).toMap
+    org.apache.spark.sql.types.StructType(sch.fields.map { f =>
+      val md = new org.apache.spark.sql.types.MetadataBuilder()
+        .withMetadata(f.metadata).remove(FieldRestaged)
+      Some(f).filter(_.metadata.contains(FieldId))
+        .flatMap(g => before.get(g.metadata.getLong(FieldId))) match {
+        case Some(p) if physName(p) != physName(f) =>
+          md.putLong(FieldRestaged, version)
+        case Some(p) if p.metadata.contains(FieldRestaged) =>
+          md.putLong(FieldRestaged, p.metadata.getLong(FieldRestaged))
+        case _ =>
+      }
+      f.copy(metadata = md.build())
+    })
+  }
+
+  /** The compactions after version `after` that restaged one of `cols`
+    * (logical names of the current schema `cur`) under new physical
+    * names, each with the schema of the version just before it, newest
+    * first: files added before such a version carry that schema's
+    * physical names. Each restaged field records its latest restage
+    * (`grestaged`, [[restageStamped]]), and the schema before it the
+    * one preceding, so the walk reads two manifests per restage it
+    * returns and none on a table never restaged since `after`. The schema before a restage maps
+    * every field by id — the table was mapped, and a RENAME gives every
+    * field one — which is what links files older than the first RENAME
+    * (their manifests carry no ids) to the current columns. */
+  private[graft] def restages(s: SparkSession, table: String,
+      cur: Option[org.apache.spark.sql.types.StructType], cols: Seq[String],
+      after: Long): Seq[(Long, Option[org.apache.spark.sql.types.StructType])] = {
+    val ids = cur.toSeq.flatMap(_.fields).filter(f => cols.contains(f.name) &&
+      f.metadata.contains(FieldId)).map(_.metadata.getLong(FieldId)).toSet
+    def latest(sch: Option[org.apache.spark.sql.types.StructType]) =
+      sch.toSeq.flatMap(_.fields).filter(f => f.metadata.contains(FieldId) &&
+        ids(f.metadata.getLong(FieldId)) && f.metadata.contains(FieldRestaged))
+        .map(_.metadata.getLong(FieldRestaged)).maxOption.filter(_ > after)
+    // a record this lineage cannot confirm (its version vacuumed, or
+    // not a restage here) ends the walk
+    def at(r: Long) = scala.util.Try(manifest(s, table, r - 1).schema)
+      .toOption.filter(b => scala.util.Try(
+        restaged(b, manifest(s, table, r).schema)).getOrElse(false))
+      .map(r -> _)
+    Iterator.iterate(latest(cur).flatMap(at))(
+      _.flatMap { case (_, sch) => latest(sch).flatMap(at) })
+      .takeWhile(_.isDefined).flatten.toSeq
+  }
+
+  /** Field id → physical name of a committed schema; a field without an
+    * id was never renamed, so it reads under its own name. */
+  private def physById(sch: Option[org.apache.spark.sql.types.StructType])
+      : Map[Long, String] =
+    sch.fold(Map.empty[Long, String])(_.fields.iterator
+      .filter(_.metadata.contains(FieldId))
+      .map(f => f.metadata.getLong(FieldId) -> physName(f)).toMap)
+
+  /** Whether `to` reads some field of `from` under another physical
+    * name — a compaction that dropped the column mapping sits between
+    * them, so files staged under `from` carry names `to` no longer
+    * gives (they would read as NULL). Symmetric. */
+  private def restaged(
+      from: Option[org.apache.spark.sql.types.StructType],
+      to: Option[org.apache.spark.sql.types.StructType]): Boolean = {
+    val t = physById(to)
+    physById(from).exists { case (id, p) => t.get(id).exists(_ != p) }
+  }
+
+  /** `sch` (logical names of the current schema `cur`) under the
+    * physical names of the schema `at`: each field resolves through its
+    * stable id in `at`, falling back to `cur`'s mapping — the names
+    * files older than a restage carry ([[restages]]). */
+  private[graft] def toPhysicalSchemaAt(
+      cur: Option[org.apache.spark.sql.types.StructType],
+      at: Option[org.apache.spark.sql.types.StructType],
+      sch: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = {
+    val atPhys = physById(at)
+    val byName = cur.fold(Map.empty[String, String])(_.fields.iterator
+      .map(f => f.name -> (if (f.metadata.contains(FieldId))
+        atPhys.getOrElse(f.metadata.getLong(FieldId), physName(f))
+        else physName(f))).toMap)
+    org.apache.spark.sql.types.StructType(
+      sch.fields.map(f => f.copy(name = byName.getOrElse(f.name, f.name))))
+  }
 
   /** Whether the committed schema carries any non-identity mapping. */
   private[graft] def hasMappedSchema(
@@ -5276,27 +5427,27 @@ object TxnTable {
       val m = manifest(s, table, base)
       val target = compactionTarget(liveBytes(s, table, base))
       val snap = snapshot(s, table, base)
-      val idxCols = m.idxCols
-      // the snapshot carries LOGICAL names; index headers speak
-      // physical — cluster on the logical twins, stage back physical
+      // the snapshot carries LOGICAL names and every file is rewritten,
+      // so the new files are staged under them: a column-mapped table
+      // drops its mapping (and its index headers turn logical), which
+      // makes it bloomable and reindexable again and returns its SQL
+      // reads to the DSv2 scan; on an unmapped table both are identity
       val (logIdx, logStrIdx) = logicalIndexCols(m)
+      val mapped = hasMappedSchema(m.schema)
       // re-cluster on the integral index columns (string stats
       // re-measure from the new layout regardless — compaction must
       // never downgrade EITHER kind of manifest-skipping ability)
       val lines =
-        if (idxCols.nonEmpty)
+        if (logIdx.nonEmpty)
           stageIndexed(s, table,
-            toPhysical(
-              snap.repartitionByRange(target, logIdx.map(idxExpr): _*)
-                .sortWithinPartitions(logIdx.map(idxExpr): _*), m),
-            idxCols, m.strIdxCols)
-        else if (m.strIdxCols.nonEmpty)
-          stageIndexed(s, table,
-            toPhysical(snap.repartitionByRange(target,
+            snap.repartitionByRange(target, logIdx.map(idxExpr): _*)
+              .sortWithinPartitions(logIdx.map(idxExpr): _*),
+            logIdx, logStrIdx)
+        else if (logStrIdx.nonEmpty)
+          stageIndexed(s, table, snap.repartitionByRange(target,
               logStrIdx.map(col): _*)
-              .sortWithinPartitions(logStrIdx.map(col): _*), m),
-            Nil, m.strIdxCols)
-        else stage(s, table, toPhysical(snap.repartition(target), m))
+            .sortWithinPartitions(logStrIdx.map(col): _*), Nil, logStrIdx)
+        else stage(s, table, snap.repartition(target))
       lastStaged = lines
       val paths = m.entries.map(_.path).toSet
       // the rewrite READ the base through its tombstones and applied
@@ -5306,7 +5457,11 @@ object TxnTable {
       // nothing while pinning dead sidecar dirs against vacuum forever)
       Change(lines, paths, paths, op = "compact", deletes = Some(Nil),
         schemaFallback = Some(withMapping(m, snap.schema).json),
-        blooms = Some(Nil))
+        blooms = Some(Nil),
+        schema = m.schema.filter(_ => mapped)
+          .map(sch => restageStamped(m.schema, unmapped(sch), base + 1).json),
+        idxCols = Some(logIdx).filter(_ => mapped),
+        strIdxCols = Some(logStrIdx).filter(_ => mapped))
     }
   }
 

@@ -268,9 +268,13 @@ class GraftMicroBatchStream(ident: String, location: String,
     * micro-batch scan resolves parquet columns by name — while the rows
     * it produces are positional, so downstream still sees the logical
     * schema's order and types unchanged. Resolved per batch from the
-    * CURRENT manifest: physical names are frozen at column birth, so
-    * one current mapping is correct for every version's files. */
-  private def physReadSchema(s: SparkSession): StructType = {
+    * CURRENT manifest: physical names are frozen at column birth and
+    * move only when a compaction restages the table under its live
+    * names, so the result gives, per version that added a file, the
+    * current mapping or — for a file older than a restage after
+    * `after` — the mapping in force before that restage. */
+  private def physReadSchema(s: SparkSession, after: Long = Long.MaxValue)
+      : Long => StructType = {
     val tsch = TxnTable.manifest(s, location,
       TxnTable.currentVersion(s, location)).schema
     // a mid-stream RENAME of a streamed column would make this lookup
@@ -284,7 +288,10 @@ class GraftMicroBatchStream(ident: String, location: String,
           "exist under these names (renamed or dropped mid-stream) — " +
           "restart the stream from the current schema")
     }
-    TxnTable.toPhysicalSchema(tsch, schema)
+    val restages = TxnTable.restages(s, location, tsch, schema.fieldNames,
+      after)
+    v => TxnTable.toPhysicalSchemaAt(tsch,
+      restages.filter(_._1 > v).lastOption.fold(tsch)(_._2), schema)
   }
   @volatile private var availableTarget: Option[Long] = None
   // the batch most recently planned: planInputPartitions and
@@ -319,12 +326,13 @@ class GraftMicroBatchStream(ident: String, location: String,
     GraftStreaming.VersionOffset(TxnTable.currentVersion(spark, location))
 
   /** Files ADDED by each version in (start, end] — the batch's exact
-    * input. A start of −1 (the from-the-beginning offset) walks from an
+    * input, each with the version that added it. A start of −1 (the
+    * from-the-beginning offset) walks from an
     * EMPTY synthetic parent, so version 0's own files are emitted —
     * CTAS / `create(df)` tables carry their content at v0. Fails loudly
     * on non-append data changes. */
   private def addedFiles(s: SparkSession, start: Long, end: Long)
-      : Seq[Path] = {
+      : Seq[(Path, Long)] = {
     if (start >= end) return Seq.empty
     // thread the previous manifest through the walk: a catch-up batch
     // over N versions costs N+1 manifest reads, not 2N
@@ -371,7 +379,7 @@ class GraftMicroBatchStream(ident: String, location: String,
               "streamed append-only tail cannot retract already-emitted " +
               "rows")
           cur.entries.filterNot(e => prevPaths(e.path))
-            .map(e => new Path(TxnTable.pathFor(location, e.path)))
+            .map(e => new Path(TxnTable.pathFor(location, e.path)) -> v)
         }
       prev = cur
       out
@@ -383,15 +391,26 @@ class GraftMicroBatchStream(ident: String, location: String,
     val s = spark
     val s0 = start.asInstanceOf[GraftStreaming.VersionOffset].v
     val e0 = end.asInstanceOf[GraftStreaming.VersionOffset].v
-    val (parts, factory) =
-      StreamBridge.batchFor(s, physReadSchema(s), addedFiles(s, s0, e0))
+    // one scan per physical read schema: a batch spanning a compaction
+    // that restaged the table reads each side under its own names
+    val readAs = physReadSchema(s, s0)
+    val added = addedFiles(s, s0, e0)
+    val groups = added.map(_._2).distinct.groupBy(readAs).toSeq
+    val (parts, factory) = groups match {
+      case Seq((sch, _)) => StreamBridge.batchFor(s, sch, added.map(_._1))
+      case Seq() => StreamBridge.batchFor(s, readAs(Long.MaxValue), Nil)
+      case _ => StreamBridge.union(groups.map { case (sch, vs) =>
+        StreamBridge.batchFor(s, sch,
+          added.collect { case (p, v) if vs.contains(v) => p }) })
+    }
     lastFactory = Some(factory)
     parts
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     lastFactory.getOrElse(
-      StreamBridge.readerFactory(spark, physReadSchema(spark)))
+      StreamBridge.readerFactory(spark,
+        physReadSchema(spark)(Long.MaxValue)))
 
   override def commit(end: Offset): Unit = () // the log retains history
 

@@ -5,12 +5,14 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.execution.datasources.{InMemoryFileIndex, OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.util.SerializableConfiguration
 
 /** Streaming-side reuse of Spark's own parquet machinery — the
@@ -36,6 +38,39 @@ object StreamBridge {
       CaseInsensitiveStringMap.empty()).build()
     val batch = scan.toBatch
     (batch.planInputPartitions(), batch.createReaderFactory())
+  }
+
+  /** Several batch scans as one: each partition carries the index of
+    * the scan that planned it, and the factory hands it to that scan's
+    * reader — a micro-batch whose files were written under different
+    * physical column names reads each group under its own. */
+  def union(scans: Seq[(Array[InputPartition], PartitionReaderFactory)])
+      : (Array[InputPartition], PartitionReaderFactory) =
+    (scans.zipWithIndex.flatMap { case ((parts, _), i) =>
+      parts.map(Tagged(i, _)) }.toArray,
+      new TaggedReaderFactory(scans.map(_._2).toArray))
+
+  case class Tagged(scan: Int, inner: InputPartition) extends InputPartition {
+    override def preferredLocations(): Array[String] =
+      inner.preferredLocations()
+  }
+
+  class TaggedReaderFactory(factories: Array[PartitionReaderFactory])
+      extends PartitionReaderFactory {
+    private def route(p: InputPartition) = p match {
+      case Tagged(i, inner) => (factories(i), inner)
+    }
+    override def createReader(p: InputPartition)
+        : PartitionReader[InternalRow] = {
+      val (f, in) = route(p); f.createReader(in)
+    }
+    override def createColumnarReader(p: InputPartition)
+        : PartitionReader[ColumnarBatch] = {
+      val (f, in) = route(p); f.createColumnarReader(in)
+    }
+    override def supportColumnarReads(p: InputPartition): Boolean = {
+      val (f, in) = route(p); f.supportColumnarReads(in)
+    }
   }
 
   /** A reader factory usable for ANY file partition of this schema —

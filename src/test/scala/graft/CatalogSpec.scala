@@ -2951,12 +2951,122 @@ class CatalogSpec extends SparkSpec {
     assert(opened(none) === 0)
     assert(none.collect().isEmpty)
     assert(TxnTable.snapshotWhere(spark, loc, col("k") > 100000L)._2 === 0)
-    // compact applies the tombstone into one file; the column mapping
-    // stays, so the read is still a manifest scan and keeps that file
+    // compact applies the tombstone into one file and drops the column
+    // mapping, so the read returns to the pruned DSv2 scan
     TxnTable.compact(spark, loc)
+    val (k1, t1) = (GraftCatalog.scanKept.get, GraftCatalog.scanTotal.get)
     val after = sql(s"SELECT * FROM graft.spec.$t WHERE k BETWEEN 110 AND 180")
     assert(rows(after) === want)
-    assert(ScanFiles.roots(after.queryExecution.optimizedPlan)
-      .count(_.contains(s"$t/data/")) === 1)
+    assert((GraftCatalog.scanKept.get - k1, GraftCatalog.scanTotal.get - t1)
+      === (1, 1))
+  }
+
+  test("compaction drops a renamed table's column mapping") {
+    val t = fresh("unmapcompact")
+    val s = spark
+    import s.implicits._
+    val loc = s"${GraftCatalog.defaultWarehouse}/spec/$t"
+    sql(s"CREATE TABLE graft.spec.$t (k BIGINT, j BIGINT, v STRING) " +
+      "TBLPROPERTIES ('index' = 'k')")
+    (0 until 4).foreach { i =>
+      sql(s"INSERT INTO graft.spec.$t SELECT /*+ REPARTITION(1) */ " +
+        s"id + ${i * 100}, id * 3, 'q$i' FROM RANGE(100)")
+    }
+    sql(s"ALTER TABLE graft.spec.$t RENAME COLUMN j TO jj")
+    val model = (0 until 4).flatMap(i =>
+      (0 until 100).map(id => (id + i * 100L, id * 3L, s"q$i"))).toSet
+    intercept[IllegalArgumentException](
+      sql(s"CALL graft.system.build_bloom('spec.$t', 'jj')"))
+    sql(s"INSERT INTO graft.spec.$t SELECT /*+ REPARTITION(1) */ " +
+      "id + 1000, 7, 'pre' FROM RANGE(10)")
+    sql(s"CALL graft.system.compact('spec.$t')")
+    val compacted = TxnTable.currentVersion(spark, loc)
+    sql(s"INSERT INTO graft.spec.$t SELECT /*+ REPARTITION(1) */ " +
+      "id + 2000, 10, 'post' FROM RANGE(10)")
+    val all = model ++ (0 until 10).map(i => (i + 1000L, 7L, "pre")) ++
+      (0 until 10).map(i => (i + 2000L, 10L, "post"))
+    val m = TxnTable.manifest(spark, loc, TxnTable.currentVersion(spark, loc))
+    assert(!TxnTable.hasMappedSchema(m.schema),
+      "compaction must restage under the live names")
+    assert(m.idxCols === Seq("k"))
+    sql(s"CALL graft.system.build_bloom('spec.$t', 'jj')")
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, String)] =
+      df.select("k", "jj", "v").as[(Long, Long, String)].collect().toSet
+    val (k0, t0) = (GraftCatalog.scanKept.get, GraftCatalog.scanTotal.get)
+    // jj = 10 is only in the post-compaction file: the bloom skips the
+    // compacted one
+    val got = sql(s"SELECT * FROM graft.spec.$t WHERE jj = 10")
+    assert(rows(got) === all.filter(_._2 == 10L))
+    assert(GraftCatalog.scanTotal.get - t0 > 0 &&
+      GraftCatalog.scanKept.get - k0 < GraftCatalog.scanTotal.get - t0,
+      "the unmapped table must read through the pruned DSv2 scan")
+    assert(rows(sql(s"SELECT * FROM graft.spec.$t")) === all)
+    // a tail over files older than the compaction reads them under the
+    // physical name they carry: one batch spanning the compaction, and
+    // one version per batch (each older batch planned after the
+    // compaction landed)
+    def tail(name: String, opts: (String, String)*) =
+      spark.readStream.options(opts.toMap + ("skipChangeCommits" -> "true"))
+        .table(s"graft.spec.$t").writeStream.format("memory")
+        .queryName(s"${t}_$name")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+    tail("span").awaitTermination()
+    assert(rows(spark.table(s"${t}_span")) === all)
+    tail("lag", "maxVersionsPerTrigger" -> "1").awaitTermination()
+    assert(rows(spark.table(s"${t}_lag")) === all)
+    tail("new", "startingVersion" -> compacted.toString).awaitTermination()
+    assert(rows(spark.table(s"${t}_new")) === all.filter(_._3 == "post"))
+  }
+
+  test("writes staged under a mapping a compaction drops restage or fail") {
+    val t = fresh("unmaprace")
+    val s = spark
+    import s.implicits._
+    val loc = s"${GraftCatalog.defaultWarehouse}/spec/$t"
+    sql(s"CREATE TABLE graft.spec.$t (k BIGINT, j BIGINT) " +
+      "TBLPROPERTIES ('index' = 'k')")
+    sql(s"INSERT INTO graft.spec.$t SELECT id, id * 3 FROM RANGE(50)")
+    sql(s"ALTER TABLE graft.spec.$t RENAME COLUMN j TO jj")
+    def rows(): Set[(Long, Long)] = TxnTable.snapshot(spark, loc)
+      .select(col("k"), col("jj")).as[(Long, Long)].collect().toSet
+    val want = (0L until 50L).map(k => (k, k * 3)).toSet
+    // a branch forks while the table is mapped and appends under `j`
+    sql(s"CALL graft.system.branch('spec.$t', 'dev')")
+    sql(s"INSERT INTO graft.spec.$t.branch_dev SELECT id + 500, id * 3 " +
+      "FROM RANGE(5)")
+    // an append stages under `j`, then a compaction lands before its CAS
+    var fired = false
+    val add = spark.range(100, 110)
+      .select(col("id").as("k"), (col("id") * 3).as("jj"))
+    val out = TxnTable.appendResolvingImpl(spark, loc, add, None,
+      beforeCommit = _ => if (!fired) {
+        fired = true; TxnTable.compact(spark, loc)
+      }).get
+    assert(out.recomputes === 1, "the append must restage, not rebase")
+    assert(!TxnTable.hasMappedSchema(TxnTable.manifest(spark, loc,
+      TxnTable.currentVersion(spark, loc)).schema))
+    val withAdd = want ++ (100L until 110L).map(k => (k, k * 3))
+    assert(rows() === withAdd)
+    // the branch's files carry `j`, main now reads `jj`: rebase restages
+    // the branch's rows instead of replaying its files as metadata
+    sql(s"CALL graft.system.rebase('spec.$t', 'dev')")
+    val bd = TxnTable.branchDir(spark, loc, "dev")
+    assert(TxnTable.manifest(spark, bd, TxnTable.currentVersion(spark, bd))
+      .metrics.get("recomputed") === Some(1L))
+    assert(sql(s"SELECT k, jj FROM graft.spec.$t.branch_dev")
+      .as[(Long, Long)].collect().toSet ===
+      withAdd ++ (0L until 5L).map(i => (i + 500, i * 3)))
+    // a write that can only land the files it staged fails loudly
+    sql(s"ALTER TABLE graft.spec.$t RENAME COLUMN jj TO j2")
+    val staged = TxnTable.stage(spark, loc, add)
+    var fired2 = false
+    val err = intercept[IllegalStateException](
+      TxnTable.commitResolving(spark, loc, recheck = _ => if (!fired2) {
+        fired2 = true; TxnTable.compact(spark, loc)
+      })(_ => TxnTable.Change(staged, Set.empty, Set.empty, op = "append")))
+    assert(err.getMessage.contains("restaged"), err.getMessage)
+    assert(TxnTable.snapshot(spark, loc).select(col("k"), col("j2"))
+      .as[(Long, Long)].collect().toSet === withAdd)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{MatView, TxnTable}
+import graft.operators.{DriverRows, MatView, TxnTable}
 import org.apache.spark.SpecBus
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.SparkPlan
@@ -117,7 +117,7 @@ class ChangeSetSpec extends SparkSpec {
     }
 
   test("a change set above the guard is never force-broadcast") {
-    val n = TxnTable.ChangeSetCap + 1
+    val n = DriverRows.Cap + 1
     val (t, mv) = (fresh("big_cow"), fresh("big_mv"))
     val s = spark
     import s.implicits._
@@ -323,7 +323,7 @@ class ChangeSetSpec extends SparkSpec {
   test("the local and the planned change-set paths publish the same " +
       "rows, feeds and manifest lines") {
     val local = parityRun("local")
-    val planned = TxnTable.distributedOnly.withValue(true) {
+    val planned = DriverRows.distributedOnly.withValue(true) {
       parityRun("planned")
     }
     assert(local.map(_._1) === planned.map(_._1))

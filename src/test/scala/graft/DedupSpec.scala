@@ -120,7 +120,7 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Seq[Long])].collect().toMap
     // the historical explode + 128×min() aggregate path, over the same
     // modular shingle-hash space the native kernel now uses
-    val agg = Dedup.signatures(Dedup.modularShingleRows(docs))
+    val agg = Reference.minhashSignatures(docs)
       .collect()
       .map(r => r.getLong(0) -> (1 to 128).map(r.getLong(_)).toSeq)
       .toMap
@@ -129,6 +129,37 @@ class DedupSpec extends SparkSpec {
     native.foreach { case (id, sig) =>
       assert(sig == agg(id), s"signature mismatch for doc $id")
     }
+  }
+
+  test("native SimHashSignature matches the reference plan, compiled and interpreted") {
+    val s = spark
+    import s.implicits._
+    import graft.functions.SimHashSignature
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.functions.col
+    val edge = Seq("", " \t\n ", "one", "a a a b a",
+      "tab\tsep\nnew\r\nline\u000Bvt\ffeed", "héllo wörld 日本語 🙂 héllo",
+      "  lead and trail  ")
+    val sfDocs = graft.Tables.documents(s, sf01).select("doc_id", "text")
+      .as[(Long, String)].collect().toSeq
+    val docs = edge.zipWithIndex.map { case (t, i) => (-1L - i, t) } ++ sfDocs
+    // an RDD-backed frame: the projection runs in generated code, not
+    // folded into a local relation by the optimizer
+    val frame = s.sparkContext.parallelize(docs, 4).toDF("doc_id", "text")
+    val sigs = frame.select(col("doc_id"), SimHashSignature(col("text")).as("sig"))
+    assert(sigs.queryExecution.executedPlan
+      .find(_.isInstanceOf[WholeStageCodegenExec]).nonEmpty)
+    val compiled = sigs.as[(Long, Option[Long])].collect().toMap
+    val interpreted = docs.map { case (id, t) =>
+      id -> Option(SimHashSignature(Literal(t)).eval())
+        .map(_.asInstanceOf[Long])
+    }.toMap
+    assert(compiled === interpreted)
+    val ref = Reference.simhashSignatures(frame).as[(Long, Long)].collect().toMap
+    assert(compiled.collect { case (id, Some(sig)) => id -> sig } === ref)
+    // documents without tokens have no signature; all others do
+    assert(compiled.collect { case (id, None) => id }.toSet === Set(-1L, -2L))
   }
 
   test("connected components label a chain through pointer jumping") {

@@ -10,7 +10,7 @@ class FunctionsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val got = Seq("a b c d").toDF("text")
-      .select(TextFunctions.shingles(
+      .select(Reference.shingles(
         TextFunctions.wsTokens(col("text")), 3).as("sh"))
       .as[Seq[String]].head()
     assert(got == Seq("a b c", "b c d"))
@@ -20,7 +20,7 @@ class FunctionsSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val got = Seq("a b", "").toDF("text")
-      .select(TextFunctions.shingles(
+      .select(Reference.shingles(
         TextFunctions.wsTokens(col("text")), 3).as("sh"))
       .as[Seq[String]].collect()
     assert(got.forall(_.isEmpty), got.mkString(","))
@@ -182,7 +182,7 @@ class FunctionsSpec extends SparkSpec {
       .as[(Long, Seq[Int])].collect().toMap
     val folded = e.select(col("vec_id"),
         array((0 until 8).map(t =>
-          operators.Similarity.lshBucketFold(col("v"), t)): _*).as("b"))
+          Reference.lshBucketFold(col("v"), t)): _*).as("b"))
       .as[(Long, Seq[Int])].collect().toMap
     assert(native.keySet == folded.keySet)
     native.foreach { case (id, b) =>

@@ -1,6 +1,8 @@
 package graft
 
-import graft.operators.{Dedup, Similarity}
+import graft.operators.{Dedup, DriverRows, Similarity}
+import org.apache.spark.SpecBus
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Quality contracts for the approximate paths that the rows-only oracle
@@ -10,27 +12,15 @@ class SimilaritySpec extends SparkSpec {
   private val sf01 = "/root/testdata/sf0.01"
 
   test("simhash chunk bucketing is lossless for hamming <= 3") {
-    // pigeonhole: 4 chunks, <= 3 differing bits => >= 1 identical chunk,
-    // so the bucketed join must find EXACTLY the brute-force pair set
+    // pigeonhole: <= 3 differing bits leave >= 3 of the 6 blocks intact,
+    // and every 3-block combination is a table, so the bucketed join
+    // must find EXACTLY the brute-force pair set
     val s = spark
     import s.implicits._
-    val bits = Dedup.SimhashBits
     val bucketed = Dedup.simhash(s, sf01)
       .select("d1", "d2").as[(Long, Long)].collect().toSet
-    // recompute signatures the same way, brute-force all pairs in memory
-    val sigRows = graft.Tables.documents(s, sf01)
-      .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("tok"))
-      .filter(col("tok") =!= "")
-      .select(col("doc_id"),
-        graft.functions.TextFunctions.tokHash60(col("tok")).as("h"))
-      .groupBy("doc_id")
-      .agg((0 until bits).map(j =>
-        sum(shiftright(col("h"), j).bitwiseAND(lit(1L)) * 2L - 1L).as(s"s$j")).head,
-        (0 until bits).map(j =>
-          sum(shiftright(col("h"), j).bitwiseAND(lit(1L)) * 2L - 1L).as(s"s$j")).tail: _*)
-      .select(col("doc_id"),
-        (0 until bits).map(j =>
-          when(col(s"s$j") > 0, lit(1L << j)).otherwise(0L)).reduce(_ + _).as("sig"))
+    // reference-plan signatures, brute-force all pairs in memory
+    val sigRows = Reference.simhashSignatures(graft.Tables.documents(s, sf01))
       .as[(Long, Long)].collect()
     val brute = (for {
       (d1, s1) <- sigRows; (d2, s2) <- sigRows if d1 < d2
@@ -38,6 +28,91 @@ class SimilaritySpec extends SparkSpec {
     } yield (d1, d2)).toSet
     assert(bucketed == brute,
       s"missing=${(brute -- bucketed).take(3)} extra=${(bucketed -- brute).take(3)}")
+  }
+
+  /** One training path over `all` (under the driver-size guard, or
+    * planned): the centroids as raw double bits and every vector's
+    * cluster. */
+  private def trained(all: DataFrame, r: Similarity.Recipe,
+      planned: Boolean): (Seq[Seq[Long]], Map[Long, Int]) = {
+    val s = spark
+    import s.implicits._
+    val (cents, _) = DriverRows.distributedOnly.withValue(planned)(
+      Similarity.trainCentroids(all, r))
+    val assign = all.select(col("vec_id"), Similarity.bestCentroid(cents))
+      .as[(Long, Int)].collect().toMap
+    (cents.map(_.map(java.lang.Double.doubleToRawLongBits)), assign)
+  }
+
+  private def vecs(d: String): DataFrame = graft.Tables.embeddings(spark, d)
+    .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+
+  test("driver k-means training is bit-identical to the planned rounds") {
+    val s = spark
+    import s.implicits._
+    // sf0.01, then vectors built to hit the ordering's corners: seed 3 is
+    // the zero vector (its cosine is NaN, which sorts greatest), seeds 2
+    // and 5 are equal (every vector ties between them), vector 20 is zero
+    // too, and components of -0.0 are everywhere
+    def base(i: Int): Seq[Double] = (0 until 64).map { k =>
+      if ((i + k) % 5 == 0) -0.0 else ((i * 31 + k * 17) % 23 - 11) / 7.0
+    }
+    val corner = (0 until 60).map { i =>
+      i.toLong -> (if (i == 3 || i == 20) Seq.fill(64)(0.0)
+        else if (i == 5) base(2) else base(i))
+    }
+    val cornerDf = s.sparkContext.parallelize(corner, 3).toDF("vec_id", "v")
+    for ((name, all) <- Seq("sf0.01" -> vecs(sf01), "corners" -> cornerDf);
+         r <- Seq(Similarity.KmeansRecipe, Similarity.IvfRecipe)) {
+      val local = trained(all, r, planned = false)
+      val plan = trained(all, r, planned = true)
+      assert(local._1 === plan._1, s"$name/$r: centroids differ")
+      assert(local._2 === plan._2, s"$name/$r: assignments differ")
+    }
+  }
+
+  test("k-means over the driver-size cap trains on the planned rounds; " +
+      "an IVF sample stays on the driver") {
+    val over = spark.range(0, DriverRows.Cap + 1).select(
+      col("id").as("vec_id"),
+      array((0 until 64).map(k => sin(col("id") * (k + 1))): _*).as("v"))
+    val sc = spark.sparkContext
+    var guarded: (Seq[Seq[Double]], DataFrame) = null
+    var planned: (Seq[Seq[Double]], DataFrame) = null
+    val jobs = SpecBus.jobsDuring(sc) {
+      guarded = Similarity.trainCentroids(over, Similarity.KmeansRecipe)
+    }
+    val plannedJobs = SpecBus.jobsDuring(sc) {
+      planned = DriverRows.distributedOnly.withValue(true)(
+        Similarity.trainCentroids(over, Similarity.KmeansRecipe))
+    }
+    // the guard's one collect, then exactly the planned rounds
+    assert(jobs === plannedJobs + 1, s"$jobs jobs vs $plannedJobs planned")
+    assert(guarded._1 === planned._1)
+    // an IVF codebook trains on a ~2k-row sample, which the guard admits
+    // at any corpus size: a count, the sample's collect (a second job
+    // when the first partition holds too few rows) and, as the stride
+    // does not divide the seed stride here, one seed query
+    var ivf: Seq[Seq[Double]] = null
+    val ivfJobs = SpecBus.jobsDuring(sc) {
+      ivf = Similarity.trainCentroids(over, Similarity.IvfRecipe)._1
+    }
+    var ivfPlanned: Seq[Seq[Double]] = null
+    val ivfPlannedJobs = SpecBus.jobsDuring(sc) {
+      ivfPlanned = DriverRows.distributedOnly.withValue(true)(
+        Similarity.trainCentroids(over, Similarity.IvfRecipe))._1
+    }
+    assert(ivfJobs <= 4 && ivfJobs < ivfPlannedJobs,
+      s"IVF training over the cap ran $ivfJobs jobs ($ivfPlannedJobs planned)")
+    assert(ivf === ivfPlanned)
+  }
+
+  test("sim_kmeans runs at most 3 Spark jobs at sf0.01") {
+    val s = spark
+    val jobs = SpecBus.jobsDuring(s.sparkContext) {
+      Similarity.kmeans(s, sf01).collect()
+    }
+    assert(jobs <= 3, s"sim_kmeans ran $jobs jobs")
   }
 
   test("LSH ANN finds at least half of the exact top-k at sf0.01") {
