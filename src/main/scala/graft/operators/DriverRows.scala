@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.sources.ManifestPrune
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -19,9 +18,8 @@ import org.apache.spark.sql.types.StructType
   * broadcast would be unmeasured, so it plans none. */
 private[graft] object DriverRows {
 
-  /** The most rows the guard admits — [[ManifestPrune.InSetCap]], the
-    * same bound under which a key set still prunes file by file. */
-  val Cap: Int = ManifestPrune.InSetCap
+  /** The most rows the guard admits. */
+  val Cap: Int = 10000
 
   /** Test seam: inside `distributedOnly.withValue(true)` every frame
     * reads as above the guard, so a spec can run both paths over the

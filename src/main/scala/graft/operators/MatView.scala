@@ -1536,17 +1536,17 @@ object MatView {
     * published change feeds: one plain `DELETE FROM` on the base and
     * every MV over it refuses refresh FOREVER (the loud contract) —
     * honest, but it forces recompute for the most ordinary retention
-    * job there is. `cdc = true` on [[TxnTable.deleteWhere]]/
-    * [[TxnTable.deleteIn]] stages every deleted row (w = −1) as a
-    * signed feed IN the delete commit — naming the rows costs reading
-    * the dropped files too, the price of an exact feed, paid only on
-    * request. The scenario runs the retention double-header: a
-    * contiguous range delete (file-pruned — whole files drop, boundary
-    * files rewrite) and a scattered id-list delete (per-value verdicts;
-    * at sf0.1 the list exceeds the 10k fold so the envelope path
-    * publishes too), then ONE refresh folds BOTH feeds. `mvdel_ok`
-    * pins: two commits folded, both carrying `#cdc=` refs, the range
-    * delete really dropped whole files and kept others verbatim.
+    * job there is. `cdc = true` on [[TxnTable.delete]] stages every
+    * deleted row (w = −1) as a signed feed IN the delete commit —
+    * naming the rows costs reading the dropped files too, the price of
+    * an exact feed, paid only on request. The scenario runs the
+    * retention double-header: a contiguous range delete (file-pruned —
+    * whole files drop, boundary files rewrite) and a scattered id-list
+    * delete (`isin`; per-member file verdicts, one binary search per
+    * file however long the list), then ONE refresh folds BOTH feeds.
+    * `mvdel_ok` pins: two commits folded, both carrying `#cdc=` refs,
+    * the range delete really dropped whole files and kept others
+    * verbatim.
     * Hashed output = the refreshed MV, oracle = direct recompute of
     * the retained base. At 100 TB: retention DELETEs flow into every
     * downstream MV at O(deleted rows), never O(base rescan). */
@@ -1566,12 +1566,11 @@ object MatView {
     val cut = kmin + (kmax - kmin + 1) / 5
     // retention pass 1: drop everything below the cut (the age-out
     // shape) — contiguous, so the clustered layout drops whole files
-    val r1 = TxnTable.deleteWhere(s, base,
-      Seq(("o_orderkey", Long.MinValue, cut - 1)), Nil, cdc = true)
+    val r1 = TxnTable.delete(s, base, k <= cut - 1, cdc = true)
     // retention pass 2: a scattered id list (the GDPR shape)
     val ids = src.filter(pmod(k, lit(9)) === 0).select(k)
       .collect().map(_.getLong(0)).toSeq
-    val r2 = TxnTable.deleteIn(s, base, "o_orderkey", ids, cdc = true)
+    val r2 = TxnTable.delete(s, base, k.isin(ids: _*), cdc = true)
     val r = refresh(s, mv)
     val ok = r.commitsFolded == 2 && r.baseVersion == 2L &&
       TxnTable.manifest(s, base, r1.version).cdcRefs.nonEmpty &&

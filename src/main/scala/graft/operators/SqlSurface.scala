@@ -207,22 +207,22 @@ object SqlSurface {
   }
 
   /** sql_txn_delete_in: the GDPR-ID-LIST DELETE — `DELETE FROM t WHERE
-    * k IN (v1..vn)` routed through PER-VALUE manifest verdicts
-    * ([[graft.operators.TxnTable.deleteIn]]): a range fold would span
-    * [min(vs), max(vs)] — nearly the whole table for a scattered id
-    * list — while per-value verdicts touch only the files some member
-    * can actually reach. Four single-file quarter inserts give every
-    * file a tight key box; the id list is every 31st key of QUARTER 2
-    * only, so the delete must keep the other three quarters VERBATIM
-    * (same entry lines before and after — never listed or opened),
-    * rewrite exactly the quarter-2 file + the stat-less create
-    * sentinel, and drop nothing; the three-way (drop/rewrite/keep)
-    * accounting rides the commit's `#metrics=` header and `din_ok`
-    * pins it, plus the carried-verbatim entry check. Hashed output =
-    * the surviving rows; the oracle replays the same id arithmetic.
-    * At 100 TB: deleting 10k scattered ids costs O(files the ids
-    * live in), not O(table) — with >10k ids folding to the envelope
-    * so planning itself stays O(#files). */
+    * k IN (v1..vn)` compiled to [[graft.operators.TxnTable.delete]],
+    * whose file verdicts for an IN list are PER MEMBER (the read path's
+    * IN test): a range fold would span [min(vs), max(vs)] — nearly the
+    * whole table for a scattered id list — while per-member verdicts
+    * touch only the files some member can actually reach. Four
+    * single-file quarter inserts give every file a tight key box; the
+    * id list is every 31st key of QUARTER 2 only, so the delete must
+    * keep the other three quarters AND the zero-row create sentinel
+    * VERBATIM (same entry lines before and after — never listed or
+    * opened), rewrite exactly the quarter-2 file, and drop nothing; the
+    * three-way (drop/rewrite/keep) accounting rides the commit's
+    * `#metrics=` header and `din_ok` pins it, plus the
+    * carried-verbatim entry check. Hashed output = the surviving rows;
+    * the oracle replays the same id arithmetic. At 100 TB: deleting
+    * 10k scattered ids costs O(files the ids live in), not O(table),
+    * and planning one binary search per file. */
   def txnDeleteIn(s: SparkSession, d: String): DataFrame = {
     val loc = freshSqlTable(s, "din_orders")
     view(s, d, "orders")
@@ -254,17 +254,17 @@ object SqlSurface {
     val v = graft.operators.TxnTable.currentVersion(s, loc)
     val mAfter = graft.operators.TxnTable.manifest(s, loc, v)
     val metrics = graft.operators.TxnTable.commitMetrics(s, loc, v)
-    // kept = quarters 1/3/4 carried BYTE-VERBATIM; rewritten = the
-    // quarter-2 file + the stat-less create sentinel (conservative);
-    // dropped = none (no single-point file here)
+    // kept = quarters 1/3/4 and the zero-row create sentinel carried
+    // BYTE-VERBATIM; rewritten = the quarter-2 file; dropped = none (no
+    // single-point file here)
     val afterLines = mAfter.entries.map(graft.operators.TxnTable.render)
       .toSet
-    // exactly the three untouched quarter files carry byte-verbatim
-    // (the rewritten quarter-2 file and the sentinel do not)
-    val carried = (before.toSet & afterLines).size == 3
+    // exactly the three untouched quarter files and the sentinel carry
+    // byte-verbatim (the rewritten quarter-2 file does not)
+    val carried = (before.toSet & afterLines).size == 4
     val ok = ids.nonEmpty &&
-      metrics.get("kept").contains(3L) &&
-      metrics.get("rewritten").contains(2L) &&
+      metrics.get("kept").contains(4L) &&
+      metrics.get("rewritten").contains(1L) &&
       metrics.get("dropped").contains(0L) &&
       carried
     s.sql("SELECT o_orderkey, o_orderstatus, " +
@@ -274,17 +274,17 @@ object SqlSurface {
 
   /** sql_txn_delete_in_str: the STRING-keyed GDPR-id-list DELETE — the
     * real retraction list is UUIDs/URLs/emails, not longs.
-    * `CALL graft.system.delete_in(t, 'uid', 'u…,u…', true)` routes by
-    * the key column's type to [[graft.operators.TxnTable.deleteInStr]]:
-    * the same per-value verdict algebra as sql_txn_delete_in, run over
-    * the manifest's TRUNCATED string stats in UTF-8 binary order
+    * `CALL graft.system.delete_in(t, 'uid', 'u…,u…', true)` builds one
+    * `isin` over the key column's type for [[graft.operators.TxnTable
+    * .delete]]: the same per-member verdicts as sql_txn_delete_in, run
+    * over the manifest's TRUNCATED string stats in UTF-8 binary order
     * (conservative boxes — over-touch possible, misses impossible; the
     * single-point metadata drop stays sound because lo == hi == v pins
     * every row). Four single-file quarter inserts of a zero-padded
     * synthetic uid (lexicographic == key order, so the quarters carry
     * tight string boxes); the id list is every 31st key of QUARTER 2 as
-    * uids — the other three quarters must carry BYTE-VERBATIM, the
-    * quarter-2 file + the stat-less create sentinel rewrite, nothing
+    * uids — the other three quarters and the zero-row create sentinel
+    * must carry BYTE-VERBATIM, the quarter-2 file rewrites, nothing
     * drops. `cdc = true` stages the deleted rows as a signed feed IN
     * the delete commit, and ONE MatView.refresh folds it — string-keyed
     * retraction flows into downstream MVs exactly like op_mv_delete.
@@ -328,7 +328,7 @@ object SqlSurface {
     val metrics = graft.operators.TxnTable.commitMetrics(s, loc, v)
     val afterLines = mAfter.entries.map(graft.operators.TxnTable.render)
       .toSet
-    val carried = (before.toSet & afterLines).size == 3
+    val carried = (before.toSet & afterLines).size == 4
     // the signed feed folds into the MV: string-keyed retraction
     // reaches downstream views at O(feed)
     val r = graft.operators.MatView.refresh(s, mv)
@@ -347,8 +347,8 @@ object SqlSurface {
         .toSet
     }
     val ok = ids.nonEmpty &&
-      metrics.get("kept").contains(3L) &&
-      metrics.get("rewritten").contains(2L) &&
+      metrics.get("kept").contains(4L) &&
+      metrics.get("rewritten").contains(1L) &&
       metrics.get("dropped").contains(0L) &&
       carried && mAfter.cdcRefs.nonEmpty &&
       r.commitsFolded == 1 && mvRows == direct
@@ -3906,12 +3906,12 @@ object SqlSurface {
   }
 
   /** sql_txn_delete: file-pruned DELETE as PURE SQL TEXT — `DELETE FROM
-    * graft.q.del_orders WHERE k BETWEEN …` routed through the catalog to
-    * [[TxnTable.deleteRange]]. Four quarter-slice single-file inserts
-    * give every file a tight key range; deleting exactly the second
-    * quarter must DROP that file from the manifest without reading it
-    * (≤1 rewrite: the zero-row create sentinel carries no stats and
-    * rewrites conservatively, disappearing in the process). Hashed
+    * graft.q.del_orders WHERE k >= … AND k <= …` compiled to
+    * [[TxnTable.delete]]. Four quarter-slice single-file inserts give
+    * every file a tight key range; deleting exactly the second quarter
+    * must DROP that file from the manifest without reading it, rewrite
+    * nothing, and keep the other quarters and the zero-row create
+    * sentinel verbatim (no row of the sentinel can match). Hashed
     * output = the survivors (the quarter rule is oracle-replayable);
     * `del_ok` asserts the accounting and the audit trail. */
   def txnDelete(s: SparkSession, d: String): DataFrame = {
@@ -3939,8 +3939,8 @@ object SqlSurface {
     // header — in the log, not a session global
     val res = TxnTable.commitMetrics(s, loc)
     val trail = TxnTable.history(s, loc).map(_._2)
-    val ok = res("dropped") == 1 && res("rewritten") <= 1 &&
-      res("kept") == 3 &&
+    val ok = res("dropped") == 1 && res("rewritten") == 0 &&
+      res("kept") == 4 &&
       trail == Seq("create", "append", "append", "append", "append", "delete")
     s.sql("""SELECT o_orderkey, o_orderstatus, CAST(price AS DOUBLE) AS price
       FROM graft.q.del_orders""")
@@ -3948,16 +3948,16 @@ object SqlSurface {
   }
 
   /** sql_txn_delete_str: file-pruned DELETE keyed on a STRING column —
-    * `DELETE FROM graft.q.t WHERE st = '…'` routed through the catalog
-    * to [[TxnTable.deleteWhere]]'s string bounds, pruning from the
-    * manifest's TRUNCATED string stats (conservative by construction:
-    * recorded lo ≤ true min, recorded hi ≥ true max, so a metadata-only
-    * drop under truncation is still exact). Per-status single-file
-    * inserts give each file a single-value [st, st] range; deleting one
-    * status must DROP exactly that file without reading it (≤1 rewrite:
-    * the stat-less create sentinel), keep the others verbatim. Hashed
-    * output = the survivors (the status rule is oracle-replayable);
-    * `dstr_ok` asserts the accounting and the audit trail. */
+    * `DELETE FROM graft.q.t WHERE st = '…'` compiled to
+    * [[TxnTable.delete]], pruning from the manifest's TRUNCATED string
+    * stats (conservative by construction: recorded lo ≤ true min,
+    * recorded hi ≥ true max, so a metadata-only drop under truncation is
+    * still exact). Per-status single-file inserts give each file a
+    * single-value [st, st] range; deleting one status must DROP exactly
+    * that file without reading it, rewrite nothing, and keep the other
+    * files and the zero-row create sentinel verbatim. Hashed output =
+    * the survivors (the status rule is oracle-replayable); `dstr_ok`
+    * asserts the accounting and the audit trail. */
   def txnDeleteStr(s: SparkSession, d: String): DataFrame = {
     val loc = freshSqlTable(s, "ds_orders")
     view(s, d, "orders")
@@ -3979,8 +3979,8 @@ object SqlSurface {
     s.sql(s"DELETE FROM graft.q.ds_orders WHERE st = '$victim'")
     val res = TxnTable.commitMetrics(s, loc)
     val trail = TxnTable.history(s, loc).map(_._2)
-    val ok = res("dropped") == 1 && res("rewritten") <= 1 &&
-      res("kept") == statuses.size - 1 &&
+    val ok = res("dropped") == 1 && res("rewritten") == 0 &&
+      res("kept") == statuses.size &&
       trail == Seq("create") ++ statuses.map(_ => "append") :+ "delete"
     s.sql("""SELECT o_orderkey, st, CAST(price AS DOUBLE) AS price
       FROM graft.q.ds_orders""")
@@ -4047,15 +4047,15 @@ object SqlSurface {
   }
 
   /** sql_txn_delete_multi: MULTI-COLUMN DELETE conjunction — `WHERE k
-    * BETWEEN a AND b AND st = '…'` where only `k` is indexed: the key
+    * >= a AND k <= b AND st = '…'` where only `k` is indexed: the key
     * bounds PRUNE files from manifest stats (quarters outside the range
-    * keep their lines verbatim, never listed or opened), and the status
-    * conjunct — no stats — rides into the surviving files' rewrite as a
-    * RESIDUAL filter. Nothing can be dropped metadata-only (the stats
-    * can't prove every row of the quarter file matches the status), so
-    * the accounting must read dropped=0 / kept=3 / rewritten≤2 (the
-    * quarter file + the stat-less sentinel). Hashed output = the
-    * survivors (quarter-cut + status rules are oracle-replayable);
+    * and the zero-row create sentinel keep their lines verbatim, never
+    * listed or opened), and the status conjunct — no stats — rides into
+    * the surviving file's rewrite as a RESIDUAL filter. Nothing can be
+    * dropped metadata-only (the stats can't prove every row of the
+    * quarter file matches the status), so the accounting must read
+    * dropped=0 / kept=4 / rewritten=1 (the quarter file). Hashed output
+    * = the survivors (quarter-cut + status rules are oracle-replayable);
     * `dmulti_ok` asserts accounting, trail, and the survivor count. */
   def txnDeleteMulti(s: SparkSession, d: String): DataFrame = {
     val loc = freshSqlTable(s, "dm_orders")
@@ -4085,8 +4085,8 @@ object SqlSurface {
       "AND st = 'O'")
     val res = TxnTable.commitMetrics(s, loc)
     val trail = TxnTable.history(s, loc).map(_._2)
-    val ok = res("dropped") == 0 && res("rewritten") <= 2 &&
-      res("kept") == 3 &&
+    val ok = res("dropped") == 0 && res("rewritten") == 1 &&
+      res("kept") == 4 &&
       cnt("SELECT COUNT(*) AS n FROM graft.q.dm_orders") == nBase - nDead &&
       trail == Seq("create", "append", "append", "append", "append", "delete")
     s.sql("""SELECT o_orderkey, st, CAST(price AS DOUBLE) AS price

@@ -2395,7 +2395,7 @@ object TxnTable {
             // in UTF-8 order), mirroring the integral convention: the
             // group must still be EMITTED — omitting it would render a
             // path-only line that the zero-row-file filter in merge/
-            // deleteRange (no TAB ⇒ zero rows) would silently drop,
+            // delete (no TAB ⇒ zero rows) would silently drop,
             // losing live rows
             if (r.isNullAt(r.fieldIndex(s"slo_$c")))
               StrStat(c, "", "", r.getAs[Long](s"snn_$c"))
@@ -2680,115 +2680,67 @@ object TxnTable {
     def total: Int = touched + untouched
   }
 
-  /** Outcome of a file-pruned [[deleteRange]]: `dropped` files were
-    * removed from the manifest WITHOUT being read (their whole key range
-    * fell inside the predicate — metadata-only deletion), `rewritten`
-    * were filtered and re-staged, `kept` carried verbatim. */
+  /** Outcome of a file-pruned [[delete]]: `dropped` files were removed
+    * from the manifest WITHOUT being read (every row matched — metadata-
+    * only deletion), `rewritten` were filtered and re-staged, `kept`
+    * carried verbatim. */
   case class DeleteResult(version: Long, dropped: Int, rewritten: Int,
       kept: Int) {
     def total: Int = dropped + rewritten + kept
   }
 
-  /** One-sided string bound: (value, inclusive). */
-  type StrBound = Option[(String, Boolean)]
-
-  /** File-pruned DELETE of the key range [lo, hi] — the single-integral-
-    * column shape, delegating to the general [[deleteWhere]]. */
-  def deleteRange(s: SparkSession, table: String, key: String,
-                  lo: Long, hi: Long): DeleteResult =
-    deleteWhere(s, table, Seq((key, lo, hi)), Nil)
-
-  /** File-pruned DELETE of an arbitrary RANGE/EQUALITY CONJUNCTION over
-    * integral and string columns: per dimension, the manifest's per-file
-    * stats give a verdict — provably DISJOINT ('k'), provably FULLY
-    * COVERED with zero nulls ('d'), or unknown ('u') — and the verdicts
-    * compose across dimensions: any disjoint dimension keeps the file
-    * VERBATIM (never listed, opened, or read), all-covered drops it as
-    * pure metadata, anything else rewrites it with the FULL predicate as
-    * residual filter. Bounds on columns the manifest does not index
-    * yield 'u' everywhere — they never prune, but the indexed columns in
-    * the same conjunction still do, so `WHERE k BETWEEN a AND b AND
-    * status = 'X'` touches only the files k's stats can reach. String
-    * bounds carry per-side inclusivity and are tested against the
-    * TRUNCATED manifest bounds, which are conservative by construction
-    * (recorded lo ≤ true min, recorded hi ≥ true max — see [[StrStat]]):
-    * a drop decision under truncated stats is still exact. Copy-on-write
-    * as always: pinned readers of older versions still see the deleted
-    * rows until vacuum. */
-  def deleteWhere(s: SparkSession, table: String,
-      intBounds: Seq[(String, Long, Long)],
-      strBounds: Seq[(String, StrBound, StrBound)],
+  /** File-pruned copy-on-write DELETE of the rows where `pred` holds —
+    * the one delete every caller (SQL `DELETE FROM`, `CALL delete_in`,
+    * the library) goes through. `pred` is resolved once against the
+    * current snapshot (logical names), its constants folded, and its
+    * columns renamed to the physical names the stat groups speak; then
+    * the read rule's own stats algebra gives each live file a verdict:
+    * files [[ManifestPrune.keep]] proves free of matching rows (ranges,
+    * strings, bucketN/days transforms, blooms, IN members, the zero-row
+    * sentinel) carry VERBATIM — never listed, opened or read; files
+    * [[ManifestPrune.covers]] proves wholly matching drop as pure
+    * metadata; the rest are rewritten keeping the rows where `pred` is
+    * FALSE or NULL (SQL three-valued logic — a NULL never deletes). A
+    * predicate the stats cannot answer just rewrites more files, never
+    * a wrong one. `cdc = true` publishes every deleted row (w = −1) as
+    * the commit's feed. Copy-on-write as always: pinned readers of older
+    * versions still see the deleted rows until vacuum. */
+  def delete(s: SparkSession, table: String, pred: Column,
       cdc: Boolean = false): DeleteResult = {
-    require(intBounds.nonEmpty || strBounds.nonEmpty,
-      "deleteWhere needs at least one column bound (no-WHERE truncation " +
-        "is the caller's empty-overwrite path)")
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
+      RowOrdering}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
     val cur = currentVersion(s, table)
     val m = manifest(s, table, cur) // ONE log read for all facets below
-    // stat groups speak PHYSICAL names; predicate columns arrive logical
+    val plan = snapshot(s, table, cur).filter(pred).queryExecution.analyzed
+    val resolved = plan match {
+      case Filter(c, _) => c
+      case p => throw new IllegalArgumentException(
+        s"$table: DELETE needs a row predicate, got $p")
+    }
+    // an analyzed SQL predicate compares through casts of its literals
+    // (`k >= CAST(100 AS BIGINT)`); folded, they are the literals the
+    // stats compare with — what the read rule sees after optimization
+    val folded = org.apache.spark.sql.catalyst.optimizer.ConstantFolding(
+      Filter(resolved, LocalRelation(resolved.references.toSeq)))
+      .expressions.head
+    // stat groups speak PHYSICAL names; the predicate arrives logical
     val pm = physMap(m)
-    // a provably-EMPTY integral bound (conflicting equalities) matches
-    // no row anywhere: every file keeps verbatim
-    val emptyBound = intBounds.exists { case (_, lo, hi) => lo > hi }
-    def intSide(e: Entry, lc: String, lo: Long, hi: Long): Char = {
-      val c = pm.getOrElse(lc, lc)
-      e.statFor(c) match {
-        // an empty recorded range (all-null file) holds no VALUES a
-        // value predicate could match — keep it verbatim
-        case Some((fLo, fHi)) if fLo > fHi => 'k'
-        case Some((fLo, fHi)) if fHi < lo || fLo > hi => 'k'
-        case Some((fLo, fHi)) if fLo >= lo && fHi <= hi &&
-          e.nullsFor(c).forall(_ == 0L) => 'd'
-        case _ => 'u'
-      }
-    }
-    def strSide(e: Entry, lc: String, lo: StrBound, hi: StrBound): Char = {
-      val c = pm.getOrElse(lc, lc)
-      e.strStats.collectFirst { case st @ StrStat(`c`, _, _, _) => st } match {
-        case Some(StrStat(_, fLo, fHi, nulls)) =>
-          // disjoint: the file's whole (true) range falls strictly on one
-          // side of the query range — conservative under truncation
-          // because fLo ≤ trueMin and fHi ≥ trueMax
-          val below = lo.exists { case (v, inc) =>
-            val cmp = u8cmp(fHi, v); if (inc) cmp < 0 else cmp <= 0 }
-          val above = hi.exists { case (v, inc) =>
-            val cmp = u8cmp(fLo, v); if (inc) cmp > 0 else cmp >= 0 }
-          if (u8cmp(fLo, fHi) > 0 || below || above) 'k'
-          else {
-            val inLo = lo.forall { case (v, inc) =>
-              val cmp = u8cmp(fLo, v); if (inc) cmp >= 0 else cmp > 0 }
-            val inHi = hi.forall { case (v, inc) =>
-              val cmp = u8cmp(fHi, v); if (inc) cmp <= 0 else cmp < 0 }
-            if (inLo && inHi && nulls == 0L) 'd' else 'u'
-          }
-        case None => 'u'
-      }
-    }
-    def side(e: Entry): Char =
-      if (emptyBound) 'k'
-      else {
-        val dims = intBounds.map { case (c, lo, hi) => intSide(e, c, lo, hi) } ++
-          strBounds.map { case (c, lo, hi) => strSide(e, c, lo, hi) }
-        if (dims.contains('k')) 'k'
-        else if (dims.forall(_ == 'd')) 'd'
-        else 'u'
-      }
-    // the FULL predicate, rebuilt from the parsed bounds (the rebuild is
-    // lossless: the caller normalized the conjunction into exactly these
-    // bounds) — the rewrite keeps rows where it is FALSE or NULL (SQL
-    // three-valued logic — a null key is never deleted)
-    val pred = coalesce((intBounds.map { case (c, lo, hi) =>
-        (if (lo == Long.MinValue) lit(true) else col(c) >= lo) &&
-          (if (hi == Long.MaxValue) lit(true) else col(c) <= hi)
-      } ++ strBounds.map { case (c, lo, hi) =>
-        lo.map { case (v, inc) => if (inc) col(c) >= v else col(c) > v }
-          .getOrElse(lit(true)) &&
-          hi.map { case (v, inc) => if (inc) col(c) <= v else col(c) < v }
-            .getOrElse(lit(true))
-      }).reduce(_ && _), lit(false))
-    val primary = intBounds.headOption.map(_._1)
-      .getOrElse(strBounds.head._1)
-    deleteFinish(s, table, cur, m, primary, m.entries.map(e => e -> side(e)),
-      _.filter(!pred), cdc, pred)
+    val phys = Seq(folded.transform {
+      case a: AttributeReference => a.withName(pm.getOrElse(a.name, a.name))
+    })
+    val may = ManifestPrune.keep(m.entries, phys, m.blooms,
+      bloomProbe(s, table, _, _),
+      m.idxCols.nonEmpty || m.strIdxCols.nonEmpty).toSet
+    val all = ManifestPrune.covers(phys)
+    val verdicts = m.entries.map(e =>
+      e -> (if (!may(e)) 'k' else if (all(e)) 'd' else 'u'))
+    // rewritten survivors cluster on the first orderable column the
+    // predicate names
+    val key = resolved.collectFirst { case a: AttributeReference
+      if RowOrdering.isOrderable(a.dataType) => a.name }
+    deleteFinish(s, table, cur, m, key, verdicts,
+      coalesce(pred, lit(false)), cdc)
   }
 
   /** Marks a commit that PROVABLY changed no rows: either the
@@ -2824,7 +2776,7 @@ object TxnTable {
   }
 
   /** The signed feed of a copy-on-write DELETE (`cdc = true` on
-    * [[deleteWhere]]/[[deleteIn]]): every deleted row with w = −1 —
+    * [[delete]]): every deleted row with w = −1 —
     * what lets an incremental consumer ([[MatView.refresh]] especially)
     * fold a DELETE instead of refusing or rescanning the base. Naming
     * the rows costs reading the DROPPED files too, and boundary
@@ -2851,181 +2803,26 @@ object TxnTable {
       .getOrElse(Nil)
   }
 
-  /** File-pruned DELETE of an explicit VALUE SET over one integral
-    * column — the GDPR-id-list shape `DELETE FROM t WHERE k IN
-    * (v1..vn)`. A range is the wrong tool here: [min(vs), max(vs)]
-    * spans nearly the whole table for a scattered id list, while
-    * PER-VALUE verdicts touch only the files some member can actually
-    * reach. Per file and per value, every stat dimension answers:
-    * range/z-order stats say v may live there only if lo ≤ v ≤ hi;
-    * a `bucketN(key)` transform layout (where raw ranges prune
-    * nothing) says so only if [[bucketOf]](v) lands in the file's
-    * bucket box — the sql_txn_dpp IN-set logic, write-side. Verdicts
-    * compose conservatively: no member reaches the file → kept
-    * VERBATIM (never listed or opened); a single-point file [v, v]
-    * with v in the set and zero nulls → dropped as pure metadata;
-    * anything else rewrites with the exact residual (null keys always
-    * survive — SQL IN three-valued logic). Copy-on-write as always:
-    * pinned readers see the deleted rows until vacuum. */
-  def deleteIn(s: SparkSession, table: String, key: String,
-      values: Seq[Long], cdc: Boolean = false): DeleteResult = {
-    require(values.nonEmpty,
-      "deleteIn needs at least one value (an empty IN-list deletes " +
-        "nothing — make the no-op explicit at the call site)")
-    val cur = currentVersion(s, table)
-    val m = manifest(s, table, cur)
-    val pm = physMap(m)
-    val pc = pm.getOrElse(key, key)
-    val vset = values.distinct.sorted.toIndexedSeq
-    val folded = vset.size > ManifestPrune.InSetCap
-    val (envLo, envHi) = (vset.head, vset.last)
-    // the members' bucket images, computed ONCE per spec: bucketOf maps
-    // into [0, n), so each image set is ≤ n values however long the id
-    // list — the per-file probe below is O(n), never O(#values)
-    val bucketImages: Seq[(String, Set[Long])] = m.idxCols.collect {
-      case sp @ BucketSpec(n, `pc`) if !folded =>
-        sp -> vset.map(bucketOf(_, n.toInt)).toSet
-    }
-    def side(e: Entry): Char = {
-      val range: Char = e.statFor(pc) match {
-        case Some((fLo, fHi)) if fLo > fHi => 'k' // all-null file
-        case Some((fLo, fHi)) =>
-          val mayHold =
-            if (folded) !(envHi < fLo || envLo > fHi)
-            // vset is sorted: probe the window [fLo, fHi] by search
-            else {
-              val from = lowerBound(vset, fLo)
-              from < vset.size && vset(from) <= fHi
-            }
-          if (!mayHold) 'k'
-          // single-point file: mayHold on [v, v] means v IS a member,
-          // so with zero nulls every row matches — pure-metadata drop
-          else if (!folded && fLo == fHi &&
-            e.nullsFor(pc).forall(_ == 0L)) 'd'
-          else 'u'
-        case None => 'u'
-      }
-      if (range == 'k') return 'k'
-      // the bucket dimension can only STRENGTHEN a keep: a file whose
-      // bucket box no member's bucket image reaches holds none of them
-      val bucketKeeps = bucketImages.exists { case (sp, bs) =>
-        e.statFor(sp).exists { case (bLo, bHi) =>
-          bLo <= bHi && !bs.exists(b => b >= bLo && b <= bHi) }
-      }
-      if (bucketKeeps) 'k' else range
-    }
-    val verdicts = m.entries.map(e => e -> side(e))
-    deleteFinish(s, table, cur, m, key, verdicts,
-      surviveNotIn(s, _, key, folded, vset,
-        org.apache.spark.sql.types.LongType),
-      cdc, coalesce(col(key).isin(vset: _*), lit(false)))
-  }
-
-  /** Survivors of an IN-delete: rows whose key is NOT a member — a NULL
-    * key makes `k IN (...)` NULL, which DELETE must NOT act on. Small
-    * sets stay a codegen'd isin; oversized sets ship as a broadcast
-    * anti-join instead of a 10k-literal expression tree (null keys
-    * never match an equi-join, so they survive identically). ONE body
-    * for both key types — the per-type drift this prevents is exactly
-    * how the string path's null-guard bug crept in. */
-  private def surviveNotIn(s: SparkSession, prev: DataFrame, key: String,
-      folded: Boolean, values: Seq[Any],
-      dt: org.apache.spark.sql.types.DataType): DataFrame =
-    if (!folded) prev.filter(!coalesce(col(key).isin(values: _*),
-      lit(false)))
-    else {
-      val vdf = s.createDataFrame(
-        s.sparkContext.parallelize(
-          values.map(org.apache.spark.sql.Row(_)), 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("__graft_in_v", dt))))
-      prev.join(broadcast(vdf),
-        prev(key) === col("__graft_in_v"), "left_anti")
-    }
-
-  /** [[deleteIn]] for a STRING key — the real GDPR id list is usually
-    * UUIDs/URLs/emails, and the table format already keeps truncated
-    * string stats (strIdxCols). The same per-value verdict algebra in
-    * UTF-8 binary order (u8cmp — Spark's own string comparison, the
-    * order the manifest bounds are recorded in): the recorded box is
-    * conservative (lo ≤ true min, hi ≥ true max after truncation), so
-    * the sorted-window probe can only over-touch, never miss; the
-    * single-point metadata drop stays SOUND under truncation because
-    * lo == hi == v forces every row to equal v exactly. Sets past
-    * [[ManifestPrune.InSetCap]] fold to the envelope for verdicts while the
-    * residual and the feed stay exact. */
-  def deleteInStr(s: SparkSession, table: String, key: String,
-      values: Seq[String], cdc: Boolean = false): DeleteResult = {
-    require(values.nonEmpty,
-      "deleteInStr needs at least one value (an empty IN-list deletes " +
-        "nothing — make the no-op explicit at the call site)")
-    require(values.forall(_ != null),
-      "deleteInStr values must be non-null (IN (..., NULL) never " +
-        "matches under three-valued logic — drop the NULL at the call " +
-        "site)")
-    val cur = currentVersion(s, table)
-    val m = manifest(s, table, cur)
-    val pc = physMap(m).getOrElse(key, key)
-    val u8 = Ordering.fromLessThan[String](u8cmp(_, _) < 0)
-    val vset = values.distinct.sorted(u8).toIndexedSeq
-    val folded = vset.size > ManifestPrune.InSetCap
-    val (envLo, envHi) = (vset.head, vset.last)
-    // a STRING key's null count lives in StrStat — the integral
-    // nullsFor reads ColStat and would be vacuously absent here,
-    // turning the metadata-drop guard into a NULL-row eater
-    def strNulls(e: Entry): Option[Long] =
-      e.strStats.collectFirst { case StrStat(`pc`, _, _, n) => n }
-    // an ALL-NULL string column records ("", "") bounds (the group must
-    // be emitted — see statGroupsByFile); no dedicated sentinel branch
-    // is needed: only the member "" can probe into ["", ""], and the
-    // null-aware drop guard below demotes that case to a rewrite whose
-    // exact residual keeps every NULL row
-    def side(e: Entry): Char = e.strStatFor(pc) match {
-      case Some((fLo, fHi)) =>
-        val mayHold =
-          if (folded) !(u8cmp(envHi, fLo) < 0 || u8cmp(envLo, fHi) > 0)
-          else {
-            val from = lowerBoundStr(vset, fLo)
-            from < vset.size && u8cmp(vset(from), fHi) <= 0
-          }
-        if (!mayHold) 'k'
-        // the pure-metadata drop needs a KNOWN zero null count: with
-        // nulls present, `v IN (...)` is NULL for those rows and DELETE
-        // must keep them — rewrite with the exact residual instead
-        else if (!folded && fLo == fHi && strNulls(e).exists(_ == 0L))
-          'd'
-        else 'u'
-      case None => 'u'
-    }
-    val verdicts = m.entries.map(e => e -> side(e))
-    deleteFinish(s, table, cur, m, key, verdicts,
-      surviveNotIn(s, _, key, folded, vset,
-        org.apache.spark.sql.types.StringType),
-      cdc, coalesce(col(key).isin(vset: _*), lit(false)))
-  }
-
-  /** The shared copy-on-write DELETE tail of [[deleteWhere]],
-    * [[deleteIn]] and [[deleteInStr]]: apply the per-file verdicts
-    * (k kept verbatim / d pure-metadata drop / u rewrite with the exact
-    * residual), stage, publish the exact feed on request, commit with
-    * the three-way accounting. Rewritten files read through
-    * [[readEntries]] with the COMMITTED schema: pending sequenced
-    * tombstones apply during the rewrite (the fresh files' seq then
-    * escapes them), and a column added by appendEvolve survives. */
+  /** The copy-on-write tail of [[delete]]: apply the per-file verdicts
+    * (k kept verbatim / d pure-metadata drop / u rewrite keeping the rows
+    * where `deleted` is false), stage, publish the exact feed on
+    * request, commit with the three-way accounting. Rewritten files read
+    * through [[readEntries]] with the COMMITTED schema: pending
+    * sequenced tombstones apply during the rewrite (the fresh files' seq
+    * then escapes them), and a column added by appendEvolve survives. */
   private def deleteFinish(s: SparkSession, table: String, cur: Long,
-      m: Manifest, key: String, verdicts: Seq[(Entry, Char)],
-      survive: DataFrame => DataFrame, cdc: Boolean,
-      memberPred: Column): DeleteResult = {
+      m: Manifest, key: Option[String], verdicts: Seq[(Entry, Char)],
+      deleted: Column, cdc: Boolean): DeleteResult = {
     val dropped = verdicts.collect { case (e, 'd') => e }
     val kept = verdicts.collect { case (e, 'k') => e }
     val rewrite = verdicts.collect { case (e, 'u') => e }
     val fresh =
       if (rewrite.isEmpty) Seq.empty
       else {
-        val prev = readEntries(s, table, m, rewrite)
-        val c = survive(prev)
-          .repartitionByRange(math.max(rewrite.size, 1), col(key))
-          .sortWithinPartitions(col(key))
+        val survivors = readEntries(s, table, m, rewrite).filter(!deleted)
+        val c = key.fold(survivors)(k => survivors
+          .repartitionByRange(rewrite.size, col(k))
+          .sortWithinPartitions(col(k)))
         if (m.idxCols.nonEmpty || m.strIdxCols.nonEmpty)
           stageIndexed(s, table, toPhysical(c, m), m.idxCols, m.strIdxCols)
             .filter(hasStats)
@@ -3035,11 +2832,8 @@ object TxnTable {
     val finalLines =
       if (lines.nonEmpty) lines
       else stage(s, table, snapshot(s, table, cur).limit(0))
-    // the membership predicate stays exact for the feed even when the
-    // verdicts folded to the envelope (isin is fine here: the feed is
-    // written once, not planned per file)
     val cdcRefs = if (!cdc) Nil else deleteCdcRefs(s, table, m, cur,
-      dropped, rewrite, memberPred)
+      dropped, rewrite, deleted)
     val v = commit(s, table, finalLines, cur, op = "delete",
       schemaJson = m.schema.map(_.json).orNull, deleteLines = m.deletes,
       idxCols = m.idxCols, strIdxCols = m.strIdxCols, blooms = m.blooms,
@@ -3050,28 +2844,6 @@ object TxnTable {
       cdcFiles = cdcRefs,
       retired = m.retired, checks = m.checks)
     DeleteResult(v, dropped.size, rewrite.size, kept.size)
-  }
-
-  /** Index of the first element of sorted `xs` that is ≥ `v` (== xs.size
-    * when none) — the per-file membership probe [[deleteIn]] runs per
-    * entry, O(log n) instead of an O(n) exists per file. */
-  private def lowerBound(xs: IndexedSeq[Long], v: Long): Int = {
-    var lo = 0; var hi = xs.size
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (xs(mid) < v) lo = mid + 1 else hi = mid
-    }
-    lo
-  }
-
-  /** [[lowerBound]] in UTF-8 binary order, for [[deleteInStr]]. */
-  private def lowerBoundStr(xs: IndexedSeq[String], v: String): Int = {
-    var lo = 0; var hi = xs.size
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (u8cmp(xs(mid), v) < 0) lo = mid + 1 else hi = mid
-    }
-    lo
   }
 
   /** File-pruned copy-on-write MERGE (latest-wins upsert): batch rows
@@ -3727,7 +3499,7 @@ object TxnTable {
     val lines = kept.map(render) ++ fresh
     // a change set that deletes every row (all-'D' applyChanges over a
     // fully-touched table) must not commit a ZERO-file version — stage
-    // the empty sentinel carrying the schema, same guard as deleteRange
+    // the empty sentinel carrying the schema, same guard as delete
     val finalLines =
       if (lines.nonEmpty) lines else stageEmpty(s, table, addSchema)
     // same guard as signedDiff: a data column named 'w' would be
@@ -3820,7 +3592,8 @@ object TxnTable {
 
   /** Zero-copy PUBLISH of a branch's ADDITIONS onto `dst` — the second
     * half of write-audit-publish (the Iceberg WAP cherry-pick): every
-    * `src` entry not already live on `dst` is committed onto `dst` by
+    * `src` entry not already live on `dst` and not inherited at the
+    * branch's clone commit is committed onto `dst` by
     * ABSOLUTE reference (one manifest write; no data moves — the same
     * zero-copy mechanics as [[shallowClone]], pointed the other way).
     * Additive by design: entries the branch deleted or rewrote are NOT
@@ -3858,9 +3631,19 @@ object TxnTable {
         "physical column names (a compaction restaged one of them) — " +
         "rebase the branch first")
     val dstLive = md.entries.map(e => abs(dst)(e.path)).toSet
+    // what a branch inherited at its clone commit (version 0) is not an
+    // addition: the destination may have rewritten those files since (a
+    // compaction), and grafting them back would duplicate their rows
+    val inherited =
+      if (!versions(s, src).headOption.contains(0L)) Set.empty[String]
+      else {
+        val m0 = manifest(s, src, 0L)
+        if (m0.op != "clone") Set.empty[String]
+        else m0.entries.map(e => abs(src)(e.path)).toSet
+      }
     val adds = ms.entries
       .map(e => e.copy(path = abs(src)(e.path)))
-      .filter(e => !dstLive.contains(e.path))
+      .filter(e => !dstLive.contains(e.path) && !inherited(e.path))
     // renderFresh: grafted entries take the publish commit's seq
     commit(s, dst, md.entries.map(render) ++ adds.map(renderFresh), curDst,
       op = "publish", schemaJson = md.schema.map(_.json).orNull,
@@ -4005,7 +3788,7 @@ object TxnTable {
   /** Merge-on-read DELETE by key set: stages ONE tombstone file (the
     * distinct keys to drop) and commits it as manifest metadata — every
     * data entry carries verbatim, zero data rewritten. The copy-on-write
-    * complement: [[deleteRange]] wins when the predicate aligns with the
+    * complement: [[delete]] wins when the predicate aligns with the
     * file layout; for keys SCATTERED across every file (the GDPR
     * per-record erasure shape) copy-on-write would rewrite the whole
     * table, while merge-on-read costs one small write now and defers the
@@ -4127,9 +3910,9 @@ object TxnTable {
     * table's LOGICAL schema) is committed by (file, position)
     * coordinate under the reserved `~pos` tombstone kind. This is the
     * shape neither equality tombstones (need a key column whose other
-    * rows must survive) nor copy-on-write [[deleteWhere]]/deleteRange
-    * (rewrite every touched file; need stats to prune) can give a
-    * predicate over unindexed columns. One tombstone-applied scan finds
+    * rows must survive) nor copy-on-write [[delete]] (rewrites every
+    * file the stats cannot clear — all of them for a predicate over
+    * unindexed columns) serves cheaply. One tombstone-applied scan finds
     * the victims — fundamental: an arbitrary predicate must be
     * evaluated once — and the committed vector is |deleted rows|-sized:
     * the scattered-small-delete (GDPR-by-attribute) shape. A delete of
@@ -6232,7 +6015,7 @@ object TxnTable {
     append(s, devDir, base.filter(col("o_orderkey") % 7 === 0)
       .select((col("o_orderkey") + 100000000L).as("o_orderkey"),
         col("o_orderstatus"), col("price")))
-    deleteRange(s, expDir, "o_orderkey", lo, hi)
+    delete(s, expDir, col("o_orderkey") >= lo && col("o_orderkey") <= hi)
     append(s, expDir, base.filter(col("o_orderkey") % 11 === 0)
       .select((col("o_orderkey") + 200000000L).as("o_orderkey"),
         col("o_orderstatus"), col("price")))
@@ -6662,7 +6445,7 @@ object TxnTable {
       expected = -1L, op = "create")
     val (lo, hi) = ((cuts(2) + cuts(3)) / 2, (cuts(4) + cuts(5)) / 2)
     val before = liveEntries(s, t, 0).map(render).toSet
-    val res = deleteRange(s, t, "o_orderkey", lo, hi)
+    val res = delete(s, t, k >= lo && k <= hi)
     val after = liveEntries(s, t, res.version).map(render).toSet
     val verbatim = before.count(after.contains) == res.kept
     // mid-bucket window edges: exactly one fully-covered bucket drops,
@@ -7769,7 +7552,7 @@ object TxnTable {
     val mainStill0 = currentVersion(s, main) == 0L
     // FIX — drop the violating keyspace on the branch (range delete,
     // file-pruned through the batch's key-clustered stats)
-    deleteRange(s, branch, "o_orderkey", 2 * maxK + 2, Long.MaxValue)
+    delete(s, branch, col("o_orderkey") >= 2 * maxK + 2)
     val nBadAfter = snapshot(s, branch).filter(col("price") < 0).count()
     // PUBLISH — one metadata commit grafting the audited additions
     val vPub = publish(s, branch, main)

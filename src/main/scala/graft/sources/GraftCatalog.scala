@@ -7,8 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions.{Literal, NamedReference, Transform}
-import org.apache.spark.sql.connector.expressions.filter.{And, Predicate}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
@@ -32,7 +31,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   SELECT * FROM graft.ns.t                   -- latest snapshot
   *   SELECT * FROM graft.ns.t VERSION AS OF 2   -- pinned snapshot
   *   SELECT * FROM graft.ns.t TIMESTAMP AS OF … -- newest commit ≤ ts
-  *   DELETE FROM graft.ns.t WHERE k >= a AND k <= b  -- file-pruned
+  *   DELETE FROM graft.ns.t WHERE <predicate>   -- file-pruned
   *   CREATE TABLE graft.ns.t2 TBLPROPERTIES ('index'='k') AS SELECT …
   *   TRUNCATE TABLE graft.ns.t                  -- empty overwrite commit
   *   SELECT * FROM graft.ns.t.history           -- audit trail
@@ -51,12 +50,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * pushdown, column pruning and vectorized reading all apply unchanged;
   * the manifest replaces the directory listing, never the scan.
   *
-  * DELETE routes through [[TxnTable.deleteWhere]] when the WHERE clause
-  * is a range/equality conjunction over integral and string columns:
-  * indexed columns prune files from manifest stats, the remaining
-  * conjuncts residual-filter inside the surviving files; `DELETE FROM t`
-  * with no WHERE truncates via an empty overwrite commit. Anything else
-  * reports unsupported at analysis time — loud, never silently wrong.
+  * DELETE of any row predicate compiles ([[GraftDmlRule]]) to
+  * [[TxnTable.delete]]: the read path's file-skipping rule keeps the
+  * files the stats clear verbatim, drops the files the stats prove
+  * wholly matching as metadata, and rewrites the rest with the
+  * predicate as residual filter; `DELETE FROM t` with no WHERE is the
+  * predicate `true`. A subquery condition is refused.
   *
   * Honest bound: a snapshot with PENDING merge-on-read tombstones
   * refuses the DSv2 scan (apply them via `TxnTable.compact` or read
@@ -564,12 +563,12 @@ object GraftCatalog {
 
 /** One resolved snapshot of a TxnTable, pinned at `version`: reads plan
   * Spark's parquet DSv2 scan over the manifest-resolved file list;
-  * writes commit through the log (append / overwrite); DELETE routes to
-  * the file-pruned [[TxnTable.deleteRange]]. */
+  * writes commit through the log (append / overwrite); `DELETE FROM` is
+  * compiled by [[GraftDmlRule]] to the file-pruned [[TxnTable.delete]]. */
 class GraftTable(ident: String, private[sources] val location: String,
     version: Long)
-    extends Table with SupportsRead with SupportsWrite with SupportsDeleteV2
-    with TruncatableTable with SupportsMetadataColumns {
+    extends Table with SupportsRead with SupportsWrite with TruncatableTable
+    with SupportsMetadataColumns {
 
   /** `_metadata.{file_path, row_index}` — per-row provenance in the
     * table's CANONICAL coordinate space: the exact (file, position)
@@ -837,189 +836,6 @@ class GraftTable(ident: String, private[sources] val location: String,
             info.queryId(), overwriteAll)
         }
       }
-    }
-
-  // ---- DELETE FROM: range/equality conjunctions over integral AND
-  // string columns route to the file-pruned TxnTable.deleteWhere —
-  // indexed columns prune files, the rest residual-filter inside the
-  // survivors; no WHERE truncates ----
-
-  /** Per-column bounds folded from the predicate conjunction: integral
-    * columns narrow to inclusive [lo, hi], string columns to per-side
-    * (value, inclusive) bounds. Empty = tautology (DELETE without
-    * WHERE). */
-  private case class ParsedDelete(
-      ints: Map[String, (Long, Long)],
-      strs: Map[String, (TxnTable.StrBound, TxnTable.StrBound)],
-      in: Option[(String, Either[Seq[Long], Seq[String]])]) {
-    def isTautology: Boolean = ints.isEmpty && strs.isEmpty && in.isEmpty
-  }
-
-  /** Fold the predicate conjunction into per-column bounds, or None when
-    * any conjunct falls outside the supported shape (a comparison of one
-    * column against one integral or string literal). */
-  private def bounds(predicates: Array[Predicate])
-      : Option[ParsedDelete] = {
-    var ints = Map.empty[String, (Long, Long)]
-    var strs = Map.empty[String, (TxnTable.StrBound, TxnTable.StrBound)]
-    def ref(e: org.apache.spark.sql.connector.expressions.Expression)
-        : Option[String] = e match {
-      case nr: NamedReference if nr.fieldNames.length == 1 =>
-        Some(nr.fieldNames.head)
-      case _ => None
-    }
-    def lim(e: org.apache.spark.sql.connector.expressions.Expression)
-        : Option[Either[Long, String]] = e match {
-      case l: Literal[_] => l.value match {
-        case v: java.lang.Long if l.dataType == LongType =>
-          Some(Left(v.longValue))
-        case v: java.lang.Integer => Some(Left(v.longValue))
-        case v: java.lang.Short => Some(Left(v.longValue))
-        case v: org.apache.spark.unsafe.types.UTF8String =>
-          Some(Right(v.toString))
-        case _ => None
-      }
-      case _ => None
-    }
-    def narrowInt(c: String, op: String, v: Long): Boolean = {
-      val (lo, hi) = ints.getOrElse(c, (Long.MinValue, Long.MaxValue))
-      val next = op match {
-        case "=" => Some((math.max(lo, v), math.min(hi, v)))
-        case "<" => if (v == Long.MinValue) None
-          else Some((lo, math.min(hi, v - 1)))
-        case "<=" => Some((lo, math.min(hi, v)))
-        case ">" => if (v == Long.MaxValue) None
-          else Some((math.max(lo, v + 1), hi))
-        case ">=" => Some((math.max(lo, v), hi))
-        case _ => None
-      }
-      next.foreach(b => ints = ints.updated(c, b))
-      next.isDefined
-    }
-    def narrowStr(c: String, op: String, v: String): Boolean = {
-      val (lo, hi) = strs.getOrElse(c,
-        (None: TxnTable.StrBound, None: TxnTable.StrBound))
-      // stricter-wins: a larger value (or equal-but-exclusive) tightens
-      // a lower bound; smaller tightens an upper bound
-      def tightLo(b: TxnTable.StrBound, nv: String, inc: Boolean)
-          : TxnTable.StrBound = b match {
-        case Some((ov, _)) =>
-          val cmp = TxnTable.u8cmp(nv, ov)
-          if (cmp > 0 || (cmp == 0 && !inc)) Some((nv, inc)) else b
-        case None => Some((nv, inc))
-      }
-      def tightHi(b: TxnTable.StrBound, nv: String, inc: Boolean)
-          : TxnTable.StrBound = b match {
-        case Some((ov, _)) =>
-          val cmp = TxnTable.u8cmp(nv, ov)
-          if (cmp < 0 || (cmp == 0 && !inc)) Some((nv, inc)) else b
-        case None => Some((nv, inc))
-      }
-      val next = op match {
-        case "=" => Some((tightLo(lo, v, inc = true), tightHi(hi, v, inc = true)))
-        case "<" => Some((lo, tightHi(hi, v, inc = false)))
-        case "<=" => Some((lo, tightHi(hi, v, inc = true)))
-        case ">" => Some((tightLo(lo, v, inc = false), hi))
-        case ">=" => Some((tightLo(lo, v, inc = true), hi))
-        case _ => None
-      }
-      next.foreach(b => strs = strs.updated(c, b))
-      next.isDefined
-    }
-    def narrow(c: String, op: String, v: Either[Long, String]): Boolean =
-      v match {
-        case Left(l) => !strs.contains(c) && narrowInt(c, op, l)
-        case Right(sv) => !ints.contains(c) && narrowStr(c, op, sv)
-      }
-    var notNullCols = Set.empty[String]
-    var in: Option[(String, Either[Seq[Long], Seq[String]])] = None
-    def visit(p: Predicate): Boolean = p.name() match {
-      case "ALWAYS_TRUE" => true
-      case "AND" =>
-        val a = p.asInstanceOf[And]
-        visit(a.left()) && visit(a.right())
-      case "IN" =>
-        // the GDPR-id-list shape: one column against an explicit value
-        // set — integral lists route to the per-value file-pruned
-        // TxnTable.deleteIn, string lists (UUIDs/URLs — the usual GDPR
-        // key) to deleteInStr over the truncated string stats. ONE IN
-        // per statement, not combined with other bounds on any column
-        // (a mixed conjunction would need residual composition the
-        // per-value verdicts don't model — loud, never silently
-        // unpruned or wrong)
-        val ch = p.children()
-        if (ch.length < 2 || in.isDefined) false
-        else (ref(ch(0)), ch.drop(1).toSeq.map(lim)) match {
-          case (Some(c), vs) if vs.forall(_.exists(_.isLeft)) =>
-            in = Some((c, Left(vs.flatMap(_.flatMap(_.left.toOption)))))
-            true
-          case (Some(c), vs) if vs.forall(_.exists(_.isRight)) =>
-            in = Some((c, Right(vs.flatMap(_.flatMap(_.toOption)))))
-            true
-          case _ => false
-        }
-      case "IS_NOT_NULL" =>
-        // acceptable ONLY as a redundant guard beside a value bound on
-        // the same column (value predicates never match nulls anyway);
-        // checked after the full parse — alone it is a real constraint
-        // this shape can't express
-        ref(p.children()(0)) match {
-          case Some(c) => notNullCols += c; true
-          case None => false
-        }
-      case op @ ("=" | "<" | "<=" | ">" | ">=") =>
-        val ch = p.children()
-        if (ch.length != 2) false
-        else (ref(ch(0)), lim(ch(1)), ref(ch(1)), lim(ch(0))) match {
-          case (Some(c), Some(v), _, _) => narrow(c, op, v)
-          case (_, _, Some(c), Some(v)) => // literal on the left: flip
-            val flipped = op match {
-              case "<" => ">" case "<=" => ">="
-              case ">" => "<" case ">=" => "<=" case o => o
-            }
-            narrow(c, flipped, v)
-          case _ => false
-        }
-      case _ => false
-    }
-    if (!predicates.forall(visit)) None
-    // an IN combined with any other bound (even on another column)
-    // falls outside the per-value verdict model — refuse the pushdown
-    else if (in.isDefined && (ints.nonEmpty || strs.nonEmpty ||
-      notNullCols.exists(c => !in.exists(_._1 == c)))) None
-    else if (in.isEmpty &&
-      !notNullCols.subsetOf(ints.keySet ++ strs.keySet)) None
-    else Some(ParsedDelete(ints, strs, in))
-  }
-
-  override def canDeleteWhere(predicates: Array[Predicate]): Boolean =
-    bounds(predicates).isDefined
-
-  override def deleteWhere(predicates: Array[Predicate]): Unit =
-    bounds(predicates) match {
-      case Some(p) if p.isTautology => // truncate via empty overwrite
-        val s = spark
-        TxnTable.overwrite(s, location,
-          TxnTable.snapshot(s, location).limit(0))
-      case Some(ParsedDelete(_, _, Some((c, Left(vs))))) =>
-        // the id-list shape: per-value manifest verdicts (range boxes
-        // AND bucketN transforms), >10k values fold to the envelope
-        TxnTable.deleteIn(spark, location, c, vs)
-      case Some(ParsedDelete(_, _, Some((c, Right(vs))))) =>
-        // the string id-list shape (UUIDs/URLs): per-value verdicts
-        // over the truncated string stats
-        TxnTable.deleteInStr(spark, location, c, vs)
-      case Some(p) =>
-        // the DELETE's file accounting lands in the commit's #metrics=
-        // header — read it back via TxnTable.commitMetrics
-        TxnTable.deleteWhere(spark, location,
-          p.ints.toSeq.map { case (c, (lo, hi)) => (c, lo, hi) },
-          p.strs.toSeq.map { case (c, (lo, hi)) => (c, lo, hi) })
-      case None => throw new UnsupportedOperationException(
-        s"$ident: DELETE supports range/equality conjunctions over " +
-          "integral and string columns, or one integral or string " +
-          "IN-list (the shapes manifest stats can prune or " +
-          "residual-filter)")
     }
 }
 

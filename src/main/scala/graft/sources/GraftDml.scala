@@ -10,16 +10,19 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 
-/** SQL `MERGE INTO` / `UPDATE` over [[GraftCatalog]] tables — the DML
-  * statements DataSourceV2 only offers through the heavyweight
-  * row-level-operation API — routed instead to the FILE-PRUNED TxnTable
-  * machinery by one resolution rule: once the analyzer has resolved the
-  * statement (stars expanded, references bound), a Graft target swaps
-  * the plan for an eager command that compiles the actions into a keyed
-  * CHANGE SET and hands it to [[TxnTable.applyChanges]]/[[TxnTable
-  * .merge]] — so a SQL MERGE touching one key region rewrites that
-  * region's files, exactly like the library call (the pre-row-level-API
-  * Delta shape). Supported MERGE form (the standard CDC statement):
+/** SQL `MERGE INTO` / `UPDATE` / `DELETE FROM` over [[GraftCatalog]]
+  * tables — the DML statements DataSourceV2 only offers through the
+  * heavyweight row-level-operation API — routed instead to the
+  * FILE-PRUNED TxnTable machinery by one resolution rule: once the
+  * analyzer has resolved the statement (stars expanded, references
+  * bound), a Graft target swaps the plan for an eager command. MERGE and
+  * UPDATE compile their actions into a keyed CHANGE SET and hand it to
+  * [[TxnTable.applyChanges]]/[[TxnTable.merge]] — so a SQL MERGE
+  * touching one key region rewrites that region's files, exactly like
+  * the library call (the pre-row-level-API Delta shape). DELETE hands
+  * its condition (`true` without WHERE) to [[TxnTable.delete]], whose
+  * file verdicts come from the read path's own file-skipping rule.
+  * Supported MERGE form (the standard CDC statement):
   * a conjunction of integral or STRING target-column equalities over a
   * KEY-UNIQUE target (single or COMPOSITE merge key — the key tuple
   * must be unique, or rows collapse under keyed replacement;
@@ -58,6 +61,10 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
     case u: UpdateTable if u.resolved =>
       graftTable(u.table)
         .map(g => GraftUpdateCommand(g.location, u): LogicalPlan)
+        .getOrElse(plan)
+    case d: DeleteFromTable if d.resolved =>
+      graftTable(d.table)
+        .map(g => GraftDeleteCommand(g.location, d.condition): LogicalPlan)
         .getOrElse(plan)
     case _ => plan
   }
@@ -144,8 +151,8 @@ case class GraftMorReadRule(session: SparkSession) extends Rule[LogicalPlan] {
   }
 
   private def swap(plan: LogicalPlan): LogicalPlan = plan match {
-    // DML targets are compiled by GraftDmlRule / SupportsDeleteV2 and
-    // resolve tombstones inside the TxnTable machinery — only the MERGE
+    // DML targets are compiled by GraftDmlRule and resolve tombstones
+    // inside the TxnTable machinery — only the MERGE
     // source position is a read
     case m: MergeIntoTable => m.copy(sourceTable = swap(m.sourceTable))
     case u: UpdateTable => u
@@ -563,6 +570,29 @@ case class GraftUpdateCommand(location: String, update: UpdateTable)
     val changes = snap.filter(cond).select(valueCols: _*)
       .withColumn("op", lit("U"))
     TxnTable.applyChangesMulti(session, location, changes, keys)
+    Seq.empty
+  }
+}
+
+/** Eager `DELETE FROM` — the resolved condition, rebound by column NAME
+  * (its references carry the DSv2 relation's attribute ids, which the
+  * snapshot [[TxnTable.delete]] resolves against does not), becomes the
+  * one copy-on-write delete predicate. A subquery condition is refused:
+  * its plan cannot be rebound onto the snapshot. */
+case class GraftDeleteCommand(location: String, condition: Expression)
+    extends LeafRunnableCommand {
+  import GraftDml._
+
+  override def run(session: SparkSession): Seq[Row] = {
+    if (org.apache.spark.sql.catalyst.expressions.SubqueryExpression
+        .hasSubquery(condition))
+      throw new UnsupportedOperationException(
+        s"graft DELETE does not support subquery conditions: $condition")
+    TxnTable.delete(session, location, exprCol(condition.transform {
+      case a: AttributeReference =>
+        org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+          .quoted(a.name)
+    }))
     Seq.empty
   }
 }

@@ -537,10 +537,11 @@ private[sources] object GraftMaintenance {
         TxnTable.deleteWherePos(s, tbl(s, in),
           org.apache.spark.sql.functions.expr(in.getUTF8String(1).toString))
       }
-      // the GDPR id-list DELETE as a procedure: per-value manifest
-      // verdicts (range boxes + bucketN transforms for integral keys,
-      // truncated string stats for string keys — the key COLUMN's type
-      // picks the route), optional signed feed for downstream MVs.
+      // the GDPR id-list DELETE as a procedure: one `isin` over the key
+      // column's type, deleted through TxnTable.delete (per-member
+      // manifest verdicts: range boxes + bucketN transforms for integral
+      // keys, truncated string stats for string keys), optional signed
+      // feed for downstream MVs.
       // `sep` exists for STRING ids that may legally contain commas
       // (URLs!): the default comma split would silently target the
       // wrong values — pick a separator that cannot occur in the ids —
@@ -561,13 +562,11 @@ private[sources] object GraftMaintenance {
         val raw = in.getUTF8String(2).toString
           .split(java.util.regex.Pattern.quote(sep))
           .map(_.trim).filter(_.nonEmpty).toSeq
+        require(raw.nonEmpty, "delete_in: no values to delete")
         val keyType = TxnTable.snapshot(s, table).schema(key).dataType
-        if (keyType == StringType)
-          TxnTable.deleteInStr(s, table, key, raw,
-            cdc = in.getBoolean(3)).version
-        else
-          TxnTable.deleteIn(s, table, key, raw.map(_.toLong),
-            cdc = in.getBoolean(3)).version
+        import org.apache.spark.sql.functions.{col, lit}
+        TxnTable.delete(s, table, col(key).isin(raw.map(lit(_)
+          .cast(keyType)): _*), cdc = in.getBoolean(3)).version
       }
       // collapse accumulated equality tombstones into one bounded file
       // per key column — zero data files touched (the between-

@@ -982,7 +982,7 @@ class GraftStreamingWrite(ident: String, location: String,
     // be unreadable by design); an empty COMPLETE epoch must still
     // overwrite — the new result IS empty, and keeping the previous
     // rows would serve stale data — so it stages the empty sentinel
-    // carrying the schema, the same guard deleteRange uses
+    // carrying the schema, the same guard delete uses
     if (staged.isEmpty && !truncate) { lastSeen = Some(epochId); return }
     val lines =
       if (staged.nonEmpty) staged

@@ -3,7 +3,7 @@ package graft.sources
 import graft.operators.TxnTable
 import graft.operators.TxnTable.Entry
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.types.{ByteType, DataType, Decimal, DecimalType, IntegerType, LongType, ShortType, StringType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, Decimal, DecimalType, IntegerType, LongType, ShortType, StringType, TimestampNTZType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Manifest-level FILE SKIPPING: evaluate filter conjuncts against each
@@ -42,8 +42,9 @@ object ManifestPrune {
     val flat = conjuncts.flatMap(split)
     val sentinel = (e: Entry) => indexed && flat.nonEmpty &&
       e.stats.isEmpty && e.strStats.isEmpty
+    val tests = flat.map(mayHold)
     val statKept = entries.filter(e =>
-      !sentinel(e) && flat.forall(c => mayHold(e, c)))
+      !sentinel(e) && tests.forall(_(e)))
     eqLongConjuncts(flat).distinct.foldLeft(statKept) { case (es, (c, v)) =>
       if (es.isEmpty) es
       else blooms.find(_.col == c).fold(es) { b =>
@@ -51,6 +52,21 @@ object ManifestPrune {
         es.filter(e => may(e.path.split('/').last))
       }
     }
+  }
+
+  /** The dual of [[keep]]: does EVERY row of an entry satisfy every
+    * conjunct? Each conjunct must be proven true for the whole file from
+    * its stats, with a KNOWN zero null count on the column (a NULL makes
+    * a comparison NULL, which no delete acts on): an integral or decimal
+    * range or equality against the [lo, hi] box, a string one against
+    * the truncated bounds (lo ≤ every value, hi ≥ every value, so the
+    * proofs stay sound under truncation), an `IN` whose member is the
+    * single value of a [v, v] file, `IS NOT NULL`, and `true`. Any other
+    * shape, and any missing stat, answers false. Member sets are
+    * prepared once per call. */
+  def covers(conjuncts: Seq[Expression]): Entry => Boolean = {
+    val tests = conjuncts.flatMap(split).map(cover)
+    e => tests.forall(_(e))
   }
 
   private def split(e: Expression): Seq[Expression] = e match {
@@ -158,9 +174,24 @@ object ManifestPrune {
 
   private def cmp = TxnTable.u8cmp _
 
-  /** May entry `e` hold a row satisfying `p`? Conservative: unknown
-    * shapes and missing stats answer true. */
-  private def mayHold(e: Entry, p: Expression): Boolean = p match {
+  /** May an entry hold a row satisfying `p`? Conservative: unknown
+    * shapes and missing stats answer true. An IN list's members are
+    * prepared here, once per call ([[members]]). */
+  private def mayHold(p: Expression): Entry => Boolean = p match {
+    case In(a, vs) => literals(vs).fold(always)(inMay(a, _))
+    case InSet(a, vs) => inMay(a, vs.toSeq)
+    case _ => e => mayHoldOne(e, p)
+  }
+
+  private val always: Entry => Boolean = _ => true
+  private val never: Entry => Boolean = _ => false
+
+  private def literals(vs: Seq[Expression]): Option[Seq[Any]] =
+    if (vs.forall(_.isInstanceOf[Literal]))
+      Some(vs.map(_.asInstanceOf[Literal].value))
+    else None
+
+  private def mayHoldOne(e: Entry, p: Expression): Boolean = p match {
     case EqualTo(l, r) => binInt(e, l, r, "=") && binStr(e, l, r, "=") &&
       binDay(e, l, r, "=") && binBucket(e, l, r)
     case EqualNullSafe(l, r) if longBox(l).isDefined || longBox(r).isDefined ||
@@ -176,24 +207,6 @@ object ManifestPrune {
     case GreaterThanOrEqual(l, r) =>
       binInt(e, l, r, ">=") && binStr(e, l, r, ">=") &&
         binDay(e, l, r, ">=")
-    case In(a, vs) => inMay(e, a, vs)
-    case InSet(a, vs) =>
-      attrOf(a).forall { c =>
-        intMay(e, c) { case (lo, hi) =>
-          vs.exists {
-            case n: Number => n.longValue >= lo && n.longValue <= hi
-            case d: Decimal => decBox(d).forall { case (vLo, vHi) =>
-              vHi >= lo && vLo <= hi }
-            case _ => true
-          }
-        } && strMay(e, c) { case (fLo, fHi) =>
-          vs.exists {
-            case u: UTF8String =>
-              cmp(u.toString, fLo) >= 0 && cmp(u.toString, fHi) <= 0
-            case _ => true
-          }
-        }
-      }
     case IsNull(a) => attrOf(a).forall { c =>
       // prune files the stats PROVE null-free; unknown counts (−1) keep
       e.nullsFor(c).orElse(e.strStats.collectFirst {
@@ -219,41 +232,155 @@ object ManifestPrune {
     case _ => true
   }
 
-  private def inMay(e: Entry, a: Expression, vs: Seq[Expression]): Boolean =
-    attrOf(a).forall { c =>
-      val boxes = vs.map(longBox)
-      val longs = vs.map(longLit)
-      val strs = vs.map(strLit)
-      val intOk =
-        if (boxes.forall(_.isDefined))
-          intMay(e, c) { case (lo, hi) =>
-            boxes.flatten.exists { case (vLo, vHi) => vHi >= lo && vLo <= hi }
+  /** An IN list's non-NULL members (a NULL member never makes `IN`
+    * true), sorted once: integral and decimal members as the closed long
+    * boxes of [[longBox]] (a point for an integral member), ordered by
+    * (lo, hi) — every box is at most one wide, so the upper ends are
+    * ordered too — and string members in UTF-8 binary order. None when
+    * the value's type has no stats, or a decimal member lies beyond the
+    * long range. */
+  private def members(dt: DataType, vs: Seq[Any])
+      : Option[Either[IndexedSeq[(Long, Long)], IndexedSeq[String]]] = {
+    val xs = vs.filter(_ != null)
+    def sorted(boxes: Seq[Option[(Long, Long)]]) =
+      if (boxes.forall(_.isDefined))
+        Some(scala.util.Left(boxes.flatten.sorted.toIndexedSeq))
+      else None
+    dt match {
+      case t if intLike(t) => sorted(xs.map { v =>
+        val n = v.asInstanceOf[Number].longValue
+        Some((n, n))
+      })
+      case _: DecimalType =>
+        sorted(xs.map(v => decBox(v.asInstanceOf[Decimal])))
+      case StringType => Some(scala.util.Right(xs.map(_.toString)
+        .sorted(Ordering.fromLessThan[String](cmp(_, _) < 0)).toIndexedSeq))
+      case _ => None
+    }
+  }
+
+  /** The first index in [0, n) where `below` turns false (n when it
+    * never does); `below` must hold on a prefix only. */
+  private def lowerBound(n: Int)(below: Int => Boolean): Int = {
+    var lo = 0; var hi = n
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (below(mid)) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+
+  /** May a file hold some member of the set? One binary search per
+    * file: the first member not below the file's lower bound decides
+    * (sorted-window probe), so an id list of n members costs
+    * O(#files · log n) however long it is. bucketN(c) transform stats
+    * answer IN like they answer equality: the file may hold the set only
+    * if SOME member's bucket lands in its bucket box — what makes
+    * id-list deletes and runtime join pruning (DPP IN-sets) bite on
+    * hash-bucketed layouts where raw ranges prune nothing. The bucket
+    * images are computed once per bucket count, at most n values each. */
+  private def inMay(a: Expression, vs: Seq[Any]): Entry => Boolean =
+    (attrOf(a), members(a.dataType, vs)) match {
+      case (Some(c), Some(scala.util.Left(boxes))) =>
+        val images = scala.collection.mutable.Map.empty[String, Set[Long]]
+        def image(n: String) = images.getOrElseUpdate(n,
+          boxes.map(b => TxnTable.bucketOf(b._1, n.toInt)).toSet)
+        e => intMay(e, c) { case (lo, hi) =>
+          val i = lowerBound(boxes.size)(boxes(_)._2 < lo)
+          i < boxes.size && boxes(i)._1 <= hi
+        } && (!intLike(a.dataType) || e.stats.forall { st =>
+          st.col match {
+            case TxnTable.BucketSpec(n, `c`) =>
+              st.lo <= st.hi && image(n).exists(b => b >= st.lo && b <= st.hi)
+            case _ => true
           }
-        else true
-      // bucketN(c) transform stats answer IN like they answer equality:
-      // the file may hold the set only if SOME member's bucket lands in
-      // its bucket box — what makes runtime join pruning (DPP IN-sets)
-      // bite on hash-bucketed layouts where raw ranges prune nothing
-      val bucketOk =
-        if (longs.forall(_.isDefined))
-          e.stats.forall { st =>
-            st.col match {
-              case TxnTable.BucketSpec(n, `c`) =>
-                st.lo <= st.hi && longs.flatten.exists { v =>
-                  val b = TxnTable.bucketOf(v, n.toInt)
-                  b >= st.lo && b <= st.hi
-                }
-              case _ => true
-            }
-          }
-        else true
-      val strOk =
-        if (strs.forall(_.isDefined))
-          strMay(e, c) { case (fLo, fHi) =>
-            strs.flatten.exists(v => cmp(v, fLo) >= 0 && cmp(v, fHi) <= 0)
-          }
-        else true
-      intOk && bucketOk && strOk
+        })
+      case (Some(c), Some(scala.util.Right(strs))) =>
+        e => strMay(e, c) { case (fLo, fHi) =>
+          val i = lowerBound(strs.size)(j => cmp(strs(j), fLo) < 0)
+          i < strs.size && cmp(strs(i), fHi) <= 0
+        }
+      case _ => always
+    }
+
+  // ---- covers: every row of the file satisfies the conjunct ---------------
+
+  private def cover(p: Expression): Entry => Boolean = p match {
+    case Literal(true, BooleanType) => always
+    case IsNotNull(a) => attrOf(a).fold(never)(c => e =>
+      intStat(e, c).exists(_.nulls == 0L) ||
+        strStat(e, c).exists(_.nulls == 0L))
+    case EqualTo(l, r) => cmpCover(l, r, "=")
+    case LessThan(l, r) => cmpCover(l, r, "<")
+    case LessThanOrEqual(l, r) => cmpCover(l, r, "<=")
+    case GreaterThan(l, r) => cmpCover(l, r, ">")
+    case GreaterThanOrEqual(l, r) => cmpCover(l, r, ">=")
+    case In(a, vs) => literals(vs).fold(never)(inCover(a, _))
+    case InSet(a, vs) => inCover(a, vs.toSeq)
+    case _ => never
+  }
+
+  private def intStat(e: Entry, c: String): Option[TxnTable.ColStat] =
+    e.stats.find(_.col == c)
+
+  private def strStat(e: Entry, c: String): Option[TxnTable.StrStat] =
+    e.strStats.find(_.col == c)
+
+  /** `col op lit` (either side) for every row: the column's null-free
+    * box lies wholly inside the literal's side. */
+  private def cmpCover(l: Expression, r: Expression, op: String)
+      : Entry => Boolean = {
+    def side(a: Expression, v: Expression, op: String)
+        : Option[Entry => Boolean] = attrOf(a).flatMap(c =>
+      longBox(v).map(b => intCover(c, op, b))
+        .orElse(strLit(v).map(sv => strCover(c, op, sv))))
+    side(l, r, op).orElse(side(r, l, flip(op))).getOrElse(never)
+  }
+
+  /** Against a literal in [vLo, vHi] ([[longBox]]) and an integral box
+    * [lo, hi] (a decimal column's box holds its values too): `lo > v`
+    * iff `lo ≥ vHi` and `lo > vLo`, `hi < v` iff `hi ≤ vLo` and
+    * `hi < vHi`; equality needs a point box at an integral literal. */
+  private def intCover(c: String, op: String, v: (Long, Long))
+      : Entry => Boolean = {
+    val (vLo, vHi) = v
+    e => intStat(e, c).exists { st =>
+      st.nulls == 0L && st.lo <= st.hi && (op match {
+        case "=" => st.lo == st.hi && vLo == vHi && st.lo == vLo
+        case "<" => st.hi <= vLo && st.hi < vHi
+        case "<=" => st.hi <= vLo
+        case ">" => st.lo >= vHi && st.lo > vLo
+        case ">=" => st.lo >= vHi
+        case _ => false
+      })
+    }
+  }
+
+  private def strCover(c: String, op: String, v: String): Entry => Boolean =
+    e => strStat(e, c).exists { st =>
+      st.nulls == 0L && (op match {
+        case "=" => st.lo == v && st.hi == v
+        case "<" => cmp(st.hi, v) < 0
+        case "<=" => cmp(st.hi, v) <= 0
+        case ">" => cmp(st.lo, v) > 0
+        case ">=" => cmp(st.lo, v) >= 0
+        case _ => false
+      })
+    }
+
+  /** A null-free single-point file [v, v] whose value is a member: every
+    * row IS v (lo == hi pins every string row too, truncation or not). */
+  private def inCover(a: Expression, vs: Seq[Any]): Entry => Boolean =
+    (attrOf(a), members(a.dataType, vs)) match {
+      case (Some(c), Some(scala.util.Left(boxes))) =>
+        val points = boxes.collect { case (lo, hi) if lo == hi => lo }.toSet
+        e => intStat(e, c).exists(st =>
+          st.nulls == 0L && st.lo == st.hi && points(st.lo))
+      case (Some(c), Some(scala.util.Right(strs))) =>
+        val set = strs.toSet
+        e => strStat(e, c).exists(st =>
+          st.nulls == 0L && st.lo == st.hi && set(st.lo))
+      case _ => never
     }
 
   /** Evaluate a numeric comparison `col op lit` (either side) against
@@ -398,17 +525,6 @@ object ManifestPrune {
 
   // ---- RUNTIME (DPP) filter decoding --------------------------------------
 
-  /** Above this many IN members a per-file set test folds to its
-    * [min,max] envelope — runtime (DPP) IN-sets here, and the per-file
-    * verdicts of `TxnTable.deleteIn`/`deleteInStr`: a value set can
-    * reach millions of members, and an O(#files × #values) existence
-    * scan at planning time is the wrong trade — the envelope keeps
-    * pruning O(#files) while staying sound (a superset of the set
-    * test). Range-clustered layouts lose nothing (contiguous keys ⇒
-    * envelope ≈ set); bucket layouts lose the per-value bucket probe
-    * only on the giant sets where it was unaffordable anyway. */
-  private[graft] val InSetCap = 10000
-
   /** Decode one RUNTIME V2 predicate (what [[org.apache.spark.sql.
     * execution.datasources.v2.BatchScanExec]] passes to
     * `SupportsRuntimeV2Filtering.filter` after a dynamic-pruning
@@ -442,15 +558,10 @@ object ManifestPrune {
           a <- attr(kids.head)
           vs <- Some(kids.tail.toSeq.map(lit)) if vs.forall(_.isDefined)
         } yield {
+          // any size: the per-file set test is one binary search
           val lits = vs.flatten
-          val withType = a.withDataType(lits.headOption.map(_.dataType)
-            .getOrElse(a.dataType))
-          val longs = lits.map(l => longLit(l))
-          if (lits.size > InSetCap && longs.forall(_.isDefined)) {
-            val ls = longs.flatten
-            And(GreaterThanOrEqual(withType, Literal(ls.min)),
-              LessThanOrEqual(withType, Literal(ls.max)))
-          } else In(withType, lits)
+          In(a.withDataType(lits.headOption.map(_.dataType)
+            .getOrElse(a.dataType)), lits)
         }
       case "=" =>
         val kids = p.children()

@@ -955,8 +955,7 @@ object Streams {
     val b = s.sql("SELECT MIN(o_orderkey), MAX(o_orderkey) FROM orders")
       .collect()(0)
     val cut = b.getLong(0) + (b.getLong(1) - b.getLong(0) + 1) / 5
-    TxnTable.deleteWhere(s, loc,
-      Seq(("o_orderkey", Long.MinValue, cut - 1)), Nil, cdc = true)
+    TxnTable.delete(s, loc, col("o_orderkey") <= cut - 1, cdc = true)
     // v4: maintenance — must pass as an EMPTY batch under strict
     TxnTable.compact(s, loc)
     // v5: CoW MERGE — new-group inserts (%23) + scattered deletes (%12)

@@ -103,8 +103,7 @@ class CatalogSpec extends SparkSpec {
       "TBLPROPERTIES ('index' = 'k')")
     val loc = s"${GraftCatalog.defaultWarehouse}/spec/$t"
     // 4 single-file appends so each file has a tight key range (the
-    // zero-row create sentinel carries no stats and conservatively
-    // rewrites on the first delete)
+    // zero-row create sentinel holds no row and carries verbatim)
     (0 until 4).foreach { i =>
       sql(s"INSERT INTO graft.spec.$t SELECT /*+ REPARTITION(1) */ " +
         s"id + ${i * 100}, 'x' FROM RANGE(100)")
@@ -120,21 +119,108 @@ class CatalogSpec extends SparkSpec {
     sql(s"DELETE FROM graft.spec.$t WHERE k > 350")
     assert(sql(s"SELECT MAX(k) AS m FROM graft.spec.$t")
       .collect()(0).getLong(0) === 350)
-    // unsupported predicate shapes fail loudly, never silently wrong
-    intercept[Exception] {
-      sql(s"DELETE FROM graft.spec.$t WHERE v LIKE 'x%'")
-    }
-    intercept[Exception] {
-      sql(s"DELETE FROM graft.spec.$t WHERE k = 1 OR v = 'x'")
-    }
-    intercept[Exception] { // bare IS NOT NULL is a real constraint
-      sql(s"DELETE FROM graft.spec.$t WHERE v IS NOT NULL")
-    }
     // DELETE without WHERE truncates; table stays readable + appendable
     sql(s"DELETE FROM graft.spec.$t")
     assert(sql(s"SELECT * FROM graft.spec.$t").count() === 0)
     sql(s"INSERT INTO graft.spec.$t SELECT id, 'y' FROM RANGE(3)")
     assert(sql(s"SELECT * FROM graft.spec.$t").count() === 3)
+    // any row predicate deletes: shapes the stats answer only in part
+    // (LIKE, OR, bare IS NOT NULL, IS NULL, a DECIMAL bound) delete
+    // exactly the rows a three-valued model predicts — a NULL never
+    // deletes — rewriting whatever files the stats cannot clear
+    val t2 = fresh("sqldelshapes")
+    sql(s"CREATE TABLE graft.spec.$t2 (k BIGINT, v STRING, d DECIMAL(10,2)) " +
+      "TBLPROPERTIES ('index' = 'k,d', 'strindex' = 'v')")
+    (0 until 3).foreach { i =>
+      sql(s"INSERT INTO graft.spec.$t2 SELECT /*+ REPARTITION(1) */ id, " +
+        "CASE id % 3 WHEN 0 THEN 'xa' WHEN 1 THEN 'yb' END, " +
+        "CASE WHEN id % 5 = 0 THEN NULL " +
+        "ELSE CAST(id * 1.25 AS DECIMAL(10,2)) END " +
+        s"FROM RANGE(${i * 40}, ${(i + 1) * 40})")
+    }
+    type R = (Long, Option[String], Option[BigDecimal])
+    def rows: Seq[R] = sql(s"SELECT k, v, d FROM graft.spec.$t2").collect()
+      .map(r => (r.getLong(0), Option(r.getString(1)),
+        Option(r.getDecimal(2)).map(BigDecimal(_)))).toSeq.sortBy(_._1)
+    val model0: Seq[R] = (0L until 120L).map(k => (k,
+      Seq(Some("xa"), Some("yb"), None)((k % 3).toInt),
+      if (k % 5 == 0) None else Some(BigDecimal(k) * BigDecimal("1.25"))))
+    assert(rows === model0)
+    Seq[(String, R => Boolean)](
+      "v LIKE 'x%'" -> (_._2.exists(_.startsWith("x"))),
+      "k = 1 OR v = 'x'" -> (r => r._1 == 1L || r._2.contains("x")),
+      "d IS NULL" -> (_._3.isEmpty),
+      "d <= 62.5" -> (_._3.exists(_ <= BigDecimal("62.5"))),
+      "v IS NOT NULL" -> (_._2.isDefined)
+    ).foldLeft(model0) { case (model, (where, deletes)) =>
+      sql(s"DELETE FROM graft.spec.$t2 WHERE $where")
+      val left = model.filterNot(deletes)
+      assert(left.size < model.size, s"WHERE $where deletes nothing")
+      assert(rows === left, s"DELETE WHERE $where")
+      left
+    }
+  }
+
+  test("DELETE takes its file verdicts from the read rule: bucket stats " +
+      "keep all but the member's file verbatim") {
+    // a bucket16(k) layout: eight bucket-homogeneous single-file inserts,
+    // so every file's raw key box spans the keyspace and only its bucket
+    // box can clear it for `k = 13`
+    val t = fresh("sqldelbucket")
+    sql(s"CREATE TABLE graft.spec.$t (k BIGINT, v STRING) " +
+      "TBLPROPERTIES ('index' = 'bucket16(k)')")
+    val loc = s"${GraftCatalog.defaultWarehouse}/spec/$t"
+    val s2 = spark
+    import s2.implicits._
+    (0L until 320L).groupBy(k => TxnTable.bucketOf(k, 16) / 2).toSeq
+      .sortBy(_._1).foreach { case (_, ks) =>
+        ks.map(k => (k, s"v$k")).toDF("k", "v")
+          .createOrReplaceTempView("sqldelbucket_in")
+        sql(s"INSERT INTO graft.spec.$t " +
+          "SELECT /*+ REPARTITION(1) */ k, v FROM sqldelbucket_in")
+      }
+    val n = TxnTable.liveFiles(spark, loc,
+      TxnTable.currentVersion(spark, loc)).size
+    sql(s"DELETE FROM graft.spec.$t WHERE k = 13")
+    val res = TxnTable.commitMetrics(spark, loc)
+    assert(res("kept") >= n - 1 && res("rewritten") <= 1,
+      s"bucket stats must keep all but 13's file verbatim: $res of $n")
+    assert(sql(s"SELECT COUNT(*) FROM graft.spec.$t").collect()(0)
+      .getLong(0) === 319L)
+  }
+
+  test("DELETE never rewrites the CREATE TABLE sentinel: a zero-match " +
+      "delete is a change_noop under a view, an all-keep/drop delete " +
+      "runs no Spark job") {
+    val r = fresh("sqldelnoop")
+    sql(s"CREATE TABLE graft.spec.$r (k BIGINT, st STRING, " +
+      "price DECIMAL(12,2)) TBLPROPERTIES ('index' = 'k')")
+    val rloc = s"${GraftCatalog.defaultWarehouse}/spec/$r"
+    (0 until 4).foreach { i =>
+      sql(s"INSERT INTO graft.spec.$r SELECT /*+ REPARTITION(1) */ " +
+        s"id + ${i * 100}, CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END, " +
+        "CAST(id AS DECIMAL(12,2)) FROM RANGE(100)")
+    }
+    val mv = graft.Fs.freshScratch("graft_mv", "catalog_sqldelnoop")
+    graft.operators.MatView.create(spark, mv, rloc, "st", "price")
+    // matching nothing touches no file — the sentinel included — so the
+    // commit is a provable no-op and the view stays incremental
+    sql(s"DELETE FROM graft.spec.$r WHERE k >= 100000")
+    val vNoop = TxnTable.currentVersion(spark, rloc)
+    assert(TxnTable.commitMetrics(spark, rloc).get("change_noop")
+      .contains(1L), "a zero-match DELETE must commit change_noop")
+    assert(graft.operators.MatView.refresh(spark, mv).baseVersion === vNoop)
+    // every verdict keep (three files, the sentinel) or drop (one whole
+    // file): pure metadata, no Spark job
+    val jobs = org.apache.spark.SpecBus.jobsDuring(spark.sparkContext) {
+      sql(s"DELETE FROM graft.spec.$r WHERE k >= 100 AND k <= 199")
+    }
+    val m = TxnTable.commitMetrics(spark, rloc)
+    assert(m("dropped") === 1L && m("rewritten") === 0L && m("kept") === 4L,
+      m.toString)
+    assert(jobs === 0, s"an all-keep/drop DELETE ran $jobs Spark jobs")
+    assert(sql(s"SELECT COUNT(*) FROM graft.spec.$r").collect()(0)
+      .getLong(0) === 300L)
   }
 
   test("DELETE keyed on a STRING column prunes from truncated string stats") {
@@ -188,7 +274,7 @@ class CatalogSpec extends SparkSpec {
     sql(s"DELETE FROM graft.spec.$t WHERE k >= 100 AND k <= 199 " +
       "AND grp = 'odd'")
     val res = TxnTable.commitMetrics(spark, loc)
-    assert(res("dropped") === 0 && res("kept") === 3 && res("rewritten") <= 2,
+    assert(res("dropped") === 0 && res("kept") === 4 && res("rewritten") === 1,
       s"multi-column delete should prune on k and rewrite one file, got $res")
     assert(sql(s"SELECT COUNT(*) AS n FROM graft.spec.$t")
       .collect()(0).getLong(0) === 350)

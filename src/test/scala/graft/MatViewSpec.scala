@@ -134,22 +134,22 @@ class MatViewSpec extends SparkSpec {
     // a plain (cdc = false) DELETE whose verdicts touch NO file is a
     // provable no-op — it must carry the change_noop marker and never
     // block incremental refresh
-    val rPlainNop = TxnTable.deleteWhere(spark, t,
-      Seq(("k", 800000L, 899999L)), Nil)
+    val rPlainNop = TxnTable.delete(spark, t,
+      col("k") >= 800000L && col("k") <= 899999L)
     assert(TxnTable.manifest(spark, t, rPlainNop.version).metrics
       .get("change_noop").contains(1L))
     assert(MatView.refresh(spark, mv).baseVersion === rPlainNop.version,
       "a zero-file plain delete must not block incremental refresh")
     // a cdc-requested DELETE that matches nothing publishes no feed
     // file but marks the zero-length delta the same way
-    val rNop = TxnTable.deleteWhere(spark, t,
-      Seq(("k", 900000L, 999999L)), Nil, cdc = true)
+    val rNop = TxnTable.delete(spark, t,
+      col("k") >= 900000L && col("k") <= 999999L, cdc = true)
     assert(TxnTable.manifest(spark, t, rNop.version).cdcRefs.isEmpty)
     val rAfterNop = MatView.refresh(spark, mv)
     assert(rAfterNop.baseVersion === rNop.version,
       "a zero-row cdc delete must not block incremental refresh")
     // a cdc delete that REMOVES rows publishes a real feed and folds
-    val rDel = TxnTable.deleteWhere(spark, t, Seq(("k", 0L, 9L)), Nil,
+    val rDel = TxnTable.delete(spark, t, col("k") >= 0L && col("k") <= 9L,
       cdc = true)
     assert(TxnTable.manifest(spark, t, rDel.version).cdcRefs.nonEmpty)
     MatView.refresh(spark, mv)

@@ -537,7 +537,7 @@ class TxnSpec extends SparkSpec {
       .sortWithinPartitions(col("k"))
     TxnTable.commit(spark, t, TxnTable.stageIndexed(spark, t, df, "k"), -1L)
     val entriesBefore = TxnTable.liveEntries(spark, t, 0)
-    val res = TxnTable.deleteRange(spark, t, "k", 30L, 80L)
+    val res = TxnTable.delete(spark, t, col("k") >= 30L && col("k") <= 80L)
     // [~50..75) falls fully inside → dropped without a read; the two
     // boundary files rewritten; [0..~25) untouched
     assert(res.dropped === 1 && res.rewritten === 2 && res.kept === 1,
@@ -558,7 +558,7 @@ class TxnSpec extends SparkSpec {
       Seq(None, None)).map(k => (k, "x")).toDF("k", "v").coalesce(1)
     TxnTable.commit(spark, t2,
       TxnTable.stageIndexed(spark, t2, withNulls, "k"), -1L)
-    val res2 = TxnTable.deleteRange(spark, t2, "k", 0L, 100L)
+    val res2 = TxnTable.delete(spark, t2, col("k") >= 0L && col("k") <= 100L)
     assert(res2.dropped === 0 && res2.rewritten === 1, res2.toString)
     assert(TxnTable.snapshot(spark, t2).count() === 2)
     assert(TxnTable.snapshot(spark, t2).filter(col("k").isNull).count() === 2)
@@ -603,7 +603,7 @@ class TxnSpec extends SparkSpec {
     val t3 = freshTable("delete_all")
     TxnTable.commit(spark, t3,
       TxnTable.stageIndexed(spark, t3, baseDf(10).coalesce(1), "k"), -1L)
-    val res3 = TxnTable.deleteRange(spark, t3, "k", Long.MinValue, Long.MaxValue)
+    val res3 = TxnTable.delete(spark, t3, lit(true))
     assert(TxnTable.snapshot(spark, t3).count() === 0)
     assert(TxnTable.snapshot(spark, t3).columns.toSeq === Seq("k", "v"))
     TxnTable.append(spark, t3, baseDf(3))
@@ -876,8 +876,8 @@ class TxnSpec extends SparkSpec {
     assert(v3.filter(col("st") === "R").count() === 10)
     assert(v3.filter(col("k") === 7L).count() === 0,
       "rewritten region resurrected a tombstoned key")
-    // a deleteRange through the pending tombstone behaves too
-    val dr = TxnTable.deleteRange(spark, t, "k", 100L, 300L)
+    // a range delete through the pending tombstone behaves too
+    val dr = TxnTable.delete(spark, t, col("k") >= 100L && col("k") <= 300L)
     val v4 = TxnTable.snapshot(spark, t)
     assert(v4.filter(col("k") >= 100L).count() === 0)
     assert(v4.filter(col("st") === "R").count() ===
@@ -1044,7 +1044,7 @@ class TxnSpec extends SparkSpec {
     TxnTable.commit(spark, t, TxnTable.stageIndexed(spark, t, df, "k"), -1L)
     // delete EVERYTHING: the new version's only entry is the zero-row
     // sentinel file, which legitimately carries no stat groups
-    TxnTable.deleteRange(spark, t, "k", Long.MinValue, Long.MaxValue)
+    TxnTable.delete(spark, t, lit(true))
     assert(TxnTable.snapshot(spark, t).count() === 0)
     // the `#index=` header must keep the table indexed: the next append
     // stages WITH stats, and range pruning still works afterwards
@@ -1096,6 +1096,25 @@ class TxnSpec extends SparkSpec {
     assert(e.getMessage.contains("manifest format 99"))
   }
 
+  test("publish skips what the branch inherited: a parent compacted " +
+      "after the branch point keeps each row once") {
+    val t = freshTable("publish_compacted")
+    TxnTable.create(spark, t, baseDf(10))
+    (1 until 3).foreach(i => TxnTable.append(spark, t,
+      baseDf(10).withColumn("k", col("k") + i * 10)))
+    TxnTable.branch(spark, t, "dev")
+    val dev = TxnTable.branchDir(spark, t, "dev")
+    TxnTable.append(spark, dev, baseDf(5).withColumn("k", col("k") + 100))
+    // the parent rewrites the three files the branch inherited
+    TxnTable.compact(spark, t)
+    TxnTable.publish(spark, dev, t)
+    val keys = TxnTable.snapshot(spark, t).select("k").collect()
+      .map(_.getLong(0)).toSeq
+    assert(keys.size === 35,
+      s"publish re-grafted inherited files: ${keys.size} rows")
+    assert(keys.toSet === ((0L until 30L) ++ (100L until 105L)).toSet)
+  }
+
   test("publish grafts branch additions only; audit fix stays on branch") {
     val m = freshTable("wap_main_spec")
     val b = freshTable("wap_branch_spec")
@@ -1113,7 +1132,7 @@ class TxnSpec extends SparkSpec {
     TxnTable.append(spark, b,
       (100 until 120).map(i => (i.toLong, s"new$i")).toDF("k", "v"))
     // the audit fix: drop part of the APPENDED keyspace on the branch
-    TxnTable.deleteRange(spark, b, "k", 115L, Long.MaxValue)
+    TxnTable.delete(spark, b, col("k") >= 115L)
     val vPub = TxnTable.publish(spark, b, m)
     val keys = TxnTable.snapshot(spark, m).select("k").as[Long].collect()
     assert(keys.length === keys.distinct.length, "publish duplicated rows")
@@ -1942,8 +1961,7 @@ class TxnSpec extends SparkSpec {
     val bL2 = TxnTable.branchInfo(spark, t2, "b").get.leaf
     val ad2 = s"$t2/_branches/$aL2"
     val bd2 = s"$t2/_branches/$bL2"
-    TxnTable.deleteWhere(spark, ad2,
-      Seq(("k", 20L, Long.MaxValue)), Nil)
+    TxnTable.delete(spark, ad2, col("k") >= 20L)
     assert(TxnTable.liveFiles(spark, ad2,
       TxnTable.currentVersion(spark, ad2)).size === 1,
       "delete did not produce a removal-only delta (whole-file drop)")
@@ -2084,7 +2102,7 @@ class TxnSpec extends SparkSpec {
       "k"), expected = -1L, op = "create", schemaJson = df.schema.json)
     // scattered members hit ONE file's box; 1000 hits nothing — a
     // [min,max]=[5,1000] RANGE would have rewritten every file
-    val r1 = TxnTable.deleteIn(spark, t, "k", Seq(5L, 7L, 1000L))
+    val r1 = TxnTable.delete(spark, t, col("k").isin(5L, 7L, 1000L))
     assert(r1.rewritten === 1 && r1.dropped === 0,
       s"per-value verdicts must touch one file: $r1")
     assert(TxnTable.snapshot(spark, t).count() === 99L)
@@ -2093,7 +2111,7 @@ class TxnSpec extends SparkSpec {
     // ---- single-point file: every row IS a member → metadata drop ----
     TxnTable.append(spark, t,
       Seq.fill(5)((Option(1000L), "x")).toDF("k", "v").coalesce(1))
-    val r2 = TxnTable.deleteIn(spark, t, "k", Seq(1000L, 2000L))
+    val r2 = TxnTable.delete(spark, t, col("k").isin(1000L, 2000L))
     assert(r2.dropped === 1 && r2.rewritten === 0,
       s"a [v,v] file with v in the set must drop as metadata: $r2")
     assert(TxnTable.snapshot(spark, t).count() === 99L)
@@ -2109,7 +2127,7 @@ class TxnSpec extends SparkSpec {
     val nFiles = TxnTable.manifest(spark, tb, 0L).entries.size
     // two ids from adjacent keys: raw ranges span everything, but the
     // bucket boxes route them to at most 2 of the 8 bucket files
-    val rb = TxnTable.deleteIn(spark, tb, "k", Seq(13L, 14L))
+    val rb = TxnTable.delete(spark, tb, col("k").isin(13L, 14L))
     assert(rb.rewritten <= 2 && rb.kept >= nFiles - 2,
       s"bucket verdicts must prune the id list: $rb of $nFiles files")
     assert(TxnTable.snapshot(spark, tb).count() === 398L)
@@ -2118,7 +2136,7 @@ class TxnSpec extends SparkSpec {
     val tf = freshTable("delin_fold")
     TxnTable.create(spark, tf, baseDf(50))
     val big = (0L until 10500L).map(_ * 2 + 1) // odd ids: 1..20999
-    val rf = TxnTable.deleteIn(spark, tf, "k", big)
+    val rf = TxnTable.delete(spark, tf, col("k").isin(big: _*))
     // envelope [1, 20999] overlaps the table: rewrite, exact residual
     val left = TxnTable.snapshot(spark, tf).select("k").as[Long]
       .collect().sorted.toSeq
@@ -2145,8 +2163,8 @@ class TxnSpec extends SparkSpec {
       .map(TxnTable.render).toSet
     // scattered members hit ONE file's box; u999999 hits nothing — a
     // [min,max] string RANGE would have rewritten every file
-    val r1 = TxnTable.deleteInStr(spark, t, "k",
-      Seq(uid(5), uid(7), "u999999"))
+    val r1 = TxnTable.delete(spark, t,
+      col("k").isin(uid(5), uid(7), "u999999"))
     assert(r1.rewritten === 1 && r1.dropped === 0 && r1.kept === 3,
       s"per-value string verdicts must touch one file: $r1")
     // the three untouched files carry BYTE-VERBATIM
@@ -2161,8 +2179,8 @@ class TxnSpec extends SparkSpec {
     // hi == v is truncation-sound: it pins every row to v exactly)
     TxnTable.append(spark, t,
       Seq.fill(5)((Option("u999999"), "x")).toDF("k", "v").coalesce(1))
-    val r2 = TxnTable.deleteInStr(spark, t, "k",
-      Seq("u999999", "u888888"))
+    val r2 = TxnTable.delete(spark, t,
+      col("k").isin("u999999", "u888888"))
     assert(r2.dropped === 1 && r2.rewritten === 0,
       s"a [v,v] string file with v in the set must drop as metadata: $r2")
     assert(TxnTable.snapshot(spark, t).count() === 99L)
@@ -2172,7 +2190,7 @@ class TxnSpec extends SparkSpec {
     TxnTable.append(spark, t,
       (Seq.fill(3)((Option("u777777"), "y")) :+
         ((None: Option[String]) -> "ynull")).toDF("k", "v").coalesce(1))
-    val r2b = TxnTable.deleteInStr(spark, t, "k", Seq("u777777"))
+    val r2b = TxnTable.delete(spark, t, col("k").isin("u777777"))
     assert(r2b.dropped === 0 && r2b.rewritten >= 1,
       s"a [v,v] file holding NULL keys must rewrite, never drop: $r2b")
     assert(TxnTable.snapshot(spark, t).filter(col("k").isNull)
@@ -2182,7 +2200,7 @@ class TxnSpec extends SparkSpec {
     TxnTable.append(spark, t,
       Seq.fill(4)((None: Option[String], "z")).toDF("k", "v").coalesce(1))
     val before = TxnTable.snapshot(spark, t).count()
-    val rEmpty = TxnTable.deleteInStr(spark, t, "k", Seq(""))
+    val rEmpty = TxnTable.delete(spark, t, col("k").isin(""))
     assert(rEmpty.dropped === 0,
       s"IN ('') must never metadata-drop an all-NULL file: $rEmpty")
     assert(TxnTable.snapshot(spark, t).count() === before,
@@ -2192,18 +2210,23 @@ class TxnSpec extends SparkSpec {
     val df2 = (0 until 50).map(i => (uid(i), s"v$i")).toDF("k", "v")
     TxnTable.create(spark, tf, df2)
     val big = (0L until 10500L).map(i => uid(i * 2 + 1)) // odd uids
-    TxnTable.deleteInStr(spark, tf, "k", big)
+    TxnTable.delete(spark, tf, col("k").isin(big: _*))
     val left = TxnTable.snapshot(spark, tf).select("k").as[String]
       .collect().sorted.toSeq
     assert(left === (0L until 50L by 2L).map(uid),
       "envelope fold must keep the residual EXACT (odd uids deleted)")
-    // a NULL member refuses loudly (IN (..., NULL) never matches)
-    val eNull = intercept[IllegalArgumentException] {
-      TxnTable.deleteInStr(spark, t, "k", Seq(uid(2), null))
-    }
-    assert(eNull.getMessage.contains("non-null"), eNull.getMessage)
+    // a NULL member never matches (three-valued logic: `k IN (x, NULL)`
+    // is NULL wherever k != x), so it deletes exactly uid(2)'s rows —
+    // and the NULL-keyed rows survive
+    def keys = TxnTable.snapshot(spark, t).select("k").collect()
+      .map(r => Option(r.getString(0))).toSeq.sorted
+    val beforeNull = keys
+    assert(beforeNull.count(_.contains(uid(2))) === 1)
+    TxnTable.delete(spark, t, col("k").isin(uid(2), null))
+    assert(keys === beforeNull.filterNot(_.contains(uid(2))),
+      "IN (uid(2), NULL) must delete exactly uid(2)'s rows")
     // cdc: the feed carries exactly the deleted rows, signed -1
-    val r3 = TxnTable.deleteInStr(spark, t, "k", Seq(uid(11), uid(13)),
+    val r3 = TxnTable.delete(spark, t, col("k").isin(uid(11), uid(13)),
       cdc = true)
     val m3 = TxnTable.manifest(spark, t, r3.version)
     assert(m3.cdcRefs.nonEmpty)
@@ -2944,7 +2967,7 @@ class TxnSpec extends SparkSpec {
         s"got ${e0.head.statFor("p")}")
     assert(e0.head.hlls.exists(_.col == "p"),
       "the NDV sketch must ride the widened stats pass")
-    val del = TxnTable.deleteRange(spark, t, "p", 0L, 24L)
+    val del = TxnTable.delete(spark, t, col("p") >= 0L && col("p") <= 24L)
     assert(del.dropped === 0 && del.rewritten === 1,
       s"the widened box [0,25] is NOT contained in [0,24] — the file " +
         s"must rewrite with the exact residual, got $del")

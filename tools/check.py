@@ -3,11 +3,15 @@
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
 
+Each query filter is a name or a shell-style glob (`'sql_txn_delete*'`);
+a filter that matches no query fails with exit 2.
+
 Reads each <verifyOutDir>/<name> parquet (Spark result), runs the matching
 oracle SQL from <verifyOutDir>/oracle_sql.json in DuckDB with views over
 <sfDir>/*.parquet, sorts columns by name + rows by all columns, and
 compares values. Exit 0 iff everything matches.
 """
+import fnmatch
 import json
 import math
 import sys
@@ -43,16 +47,19 @@ def canon(rows, cols):
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
+    patterns = sys.argv[3:]
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    unknown = only - set(oracle)
+    matched = {p: {n for n in oracle if fnmatch.fnmatchcase(n, p)}
+               for p in patterns}
+    unknown = [p for p, names in matched.items() if not names]
     if unknown:
         print(f"FAIL: unknown query name(s) in filter: {sorted(unknown)}")
         sys.exit(2)
+    only = set().union(*matched.values())
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
